@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
   * through the `noop` sink — `count()` would let the optimizer prune
   * projected columns and under-report the real work (a distance
   * projection benched via count() degenerates to a parquet row count).
+  * A query that throws is listed under `failed`, left out of the timed
+  * map, and makes the process exit 1 — a failure is never timed.
   */
 object Bench {
   private def freshSession(cpus: String): SparkSession = SparkSession.builder()
@@ -19,6 +21,38 @@ object Bench {
     .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Warm up and time one query: an untimed warm-up at the bench sf,
+    * `runs` samples, and `shortRuns` in all when the fastest is under
+    * 2 s. Each sample materializes through the `noop` sink after a GC
+    * barrier (don't bill one query for its predecessors' garbage). A
+    * throw is reported and ends the query's measurement with None — a
+    * failed query is never timed.
+    */
+  private def measure(spark: SparkSession, sfDir: String, name: String,
+                      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+                      runs: Int, shortRuns: Int): Option[Seq[Double]] = {
+    def once(): Option[Double] = {
+      System.gc()
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        None
+      }
+    }
+    def take(n: Int): Option[Seq[Double]] =
+      (1 to n).foldLeft(Option(Vector.empty[Double])) { (acc, _) =>
+        acc.flatMap(s => once().map(s :+ _))
+      }
+    for {
+      _ <- once()
+      s <- take(runs)
+      all <- if (s.min < 2.0 && shortRuns > runs) take(shortRuns - runs).map(s ++ _) else Some(s)
+    } yield all
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -53,26 +87,17 @@ object Bench {
     // 4-7 all produced >10% phantom deltas on unchanged sub-2s queries).
     val shortRuns = math.max(runs,
       sys.env.get("SPARK_GRAFT_BENCH_SHORT_RUNS").flatMap(_.toIntOption).getOrElse(5))
-    val results = SparkEntry.queries.filter(kv => keep(kv._1))
+    // One untimed warm-up AT THE BENCH SF per query builds/validates any
+    // persisted index it serves from, faults its input files into the
+    // page cache, and JITs its codegen — so sample 1 measures the same
+    // steady state as samples 2..n (the sf0.001 pass above warms plan
+    // SHAPES only, not this sf's data).
+    val measured = SparkEntry.queries.filter(kv => keep(kv._1))
       .toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): Double = {
-        System.gc() // GC barrier: don't bill one query for its predecessors' garbage
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-        (System.nanoTime() - t0) / 1e9
+        name -> measure(spark, sfDir, name, fn, runs, shortRuns)
       }
-      // One untimed warm-up AT THE BENCH SF: builds/validates any
-      // persisted index this query serves from, faults its input files
-      // into the page cache, and JITs its codegen — so sample 1 measures
-      // the same steady state as samples 2..n (the sf0.001 pass above
-      // warms plan SHAPES only, not this sf's data).
-      once()
-      var samples = (1 to runs).map(_ => once())
-      if (samples.min < 2.0 && shortRuns > runs)
-        samples = samples ++ ((runs + 1) to shortRuns).map(_ => once())
-      name -> samples
-    }
+    val results = measured.collect { case (name, Some(samples)) => name -> samples }
+    val failed = measured.collect { case (name, None) => name }
     val allRuns = results.map { case (k, v) => s"\"" + k + "\":" + v.mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     // Memory accounting — the reference SizeTest's STAGED report
@@ -144,7 +169,7 @@ object Bench {
     // ("runs" + "requeued_runs"). A regression survives into the
     // "regressions" block — and fails the process rc≠0 — only if the
     // fresh-session re-run CONFIRMS >2×.
-    val requeued: Map[String, Seq[Double]] = if (regressed.isEmpty) Map.empty else {
+    val requeuedAll: Map[String, Option[Seq[Double]]] = if (regressed.isEmpty) Map.empty else {
       System.err.println(s"[bench] budget check flagged ${regressed.size} " +
         "queries >2x vs bench/latest.json; re-measuring in a fresh session")
       spark.catalog.clearCache()
@@ -154,28 +179,22 @@ object Bench {
       val spark2 = freshSession(cpus)
       val out = regressed.map { case (k, _, _) =>
         val fn = SparkEntry.queries(k)
-        def once(): Double = {
-          System.gc()
-          val t0 = System.nanoTime()
-          try fn(spark2, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable => System.err.println(s"[bench] requeue $k failed: ${e.getMessage}") }
-          (System.nanoTime() - t0) / 1e9
-        }
         try fn(spark2, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => } // plan-shape warm-up
-        once() // data warm-up at the bench sf
-        var s = (1 to runs).map(_ => once())
-        if (s.min < 2.0 && shortRuns > runs)
-          s = s ++ ((runs + 1) to shortRuns).map(_ => once())
-        k -> s
+        k -> measure(spark2, sfDir, k, fn, runs, shortRuns)
       }.toMap
       spark2.stop()
       out
     }
-    val finalMin: Map[String, Double] = results.map { case (k, v) =>
+    val requeued = requeuedAll.collect { case (k, Some(v)) => k -> v }
+    // a query that throws in the main loop OR on its requeue is failed:
+    // reported, left out of the timed map, and fails the process
+    val allFailed = failed ++ requeuedAll.collect { case (k, None) => k }.toSeq.sorted
+    val timed = results.filterNot { case (k, _) => allFailed.contains(k) }
+    val finalMin: Map[String, Double] = timed.map { case (k, v) =>
       k -> requeued.get(k).map(_.min).getOrElse(v.min)
     }.toMap
-    val confirmed = regressed.flatMap { case (k, p, c) =>
+    val confirmed = regressed.filter(r => requeued.contains(r._1)).flatMap { case (k, p, c) =>
       val rq = requeued(k).min
       if (rq > 2.0 * p) Some((k, p, c, rq)) else {
         System.err.println(f"[bench]   $k cleared on requeue: $c%.3f -> $rq%.3f s (prev $p%.3f)")
@@ -189,7 +208,9 @@ object Bench {
         System.err.println(f"[bench]   $k: $p%.3f -> $c%.3f s (requeued $rq%.3f, ${rq / p}%.2f x)")
       }
     }
-    val qsFinal = results.map { case (k, _) => s"\"" + k + "\":" + finalMin(k) }
+    if (allFailed.nonEmpty)
+      System.err.println(s"[bench] ${allFailed.size} queries FAILED: ${allFailed.mkString(", ")}")
+    val qsFinal = timed.map { case (k, _) => s"\"" + k + "\":" + finalMin(k) }
       .mkString("{", ",", "}")
     val requeuedJson = requeued.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + v.mkString("[", ",", "]") }
@@ -199,7 +220,8 @@ object Bench {
       s"""\"$k\":{"prev":$p,"now":$c,"requeued":$rq}"""
     }.mkString("{", ",", "}")
     val head = s"""{"metric":"total","value":$totalFinal,"unit":"sec","agg":"min","runs_per_query":$runs,"cpus":$cpus,"queries":$qsFinal"""
-    val tailCommon = s""","requeued_runs":$requeuedJson,"regressions":$regJson,"sf":"$sfDir"$mem}"""
+    val failedJson = allFailed.map(k => s"\"$k\"").mkString("[", ",", "]")
+    val tailCommon = s""","failed":$failedJson,"requeued_runs":$requeuedJson,"regressions":$regJson,"sf":"$sfDir"$mem}"""
     // Full artifact (per-sample runs arrays included) goes to the
     // committed files; STDOUT gets the same JSON without the bulky
     // "runs" object, printed as the LAST line — the driver's parser
@@ -228,8 +250,8 @@ object Bench {
     }
     println(stdoutJson)
     spark.stop() // idempotent — already stopped when a requeue ran
-    // Only a CONFIRMED regression (flagged in the main loop AND >2× again
-    // on the fresh-session requeue) fails the process.
-    if (confirmed.nonEmpty) sys.exit(1)
+    // A failed query, or a CONFIRMED regression (flagged in the main
+    // loop AND >2× again on the fresh-session requeue), fails the process.
+    if (allFailed.nonEmpty || confirmed.nonEmpty) sys.exit(1)
   }
 }

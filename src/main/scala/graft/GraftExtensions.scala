@@ -124,7 +124,7 @@ object GraftExtensions {
     *  - `range_search(dir, radius)`: every vector within `radius` of
     *    the protocol query (full-scan form — the `q_range_search`
     *    oracle semantics; the layout-pruned form is the Column API's
-    *    `Ivf.rangeSearch`).
+    *    `Ivf.rangeSearch` over a `plain` layout).
     *  - `maxsim_topk(dir, k)`: late-interaction (ColBERT-style) top-k
     *    over `dir/embeddings` for the multi-vector protocol (4 token
     *    vectors per doc, query = 4 perturbed tokens — the

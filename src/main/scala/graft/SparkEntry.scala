@@ -2067,7 +2067,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "c16")
       Ivf.ensurePartitioned(emb, 16, pdir)
-      Ivf.rangeSearch(s, pdir, queryVecOf(emb, 0), radius = 1.8)
+      Ivf.rangeSearch(s, pdir, queryVecOf(emb, 0), threshold = 1.8)
     }),
     // FILTERED range search: the serving predicate ("matches within r
     // WHERE attr") sits DIRECTLY above the pruned scan — scan-pushable
@@ -2079,7 +2079,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "c16")
       Ivf.ensurePartitioned(emb, 16, pdir)
-      Ivf.rangeSearch(s, pdir, queryVecOf(emb, 0), radius = 1.8,
+      Ivf.rangeSearch(s, pdir, queryVecOf(emb, 0), threshold = 1.8,
         predicate = Some(pmod(col("vec_id"), lit(3)) === 1))
     }),
     // BATCH range search: per-query eligible cells computed executor-
@@ -2091,7 +2091,7 @@ object SparkEntry {
       Ivf.ensurePartitioned(emb, 16, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-      Ivf.rangeSearchBatch(s, pdir, qs, radius = 1.8)
+      Ivf.rangeSearch(s, pdir, qs, threshold = 1.8)
     }),
     // BATCH cosine range: the whole query batch pays ONE scan pruned
     // to the union of eligible cells (per-(query, cell) bounds stay
@@ -2102,7 +2102,7 @@ object SparkEntry {
       Ivf.ensurePartitionedCosine(emb, 16, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-      Ivf.cosineRangeSearchBatch(s, pdir, qs, minSim = 0.15)
+      Ivf.rangeSearch(s, pdir, qs, threshold = 0.15)
     }),
     // BATCH MIPS range — same union-pruned single-scan geometry over
     // the augmented layout (per-cell max-norm² bound per query).
@@ -2112,17 +2112,18 @@ object SparkEntry {
       Ivf.ensurePartitionedMips(emb, 16, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-      Ivf.mipsRangeSearchBatch(s, pdir, qs, minDot = 0.3)
+      Ivf.rangeSearch(s, pdir, qs, threshold = 0.3)
     }),
     // COSINE range search — "everything at least this similar": the
     // similarity floor is an L2 ball on the unit sphere
     // (cos = 1 − ‖û−v̂‖²/2), so it rides the SAME lossless radii
-    // pruning as q_range_search, served from the cosine layout.
+    // pruning as q_range_search, served from the cosine layout (whose
+    // recorded kind makes the threshold a similarity floor).
     "q_cosine_range_search" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "cos16")
       Ivf.ensurePartitionedCosine(emb, 16, pdir)
-      Ivf.cosineRangeSearch(s, pdir, queryVecOf(emb, 0), minSim = 0.15)
+      Ivf.rangeSearch(s, pdir, queryVecOf(emb, 0), threshold = 0.15)
     }),
     // MIPS range — "everything with inner product at least t", the
     // third range form: in the augmented space the dot floor is an L2
@@ -2132,7 +2133,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "mips16")
       Ivf.ensurePartitionedMips(emb, 16, pdir)
-      Ivf.mipsRangeSearch(s, pdir, queryVecOf(emb, 0), minDot = 0.3)
+      Ivf.rangeSearch(s, pdir, queryVecOf(emb, 0), threshold = 0.3)
     }),
     // The APPEND half of the lifecycle on the IVF serving tier
     // (q_ivf_tombstone_topk is the remove half): the layout is built
@@ -2212,7 +2213,7 @@ object SparkEntry {
       Hnsw.searchRoutedWithIndex(s, rdir, qs, 10, p, nprobe = 5)
     }),
     // The insert lifecycle on the COSINE serving layout: base 4/5 +
-    // insertIntoCosine'd 1/5 (rows normalized with the layout's own
+    // Ivf.insertInto'd 1/5 (rows normalized with the layout's own
     // transform before the cell-local append). Served at nprobe = C,
     // so the result is the exact cosine ANN answer — the established
     // rewrite oracle pattern (duckCosineAnnTopK at nprobe = c).

@@ -68,10 +68,6 @@ object VectorFunctions {
   def cosineSimilarity(a: Column, b: Column): Column =
     dotProduct(a, b) / (l2Norm(a) * l2Norm(b))
 
-  /** Cosine distance = 1 - cosine similarity. */
-  def cosineDistance(a: Column, b: Column): Column =
-    lit(1.0) - cosineSimilarity(a, b)
-
   /** Unit-normalize a double-array vector (the cosine→L2 reduction's
     * query side: `cos(a,b) = 1 − ‖â−b̂‖²/2` for unit â, b̂).
     */

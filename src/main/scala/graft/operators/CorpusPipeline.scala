@@ -241,26 +241,4 @@ object CorpusPipeline {
       base.toDF("stage", "rows_in", "rows_out", "rows_changed", "shuffle_write_bytes")
     } finally if (measureShuffle) spark.sparkContext.removeSparkListener(listener)
   }
-
-  /** The COMPLETE corpus-to-training-sequences flow: curation →
-    * epoch-style source mixing ([[Sampling.epochMix]], sources absent
-    * from `epochs` dropped) → sequence packing
-    * ([[Packing.packSequencesBy]] on the (doc_id, copy_idx) stream) —
-    * one composed Catalyst DAG from raw documents to per-sequence
-    * stats `(source, seq_id, n_docs, seq_tokens)`. Stage economics
-    * compose: narrow filters prune before the pair-generating shuffle,
-    * the mix is a narrow explode over the curated survivors, and the
-    * pack is one window per source.
-    */
-  def curateMixPack(documents: DataFrame, lang: String, minQuality: Double,
-                    jaccardThreshold: Double, epochs: Map[String, Double],
-                    budget: Int, maxDf: Int = 10000): DataFrame = {
-    val docs = curatedDocs(documents, lang, minQuality, jaccardThreshold, maxDf)
-      .withColumn("n_tokens", size(TextFunctions.tokens(col("text"))).cast("long"))
-    val mixed = Sampling.epochMix(docs, col("source"), col("doc_id"), epochs)
-    Packing.packSequencesBy(mixed, "source", Seq("doc_id", "copy_idx"),
-        col("n_tokens"), budget)
-      .groupBy("source", "seq_id")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("seq_tokens"))
-  }
 }

@@ -732,303 +732,127 @@ object Ivf {
     }
   }
 
-  /** RANGE search over the partitioned layout: every vector within
-    * `radius` of the query (rounded distance ≤ radius, ties ordered by
-    * id) — the "find all matches" twin of [[topKPartitioned]], the
-    * shape dedup/recommendation pipelines ask when k is unknown.
-    * Cells are pruned with the [[ensureRadii]] triangle-inequality
-    * bound — LOSSLESSLY, so the result equals a full-scan filter and
-    * hash-checks against a one-line DuckDB oracle (the bound carries a
-    * +10^-roundTo margin so boundary rows that ROUND into the radius
-    * are never lost to raw-double pruning).
+  /** RANGE search over the partitioned layout: every stored vector
+    * whose score against a query clears `threshold`, in the metric the
+    * layout's recorded kind ([[layoutKind]]) serves — the "find all
+    * matches" twin of [[topKPartitioned]], the shape dedup and
+    * recommendation pipelines ask when k is unknown:
+    *  - `plain`: `dist` (L2) ≤ `threshold`, nearest first;
+    *  - `cosine` ([[ensurePartitionedCosine]]): `cos_sim` ≥ `threshold`,
+    *    most similar first. On the unit sphere `cos = 1 − ‖û−v̂‖²/2`, so
+    *    the floor is the L2 ball of radius `√(2(1−threshold))` around
+    *    the normalized query;
+    *  - `mips` ([[ensurePartitionedMips]]): `ip` (raw inner product) ≥
+    *    `threshold`, largest first. In the augmented space
+    *    `d(q̂,x̂)² = ‖q̂‖² + ‖x̂‖² − 2·dot(q,x)` (the query's extra
+    *    coordinate is 0, so the augmented dot IS the raw dot), so the
+    *    floor confines members to a ball whose radius depends on the
+    *    member's norm, bounded per cell by the `_radii` max squared norm.
+    * Any other kind is rejected. Ties order by `vec_id`.
     *
-    * Scale shape: the probe arithmetic runs on C (cell, centroid,
-    * radius) rows; only eligible cells' files are opened (partition
-    * filter). On clustered corpora — real embedding spaces — most
-    * cells fail the bound and are never read (IvfRangeSpec proves the
-    * skip on a clustered fixture); on uniform unit-sphere data every
-    * cell intersects every query ball and nothing prunes, which is a
-    * property of the data, not the operator.
+    * `queries` is either `(query_id, query_vec)` rows — every
+    * `(query_id, vec_id, score)` pair comes back — or the one-row
+    * `(query_vec)` frame of a single query, served as a batch of one
+    * with the id dropped (`(vec_id, score)` out).
+    *
+    * Cells are pruned with the [[ensureRadii]] triangle-inequality
+    * bound, per (query, cell) pair, executor-side (C×Q rows — never
+    * collected): a cell is skipped only when no member can clear the
+    * threshold, so the result equals a full-scan filter and
+    * hash-checks against a one-line DuckDB oracle. The bound carries a
+    * 10^-roundTo margin so boundary rows that ROUND across the
+    * threshold are never lost to raw-double pruning, and a cell with a
+    * NaN radius (a degenerate member, e.g. a row with a NaN component)
+    * is always kept — `d − NaN <= r` is false in Spark, yet the NaN row
+    * passes a Spark `>=` floor and its cell-mates may qualify too.
+    * One scan is pruned to the UNION of eligible cells (≤ C ids to the
+    * driver — the partition filter); each candidate is scored only
+    * against the queries whose ball intersects ITS cell — the join
+    * geometry of [[topKPartitionedBatch]], without the heap (range
+    * output is unbounded by design). On clustered corpora most cells fail the
+    * bound and are never read (IvfRangeSpec proves the skip per kind);
+    * on uniform unit-sphere data every ball intersects every cell,
+    * which is a property of the data, not the operator.
+    *
+    * `predicate` (filtered range: "matches WHERE attr = x") applies to
+    * the stored rows directly above the pruned scan, so a scan-pushable
+    * predicate lands in `PushedFilters`. The layout's tombstones
+    * ([[Tombstones]]) are always excluded — the takedown contract, no
+    * layout rewrite. `ordered = false` returns the same row SET with no
+    * global sort: the `orderBy` form is the oracle anchor, but a
+    * serving tier must not sort an unbounded result.
     */
   def rangeSearch(spark: org.apache.spark.sql.SparkSession, dir: String,
-                  queries: DataFrame, radius: Double, roundTo: Int = 6,
+                  queries: DataFrame, threshold: Double, roundTo: Int = 6,
                   predicate: Option[Column] = None,
-                  excluded: Option[DataFrame] = None,
                   ordered: Boolean = true): DataFrame = {
+    val kind = layoutKind(spark, dir)
+    require(Set("plain", "cosine", "mips")(kind),
+      s"Ivf.rangeSearch serves plain, cosine and mips layouts, but $dir is a '$kind' layout")
+    val margin = math.pow(10.0, -roundTo)
+    val q = col("query_vec")
+    val e = col("embedding")
+    // how far the query lies outside the cell's covering ball
+    val lb = l2Distance(col("centroid_vec"), q) - col("radius")
+    // (query into the layout's space, per-cell bound, score name, score)
+    val (toLayout, cellBound, scoreName, score) = kind match {
+      case "plain" =>
+        (q, lb <= lit(threshold) + lit(margin), "dist", l2Distance(e, q))
+      case "cosine" =>
+        (normalizeQuery(q), lb <= lit(math.sqrt(2.0 * (1.0 - threshold) + margin)),
+          "cos_sim", lit(1.0) - l2DistanceSq(e, q) / lit(2.0))
+      case "mips" =>
+        (concat(transform(q, x => x.cast("double")), array(lit(0.0))),
+          lb <= lit(0.0) || lb * lb <= dotProduct(q, q) + col("normsq") -
+            lit(2.0 * threshold) + lit(margin),
+          "ip", dotProduct(e, q))
+    }
+    val s = col(scoreName)
+    val (passes, byScore) = if (kind == "plain") (s <= threshold, s) else (s >= threshold, s.desc)
     ensureRadii(spark, dir)
+    val single = !queries.columns.contains("query_id")
+    val qs = (if (single) queries.withColumn("query_id", lit(0L)) else queries)
+      .select(col("query_id"), toLayout.as("query_vec"))
     val (stored, cents) = readLayoutWithCentroids(spark, dir)
-    val radii = spark.read.parquet(s"$dir/_radii")
-    // ≤ C eligible cell ids to the driver — the partition filter, same
-    // contract as topKPartitioned's nprobe collect
-    val eligible = cents.join(radii, col("centroid_id") === col("cell"))
-      .crossJoin(broadcast(queries))
-      .filter(l2Distance(col("centroid_vec"), col("query_vec")) - col("radius")
-        <= lit(radius) + lit(math.pow(10.0, -roundTo)))
-      .select(col("centroid_id")).collect().map(_.getLong(0))
-    val pruned = stored.filter(col("cell").isin(eligible.toIndexedSeq: _*))
-    orderedRange(withoutExcluded(predicate.fold(pruned)(pruned.filter), excluded)
-      .crossJoin(broadcast(queries))
-      .select(col("vec_id"),
-        round(l2Distance(col("embedding"), col("query_vec")), roundTo).as("dist"))
-      .filter(col("dist") <= radius),
-      ordered, col("dist"), col("vec_id"))
-  }
-
-  /** Range results are SETS; the `orderBy` forms are the oracle
-    * anchors (deterministic row order for hashing), but a serving tier
-    * must not pay a global sort of an unbounded result set — `ordered
-    * = false` returns the same rows with no Sort/Exchange at the top
-    * (IvfRangeSpec pins set equality).
-    */
-  private def orderedRange(df: DataFrame, ordered: Boolean, by: Column*): DataFrame =
-    if (ordered) df.orderBy(by: _*) else df
-
-  /** BATCH range search: `(query_id, query_vec)` rows in, every
-    * `(query_id, vec_id, dist ≤ radius)` pair out. Per-query eligible
-    * cells come from the same lossless triangle-inequality bound,
-    * computed executor-side (C×Q rows — never collected); the scan is
-    * pruned to the UNION of eligible cells (≤ C ids to the driver);
-    * each candidate is scored only against the queries whose ball
-    * intersects ITS cell — the same join geometry as
-    * [[topKPartitionedBatch]], without the heap (range output is
-    * unbounded by design).
-    */
-  def rangeSearchBatch(spark: org.apache.spark.sql.SparkSession, dir: String,
-                       queries: DataFrame, radius: Double,
-                       roundTo: Int = 6, predicate: Option[Column] = None,
-                       ordered: Boolean = true,
-                       excluded: Option[DataFrame] = None): DataFrame = {
-    ensureRadii(spark, dir)
-    val (stored, cents) = readLayoutWithCentroids(spark, dir)
-    val radii = spark.read.parquet(s"$dir/_radii")
-    val probePairs = cents.join(radii, col("centroid_id") === col("cell"))
+    val probePairs = cents.join(spark.read.parquet(s"$dir/_radii"),
+        col("centroid_id") === col("cell"))
       .drop("cell")
-      .crossJoin(broadcast(queries))
-      .filter(l2Distance(col("centroid_vec"), col("query_vec")) - col("radius")
-        <= lit(radius) + lit(math.pow(10.0, -roundTo)))
+      .crossJoin(broadcast(qs))
+      .filter(isnan(col("radius")) || cellBound)
       .select(col("query_id"), col("centroid_id").as("cell"))
     val unionCells = probePairs.select("cell").distinct().collect().map(_.getLong(0))
     val pruned = stored.filter(col("cell").isin(unionCells.toIndexedSeq: _*))
-    orderedRange(withoutExcluded(predicate.fold(pruned)(pruned.filter), excluded)
+    val hits = withoutExcluded(predicate.fold(pruned)(pruned.filter), Tombstones.ids(spark, dir))
       .join(broadcast(probePairs), Seq("cell")) // predicate scan-pushable → PushedFilters
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(l2Distance(col("embedding"), col("query_vec")), roundTo).as("dist"))
-      .filter(col("dist") <= radius),
-      ordered, col("query_id"), col("dist"), col("vec_id"))
+      .join(broadcast(qs), Seq("query_id"))
+      .select(col("query_id"), col("vec_id"), round(score, roundTo).as(scoreName))
+      .filter(passes)
+    val out = if (ordered) hits.orderBy(col("query_id"), byScore, col("vec_id")) else hits
+    if (single) out.drop("query_id") else out
   }
-
-  /** [[rangeSearch]] under the layout's `_deletes` tombstones — the
-    * takedown contract on the range path (same sidecar as
-    * [[topKPartitionedWithDeletes]]): recorded ids never appear in a
-    * range result, no layout rewrite.
-    */
-  def rangeSearchWithDeletes(spark: org.apache.spark.sql.SparkSession, dir: String,
-                             queries: DataFrame, radius: Double,
-                             roundTo: Int = 6): DataFrame =
-    rangeSearch(spark, dir, queries, radius, roundTo,
-      excluded = Tombstones.ids(spark, dir))
-
-  /** COSINE range search over an [[ensurePartitionedCosine]] layout:
-    * every vector with cosine similarity ≥ `minSim` to the query. On
-    * the unit sphere `cos = 1 − ‖û−v̂‖²/2`, so the similarity floor is
-    * the L2 ball of radius `√(2(1−minSim))` around the normalized
-    * query — the SAME lossless triangle-inequality cell pruning as
-    * [[rangeSearch]] (the bound carries the rounding margin inside
-    * the radicand, so boundary rows that ROUND up to `minSim` are
-    * never lost). Results are scored in cosine, highest first.
-    */
-  def cosineRangeSearch(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        queries: DataFrame, minSim: Double,
-                        roundTo: Int = 6, predicate: Option[Column] = None,
-                        ordered: Boolean = true,
-                        excluded: Option[DataFrame] = None): DataFrame = {
-    ensureRadii(spark, dir)
-    val qn = normalizedQuery(queries)
-    val r = math.sqrt(2.0 * (1.0 - minSim) + math.pow(10.0, -roundTo))
-    val (stored, cents) = readLayoutWithCentroids(spark, dir)
-    val radii = spark.read.parquet(s"$dir/_radii")
-    val eligible = cents.join(radii, col("centroid_id") === col("cell"))
-      .crossJoin(broadcast(qn))
-      .filter(l2Distance(col("centroid_vec"), col("query_vec")) - col("radius") <= lit(r))
-      .select(col("centroid_id")).collect().map(_.getLong(0))
-    val pruned = stored.filter(col("cell").isin(eligible.toIndexedSeq: _*)) // partition-pruned
-    orderedRange(withoutExcluded(predicate.fold(pruned)(pruned.filter), excluded)
-      .crossJoin(broadcast(qn))
-      .select(col("vec_id"),
-        round(lit(1.0) - l2DistanceSq(col("embedding"), col("query_vec")) / lit(2.0),
-          roundTo).as("cos_sim"))
-      .filter(col("cos_sim") >= minSim),
-      ordered, col("cos_sim").desc, col("vec_id"))
-  }
-
-  /** BATCH cosine range search — [[rangeSearchBatch]]'s join geometry
-    * on the normalized layout: every query's similarity floor is the
-    * SAME L2 ball radius `√(2(1−minSim) + margin)` around its
-    * normalized vector, so per-query eligible cells come from one
-    * executor-side C×Q bound pass, the scan is pruned to the union
-    * (≤ C ids to the driver), and each candidate is scored only
-    * against the queries whose ball intersects ITS cell.
-    */
-  def cosineRangeSearchBatch(spark: org.apache.spark.sql.SparkSession, dir: String,
-                             queries: DataFrame, minSim: Double,
-                             roundTo: Int = 6, predicate: Option[Column] = None,
-                             ordered: Boolean = true,
-                             excluded: Option[DataFrame] = None): DataFrame = {
-    ensureRadii(spark, dir)
-    val qn = queries.select(col("query_id"),
-      transform(col("query_vec"), x => x / l2Norm(col("query_vec"))).as("query_vec"))
-    val r = math.sqrt(2.0 * (1.0 - minSim) + math.pow(10.0, -roundTo))
-    val (stored, cents) = readLayoutWithCentroids(spark, dir)
-    val radii = spark.read.parquet(s"$dir/_radii")
-    val probePairs = cents.join(radii, col("centroid_id") === col("cell"))
-      .drop("cell")
-      .crossJoin(broadcast(qn))
-      .filter(l2Distance(col("centroid_vec"), col("query_vec")) - col("radius") <= lit(r))
-      .select(col("query_id"), col("centroid_id").as("cell"))
-    val unionCells = probePairs.select("cell").distinct().collect().map(_.getLong(0))
-    val pruned = stored.filter(col("cell").isin(unionCells.toIndexedSeq: _*))
-    orderedRange(withoutExcluded(predicate.fold(pruned)(pruned.filter), excluded)
-      .join(broadcast(probePairs), Seq("cell"))
-      .join(broadcast(qn), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(lit(1.0) - l2DistanceSq(col("embedding"), col("query_vec")) / lit(2.0),
-          roundTo).as("cos_sim"))
-      .filter(col("cos_sim") >= minSim),
-      ordered, col("query_id"), col("cos_sim").desc, col("vec_id"))
-  }
-
-  /** [[rangeSearchBatch]] under the layout's tombstones — the batch
-    * serving form honors takedowns exactly like the single-query path
-    * (same broadcast anti-join above the pruned scan).
-    */
-  def rangeSearchBatchWithDeletes(spark: org.apache.spark.sql.SparkSession, dir: String,
-                                  queries: DataFrame, radius: Double,
-                                  roundTo: Int = 6): DataFrame =
-    rangeSearchBatch(spark, dir, queries, radius, roundTo,
-      excluded = Tombstones.ids(spark, dir))
-
-  /** [[cosineRangeSearch]] under the layout's tombstones (shared
-    * `_deletes` contract — the similarity-floor twin of
-    * [[rangeSearchWithDeletes]]).
-    */
-  def cosineRangeSearchWithDeletes(spark: org.apache.spark.sql.SparkSession, dir: String,
-                                   queries: DataFrame, minSim: Double,
-                                   roundTo: Int = 6): DataFrame =
-    cosineRangeSearch(spark, dir, queries, minSim, roundTo,
-      excluded = Tombstones.ids(spark, dir))
-
-  /** MIPS range search over an [[ensurePartitionedMips]] layout: every
-    * vector with inner product ≥ `minDot` — the third member of the
-    * range family (L2 ball, cosine floor, dot floor). In the augmented
-    * space `d(q̂,x̂)² = ‖q̂‖² + ‖x̂‖² − 2·dot(q,x)` (the query's extra
-    * coordinate is 0, so the augmented dot IS the raw dot), so
-    * `dot ≥ t` confines members to an L2 ball whose radius depends on
-    * the member's norm — bounded per cell by the `_radii` sidecar's
-    * max squared norm: a cell is skipped only when
-    * `(d(q̂,c) − rad)² > ‖q̂‖² + maxnormsq(cell) − 2t + margin` (with
-    * `d(q̂,c) > rad`), which no member within the floor can violate —
-    * LOSSLESS, so the oracle is a plain full-scan dot filter.
-    */
-  def mipsRangeSearch(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      queries: DataFrame, minDot: Double,
-                      roundTo: Int = 6, predicate: Option[Column] = None,
-                      ordered: Boolean = true,
-                      excluded: Option[DataFrame] = None): DataFrame = {
-    ensureRadii(spark, dir)
-    val qa = augmentedQuery(queries)
-    val (stored, cents) = readLayoutWithCentroids(spark, dir)
-    val radii = spark.read.parquet(s"$dir/_radii")
-    val lb = l2Distance(col("centroid_vec"), col("query_vec")) - col("radius")
-    val rsq = dotProduct(col("query_vec"), col("query_vec")) + col("normsq") -
-      lit(2.0 * minDot) + lit(math.pow(10.0, -roundTo))
-    val eligible = cents.join(radii, col("centroid_id") === col("cell"))
-      .crossJoin(broadcast(qa))
-      .filter(lb <= lit(0.0) || lb * lb <= rsq)
-      .select(col("centroid_id")).collect().map(_.getLong(0))
-    val pruned = stored.filter(col("cell").isin(eligible.toIndexedSeq: _*)) // partition-pruned
-    orderedRange(withoutExcluded(predicate.fold(pruned)(pruned.filter), excluded)
-      .crossJoin(broadcast(qa))
-      .select(col("vec_id"),
-        round(dotProduct(col("embedding"), col("query_vec")), roundTo).as("ip"))
-      .filter(col("ip") >= minDot),
-      ordered, col("ip").desc, col("vec_id"))
-  }
-
-  /** BATCH MIPS range search — [[rangeSearchBatch]]'s join geometry
-    * on the augmented layout: each (cell, query) pair passes the same
-    * lossless per-cell bound as [[mipsRangeSearch]] (`(d(q̂,c) − rad)²
-    * ≤ ‖q̂‖² + maxnormsq(cell) − 2t + margin` unless the ball contains
-    * the centroid), computed executor-side; one scan pruned to the
-    * union of eligible cells serves the whole batch.
-    */
-  def mipsRangeSearchBatch(spark: org.apache.spark.sql.SparkSession, dir: String,
-                           queries: DataFrame, minDot: Double,
-                           roundTo: Int = 6, predicate: Option[Column] = None,
-                           ordered: Boolean = true,
-                           excluded: Option[DataFrame] = None): DataFrame = {
-    ensureRadii(spark, dir)
-    val qa = queries.select(col("query_id"),
-      concat(transform(col("query_vec"), x => x.cast("double")), array(lit(0.0)))
-        .as("query_vec"))
-    val (stored, cents) = readLayoutWithCentroids(spark, dir)
-    val radii = spark.read.parquet(s"$dir/_radii")
-    val lb = l2Distance(col("centroid_vec"), col("query_vec")) - col("radius")
-    val rsq = dotProduct(col("query_vec"), col("query_vec")) + col("normsq") -
-      lit(2.0 * minDot) + lit(math.pow(10.0, -roundTo))
-    val probePairs = cents.join(radii, col("centroid_id") === col("cell"))
-      .drop("cell")
-      .crossJoin(broadcast(qa))
-      .filter(lb <= lit(0.0) || lb * lb <= rsq)
-      .select(col("query_id"), col("centroid_id").as("cell"))
-    val unionCells = probePairs.select("cell").distinct().collect().map(_.getLong(0))
-    val pruned = stored.filter(col("cell").isin(unionCells.toIndexedSeq: _*))
-    orderedRange(withoutExcluded(predicate.fold(pruned)(pruned.filter), excluded)
-      .join(broadcast(probePairs), Seq("cell"))
-      .join(broadcast(qa), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dotProduct(col("embedding"), col("query_vec")), roundTo).as("ip"))
-      .filter(col("ip") >= minDot),
-      ordered, col("query_id"), col("ip").desc, col("vec_id"))
-  }
-
-  /** [[cosineRangeSearchBatch]] under the layout's tombstones (the
-    * batch similarity-floor serving form of the takedown contract).
-    */
-  def cosineRangeSearchBatchWithDeletes(spark: org.apache.spark.sql.SparkSession,
-                                        dir: String, queries: DataFrame,
-                                        minSim: Double, roundTo: Int = 6): DataFrame =
-    cosineRangeSearchBatch(spark, dir, queries, minSim, roundTo,
-      excluded = Tombstones.ids(spark, dir))
-
-  /** [[mipsRangeSearch]] under the layout's tombstones (shared
-    * `_deletes` contract — the dot-floor twin of
-    * [[rangeSearchWithDeletes]]).
-    */
-  def mipsRangeSearchWithDeletes(spark: org.apache.spark.sql.SparkSession, dir: String,
-                                 queries: DataFrame, minDot: Double,
-                                 roundTo: Int = 6): DataFrame =
-    mipsRangeSearch(spark, dir, queries, minDot, roundTo,
-      excluded = Tombstones.ids(spark, dir))
-
-  /** [[mipsRangeSearchBatch]] under the layout's tombstones (the
-    * batch dot-floor serving form of the takedown contract).
-    */
-  def mipsRangeSearchBatchWithDeletes(spark: org.apache.spark.sql.SparkSession,
-                                      dir: String, queries: DataFrame,
-                                      minDot: Double, roundTo: Int = 6): DataFrame =
-    mipsRangeSearchBatch(spark, dir, queries, minDot, roundTo,
-      excluded = Tombstones.ids(spark, dir))
 
   /** Cell-local incremental insert — the append half of the layout
-    * lifecycle ([[compactPartitioned]] is the remove half): assign
-    * `rows(vec_id, embedding)` with the layout's own `_centroids`
-    * sidecar and APPEND them to their cells. Only the receiving
-    * `cell=` subtrees gain files; every other cell's files are not
-    * touched at all — insert I/O is proportional to the batch, never
-    * to the layout. Serving needs no change: the pruned probe scan
-    * picks up appended files automatically, and assignment against
-    * the UNCHANGED sidecar centroids is deterministic, so an
+    * lifecycle ([[compactPartitioned]] is the remove half): transform
+    * `rows(vec_id, embedding)` the way the layout's recorded kind
+    * ([[layoutKind]]) stores them, assign them with the layout's own
+    * `_centroids` sidecar and APPEND them to their cells:
+    *  - `plain`: raw rows as they are;
+    *  - `cosine`: unit-normalized ([[normalized]]);
+    *  - `mips`: augmented with the layout's RECORDED build-time
+    *    constant (`_graft_maxnorm`), not a fresh max — the geometry
+    *    every stored row already lives in. A new row with norm > m
+    *    clamps its extra coordinate to 0: its served dot is still
+    *    exact (see [[augmentedWith]]); only its cell assignment
+    *    degrades, so serving matches a single-pass build whenever the
+    *    base corpus contains the max-norm row.
+    * Any other kind (a code layout) is rejected — appending vectors
+    * there would drift the parquet schema and serve wrong results.
+    *
+    * Only the receiving `cell=` subtrees gain files; every other cell's
+    * files are not touched at all — insert I/O is proportional to the
+    * batch, never to the layout. Serving needs no change: the pruned
+    * probe scan picks up appended files automatically, and assignment
+    * against the UNCHANGED sidecar centroids is deterministic, so an
     * incrementally-grown layout serves identically to one built from
     * the union in a single pass (IvfInsertSpec pins this and the
     * byte-identity of non-receiving cells).
@@ -1041,60 +865,20 @@ object Ivf {
     */
   def insertInto(spark: org.apache.spark.sql.SparkSession, dir: String,
                  rows: DataFrame): Unit = {
-    // raw float rows only fit a raw-float layout: a cosine layout
-    // stores normalized doubles and a MIPS layout augmented doubles —
-    // appending unmodified rows there would drift the parquet schema
-    // and serve silently wrong results, so fail fast on the kind the
-    // layout recorded at build time
-    val kind = layoutKind(spark, dir)
-    require(kind == "plain",
-      s"Ivf.insertInto appends raw float vectors, but the layout at $dir stores " +
-        s"'$kind' vectors (transformed doubles) — rebuild through " +
-        "ensurePartitionedCosine/ensurePartitionedMips instead of appending")
-    appendPrepared(spark, dir, rows)
-  }
-
-  /** [[insertInto]] for a COSINE layout: rows are unit-normalized (the
-    * same transform [[ensurePartitionedCosine]] stores) before the
-    * cell-local append, so a grown layout serves exactly like a
-    * single-pass build.
-    */
-  def insertIntoCosine(spark: org.apache.spark.sql.SparkSession, dir: String,
-                       rows: DataFrame): Unit = {
-    val kind = layoutKind(spark, dir)
-    require(kind == "cosine",
-      s"Ivf.insertIntoCosine appends normalized vectors, but the layout at $dir " +
-        s"stores '$kind' vectors")
-    appendPrepared(spark, dir, normalized(rows))
-  }
-
-  /** [[insertInto]] for a MIPS layout: rows are augmented with the
-    * layout's RECORDED build-time constant (`_graft_maxnorm`), not a
-    * fresh max — the geometry every stored row already lives in. A new
-    * row with norm > m clamps its extra coordinate to 0: its served
-    * dot is still exact (see [[augmentedWith]]); only its cell
-    * assignment degrades, so serving matches a single-pass build
-    * whenever the base corpus contains the max-norm row.
-    */
-  def insertIntoMips(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     rows: DataFrame): Unit = {
-    val kind = layoutKind(spark, dir)
-    require(kind == "mips",
-      s"Ivf.insertIntoMips appends augmented vectors, but the layout at $dir " +
-        s"stores '$kind' vectors")
-    val m = readScalarFile(spark, dir, "_graft_maxnorm").map(_.toDouble).getOrElse(
-      throw new IllegalStateException(
-        s"MIPS layout at $dir has no _graft_maxnorm sidecar — rebuild through " +
-          "ensurePartitionedMips before appending"))
-    appendPrepared(spark, dir, augmentedWith(rows, m))
-  }
-
-  /** Shared append tail: assign with the layout's frozen centroids,
-    * cell-local append, drop the (now under-estimating) `_radii`
-    * sidecar, invalidate the source fingerprint.
-    */
-  private def appendPrepared(spark: org.apache.spark.sql.SparkSession, dir: String,
-                             prepared: DataFrame): Unit = {
+    val prepared = layoutKind(spark, dir) match {
+      case "plain" => rows
+      case "cosine" => normalized(rows)
+      case "mips" =>
+        val m = readScalarFile(spark, dir, "_graft_maxnorm").map(_.toDouble).getOrElse(
+          throw new IllegalStateException(
+            s"MIPS layout at $dir has no _graft_maxnorm sidecar — rebuild through " +
+              "ensurePartitionedMips before appending"))
+        augmentedWith(rows, m)
+      case kind =>
+        throw new IllegalArgumentException(
+          s"Ivf.insertInto appends to plain, cosine and mips layouts, but $dir is a " +
+            s"'$kind' layout — append through that layout's own insertInto")
+    }
     val cents = centroidsOf(spark, dir)
     CellSnapshot.appendAssigned(spark, dir,
       prepared.join(assignWith(prepared, cents), Seq("vec_id")))
@@ -1128,7 +912,7 @@ object Ivf {
     }
   }
 
-  /** Build-on-base + [[insertIntoCosine]]-the-rest, memoized — the
+  /** Build-on-base + [[insertInto]]-the-rest, memoized — the
     * cosine twin of [[ensureInsertedPartitioned]] (centroids seeded
     * from the NORMALIZED base, the same table the layout stores).
     */
@@ -1144,12 +928,12 @@ object Ivf {
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       val nb = normalized(base)
       writePartitionedWith(nb, centroids(nb, c), dir, kind = "cosine")
-      insertIntoCosine(spark, dir, fresh)
+      insertInto(spark, dir, fresh)
       IndexMeta.write(spark, dir, fp)
     }
   }
 
-  /** Build-on-base + [[insertIntoMips]]-the-rest, memoized — the MIPS
+  /** Build-on-base + [[insertInto]]-the-rest, memoized — the MIPS
     * twin of [[ensureInsertedPartitioned]]: the augmentation constant
     * is the BASE corpus's max norm, recorded for the append (fresh
     * rows with a larger norm clamp — served dots stay exact).
@@ -1168,7 +952,7 @@ object Ivf {
       val ab = augmentedWith(base, m)
       writePartitionedWith(ab, centroids(ab, c), dir, kind = "mips")
       writeScalarFile(spark, dir, "_graft_maxnorm", m.toString)
-      insertIntoMips(spark, dir, fresh)
+      insertInto(spark, dir, fresh)
       IndexMeta.write(spark, dir, fp)
     }
   }
@@ -1592,7 +1376,7 @@ object Ivf {
     val aug = augmentedWith(embeddings, m)
     ensurePartitionedWith(aug, centroids(aug, c), dir, tag = s"mips_c=$c",
       kind = "mips")
-    // the augmentation constant, for insertIntoMips (idempotent write;
+    // the augmentation constant, for insertInto (idempotent write;
     // refreshed alongside any fingerprint-triggered rebuild)
     writeScalarFile(embeddings.sparkSession, dir, "_graft_maxnorm", m.toString)
   }

@@ -181,7 +181,7 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
           // never needs the query ids — removing a cell is safe iff NO
           // executed query's ball intersects it, so the UNION of
           // eligible cells is lossless for any batch size (the
-          // per-(query, cell) equi-join of Ivf.rangeSearchBatch is a
+          // per-(query, cell) equi-join of Ivf.rangeSearch is a
           // further optimization, not a correctness requirement: the
           // preserved original predicate evaluates in full)
           queries <- executeQuerySide(Project(Seq(qAttr), right), maxRows = 100000) match {
@@ -241,14 +241,15 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
   /** L2 ball: cell eligible iff `‖q̂−c‖ − rad(cell) <= r`. Serves the
     * L2 radius cap directly AND the cosine floor (on the normalized
     * layout `cos >= s` is the ball of radius `√(2(1−s))` around the
-    * unit query — the [[graft.operators.Ivf.cosineRangeSearch]] math).
+    * unit query — the [[graft.operators.Ivf.rangeSearch]] math on a
+    * `cosine` layout).
     */
   private case class BallBound(rL2: Double) extends RangeBound
   /** MIPS dot floor: in the augmented space `d(q̂,x̂)² = ‖q̂‖² + ‖x̂‖² −
     * 2·dot(q,x)`, so `dot >= t` confines members to a ball bounded per
     * cell by its max squared norm — eligible iff `‖q̂−c‖ <= rad` or
     * `(‖q̂−c‖ − rad)² <= ‖q̂‖² + maxnormsq(cell) − 2t` (the
-    * [[graft.operators.Ivf.mipsRangeSearch]] bound).
+    * [[graft.operators.Ivf.rangeSearch]] bound on a `mips` layout).
     */
   private case class DotBound(minDot: Double) extends RangeBound
 
@@ -301,7 +302,7 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     * the bounded-sidecar contract; caching would risk serving a bound
     * from before a membership-changing maintenance op). A centroid with
     * no radii row has no members — prunable outright; a NaN radius
-    * (degenerate members, e.g. a zero-norm vector normalized) keeps
+    * (degenerate members, e.g. a vector with a NaN component) keeps
     * the cell — pruning must only ever drop provably-empty cells. None
     * (decline the rewrite, keep the naive plan) if the sidecar can't
     * be built/read.

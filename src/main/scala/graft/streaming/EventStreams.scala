@@ -80,14 +80,6 @@ object EventStreams {
         col("window.start").as("window_start"),
         col("event_type"), col("n_events"), col("sum_value"))
 
-  /** Sliding-window event rate (1h window, 15m slide) per type. */
-  def slidingRate(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n_events"))
-
   case class SessionEvent(user_id: Long, event_id: Long, ts: Timestamp)
   case class SessionState(sessionNo: Long, nEvents: Long, start: Timestamp, last: Timestamp)
   case class SessionOut(user_id: Long, session_no: Long, n_events: Long,

@@ -122,15 +122,18 @@ object StreamingAnn {
 
   /** Streaming maintenance of a cell-partitioned IVF layout: each
     * micro-batch of `(vec_id, embedding)` rows appends cell-locally
-    * through [[graft.operators.Ivf.insertInto]] — assignment against
-    * the layout's frozen `_centroids` sidecar, only the receiving
-    * `cell=` subtrees gain files, so per-batch I/O is O(batch) and the
-    * probe scan of concurrent readers picks each appended file up as
-    * it lands (Parquet is immutable-file append — readers never see a
-    * torn row). The flat-layout twin of [[maintainIndex]]: no graph to
-    * rebuild means no generation swap is needed; a streamed layout is
-    * IDENTICAL to a batch-built one (StreamingMultimodalSpec pins
-    * serving equality).
+    * through [[graft.operators.Ivf.insertInto]] — transformed the way
+    * the layout's recorded kind stores rows (raw for `plain`,
+    * normalized for `cosine`, augmented with the recorded build
+    * constant for `mips`; any other kind fails on the FIRST batch),
+    * assigned against the layout's frozen `_centroids` sidecar; only
+    * the receiving `cell=` subtrees gain files, so per-batch I/O is
+    * O(batch) and the probe scan of concurrent readers picks each
+    * appended file up as it lands (Parquet is immutable-file append —
+    * readers never see a torn row). The flat-layout twin of
+    * [[maintainIndex]]: no graph to rebuild means no generation swap
+    * is needed; a streamed layout is IDENTICAL to a batch-built one
+    * (StreamingMultimodalSpec pins serving equality).
     */
   def maintainIvf(newVectors: DataFrame, layoutDir: String,
                   recluster: Option[ReclusterPolicy] = None): StreamingQuery =
@@ -138,37 +141,6 @@ object StreamingAnn {
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         graft.operators.Ivf.insertInto(batch.sparkSession, layoutDir, batch.toDF())
-        maybeRecluster(batch.sparkSession, layoutDir, recluster)
-      }
-      .start()
-
-  /** [[maintainIvf]] for a COSINE layout: each micro-batch
-    * unit-normalizes (the layout's own transform) before the
-    * cell-local append ([[graft.operators.Ivf.insertIntoCosine]]);
-    * the kind guard rejects a mis-wired plain/MIPS dir on the FIRST
-    * batch instead of silently drifting the schema.
-    */
-  def maintainIvfCosine(newVectors: DataFrame, layoutDir: String,
-                        recluster: Option[ReclusterPolicy] = None): StreamingQuery =
-    newVectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        graft.operators.Ivf.insertIntoCosine(batch.sparkSession, layoutDir, batch.toDF())
-        maybeRecluster(batch.sparkSession, layoutDir, recluster)
-      }
-      .start()
-
-  /** [[maintainIvf]] for a MIPS layout: each micro-batch augments with
-    * the layout's RECORDED `_graft_maxnorm` build constant
-    * ([[graft.operators.Ivf.insertIntoMips]] — a larger-norm arrival
-    * clamps its extra coordinate; served dots stay exact).
-    */
-  def maintainIvfMips(newVectors: DataFrame, layoutDir: String,
-                      recluster: Option[ReclusterPolicy] = None): StreamingQuery =
-    newVectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        graft.operators.Ivf.insertIntoMips(batch.sparkSession, layoutDir, batch.toDF())
         maybeRecluster(batch.sparkSession, layoutDir, recluster)
       }
       .start()

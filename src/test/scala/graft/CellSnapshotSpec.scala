@@ -276,22 +276,6 @@ class CellSnapshotSpec extends AnyFunSuite {
     assert(layoutIds() === model)
   }
 
-  test("insertInto refuses cosine/MIPS layouts (layout-kind guard)") {
-    val cosDir = Files.createTempDirectory("snap_kind_cos").toString
-    Ivf.ensurePartitionedCosine(emb, C, cosDir)
-    assert(Ivf.layoutKind(spark, cosDir) === "cosine")
-    val e1 = intercept[IllegalArgumentException] {
-      Ivf.insertInto(spark, cosDir, emb.limit(3))
-    }
-    assert(e1.getMessage.contains("cosine"))
-    val mipsDir = Files.createTempDirectory("snap_kind_mips").toString
-    Ivf.ensurePartitionedMips(emb, C, mipsDir)
-    assert(Ivf.layoutKind(spark, mipsDir) === "mips")
-    intercept[IllegalArgumentException] {
-      Ivf.insertInto(spark, mipsDir, emb.limit(3))
-    }
-  }
-
   test("routed HNSW: a reader planned before compaction serves the pre-compaction graph; post-compaction reads are consistent") {
     val p = Hnsw.Params(efSearch = 256, numPartitions = 3)
     val cents = Ivf.kmeans(emb, 8, 2)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorFunctions._
-import graft.operators.{IndexMeta, Ivf, Pq}
+import graft.operators.{IndexMeta, Ivf, Pq, Sq}
 
 /** Incremental-insert lifecycle for the cell-partitioned serving
   * layouts — the append twin of IvfDeleteSpec: `Ivf.insertInto` /
@@ -112,7 +112,7 @@ class IvfInsertSpec extends AnyFunSuite {
     val cosCents = Ivf.centroids(Ivf.normalized(emb), C)
     Ivf.ensurePartitionedWith(Ivf.normalized(base), cosCents, cosDir,
       tag = "cosins", kind = "cosine")
-    Ivf.insertIntoCosine(spark, cosDir, fresh)
+    Ivf.insertInto(spark, cosDir, fresh)
     val cosFull = Files.createTempDirectory("cos_ins_full").toString
     Ivf.ensurePartitionedWith(Ivf.normalized(emb), cosCents, cosFull,
       tag = "cosinsfull", kind = "cosine")
@@ -130,12 +130,12 @@ class IvfInsertSpec extends AnyFunSuite {
     // ensurePartitionedWith doesn't record the constant — mirror
     // ensurePartitionedMips's contract through the public entry point
     val e0 = intercept[IllegalStateException] {
-      Ivf.insertIntoMips(spark, mipsDir, fresh)
+      Ivf.insertInto(spark, mipsDir, fresh)
     }
     assert(e0.getMessage.contains("_graft_maxnorm"))
     val mipsDir2 = Files.createTempDirectory("mips_ins2").toString
     Ivf.ensurePartitionedMips(base, C, mipsDir2)
-    Ivf.insertIntoMips(spark, mipsDir2, fresh)
+    Ivf.insertInto(spark, mipsDir2, fresh)
     val mipsFull = Files.createTempDirectory("mips_ins_full").toString
     Ivf.ensurePartitionedMips(emb, C, mipsFull)
     // same m on both sides, so serving geometry matches a single-pass
@@ -145,18 +145,14 @@ class IvfInsertSpec extends AnyFunSuite {
       "insert-grown MIPS serving must equal the single-pass layout at nprobe=C")
     assert(spark.read.parquet(mipsDir2).count() === emb.count())
 
-    // kind guards: wrong-variant appends fail loudly in every direction
-    val plainDir = Files.createTempDirectory("ivf_ins_guard").toString
-    Ivf.ensurePartitionedWith(emb, cents, plainDir, tag = "guardplain")
+    // kind guard: a code layout holds no vectors to append to — the
+    // error names the kind the layout recorded
+    val sqDir = Files.createTempDirectory("ivf_ins_guard").toString
+    val (lo, hi) = Sq.bounds(emb)
+    Sq.ensureEncodedPartitioned(emb, cents, lo, hi, sqDir)
     assert(intercept[IllegalArgumentException] {
-      Ivf.insertIntoCosine(spark, plainDir, fresh)
-    }.getMessage.contains("plain"))
-    assert(intercept[IllegalArgumentException] {
-      Ivf.insertIntoMips(spark, plainDir, fresh)
-    }.getMessage.contains("plain"))
-    assert(intercept[IllegalArgumentException] {
-      Ivf.insertInto(spark, cosDir, fresh)
-    }.getMessage.contains("cosine"))
+      Ivf.insertInto(spark, sqDir, fresh)
+    }.getMessage.contains("'ivfsq8'"))
   }
 
   test("ensureInsertedPartitioned memoizes on the (base, fresh, cents) split") {

@@ -2,306 +2,260 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorFunctions._
 import graft.operators.Ivf
 
-/** Range (radius) search over the cell-partitioned layout: the result
-  * must equal a brute-force full-scan filter (the cell pruning is the
-  * triangle inequality — LOSSLESS by construction), and on clustered
-  * data the pruning must actually skip cells (the scale claim: a
-  * query ball that intersects few clusters reads few cells' files).
+/** Range search over the cell-partitioned layout, table-driven over
+  * the layout kinds {plain, cosine, mips} × {single query, batch}: the
+  * layout's recorded kind chooses the metric, and the result must
+  * equal a full-scan filter in that metric (the cell pruning is a
+  * triangle-inequality bound — LOSSLESS by construction). On clustered
+  * data the pruning must actually skip cells (the scale claim: a query
+  * ball that intersects few clusters reads few cells' files).
   */
 class IvfRangeSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
 
-  /** Clustered fixture: 4 well-separated blobs in 8-d (centers at
-    * 0, 100, 200, 300 on every coordinate, members within ±1), so a
-    * small ball around one blob provably cannot touch the others.
+  /** One row of the kind table: a fixture clustered in the kind's own
+    * metric, its layout builder, a threshold that selects the query's
+    * cluster only, queries drawn from ONE cluster, and the cluster of
+    * every row.
     */
-  private lazy val clustered = (0L until 200L).map { i =>
+  private case class Kind(name: String, fixture: DataFrame, build: (DataFrame, String) => Unit,
+                          threshold: Double, queryIds: Seq[Long], cluster: Long => Long)
+
+  /** 4 well-separated blobs in 8-d (centers at 0, 100, 200, 300 on every
+    * coordinate, members within ±1): an L2 ball of radius 10 around one
+    * blob provably cannot touch the others.
+    */
+  private lazy val blobs = (0L until 200L).map { i =>
     val rnd = new scala.util.Random(i)
     val center = (i % 4) * 100.0f
     (i, Array.fill(8)(center + rnd.nextFloat() * 2f - 1f))
   }.toDF("vec_id", "embedding").cache()
 
-  private def brute(emb: org.apache.spark.sql.DataFrame,
-                    q: org.apache.spark.sql.DataFrame, r: Double) =
-    emb.crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(l2Distance(col("embedding"), col("query_vec")), 6).as("dist"))
-      .filter(col("dist") <= r)
-      .orderBy(col("dist"), col("vec_id"))
-      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
+  /** Vectors near one of 3 orthogonal axes: after normalization these
+    * are tight caps on the sphere (a 0.9 cosine floor clears only the
+    * query's cap), and their norms ~10 make a 95 dot floor clear only
+    * same-axis pairs.
+    */
+  private lazy val caps = {
+    val rnd = new scala.util.Random(5)
+    val axes = Seq(Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f), Array(0f, 0f, 1f, 0f))
+    (0L until 120L).map { i =>
+      (i, axes((i % 3).toInt).map(x => x * 10f + rnd.nextFloat() * 0.5f))
+    }.toDF("vec_id", "embedding").cache()
+  }
+
+  private lazy val kinds = Seq(
+    Kind("plain", blobs,
+      (df, dir) => Ivf.writePartitionedWith(df, Ivf.centroids(df, 8), dir),
+      10.0, Seq(0L, 4L, 8L), _ % 4),
+    Kind("cosine", caps, (df, dir) => Ivf.ensurePartitionedCosine(df, 6, dir),
+      0.9, Seq(0L, 3L, 6L), _ % 3),
+    Kind("mips", caps, (df, dir) => Ivf.ensurePartitionedMips(df, 6, dir),
+      95.0, Seq(0L, 3L, 6L), _ % 3))
+
+  private def layout(k: Kind, rows: DataFrame): String = {
+    val dir = Files.createTempDirectory(s"range_${k.name}").toString
+    k.build(rows, dir)
+    assert(Ivf.layoutKind(spark, dir) === k.name)
+    dir
+  }
+
+  private def queriesOf(rows: DataFrame, ids: Seq[Long]): DataFrame =
+    rows.filter(col("vec_id").isin(ids: _*))
+      .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
+
+  private type Hit = (Long, Long, Double)
+
+  /** The oracle: every (query, row) pair whose score in the kind's
+    * metric clears the threshold, by a full scan — ordered like
+    * `rangeSearch`'s ordered form.
+    */
+  private def fullScan(k: Kind, rows: DataFrame, qs: DataFrame): Seq[Hit] = {
+    val (emb, q) = (col("embedding"), col("query_vec"))
+    val (stored, query, score) = k.name match {
+      case "plain" => (rows, q, l2Distance(emb, q))
+      case "cosine" => (Ivf.normalized(rows), normalizeQuery(q),
+        lit(1.0) - l2DistanceSq(emb, q) / lit(2.0))
+      case "mips" => (rows, q, dotProduct(emb, q))
+    }
+    val s = col("score")
+    val (passes, byScore) =
+      if (k.name == "plain") (s <= k.threshold, s) else (s >= k.threshold, s.desc)
+    stored.crossJoin(broadcast(qs.select(col("query_id"), query.as("query_vec"))))
+      .select(col("query_id"), col("vec_id"), round(score, 6).as("score"))
+      .filter(passes)
+      .orderBy(col("query_id"), byScore, col("vec_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+  }
+
+  private def hits(df: DataFrame): Seq[Hit] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+
+  /** `rangeSearch` in one form: the whole batch in one call, or each
+    * query alone as a one-row `(query_vec)` frame (results tagged with
+    * its id, concatenated in id order).
+    */
+  private def serve(dir: String, qs: DataFrame, threshold: Double, batch: Boolean,
+                    predicate: Option[Column] = None, ordered: Boolean = true): Seq[Hit] =
+    if (batch) hits(Ivf.rangeSearch(spark, dir, qs, threshold, predicate = predicate,
+      ordered = ordered))
+    else qs.select("query_id").collect().map(_.getLong(0)).sorted.toSeq.flatMap { qid =>
+      val one = qs.filter(col("query_id") === qid).select("query_vec")
+      val out = Ivf.rangeSearch(spark, dir, one, threshold, predicate = predicate,
+        ordered = ordered)
+      assert(out.columns.length === 2, s"a single query returns (vec_id, score): ${out.columns}")
+      out.collect().map(r => (qid, r.getLong(0), r.getDouble(1)))
+    }
+
+  private val forms = Seq("single" -> false, "batch" -> true)
+
+  /** Cell partitions the layout scan of `df` opened (the scan's
+    * "number of partitions read" metric, after running it).
+    */
+  private def cellsRead(df: DataFrame): Long = {
+    df.collect()
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec if s.relation.partitionSchema.nonEmpty =>
+        s.metrics("numPartitions").value
+    }.sum
+  }
 
   test("rangeSearch == brute-force filter; clustered fixture skips non-intersecting cells") {
-    val dir = Files.createTempDirectory("ivf_range").toString
-    Ivf.writePartitionedWith(clustered, Ivf.centroids(clustered, 8), dir)
-    // query near blob 0; radius covers that blob only (blob diameter
-    // <= 2*sqrt(8*1) ~ 5.7, blob separation >= 100*sqrt(8) ~ 283)
-    val q = clustered.filter(col("vec_id") === 0)
-      .select(perturbQuery(col("embedding")).as("query_vec"))
-    val r = 10.0
-
-    val got = Ivf.rangeSearch(spark, dir, q, r)
-      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
-    assert(got === brute(clustered, q, r), "pruned range search must equal brute force")
-    assert(got.nonEmpty && got.size < 200, "fixture must select a proper subset")
-    assert(got.forall(_._1 % 4 == 0), "only blob-0 members lie within the ball")
-
-    // the scale claim: the triangle-inequality bound must have skipped
-    // the cells of the other blobs (re-derive the eligible set the way
-    // rangeSearch does and count)
-    val cents = spark.read.parquet(s"$dir/_centroids")
-    val radii = spark.read.parquet(s"$dir/_radii")
-    val eligible = cents.join(radii, col("centroid_id") === col("cell"))
-      .crossJoin(broadcast(q))
-      .filter(l2Distance(col("centroid_vec"), col("query_vec")) - col("radius")
-        <= lit(r) + lit(1e-6))
-      .count()
-    val total = cents.count()
-    assert(eligible < total,
-      s"clustered fixture must prune: $eligible of $total cells eligible")
+    for (k <- kinds; (form, batch) <- forms) {
+      val dir = layout(k, k.fixture)
+      val qs = queriesOf(k.fixture, if (batch) k.queryIds else k.queryIds.take(1))
+      val got = serve(dir, qs, k.threshold, batch)
+      assert(got === fullScan(k, k.fixture, qs),
+        s"${k.name}/$form: pruned range search must equal the full-scan filter")
+      assert(got.nonEmpty && got.size < k.fixture.count() * qs.count(),
+        s"${k.name}/$form: fixture must select a proper subset")
+      assert(got.forall(h => k.cluster(h._2) == k.cluster(k.queryIds.head)),
+        s"${k.name}/$form: only the query's own cluster clears the threshold")
+      // the scale claim: the bound skipped the other clusters' cells
+      val read = cellsRead(if (batch) Ivf.rangeSearch(spark, dir, qs, k.threshold)
+        else Ivf.rangeSearch(spark, dir, qs.select("query_vec"), k.threshold))
+      val total = spark.read.parquet(dir).select("cell").distinct().count()
+      assert(read > 0 && read < total,
+        s"${k.name}/$form: clustered fixture must prune: read $read of $total cells")
+    }
   }
 
   test("batch rangeSearch == per-query brute force, on clustered AND near-uniform data") {
-    val dir = Files.createTempDirectory("ivf_range_batch").toString
-    Ivf.writePartitionedWith(clustered, Ivf.centroids(clustered, 8), dir)
-    val qs = clustered.filter(col("vec_id") < 6)
-      .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-    val got = Ivf.rangeSearchBatch(spark, dir, qs, 10.0)
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSet
-    val expected = clustered.crossJoin(broadcast(qs))
-      .select(col("query_id"), col("vec_id"),
-        round(l2Distance(col("embedding"), col("query_vec")), 6).as("dist"))
-      .filter(col("dist") <= 10.0)
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSet
-    assert(got === expected, "batch range must equal per-query brute force")
-    // every query finds its own blob's members
-    assert((0L until 6L).forall(qid => got.exists(_._1 == qid)))
+    for (k <- kinds) {
+      val dir = layout(k, k.fixture)
+      // one query per cluster: the union of eligible cells covers the
+      // whole layout, and each query is still scored only on its own
+      val qs = queriesOf(k.fixture, 0L until 6L)
+      val batch = serve(dir, qs, k.threshold, batch = true)
+      assert(batch === serve(dir, qs, k.threshold, batch = false),
+        s"${k.name}: the batch form must equal the per-query single form")
+      assert(batch === fullScan(k, k.fixture, qs), s"${k.name}: batch must equal the full scan")
+      assert((0L until 6L).forall(qid => batch.exists(_._1 == qid)),
+        s"${k.name}: every query finds its own cluster")
+    }
+    // near-uniform data: nothing prunes, the result is still exact
+    val rnd = new scala.util.Random(11)
+    val uniform = (0L until 100L).map(i => (i, Array.fill(8)(rnd.nextFloat())))
+      .toDF("vec_id", "embedding")
+    val plain = kinds.head
+    val dir = layout(plain, uniform)
+    val qs = queriesOf(uniform, 0L until 4L)
+    val near = serve(dir, qs, 1.5, batch = true)
+    assert(near.nonEmpty && near === fullScan(plain.copy(threshold = 1.5), uniform, qs))
   }
 
   test("filtered range search: predicate == brute force with the same filter, on every form") {
-    val dir = Files.createTempDirectory("ivf_range_filt").toString
-    Ivf.writePartitionedWith(clustered, Ivf.centroids(clustered, 8), dir)
-    val q = clustered.filter(col("vec_id") === 0)
-      .select(perturbQuery(col("embedding")).as("query_vec"))
-    val pred = pmod(col("vec_id"), lit(2)) === 0
-
-    val got = Ivf.rangeSearch(spark, dir, q, 10.0, predicate = Some(pred))
-      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
-    val expected = brute(clustered.filter(pred), q, 10.0)
-    assert(got === expected, "filtered range must equal brute force over the filtered table")
-    assert(got.nonEmpty && got.forall(_._1 % 2 == 0))
-
-    val qs = clustered.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-    val gotB = Ivf.rangeSearchBatch(spark, dir, qs, 10.0, predicate = Some(pred))
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSet
-    val expB = clustered.filter(pred).crossJoin(broadcast(qs))
-      .select(col("query_id"), col("vec_id"),
-        round(l2Distance(col("embedding"), col("query_vec")), 6).as("dist"))
-      .filter(col("dist") <= 10.0)
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSet
-    assert(gotB === expB)
+    val pred = pmod(col("vec_id"), lit(8)) === 0
+    for (k <- kinds; (form, batch) <- forms) {
+      val dir = layout(k, k.fixture)
+      val qs = queriesOf(k.fixture, if (batch) k.queryIds else k.queryIds.take(1))
+      val got = serve(dir, qs, k.threshold, batch, predicate = Some(pred))
+      assert(got === fullScan(k, k.fixture.filter(pred), qs),
+        s"${k.name}/$form: filtered range must equal the full scan of the filtered table")
+      assert(got.nonEmpty && got.forall(_._2 % 8 == 0))
+    }
   }
 
   test("ordered=false serving twins return the same row SETS with no top-level sort") {
-    val dir = Files.createTempDirectory("ivf_range_unord").toString
-    Ivf.writePartitionedWith(clustered, Ivf.centroids(clustered, 8), dir)
-    val q = clustered.filter(col("vec_id") === 0)
-      .select(perturbQuery(col("embedding")).as("query_vec"))
-    val qs = clustered.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-
-    val sortedRows = Ivf.rangeSearch(spark, dir, q, 10.0)
-      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSet
-    val unord = Ivf.rangeSearch(spark, dir, q, 10.0, ordered = false)
-    assert(unord.collect().map(x => (x.getLong(0), x.getDouble(1))).toSet === sortedRows)
-    assert(!unord.queryExecution.executedPlan.toString.contains("Sort "),
-      "the serving twin must not pay a global sort of an unbounded result")
-
-    val sortedB = Ivf.rangeSearchBatch(spark, dir, qs, 10.0)
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSet
-    val unordB = Ivf.rangeSearchBatch(spark, dir, qs, 10.0, ordered = false)
-    assert(unordB.collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSet
-      === sortedB)
-    assert(!unordB.queryExecution.executedPlan.toString.contains("Sort "))
-
-    // cosine + MIPS twins on their own layouts
-    val cosDir = Files.createTempDirectory("cos_range_unord").toString
-    Ivf.ensurePartitionedCosine(clustered, 8, cosDir)
-    val sortedC = Ivf.cosineRangeSearch(spark, cosDir, q, 0.5)
-      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSet
-    val unordC = Ivf.cosineRangeSearch(spark, cosDir, q, 0.5, ordered = false)
-    assert(unordC.collect().map(x => (x.getLong(0), x.getDouble(1))).toSet === sortedC)
-    assert(!unordC.queryExecution.executedPlan.toString.contains("Sort "))
-
-    val mipsDir = Files.createTempDirectory("mips_range_unord").toString
-    Ivf.ensurePartitionedMips(clustered, 8, mipsDir)
-    val sortedM = Ivf.mipsRangeSearch(spark, mipsDir, q, 100.0)
-      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSet
-    val unordM = Ivf.mipsRangeSearch(spark, mipsDir, q, 100.0, ordered = false)
-    assert(unordM.collect().map(x => (x.getLong(0), x.getDouble(1))).toSet === sortedM)
-    assert(!unordM.queryExecution.executedPlan.toString.contains("Sort "))
+    for (k <- kinds; (form, batch) <- forms) {
+      val dir = layout(k, k.fixture)
+      val qs = queriesOf(k.fixture, if (batch) k.queryIds else k.queryIds.take(1))
+      assert(serve(dir, qs, k.threshold, batch, ordered = false).toSet ===
+        serve(dir, qs, k.threshold, batch).toSet, s"${k.name}/$form")
+      val unord = Ivf.rangeSearch(spark, dir,
+        if (batch) qs else qs.select("query_vec"), k.threshold, ordered = false)
+      assert(!unord.queryExecution.executedPlan.toString.contains("Sort "),
+        s"${k.name}/$form: the serving twin must not pay a global sort of an unbounded result")
+    }
   }
 
-  test("rangeSearchWithDeletes: tombstoned ids vanish; == layout rebuilt without them") {
-    val dir = Files.createTempDirectory("ivf_range_del").toString
-    val cents = Ivf.centroids(clustered, 8)
-    Ivf.writePartitionedWith(clustered, cents, dir)
-    val q = clustered.filter(col("vec_id") === 0)
-      .select(perturbQuery(col("embedding")).as("query_vec"))
-    val dels = Seq(0L, 4L, 8L).toDF("vec_id")
-    Ivf.recordDeletes(spark, dir, dels)
-    val got = Ivf.rangeSearchWithDeletes(spark, dir, q, 10.0)
-      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
-    assert(got.forall(r => !Seq(0L, 4L, 8L).contains(r._1)))
-    val cleanDir = Files.createTempDirectory("ivf_range_del_clean").toString
-    Ivf.writePartitionedWith(clustered.filter(!col("vec_id").isin(0L, 4L, 8L)),
-      cents, cleanDir)
-    assert(got === Ivf.rangeSearch(spark, cleanDir, q, 10.0)
-      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq,
-      "tombstone range serving must equal a layout built without the deleted rows")
+  test("tombstones always excluded, every kind and form: == layout built without them") {
+    for (k <- kinds) {
+      // the query's own source row and two cluster-mates are taken down
+      val dels = k.queryIds
+      val dir = layout(k, k.fixture)
+      Ivf.recordDeletes(spark, dir, dels.toDF("vec_id"))
+      val clean = layout(k, k.fixture.filter(!col("vec_id").isin(dels: _*)))
+      for ((form, batch) <- forms) {
+        val qs = queriesOf(k.fixture, if (batch) k.queryIds else k.queryIds.take(1))
+        val got = serve(dir, qs, k.threshold, batch)
+        assert(got.nonEmpty && got.forall(h => !dels.contains(h._2)),
+          s"${k.name}/$form: tombstoned ids must reach no range result")
+        assert(got === serve(clean, qs, k.threshold, batch),
+          s"${k.name}/$form: tombstone serving must equal a layout built without the deleted rows")
+      }
+    }
   }
 
-  test("cosine/MIPS range under tombstones == layouts rebuilt without the deleted rows") {
-    val dels = Seq(0L, 4L, 8L).toDF("vec_id")
-    val keep = !col("vec_id").isin(0L, 4L, 8L)
-    val q = clustered.filter(col("vec_id") === 1)
-      .select(perturbQuery(col("embedding")).as("query_vec"))
-
-    val cosDir = Files.createTempDirectory("cos_range_del").toString
-    Ivf.ensurePartitionedCosine(clustered, 8, cosDir)
-    Ivf.recordDeletes(spark, cosDir, dels)
-    val gotC = Ivf.cosineRangeSearchWithDeletes(spark, cosDir, q, 0.5)
-      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
-    assert(gotC.forall(r => !Seq(0L, 4L, 8L).contains(r._1)))
-    val cosClean = Files.createTempDirectory("cos_range_del_clean").toString
-    // same centroid geometry: normalize the FULL table for seeding so
-    // the probe bounds match, then serve the kept rows
-    Ivf.ensurePartitionedWith(Ivf.normalized(clustered).filter(keep),
-      Ivf.centroids(Ivf.normalized(clustered), 8), cosClean, tag = "cosdelclean",
-      kind = "cosine")
-    assert(gotC === Ivf.cosineRangeSearch(spark, cosClean, q, 0.5)
-      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq,
-      "cosine range tombstone serving must equal a layout built without the deleted rows")
-
-    val mipsDir = Files.createTempDirectory("mips_range_del").toString
-    Ivf.ensurePartitionedMips(clustered, 8, mipsDir)
-    Ivf.recordDeletes(spark, mipsDir, dels)
-    val gotM = Ivf.mipsRangeSearchWithDeletes(spark, mipsDir, q, 100.0)
-      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
-    assert(gotM.forall(r => !Seq(0L, 4L, 8L).contains(r._1)))
-    val mipsClean = Files.createTempDirectory("mips_range_del_clean").toString
-    // same augmentation (corpus max norm from the FULL table) so the
-    // augmented geometry is identical, kept rows only
-    Ivf.ensurePartitionedWith(Ivf.augmented(clustered).filter(keep),
-      Ivf.centroids(Ivf.augmented(clustered), 8), mipsClean, tag = "mipsdelclean",
-      kind = "mips")
-    assert(gotM === Ivf.mipsRangeSearch(spark, mipsClean, q, 100.0)
-      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq,
-      "MIPS range tombstone serving must equal a layout built without the deleted rows")
-
-    // the BATCH serving forms honor the same sidecar (all 3 metrics)
-    val qs = clustered.filter(col("vec_id").isin(1L, 2L))
-      .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-    val l2Dir = Files.createTempDirectory("l2_range_del_batch").toString
-    Ivf.writePartitionedWith(clustered, Ivf.centroids(clustered, 8), l2Dir)
-    Ivf.recordDeletes(spark, l2Dir, dels)
-    val batchRows =
-      Ivf.rangeSearchBatchWithDeletes(spark, l2Dir, qs, 10.0).select("vec_id") union
-      Ivf.cosineRangeSearchBatchWithDeletes(spark, cosDir, qs, 0.5).select("vec_id") union
-      Ivf.mipsRangeSearchBatchWithDeletes(spark, mipsDir, qs, 100.0).select("vec_id")
-    assert(batchRows.filter(col("vec_id").isin(0L, 4L, 8L)).count() === 0,
-      "tombstoned ids must reach no batch range result in any metric")
-    assert(batchRows.count() > 0)
-  }
-
-  test("cosineRangeSearch == brute-force cosine filter; direction clusters prune") {
-    // directional blobs: all vectors near one of 3 orthogonal axes —
-    // after normalization these are tight caps on the sphere, so a
-    // high similarity floor prunes the other caps' cells
-    val rnd = new scala.util.Random(5)
-    val dirs = Seq(Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f), Array(0f, 0f, 1f, 0f))
-    val vecs = (0L until 120L).map { i =>
-      val base = dirs((i % 3).toInt)
-      (i, base.map(x => x * 10f + rnd.nextFloat() * 0.5f))
-    }.toDF("vec_id", "embedding").cache()
-    val dir = Files.createTempDirectory("cos_range").toString
-    Ivf.ensurePartitionedCosine(vecs, 6, dir)
-    val q = vecs.filter(col("vec_id") === 0)
-      .select(perturbQuery(col("embedding")).as("query_vec"))
-
-    val got = Ivf.cosineRangeSearch(spark, dir, q, minSim = 0.9)
-      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
-    // brute force: normalized diff-list score over every vector
-    val qn = Ivf.normalizedQuery(q)
-    val expected = Ivf.normalized(vecs).crossJoin(broadcast(qn))
-      .select(col("vec_id"),
-        round(lit(1.0) - l2DistanceSq(col("embedding"), col("query_vec")) / lit(2.0),
-          6).as("cos_sim"))
-      .filter(col("cos_sim") >= 0.9)
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
-    assert(got === expected, "pruned cosine range must equal brute force")
-    assert(got.nonEmpty && got.forall(_._1 % 3 == 0),
-      "only the query's own direction cap clears a 0.9 floor")
-  }
-
-  test("batch cosine/MIPS range == per-query single forms, per query") {
-    val rnd = new scala.util.Random(5)
-    val dirs3 = Seq(Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f), Array(0f, 0f, 1f, 0f))
-    val vecs = (0L until 120L).map { i =>
-      val base = dirs3((i % 3).toInt)
-      (i, base.map(x => x * 10f + rnd.nextFloat() * 0.5f))
-    }.toDF("vec_id", "embedding").cache()
-    val qs = vecs.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-
-    val cosDir = Files.createTempDirectory("cos_range_batch").toString
-    Ivf.ensurePartitionedCosine(vecs, 6, cosDir)
-    val gotCos = Ivf.cosineRangeSearchBatch(spark, cosDir, qs, minSim = 0.9)
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSet
-    val expCos = (0L until 5L).flatMap { qid =>
-      val q = qs.filter(col("query_id") === qid).select("query_vec")
-      Ivf.cosineRangeSearch(spark, cosDir, q, minSim = 0.9)
-        .collect().map(x => (qid, x.getLong(0), x.getDouble(1)))
-    }.toSet
-    assert(gotCos === expCos, "batch cosine range must equal the per-query form")
-    assert((0L until 5L).forall(qid => gotCos.exists(_._1 == qid)))
-
-    val mipsDir = Files.createTempDirectory("mips_range_batch").toString
-    Ivf.ensurePartitionedMips(vecs, 6, mipsDir)
-    val gotMips = Ivf.mipsRangeSearchBatch(spark, mipsDir, qs, minDot = 95.0)
-      .collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSet
-    val expMips = (0L until 5L).flatMap { qid =>
-      val q = qs.filter(col("query_id") === qid).select("query_vec")
-      Ivf.mipsRangeSearch(spark, mipsDir, q, minDot = 95.0)
-        .collect().map(x => (qid, x.getLong(0), x.getDouble(1)))
-    }.toSet
-    assert(gotMips === expMips, "batch MIPS range must equal the per-query form")
-    assert(gotMips.nonEmpty && gotMips.forall(t => t._1 % 3 == t._2 % 3),
-      "a 95 dot floor only clears within the query's own direction cap")
+  test("a NaN cell radius keeps the cell: a degenerate row cannot hide its cell-mates") {
+    // a row with a NaN component normalizes to all-NaN, so its cell's
+    // covering radius is NaN (Spark's max ranks NaN highest). The row
+    // sits at a high id (not a centroid seed) and lands in cell 0 (all
+    // its centroid distances tie at NaN) with the query's own cap. A
+    // zero-norm row would serve too, but Spark's ANSI division refuses
+    // to normalize it at build time.
+    val withNaN = caps.filter(col("vec_id") =!= 117L)
+      .union(Seq((117L, Array(Float.NaN, 0f, 0f, 0f))).toDF("vec_id", "embedding"))
+    val cosine = kinds(1)
+    val dir = layout(cosine, withNaN)
+    Ivf.ensureRadii(spark, dir)
+    val radii = spark.read.parquet(s"$dir/_radii")
+    assert(radii.filter(isnan(col("radius"))).count() === 1, "fixture must hold one NaN radius")
+    def shown(h: Seq[Hit]) = h.map(t => (t._1, t._2, t._3.toString))
+    for ((form, batch) <- forms) {
+      val qs = queriesOf(withNaN, if (batch) cosine.queryIds else cosine.queryIds.take(1))
+      val got = serve(dir, qs, cosine.threshold, batch)
+      assert(shown(got) === shown(fullScan(cosine, withNaN, qs)),
+        s"$form: range over a NaN-radius cell must equal the full-scan filter")
+      assert(got.exists(_._2 == 117L), s"$form: Spark's NaN >= floor keeps the NaN row too")
+    }
   }
 
   test("insertInto drops stale radii so grown cells never under-prune") {
-    val dir = Files.createTempDirectory("ivf_range_ins").toString
-    val base = clustered.filter(col("vec_id") >= 4)   // blob centers stay seeded
-    val cents = Ivf.centroids(clustered, 8)
-    Ivf.writePartitionedWith(base, cents, dir)
-    val q = clustered.filter(col("vec_id") === 0)
-      .select(perturbQuery(col("embedding")).as("query_vec"))
-    // materialize radii for the base layout, then grow it
-    Ivf.rangeSearch(spark, dir, q, 10.0).count()
-    Ivf.insertInto(spark, dir, clustered.filter(col("vec_id") < 4))
-    val got = Ivf.rangeSearch(spark, dir, q, 10.0)
-      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
-    assert(got === brute(clustered, q, 10.0),
-      "post-insert range search must see the inserted rows (radii regenerated)")
-    assert(got.exists(_._1 == 0L), "the inserted near-query row must be found")
+    for (k <- kinds) {
+      // the query's cluster-mates arrive after the build; the seeds
+      // (low ids) stay in the base
+      val late = col("vec_id").isin(k.queryIds.tail: _*)
+      val dir = layout(k, k.fixture.filter(!late))
+      val qs = queriesOf(k.fixture, k.queryIds.take(1)).select("query_vec")
+      // materialize radii for the base layout, then grow it
+      Ivf.rangeSearch(spark, dir, qs, k.threshold).count()
+      Ivf.insertInto(spark, dir, k.fixture.filter(late))
+      val got = serve(dir, queriesOf(k.fixture, k.queryIds.take(1)), k.threshold, batch = false)
+      assert(got === fullScan(k, k.fixture, queriesOf(k.fixture, k.queryIds.take(1))),
+        s"${k.name}: post-insert range search must see the inserted rows (radii regenerated)")
+      assert(k.queryIds.tail.forall(id => got.exists(_._2 == id)),
+        s"${k.name}: the inserted near-query rows must be found")
+    }
   }
 }

@@ -209,7 +209,7 @@ class IvfReclusterSpec extends AnyFunSuite {
     for (np <- Seq(1, 2, C))
       assert(serve(dir, np) == serve(freshDir, np),
         s"reclustered cosine layout must serve like a fresh build at nprobe=$np")
-    // the kind marker survives the rewrite (insertIntoCosine still works)
+    // the kind marker survives the rewrite (insertInto still normalizes)
     assert(Ivf.layoutKind(spark, dir) == "cosine")
   }
 

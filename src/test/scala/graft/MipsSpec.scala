@@ -113,7 +113,7 @@ class MipsSpec extends AnyFunSuite {
       .select(perturbQuery(col("embedding")).as("query_vec"))
     val minDot = 70000.0 // far-blob pair dots ~ 8·100.5² ≈ 80k; near-blob pairs ~ 1.2k
 
-    val got = Ivf.mipsRangeSearch(spark, dir, q, minDot)
+    val got = Ivf.rangeSearch(spark, dir, q, minDot)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val expected = vecs.crossJoin(broadcast(q))
       .select(col("vec_id"),
@@ -126,7 +126,7 @@ class MipsSpec extends AnyFunSuite {
       "only the large-norm blob can clear the floor")
 
     // pruning evidence: re-derive the eligible set the way
-    // mipsRangeSearch does and confirm some cell was skipped
+    // rangeSearch does on a mips layout and confirm some cell was skipped
     val qa = Ivf.augmentedQuery(q)
     val cents = spark.read.parquet(s"$dir/_centroids")
     val radii = spark.read.parquet(s"$dir/_radii")

@@ -524,13 +524,13 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val cosDir = java.nio.file.Files.createTempDirectory("stream_cos").toString
     Ivf.ensurePartitionedCosine(baseRows.toDF("vec_id", "embedding"), 8, cosDir)
     val memC = MemoryStream[(Long, Array[Float])]
-    val qc = StreamingAnn.maintainIvfCosine(memC.toDF().toDF("vec_id", "embedding"), cosDir)
+    val qc = StreamingAnn.maintainIvf(memC.toDF().toDF("vec_id", "embedding"), cosDir)
     try { memC.addData(freshRows: _*); qc.processAllAvailable() } finally qc.stop()
 
     val mipsDir = java.nio.file.Files.createTempDirectory("stream_mips").toString
     Ivf.ensurePartitionedMips(baseRows.toDF("vec_id", "embedding"), 8, mipsDir)
     val memM = MemoryStream[(Long, Array[Float])]
-    val qm = StreamingAnn.maintainIvfMips(memM.toDF().toDF("vec_id", "embedding"), mipsDir)
+    val qm = StreamingAnn.maintainIvf(memM.toDF().toDF("vec_id", "embedding"), mipsDir)
     try { memM.addData(freshRows: _*); qm.processAllAvailable() } finally qm.stop()
 
     // nprobe = C: the streamed layouts must serve the exact answers

@@ -5,7 +5,7 @@ import org.scalacheck.Prop.propBoolean
 
 /** ScalaCheck properties for the range-family pruning LAWS (pure
   * Scala — no Spark session). The engine's range serving
-  * (`Ivf.rangeSearch` / `cosineRangeSearch` / `mipsRangeSearch`)
+  * (`Ivf.rangeSearch` on plain, cosine and mips layouts)
   * skips whole cells by these bounds; the claim that makes the
   * skipped-cell scan LOSSLESS is exactly what these properties
   * hammer: for random data, random cells, random queries and random
