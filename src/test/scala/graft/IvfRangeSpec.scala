@@ -130,8 +130,12 @@ class IvfRangeSpec extends AnyFunSuite {
     }.sum
   }
 
-  test("rangeSearch == brute-force filter; clustered fixture skips non-intersecting cells") {
-    for (k <- kinds; (form, batch) <- forms) {
+  /** Pruned `rangeSearch` on `k`'s layout, single and batch: equal to
+    * the full-scan filter, only the query's own cluster clears the
+    * threshold, and the bound skips the other clusters' cells.
+    */
+  private def prunesLosslessly(k: Kind): Unit =
+    for ((form, batch) <- forms) {
       val dir = layout(k, k.fixture)
       val qs = queriesOf(k.fixture, if (batch) k.queryIds else k.queryIds.take(1))
       val got = serve(dir, qs, k.threshold, batch)
@@ -148,30 +152,52 @@ class IvfRangeSpec extends AnyFunSuite {
       assert(read > 0 && read < total,
         s"${k.name}/$form: clustered fixture must prune: read $read of $total cells")
     }
+
+  private def kind(name: String): Kind = kinds.find(_.name == name).get
+
+  test("rangeSearch == brute-force filter; clustered fixture skips non-intersecting cells") {
+    // the L2 ball bound (plain) and the normsq dot bound (mips)
+    prunesLosslessly(kind("plain"))
+    prunesLosslessly(kind("mips"))
+  }
+
+  test("cosineRangeSearch == brute-force cosine filter; direction clusters prune") {
+    // a cosine layout served by `rangeSearch`: the cosine ball bound on
+    // normalized direction caps, 0.9 floor
+    prunesLosslessly(kind("cosine"))
+  }
+
+  /** One query per cluster: the union of eligible cells covers the
+    * whole layout, and each query is still scored only on its own. The
+    * batch form must equal the per-query single form and the full scan.
+    */
+  private def batchMatchesSingle(k: Kind): Unit = {
+    val dir = layout(k, k.fixture)
+    val qs = queriesOf(k.fixture, 0L until 6L)
+    val batch = serve(dir, qs, k.threshold, batch = true)
+    assert(batch === serve(dir, qs, k.threshold, batch = false),
+      s"${k.name}: the batch form must equal the per-query single form")
+    assert(batch === fullScan(k, k.fixture, qs), s"${k.name}: batch must equal the full scan")
+    assert((0L until 6L).forall(qid => batch.exists(_._1 == qid)),
+      s"${k.name}: every query finds its own cluster")
   }
 
   test("batch rangeSearch == per-query brute force, on clustered AND near-uniform data") {
-    for (k <- kinds) {
-      val dir = layout(k, k.fixture)
-      // one query per cluster: the union of eligible cells covers the
-      // whole layout, and each query is still scored only on its own
-      val qs = queriesOf(k.fixture, 0L until 6L)
-      val batch = serve(dir, qs, k.threshold, batch = true)
-      assert(batch === serve(dir, qs, k.threshold, batch = false),
-        s"${k.name}: the batch form must equal the per-query single form")
-      assert(batch === fullScan(k, k.fixture, qs), s"${k.name}: batch must equal the full scan")
-      assert((0L until 6L).forall(qid => batch.exists(_._1 == qid)),
-        s"${k.name}: every query finds its own cluster")
-    }
+    val plain = kind("plain")
+    batchMatchesSingle(plain)
     // near-uniform data: nothing prunes, the result is still exact
     val rnd = new scala.util.Random(11)
     val uniform = (0L until 100L).map(i => (i, Array.fill(8)(rnd.nextFloat())))
       .toDF("vec_id", "embedding")
-    val plain = kinds.head
     val dir = layout(plain, uniform)
     val qs = queriesOf(uniform, 0L until 4L)
     val near = serve(dir, qs, 1.5, batch = true)
     assert(near.nonEmpty && near === fullScan(plain.copy(threshold = 1.5), uniform, qs))
+  }
+
+  test("batch cosine/MIPS range == per-query single forms, per query") {
+    batchMatchesSingle(kind("cosine"))
+    batchMatchesSingle(kind("mips"))
   }
 
   test("filtered range search: predicate == brute force with the same filter, on every form") {
@@ -199,22 +225,33 @@ class IvfRangeSpec extends AnyFunSuite {
     }
   }
 
-  test("tombstones always excluded, every kind and form: == layout built without them") {
-    for (k <- kinds) {
-      // the query's own source row and two cluster-mates are taken down
-      val dels = k.queryIds
-      val dir = layout(k, k.fixture)
-      Ivf.recordDeletes(spark, dir, dels.toDF("vec_id"))
-      val clean = layout(k, k.fixture.filter(!col("vec_id").isin(dels: _*)))
-      for ((form, batch) <- forms) {
-        val qs = queriesOf(k.fixture, if (batch) k.queryIds else k.queryIds.take(1))
-        val got = serve(dir, qs, k.threshold, batch)
-        assert(got.nonEmpty && got.forall(h => !dels.contains(h._2)),
-          s"${k.name}/$form: tombstoned ids must reach no range result")
-        assert(got === serve(clean, qs, k.threshold, batch),
-          s"${k.name}/$form: tombstone serving must equal a layout built without the deleted rows")
-      }
+  /** The layout's tombstones are always excluded by `rangeSearch`:
+    * with the query's own source row and two cluster-mates taken down,
+    * single and batch results hold none of them and equal a layout
+    * built without those rows.
+    */
+  private def tombstonesExcluded(k: Kind): Unit = {
+    val dels = k.queryIds
+    val dir = layout(k, k.fixture)
+    Ivf.recordDeletes(spark, dir, dels.toDF("vec_id"))
+    val clean = layout(k, k.fixture.filter(!col("vec_id").isin(dels: _*)))
+    for ((form, batch) <- forms) {
+      val qs = queriesOf(k.fixture, if (batch) k.queryIds else k.queryIds.take(1))
+      val got = serve(dir, qs, k.threshold, batch)
+      assert(got.nonEmpty && got.forall(h => !dels.contains(h._2)),
+        s"${k.name}/$form: tombstoned ids must reach no range result")
+      assert(got === serve(clean, qs, k.threshold, batch),
+        s"${k.name}/$form: tombstone serving must equal a layout built without the deleted rows")
     }
+  }
+
+  test("rangeSearchWithDeletes: tombstoned ids vanish; == layout rebuilt without them") {
+    tombstonesExcluded(kind("plain"))
+  }
+
+  test("cosine/MIPS range under tombstones == layouts rebuilt without the deleted rows") {
+    tombstonesExcluded(kind("cosine"))
+    tombstonesExcluded(kind("mips"))
   }
 
   test("a NaN cell radius keeps the cell: a degenerate row cannot hide its cell-mates") {
@@ -226,7 +263,7 @@ class IvfRangeSpec extends AnyFunSuite {
     // to normalize it at build time.
     val withNaN = caps.filter(col("vec_id") =!= 117L)
       .union(Seq((117L, Array(Float.NaN, 0f, 0f, 0f))).toDF("vec_id", "embedding"))
-    val cosine = kinds(1)
+    val cosine = kind("cosine")
     val dir = layout(cosine, withNaN)
     Ivf.ensureRadii(spark, dir)
     val radii = spark.read.parquet(s"$dir/_radii")
