@@ -75,6 +75,12 @@ object Bpe {
     * could confuse the scan — a freshly merged element colliding with
     * `a` — is impossible: `a + b` is strictly longer than `a` since
     * symbols are non-empty.
+    *
+    * Cost: every step of the fold builds a new accumulator array (a
+    * `concat`/`slice` copy), so one row costs O(L²) in its symbol
+    * count L. That is cheap for word-level rows, where L is one word's
+    * length, but grows fast on long sequences: document-level byte BPE
+    * would need a per-row loop instead of this fold.
     */
   def applyMerge(syms: DataFrame, a: String, b: String): DataFrame = {
     val merged = a + b

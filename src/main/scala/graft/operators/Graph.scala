@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, Decimal, IntegerType, LongType, ShortType}
 
 /** Graph analytics for corpus curation — the link-graph quality signals
   * a web-scale training pipeline computes beside dedup: PageRank-style
@@ -25,6 +28,15 @@ import org.apache.spark.sql.functions._
   * iteration t's rows instead of replaying the whole chain (the
   * [[Ivf.kmeans]] lesson, kept distributed because ranks are O(nodes),
   * not O(cells)).
+  *
+  * Driver fast path: below one shared edge cap ([[localEdgeCap]]) every
+  * loop here — PageRank, label propagation, triangle counts, k-core and
+  * connected components — collects the edge relation it already cuts
+  * or scans and runs its rounds in driver memory, returning a local
+  * relation with the distributed path's columns, types and values. At
+  * bench scale those rounds are fixed scheduling cost (a job chain per
+  * round over a few thousand edges); above the cap the distributed
+  * plans below run unchanged.
   */
 object Graph {
 
@@ -118,6 +130,19 @@ object Graph {
     val e = if (bareScan) edges
       else edges.repartition(spark.sparkContext.defaultParallelism)
         .localCheckpoint(false)
+    val idType = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).schema.head.dataType
+    val ranks = underCap(e.select("src", "dst")).map { rows =>
+      import spark.implicits._
+      withIdType(localPageRank(rows, iters, damping).toDF("node", "pr"), idType, "node")
+    }.getOrElse(rankRounds(e, iters, damping))
+    ranks.select(col("node"), round(col("pr"), roundTo).as("pr"))
+  }
+
+  /** [[pageRank]]'s distributed rounds over the edge relation `e`,
+    * unrounded.
+    */
+  private def rankRounds(e: DataFrame, iters: Int, damping: Double): DataFrame = {
     // LAZY cuts on the single-consumer chain (r18, the Bpe lesson):
     // every localCheckpoint here used to be EAGER, so the fixed
     // 3-iteration query ran ~7 scheduled jobs (nodes cut, count, outDeg
@@ -163,7 +188,36 @@ object Graph {
           (lit(base) + lit(damping) * coalesce(col("s"), lit(0.0))).as("pr"))
         .localCheckpoint(false) // truncate lineage lazily: the caller's one action drives all rounds
     }
-    pr.select(col("node"), round(col("pr"), roundTo).as("pr"))
+    pr
+  }
+
+  /** [[pageRank]]'s rounds in driver memory over collected `(src, dst)`
+    * rows, bit-identical to the distributed plan: each `pr/deg` goes
+    * through Spark's own double → DECIMAL(38,12) cast (HALF_UP), the
+    * per-node sums are exact, and `base + damping * s` is the same
+    * double expression; dangling mass is dropped the same way.
+    */
+  private def localPageRank(rows: Array[Row], iters: Int, damping: Double): Seq[(Long, Double)] = {
+    val nodes = rows.flatMap(r => Array(id(r, 0), id(r, 1))).distinct
+    require(nodes.nonEmpty, "pageRank needs a non-empty edge table")
+    val ix = nodes.zipWithIndex.toMap
+    val n = nodes.length
+    val src = rows.map(r => ix(id(r, 0)))
+    val dst = rows.map(r => ix(id(r, 1)))
+    val deg = new Array[Long](n)
+    src.foreach(i => deg(i) += 1)
+    val base = (1.0 - damping) / n
+    var pr = Array.fill(n)(1.0 / n)
+    for (_ <- 0 until iters) {
+      val c = Array.tabulate(n) { i =>
+        if (deg(i) == 0) null
+        else { val d = Decimal(pr(i) / deg(i)); d.changePrecision(38, 12); d.toJavaBigDecimal }
+      }
+      val sums = Array.fill(n)(java.math.BigDecimal.ZERO)
+      src.indices.foreach(k => sums(dst(k)) = sums(dst(k)).add(c(src(k))))
+      pr = sums.map(t => base + damping * Decimal(t).toDouble)
+    }
+    nodes.toSeq.zip(pr)
   }
 
   /** Row-count gate for broadcasting an O(nodes) relation (rank/label
@@ -175,6 +229,60 @@ object Graph {
     * local-mode constant.
     */
   private val broadcastNodeLimit = 8000000L
+
+  /** Edge-row cap of the driver fast path, shared by every loop in this
+    * file: a loop whose edge relation holds at most this many rows
+    * collects it and runs its rounds in driver memory (100k id pairs
+    * are a few MB, against a scheduled job chain per distributed
+    * round); a larger relation keeps the distributed plan. Not a
+    * session setting — specs reach the distributed plans through
+    * [[distributedOnly]].
+    */
+  private val localEdgeCap = 100000
+
+  /** The cap in force: [[localEdgeCap]], or -1 inside [[distributedOnly]]. */
+  private val edgeCap = new scala.util.DynamicVariable[Int](localEdgeCap)
+
+  /** Runs `body` with the driver fast path off, so every graph loop
+    * called inside it takes its distributed plan whatever its size —
+    * the seam specs use to pin those plans on small fixtures.
+    */
+  private[graft] def distributedOnly[T](body: => T): T = edgeCap.withValue(-1)(body)
+
+  /** The capped probe: every row of `edges` when there are at most the
+    * cap, else None — never more than cap + 1 rows reach the driver.
+    * Callers pass a relation they already cut or scan, so falling
+    * through to the distributed plan re-runs nothing upstream; reading
+    * it as one partition makes the probe one job (a multi-partition
+    * limit scans in scale-up waves, one job each) that stops at the
+    * first cap + 1 rows. Only integral, non-null ids take the driver
+    * path.
+    */
+  private def underCap(edges: DataFrame): Option[Array[Row]] = {
+    val cap = edgeCap.value
+    val integral = edges.schema.forall(_.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    })
+    if (cap < 0 || !integral) None
+    else Some(edges.coalesce(1).limit(cap + 1).collect())
+      .filter(rows => rows.length <= cap && !rows.exists(_.anyNull))
+  }
+
+  private def id(r: Row, i: Int): Long = r.get(i).asInstanceOf[Number].longValue
+
+  /** `df` with its `ids` columns cast back to the input's id type. */
+  private def withIdType(df: DataFrame, idType: DataType, ids: String*): DataFrame =
+    df.select(df.columns.toSeq.map(c => if (ids.contains(c)) col(c).cast(idType).as(c) else col(c)): _*)
+
+  /** The undirected simple graph of `edges(src, dst)` as `(a, b)` rows
+    * with a < b: self-loops dropped, direction and multiplicity folded.
+    */
+  private def simpleEdges(edges: DataFrame): DataFrame =
+    edges.filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .distinct()
 
   /** Per-node triangle counts over the UNDIRECTED simple graph induced
     * by `edges(src, dst)` (direction, multiplicity, and self-loops
@@ -199,10 +307,7 @@ object Graph {
     * payload, bounded by the same Σ outdeg².
     */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = simpleEdges(edges)
       // reused 3× (degrees, orientation, wedge closing) — EAGER on
       // purpose: a lazy cut was measured this round at 4.3 → 10-13 s,
       // because the three consumers' stages materialize CONCURRENTLY
@@ -210,6 +315,32 @@ object Graph {
       // distinct before its blocks reach the cache. Fan-out cuts stay
       // eager; only single-consumer chains go lazy.
       .localCheckpoint()
+    val idType = und.schema("a").dataType
+    underCap(und).map { rows =>
+      import edges.sparkSession.implicits._
+      withIdType(localTriangles(rows).toDF("node", "n_tri"), idType, "node")
+    }.getOrElse(triangleRounds(und))
+  }
+
+  /** [[triangleCounts]] in driver memory over the collected simple
+    * edges: the same (degree, id) orientation, each triangle closed
+    * once at its oriented edge (u, v) by the w ∈ out(u) ∩ out(v).
+    */
+  private def localTriangles(und: Array[Row]): Seq[(Long, Long)] = {
+    val es = und.map(r => (id(r, 0), id(r, 1)))
+    val deg = es.flatMap { case (a, b) => Array(a, b) }.groupMapReduce(identity)(_ => 1L)(_ + _)
+    def below(x: Long, y: Long) = deg(x) < deg(y) || (deg(x) == deg(y) && x < y)
+    val out = es.map { case (a, b) => if (below(a, b)) (a, b) else (b, a) }
+      .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+    val tri = mutable.HashMap.empty[Long, Long].withDefaultValue(0L)
+    for ((u, vs) <- out; v <- vs; w <- out.getOrElse(v, Set.empty[Long]) if vs.contains(w)) {
+      tri(u) += 1; tri(v) += 1; tri(w) += 1
+    }
+    deg.keys.toSeq.map(n => n -> tri(n))
+  }
+
+  /** [[triangleCounts]]' distributed plan over the cut simple edges. */
+  private def triangleRounds(und: DataFrame): DataFrame = {
     val deg = und.select(col("a").as("node"))
       .union(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -284,10 +415,7 @@ object Graph {
     * makes it reproducible on ANY cluster size.
     */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
-    val und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = simpleEdges(edges)
     // EAGER edge cut (multiply referenced: the node-set distinct and
     // every round's join — a lazy cut double-computes it, measured this
     // round on the triangle path); the per-round label cuts below ARE
@@ -297,6 +425,33 @@ object Graph {
     val sym = und.select(col("a").as("node"), col("b").as("nbr"))
       .union(und.select(col("b").as("node"), col("a").as("nbr")))
       .localCheckpoint()
+    val idType = sym.schema("node").dataType
+    underCap(sym).map { rows =>
+      import edges.sparkSession.implicits._
+      withIdType(localLabels(rows, iters).toDF("node", "label"), idType, "node", "label")
+    }.getOrElse(labelRounds(sym, iters))
+  }
+
+  /** [[labelPropagation]] in driver memory over the collected symmetric
+    * `(node, nbr)` rows: the same synchronous rounds, each node taking
+    * its neighbors' most frequent label, ties to the smallest.
+    */
+  private def localLabels(sym: Array[Row], iters: Int): Seq[(Long, Long)] = {
+    val nbrs = sym.groupMap(id(_, 0))(id(_, 1))
+    var label = nbrs.map { case (n, _) => n -> n }
+    for (_ <- 0 until iters) {
+      val prev = label
+      label = nbrs.map { case (n, ns) =>
+        val freq = mutable.HashMap.empty[Long, Int]
+        ns.foreach(m => freq.updateWith(prev(m))(c => Some(c.getOrElse(0) + 1)))
+        n -> freq.reduce((x, y) => if (y._2 > x._2 || (y._2 == x._2 && y._1 < x._1)) y else x)._1
+      }
+    }
+    label.toSeq
+  }
+
+  /** [[labelPropagation]]'s distributed rounds over the cut symmetric edges. */
+  private def labelRounds(sym: DataFrame, iters: Int): DataFrame = {
     // Static node set, cut once: the carry join below reads it instead
     // of the evolving label vector, which is what makes each round's
     // labels single-consumer (lazy-safe). Its count gates the explicit
@@ -315,7 +470,7 @@ object Graph {
     // partial (node, label) aggregation over the whole edge list — and
     // /4 serialized it onto 8 tasks at 0.4 s each.
     val symIter = if (smallGraph)
-      sym.coalesce(math.max(2, edges.sparkSession.sparkContext.defaultParallelism))
+      sym.coalesce(math.max(2, sym.sparkSession.sparkContext.defaultParallelism))
     else sym
     var labels = nodes0.select(col("node"), col("node").as("label"))
     for (_ <- 0 until iters) {
@@ -354,11 +509,31 @@ object Graph {
     * edges), lineage truncated between rounds.
     */
   def kcore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = simpleEdges(edges)
       .localCheckpoint() // eager: referenced 3× per round (degree union ×2, semi joins)
+    val idType = und.schema("a").dataType
+    underCap(und).map { rows =>
+      import edges.sparkSession.implicits._
+      withIdType(localCore(rows, k, rounds).toDF("node", "deg"), idType, "node")
+    }.getOrElse(coreRounds(und, k, rounds))
+  }
+
+  /** [[kcore]] in driver memory over the collected simple edges: the
+    * same synchronous peel, `rounds` times, then survivor degrees.
+    */
+  private def localCore(und: Array[Row], k: Int, rounds: Int): Seq[(Long, Long)] = {
+    var es = und.map(r => (id(r, 0), id(r, 1)))
+    def degrees = es.flatMap { case (a, b) => Array(a, b) }.groupMapReduce(identity)(_ => 1L)(_ + _)
+    for (_ <- 0 until rounds) {
+      val deg = degrees
+      es = es.filter { case (a, b) => deg(a) >= k && deg(b) >= k }
+    }
+    degrees.toSeq
+  }
+
+  /** [[kcore]]'s distributed peel over the cut simple edges. */
+  private def coreRounds(cut: DataFrame, k: Int, rounds: Int): DataFrame = {
+    var und = cut
     // The survivor relation is O(current nodes) ≤ 2·|edges|, monotone
     // shrinking — when the initial edge count proves it broadcastable,
     // every round's two semi-joins run map-side with NO exchange of the
@@ -373,7 +548,7 @@ object Graph {
     // full session width, not /4 (r18, the pageRank measurement): the
     // per-round degree aggregation and semi-joins do their real work
     // map-side over the whole edge list
-    val narrowTo = math.max(2, edges.sparkSession.sparkContext.defaultParallelism)
+    val narrowTo = math.max(2, und.sparkSession.sparkContext.defaultParallelism)
     if (bcastKeep) und = und.coalesce(narrowTo)
     for (_ <- 0 until rounds) {
       val keep = und.select(col("a").as("node"))
@@ -416,8 +591,7 @@ object Graph {
     */
   private[operators] def contractEdges(edges: DataFrame,
                                        nodeCap: Int = 4 << 20): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StructField, StructType}
     val schema = StructType(Seq(
       StructField("src", LongType, nullable = false),
       StructField("dst", LongType, nullable = false)))
@@ -466,7 +640,7 @@ object Graph {
     * nodes whose component label differs from the node itself (the
     * identity rows are implied — consumers left-join and coalesce).
     */
-  private def driverMinLabels(rows: Array[org.apache.spark.sql.Row]): Seq[(Long, Long)] = {
+  private def driverMinLabels(rows: Array[Row]): Seq[(Long, Long)] = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -476,10 +650,10 @@ object Graph {
       r
     }
     rows.foreach { r =>
-      val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
+      val (a, b) = (find(id(r, 0)), find(id(r, 1)))
       if (a != b) parent(math.max(a, b)) = math.min(a, b)
     }
-    val nodes = rows.iterator.flatMap(r => Iterator(r.getLong(0), r.getLong(1))).toSet
+    val nodes = rows.iterator.flatMap(r => Iterator(id(r, 0), id(r, 1))).toSet
     val minOf = nodes.groupBy(find).map { case (root, members) => root -> members.min }
     nodes.iterator.map(n => (n, minOf(find(n)))).filter { case (n, m) => n != m }
       .toSeq.sortBy(_._1)
@@ -552,16 +726,20 @@ object Graph {
     // node id per component, fully converged). Past the cap the probe
     // falls through to the distributed loop — the 100 TB shape — so the
     // gate is contracted-size-adaptive, not a local-mode constant.
-    val localCap = 100000
-    val probe = contracted.limit(localCap + 1).collect()
-    if (probe.length <= localCap) {
-      val remap = driverMinLabels(probe)
+    underCap(contracted).map { probe =>
       import vertices.sparkSession.implicits._
-      val remapDf = remap.toDF("node", "__c")
-      return vertices.select(col("node"))
+      val remapDf = driverMinLabels(probe).toDF("node", "__c")
+      vertices.select(col("node"))
         .join(broadcast(remapDf), Seq("node"), "left")
         .select(col("node"), coalesce(col("__c"), col("node")).as("component"))
-    }
+    }.getOrElse(componentRounds(vertices, contracted, maxIters))
+  }
+
+  /** [[connectedComponents]]' distributed pointer-jumping fixpoint over
+    * the contracted edges.
+    */
+  private def componentRounds(vertices: DataFrame, contracted: DataFrame,
+                              maxIters: Int): DataFrame = {
     var labels = vertices.select(col("node"), col("node").as("component"))
       .localCheckpoint(false)
     val nNodes = labels.count() // materializes the seed labels; gates the broadcast
@@ -579,7 +757,7 @@ object Graph {
     // gate, narrow the cache once (coalesce is shuffle-free); past the
     // gate the width is real parallelism and stays.
     val sym = (if (smallGraph)
-        symRaw.coalesce(math.max(2, edges.sparkSession.sparkContext.defaultParallelism / 4))
+        symRaw.coalesce(math.max(2, contracted.sparkSession.sparkContext.defaultParallelism / 4))
       else symRaw)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Convergence reads off Σ component, exact in DECIMAL(38,0): every
@@ -766,25 +944,22 @@ object Graph {
     // for 65 edges). Identical labels to [[connectedComponents]] (min
     // reachable id per set); a contract-violating giant batch falls
     // back to the distributed loop via the capped probe.
-    val localCap = 100000
     // One materialization before the capped probe: limit().collect()'s
     // incremental executeTake re-runs the upstream plan once per
     // scale-up wave when the relation is under the cap (the
     // nonMinMembers lesson); the checkpoint also serves the fallback's
     // three further references.
     val contractedCk = contracted.localCheckpoint(true)
-    val probe = contractedCk.limit(localCap + 1).collect()
-    val remap =
-      if (probe.length <= localCap) {
-        import stored.sparkSession.implicits._
-        driverMinLabels(probe).toDF("oldc", "newc")
-      } else connectedComponents(
+    val remap = underCap(contractedCk).map { probe =>
+      import stored.sparkSession.implicits._
+      driverMinLabels(probe).toDF("oldc", "newc")
+    }.getOrElse(connectedComponents(
         contractedCk.select(col("src").as("node"))
           .union(contractedCk.select(col("dst").as("node"))).distinct(),
         contractedCk, maxIters)
-        .filter(col("node") =!= col("component"))
-        .select(col("node").as("oldc"), col("component").as("newc"))
-        .localCheckpoint() // bounded by touched components; broadcast below
+      .filter(col("node") =!= col("component"))
+      .select(col("node").as("oldc"), col("component").as("newc"))
+      .localCheckpoint()) // bounded by touched components; broadcast below
     // 4. rewrite: store-side map-only again (broadcast joins)
     val updated = stored
       .join(broadcast(remap), stored("component") === remap("oldc"), "left")

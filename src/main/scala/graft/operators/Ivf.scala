@@ -561,10 +561,13 @@ object Ivf {
       .orderBy(pmod(graft.functions.Portable.md5Int(col("vec_id").cast("string")),
         lit(Int.MaxValue)), col("vec_id"))
       .limit(c)
+    // number the ≤ c seeds by vec_id inside one sorted array (a global
+    // aggregate, not a partition-less window)
     val seeds = spread
-      .select(row_number().over(Window.orderBy(col("vec_id"))).cast("long").as("rid"),
-        transform(col("embedding"), x => x.cast("double")).as("centroid_vec"))
-      .select((col("rid") - 1).as("centroid_id"), col("centroid_vec"))
+      .agg(sort_array(collect_list(struct(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("v")))).as("s"))
+      .select(posexplode(col("s")).as(Seq("i", "seed")))
+      .select(col("i").cast("long").as("centroid_id"), col("seed.v").as("centroid_vec"))
     kmeansWith(live, seeds, iters)
   }
 

@@ -737,20 +737,27 @@ object Retrieval {
       .select(col("query_id"), col("vec_id").as("doc_id"), col("maxsim"))
   }
 
+  /** `(id, rank)` over a small (≤ pool-size) list: 1-based rank by
+    * `score` descending, ties to the smaller id — numbered inside one
+    * sorted array (a global aggregate), not a partition-less window.
+    */
+  private def rankedDesc(df: DataFrame, score: String, idCol: String,
+                         rank: String): DataFrame =
+    df.agg(sort_array(collect_list(struct(col(score), (-col(idCol)).as("neg"))),
+        asc = false).as("r"))
+      .select(posexplode(col("r")).as(Seq("i", "e")))
+      .select((-col("e.neg")).as("id"), (col("i") + 1).cast("long").as(rank))
+
   def hybridRrfTopK(documents: DataFrame, embeddings: DataFrame,
                     terms: Seq[String], queryVecId: Long, k: Int,
                     kRrf: Int = 60, poolK: Int = 20,
                     roundTo: Int = 6): DataFrame = {
-    val lex = bm25TopK(documents, terms, poolK)
-      .select(col("doc_id").as("id"),
-        row_number().over(Window.orderBy(col("bm25").desc, col("doc_id")))
-          .cast("long").as("lex_rank"))
+    val lex = rankedDesc(bm25TopK(documents, terms, poolK), "bm25", "doc_id", "lex_rank")
     val q = embeddings.filter(col("vec_id") === queryVecId)
       .select(transform(col("embedding"), x => x.cast("double")).as("query_vec"))
-    val sem = Knn.cosineTopK(embeddings.crossJoin(broadcast(q)), col("query_vec"), poolK)
-      .select(col("vec_id").as("id"),
-        row_number().over(Window.orderBy(col("cos_sim").desc, col("vec_id")))
-          .cast("long").as("sem_rank"))
+    val sem = rankedDesc(
+      Knn.cosineTopK(embeddings.crossJoin(broadcast(q)), col("query_vec"), poolK),
+      "cos_sim", "vec_id", "sem_rank")
     lex.join(sem, Seq("id"), "full_outer")
       .select(col("id").as("doc_id"),
         round(

@@ -16,20 +16,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * rows, same `file:<abs path>` path format, ~17× less scan wall.
   *
   * Scope: LOCAL directories of small files (fixture corpora, spool
-  * dirs). Big multi-record archives keep the streaming scanners
-  * ([[Warc.read]]); genuinely remote/distributed storage keeps
-  * `binaryFile`, whose per-file cost is amortized by large files.
+  * dirs) under a local master — tasks read with `java.nio`, so they
+  * must share the driver's filesystem; anything else is refused
+  * ([[localDir]]). Big multi-record archives keep the streaming
+  * scanners ([[Warc.read]]); genuinely remote/distributed storage
+  * keeps `binaryFile`, whose per-file cost is amortized by large files.
   */
 object BinaryFiles {
 
   /** `(path string, content binary)` over every regular file under
     * `dir` whose name ends with `suffix`, sorted by name so the
     * partitioning (and any downstream task attribution) is
-    * deterministic regardless of directory-listing order.
+    * deterministic regardless of directory-listing order. `dir` is a
+    * plain or `file:` path; see [[localDir]] for what is refused.
     */
   def read(spark: SparkSession, dir: String, suffix: String): DataFrame = {
     import spark.implicits._
-    val paths = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+    val local = localDir(dir, spark.sparkContext.master)
+    val paths = Option(new java.io.File(local).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(suffix))
       .map(_.getAbsolutePath)
       .sorted.toSeq
@@ -39,5 +43,22 @@ object BinaryFiles {
         ("file:" + p, java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)))
       }
     }.toDF("path", "content")
+  }
+
+  /** The local filesystem path of `dir`, or a failure naming `dir`
+    * when the reader cannot serve it: a scheme other than `file:`
+    * (hdfs:, s3a:, … — executors would not see it through java.nio)
+    * or a non-local `master` (cluster executors have their own
+    * filesystems). Use the `binaryFile` source for either case.
+    */
+  private[graft] def localDir(dir: String, master: String): String = {
+    val uri = new org.apache.hadoop.fs.Path(dir).toUri
+    require(uri.getScheme == null || uri.getScheme == "file",
+      s"BinaryFiles.read reads local files only, not '$dir' " +
+        "(use the binaryFile source for remote storage)")
+    require(master == "local" || master.startsWith("local["),
+      s"BinaryFiles.read of '$dir' needs a local master, whose tasks share " +
+        s"the driver's filesystem; the master is '$master' (use the binaryFile source)")
+    uri.getPath
   }
 }

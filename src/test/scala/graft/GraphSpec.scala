@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,7 +9,10 @@ import graft.operators.Graph
 
 /** PageRank invariants: mass conservation on dangling-free graphs,
   * structural ranking (hubs beat leaves), partition-count determinism
-  * (the decimal-sum contract), and the degree relation.
+  * (the decimal-sum contract), and the degree relation. Small fixtures
+  * take the loops' driver fast path; the distributed plans are pinned
+  * under `Graph.distributedOnly`, and the two paths are held equal
+  * row for row on random multigraphs.
   */
 class GraphSpec extends AnyFunSuite {
   import TestSpark.spark
@@ -37,10 +42,12 @@ class GraphSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(5)
     val edges = (0 until 3000).map(_ => (rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
       .toDF("src", "dst").cache()
-    val a = Graph.pageRank(edges.repartition(1), iters = 3)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    val b = Graph.pageRank(edges.repartition(32), iters = 3)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+    val (a, b) = Graph.distributedOnly {
+      (Graph.pageRank(edges.repartition(1), iters = 3)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap,
+       Graph.pageRank(edges.repartition(32), iters = 3)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap)
+    }
     assert(a === b, "ranks must be identical at any partitioning")
   }
 
@@ -164,16 +171,19 @@ class GraphSpec extends AnyFunSuite {
     val store = spark.table("graphspec_edges")
     // results are identical — the store is the same rows, and every op
     // is partition-order invariant (decimal sums / set semantics)
-    val prRaw = Graph.pageRank(edges, iters = 4).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toMap
-    val prStore = Graph.pageRank(store, iters = 4).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toMap
-    assert(prStore === prRaw, "pageRank over the store must equal raw edges")
-    val kcRaw = Graph.kcore(edges, k = 3, rounds = 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val kcStore = Graph.kcore(store, k = 3, rounds = 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(kcStore === kcRaw, "kcore over the store must equal raw edges")
+    // (the distributed loops: this fixture is far below the driver cap)
+    Graph.distributedOnly {
+      val prRaw = Graph.pageRank(edges, iters = 4).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toMap
+      val prStore = Graph.pageRank(store, iters = 4).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toMap
+      assert(prStore === prRaw, "pageRank over the store must equal raw edges")
+      val kcRaw = Graph.kcore(edges, k = 3, rounds = 3).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toMap
+      val kcStore = Graph.kcore(store, k = 3, rounds = 3).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(kcStore === kcRaw, "kcore over the store must equal raw edges")
+    }
     // plan pins — the per-iteration shapes over the bucketed table:
     // (a) the src-keyed contribution join exchanges ONLY the rank side
     val rank = store.select(col("src")).distinct()
@@ -231,7 +241,9 @@ class GraphSpec extends AnyFunSuite {
       (0L until 200L).map(i => (i, i / 4 * 4)).toDF("src", "dst"))
       .write.mode("overwrite").parquet(s"$dir/labels")
     val store = spark.read.parquet(s"$dir/labels")
-    val out = Graph.ccAbsorb(store, Seq((0L, 4L), (8L, 300L)).toDF("src", "dst"))
+    // the contracted-graph CC of the distributed fallback, not the driver union-find
+    val out = Graph.distributedOnly(
+      Graph.ccAbsorb(store, Seq((0L, 4L), (8L, 300L)).toDF("src", "dst")))
     val p = out.queryExecution.executedPlan.toString
     // the contracted-graph CC is behind localCheckpoint leaves, so the
     // visible plan is exactly the two store passes + union: any
@@ -281,5 +293,62 @@ class GraphSpec extends AnyFunSuite {
     val got2 = Graph.kcore(noisy.toDF("src", "dst"), k = 4, rounds = 12).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got2 === got)
+  }
+
+  /** A random multigraph: both directions, repeated edges, self-loops,
+    * and two nodes whose only edges are self-loops.
+    */
+  private def multigraph(seed: Int, nodes: Int, m: Int, asInt: Boolean): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    val es = Seq.fill(m)((rnd.nextInt(nodes).toLong, rnd.nextInt(nodes).toLong))
+    val all = es ++ es.take(m / 10).map(_.swap) ++ es.take(m / 10) ++
+      Seq((nodes + 1L, nodes + 1L), (nodes + 2L, nodes + 2L), (nodes + 2L, nodes + 2L))
+    val df = all.toDF("src", "dst")
+    if (asInt) df.select(col("src").cast("int"), col("dst").cast("int")) else df
+  }
+
+  /** `op` on the driver fast path == `op` forced onto the distributed
+    * plan: same column names and types, same rows.
+    */
+  private def samePaths(what: String, edges: DataFrame, local: Boolean = true)(
+      op: DataFrame => DataFrame): Unit = {
+    val fast = op(edges)
+    val dist = Graph.distributedOnly(op(edges))
+    if (local) assert(fast.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      s"$what must take the driver path:\n${fast.queryExecution.optimizedPlan}")
+    assert(!dist.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+      s"$what must take the distributed path when forced")
+    assert(fast.schema.map(f => (f.name, f.dataType)) === dist.schema.map(f => (f.name, f.dataType)),
+      s"$what: column names and types")
+    def rows(df: DataFrame) = df.collect().toSeq.sortBy(_.get(0).asInstanceOf[Number].longValue)
+    assert(rows(fast) === rows(dist), s"$what: rows")
+  }
+
+  test("driver fast path == distributed path, row for row, on random multigraphs (int and long ids)") {
+    for (asInt <- Seq(false, true); seed <- Seq(3, 17)) {
+      val edges = multigraph(seed, nodes = 60, m = 400, asInt).cache()
+      val tag = s"seed $seed, ${if (asInt) "int" else "long"} ids"
+      samePaths(s"labelPropagation ($tag)", edges)(Graph.labelPropagation(_, iters = 3))
+      for (roundTo <- Seq(6, 15))
+        samePaths(s"pageRank roundTo $roundTo ($tag)", edges)(Graph.pageRank(_, iters = 4, roundTo = roundTo))
+      samePaths(s"triangleCounts ($tag)", edges)(Graph.triangleCounts)
+      samePaths(s"kcore ($tag)", edges)(Graph.kcore(_, k = 3, rounds = 4))
+      samePaths(s"connectedComponents ($tag)", edges, local = false)(Graph.connectedComponents)
+      edges.unpersist()
+    }
+  }
+
+  test("driver fast path == distributed path on the empty graph; pageRank refuses it on both") {
+    for (edges <- Seq(Seq.empty[(Long, Long)].toDF("src", "dst"), Seq.empty[(Int, Int)].toDF("src", "dst"))) {
+      samePaths("labelPropagation (empty)", edges)(Graph.labelPropagation(_, iters = 2))
+      samePaths("triangleCounts (empty)", edges)(Graph.triangleCounts)
+      samePaths("kcore (empty)", edges)(Graph.kcore(_, k = 2, rounds = 2))
+      intercept[IllegalArgumentException](Graph.pageRank(edges, iters = 2))
+      intercept[IllegalArgumentException](Graph.distributedOnly(Graph.pageRank(edges, iters = 2)))
+    }
+    // self-loops only: no simple edge survives, but pageRank ranks the nodes
+    val loops = Seq((1L, 1L), (2L, 2L), (2L, 2L)).toDF("src", "dst")
+    samePaths("labelPropagation (self-loops only)", loops)(Graph.labelPropagation(_, iters = 2))
+    samePaths("pageRank (self-loops only)", loops)(Graph.pageRank(_, iters = 3))
   }
 }

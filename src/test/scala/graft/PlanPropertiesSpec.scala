@@ -153,12 +153,20 @@ class PlanPropertiesSpec extends AnyFunSuite {
   }
 
   test("q_hybrid_rrf: both rank windows run over ALREADY-truncated k-row pools") {
-    val p = plan("q_hybrid_rrf")
-    // two pool top-ks + the final fused top-k; the rank windows sit
-    // above them, so no window ever sees a corpus-sized input
+    val df = SparkEntry.queries("q_hybrid_rrf")(spark, sfDir)
+    val p = df.queryExecution.executedPlan.toString
+    // two pool top-ks + the final fused top-k; the two rank numberings
+    // (a sorted-array posexplode per pool, not a partition-less Window)
+    // sit above them, so no ranking ever sees a corpus-sized input
     assert(countOf(p, "TakeOrderedAndProject") == 3,
       s"lexical pool, semantic pool, and fusion must each heap-truncate:\n$p")
-    assert(countOf(p, "Window") == 2, p)
+    assert(!p.contains("Window"), s"ranks must not come from a global window:\n$p")
+    val ranks = df.queryExecution.sparkPlan.collect {
+      case g: org.apache.spark.sql.execution.GenerateExec => g
+    }
+    assert(ranks.size == 2, p)
+    ranks.foreach(g => assert(g.exists(_.isInstanceOf[
+      org.apache.spark.sql.execution.TakeOrderedAndProjectExec]), s"rank over an untruncated pool:\n$g"))
     assert(!p.contains("CartesianProduct"), p)
   }
 
@@ -374,7 +382,8 @@ class PlanPropertiesSpec extends AnyFunSuite {
 
   test("q_editdist_pairs / q_triangle_counts: blocked pair generation, no cartesian product") {
     for (name <- Seq("q_editdist_pairs", "q_triangle_counts")) {
-      val p = plan(name)
+      // the distributed triangle plan: at this scale the edges fit the driver path
+      val p = graft.operators.Graph.distributedOnly(plan(name))
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
         s"$name: candidate generation must stay an equi-join:\n$p")
     }
