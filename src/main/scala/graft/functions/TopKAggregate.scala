@@ -48,6 +48,9 @@ final class TopKHeap(val k: Int) {
     }
   }
 
+  /** Key of the worst kept pair (meaningful once `size > 0`). */
+  def rootKey: Double = keys(0)
+
   /** Kept pairs ascending by (key, id) — the emission order. */
   def sorted: Array[(Double, Long)] =
     (0 until size).map(i => (keys(i), ids(i))).toArray.sortBy(identity)

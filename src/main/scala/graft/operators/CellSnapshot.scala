@@ -143,7 +143,9 @@ private[graft] object CellSnapshot {
     * `spark.read.parquet` (identical plan to the pre-snapshot engine);
     * with one, a union of the per-generation trees each filtered to its
     * live cells — the cell filters stay partition filters, so probe
-    * pruning composes unchanged.
+    * pruning composes unchanged. Only the generation-0 read infers a
+    * schema: later generations are read with it, so a read costs one
+    * inference job however many compactions have published.
     */
   def read(spark: SparkSession, dir: String, sub: String, partCol: String): DataFrame =
     readResolved(spark, dir, sub, partCol, mapping(spark, dir).map(_._2))
@@ -175,7 +177,10 @@ private[graft] object CellSnapshot {
           // (e.g. a rebuilt part with zero edges) — contributes nothing
           if (g == 0) Some(base.filter(col(partCol).isin(cells.keys.toSeq: _*)))
           else if (!fs.exists(new org.apache.hadoop.fs.Path(root))) None
-          else Some(spark.read.parquet(root)
+          // every generation is written with the base tree's columns:
+          // reading it with that schema skips a schema-inference job
+          // per generation
+          else Some(spark.read.schema(base.schema).parquet(root)
             .filter(col(partCol).isin(cells.keys.toSeq: _*)))
         }
         if (frames.isEmpty) base.filter(lit(false))

@@ -25,11 +25,12 @@ import graft.functions.Portable
   *     `mapPartitions` (shared-nothing, no global mutable state, no
   *     driver involvement). Emits an `edges(src, dst, layer, part)`
   *     DataFrame.
-  *  3. Queries meet shards through a cogroup shuffle (vectors keyed by
-  *     shard, queries keyed by the shards they probe) and merge
-  *     per-query top-k — no driver collect, no broadcast of the vector
-  *     table, so the index can exceed driver RAM. [[searchTopK]] probes
-  *     every shard (recall ≥ a single whole-set graph); [[searchRouted]]
+  *  3. Queries meet shards in one shuffle of the vectors keyed by
+  *     shard: the per-shard query lists are formed on the driver and
+  *     broadcast (a query batch is small), and per-query top-k rows
+  *     merge — no broadcast of the vector table, so the index can
+  *     exceed driver RAM. [[searchTopK]] probes every shard
+  *     (recall ≥ a single whole-set graph); [[searchRouted]]
   *     shards by IVF cell and probes only the nprobe nearest shards per
   *     query — O(nprobe) per query instead of O(P).
   *
@@ -344,47 +345,67 @@ object Hnsw {
   /** One tagged shard record: `(part, isNode, a, b, c, vec)` — a node
     * `(part, true, vec_id, eligible(0|1), level, embedding)` or a stored
     * adjacency edge `(part, false, src, dst, layer, empty)`. The union
-    * shape lets one cogroup carry both the vectors and (for persisted
+    * shape lets one shuffle carry both the vectors and (for persisted
     * indexes) the adjacency of a shard; the node `b` slot carries the
     * filtered-ANN result eligibility (1 everywhere when unfiltered).
     */
   private type ShardRec = (Int, Boolean, Long, Long, Int, Array[Float])
 
-  /** The scale-path core: shard records cogrouped with the queries
-    * routed to each shard. Each task materializes ONE shard's payload,
-    * builds (or loads) its LocalGraph, and streams its queries through
-    * it — no driver collect, no broadcast of the vector table; vectors
-    * move through exactly one shuffle keyed by shard, queries through
-    * one shuffle keyed by their routed shards. Per-query/per-shard
-    * top-k rows then merge to a global top-k with one window keyed by
-    * query (k·shards rows per query in, k out).
+  /** The scale-path core: shard records meet the queries routed to
+    * each shard. `qByPart` (part → its `(query_id, query_vec)` list) is
+    * formed on the driver and broadcast; the records are pruned to the
+    * probed parts and move through ONE shuffle keyed by part. Each task
+    * then builds (or loads) the LocalGraph of every part it received
+    * and streams that part's queries through it — no query exchange,
+    * no cogroup sort, no broadcast of the vector table. Per-query/
+    * per-shard top-k rows then merge to a global top-k with one window
+    * keyed by query (k·shards rows per query in, k out).
+    *
+    * A task buffers all the node records of its parts before building,
+    * so the build's `maxShardRows` budget bounds it the same way.
     *
     * `rebuild = true` re-inserts (recreating adjacency deterministically
     * from scratch); `false` loads stored nodes+edges in O(edges).
     */
-  private def searchCogrouped(
+  private def searchSharded(
       recs: org.apache.spark.sql.Dataset[ShardRec],
-      qrep: org.apache.spark.sql.Dataset[(Int, Long, Array[Double])],
+      qByPart: Map[Int, Array[(Long, Array[Double])]],
       k: Int, p: Params, rebuild: Boolean, filtered: Boolean = false): DataFrame = {
     val spark = recs.sparkSession
     import spark.implicits._
-    val perShard = recs.groupByKey(_._1).cogroup(qrep.groupByKey(_._1)) { (_, rs, qs) =>
-      if (!qs.hasNext) Iterator.empty // unprobed shard: skip the build
-      else {
-        val arr = rs.toArray
-        val g = new LocalGraph(p)
-        val nodes = arr.filter(_._2).sortBy(_._3) // id order = insert/load order
-        if (rebuild) nodes.foreach { r => g.insert(r._3, r._6, r._5, r._4 != 0L) }
-        else {
-          val idxOf = new mutable.LongMap[Int]()
-          nodes.foreach { r => idxOf(r._3) = g.size; g.loadNode(r._3, r._6, r._5, r._4 != 0L) }
-          arr.foreach { r => if (!r._2) g.loadEdge(idxOf(r._3), idxOf(r._4), r._5) }
+    val bc = spark.sparkContext.broadcast(qByPart)
+    val part = col(recs.columns.head)
+    val perShard = recs
+      .filter(part.isin(qByPart.keys.toSeq.sorted: _*)) // unprobed shards: never read
+      .repartition(part)
+      .mapPartitions { rows =>
+        val byPart = mutable.HashMap.empty[Int, mutable.ArrayBuffer[ShardRec]]
+        var buffered = 0
+        rows.foreach { r =>
+          if (r._2) {
+            if (buffered >= p.maxShardRows)
+              throw new IllegalStateException(
+                s"HNSW search task exceeds maxShardRows=${p.maxShardRows} node rows " +
+                  "buffered across its shards: raise spark.sql.shuffle.partitions " +
+                  "(more tasks) or Params.numPartitions (smaller shards), or raise the budget")
+            buffered += 1
+          }
+          byPart.getOrElseUpdate(r._1, mutable.ArrayBuffer.empty[ShardRec]) += r
         }
-        qs.flatMap { case (_, qid, qv) =>
-          g.search(qv.map(_.toFloat), k, filtered).map { case (id, d) => (qid, id, d) }
+        byPart.iterator.flatMap { case (pt, arr) =>
+          val g = new LocalGraph(p)
+          val nodes = arr.filter(_._2).sortBy(_._3) // id order = insert/load order
+          if (rebuild) nodes.foreach { r => g.insert(r._3, r._6, r._5, r._4 != 0L) }
+          else {
+            val idxOf = new mutable.LongMap[Int]()
+            nodes.foreach { r => idxOf(r._3) = g.size; g.loadNode(r._3, r._6, r._5, r._4 != 0L) }
+            arr.foreach { r => if (!r._2) g.loadEdge(idxOf(r._3), idxOf(r._4), r._5) }
+          }
+          bc.value(pt).iterator.flatMap { case (qid, qv) =>
+            g.search(qv.map(_.toFloat), k, filtered).map { case (id, d) => (qid, id, d) }
+          }
         }
       }
-    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("d"), col("vec_id"))
     perShard.toDF("query_id", "vec_id", "d")
@@ -412,25 +433,32 @@ object Hnsw {
       .as[ShardRec]
   }
 
-  /** Replicate every query to every shard (exhaustive probe). */
-  private def replicateAll(queries: DataFrame, numParts: Int) = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    queries
-      .crossJoin(broadcast(spark.range(numParts).select(col("id").cast("int").as("part"))))
-      .select(col("part"), col("query_id"), col("query_vec"))
-      .as[(Int, Long, Array[Double])]
+  /** Every query on every shard (exhaustive probe). */
+  private def replicateAll(queries: DataFrame, numParts: Int)
+      : Map[Int, Array[(Long, Array[Double])]] = {
+    val (ids, vecs) = Ivf.collectQueries(queries)
+    val all = ids.zip(vecs)
+    (0 until numParts).map(_ -> all).toMap
   }
 
+  /** Each query on its `nprobe` nearest cells by centroid distance
+    * (`Ivf`'s driver-side probe plan) — the O(nprobe)-per-query
+    * fan-out shared by the rebuilt ([[searchRouted]]) and persisted
+    * ([[searchRoutedWithIndex]]) paths.
+    */
+  private def routed(queries: DataFrame, centroids: DataFrame, nprobe: Int)
+      : Map[Int, Array[(Long, Array[Double])]] =
+    Ivf.probePlan(centroids, queries, nprobe).byCell.map { case (c, qs) => c.toInt -> qs }
+
   /** Search by rebuilding shard subgraphs executor-side and fanning
-    * every query out to every shard — the queries×shards shuffle form
-    * (no driver collect; see [[searchCogrouped]]). Recall of the merged
-    * result is at least that of a single whole-set graph, because each
-    * shard search is an independent chance to find each true neighbor.
+    * every query out to every shard (see [[searchSharded]]). Recall of
+    * the merged result is at least that of a single whole-set graph,
+    * because each shard search is an independent chance to find each
+    * true neighbor.
     * For sublinear per-query cost at many shards, use [[searchRouted]].
     */
   def searchTopK(embeddings: DataFrame, queries: DataFrame, k: Int, p: Params): DataFrame =
-    searchCogrouped(nodeRecs(embeddings, p), replicateAll(queries, p.numPartitions),
+    searchSharded(nodeRecs(embeddings, p), replicateAll(queries, p.numPartitions),
       k, p, rebuild = true)
 
   /** Persist a built index as two Parquet tables: `nodes(vec_id,
@@ -455,14 +483,14 @@ object Hnsw {
 
   /** Search a PERSISTED index: shard graphs are reconstructed from the
     * stored adjacency (no re-insertion — loading is O(edges)) inside
-    * the same cogroup shuffle as [[searchTopK]] — nodes and edges of a
-    * shard meet their queries in one task; nothing is collected to the
+    * the same shard shuffle as [[searchTopK]] — nodes and edges of a
+    * shard meet their queries in one task; no vector reaches the
     * driver.
     */
   def searchWithIndex(nodes: DataFrame, edges: DataFrame, queries: DataFrame,
                       k: Int, p: Params): DataFrame = {
     val recs = nodeRecs(nodes.select("vec_id", "embedding"), p).union(edgeRecs(edges))
-    searchCogrouped(recs, replicateAll(queries, p.numPartitions), k, p, rebuild = false)
+    searchSharded(recs, replicateAll(queries, p.numPartitions), k, p, rebuild = false)
   }
 
   /** Stored adjacency rows as tagged shard records. */
@@ -587,7 +615,7 @@ object Hnsw {
       .select(col("cell").cast("int").as("part"), lit(true).as("is_node"),
         col("vec_id"), lit(1L).as("b"), levelColumn(p).as("level"), col("embedding"))
       .as[ShardRec]
-    searchCogrouped(recs, routeQueries(queries, centroids, nprobe), k, p, rebuild = true)
+    searchSharded(recs, routed(queries, centroids, nprobe), k, p, rebuild = true)
   }
 
   /** COSINE routed search by the normalize-then-L2 reduction
@@ -610,25 +638,6 @@ object Hnsw {
     searchRouted(normed, normedQ, k, p, centroids, nprobe, replication)
       .select(col("query_id"), col("vec_id"),
         round(lit(1.0) - col("dist") * col("dist") / lit(2.0), 6).as("cos_sim"))
-  }
-
-  /** Route each query to its `nprobe` nearest cells by centroid
-    * distance — the O(nprobe)-per-query fan-out shared by the rebuilt
-    * ([[searchRouted]]) and persisted ([[searchRoutedWithIndex]]) paths.
-    */
-  private def routeQueries(queries: DataFrame, centroids: DataFrame, nprobe: Int) = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val byQuery = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("qd"), col("centroid_id"))
-    queries
-      .crossJoin(broadcast(centroids))
-      .select(col("query_id"), col("query_vec"), col("centroid_id"),
-        graft.functions.VectorFunctions.l2Distance(col("query_vec"), col("centroid_vec")).as("qd"))
-      .withColumn("rn", row_number().over(byQuery))
-      .filter(col("rn") <= nprobe)
-      .select(col("centroid_id").cast("int").as("part"), col("query_id"), col("query_vec"))
-      .as[(Int, Long, Array[Double])]
   }
 
   /** Persist the ROUTED (IVF-cell-sharded) index: `nodes(part, vec_id,
@@ -1008,7 +1017,7 @@ object Hnsw {
         eligCol.as("b"), col("level"), col("embedding"))
       .as[ShardRec]
       .union(edgeRecs(edges))
-    searchCogrouped(recs, routeQueries(queries, cents, nprobe), k, p,
+    searchSharded(recs, routed(queries, cents, nprobe), k, p,
       rebuild = false, filtered = predicate.isDefined)
   }
 
@@ -1039,7 +1048,7 @@ object Hnsw {
             col("level"), col("embedding"))
           .as[ShardRec]
           .union(edgeRecs(edges))
-        searchCogrouped(recs, routeQueries(queries, cents, nprobe), k, p,
+        searchSharded(recs, routed(queries, cents, nprobe), k, p,
           rebuild = false, filtered = true)
     }
 
@@ -1242,7 +1251,7 @@ object Hnsw {
         levelColumn(p).as("level"), col("embedding"))
       .as[ShardRec]
       .union(edgeRecs(edges))
-    searchCogrouped(recs, replicateAll(queries, p.numPartitions), k, p,
+    searchSharded(recs, replicateAll(queries, p.numPartitions), k, p,
       rebuild = false, filtered = true)
   }
 

@@ -1034,19 +1034,14 @@ object Ivf {
                                 roundTo: Int = 6): DataFrame = {
     import spark.implicits._
     val (stored, cents) = readLayoutWithCentroids(spark, dir) // one-version pin
-    val probePairs = batchProbePairsWith(cents, queries, nprobe)
-    val unionCells = probePairs.select("cell").distinct().collect().map(_.getLong(0))
+    val plan = probePlan(cents, queries, nprobe)
     // per-cell query lists: the same Q·nprobe payload the declarative
-    // path ships through its BroadcastExchange (a broadcast IS a
-    // driver collect in Spark), grouped for O(1) cell lookup
-    val qByCell: Map[Long, Array[(Long, Array[Double])]] =
-      probePairs.join(queries, Seq("query_id"))
-        .select(col("cell"), col("query_id"), col("query_vec"))
-        .as[(Long, Long, Array[Double])].collect()
-        .groupBy(_._1).map { case (c, arr) => c -> arr.map(t => (t._2, t._3)) }
-    val bc = spark.sparkContext.broadcast(qByCell)
+    // path ships through its BroadcastExchange, grouped for O(1) cell
+    // lookup
+    val bc = spark.sparkContext.broadcast(plan.byCell)
+    val margin = math.pow(10.0, -roundTo)
     val pruned = stored
-      .filter(col("cell").isin(unionCells.toIndexedSeq: _*)) // partition-pruned
+      .filter(col("cell").isin(plan.unionCells: _*)) // partition-pruned
       .select(col("cell"), col("vec_id"), col("embedding"))
     val perTask = pruned.as[(Long, Long, Array[Float])].mapPartitions { rows =>
       val heaps = new java.util.HashMap[Long, graft.functions.TopKHeap]()
@@ -1061,7 +1056,7 @@ object Ivf {
             while (j < emb.length) { val d = emb(j).toDouble - qv(j); s += d * d; j += 1 }
             var h = heaps.get(qid)
             if (h == null) { h = new graft.functions.TopKHeap(k); heaps.put(qid, h) }
-            h.offer(roundKey(math.sqrt(s), roundTo), vid)
+            offerRounded(h, math.sqrt(s), vid, roundTo, margin, negate = false)
             i += 1
           }
         }
@@ -1076,6 +1071,22 @@ object Ivf {
     // the declarative twin)
     heapTopKPerQuery(perTask, k, "dist")
       .select(col("query_id"), col("vec_id"), round(col("dist"), roundTo).as("dist"))
+  }
+
+  /** Offer `score` to `h` under its ROUNDED key ([[roundKey]]; negated
+    * for largest-first rankings). The `BigDecimal` round is paid only
+    * when the candidate can still enter: HALF_UP moves a value by at
+    * most half a unit of `10^-roundTo` (`margin`), so once the heap is
+    * full a raw key more than `margin` above the root rounds above it
+    * too and is rejected unrounded. A NaN score is never skipped.
+    */
+  private def offerRounded(h: graft.functions.TopKHeap, score: Double, vid: Long,
+                           roundTo: Int, margin: Double, negate: Boolean): Unit = {
+    val raw = if (negate) -score else score
+    if (h.size < h.k || !(raw > h.rootKey + margin)) {
+      val r = roundKey(score, roundTo)
+      h.offer(if (negate) -r else r, vid)
+    }
   }
 
   /** Spark `round(col, s)` for a non-negative finite double, replicated
@@ -1093,31 +1104,25 @@ object Ivf {
     * (the cosine unit-direction and MIPS augmented tables): one tight
     * per-partition loop scores each pruned candidate against the
     * queries probing its cell into per-query bounded heaps keeping the
-    * k SMALLEST `score` values (negate the score for largest-first
-    * rankings). `score` must return the FINAL ROUNDED ranking key
-    * (use [[roundKey]]), so heap selection — ties at the k boundary
-    * included — is exactly the declarative twin's (key asc, vec_id
+    * k LARGEST `score` values under the NEGATED rounded key
+    * ([[offerRounded]]), so heap selection — ties at the k boundary
+    * included — is exactly the declarative twin's (score desc, vec_id
     * asc). Returns `(query_id, vec_id, key)`; callers project the
     * final score column (negation only — IEEE-exact). Same
     * probe/pruning and fold arithmetic as
     * [[topKPartitionedBatchFused]].
     */
   private def fusedHeapBatchDouble(spark: org.apache.spark.sql.SparkSession, dir: String,
-                                   qPrepared: DataFrame, k: Int, nprobe: Int)
+                                   qPrepared: DataFrame, k: Int, nprobe: Int, roundTo: Int)
                                   (score: (Array[Double], Array[Double]) => Double)
       : DataFrame = {
     import spark.implicits._
     val (stored, cents) = readLayoutWithCentroids(spark, dir) // one-version pin
-    val probePairs = batchProbePairsWith(cents, qPrepared, nprobe)
-    val unionCells = probePairs.select("cell").distinct().collect().map(_.getLong(0))
-    val qByCell: Map[Long, Array[(Long, Array[Double])]] =
-      probePairs.join(qPrepared, Seq("query_id"))
-        .select(col("cell"), col("query_id"), col("query_vec"))
-        .as[(Long, Long, Array[Double])].collect()
-        .groupBy(_._1).map { case (c, arr) => c -> arr.map(t => (t._2, t._3)) }
-    val bc = spark.sparkContext.broadcast(qByCell)
+    val plan = probePlan(cents, qPrepared, nprobe)
+    val bc = spark.sparkContext.broadcast(plan.byCell)
+    val margin = math.pow(10.0, -roundTo)
     val perTask = stored
-      .filter(col("cell").isin(unionCells.toIndexedSeq: _*)) // partition-pruned
+      .filter(col("cell").isin(plan.unionCells: _*)) // partition-pruned
       .select(col("cell"), col("vec_id"), col("embedding"))
       .as[(Long, Long, Array[Double])].mapPartitions { rows =>
         val heaps = new java.util.HashMap[Long, graft.functions.TopKHeap]()
@@ -1129,7 +1134,7 @@ object Ivf {
               val (qid, qv) = qs(i)
               var h = heaps.get(qid)
               if (h == null) { h = new graft.functions.TopKHeap(k); heaps.put(qid, h) }
-              h.offer(score(emb, qv), vid)
+              offerRounded(h, score(emb, qv), vid, roundTo, margin, negate = true)
               i += 1
             }
           }
@@ -1153,13 +1158,12 @@ object Ivf {
                                       roundTo: Int = 6): DataFrame = {
     val qn = queries.select(col("query_id"),
       transform(col("query_vec"), x => x / l2Norm(col("query_vec"))).as("query_vec"))
-    // heap key = NEGATED rounded cosine (same double fold as the
-    // declarative `1 − ‖û−v̂‖²/2` then the same rounding), so k-boundary
-    // ties resolve exactly like the oracle-anchored twin
-    fusedHeapBatchDouble(spark, dir, qn, k, nprobe) { (e, q) =>
+    // same double fold as the declarative `1 − ‖û−v̂‖²/2`, then the same
+    // rounding, so k-boundary ties resolve exactly like the twin
+    fusedHeapBatchDouble(spark, dir, qn, k, nprobe, roundTo) { (e, q) =>
       var s = 0.0; var j = 0
       while (j < e.length) { val d = e(j) - q(j); s += d * d; j += 1 }
-      -roundKey(1.0 - s / 2.0, roundTo)
+      1.0 - s / 2.0
     }.select(col("query_id"), col("vec_id"), (-col("key")).as("cos_sim"))
   }
 
@@ -1174,11 +1178,10 @@ object Ivf {
     val qa = queries.select(col("query_id"),
       concat(transform(col("query_vec"), x => x.cast("double")), array(lit(0.0)))
         .as("query_vec"))
-    // heap key = NEGATED rounded dot — see the cosine kernel's note
-    fusedHeapBatchDouble(spark, dir, qa, k, nprobe) { (e, q) =>
+    fusedHeapBatchDouble(spark, dir, qa, k, nprobe, roundTo) { (e, q) =>
       var s = 0.0; var j = 0
       while (j < e.length) { s += e(j) * q(j); j += 1 }
-      -roundKey(s, roundTo)
+      s
     }.select(col("query_id"), col("vec_id"), (-col("key")).as("ip"))
   }
 
@@ -1187,12 +1190,12 @@ object Ivf {
     * `(query_id, cell)` probe-pair relation and `pruned` is the stored
     * table partition-pruned to the UNION of all probed cells.
     *
-    * The probe-pair relation stays DISTRIBUTED (Q·nprobe rows computed
-    * executor-side from the C-row centroid sidecar × broadcast
-    * queries); the only collect moves the DISTINCT probed-cell ids —
-    * ≤ C longs regardless of batch size — which must become plan
-    * literals to form the partition filter. Driver traffic is bounded
-    * by the cell count, never by the query batch.
+    * The pairs come from the driver-side [[ProbePlan]] and ride as a
+    * Q·nprobe-row local relation: the C centroids and the query batch
+    * are collected once (the batch is broadcast to the scoring join
+    * anyway), so forming the probes costs no Spark job beyond the
+    * centroid read, and the probed-cell ids become the partition
+    * filter's literals.
     */
   private[operators] def batchPrunedCandidates(spark: org.apache.spark.sql.SparkSession,
                                                dir: String, queries: DataFrame,
@@ -1213,34 +1216,109 @@ object Ivf {
       spark: org.apache.spark.sql.SparkSession, dir: String, queries: DataFrame,
       nprobe: Int): (DataFrame, DataFrame, DataFrame) = {
     val (stored, cents) = readLayoutWithCentroids(spark, dir)
-    val probePairs = batchProbePairsWith(cents, queries, nprobe)
-    val unionCells = probePairs.select("cell").distinct().collect().map(_.getLong(0))
-    (broadcast(probePairs),
-      stored.filter(col("cell").isin(unionCells.toIndexedSeq: _*)), cents)
+    val plan = probePlan(cents, queries, nprobe)
+    (broadcast(plan.pairs(spark)), stored.filter(col("cell").isin(plan.unionCells: _*)), cents)
   }
 
-  /** The per-query probe-pair relation `(query_id, cell)`: each query's
-    * `nprobe` nearest centroids, ranked executor-side (ties → smaller
-    * centroid id). Q·nprobe rows, never collected.
+  /** A query batch's probes, formed on the driver: each query's
+    * `nprobe` nearest cells (`cells`, aligned with `queryIds`), the
+    * union of probed cells and each cell's query list. Ranking is the
+    * in-plan window it replaces, exactly: `l2Distance`'s double fold
+    * (element order, centroid minus query), distance ascending, NaN
+    * last, ties to the smaller `centroid_id`.
     */
-  private[operators] def batchProbePairs(spark: org.apache.spark.sql.SparkSession,
-                                         dir: String, queries: DataFrame,
-                                         nprobe: Int): DataFrame =
-    batchProbePairsWith(centroidsOf(spark, dir), queries, nprobe)
+  private[operators] final class ProbePlan(
+      val queryIds: Array[Long], val queryVecs: Array[Array[Double]],
+      val cells: Array[Array[Long]], queryIdType: org.apache.spark.sql.types.DataType,
+      cellType: org.apache.spark.sql.types.DataType) {
 
-  /** [[batchProbePairs]] against an EXPLICIT centroid table — the form
-    * serving paths use so one snapshot resolution covers probes and
-    * scan ([[readLayoutWithCentroids]]).
+    /** Distinct probed cells, ascending — the partition-filter literals. */
+    lazy val unionCells: Seq[Long] = cells.flatten.distinct.sorted.toSeq
+
+    /** cell → the `(query_id, query_vec)` of every query probing it. */
+    lazy val byCell: Map[Long, Array[(Long, Array[Double])]] =
+      queryIds.indices.flatMap(i => cells(i).map(_ -> i)).groupBy(_._1)
+        .map { case (c, qs) => c -> qs.map { case (_, i) => (queryIds(i), queryVecs(i)) }.toArray }
+
+    /** The `(query_id, cell)` pairs as a local relation, typed like the
+      * inputs' `query_id` and `centroid_id`.
+      */
+    def pairs(spark: org.apache.spark.sql.SparkSession): DataFrame = {
+      import org.apache.spark.sql.types._
+      val rows = for (i <- queryIds.indices; c <- cells(i))
+        yield org.apache.spark.sql.Row(queryIds(i), c)
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+          StructType(Seq(StructField("query_id", LongType, nullable = false),
+            StructField("cell", LongType, nullable = false))))
+        .select(col("query_id").cast(queryIdType), col("cell").cast(cellType))
+    }
+  }
+
+  /** Collect a `(query_id, query_vec)` batch to the driver as doubles
+    * (float components widen exactly), rejecting what no probe can
+    * serve: a null or repeated `query_id`, a null vector and a null
+    * component, each named by its `query_id`.
     */
-  private[operators] def batchProbePairsWith(cents: DataFrame, queries: DataFrame,
-                                             nprobe: Int): DataFrame = {
-    val byQc = Window.partitionBy("query_id").orderBy(col("qdist"), col("centroid_id"))
-    cents.crossJoin(broadcast(queries))
-      .select(col("query_id"), col("centroid_id"),
-        l2Distance(col("centroid_vec"), col("query_vec")).as("qdist"))
-      .withColumn("rn", row_number().over(byQc))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("centroid_id").as("cell"))
+  private[operators] def collectQueries(queries: DataFrame): (Array[Long], Array[Array[Double]]) = {
+    val rows = queries.select(col("query_id").cast("long"),
+      transform(col("query_vec"), x => x.cast("double"))).collect()
+    val seen = scala.collection.mutable.HashSet.empty[Long]
+    val vecs = rows.map { r =>
+      require(!r.isNullAt(0), "a query row has a null query_id")
+      val id = r.getLong(0)
+      require(seen.add(id), s"query_id $id appears more than once in the query batch")
+      vectorOf(r, 1, s"query_id $id")
+    }
+    (rows.map(_.getLong(0)), vecs)
+  }
+
+  /** Field `i` of a collected row as a dense double vector; `label`
+    * names the row when the vector or one of its components is null.
+    */
+  private[operators] def vectorOf(r: org.apache.spark.sql.Row, i: Int, label: => String)
+      : Array[Double] = {
+    require(!r.isNullAt(i), s"$label has a null query_vec")
+    r.getSeq[Any](i).iterator.map {
+      case d: Double => d
+      case _ => throw new IllegalArgumentException(s"$label has a null component")
+    }.toArray
+  }
+
+  /** Build the [[ProbePlan]] of `queries(query_id, query_vec)` against
+    * `cents(centroid_id, centroid_vec)`: both are collected (C rows and
+    * the batch) and ranked by [[rankCells]].
+    */
+  private[operators] def probePlan(cents: DataFrame, queries: DataFrame,
+                                   nprobe: Int): ProbePlan = {
+    val (ids, vecs) = collectQueries(queries)
+    new ProbePlan(ids, vecs, rankCells(cents, vecs, nprobe, i => s"query_id ${ids(i)}"),
+      queries.schema("query_id").dataType, cents.schema("centroid_id").dataType)
+  }
+
+  /** Each vector's `nprobe` nearest centroid ids, nearest first (all C
+    * when `nprobe > C`): the C-row `cents` table is collected and every
+    * vector is ranked against every centroid. A vector whose length
+    * differs from the centroids' is rejected, named by `label`.
+    */
+  private[operators] def rankCells(cents: DataFrame, vecs: Array[Array[Double]], nprobe: Int,
+                                   label: Int => String): Array[Array[Long]] = {
+    val cs = cents.select(col("centroid_id").cast("long"),
+        transform(col("centroid_vec"), x => x.cast("double"))).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1) // stable sort by distance below leaves ties id-ascending
+    val dim = cs.headOption.map(_._2.length)
+    vecs.indices.map { i =>
+      val q = vecs(i)
+      dim.foreach(d => require(q.length == d,
+        s"${label(i)} has ${q.length} components but the layout's centroids have $d"))
+      val dist = cs.map { case (_, c) =>
+        var s = 0.0; var j = 0
+        while (j < c.length) { val x = c(j) - q(j); s += x * x; j += 1 }
+        math.sqrt(s)
+      }
+      cs.indices.sortBy(j => dist(j))(Ordering.Double.TotalOrdering) // NaN sorts last
+        .take(nprobe).map(cs(_)._1).toArray
+    }.toArray
   }
 
   /** BATCH cosine top-k over an [[ensurePartitionedCosine]] layout:
@@ -1269,11 +1347,20 @@ object Ivf {
     * shards, PQ codes — serves cosine by indexing this table instead of
     * the raw one. Same reduction the blocked near-dup join proves
     * ([[Dedup.embeddingNearDupsBlocked]]).
+    *
+    * A zero-norm row has no direction: it is rejected with an error
+    * naming its `vec_id` (a NaN norm passes through as NaN components).
     */
-  def normalized(embeddings: DataFrame): DataFrame =
+  def normalized(embeddings: DataFrame): DataFrame = {
+    val n = l2Norm(col("embedding"))
     embeddings.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double") / l2Norm(col("embedding")))
+      when(n === 0.0,
+        raise_error(concat(lit("Ivf.normalized: vec_id "), col("vec_id").cast("string"),
+          lit(" has a zero-norm embedding, which has no direction to normalize")))
+          .cast("array<double>"))
+        .otherwise(transform(col("embedding"), x => x.cast("double") / n))
         .as("embedding"))
+  }
 
   /** Unit-normalize a single-row `(query_vec)` frame (double arrays). */
   def normalizedQuery(queries: DataFrame): DataFrame =

@@ -591,9 +591,9 @@ object Pq {
     val books = collectBooks(spark.read.parquet(s"$dir/_codebooks"))
     val m = books.size
     val c = books(0).length
-    // shared probe machinery (Ivf): probe pairs stay distributed; the
-    // only driver traffic is the ≤C distinct probed-cell literals the
-    // partition filter needs — bounded by cell count, not batch size
+    // shared probe machinery (Ivf.probePlan): probes ranked on the
+    // driver, pairs broadcast as a local relation, probed cells the
+    // partition filter's literals
     val (probes, pruned) = Ivf.batchPrunedCandidates(spark, dir, queries, nprobe)
     val adc = if (exactSums) adcDistBatch(m, c, roundTo)
               else adcDistBatchDouble(m, c, roundTo)

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.TextFunctions.tokens
 
@@ -641,12 +641,11 @@ object Retrieval {
     // data + routing pinned to one manifest version, per-token probes
     // ride the batch machinery (tok_id plays query_id)
     val (stored, cents) = Ivf.readLayoutWithCentroids(spark, dir)
-    val probes = Ivf.batchProbePairsWith(cents,
+    val plan = Ivf.probePlan(cents,
       queryTokens.select(col("tok_id").as("query_id"), col("query_vec")), nprobe)
-      .select(col("query_id").as("tok_id"), col("cell"))
-    val unionCells = probes.select("cell").distinct().collect().map(_.getLong(0))
+    val probes = plan.pairs(spark).select(col("query_id").as("tok_id"), col("cell"))
     val pruned = stored
-      .filter(col("cell").isin(unionCells.toIndexedSeq: _*)) // partition-pruned
+      .filter(col("cell").isin(plan.unionCells: _*)) // partition-pruned
     val maxCols = tokIds.map(t =>
       max(when(col("tok_id") === t, col("dot"))).as(s"m_$t"))
     // a token with no surviving (doc, token) dot floors at 0
@@ -670,17 +669,17 @@ object Retrieval {
     * layout — the serving form of [[maxsimTopKPruned]]: Q query token
     * BAGS (`queryTokens(query_id, tok_id, query_vec)`) are served by
     * ONE pruned scan. Each (query, token) probes its `nprobe` nearest
-    * cells (probe pairs computed executor-side — Q·T·nprobe rows, never
-    * collected; only the ≤ C distinct probed-cell ids reach the driver
-    * as partition-filter literals, the [[graft.operators.Ivf]] batch
-    * contract); each stored token row meets only the (query, token)
-    * pairs probing ITS cell; the per-(query, doc, token) best dot
-    * partial-aggregates map-side, and the per-(query, doc) score folds
-    * the best dots in STATIC ascending-tok_id order (deterministic
-    * float sum — the same portability rule as the single-bag pivot
-    * chain, expressed as a sorted-array fold because the batch form
-    * cannot pivot per-query columns). Per-query top-k via the
-    * bounded-heap aggregate.
+    * cells (ranked on the driver like every IVF batch probe — the
+    * token bags are collected, the Q·T·nprobe probe pairs ride as a
+    * broadcast local relation, and the probed-cell ids become the
+    * partition-filter literals); each stored token row meets only the
+    * (query, token) pairs probing ITS cell; the per-(query, doc,
+    * token) best dot partial-aggregates map-side, and the per-(query,
+    * doc) score folds the best dots in STATIC ascending-tok_id order
+    * (deterministic float sum — the same portability rule as the
+    * single-bag pivot chain, expressed as a sorted-array fold because
+    * the batch form cannot pivot per-query columns). Per-query top-k
+    * via the bounded-heap aggregate.
     *
     * At `nprobe = C` every pair survives and results are EXACTLY the
     * per-query [[maxsimTopK]] (RetrievalSpec pins batch ≡ single; the
@@ -692,31 +691,33 @@ object Retrieval {
                       queryTokens: DataFrame, docIdOf: Column => Column,
                       k: Int, nprobe: Int, roundTo: Int = 6,
                       excluded: Option[DataFrame] = None): DataFrame = {
-    import graft.functions.VectorFunctions.{dotProduct, l2Distance}
+    import graft.functions.VectorFunctions.dotProduct
+    val toks = queryTokens.select(col("query_id").cast("long"), col("tok_id").cast("long"),
+      transform(col("query_vec"), x => x.cast("double"))).collect()
+    val keys = toks.map(r => (r.getLong(0), r.getLong(1)))
     // duplicate (query, token) keys would double-join their dots with
     // undefined intent — same contract as the single-bag forms
-    // (queryTokens is query-sized, so the two counts are trivial jobs)
-    require(queryTokens.select("query_id", "tok_id").distinct().count()
-        == queryTokens.count(),
+    require(keys.distinct.length == keys.length,
       "maxsimTopKBatch: queryTokens carries duplicate tok_id rows within a query — " +
         "give each query token a unique (query_id, tok_id)")
-    // per-(query, token) probes: tok rows rank the C centroids
-    // executor-side, exactly the Ivf.batchProbePairs geometry keyed by
-    // the composite (query_id, tok_id)
+    def label(i: Int) = s"query_id ${keys(i)._1} tok_id ${keys(i)._2}"
+    // per-(query, token) probes ranked on the driver, exactly the
+    // Ivf.probePlan geometry keyed by the composite (query_id, tok_id);
     // data and routing pinned to ONE manifest version — a reclustered
     // token-embedding layout must never probe with stale/torn routing
     val (stored, cents) = Ivf.readLayoutWithCentroids(spark, dir)
-    val byTok = Window.partitionBy("query_id", "tok_id")
-      .orderBy(col("qdist"), col("centroid_id"))
-    val probes = cents.crossJoin(broadcast(queryTokens))
-      .select(col("query_id"), col("tok_id"), col("centroid_id"),
-        l2Distance(col("centroid_vec"), col("query_vec")).as("qdist"))
-      .withColumn("rn", row_number().over(byTok))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("tok_id"), col("centroid_id").as("cell"))
-    val unionCells = probes.select("cell").distinct().collect().map(_.getLong(0))
+    val vecs = toks.indices.map(i => Ivf.vectorOf(toks(i), 2, label(i))).toArray
+    val cells = Ivf.rankCells(cents, vecs, nprobe, label)
+    val probes = spark.createDataFrame(
+        java.util.Arrays.asList(keys.indices.flatMap(i =>
+          cells(i).map(c => Row(keys(i)._1, keys(i)._2, c))): _*),
+        StructType(Seq(StructField("query_id", LongType), StructField("tok_id", LongType),
+          StructField("cell", LongType))))
+      .select(col("query_id").cast(queryTokens.schema("query_id").dataType),
+        col("tok_id").cast(queryTokens.schema("tok_id").dataType),
+        col("cell").cast(cents.schema("centroid_id").dataType))
     val pruned = stored
-      .filter(col("cell").isin(unionCells.toIndexedSeq: _*)) // partition-pruned
+      .filter(col("cell").isin(cells.flatten.distinct.sorted.toSeq: _*)) // partition-pruned
     // takedowns drop above the pruned scan (shared `_deletes` contract)
     val best = Ivf.withoutExcluded(pruned, excluded)
       .join(broadcast(probes), Seq("cell"))

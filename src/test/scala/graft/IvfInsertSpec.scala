@@ -155,6 +155,20 @@ class IvfInsertSpec extends AnyFunSuite {
     }.getMessage.contains("'ivfsq8'"))
   }
 
+  test("a zero-norm row is rejected by vec_id when a cosine layout is built or grown") {
+    val zero = Seq((900L, Array.fill(8)(0f))).toDF("vec_id", "embedding")
+    val e1 = intercept[Exception](Ivf.normalized(emb.unionByName(zero)).collect())
+    assert(e1.getMessage.contains("vec_id 900") && e1.getMessage.contains("zero-norm"),
+      e1.getMessage)
+    val dir = Files.createTempDirectory("cos_zero").toString
+    Ivf.ensurePartitionedCosine(emb, C, dir)
+    val e2 = intercept[Exception](Ivf.insertInto(spark, dir, zero))
+    assert(e2.getMessage.contains("vec_id 900"), e2.getMessage)
+    // non-zero rows still normalize to unit length
+    val norms = Ivf.normalized(emb).select(l2Norm(col("embedding"))).as[Double].collect()
+    assert(norms.forall(n => math.abs(n - 1.0) < 1e-12))
+  }
+
   test("ensureInsertedPartitioned memoizes on the (base, fresh, cents) split") {
     val base = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
     val fresh = emb.filter(pmod(col("vec_id"), lit(5)) === 0)

@@ -100,16 +100,16 @@ class PlanPropertiesSpec extends AnyFunSuite {
     val p = plan("q_ivf_batch_topk")
     assert(countOf(p, "PartitionFilters: [cell") == 1,
       s"exactly ONE pruned vector scan serves the whole batch:\n$p")
-    // in-plan probe pairs (round 9): 1 pruned stored scan + probe
-    // formation (centroid sidecar + query side) + the same pair dumped
-    // again inside the DPP subquery + the scoring-side query scan = 6.
+    // probe pairs are planned on the driver and ride as a local
+    // relation: 1 pruned stored scan + the scoring-side query scan = 2.
     // Constant in batch size — the point is NOT a scan per query.
-    assert(countOf(p, "Scan parquet") == 6, s"unexpected scan count:\n$p")
-    // candidate rank = bounded-heap aggregate (no sort of the pairs);
-    // the surviving WindowGroupLimit is the C-row probe formation only
+    assert(countOf(p, "Scan parquet") == 2, s"unexpected scan count:\n$p")
+    assert(p.contains("LocalTableScan"), s"probe pairs must be a local relation:\n$p")
+    // candidate rank = bounded-heap aggregate (no sort of the pairs),
+    // and no probe window is left in the plan
     assert(p.contains("ObjectHashAggregate"),
       s"per-query top-k must be the heap aggregate, not a sort/rank:\n$p")
-    assert(p.contains("WindowGroupLimit"), s"probe formation must group-limit:\n$p")
+    assert(!p.contains("Window"), s"no probe or rank window may appear:\n$p")
   }
 
   test("fused batch queries: pruned scan + heap merge — no joins, no windows, no sorts in-plan") {
@@ -276,17 +276,15 @@ class PlanPropertiesSpec extends AnyFunSuite {
     val p = plan("q_cosine_batch_topk")
     assert(countOf(p, "PartitionFilters: [cell") == 1,
       s"exactly ONE pruned unit-vector scan serves the whole batch:\n$p")
-    // probe pairs are computed IN-PLAN now (round 9: no Q-proportional
-    // driver collect): 1 pruned stored scan + probe formation (C-row
-    // centroid sidecar + Q-row query side) + the same pair dumped again
-    // inside the DPP subquery + the scoring-side query scan = 6 — none
-    // data-proportional, constant in batch size
-    assert(countOf(p, "Scan parquet") == 6, s"unexpected scan count:\n$p")
-    // candidate rank = bounded-heap aggregate; the WindowGroupLimit
-    // left in the plan is the C-row probe formation only
+    // probe pairs are planned on the driver and ride as a local
+    // relation: 1 pruned stored scan + the scoring-side query scan = 2,
+    // none data-proportional, constant in batch size
+    assert(countOf(p, "Scan parquet") == 2, s"unexpected scan count:\n$p")
+    assert(p.contains("LocalTableScan"), s"probe pairs must be a local relation:\n$p")
+    // candidate rank = bounded-heap aggregate; no probe window is left
     assert(p.contains("ObjectHashAggregate"),
       s"per-query top-k must be the heap aggregate, not a sort/rank:\n$p")
-    assert(p.contains("WindowGroupLimit"), s"probe formation must group-limit:\n$p")
+    assert(!p.contains("Window"), s"no probe or rank window may appear:\n$p")
   }
 
   test("q_pq_batch_topk: ONE code scan serves the whole batch, LUTs broadcast") {
@@ -310,15 +308,15 @@ class PlanPropertiesSpec extends AnyFunSuite {
     val p = plan("q_ivfpq_batch_topk")
     assert(countOf(p, "PartitionFilters: [cell") == 1,
       s"exactly ONE pruned code scan serves the whole batch:\n$p")
-    // in-plan probe pairs (round 9): 1 pruned code scan + probe
-    // formation (centroid sidecar + query side) + the DPP-subquery dump
-    // of the same pair + the LUT-side query scan = 6, constant in Q
-    assert(countOf(p, "Scan parquet") == 6, s"unexpected scan count:\n$p")
-    // candidate rank = bounded-heap aggregate; the WindowGroupLimit
-    // left in the plan is the C-row probe formation only
+    // probe pairs are planned on the driver and ride as a local
+    // relation: 1 pruned code scan + the LUT-side query scan = 2,
+    // constant in Q
+    assert(countOf(p, "Scan parquet") == 2, s"unexpected scan count:\n$p")
+    assert(p.contains("LocalTableScan"), s"probe pairs must be a local relation:\n$p")
+    // candidate rank = bounded-heap aggregate; no probe window is left
     assert(p.contains("ObjectHashAggregate"),
       s"per-query top-k must be the heap aggregate, not a sort/rank:\n$p")
-    assert(p.contains("WindowGroupLimit"), s"probe formation must group-limit:\n$p")
+    assert(!p.contains("Window"), s"no probe or rank window may appear:\n$p")
   }
 
   test("q_knn_rewrite_topk: naive crossJoin plan is served by the partitioned IVF copy") {

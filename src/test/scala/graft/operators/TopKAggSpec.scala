@@ -99,4 +99,43 @@ class TopKAggSpec extends AnyFunSuite {
       assert(mipsF === mipsD, s"mips nprobe=$nprobe")
     }
   }
+
+  test("fused kernels == declarative twins when many candidates sit within 10^-roundTo of the k-th key") {
+    // the kernels skip the BigDecimal round for a candidate whose raw key
+    // is more than 10^-roundTo above a full heap's root: pile hundreds of
+    // candidates within a few units of 10^-6 of the boundary, plus far
+    // ones, so both the skipped and the rounded branches decide the top k
+    val rnd = new scala.util.Random(20261017L)
+    def near(base: Array[Float]) = base.map(x => x + ((rnd.nextDouble() - 0.5) * 4e-6).toFloat)
+    val l2 = (0L until 400L).map { i =>
+      (i, if (i % 4 == 3) Array(30f, 40f, 0f, 0f) else near(Array(3f, 4f, 0f, 0f)))
+    }
+    // directions within ~2e-3 rad of the query: cosines within ~2e-6 of 1
+    val cos = (0L until 400L).map { i =>
+      (i, if (i % 4 == 3) Array(1f, 1f, 0f, 0f)
+          else Array(1f, (rnd.nextDouble() * 2e-3).toFloat, 0f, 0f))
+    }
+    val mips = (0L until 400L).map { i =>
+      (i, if (i % 4 == 3) Array(-5f, 0f, 1f, 0f) else near(Array(5f, 0f, 1f, 0f)))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("ivf_fused_near").toString
+    Ivf.ensurePartitioned(l2.toDF("vec_id", "embedding"), 4, s"$dir/l2")
+    Ivf.ensurePartitionedCosine(cos.toDF("vec_id", "embedding"), 4, s"$dir/cos")
+    Ivf.ensurePartitionedMips(mips.toDF("vec_id", "embedding"), 4, s"$dir/mips")
+    val qs = Seq((0L, Array(0.0, 0.0, 0.0, 0.0)), (1L, Array(1e-7, 0.0, 0.0, 0.0)))
+      .toDF("query_id", "query_vec")
+    val qDir = Seq((0L, Array(1.0, 0.0, 0.0, 0.0)), (1L, Array(1.0, 1e-4, 0.0, 0.0)))
+      .toDF("query_id", "query_vec")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    for (k <- Seq(1, 10, 50)) {
+      val l2F = rows(Ivf.topKPartitionedBatchFused(spark, s"$dir/l2", qs, k, 4))
+      assert(l2F === rows(Ivf.topKPartitionedBatch(spark, s"$dir/l2", qs, k, 4)), s"l2 k=$k")
+      assert(l2F.size === 2 * k)
+      assert(rows(Ivf.cosineTopKPartitionedBatchFused(spark, s"$dir/cos", qDir, k, 4)) ===
+        rows(Ivf.cosineTopKPartitionedBatch(spark, s"$dir/cos", qDir, k, 4)), s"cosine k=$k")
+      assert(rows(Ivf.mipsTopKPartitionedBatchFused(spark, s"$dir/mips", qDir, k, 4)) ===
+        rows(Ivf.mipsTopKPartitionedBatch(spark, s"$dir/mips", qDir, k, 4)), s"mips k=$k")
+    }
+  }
 }
