@@ -26,13 +26,16 @@ import graft.functions.Portable
   *     driver involvement). Emits an `edges(src, dst, layer, part)`
   *     DataFrame.
   *  3. Queries meet shards in one shuffle of the vectors keyed by
-  *     shard: the per-shard query lists are formed on the driver and
-  *     broadcast (a query batch is small), and per-query top-k rows
-  *     merge — no broadcast of the vector table, so the index can
-  *     exceed driver RAM. [[searchTopK]] probes every shard
-  *     (recall ≥ a single whole-set graph); [[searchRouted]]
-  *     shards by IVF cell and probes only the nprobe nearest shards per
-  *     query — O(nprobe) per query instead of O(P).
+  *     shard and per-query top-k rows merge — no broadcast of the
+  *     vector table, so the index can exceed driver RAM.
+  *     [[searchTopK]] probes every shard (recall ≥ a single whole-set
+  *     graph) through a cogroup with the queries replicated per shard,
+  *     so nothing is collected and a corpus-sized query batch is
+  *     served. [[searchRouted]] shards by IVF cell and probes only the
+  *     nprobe nearest shards per query — O(nprobe) per query instead
+  *     of O(P); its probes are planned on the driver (`Ivf`'s probe
+  *     plan collects the query batch, which must fit there) and the
+  *     per-shard query lists are broadcast, so only the vectors shuffle.
   *
   * The in-partition algorithm is the *paper* algorithm, deliberately
   * fixing the reference's two recall bugs (SURVEY.md §1.4.3-4): search
@@ -351,61 +354,28 @@ object Hnsw {
     */
   private type ShardRec = (Int, Boolean, Long, Long, Int, Array[Float])
 
-  /** The scale-path core: shard records meet the queries routed to
-    * each shard. `qByPart` (part → its `(query_id, query_vec)` list) is
-    * formed on the driver and broadcast; the records are pruned to the
-    * probed parts and move through ONE shuffle keyed by part. Each task
-    * then builds (or loads) the LocalGraph of every part it received
-    * and streams that part's queries through it — no query exchange,
-    * no cogroup sort, no broadcast of the vector table. Per-query/
-    * per-shard top-k rows then merge to a global top-k with one window
-    * keyed by query (k·shards rows per query in, k out).
-    *
-    * A task buffers all the node records of its parts before building,
-    * so the build's `maxShardRows` budget bounds it the same way.
-    *
-    * `rebuild = true` re-inserts (recreating adjacency deterministically
-    * from scratch); `false` loads stored nodes+edges in O(edges).
+  /** Build (`rebuild = true`: re-insert, recreating adjacency
+    * deterministically from scratch) or load (`false`: stored nodes +
+    * edges in O(edges)) ONE shard's LocalGraph from its records.
     */
-  private def searchSharded(
-      recs: org.apache.spark.sql.Dataset[ShardRec],
-      qByPart: Map[Int, Array[(Long, Array[Double])]],
-      k: Int, p: Params, rebuild: Boolean, filtered: Boolean = false): DataFrame = {
-    val spark = recs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(qByPart)
-    val part = col(recs.columns.head)
-    val perShard = recs
-      .filter(part.isin(qByPart.keys.toSeq.sorted: _*)) // unprobed shards: never read
-      .repartition(part)
-      .mapPartitions { rows =>
-        val byPart = mutable.HashMap.empty[Int, mutable.ArrayBuffer[ShardRec]]
-        var buffered = 0
-        rows.foreach { r =>
-          if (r._2) {
-            if (buffered >= p.maxShardRows)
-              throw new IllegalStateException(
-                s"HNSW search task exceeds maxShardRows=${p.maxShardRows} node rows " +
-                  "buffered across its shards: raise spark.sql.shuffle.partitions " +
-                  "(more tasks) or Params.numPartitions (smaller shards), or raise the budget")
-            buffered += 1
-          }
-          byPart.getOrElseUpdate(r._1, mutable.ArrayBuffer.empty[ShardRec]) += r
-        }
-        byPart.iterator.flatMap { case (pt, arr) =>
-          val g = new LocalGraph(p)
-          val nodes = arr.filter(_._2).sortBy(_._3) // id order = insert/load order
-          if (rebuild) nodes.foreach { r => g.insert(r._3, r._6, r._5, r._4 != 0L) }
-          else {
-            val idxOf = new mutable.LongMap[Int]()
-            nodes.foreach { r => idxOf(r._3) = g.size; g.loadNode(r._3, r._6, r._5, r._4 != 0L) }
-            arr.foreach { r => if (!r._2) g.loadEdge(idxOf(r._3), idxOf(r._4), r._5) }
-          }
-          bc.value(pt).iterator.flatMap { case (qid, qv) =>
-            g.search(qv.map(_.toFloat), k, filtered).map { case (id, d) => (qid, id, d) }
-          }
-        }
-      }
+  private def shardGraph(recs: Array[ShardRec], p: Params, rebuild: Boolean): LocalGraph = {
+    val g = new LocalGraph(p)
+    val nodes = recs.filter(_._2).sortBy(_._3) // id order = insert/load order
+    if (rebuild) nodes.foreach { r => g.insert(r._3, r._6, r._5, r._4 != 0L) }
+    else {
+      val idxOf = new mutable.LongMap[Int]()
+      nodes.foreach { r => idxOf(r._3) = g.size; g.loadNode(r._3, r._6, r._5, r._4 != 0L) }
+      recs.foreach { r => if (!r._2) g.loadEdge(idxOf(r._3), idxOf(r._4), r._5) }
+    }
+    g
+  }
+
+  /** Per-query/per-shard `(query_id, vec_id, d)` rows merged to a
+    * global top-k with one window keyed by query (k·shards rows per
+    * query in, k out).
+    */
+  private def mergeTopK(perShard: org.apache.spark.sql.Dataset[(Long, Long, Double)],
+                        k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("d"), col("vec_id"))
     perShard.toDF("query_id", "vec_id", "d")
@@ -417,6 +387,64 @@ object Hnsw {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("query_id"), col("vec_id"), round(col("d"), 6).as("dist"))
+  }
+
+  /** The exhaustive scale path: shard records cogrouped with every
+    * query replicated to every shard. Each task materializes ONE
+    * shard's payload, builds (or loads) its LocalGraph, and streams its
+    * queries through it — no driver collect, no broadcast of the vector
+    * table; vectors move through exactly one shuffle keyed by shard,
+    * queries through one shuffle keyed by shard, so a query batch as
+    * large as the corpus is served.
+    */
+  private def searchCogrouped(
+      recs: org.apache.spark.sql.Dataset[ShardRec],
+      qrep: org.apache.spark.sql.Dataset[(Int, Long, Array[Double])],
+      k: Int, p: Params, rebuild: Boolean, filtered: Boolean = false): DataFrame = {
+    val spark = recs.sparkSession
+    import spark.implicits._
+    mergeTopK(recs.groupByKey(_._1).cogroup(qrep.groupByKey(_._1)) { (_, rs, qs) =>
+      if (!qs.hasNext) Iterator.empty // unprobed shard: skip the build
+      else {
+        val g = shardGraph(rs.toArray, p, rebuild)
+        qs.flatMap { case (_, qid, qv) =>
+          g.search(qv.map(_.toFloat), k, filtered).map { case (id, d) => (qid, id, d) }
+        }
+      }
+    }, k)
+  }
+
+  /** The routed scale path: shard records meet the queries probing
+    * them. `qByPart` (part → its `(query_id, query_vec)` list, from
+    * `Ivf`'s driver-side probe plan) is broadcast; the records are
+    * pruned to the probed parts and move through ONE shuffle in which
+    * every probed part owns its own shuffle partition
+    * (`repartitionById`), so a task holds exactly one shard — the
+    * cogroup's memory bound — builds (or loads) its LocalGraph and
+    * streams that part's queries through it. No query exchange, no
+    * cogroup sort, no broadcast of the vector table; the query batch
+    * itself is collected to the driver, so it must fit there.
+    */
+  private def searchProbed(
+      recs: org.apache.spark.sql.Dataset[ShardRec],
+      qByPart: Map[Int, Array[(Long, Array[Double])]],
+      k: Int, p: Params, rebuild: Boolean, filtered: Boolean = false): DataFrame = {
+    val spark = recs.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(qByPart)
+    val parts = qByPart.keys.toSeq.sorted
+    val part = col(recs.columns.head)
+    mergeTopK(recs
+      .filter(part.isin(parts: _*)) // unprobed shards: never read
+      .repartitionById(parts.length.max(1), element_at(typedLit(parts.zipWithIndex.toMap), part))
+      .mapPartitions { rows =>
+        rows.toArray.groupBy(_._1).iterator.flatMap { case (pt, rs) =>
+          val g = shardGraph(rs, p, rebuild)
+          bc.value(pt).iterator.flatMap { case (qid, qv) =>
+            g.search(qv.map(_.toFloat), k, filtered).map { case (id, d) => (qid, id, d) }
+          }
+        }
+      }, k)
   }
 
   /** Node records for the hash-sharded layout (`part = vec_id mod P`,
@@ -433,12 +461,14 @@ object Hnsw {
       .as[ShardRec]
   }
 
-  /** Every query on every shard (exhaustive probe). */
-  private def replicateAll(queries: DataFrame, numParts: Int)
-      : Map[Int, Array[(Long, Array[Double])]] = {
-    val (ids, vecs) = Ivf.collectQueries(queries)
-    val all = ids.zip(vecs)
-    (0 until numParts).map(_ -> all).toMap
+  /** Replicate every query to every shard (exhaustive probe). */
+  private def replicateAll(queries: DataFrame, numParts: Int) = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    queries
+      .crossJoin(broadcast(spark.range(numParts).select(col("id").cast("int").as("part"))))
+      .select(col("part"), col("query_id"), col("query_vec"))
+      .as[(Int, Long, Array[Double])]
   }
 
   /** Each query on its `nprobe` nearest cells by centroid distance
@@ -451,14 +481,14 @@ object Hnsw {
     Ivf.probePlan(centroids, queries, nprobe).byCell.map { case (c, qs) => c.toInt -> qs }
 
   /** Search by rebuilding shard subgraphs executor-side and fanning
-    * every query out to every shard (see [[searchSharded]]). Recall of
-    * the merged result is at least that of a single whole-set graph,
-    * because each shard search is an independent chance to find each
-    * true neighbor.
+    * every query out to every shard — the queries×shards shuffle form
+    * (no driver collect; see [[searchCogrouped]]). Recall of the merged
+    * result is at least that of a single whole-set graph, because each
+    * shard search is an independent chance to find each true neighbor.
     * For sublinear per-query cost at many shards, use [[searchRouted]].
     */
   def searchTopK(embeddings: DataFrame, queries: DataFrame, k: Int, p: Params): DataFrame =
-    searchSharded(nodeRecs(embeddings, p), replicateAll(queries, p.numPartitions),
+    searchCogrouped(nodeRecs(embeddings, p), replicateAll(queries, p.numPartitions),
       k, p, rebuild = true)
 
   /** Persist a built index as two Parquet tables: `nodes(vec_id,
@@ -483,14 +513,14 @@ object Hnsw {
 
   /** Search a PERSISTED index: shard graphs are reconstructed from the
     * stored adjacency (no re-insertion — loading is O(edges)) inside
-    * the same shard shuffle as [[searchTopK]] — nodes and edges of a
-    * shard meet their queries in one task; no vector reaches the
+    * the same cogroup shuffle as [[searchTopK]] — nodes and edges of a
+    * shard meet their queries in one task; nothing is collected to the
     * driver.
     */
   def searchWithIndex(nodes: DataFrame, edges: DataFrame, queries: DataFrame,
                       k: Int, p: Params): DataFrame = {
     val recs = nodeRecs(nodes.select("vec_id", "embedding"), p).union(edgeRecs(edges))
-    searchSharded(recs, replicateAll(queries, p.numPartitions), k, p, rebuild = false)
+    searchCogrouped(recs, replicateAll(queries, p.numPartitions), k, p, rebuild = false)
   }
 
   /** Stored adjacency rows as tagged shard records. */
@@ -615,7 +645,7 @@ object Hnsw {
       .select(col("cell").cast("int").as("part"), lit(true).as("is_node"),
         col("vec_id"), lit(1L).as("b"), levelColumn(p).as("level"), col("embedding"))
       .as[ShardRec]
-    searchSharded(recs, routed(queries, centroids, nprobe), k, p, rebuild = true)
+    searchProbed(recs, routed(queries, centroids, nprobe), k, p, rebuild = true)
   }
 
   /** COSINE routed search by the normalize-then-L2 reduction
@@ -1017,7 +1047,7 @@ object Hnsw {
         eligCol.as("b"), col("level"), col("embedding"))
       .as[ShardRec]
       .union(edgeRecs(edges))
-    searchSharded(recs, routed(queries, cents, nprobe), k, p,
+    searchProbed(recs, routed(queries, cents, nprobe), k, p,
       rebuild = false, filtered = predicate.isDefined)
   }
 
@@ -1048,7 +1078,7 @@ object Hnsw {
             col("level"), col("embedding"))
           .as[ShardRec]
           .union(edgeRecs(edges))
-        searchSharded(recs, routed(queries, cents, nprobe), k, p,
+        searchProbed(recs, routed(queries, cents, nprobe), k, p,
           rebuild = false, filtered = true)
     }
 
@@ -1251,7 +1281,7 @@ object Hnsw {
         levelColumn(p).as("level"), col("embedding"))
       .as[ShardRec]
       .union(edgeRecs(edges))
-    searchSharded(recs, replicateAll(queries, p.numPartitions), k, p,
+    searchCogrouped(recs, replicateAll(queries, p.numPartitions), k, p,
       rebuild = false, filtered = true)
   }
 

@@ -1221,61 +1221,75 @@ object Ivf {
   }
 
   /** A query batch's probes, formed on the driver: each query's
-    * `nprobe` nearest cells (`cells`, aligned with `queryIds`), the
-    * union of probed cells and each cell's query list. Ranking is the
-    * in-plan window it replaces, exactly: `l2Distance`'s double fold
-    * (element order, centroid minus query), distance ascending, NaN
-    * last, ties to the smaller `centroid_id`.
+    * `nprobe` nearest cells (`cells`, aligned with `keys`), the union
+    * of probed cells and each cell's query list. A query is named by
+    * its key columns (`query_id`, or `(query_id, tok_id)` for token
+    * bags), collected as longs in `keys`. Ranking is the in-plan window
+    * it replaces, exactly: `l2Distance`'s double fold (element order,
+    * centroid minus query), distance ascending, NaN last, ties to the
+    * smaller `centroid_id`.
     */
   private[operators] final class ProbePlan(
-      val queryIds: Array[Long], val queryVecs: Array[Array[Double]],
-      val cells: Array[Array[Long]], queryIdType: org.apache.spark.sql.types.DataType,
+      val keys: Array[Array[Long]], val queryVecs: Array[Array[Double]],
+      val cells: Array[Array[Long]], keyFields: Seq[org.apache.spark.sql.types.StructField],
       cellType: org.apache.spark.sql.types.DataType) {
+
+    /** Each query's first key column — its `query_id` in a one-key batch. */
+    def queryIds: Array[Long] = keys.map(_(0))
 
     /** Distinct probed cells, ascending — the partition-filter literals. */
     lazy val unionCells: Seq[Long] = cells.flatten.distinct.sorted.toSeq
 
     /** cell → the `(query_id, query_vec)` of every query probing it. */
     lazy val byCell: Map[Long, Array[(Long, Array[Double])]] =
-      queryIds.indices.flatMap(i => cells(i).map(_ -> i)).groupBy(_._1)
-        .map { case (c, qs) => c -> qs.map { case (_, i) => (queryIds(i), queryVecs(i)) }.toArray }
+      keys.indices.flatMap(i => cells(i).map(_ -> i)).groupBy(_._1)
+        .map { case (c, qs) => c -> qs.map { case (_, i) => (keys(i)(0), queryVecs(i)) }.toArray }
 
-    /** The `(query_id, cell)` pairs as a local relation, typed like the
-      * inputs' `query_id` and `centroid_id`.
+    /** The `(key columns…, cell)` pairs as a local relation, typed like
+      * the inputs' key columns and `centroid_id`.
       */
     def pairs(spark: org.apache.spark.sql.SparkSession): DataFrame = {
       import org.apache.spark.sql.types._
-      val rows = for (i <- queryIds.indices; c <- cells(i))
-        yield org.apache.spark.sql.Row(queryIds(i), c)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-          StructType(Seq(StructField("query_id", LongType, nullable = false),
-            StructField("cell", LongType, nullable = false))))
-        .select(col("query_id").cast(queryIdType), col("cell").cast(cellType))
+      val rows = for (i <- keys.indices; c <- cells(i))
+        yield org.apache.spark.sql.Row.fromSeq(keys(i).toSeq :+ c)
+      val fields = (keyFields.map(_.name) :+ "cell").map(StructField(_, LongType, nullable = false))
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(fields))
+        .select(keyFields.map(f => col(f.name).cast(f.dataType)) :+ col("cell").cast(cellType): _*)
     }
   }
 
-  /** Collect a `(query_id, query_vec)` batch to the driver as doubles
-    * (float components widen exactly), rejecting what no probe can
-    * serve: a null or repeated `query_id`, a null vector and a null
-    * component, each named by its `query_id`.
+  /** Collect a query batch to the driver — its `keyCols` as longs and
+    * `query_vec` as doubles (float components widen exactly) —
+    * rejecting what no probe can serve: a null or repeated key, a null
+    * vector and a null component, each named by its key.
     */
-  private[operators] def collectQueries(queries: DataFrame): (Array[Long], Array[Array[Double]]) = {
-    val rows = queries.select(col("query_id").cast("long"),
-      transform(col("query_vec"), x => x.cast("double"))).collect()
-    val seen = scala.collection.mutable.HashSet.empty[Long]
-    val vecs = rows.map { r =>
-      require(!r.isNullAt(0), "a query row has a null query_id")
-      val id = r.getLong(0)
-      require(seen.add(id), s"query_id $id appears more than once in the query batch")
-      vectorOf(r, 1, s"query_id $id")
+  private def collectQueries(queries: DataFrame, keyCols: Seq[String])
+      : (Array[Array[Long]], Array[Array[Double]]) = {
+    val rows = queries.select(keyCols.map(c => col(c).cast("long")) :+
+      transform(col("query_vec"), x => x.cast("double")): _*).collect()
+    val seen = scala.collection.mutable.HashSet.empty[Seq[Long]]
+    val keys = rows.map { r =>
+      keyCols.indices.map { j =>
+        require(!r.isNullAt(j), s"a query row has a null ${keyCols(j)}")
+        r.getLong(j)
+      }
     }
-    (rows.map(_.getLong(0)), vecs)
+    val vecs = rows.indices.map { i =>
+      require(seen.add(keys(i)), s"duplicate ${keyCols.last} in the query batch: " +
+        s"${keyLabel(keyCols, keys(i))} appears more than once")
+      vectorOf(rows(i), keyCols.length, keyLabel(keyCols, keys(i)))
+    }.toArray
+    (keys.map(_.toArray), vecs)
   }
+
+  /** `query_id 3` / `query_id 3 tok_id 7`: a query named by its key. */
+  private def keyLabel(keyCols: Seq[String], key: Seq[Long]): String =
+    keyCols.zip(key).map { case (c, v) => s"$c $v" }.mkString(" ")
 
   /** Field `i` of a collected row as a dense double vector; `label`
     * names the row when the vector or one of its components is null.
     */
-  private[operators] def vectorOf(r: org.apache.spark.sql.Row, i: Int, label: => String)
+  private def vectorOf(r: org.apache.spark.sql.Row, i: Int, label: => String)
       : Array[Double] = {
     require(!r.isNullAt(i), s"$label has a null query_vec")
     r.getSeq[Any](i).iterator.map {
@@ -1284,15 +1298,15 @@ object Ivf {
     }.toArray
   }
 
-  /** Build the [[ProbePlan]] of `queries(query_id, query_vec)` against
+  /** Build the [[ProbePlan]] of `queries(keyCols…, query_vec)` against
     * `cents(centroid_id, centroid_vec)`: both are collected (C rows and
     * the batch) and ranked by [[rankCells]].
     */
-  private[operators] def probePlan(cents: DataFrame, queries: DataFrame,
-                                   nprobe: Int): ProbePlan = {
-    val (ids, vecs) = collectQueries(queries)
-    new ProbePlan(ids, vecs, rankCells(cents, vecs, nprobe, i => s"query_id ${ids(i)}"),
-      queries.schema("query_id").dataType, cents.schema("centroid_id").dataType)
+  private[operators] def probePlan(cents: DataFrame, queries: DataFrame, nprobe: Int,
+                                   keyCols: Seq[String] = Seq("query_id")): ProbePlan = {
+    val (keys, vecs) = collectQueries(queries, keyCols)
+    new ProbePlan(keys, vecs, rankCells(cents, vecs, nprobe, i => keyLabel(keyCols, keys(i))),
+      keyCols.map(queries.schema(_)), cents.schema("centroid_id").dataType)
   }
 
   /** Each vector's `nprobe` nearest centroid ids, nearest first (all C
@@ -1300,8 +1314,8 @@ object Ivf {
     * vector is ranked against every centroid. A vector whose length
     * differs from the centroids' is rejected, named by `label`.
     */
-  private[operators] def rankCells(cents: DataFrame, vecs: Array[Array[Double]], nprobe: Int,
-                                   label: Int => String): Array[Array[Long]] = {
+  private def rankCells(cents: DataFrame, vecs: Array[Array[Double]], nprobe: Int,
+                        label: Int => String): Array[Array[Long]] = {
     val cs = cents.select(col("centroid_id").cast("long"),
         transform(col("centroid_vec"), x => x.cast("double"))).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.TextFunctions.tokens
 
@@ -631,19 +630,15 @@ object Retrieval {
                        k: Int, nprobe: Int, roundTo: Int = 6,
                        excluded: Option[DataFrame] = None): DataFrame = {
     import graft.functions.VectorFunctions.dotProduct
-    val tokIdsAll = queryTokens.select(col("tok_id")).collect().map(_.getLong(0))
-    val tokIds = tokIdsAll.distinct.sorted
-    require(tokIds.length == tokIdsAll.length,
-      "maxsimTopKPruned: queryTokens carries duplicate tok_id rows — give each " +
-        "query token a unique tok_id")
+    // data + routing pinned to one manifest version; per-token probes
+    // ride the batch machinery keyed by tok_id, which also rejects a
+    // repeated tok_id (its dots would double-join with undefined intent)
+    val (stored, cents) = Ivf.readLayoutWithCentroids(spark, dir)
+    val plan = Ivf.probePlan(cents, queryTokens, nprobe, keyCols = Seq("tok_id"))
+    val tokIds = plan.queryIds.sorted
     require(tokIds.nonEmpty && tokIds.length <= 64,
       s"maxsimTopKPruned supports 1..64 query tokens (got ${tokIds.length})")
-    // data + routing pinned to one manifest version, per-token probes
-    // ride the batch machinery (tok_id plays query_id)
-    val (stored, cents) = Ivf.readLayoutWithCentroids(spark, dir)
-    val plan = Ivf.probePlan(cents,
-      queryTokens.select(col("tok_id").as("query_id"), col("query_vec")), nprobe)
-    val probes = plan.pairs(spark).select(col("query_id").as("tok_id"), col("cell"))
+    val probes = plan.pairs(spark)
     val pruned = stored
       .filter(col("cell").isin(plan.unionCells: _*)) // partition-pruned
     val maxCols = tokIds.map(t =>
@@ -692,32 +687,17 @@ object Retrieval {
                       k: Int, nprobe: Int, roundTo: Int = 6,
                       excluded: Option[DataFrame] = None): DataFrame = {
     import graft.functions.VectorFunctions.dotProduct
-    val toks = queryTokens.select(col("query_id").cast("long"), col("tok_id").cast("long"),
-      transform(col("query_vec"), x => x.cast("double"))).collect()
-    val keys = toks.map(r => (r.getLong(0), r.getLong(1)))
-    // duplicate (query, token) keys would double-join their dots with
-    // undefined intent — same contract as the single-bag forms
-    require(keys.distinct.length == keys.length,
-      "maxsimTopKBatch: queryTokens carries duplicate tok_id rows within a query — " +
-        "give each query token a unique (query_id, tok_id)")
-    def label(i: Int) = s"query_id ${keys(i)._1} tok_id ${keys(i)._2}"
-    // per-(query, token) probes ranked on the driver, exactly the
-    // Ivf.probePlan geometry keyed by the composite (query_id, tok_id);
-    // data and routing pinned to ONE manifest version — a reclustered
-    // token-embedding layout must never probe with stale/torn routing
+    // per-(query, token) probes ranked on the driver, keyed by the
+    // composite (query_id, tok_id) — a duplicate key would double-join
+    // its dots with undefined intent and is rejected, the single-bag
+    // contract; data and routing pinned to ONE manifest version — a
+    // reclustered token-embedding layout must never probe with
+    // stale/torn routing
     val (stored, cents) = Ivf.readLayoutWithCentroids(spark, dir)
-    val vecs = toks.indices.map(i => Ivf.vectorOf(toks(i), 2, label(i))).toArray
-    val cells = Ivf.rankCells(cents, vecs, nprobe, label)
-    val probes = spark.createDataFrame(
-        java.util.Arrays.asList(keys.indices.flatMap(i =>
-          cells(i).map(c => Row(keys(i)._1, keys(i)._2, c))): _*),
-        StructType(Seq(StructField("query_id", LongType), StructField("tok_id", LongType),
-          StructField("cell", LongType))))
-      .select(col("query_id").cast(queryTokens.schema("query_id").dataType),
-        col("tok_id").cast(queryTokens.schema("tok_id").dataType),
-        col("cell").cast(cents.schema("centroid_id").dataType))
+    val plan = Ivf.probePlan(cents, queryTokens, nprobe, keyCols = Seq("query_id", "tok_id"))
+    val probes = plan.pairs(spark)
     val pruned = stored
-      .filter(col("cell").isin(cells.flatten.distinct.sorted.toSeq: _*)) // partition-pruned
+      .filter(col("cell").isin(plan.unionCells: _*)) // partition-pruned
     // takedowns drop above the pruned scan (shared `_deletes` contract)
     val best = Ivf.withoutExcluded(pruned, excluded)
       .join(broadcast(probes), Seq("cell"))

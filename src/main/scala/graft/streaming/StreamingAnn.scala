@@ -60,6 +60,14 @@ object StreamingAnn {
     * that makes takedowns immediate. With no sidecar the behavior (and
     * plan) is the plain routed serve, byte-identical to batch serving
     * (spec-pinned).
+    *
+    * A micro-batch the routed probe plan refuses — a repeated or null
+    * `query_id`, a null vector or component, or a query whose length
+    * differs from the centroids' — raises `IllegalArgumentException`
+    * naming the `query_id`, and like any exception in `foreachBatch` it
+    * STOPS the stream (`StreamingQuery.exception` holds it); batches
+    * answered before it stay delivered. A source that can repeat an id
+    * within one trigger must deduplicate upstream.
     */
   def serveQueries(queries: DataFrame, indexDir: String, k: Int, p: Hnsw.Params,
                    nprobe: Int)(sink: (DataFrame, Long) => Unit): StreamingQuery =

@@ -307,6 +307,38 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
   }
 
+  test("streaming ANN: a micro-batch with a repeated query_id stops the stream, naming the id") {
+    implicit val sqlCtx = spark.sqlContext
+    val emb = (0L until 60L).map { i =>
+      val rnd = new scala.util.Random(i)
+      (i, Array.fill(8)(rnd.nextFloat() * 100f))
+    }.toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("stream_ann_dup").toString
+    val p = Hnsw.Params(numPartitions = 3)
+    Hnsw.saveRouted(emb, Ivf.kmeans(emb, 4, 2), p, dir, replication = 2)
+
+    val mem = MemoryStream[(Long, Array[Double])]
+    val answered = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val q = StreamingAnn.serveQueries(
+        mem.toDF().toDF("query_id", "query_vec"), dir, 5, p, nprobe = 2) { (res, id) =>
+      res.collect()
+      answered.synchronized { answered += id }
+    }
+    try {
+      mem.addData((1L, Array.fill(8)(50.0)), (2L, Array.fill(8)(10.0)))
+      q.processAllAvailable()
+      mem.addData((3L, Array.fill(8)(20.0)), (3L, Array.fill(8)(30.0)))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      assert(!q.isActive, "the stream must stop on the refused micro-batch")
+      val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case iae: IllegalArgumentException => iae }
+      assert(cause.exists(_.getMessage.contains("query_id 3")), e.toString)
+      assert(answered.toSeq === Seq(0L), "the batch before the refused one was answered")
+    } finally q.stop()
+  }
+
   test("streaming index maintenance: micro-batch appends == batch incremental lifecycle") {
     implicit val sqlCtx = spark.sqlContext
     val p = Hnsw.Params(numPartitions = 3)
