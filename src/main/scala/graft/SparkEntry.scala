@@ -626,7 +626,7 @@ object SparkEntry {
       WHERE a.cell IN (SELECT cid FROM probed)${pred.map(p => s" AND ($p)").getOrElse("")}
       ORDER BY dist, e.vec_id LIMIT $k"""
 
-  /** BATCH IVF top-k (mirrors Ivf.topKPartitionedBatch): per-query
+  /** BATCH IVF top-k (mirrors Ivf.topKPartitioned on a batch): per-query
     * probes of the `nprobe` nearest cells; a vector scores against a
     * query only when its cell is among that query's probes; one window
     * ranks per query.
@@ -1580,7 +1580,7 @@ object SparkEntry {
         ORDER BY dist, e.vec_id LIMIT 10"""
 
   /** Cosine ANN over seed-direction cells (mirrors
-    * Ivf.ensurePartitionedCosine + Ivf.cosineTopKPartitioned): both
+    * Ivf.ensurePartitionedCosine + Ivf.topKPartitioned): both
     * sides unit-normalize, cells/probes use L2 on the unit sphere, and
     * the score is `1 − ‖û−v̂‖²/2` — the same diff-list inner-product
     * fold as the engine's kernel, so the hash matches exactly.
@@ -1608,7 +1608,7 @@ object SparkEntry {
         ORDER BY cos_sim DESC, vec_id LIMIT $k"""
 
   /** MIPS ANN (mirrors Ivf.ensurePartitionedMips +
-    * Ivf.mipsTopKPartitioned): the augmented-vector reduction in SQL —
+    * Ivf.topKPartitioned): the augmented-vector reduction in SQL —
     * vectors append `sqrt(M² − ‖x‖²)`, the query appends 0, cells and
     * probes use L2 on the augmented space, and the score is the raw
     * inner product (the query's extra coordinate is 0, so the d+1-term
@@ -1637,7 +1637,7 @@ object SparkEntry {
         WHERE s.cell IN (SELECT cid FROM probed)
         ORDER BY ip DESC, a.vec_id LIMIT $k"""
 
-  /** BATCH MIPS ANN (mirrors Ivf.mipsTopKPartitionedBatch): augmented
+  /** BATCH MIPS ANN (mirrors Ivf.topKPartitioned on a batch): augmented
     * reduction in SQL, per-query probes on the augmented space, raw
     * inner-product scores, one rank per query.
     */
@@ -1668,7 +1668,7 @@ object SparkEntry {
         SELECT query_id, vec_id, ip FROM scored
         QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY ip DESC, vec_id) <= $k"""
 
-  /** BATCH cosine ANN (mirrors Ivf.cosineTopKPartitionedBatch): unit
+  /** BATCH cosine ANN (mirrors Ivf.topKPartitioned on a batch): unit
     * directions index and serve, per-query probes, cosine recovered
     * from unit-sphere L2, one window ranks per query.
     */
@@ -2003,7 +2003,7 @@ object SparkEntry {
       // grow the sidecar (one identical batch per bench/verify run)
       graft.operators.Tombstones.recordOnce(s, pdir,
         emb.filter(pmod(col("vec_id"), lit(7)) === 0).select("vec_id"))
-      Ivf.topKPartitionedWithDeletes(s, pdir, queryVecOf(emb, 0), 10, nprobe = 2)
+      Ivf.topKPartitioned(s, pdir, queryVecOf(emb, 0), 10, nprobe = 2)
     }),
     // The 100-TB maxsim form: doc TOKEN vectors live in the
     // cell-partitioned layout, each query token probes nprobe cells,
@@ -2224,7 +2224,7 @@ object SparkEntry {
         emb.filter(pmod(col("vec_id"), lit(5)) =!= 0),
         emb.filter(pmod(col("vec_id"), lit(5)) === 0),
         16, pdir, tag = "cos16ins")
-      Ivf.cosineTopKPartitioned(s, pdir, queryVecOf(emb, 0), 10, nprobe = 16)
+      Ivf.topKPartitioned(s, pdir, queryVecOf(emb, 0), 10, nprobe = 16)
     }),
     // The insert lifecycle on the MIPS layout: fresh rows augment with
     // the RECORDED base-corpus constant (a larger-norm arrival clamps
@@ -2238,7 +2238,7 @@ object SparkEntry {
         emb.filter(pmod(col("vec_id"), lit(5)) =!= 0),
         emb.filter(pmod(col("vec_id"), lit(5)) === 0),
         16, pdir, tag = "mips16ins")
-      Ivf.mipsTopKPartitioned(s, pdir, queryVecOf(emb, 0), 10, nprobe = 16)
+      Ivf.topKPartitioned(s, pdir, queryVecOf(emb, 0), 10, nprobe = 16)
     }),
     // Same scale shape for the K-MEANS-refined cells: the Lloyd
     // centroids become the partition layout (written once per dir),
@@ -2261,7 +2261,7 @@ object SparkEntry {
       Ivf.ensurePartitioned(emb, 16, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-      Ivf.topKPartitionedBatch(s, pdir, qs, 10, nprobe = 2)
+      Ivf.topKPartitioned(s, pdir, qs, 10, nprobe = 2)
     }),
     // FUSED twin of q_ivf_batch_topk — the throughput kernel (one
     // primitive loop scores + heaps per partition; 10k-query 1M smoke
@@ -2416,7 +2416,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "cos16")
       Ivf.ensurePartitionedCosine(emb, 16, pdir)
-      Ivf.cosineTopKPartitioned(s, pdir, queryVecOf(emb, 0), 10, nprobe = 2)
+      Ivf.topKPartitioned(s, pdir, queryVecOf(emb, 0), 10, nprobe = 2)
     }),
 
     // MIPS through the partition-pruned index path: the augmented-vector
@@ -2428,7 +2428,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "mips16")
       Ivf.ensurePartitionedMips(emb, 16, pdir)
-      Ivf.mipsTopKPartitioned(s, pdir, queryVecOf(emb, 0), 10, nprobe = 2)
+      Ivf.topKPartitioned(s, pdir, queryVecOf(emb, 0), 10, nprobe = 2)
     }),
     // BATCH MIPS over the same augmented layout: per-query probes, one
     // pruned scan for the whole batch, raw-dot scores heap-ranked.
@@ -2438,7 +2438,7 @@ object SparkEntry {
       Ivf.ensurePartitionedMips(emb, 16, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-      Ivf.mipsTopKPartitionedBatch(s, pdir, qs, 10, nprobe = 2)
+      Ivf.topKPartitioned(s, pdir, qs, 10, nprobe = 2)
     }),
     // FUSED twin (shared fused engine over the augmented doubles):
     // same oracle as q_mips_batch_topk.
@@ -2448,7 +2448,7 @@ object SparkEntry {
       Ivf.ensurePartitionedMips(emb, 16, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-      Ivf.mipsTopKPartitionedBatchFused(s, pdir, qs, 10, nprobe = 2)
+      Ivf.topKPartitionedBatchFused(s, pdir, qs, 10, nprobe = 2)
     }),
 
     // BATCH cosine ANN over the same unit-direction layout: per-query
@@ -2460,7 +2460,7 @@ object SparkEntry {
       Ivf.ensurePartitionedCosine(emb, 16, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-      Ivf.cosineTopKPartitionedBatch(s, pdir, qs, 10, nprobe = 2)
+      Ivf.topKPartitioned(s, pdir, qs, 10, nprobe = 2)
     }),
     // FUSED twin (unit-sphere squared-L2 heap, cosine on emission):
     // same oracle as q_cosine_batch_topk.
@@ -2470,7 +2470,7 @@ object SparkEntry {
       Ivf.ensurePartitionedCosine(emb, 16, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-      Ivf.cosineTopKPartitionedBatchFused(s, pdir, qs, 10, nprobe = 2)
+      Ivf.topKPartitionedBatchFused(s, pdir, qs, 10, nprobe = 2)
     }),
 
     // Filtered ANN — "nearest neighbors WHERE <predicate>" — over the

@@ -595,7 +595,7 @@ object Hnsw {
         col("vec_id"), levelColumn(p).as("level"), col("embedding"))
       .as[(Int, Long, Int, Array[Float])]
     // affected shard ids: O(P) ints to the driver — partition-filter
-    // formation, same legitimacy class as Ivf.topKPartitioned's probe
+    // formation, same legitimacy class as Ivf.probePlan's cell ids
     val affected = newNodes.select(col("part")).distinct().as[Int].collect().toSeq
     val stored = nodeRecs(nodes.select("vec_id", "embedding"), p)
       .union(edgeRecs(edges))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -313,40 +313,120 @@ object Ivf {
     }
   }
 
-  /** Top-k over the partitioned layout for a SINGLE query row (same
-    * contract as [[topK]]): the `cell IN probed` filter is a partition
-    * filter, so only nprobe/C of the files are read. Centroids come
-    * from the `_centroids` sidecar — the probe never touches unprobed
-    * data files at all.
+  /** How a layout kind ([[layoutKind]]) is served — the one table that
+    * [[topKPartitioned]], [[topKPartitionedBatchFused]] and
+    * [[rangeSearch]] read:
+    *  - `plain`: the raw query, `dist` (L2) ascending;
+    *  - `cosine` ([[ensurePartitionedCosine]]): the normalized query,
+    *    `cos_sim = 1 − ‖û−v̂‖²/2` descending (cosine on the unit sphere);
+    *  - `mips` ([[ensurePartitionedMips]]): the zero-augmented query,
+    *    the raw inner product `ip` descending (the query's extra
+    *    coordinate is 0, so the augmented dot IS the raw dot).
+    * `fold` is the fused kernel's `score`: the same double fold in the
+    * same element order, over the layout's stored element type (raw
+    * floats for `plain`, doubles otherwise), so no row is widened into
+    * a copy.
+    */
+  private final case class Metric(kind: String, query: Column => Column,
+                                  score: (Column, Column) => Column, name: String,
+                                  asc: Boolean, fold: Fold[_]) {
+    /** The rank order: best score first. */
+    def order: Column = if (asc) col(name) else col(name).desc
+  }
+
+  /** The fused kernel's score of a stored row (element type `E`)
+    * against a query in the layout's space; `rows` decodes the
+    * kernel's `(cell, vec_id, embedding)` input on the driver.
+    */
+  private abstract class Fold[E](@transient val rows: Encoder[(Long, Long, E)])
+      extends Serializable {
+    def apply(e: E, q: Array[Double]): Double
+  }
+
+  private val metrics: Map[String, Metric] = Seq(
+    Metric("plain", q => q, l2Distance, "dist", asc = true,
+      new Fold[Array[Float]](Encoders.product[(Long, Long, Array[Float])]) {
+        def apply(e: Array[Float], q: Array[Double]): Double = {
+          var s = 0.0; var j = 0
+          while (j < e.length) { val d = e(j).toDouble - q(j); s += d * d; j += 1 }
+          math.sqrt(s)
+        }
+      }),
+    Metric("cosine", normalizeQuery, (e, q) => lit(1.0) - l2DistanceSq(e, q) / lit(2.0),
+      "cos_sim", asc = false,
+      new Fold[Array[Double]](Encoders.product[(Long, Long, Array[Double])]) {
+        def apply(e: Array[Double], q: Array[Double]): Double = {
+          var s = 0.0; var j = 0
+          while (j < e.length) { val d = e(j) - q(j); s += d * d; j += 1 }
+          1.0 - s / 2.0
+        }
+      }),
+    Metric("mips", q => concat(transform(q, x => x.cast("double")), array(lit(0.0))),
+      dotProduct, "ip", asc = false,
+      new Fold[Array[Double]](Encoders.product[(Long, Long, Array[Double])]) {
+        def apply(e: Array[Double], q: Array[Double]): Double = {
+          var s = 0.0; var j = 0
+          while (j < e.length) { s += e(j) * q(j); j += 1 }
+          s
+        }
+      })
+  ).map(m => m.kind -> m).toMap
+
+  /** The [[Metric]] of the layout at `dir`; `op` names the refusing
+    * entry point when the layout holds codes instead of vectors.
+    */
+  private def metricOf(spark: org.apache.spark.sql.SparkSession, dir: String,
+                       op: String): Metric = {
+    val kind = layoutKind(spark, dir)
+    require(metrics.contains(kind),
+      s"$op serves plain, cosine and mips layouts, but $dir is a '$kind' layout")
+    metrics(kind)
+  }
+
+  /** `queries` as a `(query_id, query_vec)` batch in the layout's
+    * space; a one-row `(query_vec)` frame is the batch of one, id 0.
+    */
+  private def asBatch(queries: DataFrame, m: Metric): DataFrame = {
+    val id = if (queries.columns.contains("query_id")) col("query_id") else lit(0L).as("query_id")
+    queries.select(id, m.query(col("query_vec")).as("query_vec"))
+  }
+
+  /** THE declarative IVF top-k over a partitioned layout, in the metric
+    * its recorded kind serves ([[Metric]]; any other kind is refused).
+    *
+    * `queries` is either `(query_id, query_vec)` rows — per-query
+    * `(query_id, vec_id, score)` top-k out — or the one-row
+    * `(query_vec)` frame of a single query, served as a batch of one
+    * with the id dropped: `(vec_id, score)`, best first, ties by
+    * `vec_id` (for one query the bounded heap is a `TakeOrdered`).
+    *
+    * Every query probes its `nprobe` nearest cells ([[probePlan]],
+    * formed on the driver); the scan is partition-pruned to the UNION
+    * of probed cells and each candidate is scored only against the
+    * queries that probed ITS cell (broadcast probe-pair join); the
+    * bounded-heap aggregate ([[heapTopKPerQuery]]) ranks per query
+    * without sorting. The whole batch costs ONE pruned scan.
     *
     * `predicate` (filtered ANN: "nearest neighbors WHERE attr = x") is
     * applied to the stored rows directly above the pruned scan, so a
-    * scan-pushable predicate lands in `PushedFilters` and filtered rows
-    * are dropped before any distance arithmetic. Candidates come from
-    * the probed cells only — the filter narrows the candidate set, it
-    * does not widen the probe.
+    * scan-pushable predicate lands in `PushedFilters`; it narrows the
+    * candidates, it does not widen the probe. The layout's tombstones
+    * ([[Tombstones]]) are always excluded by a broadcast anti-join —
+    * the takedown contract, no layout rewrite.
     */
   def topKPartitioned(spark: org.apache.spark.sql.SparkSession, dir: String,
                       queries: DataFrame, k: Int, nprobe: Int,
-                      roundTo: Int = 6, predicate: Option[Column] = None,
-                      excluded: Option[DataFrame] = None): DataFrame = {
-    val (stored, cents) = readLayoutWithCentroids(spark, dir)
-    // collect() here moves exactly `nprobe` cell IDS (a handful of
-    // longs) to the driver — required to form the partition filter
-    // below; the vector data itself never leaves the executors
-    val probed = cents.crossJoin(broadcast(queries))
-      .select(col("centroid_id"),
-        l2Distance(col("centroid_vec"), col("query_vec")).as("qdist"))
-      .orderBy(col("qdist"), col("centroid_id"))
-      .limit(nprobe)
-      .collect().map(_.getLong(0))
-    val pruned = stored.filter(col("cell").isin(probed: _*)) // partition-pruned
-    withoutExcluded(predicate.fold(pruned)(pruned.filter), excluded)
-      .crossJoin(broadcast(queries))
-      .select(col("vec_id"),
-        round(l2Distance(col("embedding"), col("query_vec")), roundTo).as("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+                      roundTo: Int = 6, predicate: Option[Column] = None): DataFrame = {
+    val m = metricOf(spark, dir, "Ivf.topKPartitioned")
+    val qs = asBatch(queries, m)
+    val (probes, pruned) = batchPrunedCandidates(spark, dir, qs, nprobe)
+    val scored = withoutExcluded(predicate.fold(pruned)(pruned.filter), Tombstones.ids(spark, dir))
+      .join(probes, Seq("cell")) // candidate meets only the queries probing its cell
+      .join(broadcast(qs), Seq("query_id"))
+      .select(col("query_id"), col("vec_id"),
+        round(m.score(col("embedding"), col("query_vec")), roundTo).as(m.name))
+    if (queries.columns.contains("query_id")) heapTopKPerQuery(scored, k, m.name, m.asc)
+    else scored.drop("query_id").orderBy(m.order, col("vec_id")).limit(k)
   }
 
   /** Drop `excluded(vec_id)` rows (index tombstones) from a candidate
@@ -354,31 +434,19 @@ object Ivf {
     * many ids are tombstoned (never an `isin` literal list), and the
     * tombstone set is contractually small (bounded by takedown rate ×
     * compaction cadence — [[Tombstones]]), so the broadcast is safe.
+    * Repeated ids change nothing (an anti-join keeps a row iff no id
+    * matches), so they are not deduplicated here.
     */
   private[operators] def withoutExcluded(candidates: DataFrame, excluded: Option[DataFrame]): DataFrame =
     excluded.fold(candidates) { dels =>
-      candidates.join(broadcast(dels.select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_anti")
+      candidates.join(broadcast(dels.select(col("vec_id"))), Seq("vec_id"), "left_anti")
     }
 
-  /** [[topKPartitioned]] under the layout's `_deletes` tombstones — the
-    * serving path between a takedown and the next [[compactPartitioned]]
-    * (same contract as `Hnsw.searchLatestGeneration`): recorded ids are
-    * excluded from results immediately, with no layout rewrite. Falls
-    * back to the plain path when nothing is deleted.
-    */
-  def topKPartitionedWithDeletes(spark: org.apache.spark.sql.SparkSession, dir: String,
-                                 queries: DataFrame, k: Int, nprobe: Int,
-                                 roundTo: Int = 6): DataFrame =
-    topKPartitioned(spark, dir, queries, k, nprobe, roundTo,
-      excluded = Tombstones.ids(spark, dir))
-
-  /** [[topKPartitionedBatch]] under the layout's tombstones. */
+  /** [[topKPartitioned]] under its former batch-with-tombstones name. */
   def topKPartitionedBatchWithDeletes(spark: org.apache.spark.sql.SparkSession, dir: String,
                                       queries: DataFrame, k: Int, nprobe: Int,
                                       roundTo: Int = 6): DataFrame =
-    topKPartitionedBatch(spark, dir, queries, k, nprobe, roundTo,
-      excluded = Tombstones.ids(spark, dir))
+    topKPartitioned(spark, dir, queries, k, nprobe, roundTo)
 
   /** Record takedown ids against a cell-partitioned layout (appends to
     * the `_deletes` sidecar; see [[Tombstones]]).
@@ -771,7 +839,7 @@ object Ivf {
     * One scan is pruned to the UNION of eligible cells (≤ C ids to the
     * driver — the partition filter); each candidate is scored only
     * against the queries whose ball intersects ITS cell — the join
-    * geometry of [[topKPartitionedBatch]], without the heap (range
+    * geometry of [[topKPartitioned]], without the heap (range
     * output is unbounded by design). On clustered corpora most cells fail the
     * bound and are never read (IvfRangeSpec proves the skip per kind);
     * on uniform unit-sphere data every ball intersects every cell,
@@ -789,36 +857,28 @@ object Ivf {
                   queries: DataFrame, threshold: Double, roundTo: Int = 6,
                   predicate: Option[Column] = None,
                   ordered: Boolean = true): DataFrame = {
-    val kind = layoutKind(spark, dir)
-    require(Set("plain", "cosine", "mips")(kind),
-      s"Ivf.rangeSearch serves plain, cosine and mips layouts, but $dir is a '$kind' layout")
+    val m = metricOf(spark, dir, "Ivf.rangeSearch")
     val margin = math.pow(10.0, -roundTo)
-    val q = col("query_vec")
-    val e = col("embedding")
+    val q = col("query_vec") // in the layout's space
     // how far the query lies outside the cell's covering ball
     val lb = l2Distance(col("centroid_vec"), q) - col("radius")
-    // (query into the layout's space, per-cell bound, score name, score)
-    val (toLayout, cellBound, scoreName, score) = kind match {
-      case "plain" =>
-        (q, lb <= lit(threshold) + lit(margin), "dist", l2Distance(e, q))
-      case "cosine" =>
-        (normalizeQuery(q), lb <= lit(math.sqrt(2.0 * (1.0 - threshold) + margin)),
-          "cos_sim", lit(1.0) - l2DistanceSq(e, q) / lit(2.0))
-      case "mips" =>
-        (concat(transform(q, x => x.cast("double")), array(lit(0.0))),
-          lb <= lit(0.0) || lb * lb <= dotProduct(q, q) + col("normsq") -
-            lit(2.0 * threshold) + lit(margin),
-          "ip", dotProduct(e, q))
+    val cellBound = m.kind match {
+      case "plain" => lb <= lit(threshold) + lit(margin)
+      case "cosine" => lb <= lit(math.sqrt(2.0 * (1.0 - threshold) + margin))
+      case "mips" => lb <= lit(0.0) || lb * lb <= dotProduct(q, q) + col("normsq") -
+        lit(2.0 * threshold) + lit(margin)
     }
-    val s = col(scoreName)
-    val (passes, byScore) = if (kind == "plain") (s <= threshold, s) else (s >= threshold, s.desc)
+    val s = col(m.name)
+    val passes = if (m.asc) s <= threshold else s >= threshold
     ensureRadii(spark, dir)
-    val single = !queries.columns.contains("query_id")
-    val qs = (if (single) queries.withColumn("query_id", lit(0L)) else queries)
-      .select(col("query_id"), toLayout.as("query_vec"))
+    val qs = asBatch(queries, m)
     val (stored, cents) = readLayoutWithCentroids(spark, dir)
-    val probePairs = cents.join(spark.read.parquet(s"$dir/_radii"),
-        col("centroid_id") === col("cell"))
+    // the C radii rows are taken now, like the tombstones: maintenance
+    // drops the sidecar, and a frame built before it must still run
+    val radiiRead = spark.read.parquet(s"$dir/_radii")
+    val radii = spark.createDataFrame(java.util.Arrays.asList(radiiRead.collect(): _*),
+      radiiRead.schema)
+    val probePairs = cents.join(radii, col("centroid_id") === col("cell"))
       .drop("cell")
       .crossJoin(broadcast(qs))
       .filter(isnan(col("radius")) || cellBound)
@@ -828,10 +888,10 @@ object Ivf {
     val hits = withoutExcluded(predicate.fold(pruned)(pruned.filter), Tombstones.ids(spark, dir))
       .join(broadcast(probePairs), Seq("cell")) // predicate scan-pushable → PushedFilters
       .join(broadcast(qs), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"), round(score, roundTo).as(scoreName))
+      .select(col("query_id"), col("vec_id"), round(m.score(col("embedding"), q), roundTo).as(m.name))
       .filter(passes)
-    val out = if (ordered) hits.orderBy(col("query_id"), byScore, col("vec_id")) else hits
-    if (single) out.drop("query_id") else out
+    val out = if (ordered) hits.orderBy(col("query_id"), m.order, col("vec_id")) else hits
+    if (queries.columns.contains("query_id")) out else out.drop("query_id")
   }
 
   /** Cell-local incremental insert — the append half of the layout
@@ -960,30 +1020,6 @@ object Ivf {
     }
   }
 
-  /** BATCH top-k over the partitioned layout: `(query_id, query_vec)`
-    * rows in, per-query `(query_id, vec_id, dist)` top-k out. Every
-    * query probes its `nprobe` nearest cells; the scan is
-    * partition-pruned to the UNION of all probed cells; each candidate
-    * row is scored only against the queries that probed ITS cell
-    * (broadcast probe-pair join); the bounded-heap aggregate
-    * ([[heapTopKPerQuery]]) ranks per query without sorting. The whole
-    * batch costs ONE pruned scan — the amortized serving shape for
-    * production query streams (vs one scan per query in
-    * [[topKPartitioned]]).
-    */
-  def topKPartitionedBatch(spark: org.apache.spark.sql.SparkSession, dir: String,
-                           queries: DataFrame, k: Int, nprobe: Int,
-                           roundTo: Int = 6, predicate: Option[Column] = None,
-                           excluded: Option[DataFrame] = None): DataFrame = {
-    val (probes, pruned) = batchPrunedCandidates(spark, dir, queries, nprobe)
-    val scored = withoutExcluded(predicate.fold(pruned)(pruned.filter), excluded)
-      .join(probes, Seq("cell")) // candidate meets only the queries probing its cell
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(l2Distance(col("embedding"), col("query_vec")), roundTo).as("dist"))
-    heapTopKPerQuery(scored, k, "dist")
-  }
-
   /** Per-query top-k of `scored(query_id, vec_id, <scoreName>)` via the
     * bounded-heap aggregate ([[graft.functions.TopKPairsAgg]]) —
     * ascending by default, descending for similarity scores. This is
@@ -1009,68 +1045,80 @@ object Ivf {
         (if (asc) col("p.key") else -col("p.key")).as(scoreName))
   }
 
-  /** FUSED batch top-k — the serving-tier throughput kernel: one tight
-    * per-partition primitive loop scores each pruned candidate against
-    * the queries that probed its cell and feeds per-query bounded heaps
+  /** FUSED batch top-k — the serving-tier throughput kernel, in the
+    * metric the layout's kind serves ([[Metric]]; any other kind is
+    * refused): one tight per-partition primitive loop scores each
+    * pruned candidate against the queries that probed its cell
+    * (`Metric.fold`) and feeds per-query bounded heaps
     * ([[graft.functions.TopKHeap]]), so the 10⁸–10⁹ (candidate, query)
     * pairs are never materialized as rows and never pass through the
     * aggregate framework (measured: the per-pair row/eval overhead is
-    * ~3× the L2 arithmetic itself). The declarative twin
-    * ([[topKPartitionedBatch]]) is the oracle-anchored form; this
-    * kernel computes BIT-IDENTICAL distances (same double fold in the
-    * same order as `l2Distance`) AND ranks by the same
-    * `roundTo`-rounded key with the same vec_id tie order
-    * ([[roundKey]] replicates Spark `round`'s HALF_UP double
+    * ~3× the L2 arithmetic itself). [[topKPartitioned]] is the
+    * oracle-anchored form; this kernel computes BIT-IDENTICAL scores
+    * (same double fold in the same order as the score column) AND
+    * ranks by the same `roundTo`-rounded key with the same vec_id tie
+    * order ([[roundKey]] replicates Spark `round`'s HALF_UP double
     * semantics, RoundKeySpec pins the equality) — so fused results are
-    * IDENTICAL to the declarative twin on every input, including
-    * raw-distance ties at the k boundary that round equal. Probe
-    * formation, partition pruning, and the queries-broadcast are
-    * identical to the declarative path; `mapPartitions` is used
-    * exactly per the custom-operator ladder — the semantics (fused
-    * multi-query scan + bounded heaps) have no declarative expression.
+    * IDENTICAL to the declarative form on every input, including
+    * raw-score ties at the k boundary that round equal. Probe
+    * formation, partition pruning and the tombstone anti-join are the
+    * declarative path's (with no `_deletes` sidecar the exclusion costs
+    * one filesystem `exists` check); `mapPartitions` is used exactly
+    * per the custom-operator ladder — the semantics (fused multi-query
+    * scan + bounded heaps) have no declarative expression.
     */
   def topKPartitionedBatchFused(spark: org.apache.spark.sql.SparkSession, dir: String,
                                 queries: DataFrame, k: Int, nprobe: Int,
                                 roundTo: Int = 6): DataFrame = {
-    import spark.implicits._
+    val m = metricOf(spark, dir, "Ivf.topKPartitionedBatchFused")
     val (stored, cents) = readLayoutWithCentroids(spark, dir) // one-version pin
-    val plan = probePlan(cents, queries, nprobe)
+    val plan = probePlan(cents, asBatch(queries, m), nprobe)
+    val pruned = stored.filter(col("cell").isin(plan.unionCells: _*)) // partition-pruned
+    val live = withoutExcluded(pruned, Tombstones.ids(spark, dir))
+      .select(col("cell"), col("vec_id"), col("embedding"))
     // per-cell query lists: the same Q·nprobe payload the declarative
     // path ships through its BroadcastExchange, grouped for O(1) cell
     // lookup
-    val bc = spark.sparkContext.broadcast(plan.byCell)
+    val perTask = fusedHeaps(live, m.fold, spark.sparkContext.broadcast(plan.byCell),
+      k, roundTo, negate = !m.asc, m.name)
+    heapTopKPerQuery(perTask, k, m.name, m.asc) // merge the ≤ tasks·k rows per query
+  }
+
+  /** The fused kernel's per-partition loop: each `(cell, vec_id,
+    * embedding)` row is scored by `fold` against every query probing
+    * its cell into per-query bounded heaps, keyed by the ROUNDED score
+    * ([[offerRounded]]; negated for largest-first metrics). Returns
+    * each task's heaps as `(query_id, vec_id, <scoreName>)` rows.
+    */
+  private def fusedHeaps[E](rows: DataFrame, fold: Fold[E],
+                            byCell: org.apache.spark.broadcast.Broadcast[
+                              Map[Long, Array[(Long, Array[Double])]]],
+                            k: Int, roundTo: Int, negate: Boolean,
+                            scoreName: String): DataFrame = {
+    import rows.sparkSession.implicits._
     val margin = math.pow(10.0, -roundTo)
-    val pruned = stored
-      .filter(col("cell").isin(plan.unionCells: _*)) // partition-pruned
-      .select(col("cell"), col("vec_id"), col("embedding"))
-    val perTask = pruned.as[(Long, Long, Array[Float])].mapPartitions { rows =>
+    rows.as(fold.rows).mapPartitions { it =>
       val heaps = new java.util.HashMap[Long, graft.functions.TopKHeap]()
-      rows.foreach { case (cell, vid, emb) =>
-        val qs = bc.value.getOrElse(cell, null)
+      it.foreach { case (cell, vid, emb) =>
+        val qs = byCell.value.getOrElse(cell, null)
         if (qs != null) {
           var i = 0
           while (i < qs.length) {
             val (qid, qv) = qs(i)
-            // same fold as l2Distance: double accumulate in element order
-            var s = 0.0; var j = 0
-            while (j < emb.length) { val d = emb(j).toDouble - qv(j); s += d * d; j += 1 }
             var h = heaps.get(qid)
             if (h == null) { h = new graft.functions.TopKHeap(k); heaps.put(qid, h) }
-            offerRounded(h, math.sqrt(s), vid, roundTo, margin, negate = false)
+            offerRounded(h, fold(emb, qv), vid, roundTo, margin, negate)
             i += 1
           }
         }
       }
       import scala.jdk.CollectionConverters._
       heaps.entrySet().iterator().asScala.flatMap { e =>
-        e.getValue.sorted.iterator.map { case (d, vid) => (e.getKey, vid, d) }
+        e.getValue.sorted.iterator.map { case (key, vid) =>
+          (e.getKey, vid, if (negate) -key else key) // IEEE negation is exact
+        }
       }
-    }.toDF("query_id", "vec_id", "dist")
-    // merge the ≤ tasks·k rows per query (keys already rounded — the
-    // outer round is an exact no-op kept for schema/plan symmetry with
-    // the declarative twin)
-    heapTopKPerQuery(perTask, k, "dist")
-      .select(col("query_id"), col("vec_id"), round(col("dist"), roundTo).as("dist"))
+    }.toDF("query_id", "vec_id", scoreName)
   }
 
   /** Offer `score` to `h` under its ROUNDED key ([[roundKey]]; negated
@@ -1099,91 +1147,6 @@ object Ivf {
   private[graft] def roundKey(d: Double, s: Int): Double =
     java.math.BigDecimal.valueOf(d)
       .setScale(s, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** Shared fused-kernel engine for layouts storing DOUBLE vectors
-    * (the cosine unit-direction and MIPS augmented tables): one tight
-    * per-partition loop scores each pruned candidate against the
-    * queries probing its cell into per-query bounded heaps keeping the
-    * k LARGEST `score` values under the NEGATED rounded key
-    * ([[offerRounded]]), so heap selection — ties at the k boundary
-    * included — is exactly the declarative twin's (score desc, vec_id
-    * asc). Returns `(query_id, vec_id, key)`; callers project the
-    * final score column (negation only — IEEE-exact). Same
-    * probe/pruning and fold arithmetic as
-    * [[topKPartitionedBatchFused]].
-    */
-  private def fusedHeapBatchDouble(spark: org.apache.spark.sql.SparkSession, dir: String,
-                                   qPrepared: DataFrame, k: Int, nprobe: Int, roundTo: Int)
-                                  (score: (Array[Double], Array[Double]) => Double)
-      : DataFrame = {
-    import spark.implicits._
-    val (stored, cents) = readLayoutWithCentroids(spark, dir) // one-version pin
-    val plan = probePlan(cents, qPrepared, nprobe)
-    val bc = spark.sparkContext.broadcast(plan.byCell)
-    val margin = math.pow(10.0, -roundTo)
-    val perTask = stored
-      .filter(col("cell").isin(plan.unionCells: _*)) // partition-pruned
-      .select(col("cell"), col("vec_id"), col("embedding"))
-      .as[(Long, Long, Array[Double])].mapPartitions { rows =>
-        val heaps = new java.util.HashMap[Long, graft.functions.TopKHeap]()
-        rows.foreach { case (cell, vid, emb) =>
-          val qs = bc.value.getOrElse(cell, null)
-          if (qs != null) {
-            var i = 0
-            while (i < qs.length) {
-              val (qid, qv) = qs(i)
-              var h = heaps.get(qid)
-              if (h == null) { h = new graft.functions.TopKHeap(k); heaps.put(qid, h) }
-              offerRounded(h, score(emb, qv), vid, roundTo, margin, negate = true)
-              i += 1
-            }
-          }
-        }
-        import scala.jdk.CollectionConverters._
-        heaps.entrySet().iterator().asScala.flatMap { e =>
-          e.getValue.sorted.iterator.map { case (d, vid) => (e.getKey, vid, d) }
-        }
-      }.toDF("query_id", "vec_id", "key")
-    heapTopKPerQuery(perTask, k, "key") // merge the ≤ tasks·k rows per query
-  }
-
-  /** FUSED batch cosine over an [[ensurePartitionedCosine]] layout —
-    * [[cosineTopKPartitionedBatch]]'s throughput kernel: the heap
-    * ranks by the negated ROUNDED cosine (same double fold and same
-    * rounding as the declarative twin, so selection and emitted
-    * scores are identical on every input; TopKAggSpec pins equality).
-    */
-  def cosineTopKPartitionedBatchFused(spark: org.apache.spark.sql.SparkSession, dir: String,
-                                      queries: DataFrame, k: Int, nprobe: Int,
-                                      roundTo: Int = 6): DataFrame = {
-    val qn = queries.select(col("query_id"),
-      transform(col("query_vec"), x => x / l2Norm(col("query_vec"))).as("query_vec"))
-    // same double fold as the declarative `1 − ‖û−v̂‖²/2`, then the same
-    // rounding, so k-boundary ties resolve exactly like the twin
-    fusedHeapBatchDouble(spark, dir, qn, k, nprobe, roundTo) { (e, q) =>
-      var s = 0.0; var j = 0
-      while (j < e.length) { val d = e(j) - q(j); s += d * d; j += 1 }
-      1.0 - s / 2.0
-    }.select(col("query_id"), col("vec_id"), (-col("key")).as("cos_sim"))
-  }
-
-  /** FUSED batch MIPS over an [[ensurePartitionedMips]] layout —
-    * [[mipsTopKPartitionedBatch]]'s throughput kernel: the heap ranks
-    * by the NEGATED rounded inner product (k largest, declarative tie
-    * order), and the final projection un-negates (IEEE-exact).
-    */
-  def mipsTopKPartitionedBatchFused(spark: org.apache.spark.sql.SparkSession, dir: String,
-                                    queries: DataFrame, k: Int, nprobe: Int,
-                                    roundTo: Int = 6): DataFrame = {
-    val qa = queries.select(col("query_id"),
-      concat(transform(col("query_vec"), x => x.cast("double")), array(lit(0.0)))
-        .as("query_vec"))
-    fusedHeapBatchDouble(spark, dir, qa, k, nprobe, roundTo) { (e, q) =>
-      var s = 0.0; var j = 0
-      while (j < e.length) { s += e(j) * q(j); j += 1 }
-      s
-    }.select(col("query_id"), col("vec_id"), (-col("key")).as("ip"))
-  }
 
   /** Shared batch-probe machinery: per-query nprobe nearest cells →
     * `(probes, pruned)` where `probes` is the broadcast
@@ -1335,26 +1298,6 @@ object Ivf {
     }.toArray
   }
 
-  /** BATCH cosine top-k over an [[ensurePartitionedCosine]] layout:
-    * queries normalize (keeping their ids), the probe machinery is
-    * [[topKPartitionedBatch]]'s, and the score converts back to cosine
-    * (`1 − ‖û−v̂‖²/2`) ranked highest-first per query.
-    */
-  def cosineTopKPartitionedBatch(spark: org.apache.spark.sql.SparkSession, dir: String,
-                                 queries: DataFrame, k: Int, nprobe: Int,
-                                 roundTo: Int = 6): DataFrame = {
-    val qn = queries.select(col("query_id"),
-      transform(col("query_vec"), x => x / l2Norm(col("query_vec"))).as("query_vec"))
-    val (probes, pruned) = batchPrunedCandidates(spark, dir, qn, nprobe)
-    val scored = pruned
-      .join(probes, Seq("cell"))
-      .join(broadcast(qn), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(lit(1.0) - l2DistanceSq(col("embedding"), col("query_vec")) / lit(2.0),
-          roundTo).as("cos_sim"))
-    heapTopKPerQuery(scored, k, "cos_sim", asc = false)
-  }
-
   /** Unit-normalized copy of the vector table (doubles): for unit
     * vectors, cosine similarity is a pure function of L2 distance
     * (`cos = 1 − ‖u−v‖²/2`), so EVERY L2 index path — IVF cells, HNSW
@@ -1376,46 +1319,14 @@ object Ivf {
         .as("embedding"))
   }
 
-  /** Unit-normalize a single-row `(query_vec)` frame (double arrays). */
-  def normalizedQuery(queries: DataFrame): DataFrame =
-    queries.select(
-      transform(col("query_vec"), x => x / l2Norm(col("query_vec"))).as("query_vec"))
-
   /** Cell-partitioned COSINE serving layout: the normalized table
     * partitioned by cells of its own seed centroids. Build once per
-    * dir; [[cosineTopKPartitioned]] probes it.
+    * dir; [[topKPartitioned]] serves it by cosine.
     */
   def ensurePartitionedCosine(embeddings: DataFrame, c: Int, dir: String): Unit = {
     val normed = normalized(embeddings)
     ensurePartitionedWith(normed, centroids(normed, c), dir, tag = s"cos_c=$c",
       kind = "cosine")
-  }
-
-  /** Cosine top-k over a [[ensurePartitionedCosine]] layout: the query
-    * normalizes, the probe partition-prunes exactly like
-    * [[topKPartitioned]], and the score is `1 − ‖u−v‖²/2` — highest
-    * similarity first, ties by vec_id ([[Knn.cosineTopK]] semantics,
-    * served from a pruned scan instead of a full pass).
-    */
-  def cosineTopKPartitioned(spark: org.apache.spark.sql.SparkSession, dir: String,
-                            queries: DataFrame, k: Int, nprobe: Int,
-                            roundTo: Int = 6): DataFrame = {
-    val (stored, cents) = readLayoutWithCentroids(spark, dir)
-    val qn = normalizedQuery(queries)
-    val probed = cents.crossJoin(broadcast(qn))
-      .select(col("centroid_id"),
-        l2Distance(col("centroid_vec"), col("query_vec")).as("qdist"))
-      .orderBy(col("qdist"), col("centroid_id"))
-      .limit(nprobe)
-      .collect().map(_.getLong(0))
-    stored
-      .filter(col("cell").isin(probed: _*)) // partition-pruned
-      .crossJoin(broadcast(qn))
-      .select(col("vec_id"),
-        round(lit(1.0) - l2DistanceSq(col("embedding"), col("query_vec")) / lit(2.0),
-          roundTo).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
   }
 
   // ---- MIPS: max-inner-product search on the L2 machinery ----
@@ -1466,11 +1377,6 @@ object Ivf {
           lit(m * m) - dotProduct(col("embedding"), col("embedding")),
           lit(0.0))))).as("embedding"))
 
-  /** Zero-augment a `(query_vec)` query frame: `[q, 0]` as doubles. */
-  def augmentedQuery(queries: DataFrame): DataFrame =
-    queries.withColumn("query_vec",
-      concat(transform(col("query_vec"), x => x.cast("double")), array(lit(0.0))))
-
   /** Cell-partitioned MIPS serving layout: the augmented table
     * partitioned by cells of its own seed centroids — probe geometry
     * and partition pruning are [[ensurePartitioned]]'s, unchanged.
@@ -1483,54 +1389,6 @@ object Ivf {
     // the augmentation constant, for insertInto (idempotent write;
     // refreshed alongside any fingerprint-triggered rebuild)
     writeScalarFile(embeddings.sparkSession, dir, "_graft_maxnorm", m.toString)
-  }
-
-  /** MIPS top-k over an [[ensurePartitionedMips]] layout: the query
-    * zero-augments, the probe partition-prunes exactly like
-    * [[topKPartitioned]] (nearest augmented centroids by L2), and the
-    * score is the raw inner product (see [[augmented]]) — highest
-    * first, ties by vec_id ([[Knn.mipsTopK]] semantics on the pruned
-    * scale path).
-    */
-  def mipsTopKPartitioned(spark: org.apache.spark.sql.SparkSession, dir: String,
-                          queries: DataFrame, k: Int, nprobe: Int,
-                          roundTo: Int = 6): DataFrame = {
-    val (stored, cents) = readLayoutWithCentroids(spark, dir)
-    val qa = augmentedQuery(queries)
-    val probed = cents.crossJoin(broadcast(qa))
-      .select(col("centroid_id"),
-        l2Distance(col("centroid_vec"), col("query_vec")).as("qdist"))
-      .orderBy(col("qdist"), col("centroid_id"))
-      .limit(nprobe)
-      .collect().map(_.getLong(0))
-    stored
-      .filter(col("cell").isin(probed: _*)) // partition-pruned
-      .crossJoin(broadcast(qa))
-      .select(col("vec_id"),
-        round(dotProduct(col("embedding"), col("query_vec")), roundTo).as("ip"))
-      .orderBy(col("ip").desc, col("vec_id"))
-      .limit(k)
-  }
-
-  /** BATCH MIPS top-k over an [[ensurePartitionedMips]] layout: queries
-    * zero-augment (keeping their ids), the probe machinery is
-    * [[topKPartitionedBatch]]'s (one pruned scan for the whole batch),
-    * and the score is the raw inner product ranked highest-first per
-    * query through the bounded-heap aggregate.
-    */
-  def mipsTopKPartitionedBatch(spark: org.apache.spark.sql.SparkSession, dir: String,
-                               queries: DataFrame, k: Int, nprobe: Int,
-                               roundTo: Int = 6): DataFrame = {
-    val qa = queries.select(col("query_id"),
-      concat(transform(col("query_vec"), x => x.cast("double")), array(lit(0.0)))
-        .as("query_vec"))
-    val (probes, pruned) = batchPrunedCandidates(spark, dir, qa, nprobe)
-    val scored = pruned
-      .join(probes, Seq("cell"))
-      .join(broadcast(qa), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dotProduct(col("embedding"), col("query_vec")), roundTo).as("ip"))
-    heapTopKPerQuery(scored, k, "ip", asc = false)
   }
 
   /** Top-k by L2 for one query vector, probing the `nprobe` cells whose

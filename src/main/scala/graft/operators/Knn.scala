@@ -71,7 +71,8 @@ object Knn {
     * norm: recommendation / dual-encoder scores are dot products, not
     * distances). Highest inner product first, ties by id. Same
     * TakeOrderedAndProject shape as [[topK]]; the indexed scale path is
-    * `Ivf.mipsTopKPartitioned` via the augmented-vector reduction.
+    * `Ivf.topKPartitioned` on an `Ivf.ensurePartitionedMips` layout, via
+    * the augmented-vector reduction.
     */
   def mipsTopK(embeddings: DataFrame, queryVec: Column, k: Int,
                idCol: String = "vec_id", vecCol: String = "embedding",

@@ -300,8 +300,8 @@ object Pq {
                 excluded: Option[DataFrame] = None): DataFrame = {
     // data + routing pinned to one manifest version (Ivf contract)
     val (stored, cents) = Ivf.readLayoutWithCentroids(spark, dir)
-    // nprobe cell ids to the driver — partition-filter formation, as in
-    // Ivf.topKPartitioned
+    // nprobe cell ids to the driver — partition-filter formation, ranked
+    // as Ivf.probePlan ranks them
     val probed = cents.crossJoin(broadcast(queries))
       .select(col("centroid_id"),
         l2Distance(col("centroid_vec"), col("query_vec")).as("qdist"))
@@ -320,7 +320,7 @@ object Pq {
     * ([[Tombstones]]): a takedown reaches the compressed serving tier
     * immediately — tombstoned ids never enter ADC scoring, so they can
     * appear in no shortlist and no final result. Same sidecar contract
-    * as `Ivf.topKPartitionedWithDeletes`.
+    * as `Ivf.topKPartitioned`, which always excludes them.
     */
   def ivfpqTopKWithDeletes(spark: SparkSession, dir: String, queries: DataFrame,
                            k: Int, nprobe: Int, roundTo: Int = 6): DataFrame =

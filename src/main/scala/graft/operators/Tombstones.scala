@@ -44,11 +44,19 @@ private[graft] object Tombstones {
     if (!fs.exists(p)) record(spark, dir, ids)
   }
 
-  /** Current tombstones (distinct), or None if none recorded. */
+  /** Current tombstones (distinct `vec_id` longs), or None if none
+    * recorded. The ids are read when this is called and come back as a
+    * local relation: a frame planned on them still runs after a
+    * compaction [[clear]]s the sidecar, and serves the set it was
+    * planned with.
+    */
   def ids(spark: SparkSession, dir: String): Option[DataFrame] = {
+    import spark.implicits._
     val p = new org.apache.hadoop.fs.Path(path(dir))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(path(dir)).distinct()) else None
+    if (!fs.exists(p)) None
+    else Some(spark.read.parquet(path(dir)).select(col("vec_id").cast("long"))
+      .filter(col("vec_id").isNotNull).as[Long].collect().distinct.toSeq.toDF("vec_id"))
   }
 
   /** Drop the sidecar — the last step of a compaction. */

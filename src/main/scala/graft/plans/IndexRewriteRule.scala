@@ -725,7 +725,7 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
   }
 
   /** The query's nprobe nearest centroid ids, ranked exactly as
-    * `Ivf.topKWith`'s probe: sqrt of the in-order (a-b)² double fold
+    * `Ivf.probePlan` and `Ivf.topKWith`'s probe rank them: sqrt of the in-order (a-b)² double fold
     * (same IEEE ops as [[L2DistanceSqExpr]] + SQRT), ascending, ties by
     * centroid id.
     */

@@ -1148,7 +1148,7 @@ object AnnBench {
     val tI = System.nanoTime()
     Ivf.ensurePartitionedWith(emb, cents, idir, tag = "scale_c64")
     val ivfBuildSec = (System.nanoTime() - tI) / 1e9
-    Ivf.topKPartitionedBatch(spark, idir, qs.limit(32), 10, nprobe = 8)
+    Ivf.topKPartitioned(spark, idir, qs.limit(32), 10, nprobe = 8)
       .write.format("noop").mode("overwrite").save() // warm-up
     // Swept over batch size: flat-IVF batch cost is candidate-PAIR
     // proportional (batch × nprobe/C × N rows through the score join),
@@ -1161,7 +1161,7 @@ object AnnBench {
     val ivfServes = Seq(nQueries / 10, nQueries).map { bq =>
       val batch = qs.filter(col("query_id") < bq)
       val t = System.nanoTime()
-      Ivf.topKPartitionedBatch(spark, idir, batch, 10, nprobe = 8)
+      Ivf.topKPartitioned(spark, idir, batch, 10, nprobe = 8)
         .write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t) / 1e9
       s"""{"batch":$bq,"serve_sec":${fmt(sec, 2)},"queries_per_sec":${(bq / sec).toInt}}"""
@@ -1182,7 +1182,7 @@ object AnnBench {
       s"""{"batch":$bq,"serve_sec":${fmt(sec, 2)},"queries_per_sec":${(bq / sec).toInt}}"""
     }
     val ivfRecall = Hnsw.recallOf(
-      Ivf.topKPartitionedBatch(spark, idir, sample, 10, nprobe = 8), emb, sample, 10)
+      Ivf.topKPartitioned(spark, idir, sample, 10, nprobe = 8), emb, sample, 10)
       .agg(avg(col("recall"))).head().getDouble(0)
     val ivfBatch =
       s"""{"cells":64,"nprobe":8,"build_sec":${fmt(ivfBuildSec, 2)},""" +

@@ -73,6 +73,32 @@ class CellSnapshotSpec extends AnyFunSuite {
     assert(CellSnapshot.version(spark, dir).exists(_ >= 2), "each compaction publishes a new version")
   }
 
+  test("IVF: tombstoned top-k and range frames planned before a compaction or insert serve their planned rows after it") {
+    val dir = Files.createTempDirectory("snap_ivf_sidecars").toString
+    Ivf.writePartitionedWith(emb, Ivf.centroids(emb, C), dir)
+    Ivf.recordDeletes(spark, dir, delIds.toDF("vec_id"))
+    def topK() = Ivf.topKPartitioned(spark, dir, oneQuery, 10, nprobe = C)
+    def range() = Ivf.rangeSearch(spark, dir, oneQuery, 8.0)
+
+    // frames built now, collected only after the maintenance below;
+    // each must return what the same call returns when collected at once
+    val (topKFrame, rangeFrame) = (topK(), range())
+    val (topKRows, rangeRows) = (single(topK()), single(range()))
+    assert(topKRows.nonEmpty && rangeRows.nonEmpty)
+    assert((topKRows ++ rangeRows).forall(r => !delIds.contains(r._1)))
+    // clears the `_deletes` sidecar and drops `_radii`
+    Ivf.compactPartitioned(spark, dir)
+    assert(single(topKFrame) === topKRows, "a tombstoned top-k planned before compaction")
+    assert(single(rangeFrame) === rangeRows, "a range search planned before compaction")
+
+    val preInsert = range()
+    val preInsertRows = single(range())
+    // drops `_radii` again
+    Ivf.insertInto(spark, dir, emb.filter(col("vec_id") < 20)
+      .select((col("vec_id") + 1000).as("vec_id"), col("embedding")))
+    assert(single(preInsert) === preInsertRows, "a range search planned before an insert")
+  }
+
   test("IVF: time-travel reads reproduce each published version exactly, through later compactions") {
     val dir = Files.createTempDirectory("snap_tt").toString
     Ivf.writePartitionedWith(emb, Ivf.centroids(emb, C), dir)

@@ -288,8 +288,8 @@ class HnswSpec extends AnyFunSuite {
     def groupBatch(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
-    val batch = groupBatch(Ivf.topKPartitionedBatch(spark, dir, qs, k = 5, nprobe = 2))
-    val batchPred = groupBatch(Ivf.topKPartitionedBatch(spark, dir, qs, k = 5, nprobe = 2,
+    val batch = groupBatch(Ivf.topKPartitioned(spark, dir, qs, k = 5, nprobe = 2))
+    val batchPred = groupBatch(Ivf.topKPartitioned(spark, dir, qs, k = 5, nprobe = 2,
       predicate = Some(col("vec_id") >= 20)))
     qids.foreach { qid =>
       val q1 = emb.filter(col("vec_id") === qid)
@@ -312,13 +312,13 @@ class HnswSpec extends AnyFunSuite {
     val qids = Seq(3L, 7L, 11L)
     val qs = emb.filter(col("vec_id").isin(qids: _*))
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-    val batch = Ivf.cosineTopKPartitionedBatch(spark, dir, qs, k = 5, nprobe = 2).collect()
+    val batch = Ivf.topKPartitioned(spark, dir, qs, k = 5, nprobe = 2).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
     qids.foreach { qid =>
       val q1 = emb.filter(col("vec_id") === qid)
         .select(perturbQuery(col("embedding")).as("query_vec"))
-      val single = Ivf.cosineTopKPartitioned(spark, dir, q1, 5, nprobe = 2).collect()
+      val single = Ivf.topKPartitioned(spark, dir, q1, 5, nprobe = 2).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(batch(qid) === single,
         s"batch cosine for query $qid must equal the single-query probe result")

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -65,24 +66,38 @@ class IvfDeleteSpec extends AnyFunSuite {
       .distinct().collect().map(_.getLong(0)).toSet
 
   test("tombstoned ids vanish from single AND batch serving; results == layout rebuilt without them") {
-    val dir = Files.createTempDirectory("ivf_del_serve").toString
-    val cents = Ivf.centroids(emb, C)
-    Ivf.writePartitionedWith(emb, cents, dir)
-    Ivf.recordDeletes(spark, dir, delIds.toDF("vec_id"))
+    // every layout kind, stored the way its build stores it; MIPS
+    // augments with the FULL corpus's max norm on both sides
+    val m = Ivf.maxNormOf(emb)
+    val kinds = Seq[(String, DataFrame => DataFrame)](
+      "plain" -> (df => df), "cosine" -> Ivf.normalized, "mips" -> (df => Ivf.augmentedWith(df, m)))
+    for ((kind, stored) <- kinds) {
+      val cents = Ivf.centroids(stored(emb), C)
+      val dir = Files.createTempDirectory(s"ivf_del_serve_$kind").toString
+      Ivf.writePartitionedWith(stored(emb), cents, dir, kind)
+      // the takedown includes each query's best hit, so the exclusion
+      // shows in every result
+      val best = Ivf.topKPartitioned(spark, dir, queries, 1, nprobe = 3)
+        .collect().map(_.getLong(1)).toSeq
+      val dels = delIds ++ best
+      Ivf.recordDeletes(spark, dir, dels.toDF("vec_id"))
 
-    val got = single(Ivf.topKPartitionedWithDeletes(spark, dir, oneQuery, 10, nprobe = 3))
-    assert(got.forall(r => !delIds.contains(r._1)), "deleted ids must never be returned")
+      // vs the SAME centroids over the source minus the deleted rows —
+      // identical probe geometry, so serving under tombstones must match
+      val cleanDir = Files.createTempDirectory(s"ivf_del_clean_$kind").toString
+      Ivf.writePartitionedWith(stored(emb.filter(!col("vec_id").isin(dels: _*))), cents,
+        cleanDir, kind)
 
-    // vs the SAME centroids over the source minus the deleted rows —
-    // identical probe geometry, so serving under tombstones must match
-    val cleanDir = Files.createTempDirectory("ivf_del_clean").toString
-    Ivf.writePartitionedWith(emb.filter(!col("vec_id").isin(delIds: _*)), cents, cleanDir)
-    assert(got === single(Ivf.topKPartitioned(spark, cleanDir, oneQuery, 10, nprobe = 3)),
-      "tombstone serving must equal a layout built without the deleted rows")
-
-    assert(batch(Ivf.topKPartitionedBatchWithDeletes(spark, dir, queries, 10, nprobe = 3))
-      === batch(Ivf.topKPartitionedBatch(spark, cleanDir, queries, 10, nprobe = 3)),
-      "batch tombstone serving must equal the clean layout's batch results")
+      val got = single(Ivf.topKPartitioned(spark, dir, oneQuery, 10, nprobe = 3))
+      assert(got.forall(r => !dels.contains(r._1)), s"$kind: deleted ids must never be returned")
+      assert(got === single(Ivf.topKPartitioned(spark, cleanDir, oneQuery, 10, nprobe = 3)),
+        s"$kind single: tombstone serving must equal a layout built without the deleted rows")
+      val clean = batch(Ivf.topKPartitioned(spark, cleanDir, queries, 10, nprobe = 3))
+      assert(batch(Ivf.topKPartitioned(spark, dir, queries, 10, nprobe = 3)) === clean,
+        s"$kind batch: tombstone serving must equal the clean layout's batch results")
+      assert(batch(Ivf.topKPartitionedBatchFused(spark, dir, queries, 10, nprobe = 3)) === clean,
+        s"$kind fused: tombstone serving must equal the clean layout's batch results")
+    }
   }
 
   test("compaction rewrites only affected cells; untouched cells byte-identical; meta invalidated") {
@@ -112,7 +127,7 @@ class IvfDeleteSpec extends AnyFunSuite {
 
     // post-compaction serving (no tombstones left) == pre-compaction
     // serving under tombstones
-    val got = single(Ivf.topKPartitionedWithDeletes(spark, dir, oneQuery, 10, nprobe = 3))
+    val got = single(Ivf.topKPartitioned(spark, dir, oneQuery, 10, nprobe = 3))
     val cleanDir = Files.createTempDirectory("ivf_del_compact_clean").toString
     Ivf.writePartitionedWith(emb.filter(!col("vec_id").isin(delIds: _*)),
       Ivf.centroids(emb, C), cleanDir)

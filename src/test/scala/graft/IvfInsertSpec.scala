@@ -116,8 +116,8 @@ class IvfInsertSpec extends AnyFunSuite {
     val cosFull = Files.createTempDirectory("cos_ins_full").toString
     Ivf.ensurePartitionedWith(Ivf.normalized(emb), cosCents, cosFull,
       tag = "cosinsfull", kind = "cosine")
-    assert(single(Ivf.cosineTopKPartitioned(spark, cosDir, oneQuery, 10, nprobe = C))
-      === single(Ivf.cosineTopKPartitioned(spark, cosFull, oneQuery, 10, nprobe = C)),
+    assert(single(Ivf.topKPartitioned(spark, cosDir, oneQuery, 10, nprobe = C))
+      === single(Ivf.topKPartitioned(spark, cosFull, oneQuery, 10, nprobe = C)),
       "insert-grown cosine serving must equal the single-pass layout")
     assert(spark.read.parquet(cosDir).count() === emb.count())
 
@@ -140,19 +140,28 @@ class IvfInsertSpec extends AnyFunSuite {
     Ivf.ensurePartitionedMips(emb, C, mipsFull)
     // same m on both sides, so serving geometry matches a single-pass
     // build up to centroid seeding; compare against the EXACT answer
-    assert(single(Ivf.mipsTopKPartitioned(spark, mipsDir2, oneQuery, 10, nprobe = C))
-      === single(Ivf.mipsTopKPartitioned(spark, mipsFull, oneQuery, 10, nprobe = C)),
+    assert(single(Ivf.topKPartitioned(spark, mipsDir2, oneQuery, 10, nprobe = C))
+      === single(Ivf.topKPartitioned(spark, mipsFull, oneQuery, 10, nprobe = C)),
       "insert-grown MIPS serving must equal the single-pass layout at nprobe=C")
     assert(spark.read.parquet(mipsDir2).count() === emb.count())
 
-    // kind guard: a code layout holds no vectors to append to — the
-    // error names the kind the layout recorded
+    // kind guards: a code layout holds no vectors to append to or to
+    // score — every vector entry point's error names the recorded kind
     val sqDir = Files.createTempDirectory("ivf_ins_guard").toString
     val (lo, hi) = Sq.bounds(emb)
     Sq.ensureEncodedPartitioned(emb, cents, lo, hi, sqDir)
-    assert(intercept[IllegalArgumentException] {
-      Ivf.insertInto(spark, sqDir, fresh)
-    }.getMessage.contains("'ivfsq8'"))
+    val resDir = Files.createTempDirectory("ivf_ins_guard_res").toString
+    val resBooks = Pq.codebooks(Pq.residuals(emb, cents).select(col("vec_id"), col("embedding")),
+      4, 2, 8, 1, seedOffset = C)
+    Pq.ensureEncodedPartitionedResidual(emb, cents, resBooks, 4, 2, resDir)
+    val batchQuery = oneQuery.withColumn("query_id", lit(0L))
+    for ((dir, kind) <- Seq(sqDir -> "'ivfsq8'", resDir -> "'pq_residual'");
+         (op, call) <- Seq[(String, () => Any)](
+           "insertInto" -> (() => Ivf.insertInto(spark, dir, fresh)),
+           "topKPartitioned" -> (() => Ivf.topKPartitioned(spark, dir, oneQuery, 10, C)),
+           "topKPartitionedBatchFused" ->
+             (() => Ivf.topKPartitionedBatchFused(spark, dir, batchQuery, 10, C))))
+      assert(intercept[IllegalArgumentException](call()).getMessage.contains(kind), s"$op on $kind")
   }
 
   test("a zero-norm row is rejected by vec_id when a cosine layout is built or grown") {

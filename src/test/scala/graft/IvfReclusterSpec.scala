@@ -204,7 +204,7 @@ class IvfReclusterSpec extends AnyFunSuite {
       tag = "cosrecfresh", kind = "cosine")
 
     def serve(d: String, np: Int) =
-      Ivf.cosineTopKPartitioned(spark, d, oneQuery, 10, np)
+      Ivf.topKPartitioned(spark, d, oneQuery, 10, np)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     for (np <- Seq(1, 2, C))
       assert(serve(dir, np) == serve(freshDir, np),
@@ -254,7 +254,7 @@ class IvfReclusterSpec extends AnyFunSuite {
       var deleted = Set.empty[Long]
 
       def check(step: String): Unit = {
-        val got = Ivf.topKPartitionedWithDeletes(spark, dir, oneQuery, 10, nprobe = C)
+        val got = Ivf.topKPartitioned(spark, dir, oneQuery, 10, nprobe = C)
           .collect().map(_.getLong(0)).toSeq
         val want = emb.filter(col("vec_id").isin((live -- deleted).toSeq: _*))
           .crossJoin(broadcast(oneQuery))

@@ -96,6 +96,25 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(after === before, s"per-call jobs must not grow with published generations")
   }
 
+  test("per-call jobs of fused and single-query IVF top-k are the same on plain, cosine and MIPS layouts") {
+    val root = Files.createTempDirectory("job_budget_kinds").toString
+    val dirs = Seq(s"$root/plain", s"$root/cosine", s"$root/mips")
+    Ivf.writePartitionedWith(emb, Ivf.centroids(emb, C), dirs(0))
+    Ivf.ensurePartitionedCosine(emb, C, dirs(1))
+    Ivf.ensurePartitionedMips(emb, C, dirs(2))
+    val oneQuery = queries.filter(col("query_id") === 0).drop("query_id")
+    def measure(): Seq[Int] =
+      dirs.map(d => callJobs(Ivf.topKPartitionedBatchFused(spark, d, queries, 10, 3))) ++
+        dirs.map(d => callJobs(Ivf.topKPartitioned(spark, d, oneQuery, 10, 3)))
+    measure()
+    // fused: the plain layout's 5 of the first test on every kind;
+    // single query: 6 on every kind, as many as the per-kind single
+    // forms with their in-plan probe collect measured on this layout —
+    // the kind dispatch and the batch of one add no job
+    assert(measure() === Seq(5, 5, 5, 6, 6, 6),
+      "per-call jobs (fused plain/cosine/mips, single plain/cosine/mips)")
+  }
+
   test("a layout read infers one schema however many compactions published") {
     val dir = Files.createTempDirectory("job_budget_read").toString
     Ivf.writePartitionedWith(emb, Ivf.centroids(emb, C), dir)

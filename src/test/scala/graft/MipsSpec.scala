@@ -26,6 +26,11 @@ class MipsSpec extends AnyFunSuite {
   private lazy val query = emb.filter(col("vec_id") === 3L)
     .select(perturbQuery(col("embedding")).as("query_vec"))
 
+  /** Zero-augment a `(query_vec)` frame: `[q, 0]` as doubles. */
+  private def augmentedQuery(q: org.apache.spark.sql.DataFrame) =
+    q.withColumn("query_vec",
+      concat(transform(col("query_vec"), x => x.cast("double")), array(lit(0.0))))
+
   test("augmented: extra coordinate is sqrt(M^2 - |x|^2), clamped, never NaN") {
     val aug = Ivf.augmented(emb).cache()
     val rows = aug.select(col("vec_id"), col("embedding")).collect()
@@ -44,7 +49,7 @@ class MipsSpec extends AnyFunSuite {
 
   test("augmented-space L2 ordering == raw inner-product ordering (the reduction identity)") {
     val aug = Ivf.augmented(emb)
-    val qa = Ivf.augmentedQuery(query)
+    val qa = augmentedQuery(query)
     val byAugL2 = aug.crossJoin(broadcast(qa))
       .select(col("vec_id"), l2DistanceSq(col("embedding"), col("query_vec")).as("d2"))
       .orderBy(col("d2"), col("vec_id"))
@@ -60,7 +65,7 @@ class MipsSpec extends AnyFunSuite {
   test("full-beam (nprobe = C) indexed MIPS == exact brute-force MIPS, scores included") {
     val dir = java.nio.file.Files.createTempDirectory("mips_full").toString
     Ivf.ensurePartitionedMips(emb, C, s"$dir/idx")
-    val got = Ivf.mipsTopKPartitioned(spark, s"$dir/idx", query, k = 10, nprobe = C)
+    val got = Ivf.topKPartitioned(spark, s"$dir/idx", query, k = 10, nprobe = C)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val exact = Knn.mipsTopK(emb.crossJoin(broadcast(query)), col("query_vec"), 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -72,7 +77,7 @@ class MipsSpec extends AnyFunSuite {
     Ivf.ensurePartitionedMips(emb, C, s"$dir/idx")
     val qs = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-    val got = Ivf.mipsTopKPartitionedBatch(spark, s"$dir/idx", qs, k = 10, nprobe = C)
+    val got = Ivf.topKPartitioned(spark, s"$dir/idx", qs, k = 10, nprobe = C)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val exact = (0L until 8L).flatMap { qid =>
       val q = emb.filter(col("vec_id") === qid)
@@ -86,7 +91,7 @@ class MipsSpec extends AnyFunSuite {
   test("partial probe returns a subset of candidates ranked identically to exact on overlap") {
     val dir = java.nio.file.Files.createTempDirectory("mips_part").toString
     Ivf.ensurePartitionedMips(emb, C, s"$dir/idx")
-    val got = Ivf.mipsTopKPartitioned(spark, s"$dir/idx", query, k = 10, nprobe = 2)
+    val got = Ivf.topKPartitioned(spark, s"$dir/idx", query, k = 10, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(got.length === 10)
     // scores must be TRUE inner products (no augmented-space artifacts)
@@ -127,7 +132,7 @@ class MipsSpec extends AnyFunSuite {
 
     // pruning evidence: re-derive the eligible set the way
     // rangeSearch does on a mips layout and confirm some cell was skipped
-    val qa = Ivf.augmentedQuery(q)
+    val qa = augmentedQuery(q)
     val cents = spark.read.parquet(s"$dir/_centroids")
     val radii = spark.read.parquet(s"$dir/_radii")
     val lb = l2Distance(col("centroid_vec"), col("query_vec")) - col("radius")

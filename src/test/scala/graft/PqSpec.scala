@@ -335,7 +335,7 @@ class PqSpec extends AnyFunSuite {
     val losslessBooks = Pq.codebooks(normed, M, SubDim, c = 8, iters = 0)
     val q = tiny.filter(col("vec_id") === 3)
       .select(perturbQuery(col("embedding")).as("query_vec"))
-    val qn = graft.operators.Ivf.normalizedQuery(q)
+    val qn = q.select(normalizeQuery(col("query_vec")).as("query_vec"))
     val adcIds = Pq.adcTopK(normed, losslessBooks, qn, M, SubDim, k = 8).collect()
       .map(_.getLong(0)).toSeq
     val exactIds = tiny.crossJoin(broadcast(q))

@@ -531,7 +531,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       .select(col("vec_id").as("query_id"),
         graft.functions.VectorFunctions.perturbQuery(col("embedding")).as("query_vec"))
     val c = Ivf.centroidsOf(spark, polDir).count().toInt
-    def rows(dir: String) = Ivf.topKPartitionedBatch(spark, dir, qs, 10, nprobe = c)
+    def rows(dir: String) = Ivf.topKPartitioned(spark, dir, qs, 10, nprobe = c)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(rows(polDir) === rows(freshDir),
       "streamed+reclustered serving must equal a fresh build with the retrained centroids")
@@ -567,7 +567,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
 
     // nprobe = C: the streamed layouts must serve the exact answers
     // over the full corpus (cell provenance cannot matter)
-    val gotCos = Ivf.cosineTopKPartitioned(spark, cosDir, oneQuery, 10, nprobe = 8)
+    val gotCos = Ivf.topKPartitioned(spark, cosDir, oneQuery, 10, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val expCos = graft.operators.Knn.cosineTopK(
         all.toDF("vec_id", "embedding").crossJoin(broadcast(oneQuery)),
@@ -575,7 +575,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(gotCos === expCos, "streamed cosine layout must serve the exact answer at nprobe=C")
 
-    val gotMips = Ivf.mipsTopKPartitioned(spark, mipsDir, oneQuery, 10, nprobe = 8)
+    val gotMips = Ivf.topKPartitioned(spark, mipsDir, oneQuery, 10, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val expMips = graft.operators.Knn.mipsTopK(
         all.toDF("vec_id", "embedding").crossJoin(broadcast(oneQuery)),

@@ -68,7 +68,7 @@ class TopKAggSpec extends AnyFunSuite {
     val qs = emb.filter(col("vec_id") < 40)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
     for (nprobe <- Seq(2, 4, 16)) {
-      val decl = Ivf.topKPartitionedBatch(spark, s"$dir/idx", qs, 10, nprobe)
+      val decl = Ivf.topKPartitioned(spark, s"$dir/idx", qs, 10, nprobe)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val fused = Ivf.topKPartitionedBatchFused(spark, s"$dir/idx", qs, 10, nprobe)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -87,16 +87,38 @@ class TopKAggSpec extends AnyFunSuite {
     val qs = emb.filter(col("vec_id") < 40)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
     for (nprobe <- Seq(2, 16)) {
-      val cosD = Ivf.cosineTopKPartitionedBatch(spark, s"$dir/cos", qs, 10, nprobe)
+      val cosD = Ivf.topKPartitioned(spark, s"$dir/cos", qs, 10, nprobe)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val cosF = Ivf.cosineTopKPartitionedBatchFused(spark, s"$dir/cos", qs, 10, nprobe)
+      val cosF = Ivf.topKPartitionedBatchFused(spark, s"$dir/cos", qs, 10, nprobe)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(cosF === cosD, s"cosine nprobe=$nprobe")
-      val mipsD = Ivf.mipsTopKPartitionedBatch(spark, s"$dir/mips", qs, 10, nprobe)
+      val mipsD = Ivf.topKPartitioned(spark, s"$dir/mips", qs, 10, nprobe)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val mipsF = Ivf.mipsTopKPartitionedBatchFused(spark, s"$dir/mips", qs, 10, nprobe)
+      val mipsF = Ivf.topKPartitionedBatchFused(spark, s"$dir/mips", qs, 10, nprobe)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(mipsF === mipsD, s"mips nprobe=$nprobe")
+    }
+  }
+
+  test("a one-row (query_vec) frame == the batch of one, row for row and in order, per kind") {
+    val emb = (0L until 200L).map { i =>
+      val rnd = new scala.util.Random(i)
+      (i, Array.fill(16)(rnd.nextFloat() * 100f))
+    }.toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("ivf_batch_of_one").toString
+    Ivf.ensurePartitioned(emb, 16, s"$dir/plain")
+    Ivf.ensurePartitionedCosine(emb, 16, s"$dir/cosine")
+    Ivf.ensurePartitionedMips(emb, 16, s"$dir/mips")
+    for (kind <- Seq("plain", "cosine", "mips"); qid <- Seq(3L, 17L); nprobe <- Seq(2, 16)) {
+      val one = emb.filter(col("vec_id") === qid).select(perturbQuery(col("embedding")).as("query_vec"))
+      val single = Ivf.topKPartitioned(spark, s"$dir/$kind", one, 10, nprobe)
+      val batch = Ivf.topKPartitioned(spark, s"$dir/$kind", one.withColumn("query_id", lit(qid)),
+        10, nprobe)
+      assert(single.columns.toSeq === batch.columns.toSeq.tail, s"$kind: (vec_id, score) out")
+      val rows = single.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(rows.length === 10)
+      assert(rows === batch.collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq,
+        s"$kind q=$qid nprobe=$nprobe")
     }
   }
 
@@ -130,12 +152,12 @@ class TopKAggSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     for (k <- Seq(1, 10, 50)) {
       val l2F = rows(Ivf.topKPartitionedBatchFused(spark, s"$dir/l2", qs, k, 4))
-      assert(l2F === rows(Ivf.topKPartitionedBatch(spark, s"$dir/l2", qs, k, 4)), s"l2 k=$k")
+      assert(l2F === rows(Ivf.topKPartitioned(spark, s"$dir/l2", qs, k, 4)), s"l2 k=$k")
       assert(l2F.size === 2 * k)
-      assert(rows(Ivf.cosineTopKPartitionedBatchFused(spark, s"$dir/cos", qDir, k, 4)) ===
-        rows(Ivf.cosineTopKPartitionedBatch(spark, s"$dir/cos", qDir, k, 4)), s"cosine k=$k")
-      assert(rows(Ivf.mipsTopKPartitionedBatchFused(spark, s"$dir/mips", qDir, k, 4)) ===
-        rows(Ivf.mipsTopKPartitionedBatch(spark, s"$dir/mips", qDir, k, 4)), s"mips k=$k")
+      assert(rows(Ivf.topKPartitionedBatchFused(spark, s"$dir/cos", qDir, k, 4)) ===
+        rows(Ivf.topKPartitioned(spark, s"$dir/cos", qDir, k, 4)), s"cosine k=$k")
+      assert(rows(Ivf.topKPartitionedBatchFused(spark, s"$dir/mips", qDir, k, 4)) ===
+        rows(Ivf.topKPartitioned(spark, s"$dir/mips", qDir, k, 4)), s"mips k=$k")
     }
   }
 }
