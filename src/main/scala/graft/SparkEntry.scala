@@ -815,7 +815,7 @@ object SparkEntry {
         SELECT query_id, vec_id, dist FROM scored
         QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) <= $k"""
 
-  /** BATCH IVF-PQ top-k (mirrors Pq.ivfpqTopKBatch): per-query coarse
+  /** BATCH IVF-PQ top-k (mirrors Pq.topK on a `pq` layout, batch): per-query coarse
     * probes; a vector scores against a query only when its coarse cell
     * is among that query's `nprobe` nearest.
     */
@@ -842,7 +842,7 @@ object SparkEntry {
         SELECT query_id, vec_id, dist FROM scored
         QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) <= $k"""
 
-  /** BATCH IVF-PQ + exact re-rank (mirrors Pq.ivfpqTopKRerankBatch):
+  /** BATCH IVF-PQ + exact re-rank (mirrors Pq.topK with rerank, batch):
     * the [[duckIvfPqTopKBatch]] pipeline truncated at `shortlist` per
     * query, then true L2 against the raw vectors of the shortlisted
     * ids orders each query's final top-k.
@@ -878,7 +878,7 @@ object SparkEntry {
         QUALIFY row_number() OVER (PARTITION BY s.query_id
           ORDER BY dist, s.vec_id) <= $k"""
 
-  /** IVF-PQ top-k (mirrors Pq.ivfpqTopK over Pq.ensureEncodedPartitioned
+  /** IVF-PQ top-k (mirrors Pq.topK over Pq.ensureEncodedPartitioned
     * with SEED coarse centroids, Ivf.centroids): probe the `nprobe`
     * coarse cells nearest the query, ADC-score only vectors assigned to
     * probed cells. The coarse assignment is the Ivf.assignWith argmin
@@ -906,7 +906,7 @@ object SparkEntry {
         GROUP BY e.vec_id
         ORDER BY dist, e.vec_id LIMIT $k"""
 
-  /** IVF-PQ + exact re-rank (mirrors Pq.ivfpqTopKRerank): the
+  /** IVF-PQ + exact re-rank (mirrors Pq.topK with rerank): the
     * [[duckIvfPqTopK]] pipeline truncated at `shortlist` candidates,
     * then true L2 against the raw vectors of ONLY those ids orders the
     * final top-k.
@@ -957,8 +957,9 @@ object SparkEntry {
 
   /** Per-CELL residual-query LUT CTEs (`rlutall(cell, subspace, code,
     * d2)`): the ADC table of the query's residual `q − centroid(cell)`
-    * against the residual codebooks — mirrors Pq.residualLuts. Requires
-    * `q(query_vec)`, `coarse` and the `s{s}c{iters}` codebook CTEs.
+    * against the residual codebooks — mirrors the `pq_residual` LUT of
+    * Pq.topK. Requires `q(query_vec)`, `coarse` and the `s{s}c{iters}`
+    * codebook CTEs.
     */
   private def duckResidualLutCtes(m: Int, subDim: Int, iters: Int): String = {
     val luts = (0 until m).map { s =>
@@ -985,7 +986,7 @@ object SparkEntry {
     s"$luts,\n        rlutall AS ($lutAll)"
   }
 
-  /** Residual IVF-PQ top-k (mirrors Pq.ivfpqResidualTopK over
+  /** Residual IVF-PQ top-k (mirrors Pq.topK over
     * Pq.ensureEncodedPartitionedResidual): codes quantize the residual
     * x − centroid(cell); scoring joins each probed cell's codes with
     * that cell's residual-query LUT — the true ADC identity
@@ -1035,7 +1036,7 @@ object SparkEntry {
         GROUP BY e.vec_id
         ORDER BY dist, e.vec_id LIMIT $k"""
 
-  /** BATCH residual IVF-PQ top-k (mirrors Pq.ivfpqResidualTopKBatch). */
+  /** BATCH residual IVF-PQ top-k (mirrors Pq.topK on a `pq_residual` layout, batch). */
   private def duckIvfPqResidualTopKBatch(m: Int, subDim: Int, c: Int, iters: Int,
                                          coarseC: Int, k: Int, nprobe: Int,
                                          qn: Int): String =
@@ -1061,7 +1062,7 @@ object SparkEntry {
         QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id) <= $k"""
 
   /** BATCH residual IVF-PQ + exact re-rank (mirrors
-    * Pq.ivfpqResidualTopKRerankBatch): the batch residual pipeline
+    * Pq.topK with rerank on a `pq_residual` layout): the batch residual pipeline
     * truncated at `shortlist` per query, then true L2 per query.
     */
   private def duckIvfPqResidualRerankTopKBatch(m: Int, subDim: Int, c: Int,
@@ -1095,7 +1096,7 @@ object SparkEntry {
         JOIN qb q ON q.query_id = sl.query_id
         QUALIFY row_number() OVER (PARTITION BY sl.query_id ORDER BY dist, e.vec_id) <= $k"""
 
-  /** BATCH IVF-SQ8 + exact re-rank (mirrors Sq.ivfsqTopKRerankBatch). */
+  /** BATCH IVF-SQ8 + exact re-rank (mirrors Pq.topK with rerank on an `ivfsq8` layout). */
   private def duckIvfSqRerankTopKBatch(coarseC: Int, k: Int, nprobe: Int,
                                        qn: Int, shortlist: Int): String =
     s"""WITH $duckSqCtes,
@@ -1127,7 +1128,7 @@ object SparkEntry {
         QUALIFY row_number() OVER (PARTITION BY sl.query_id ORDER BY dist, e.vec_id) <= $k"""
 
   /** Residual IVF-PQ + exact re-rank (mirrors
-    * Pq.ivfpqResidualTopKRerank): the [[duckIvfPqResidualTopK]]
+    * Pq.topK with rerank on a `pq_residual` layout): the [[duckIvfPqResidualTopK]]
     * pipeline truncated at `shortlist`, then true L2 on the raw vectors
     * of only those ids.
     */
@@ -2529,7 +2530,7 @@ object SparkEntry {
       val pdir = pqDir(s, dir, "ivfpq_c16_m4sd16c16i1")
       Pq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 16),
         Pq.codebooksCached(emb, 4, 16, 16, 1, dir), 4, 16, pdir)
-      Pq.ivfpqTopK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4)
+      Pq.topK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4)
     }),
     // RECLUSTER on the compressed tier: build 4/5 on the seed cells,
     // insert 1/5, re-route every live code row onto the offset-100
@@ -2545,7 +2546,7 @@ object SparkEntry {
         emb.filter(pmod(col("vec_id"), lit(5)) === 0),
         Ivf.centroids(emb, 16), Ivf.centroidsFrom(emb, 16, 100),
         Pq.codebooksCached(emb, 4, 16, 16, 1, dir), 4, 16, pdir)
-      Pq.ivfpqTopK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4)
+      Pq.topK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4)
     }),
     // The OPQ-lite rotation through the full COMPRESSED SERVING tier:
     // corpus and query permute (Pq.balancedPerm — orthogonal, so L2
@@ -2565,7 +2566,7 @@ object SparkEntry {
         Pq.codebooksCached(rot, 4, 16, 16, 1, dir, tag = "#perm"), 4, 16, pdir)
       val qrot = queryVecOf(emb, 0)
         .select(Pq.permute(col("query_vec"), perm).as("query_vec"))
-      Pq.ivfpqTopK(s, pdir, qrot, 10, nprobe = 4)
+      Pq.topK(s, pdir, qrot, 10, nprobe = 4)
     }),
     // Takedowns on the COMPRESSED serving tier: tombstoned ids never
     // enter ADC scoring (broadcast anti-join above the pruned code
@@ -2580,7 +2581,7 @@ object SparkEntry {
       // recordOnce: idempotent across bench/verify re-executions
       graft.operators.Tombstones.recordOnce(s, pdir,
         emb.filter(pmod(col("vec_id"), lit(7)) === 0).select("vec_id"))
-      Pq.ivfpqTopKWithDeletes(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4)
+      Pq.topK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4)
     }),
     // The append half on the COMPRESSED tier: fresh rows are encoded
     // with the layout's frozen _codebooks sidecar, assigned with its
@@ -2596,7 +2597,7 @@ object SparkEntry {
         emb.filter(pmod(col("vec_id"), lit(5)) === 0),
         Ivf.centroids(emb, 16), Pq.codebooksCached(emb, 4, 16, 16, 1, dir),
         4, 16, pdir)
-      Pq.ivfpqTopK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4)
+      Pq.topK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4)
     }),
     // RESIDUAL IVF-PQ — the classic Jégou/Douze/Schmid composition in
     // full: codes quantize x − centroid(cell) instead of x. Residual
@@ -2614,7 +2615,7 @@ object SparkEntry {
       Pq.ensureEncodedPartitionedResidual(emb, cents,
         Pq.residualCodebooksCached(emb, cents, 4, 16, 16, 1, dir, tag = "#res16", seedOffset = 16),
         4, 16, pdir)
-      Pq.ivfpqResidualTopK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4)
+      Pq.topK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4)
     }),
     // BATCH residual serving: one scan pruned to the union of probed
     // cells; each candidate meets exactly the (query, cell) residual
@@ -2629,7 +2630,7 @@ object SparkEntry {
         4, 16, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-      Pq.ivfpqResidualTopKBatch(s, pdir, qs, 10, nprobe = 4)
+      Pq.topK(s, pdir, qs, 10, nprobe = 4)
     }),
     // BATCH two-stage residual serving: per-query residual shortlists
     // from one pruned scan, exact rerank through one broadcast join.
@@ -2642,7 +2643,7 @@ object SparkEntry {
         4, 16, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-      Pq.ivfpqResidualTopKRerankBatch(s, pdir, emb, qs, 10, nprobe = 4, shortlist = 30)
+      Pq.topK(s, pdir, qs, 10, nprobe = 4, rerank = Some(Pq.Rerank(emb, 30)))
     }),
     // Two-stage residual serving: residual-ADC shortlist → exact L2
     // re-rank of only the shortlisted raw rows — the production
@@ -2655,8 +2656,7 @@ object SparkEntry {
       Pq.ensureEncodedPartitionedResidual(emb, cents,
         Pq.residualCodebooksCached(emb, cents, 4, 16, 16, 1, dir, tag = "#res16", seedOffset = 16),
         4, 16, pdir)
-      Pq.ivfpqResidualTopKRerank(s, pdir, emb, queryVecOf(emb, 0), 10,
-        nprobe = 4, shortlist = 30)
+      Pq.topK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4, rerank = Some(Pq.Rerank(emb, 30)))
     }),
     // The DEPLOYMENT operating point of the compressed tier: rotation
     // ∘ residual — balance per-subspace energy first (Pq.balancedPerm,
@@ -2677,7 +2677,7 @@ object SparkEntry {
         4, 16, pdir)
       val qrot = queryVecOf(emb, 0)
         .select(Pq.permute(col("query_vec"), perm).as("query_vec"))
-      Pq.ivfpqResidualTopK(s, pdir, qrot, 10, nprobe = 4)
+      Pq.topK(s, pdir, qrot, 10, nprobe = 4)
     }),
     // SCALAR quantization (SQ8) — the training-free compressed tier:
     // per-dim 8-bit levels on exact min/max bounds, encode is one
@@ -2721,7 +2721,7 @@ object SparkEntry {
       val (lo, hi) = sqBounds(emb, dir)
       val pdir = pqDir(s, dir, "ivfsq8_c16")
       Sq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 16), lo, hi, pdir)
-      Sq.ivfsqTopK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4)
+      Pq.topK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4)
     }),
     // BATCH IVF-SQ8: one union-pruned scan for the whole query batch,
     // probe-pair join, bounded-heap rank per query.
@@ -2732,7 +2732,7 @@ object SparkEntry {
       Sq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 16), lo, hi, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-      Sq.ivfsqTopKBatch(s, pdir, qs, 10, nprobe = 4)
+      Pq.topK(s, pdir, qs, 10, nprobe = 4)
     }),
     // BATCH two-stage SQ8 serving: per-query scalar shortlists from
     // one pruned scan, exact rerank through one broadcast join.
@@ -2743,17 +2743,16 @@ object SparkEntry {
       Sq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 16), lo, hi, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-      Sq.ivfsqTopKRerankBatch(s, pdir, emb, qs, 10, nprobe = 4, shortlist = 30)
+      Pq.topK(s, pdir, qs, 10, nprobe = 4, rerank = Some(Pq.Rerank(emb, 30)))
     }),
     // Two-stage SQ8 serving: scalar-ADC shortlist → exact re-rank of
-    // the 30 shortlisted raw rows (id-pushdown scan).
+    // the 30 shortlisted raw rows (broadcast join on vec_id).
     "q_ivfsq_rerank_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val (lo, hi) = sqBounds(emb, dir)
       val pdir = pqDir(s, dir, "ivfsq8_c16")
       Sq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 16), lo, hi, pdir)
-      Sq.ivfsqTopKRerank(s, pdir, emb, queryVecOf(emb, 0), 10, nprobe = 4,
-        shortlist = 30)
+      Pq.topK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4, rerank = Some(Pq.Rerank(emb, 30)))
     }),
     // Token→document mean pooling — the multi-vector table reduced to
     // one embedding per doc before single-vector indexing (the batch
@@ -2965,15 +2964,15 @@ object SparkEntry {
         shortlist = 50)
     }),
     // Two-stage serving: ADC shortlist (codes only) -> exact re-rank
-    // reading raw vectors for ONLY the 30 shortlisted ids (id-pushdown
-    // scan), final order by true L2 — recall recovered from PQ
+    // reading raw vectors for ONLY the 30 shortlisted ids (broadcast
+    // join on vec_id), final order by true L2 — recall recovered from PQ
     // quantization error at R-rows-per-query raw I/O.
     "q_ivfpq_rerank_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = pqDir(s, dir, "ivfpq_c16_m4sd16c16i1")
       Pq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 16),
         Pq.codebooksCached(emb, 4, 16, 16, 1, dir), 4, 16, pdir)
-      Pq.ivfpqTopKRerank(s, pdir, emb, queryVecOf(emb, 0), 10, nprobe = 4, shortlist = 30)
+      Pq.topK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4, rerank = Some(Pq.Rerank(emb, 30)))
     }),
     // BATCH ADC over the same persisted code table: Q queries build
     // their LUTs executor-side (PqLutExpr), the code table is scanned
@@ -2997,11 +2996,11 @@ object SparkEntry {
         Pq.codebooksCached(emb, 4, 16, 16, 1, dir), 4, 16, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-      Pq.ivfpqTopKBatch(s, pdir, qs, 10, nprobe = 4)
+      Pq.topK(s, pdir, qs, 10, nprobe = 4)
     }),
     // BATCH two-stage serving: one pruned code scan picks per-query
-    // shortlists, raw vectors read once for the distinct shortlisted
-    // ids (id-pushdown), exact L2 + one window rank per query.
+    // shortlists, raw vectors meet the shortlisted ids through one
+    // broadcast join, exact L2 + one bounded-heap rank per query.
     "q_ivfpq_rerank_batch_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = pqDir(s, dir, "ivfpq_c16_m4sd16c16i1")
@@ -3009,7 +3008,7 @@ object SparkEntry {
         Pq.codebooksCached(emb, 4, 16, 16, 1, dir), 4, 16, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-      Pq.ivfpqTopKRerankBatch(s, pdir, emb, qs, 10, nprobe = 4, shortlist = 30)
+      Pq.topK(s, pdir, qs, 10, nprobe = 4, rerank = Some(Pq.Rerank(emb, 30)))
     }),
 
     // ---- text analysis ----

@@ -419,9 +419,14 @@ object Ivf {
                       roundTo: Int = 6, predicate: Option[Column] = None): DataFrame = {
     val m = metricOf(spark, dir, "Ivf.topKPartitioned")
     val qs = asBatch(queries, m)
-    val (probes, pruned) = batchPrunedCandidates(spark, dir, qs, nprobe)
+    // data and routing pinned to ONE manifest version: probes formed
+    // from v's centroids prune v's cell scan, never a cross-version mix
+    val (stored, cents) = readLayoutWithCentroids(spark, dir)
+    val plan = probePlan(cents, qs, nprobe)
+    val pruned = stored.filter(col("cell").isin(plan.unionCells: _*))
     val scored = withoutExcluded(predicate.fold(pruned)(pruned.filter), Tombstones.ids(spark, dir))
-      .join(probes, Seq("cell")) // candidate meets only the queries probing its cell
+      // candidate meets only the queries probing its cell
+      .join(broadcast(plan.pairs(spark)), Seq("cell"))
       .join(broadcast(qs), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(m.score(col("embedding"), col("query_vec")), roundTo).as(m.name))
@@ -940,7 +945,7 @@ object Ivf {
       case kind =>
         throw new IllegalArgumentException(
           s"Ivf.insertInto appends to plain, cosine and mips layouts, but $dir is a " +
-            s"'$kind' layout — append through that layout's own insertInto")
+            s"'$kind' layout — append code layouts through Pq.insertInto")
     }
     val cents = centroidsOf(spark, dir)
     CellSnapshot.appendAssigned(spark, dir,
@@ -1148,53 +1153,20 @@ object Ivf {
     java.math.BigDecimal.valueOf(d)
       .setScale(s, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  /** Shared batch-probe machinery: per-query nprobe nearest cells →
-    * `(probes, pruned)` where `probes` is the broadcast
-    * `(query_id, cell)` probe-pair relation and `pruned` is the stored
-    * table partition-pruned to the UNION of all probed cells.
-    *
-    * The pairs come from the driver-side [[ProbePlan]] and ride as a
-    * Q·nprobe-row local relation: the C centroids and the query batch
-    * are collected once (the batch is broadcast to the scoring join
-    * anyway), so forming the probes costs no Spark job beyond the
-    * centroid read, and the probed-cell ids become the partition
-    * filter's literals.
-    */
-  private[operators] def batchPrunedCandidates(spark: org.apache.spark.sql.SparkSession,
-                                               dir: String, queries: DataFrame,
-                                               nprobe: Int): (DataFrame, DataFrame) = {
-    // data and routing pinned to ONE manifest version (see
-    // readLayoutWithCentroids) — probes formed from v's centroids prune
-    // v's cell scan, never a cross-version mix
-    val (probes, pruned, _) = batchPrunedCandidatesWithCents(spark, dir, queries, nprobe)
-    (probes, pruned)
-  }
-
-  /** [[batchPrunedCandidates]] that ALSO returns the centroid table the
-    * probes were formed from — for serving paths that need the
-    * centroids again (e.g. residual LUT construction), pinned to the
-    * same manifest version as the scan.
-    */
-  private[operators] def batchPrunedCandidatesWithCents(
-      spark: org.apache.spark.sql.SparkSession, dir: String, queries: DataFrame,
-      nprobe: Int): (DataFrame, DataFrame, DataFrame) = {
-    val (stored, cents) = readLayoutWithCentroids(spark, dir)
-    val plan = probePlan(cents, queries, nprobe)
-    (broadcast(plan.pairs(spark)), stored.filter(col("cell").isin(plan.unionCells: _*)), cents)
-  }
-
   /** A query batch's probes, formed on the driver: each query's
     * `nprobe` nearest cells (`cells`, aligned with `keys`), the union
     * of probed cells and each cell's query list. A query is named by
     * its key columns (`query_id`, or `(query_id, tok_id)` for token
-    * bags), collected as longs in `keys`. Ranking is the in-plan window
+    * bags), collected as longs in `keys`; `centroids` holds the
+    * collected centroid vectors by id. Ranking is the in-plan window
     * it replaces, exactly: `l2Distance`'s double fold (element order,
     * centroid minus query), distance ascending, NaN last, ties to the
     * smaller `centroid_id`.
     */
   private[operators] final class ProbePlan(
       val keys: Array[Array[Long]], val queryVecs: Array[Array[Double]],
-      val cells: Array[Array[Long]], keyFields: Seq[org.apache.spark.sql.types.StructField],
+      val cells: Array[Array[Long]], centroids: Map[Long, Array[Double]],
+      keyFields: Seq[org.apache.spark.sql.types.StructField],
       cellType: org.apache.spark.sql.types.DataType) {
 
     /** Each query's first key column — its `query_id` in a one-key batch. */
@@ -1218,6 +1190,35 @@ object Ivf {
       val fields = (keyFields.map(_.name) :+ "cell").map(StructField(_, LongType, nullable = false))
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(fields))
         .select(keyFields.map(f => col(f.name).cast(f.dataType)) :+ col("cell").cast(cellType): _*)
+    }
+
+    /** The collected `(query_id, query_vec)` batch as a local relation:
+      * `query_id` typed like the input's first key column, `query_vec`
+      * as the collected doubles (float components widened exactly).
+      */
+    def queries(spark: org.apache.spark.sql.SparkSession): DataFrame =
+      localRelation(spark, keys.indices.map(i =>
+        org.apache.spark.sql.Row(keys(i)(0), queryVecs(i).toSeq)), withCell = false)
+
+    /** One row per probe pair, `(query_id, cell, query_vec)`, where
+      * `query_vec` is the query's residual `q − centroid(cell)` in
+      * doubles — the query side of residual-code scoring.
+      */
+    def residuals(spark: org.apache.spark.sql.SparkSession): DataFrame =
+      localRelation(spark, for (i <- keys.indices; c <- cells(i)) yield {
+        val (q, cv) = (queryVecs(i), centroids(c))
+        org.apache.spark.sql.Row(keys(i)(0), c, Array.tabulate(q.length)(j => q(j) - cv(j)).toSeq)
+      }, withCell = true)
+
+    private def localRelation(spark: org.apache.spark.sql.SparkSession,
+                              rows: Seq[org.apache.spark.sql.Row], withCell: Boolean): DataFrame = {
+      import org.apache.spark.sql.types._
+      val cell = if (withCell) Seq("cell") else Nil
+      val fields = ("query_id" +: cell).map(StructField(_, LongType, nullable = false)) :+
+        StructField("query_vec", ArrayType(DoubleType, containsNull = false), nullable = false)
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(fields))
+        .select((col("query_id").cast(keyFields.head.dataType) +:
+          cell.map(col(_).cast(cellType))) :+ col("query_vec"): _*)
     }
   }
 
@@ -1268,21 +1269,21 @@ object Ivf {
   private[operators] def probePlan(cents: DataFrame, queries: DataFrame, nprobe: Int,
                                    keyCols: Seq[String] = Seq("query_id")): ProbePlan = {
     val (keys, vecs) = collectQueries(queries, keyCols)
-    new ProbePlan(keys, vecs, rankCells(cents, vecs, nprobe, i => keyLabel(keyCols, keys(i))),
-      keyCols.map(queries.schema(_)), cents.schema("centroid_id").dataType)
-  }
-
-  /** Each vector's `nprobe` nearest centroid ids, nearest first (all C
-    * when `nprobe > C`): the C-row `cents` table is collected and every
-    * vector is ranked against every centroid. A vector whose length
-    * differs from the centroids' is rejected, named by `label`.
-    */
-  private def rankCells(cents: DataFrame, vecs: Array[Array[Double]], nprobe: Int,
-                        label: Int => String): Array[Array[Long]] = {
     val cs = cents.select(col("centroid_id").cast("long"),
         transform(col("centroid_vec"), x => x.cast("double"))).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1) // stable sort by distance below leaves ties id-ascending
+      .sortBy(_._1) // stable sort by distance in rankCells leaves ties id-ascending
+    new ProbePlan(keys, vecs, rankCells(cs, vecs, nprobe, i => keyLabel(keyCols, keys(i))),
+      cs.toMap, keyCols.map(queries.schema(_)), cents.schema("centroid_id").dataType)
+  }
+
+  /** Each vector's `nprobe` nearest centroid ids, nearest first (all C
+    * when `nprobe > C`): every vector is ranked against every collected
+    * centroid `cs` (ascending by id). A vector whose length differs from
+    * the centroids' is rejected, named by `label`.
+    */
+  private def rankCells(cs: Array[(Long, Array[Double])], vecs: Array[Array[Double]],
+                        nprobe: Int, label: Int => String): Array[Array[Long]] = {
     val dim = cs.headOption.map(_._2.length)
     vecs.indices.map { i =>
       val q = vecs(i)

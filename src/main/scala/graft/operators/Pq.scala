@@ -27,7 +27,7 @@ import graft.functions.VectorFunctions._
   * serving state is the PERSISTED code table ([[ensureEncoded]] /
   * [[ensureEncodedPartitioned]]), so an ADC query reads m small ints
   * per vector — or, composed with the IVF coarse layout
-  * ([[ivfpqTopK]]), only the probed cells' code files — and never
+  * ([[topK]]), only the probed cells' code files — and never
   * touches the vector table at all.
   */
 object Pq {
@@ -264,121 +264,225 @@ object Pq {
 
   /** IVF-PQ serving layout: the code table written partitioned BY
     * coarse cell (`dir/cell=<k>/` holds `(vec_id, codes)`), with
-    * `_centroids` and `_codebooks` sidecars. The classic composition —
-    * coarse quantizer prunes, product codes score — each half already
-    * fingerprinted/deterministic on its own.
+    * `_centroids` and `_codebooks` sidecars and `_graft_kind` = `pq`.
+    * The classic composition — coarse quantizer prunes, product codes
+    * score — each half already fingerprinted/deterministic on its own.
+    * The kind rides in the fingerprint, so a directory written before
+    * the marker existed is rebuilt rather than served without it.
     */
   def ensureEncodedPartitioned(embeddings: DataFrame, cents: DataFrame, books: DataFrame,
                                m: Int, subDim: Int, dir: String): Unit = {
     val spark = embeddings.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, s"ivfpq_m=$m,sd=$subDim",
-        Seq(embeddings, cents, books)) {
-      IndexMeta.fingerprint(embeddings, s"ivfpq_m=$m,sd=$subDim" +
-        s";c=${IndexMeta.centroidFingerprint(cents)};b=${booksFingerprint(books)}")
+    val tag = s"ivfpq_m=$m,sd=$subDim;kind=pq"
+    val fp = IndexMeta.cachedFingerprint(dir, tag, Seq(embeddings, cents, books)) {
+      IndexMeta.fingerprint(embeddings,
+        s"$tag;c=${IndexMeta.centroidFingerprint(cents)};b=${booksFingerprint(books)}")
     }
     if (!IndexMeta.valid(spark, dir, "_SUCCESS", fp)) {
-      codesArray(embeddings, books, m, subDim)
-        .join(Ivf.assignWith(embeddings, cents), Seq("vec_id"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dir)
-      // a full rebuild supersedes any snapshot lineage from a previous
-      // code layout at this dir (see CellSnapshot.reset)
-      CellSnapshot.reset(spark, dir)
-      cents.write.mode("overwrite").parquet(s"$dir/_centroids")
-      books.write.mode("overwrite").parquet(s"$dir/_codebooks")
+      writeEncodedPartitioned(embeddings, cents, books, m, subDim, dir)
       IndexMeta.write(spark, dir, fp)
     }
   }
 
-  /** IVF-PQ top-k: probe the `nprobe` nearest coarse cells (a PARTITION
-    * filter — unprobed cells' code files are never opened), then ADC
-    * over the surviving codes. Per-query cost is nprobe/C of the code
-    * table — m bytes of information per candidate vector — with zero
-    * reads of the raw vectors: the form PQ exists for at 100 TB.
+  /** Write the `pq` code layout of `embeddings` at `dir`: codes by
+    * cell, a reset snapshot lineage, the kind marker and both sidecars.
     */
-  def ivfpqTopK(spark: SparkSession, dir: String, queries: DataFrame, k: Int, nprobe: Int,
-                roundTo: Int = 6, predicate: Option[Column] = None,
-                excluded: Option[DataFrame] = None): DataFrame = {
-    // data + routing pinned to one manifest version (Ivf contract)
-    val (stored, cents) = Ivf.readLayoutWithCentroids(spark, dir)
-    // nprobe cell ids to the driver — partition-filter formation, ranked
-    // as Ivf.probePlan ranks them
-    val probed = cents.crossJoin(broadcast(queries))
-      .select(col("centroid_id"),
-        l2Distance(col("centroid_vec"), col("query_vec")).as("qdist"))
-      .orderBy(col("qdist"), col("centroid_id"))
-      .limit(nprobe)
-      .collect().map(_.getLong(0))
-    // filtered ANN: the predicate sits directly above the pruned code
-    // scan (pushable parts land in PushedFilters), narrowing ADC input;
-    // tombstones drop via a broadcast anti-join (Ivf.withoutExcluded)
-    val pruned = stored.filter(col("cell").isin(probed: _*))
-    adcTopKFromCodes(Ivf.withoutExcluded(predicate.fold(pruned)(pruned.filter), excluded),
-      collectBooks(spark.read.parquet(s"$dir/_codebooks")), collectQuery(queries), k, roundTo)
+  private def writeEncodedPartitioned(embeddings: DataFrame, cents: DataFrame,
+                                      books: DataFrame, m: Int, subDim: Int,
+                                      dir: String): Unit = {
+    val spark = embeddings.sparkSession
+    codesArray(embeddings, books, m, subDim)
+      .join(Ivf.assignWith(embeddings, cents), Seq("vec_id"))
+      .write.mode("overwrite").partitionBy("cell").parquet(dir)
+    // a full rebuild supersedes any snapshot lineage from a previous
+    // code layout at this dir (see CellSnapshot.reset)
+    CellSnapshot.reset(spark, dir)
+    Ivf.writeLayoutKind(spark, dir, "pq")
+    cents.write.mode("overwrite").parquet(s"$dir/_centroids")
+    books.write.mode("overwrite").parquet(s"$dir/_codebooks")
   }
 
-  /** [[ivfpqTopK]] under the code layout's `_deletes` tombstones
-    * ([[Tombstones]]): a takedown reaches the compressed serving tier
-    * immediately — tombstoned ids never enter ADC scoring, so they can
-    * appear in no shortlist and no final result. Same sidecar contract
-    * as `Ivf.topKPartitioned`, which always excludes them.
-    */
-  def ivfpqTopKWithDeletes(spark: SparkSession, dir: String, queries: DataFrame,
-                           k: Int, nprobe: Int, roundTo: Int = 6): DataFrame =
-    ivfpqTopK(spark, dir, queries, k, nprobe, roundTo,
-      excluded = Tombstones.ids(spark, dir))
+  private type Books = Map[Int, IndexedSeq[Seq[Double]]]
 
-  /** Record takedown ids against an encoded layout ([[Tombstones]]). */
-  def recordDeletes(spark: SparkSession, dir: String, ids: DataFrame): Unit =
-    Tombstones.record(spark, dir, ids)
-
-  /** Cell-local incremental insert into an [[ensureEncodedPartitioned]]
-    * code layout — the compressed-tier twin of `Ivf.insertInto`:
-    * `rows(vec_id, embedding)` are ENCODED with the layout's own
-    * `_codebooks` sidecar, assigned with its `_centroids`, and appended
-    * to their cells. Only the receiving `cell=` subtrees gain files;
-    * encoding against the frozen codebooks is deterministic, so the
-    * grown layout serves (ADC, batch, rerank) identically to one
-    * encoded from the union in a single pass (IvfInsertSpec). The
-    * source fingerprint is invalidated, same contract as the IVF form.
-    *
-    * Frozen-codebook inserts are the production posture (re-training
-    * codebooks would re-encode the whole corpus); codebook drift under
-    * a shifting distribution is caught by the `booksFingerprint`
-    * staleness check when the owner eventually retrains.
+  /** How an IVF code layout kind ([[Ivf.layoutKind]]) is served and
+    * grown — the one table [[topK]] and [[insertInto]] read:
+    *  - `pq` ([[ensureEncodedPartitioned]]): `_codebooks`, one LUT per
+    *    query;
+    *  - `pq_residual` ([[ensureEncodedPartitionedResidual]]): the
+    *    residual-trained `_codebooks`, one LUT per probed (query, cell)
+    *    — the LUT of the query's residual `q − centroid(cell)`, so the
+    *    true ADC distance `‖(q − c) − r̂‖ = ‖q − (c + r̂)‖` needs no
+    *    correction term;
+    *  - `ivfsq8` ([[Sq.ensureEncodedPartitioned]]): the affine
+    *    codebooks of `_bounds` ([[Sq.affineBooks]]: d subspaces of one
+    *    dim, 256 levels each), one LUT per query.
+    * `encode` turns `rows(vec_id, embedding)` into the layout's
+    * `(vec_id, codes, cell)` rows against its frozen sidecars and the
+    * given centroids.
     */
-  def insertInto(spark: SparkSession, dir: String, rows: DataFrame,
-                 m: Int, subDim: Int): Unit = {
-    // layout-kind guard: raw-vector encode appended to a RESIDUAL code
-    // layout would serve silently wrong distances — fail loudly
+  private final case class CodeKind(books: (SparkSession, String) => Books,
+                                    lutPerCell: Boolean,
+                                    encode: (SparkSession, String, DataFrame, DataFrame) => DataFrame)
+
+  private val codeKinds: Map[String, CodeKind] = {
+    def stored(spark: SparkSession, dir: String): Books =
+      collectBooks(spark.read.parquet(s"$dir/_codebooks"))
+    def codes(books: Books): Column =
+      pqEncode(col("embedding"), (0 until books.size).map(books(_).toSeq)).as("codes")
+    Map(
+      "pq" -> CodeKind(stored, lutPerCell = false, (spark, dir, rows, cents) =>
+        rows.select(col("vec_id"), codes(stored(spark, dir)))
+          .join(Ivf.assignWith(rows, cents), Seq("vec_id"))),
+      "pq_residual" -> CodeKind(stored, lutPerCell = true, (spark, dir, rows, cents) =>
+        residuals(rows, cents).select(col("vec_id"), codes(stored(spark, dir)), col("cell"))),
+      "ivfsq8" -> CodeKind((spark, dir) => {
+          val (lo, hi) = Sq.readBounds(spark, dir)
+          Sq.affineBooks(lo, hi)
+        }, lutPerCell = false, (spark, dir, rows, cents) => {
+          val (lo, hi) = Sq.readBounds(spark, dir)
+          rows.select(col("vec_id"), Sq.encodeCol(col("embedding"), lo, hi).as("codes"))
+            .join(Ivf.assignWith(rows, cents), Seq("vec_id"))
+        }))
+  }
+
+  /** The [[CodeKind]] of the layout at `dir`; `op` names the refusing
+    * entry point when the layout holds vectors or no codes it knows.
+    */
+  private def codeKindOf(spark: SparkSession, dir: String, op: String): CodeKind = {
     val kind = Ivf.layoutKind(spark, dir)
-    require(kind != "pq_residual",
-      s"$dir holds residual codes — use insertIntoResidual, not insertInto")
-    val cents = Ivf.centroidsOf(spark, dir)
-    val books = spark.read.parquet(s"$dir/_codebooks")
-    CellSnapshot.appendAssigned(spark, dir,
-      codesArray(rows, books, m, subDim)
-        .join(Ivf.assignWith(rows, cents), Seq("vec_id")))
-    IndexMeta.invalidate(spark, dir)
+    require(codeKinds.contains(kind),
+      s"$op takes IVF-PQ ('pq'), residual IVF-PQ ('pq_residual') and IVF-SQ8 " +
+        s"('ivfsq8') code layouts, but $dir is a '$kind' layout")
+    codeKinds(kind)
   }
 
-  /** Cell-local incremental insert into a RESIDUAL code layout
-    * ([[ensureEncodedPartitionedResidual]]): fresh rows assign with the
-    * frozen `_centroids`, encode their residuals with the frozen
-    * `_codebooks`, and append to their cells — deterministic, so the
-    * grown layout serves identically to a single-pass residual encode
-    * of the union (ResidualPqSpec).
+  /** Exact L2 re-rank of the ADC shortlist: the `shortlist` best ADC
+    * candidates of each query are re-scored against their raw vectors
+    * in `embeddings(vec_id, embedding)`. One value carries both, so a
+    * shortlist cannot be asked for without the vectors that re-rank it.
     */
-  def insertIntoResidual(spark: SparkSession, dir: String, rows: DataFrame): Unit = {
-    require(Ivf.layoutKind(spark, dir) == "pq_residual",
-      s"$dir does not hold residual codes — use insertInto")
-    val cents = Ivf.centroidsOf(spark, dir)
-    val books = spark.read.parquet(s"$dir/_codebooks")
-    val bySub = collectBooks(books)
+  final case class Rerank(embeddings: DataFrame, shortlist: Int)
+
+  /** THE IVF top-k over a code layout, served the way its recorded kind
+    * says ([[CodeKind]]; any other kind is refused by name).
+    *
+    * `queries` is either `(query_id, query_vec)` rows — per-query
+    * `(query_id, vec_id, dist)` top-k out — or the one-row
+    * `(query_vec)` frame of a single query, served as a batch of one
+    * with the id dropped: `(vec_id, dist)`, nearest first, ties by
+    * `vec_id` (for one query the final rank is a `TakeOrdered`).
+    *
+    * Every query probes its `nprobe` nearest cells ([[Ivf.probePlan]],
+    * formed on the driver); the code scan is partition-pruned to the
+    * UNION of probed cells (unprobed cells' code files are never
+    * opened); each candidate meets only the LUT rows of the queries
+    * that probed ITS cell; ADC scores it ([[adcDistBatch]]) and the
+    * bounded-heap aggregate ranks per query. The whole batch costs ONE
+    * pruned code scan and zero reads of the raw vectors — m bytes of
+    * information per candidate, the form PQ exists for at 100 TB. The
+    * LUT side is built from the query vectors the probe plan already
+    * collected, so the query frame is read once, on the driver.
+    *
+    * `predicate` (filtered ANN: "nearest neighbors WHERE attr = x") sits
+    * directly above the pruned code scan, so a scan-pushable predicate
+    * lands in `PushedFilters`; it narrows ADC input, it does not widen
+    * the probe. The layout's tombstones ([[Tombstones]]) are always
+    * excluded by a broadcast anti-join, before the shortlist: a
+    * takedown reaches no shortlist, no re-rank read and no result.
+    *
+    * `exactSums = false` sums the ADC terms as doubles
+    * ([[adcDistBatchDouble]]) — the serving twin of the decimal-exact
+    * sum, for wide codes where the decimal chain prices the ADC stage
+    * out (SCALE_SMOKE.md).
+    *
+    * `rerank` is two-stage serving with EXACT re-ranking (IVF-ADC+R):
+    * ADC picks each query's `shortlist` candidates from the codes alone,
+    * then the raw-vector table meets that Q·R-row candidate relation
+    * through ONE broadcast hash join on `vec_id` and exact L2 orders the
+    * final top-k. PQ error can only affect WHICH candidates survive,
+    * never their final ordering, so recall is recovered by widening the
+    * shortlist (R = 3-5×k typical). No driver round-trip and no per-id
+    * plan literals: a batch of 10k queries × shortlist 100 would
+    * otherwise embed 1M `In` literals; the join keeps the plan O(1) in
+    * batch × shortlist.
+    */
+  def topK(spark: SparkSession, dir: String, queries: DataFrame, k: Int, nprobe: Int,
+           roundTo: Int = 6, predicate: Option[Column] = None, exactSums: Boolean = true,
+           rerank: Option[Rerank] = None): DataFrame = {
+    val code = codeKindOf(spark, dir, "Pq.topK")
+    rerank.foreach(r => require(r.shortlist >= k, s"shortlist ${r.shortlist} must be >= k $k"))
+    val single = !queries.columns.contains("query_id")
+    val (stored, cents) = Ivf.readLayoutWithCentroids(spark, dir) // one-version pin
+    val plan = Ivf.probePlan(cents,
+      if (single) queries.select(lit(0L).as("query_id"), col("query_vec")) else queries, nprobe)
+    val qs = broadcast(plan.queries(spark))
+    val books = code.books(spark, dir)
+    val pruned = stored.filter(col("cell").isin(plan.unionCells: _*)) // partition-pruned
+    val live = Ivf.withoutExcluded(predicate.fold(pruned)(pruned.filter), Tombstones.ids(spark, dir))
+    // each candidate meets only the LUT rows of the queries probing its
+    // cell; the LUTs are built from the vectors the probe plan collected
+    val withLut =
+      if (code.lutPerCell) // one LUT per probe pair: the `cell` join IS the probe
+        live.join(broadcast(plan.residuals(spark).select(col("query_id"), col("cell"),
+          pqLut(col("query_vec"), (0 until books.size).map(books(_).toSeq)).as("lut"))),
+          Seq("cell"))
+      else {
+        val luts = broadcast(withLuts(qs, books))
+        // one query's pruned cells are exactly its probes
+        if (plan.keys.length == 1) live.crossJoin(luts)
+        else live.join(broadcast(plan.pairs(spark)), Seq("cell")).join(luts, Seq("query_id"))
+      }
+    val (m, c) = (books.size, books(0).length)
+    val adc = if (exactSums) adcDistBatch(m, c, roundTo) else adcDistBatchDouble(m, c, roundTo)
+    // per-query `n` nearest: the bounded heap, a TakeOrdered for one query
+    def nearest(rows: DataFrame, n: Int): DataFrame =
+      if (single) rows.orderBy(col("dist"), col("vec_id")).limit(n)
+      else Ivf.heapTopKPerQuery(rows, n, "dist")
+    val scored = withLut.select(col("query_id"), col("vec_id"), adc.as("dist"))
+    val ranked = rerank.fold(scored) { r =>
+      // the ADC dist is discarded: the final ranking is exact
+      val cand = nearest(scored, r.shortlist).select("query_id", "vec_id")
+      r.embeddings.select(col("vec_id"), col("embedding"))
+        .join(broadcast(cand), Seq("vec_id"))
+        .join(qs, Seq("query_id"))
+        .select(col("query_id"), col("vec_id"),
+          round(l2Distance(col("embedding"), col("query_vec")), roundTo).as("dist"))
+    }
+    val top = nearest(ranked, k)
+    if (single) top.drop("query_id") else top
+  }
+
+  /** [[topK]] with exact re-ranking, under its former batch name. */
+  def ivfpqTopKRerankBatch(spark: SparkSession, dir: String, embeddings: DataFrame,
+                           queries: DataFrame, k: Int, nprobe: Int, shortlist: Int): DataFrame =
+    topK(spark, dir, queries, k, nprobe, rerank = Some(Rerank(embeddings, shortlist)))
+
+  /** Cell-local incremental insert into an IVF code layout — the
+    * compressed-tier twin of `Ivf.insertInto`: `rows(vec_id, embedding)`
+    * are encoded the way the layout's recorded kind stores them
+    * ([[CodeKind]]; any other kind is refused by name), against its
+    * FROZEN sidecars, assigned with its `_centroids` and appended to
+    * their cells:
+    *  - `pq`: the rows encoded with `_codebooks`;
+    *  - `pq_residual`: their residuals `x − centroid(cell)` encoded with
+    *    the residual-trained `_codebooks`;
+    *  - `ivfsq8`: the rows encoded with `_bounds` — out-of-range
+    *    components clamp, the documented SQ8 drift posture.
+    * Only the receiving `cell=` subtrees gain files; encoding against
+    * frozen sidecars is deterministic, so the grown layout serves
+    * identically to one encoded from the union in a single pass
+    * (IvfInsertSpec, ResidualPqSpec, SqSpec). The source fingerprint is
+    * invalidated, same contract as the IVF form.
+    *
+    * Frozen sidecars are the production posture (retraining would
+    * re-encode the whole corpus); drift under a shifting distribution
+    * is caught by the build fingerprint when the owner eventually
+    * retrains.
+    */
+  def insertInto(spark: SparkSession, dir: String, rows: DataFrame): Unit = {
+    val code = codeKindOf(spark, dir, "Pq.insertInto")
     CellSnapshot.appendAssigned(spark, dir,
-      residuals(rows, cents)
-        .select(col("vec_id"),
-          pqEncode(col("embedding"), (0 until bySub.size).map(bySub(_).toSeq)).as("codes"),
-          col("cell")))
+      code.encode(spark, dir, rows, Ivf.centroidsOf(spark, dir)))
     IndexMeta.invalidate(spark, dir)
   }
 
@@ -421,22 +525,18 @@ object Pq {
                                           books: DataFrame, m: Int, subDim: Int,
                                           dir: String): Unit = {
     val spark = base.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, s"ivfpqrec_m=$m,sd=$subDim",
-        Seq(base, fresh, buildCents, newCents, books)) {
+    val tag = s"ivfpqrec_m=$m,sd=$subDim;kind=pq"
+    val fp = IndexMeta.cachedFingerprint(dir, tag, Seq(base, fresh, buildCents, newCents, books)) {
       val tail = s"cb=${IndexMeta.centroidFingerprint(buildCents)}" +
         s";cn=${IndexMeta.centroidFingerprint(newCents)};b=${booksFingerprint(books)}"
-      s"${IndexMeta.fingerprint(base, s"ivfpqrec_m=$m,sd=$subDim;$tail;base")}|" +
+      s"${IndexMeta.fingerprint(base, s"$tag;$tail;base")}|" +
         IndexMeta.fingerprint(fresh, "fresh")
     }
     if (!IndexMeta.valid(spark, dir, "_SUCCESS", fp)) {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      codesArray(base, books, m, subDim)
-        .join(Ivf.assignWith(base, buildCents), Seq("vec_id"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dir)
-      buildCents.write.mode("overwrite").parquet(s"$dir/_centroids")
-      books.write.mode("overwrite").parquet(s"$dir/_codebooks")
-      insertInto(spark, dir, fresh, m, subDim)
+      writeEncodedPartitioned(base, buildCents, books, m, subDim, dir)
+      insertInto(spark, dir, fresh)
       reclusterEncodedPartitioned(spark, dir, base.union(fresh), newCents)
       IndexMeta.write(spark, dir, fp)
     }
@@ -450,64 +550,27 @@ object Pq {
                                        cents: DataFrame, books: DataFrame,
                                        m: Int, subDim: Int, dir: String): Unit = {
     val spark = base.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, s"ivfpqins_m=$m,sd=$subDim",
-        Seq(base, fresh, cents, books)) {
+    val tag = s"ivfpqins_m=$m,sd=$subDim;kind=pq"
+    val fp = IndexMeta.cachedFingerprint(dir, tag, Seq(base, fresh, cents, books)) {
       val tail = s"c=${IndexMeta.centroidFingerprint(cents)};b=${booksFingerprint(books)}"
-      s"${IndexMeta.fingerprint(base, s"ivfpqins_m=$m,sd=$subDim;$tail;base")}|" +
+      s"${IndexMeta.fingerprint(base, s"$tag;$tail;base")}|" +
         IndexMeta.fingerprint(fresh, "fresh")
     }
     if (!IndexMeta.valid(spark, dir, "_SUCCESS", fp)) {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      codesArray(base, books, m, subDim)
-        .join(Ivf.assignWith(base, cents), Seq("vec_id"))
-        .write.mode("overwrite").partitionBy("cell").parquet(dir)
-      cents.write.mode("overwrite").parquet(s"$dir/_centroids")
-      books.write.mode("overwrite").parquet(s"$dir/_codebooks")
-      insertInto(spark, dir, fresh, m, subDim)
+      writeEncodedPartitioned(base, cents, books, m, subDim, dir)
+      insertInto(spark, dir, fresh)
       IndexMeta.write(spark, dir, fp)
     }
   }
 
-  /** Two-stage IVF-PQ serving with EXACT re-ranking: ADC over the
-    * probed cells picks a `shortlist`-sized candidate set from the
-    * compressed codes alone ([[ivfpqTopK]]), then raw vectors are read
-    * for ONLY those ids — an id-pushdown scan of the vector table
-    * (`vec_id IN (…)` lands in PushedFilters; with vector files
-    * sorted/bucketed by id these are row-group point reads, R rows
-    * instead of a corpus scan) — and exact L2 orders the final top-k.
-    *
-    * The standard accuracy/IO trade (IVF-ADC+R in the PQ literature):
-    * PQ quantization error can only affect WHICH `shortlist` candidates
-    * survive, never their final ordering, so recall vs exact search is
-    * recovered by widening the shortlist (R = 3-5×k typical) while the
-    * per-query raw-vector read stays R rows at any corpus size.
-    */
-  def ivfpqTopKRerank(spark: SparkSession, dir: String, embeddings: DataFrame,
-                      queries: DataFrame, k: Int, nprobe: Int, shortlist: Int,
-                      roundTo: Int = 6, excluded: Option[DataFrame] = None): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    // R candidate ids to the driver — id-filter formation, the same
-    // driver round-trip the coarse probe already pays. Tombstones
-    // (`excluded`) are dropped at the SHORTLIST stage, so they never
-    // reach the rerank read either.
-    val ids = ivfpqTopK(spark, dir, queries, shortlist, nprobe, roundTo,
-        excluded = excluded)
-      .select("vec_id").collect().map(_.getLong(0))
-    embeddings.filter(col("vec_id").isin(ids: _*))
-      .crossJoin(broadcast(queries))
-      .select(col("vec_id"),
-        round(l2Distance(col("embedding"), col("query_vec")), roundTo).as("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
-  }
-
-  /** BATCH ADC score column over `(codes, lut)` rows: the same static
-    * chain of m DECIMAL(38,12) term additions as [[adcTopKFromCodes]]
-    * (identical decimal-widening semantics, so batch == single
-    * bit-for-bit), but the LUT is a per-query COLUMN (flattened m·c
-    * doubles from [[graft.functions.PqLutExpr]]) instead of plan
-    * literals — so one plan serves every query in the batch.
+  /** BATCH ADC score column over `(codes, lut)` rows: a static chain of
+    * m DECIMAL(38,12) term additions (identical decimal-widening
+    * semantics to [[adcTopKFromCodes]], so batch == single bit-for-bit),
+    * the LUT a per-query COLUMN (flattened m·c doubles from
+    * [[graft.functions.PqLutExpr]]) instead of plan literals — so one
+    * plan serves every query in the batch.
     */
   private[operators] def adcDistBatch(m: Int, c: Int, roundTo: Int): Column = {
     // re-cast after EVERY add: Spark's decimal promotion grows the
@@ -531,7 +594,7 @@ object Pq {
     * fold order never depends on partitioning), so rankings can differ
     * from the exact form only where two candidates' decimal sums are
     * closer than double rounding error; PqSpec pins fixture equality.
-    * Used by the fast shortlist stage ([[ivfpqTopKBatch]] with
+    * Used by the fast shortlist stage ([[topK]] with
     * `exactSums = false`) — in two-stage serving the ADC only SELECTS
     * candidates and the final ranking is exact L2 either way.
     */
@@ -570,78 +633,6 @@ object Pq {
     val scored = spark.read.parquet(dir)
       .crossJoin(broadcast(withLuts(queries, books)))
       .select(col("query_id"), col("vec_id"), adcDistBatch(m, c, roundTo).as("dist"))
-    Ivf.heapTopKPerQuery(scored, k, "dist")
-  }
-
-  /** BATCH IVF-PQ top-k over an [[ensureEncodedPartitioned]] layout:
-    * every query probes its `nprobe` nearest coarse cells; the scan is
-    * partition-pruned to the UNION of all probed cells (files of cells
-    * no query probed are never opened); each candidate row joins only
-    * the queries that probed ITS cell (broadcast probe-pair join); ADC
-    * scores per (candidate, query); the bounded-heap aggregate ranks
-    * per query without sorting the candidate set. The
-    * whole batch costs ONE pruned scan — the form a 100 TB serving
-    * tier runs for query streams.
-    */
-  def ivfpqTopKBatch(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
-                     nprobe: Int, roundTo: Int = 6,
-                     predicate: Option[Column] = None,
-                     exactSums: Boolean = true,
-                     excluded: Option[DataFrame] = None): DataFrame = {
-    val books = collectBooks(spark.read.parquet(s"$dir/_codebooks"))
-    val m = books.size
-    val c = books(0).length
-    // shared probe machinery (Ivf.probePlan): probes ranked on the
-    // driver, pairs broadcast as a local relation, probed cells the
-    // partition filter's literals
-    val (probes, pruned) = Ivf.batchPrunedCandidates(spark, dir, queries, nprobe)
-    val adc = if (exactSums) adcDistBatch(m, c, roundTo)
-              else adcDistBatchDouble(m, c, roundTo)
-    val scored = Ivf.withoutExcluded(predicate.fold(pruned)(pruned.filter), excluded)
-      .join(probes, Seq("cell")) // candidate meets only the queries probing its cell
-      .join(broadcast(withLuts(queries, books)), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"), adc.as("dist"))
-    Ivf.heapTopKPerQuery(scored, k, "dist")
-  }
-
-  /** BATCH two-stage serving: [[ivfpqTopKBatch]] picks a per-query
-    * `shortlist` from the compressed codes (one pruned scan for the
-    * whole batch), then exact L2 re-ranks — the raw-vector table meets
-    * the Q·R-row candidate relation through ONE broadcast hash join on
-    * `vec_id` (the candidate side is tiny relative to the corpus at
-    * any scale), and the bounded-heap aggregate emits the final
-    * per-query top-k without sorting.
-    * Batch analog of [[ivfpqTopKRerank]]: PQ error affects WHICH
-    * candidates survive, never the final (true-L2) ordering.
-    *
-    * No driver round-trip and no per-id plan literals: a serving batch
-    * of 10k queries × shortlist 100 would otherwise collect 1M ids and
-    * embed 1M `In` literals — a plan-size/codegen bomb on exactly the
-    * path this engine serves at 100 TB. The join keeps the plan O(1)
-    * in batch × shortlist; Spark's runtime bloom/semi-join filters can
-    * still push candidate membership into the scan. (The SINGLE-query
-    * form keeps literal-id pushdown: ≤ `shortlist` ids get true
-    * row-group point reads, [[ivfpqTopKRerank]].)
-    */
-  def ivfpqTopKRerankBatch(spark: SparkSession, dir: String, embeddings: DataFrame,
-                           queries: DataFrame, k: Int, nprobe: Int, shortlist: Int,
-                           roundTo: Int = 6, exactSums: Boolean = true,
-                           excluded: Option[DataFrame] = None): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    // exactSums=false: the fast double-sum ADC selects the shortlist —
-    // the final ranking below is exact L2 either way, so the knob
-    // trades oracle-grade shortlist selection for serving throughput
-    // (the wide-code operating points need it; SCALE_SMOKE.md).
-    // Tombstones drop at the shortlist stage — they never reach the
-    // rerank read.
-    val cand = ivfpqTopKBatch(spark, dir, queries, shortlist, nprobe, roundTo,
-        exactSums = exactSums, excluded = excluded)
-      .select(col("query_id"), col("vec_id")) // ADC dist discarded: rerank is exact
-    val scored = embeddings.select(col("vec_id"), col("embedding"))
-      .join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(l2Distance(col("embedding"), col("query_vec")), roundTo).as("dist"))
     Ivf.heapTopKPerQuery(scored, k, "dist")
   }
 
@@ -734,134 +725,6 @@ object Pq {
       books.write.mode("overwrite").parquet(s"$dir/_codebooks")
       IndexMeta.write(spark, dir, fp)
     }
-  }
-
-  /** Per-cell residual-query LUT relation `(cell, lut)` (single query)
-    * or `(query_id, cell, lut)` (batch): the ADC lookup table of the
-    * query's RESIDUAL `q − centroid(cell)` against the residual
-    * codebooks, one row per probed (query, cell) pair. Computed in-plan
-    * ([[graft.functions.PqLutExpr]] over a `zip_with` subtraction) —
-    * centroids and queries are the broadcast-small sides, no driver
-    * LUT loop. Size contract: rows = Σ probes (nprobe per query) of
-    * m·c doubles each — broadcastable for serving batches (Q ≤ ~1k at
-    * m=16,c=256); beyond that the final join should drop the broadcast
-    * hint and let AQE pick a shuffled hash join.
-    */
-  private def residualLuts(cents: DataFrame, queries: DataFrame,
-                           books: Map[Int, IndexedSeq[Seq[Double]]],
-                           keyCols: Seq[String]): DataFrame = {
-    val m = books.size
-    queries
-      .crossJoin(broadcast(cents.select(col("centroid_id").as("cell"), col("centroid_vec"))))
-      .select((keyCols.map(col) :+
-        pqLut(zip_with(col("query_vec"), col("centroid_vec"), (q, cv) => q - cv),
-          (0 until m).map(books(_).toSeq)).as("lut")): _*)
-  }
-
-  /** Residual IVF-PQ top-k: probe `nprobe` coarse cells (partition
-    * filter), ADC-score the probed cells' RESIDUAL codes against the
-    * query's per-cell residual LUTs. Same plan skeleton as
-    * [[ivfpqTopK]] with one extra broadcast join (codes meet their
-    * cell's LUT on `cell`); the true ADC distance
-    * `‖(q − c) − r̂‖ = ‖q − (c + r̂)‖` needs no correction term.
-    */
-  def ivfpqResidualTopK(spark: SparkSession, dir: String, queries: DataFrame,
-                        k: Int, nprobe: Int, roundTo: Int = 6,
-                        predicate: Option[Column] = None,
-                        excluded: Option[DataFrame] = None): DataFrame = {
-    val (stored, cents) = Ivf.readLayoutWithCentroids(spark, dir) // one-version pin
-    val books = collectBooks(spark.read.parquet(s"$dir/_codebooks"))
-    val m = books.size
-    val c = books(0).length
-    // nprobe cell ids to the driver — partition-filter formation
-    val probed = cents.crossJoin(broadcast(queries))
-      .select(col("centroid_id"),
-        l2Distance(col("centroid_vec"), col("query_vec")).as("qdist"))
-      .orderBy(col("qdist"), col("centroid_id"))
-      .limit(nprobe)
-      .collect().map(_.getLong(0))
-    val luts = residualLuts(cents.filter(col("centroid_id").isin(probed: _*)),
-      queries, books, Seq("cell"))
-    val pruned = stored.filter(col("cell").isin(probed: _*))
-    Ivf.withoutExcluded(predicate.fold(pruned)(pruned.filter), excluded)
-      .join(broadcast(luts), Seq("cell"))
-      .select(col("vec_id"), adcDistBatch(m, c, roundTo).as("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
-  }
-
-  /** BATCH residual IVF-PQ: one scan pruned to the union of probed
-    * cells; each candidate meets exactly the (query, cell) LUT rows of
-    * queries that probed ITS cell — the `cell` join IS the probe
-    * semantics (no separate probe-pair join needed). Bounded-heap rank
-    * per query, as every batch serving path.
-    */
-  def ivfpqResidualTopKBatch(spark: SparkSession, dir: String, queries: DataFrame,
-                             k: Int, nprobe: Int, roundTo: Int = 6,
-                             exactSums: Boolean = true,
-                             excluded: Option[DataFrame] = None): DataFrame = {
-    val books = collectBooks(spark.read.parquet(s"$dir/_codebooks"))
-    val m = books.size
-    val c = books(0).length
-    val (probes, pruned, cents) =
-      Ivf.batchPrunedCandidatesWithCents(spark, dir, queries, nprobe)
-    // LUTs only for the probed (query, cell) pairs: probes ⋈ queries ⋈
-    // centroids (on cell), all broadcast-small
-    val luts = probes
-      .join(broadcast(queries), Seq("query_id"))
-      .join(broadcast(cents.select(col("centroid_id").as("cell"), col("centroid_vec"))),
-        Seq("cell"))
-      .select(col("query_id"), col("cell"),
-        pqLut(zip_with(col("query_vec"), col("centroid_vec"), (q, cv) => q - cv),
-          (0 until m).map(books(_).toSeq)).as("lut"))
-    val adc = if (exactSums) adcDistBatch(m, c, roundTo)
-              else adcDistBatchDouble(m, c, roundTo)
-    val scored = Ivf.withoutExcluded(pruned, excluded)
-      .join(broadcast(luts), Seq("cell"))
-      .select(col("query_id"), col("vec_id"), adc.as("dist"))
-    Ivf.heapTopKPerQuery(scored, k, "dist")
-  }
-
-  /** Two-stage residual serving: residual-ADC shortlist → exact L2
-    * re-rank of only the shortlisted raw rows ([[ivfpqTopKRerank]]'s
-    * contract on the residual layout).
-    */
-  def ivfpqResidualTopKRerank(spark: SparkSession, dir: String, embeddings: DataFrame,
-                              queries: DataFrame, k: Int, nprobe: Int, shortlist: Int,
-                              roundTo: Int = 6, excluded: Option[DataFrame] = None): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val ids = ivfpqResidualTopK(spark, dir, queries, shortlist, nprobe, roundTo,
-        excluded = excluded)
-      .select("vec_id").collect().map(_.getLong(0))
-    embeddings.filter(col("vec_id").isin(ids: _*))
-      .crossJoin(broadcast(queries))
-      .select(col("vec_id"),
-        round(l2Distance(col("embedding"), col("query_vec")), roundTo).as("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
-  }
-
-  /** BATCH two-stage residual serving: [[ivfpqResidualTopKBatch]]
-    * picks per-query shortlists from the residual codes (one pruned
-    * scan for the whole batch), then exact L2 re-ranks through one
-    * broadcast hash join — [[ivfpqTopKRerankBatch]]'s contract on the
-    * residual layout.
-    */
-  def ivfpqResidualTopKRerankBatch(spark: SparkSession, dir: String,
-                                   embeddings: DataFrame, queries: DataFrame,
-                                   k: Int, nprobe: Int, shortlist: Int,
-                                   roundTo: Int = 6, exactSums: Boolean = true,
-                                   excluded: Option[DataFrame] = None): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val cand = ivfpqResidualTopKBatch(spark, dir, queries, shortlist, nprobe,
-        roundTo, exactSums, excluded)
-      .select(col("query_id"), col("vec_id"))
-    val scored = embeddings.select(col("vec_id"), col("embedding"))
-      .join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(l2Distance(col("embedding"), col("query_vec")), roundTo).as("dist"))
-    Ivf.heapTopKPerQuery(scored, k, "dist")
   }
 
   /** Residual reconstruction `x̂ = centroid(cell) + decode(codes)` —

@@ -208,7 +208,7 @@ object Retrieval {
   }
 
   /** BATCH TF-IDF serving — Q query term bags amortize ONE posting
-    * build (the `ivfpqTopKBatch` economics applied to lexical
+    * build (the batch `Pq.topK` economics applied to lexical
     * retrieval): the per-query single form re-explodes the corpus per
     * query; here the posting table and the per-document norms are
     * built once and every query's numerator rides the same relation.

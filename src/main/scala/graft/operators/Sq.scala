@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions._
-
 /** Scalar quantization (SQ8) — the second compressed serving tier: each
   * dimension quantizes INDEPENDENTLY to an 8-bit level on a trained
   * per-dim [lo, hi] range, so a dim-d float32 vector (4·d bytes)
@@ -81,7 +79,8 @@ object Sq {
   private def boundsPath(dir: String) = s"$dir/_bounds"
 
   private[operators] def readBounds(spark: SparkSession, dir: String): (Seq[Double], Seq[Double]) = {
-    val rows = spark.read.parquet(boundsPath(dir)).orderBy("i").collect()
+    // d rows: sorted on the driver, not by a distributed sort
+    val rows = spark.read.parquet(boundsPath(dir)).collect().sortBy(_.getInt(0))
     (rows.map(_.getDouble(1)).toSeq, rows.map(_.getDouble(2)).toSeq)
   }
 
@@ -115,9 +114,10 @@ object Sq {
   }
 
   /** IVF-SQ8 serving layout: the code table partitioned by coarse cell
-    * (`_centroids` + `_bounds` sidecars) — coarse quantizer prunes,
-    * scalar codes score, the [[Pq.ensureEncodedPartitioned]] geometry
-    * with zero codebook training.
+    * (`_centroids` + `_bounds` sidecars, `_graft_kind` = `ivfsq8`) —
+    * coarse quantizer prunes, scalar codes score, the
+    * [[Pq.ensureEncodedPartitioned]] geometry with zero codebook
+    * training. [[Pq.topK]] serves it and [[Pq.insertInto]] grows it.
     */
   def ensureEncodedPartitioned(embeddings: DataFrame, cents: DataFrame,
                                lo: Seq[Double], hi: Seq[Double], dir: String): Unit = {
@@ -210,113 +210,6 @@ object Sq {
       .crossJoin(broadcast(Pq.withLuts(queries, books)))
       .select(col("query_id"), col("vec_id"), adc.as("dist"))
     Ivf.heapTopKPerQuery(scored, k, "dist")
-  }
-
-  /** IVF-SQ8 top-k: probe `nprobe` coarse cells (partition filter),
-    * ADC over the surviving codes — [[Pq.ivfpqTopK]] on the scalar
-    * tier, with the same filtered-ANN predicate and tombstone hooks.
-    */
-  def ivfsqTopK(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
-                nprobe: Int, roundTo: Int = 6, predicate: Option[Column] = None,
-                excluded: Option[DataFrame] = None,
-                exactSums: Boolean = true): DataFrame = {
-    val (stored, cents) = Ivf.readLayoutWithCentroids(spark, dir) // one-version pin
-    val (lo, hi) = readBounds(spark, dir)
-    val books = affineBooks(lo, hi)
-    val d = lo.length
-    val probed = cents.crossJoin(broadcast(queries))
-      .select(col("centroid_id"),
-        l2Distance(col("centroid_vec"), col("query_vec")).as("qdist"))
-      .orderBy(col("qdist"), col("centroid_id"))
-      .limit(nprobe)
-      .collect().map(_.getLong(0))
-    val pruned = stored.filter(col("cell").isin(probed: _*))
-    val adc = if (exactSums) Pq.adcDistBatch(d, 256, roundTo)
-              else Pq.adcDistBatchDouble(d, 256, roundTo)
-    Ivf.withoutExcluded(predicate.fold(pruned)(pruned.filter), excluded)
-      .crossJoin(broadcast(Pq.withLuts(
-        queries.select(lit(0L).as("query_id"), col("query_vec")), books)))
-      .select(col("vec_id"), adc.as("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
-  }
-
-  /** BATCH IVF-SQ8 top-k: one scan pruned to the union of probed
-    * cells, candidates meet only the queries probing their cell
-    * (broadcast probe-pair join), affine-LUT ADC per pair, bounded-
-    * heap rank per query — [[Pq.ivfpqTopKBatch]] on the scalar tier.
-    */
-  def ivfsqTopKBatch(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
-                     nprobe: Int, roundTo: Int = 6,
-                     excluded: Option[DataFrame] = None,
-                     exactSums: Boolean = true): DataFrame = {
-    val (lo, hi) = readBounds(spark, dir)
-    val books = affineBooks(lo, hi)
-    val d = lo.length
-    val (probes, pruned) = Ivf.batchPrunedCandidates(spark, dir, queries, nprobe)
-    val adc = if (exactSums) Pq.adcDistBatch(d, 256, roundTo)
-              else Pq.adcDistBatchDouble(d, 256, roundTo)
-    val scored = Ivf.withoutExcluded(pruned, excluded)
-      .join(probes, Seq("cell"))
-      .join(broadcast(Pq.withLuts(queries, books)), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"), adc.as("dist"))
-    Ivf.heapTopKPerQuery(scored, k, "dist")
-  }
-
-  /** BATCH two-stage SQ8 serving: [[ivfsqTopKBatch]] shortlists from
-    * the scalar codes (one pruned scan for the batch), then exact L2
-    * re-ranks through one broadcast hash join —
-    * [[Pq.ivfpqTopKRerankBatch]]'s contract on the scalar tier.
-    */
-  def ivfsqTopKRerankBatch(spark: SparkSession, dir: String, embeddings: DataFrame,
-                           queries: DataFrame, k: Int, nprobe: Int, shortlist: Int,
-                           roundTo: Int = 6, exactSums: Boolean = true,
-                           excluded: Option[DataFrame] = None): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val cand = ivfsqTopKBatch(spark, dir, queries, shortlist, nprobe, roundTo,
-        excluded, exactSums)
-      .select(col("query_id"), col("vec_id"))
-    val scored = embeddings.select(col("vec_id"), col("embedding"))
-      .join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(l2Distance(col("embedding"), col("query_vec")), roundTo).as("dist"))
-    Ivf.heapTopKPerQuery(scored, k, "dist")
-  }
-
-  /** Two-stage SQ8 serving: ADC shortlist → exact L2 re-rank of only
-    * the shortlisted raw rows ([[Pq.ivfpqTopKRerank]]'s contract).
-    */
-  def ivfsqTopKRerank(spark: SparkSession, dir: String, embeddings: DataFrame,
-                      queries: DataFrame, k: Int, nprobe: Int, shortlist: Int,
-                      roundTo: Int = 6, excluded: Option[DataFrame] = None): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    val ids = ivfsqTopK(spark, dir, queries, shortlist, nprobe, roundTo,
-        excluded = excluded)
-      .select("vec_id").collect().map(_.getLong(0))
-    embeddings.filter(col("vec_id").isin(ids: _*))
-      .crossJoin(broadcast(queries))
-      .select(col("vec_id"),
-        round(l2Distance(col("embedding"), col("query_vec")), roundTo).as("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
-  }
-
-  /** Cell-local incremental insert into an [[ensureEncodedPartitioned]]
-    * layout: fresh rows encode with the FROZEN `_bounds` (out-of-range
-    * components clamp — the documented SQ8 drift posture; retraining
-    * bounds re-encodes the corpus, caught by the fingerprint) and
-    * append to their cells.
-    */
-  def insertInto(spark: SparkSession, dir: String, rows: DataFrame): Unit = {
-    require(Ivf.layoutKind(spark, dir) == "ivfsq8",
-      s"$dir is not an IVF-SQ8 layout")
-    val cents = Ivf.centroidsOf(spark, dir)
-    val (lo, hi) = readBounds(spark, dir)
-    CellSnapshot.appendAssigned(spark, dir,
-      rows.select(col("vec_id"), encodeCol(col("embedding"), lo, hi).as("codes"))
-        .join(Ivf.assignWith(rows, cents), Seq("vec_id")))
-    IndexMeta.invalidate(spark, dir)
   }
 
   /** RECLUSTER the IVF-SQ8 layout onto new coarse centroids — the SQ8

@@ -153,20 +153,6 @@ object StreamingAnn {
       }
       .start()
 
-  /** Streaming maintenance of an IVF-SQ8 code layout: each micro-batch
-    * encodes with the frozen `_bounds` (out-of-range components clamp —
-    * the documented drift posture), assigns with the frozen
-    * `_centroids`, and appends cell-locally ([[graft.operators.Sq.insertInto]]).
-    * The compressed-tier member of the [[maintainIvf]] family.
-    */
-  def maintainSq(newVectors: DataFrame, layoutDir: String): StreamingQuery =
-    newVectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        graft.operators.Sq.insertInto(batch.sparkSession, layoutDir, batch.toDF())
-      }
-      .start()
-
   /** Streaming maintenance of a binary signature table: each
     * micro-batch encodes with the frozen `_thresholds` and appends
     * ([[graft.operators.Binary.insertInto]]) — the funnel's widest gate
@@ -180,35 +166,19 @@ object StreamingAnn {
       }
       .start()
 
-  /** Streaming maintenance of a plain IVF-PQ code layout: each
-    * micro-batch encodes with the frozen `_codebooks`, assigns with the
-    * frozen `_centroids`, and appends cell-locally
-    * ([[graft.operators.Pq.insertInto]]) — completing the
-    * [[maintainIvf]] family on the compressed tier (the kind guard
-    * rejects a residual layout on the first batch).
+  /** Streaming maintenance of an IVF code layout (`pq`, `pq_residual`
+    * or `ivfsq8`): each micro-batch is encoded the way the layout's
+    * recorded kind stores it, against the frozen `_codebooks` or
+    * `_bounds`, assigned with the frozen `_centroids` and appended
+    * cell-locally ([[graft.operators.Pq.insertInto]]; any other kind is
+    * refused by name on the first batch) — the compressed-tier member of
+    * the [[maintainIvf]] family.
     */
-  def maintainPq(newVectors: DataFrame, layoutDir: String,
-                 m: Int, subDim: Int): StreamingQuery =
+  def maintainCodes(newVectors: DataFrame, layoutDir: String): StreamingQuery =
     newVectors.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        graft.operators.Pq.insertInto(batch.sparkSession, layoutDir, batch.toDF(),
-          m, subDim)
-      }
-      .start()
-
-  /** Streaming maintenance of a RESIDUAL IVF-PQ code layout: each
-    * micro-batch assigns with the frozen `_centroids`, encodes its
-    * residuals x − centroid(cell) with the frozen residual-trained
-    * `_codebooks`, and appends cell-locally
-    * ([[graft.operators.Pq.insertIntoResidual]]; the `pq_residual`
-    * kind guard rejects a plain code dir on the first batch).
-    */
-  def maintainResidual(newVectors: DataFrame, layoutDir: String): StreamingQuery =
-    newVectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        graft.operators.Pq.insertIntoResidual(batch.sparkSession, layoutDir, batch.toDF())
+        graft.operators.Pq.insertInto(batch.sparkSession, layoutDir, batch.toDF())
       }
       .start()
 }

@@ -183,11 +183,11 @@ object AnnBench {
       Pq.ensureEncodedPartitionedResidual(table, cents, books, m, subDim, dir)
       // double-sum serving twin: recall is unchanged on separated data
       // and the decimal chain prices the 400M-pair recall pass out
-      val adc = Pq.ivfpqResidualTopKBatch(spark, dir, queries, 10, nprobe = coarseC,
+      val adc = Pq.topK(spark, dir, queries, 10, nprobe = coarseC,
         exactSums = false)
       val adcRecall = Hnsw.recallOf(adc, table, queries, 10)
         .agg(avg(col("recall"))).head().getDouble(0)
-      val cand = Pq.ivfpqResidualTopKBatch(spark, dir, queries, 100, nprobe = coarseC,
+      val cand = Pq.topK(spark, dir, queries, 100, nprobe = coarseC,
           exactSums = false)
         .select(col("query_id"), col("vec_id"))
       val rr = rerankRecall(table, queries, cand)
@@ -955,17 +955,17 @@ object AnnBench {
     val points = Seq((5, 16, 400), (25, 16, 200)).map { case (m, nprobe, shortlist) =>
       val pqdir = s"target/graft_scale_idx/ivfpq_m${m}_n${n}_d$dim"
       require(new java.io.File(pqdir).exists(), s"run `AnnBench scale` first: missing $pqdir")
-      Pq.ivfpqTopKRerankBatch(spark, pqdir, emb, sample.limit(32), 10,
-          nprobe = nprobe, shortlist = shortlist, exactSums = false)
+      Pq.topK(spark, pqdir, sample.limit(32), 10, nprobe = nprobe, exactSums = false,
+          rerank = Some(Pq.Rerank(emb, shortlist)))
         .write.format("noop").mode("overwrite").save() // warm-up
       val t = System.nanoTime()
-      Pq.ivfpqTopKRerankBatch(spark, pqdir, emb, rerankBatch, 10,
-          nprobe = nprobe, shortlist = shortlist, exactSums = false)
+      Pq.topK(spark, pqdir, rerankBatch, 10, nprobe = nprobe, exactSums = false,
+          rerank = Some(Pq.Rerank(emb, shortlist)))
         .write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t) / 1e9
       val recall = Hnsw.recallOf(
-        Pq.ivfpqTopKRerankBatch(spark, pqdir, emb, sample, 10,
-          nprobe = nprobe, shortlist = shortlist, exactSums = false),
+        Pq.topK(spark, pqdir, sample, 10, nprobe = nprobe, exactSums = false,
+          rerank = Some(Pq.Rerank(emb, shortlist))),
         emb, sample, 10).agg(avg(col("recall"))).head().getDouble(0)
       s"""{"m":$m,"nprobe":$nprobe,"shortlist":$shortlist,""" +
         s""""rerank_recall_at_10":${fmt(recall, 4)},"rerank_batch":2000,""" +
@@ -1217,19 +1217,19 @@ object AnnBench {
         Pq.ensureEncodedPartitioned(emb, cents, books, m, subDim, d)
         ((System.nanoTime() - tQ) / 1e9, d)
       })
-      Pq.ivfpqTopKBatch(spark, pqdir, sample.limit(32), 10, nprobe = nprobe)
+      Pq.topK(spark, pqdir, sample.limit(32), 10, nprobe = nprobe)
         .write.format("noop").mode("overwrite").save() // warm-up
       val adcRecall = Hnsw.recallOf(
-        Pq.ivfpqTopKBatch(spark, pqdir, sample, 10, nprobe = nprobe), emb, sample, 10)
+        Pq.topK(spark, pqdir, sample, 10, nprobe = nprobe), emb, sample, 10)
         .agg(avg(col("recall"))).head().getDouble(0)
       val tRr = System.nanoTime()
-      Pq.ivfpqTopKRerankBatch(spark, pqdir, emb, rerankBatch, 10,
-          nprobe = nprobe, shortlist = shortlist)
+      Pq.topK(spark, pqdir, rerankBatch, 10, nprobe = nprobe,
+          rerank = Some(Pq.Rerank(emb, shortlist)))
         .write.format("noop").mode("overwrite").save()
       val rrSec = (System.nanoTime() - tRr) / 1e9
       val rrRecall = Hnsw.recallOf(
-        Pq.ivfpqTopKRerankBatch(spark, pqdir, emb, sample, 10,
-          nprobe = nprobe, shortlist = shortlist),
+        Pq.topK(spark, pqdir, sample, 10, nprobe = nprobe,
+          rerank = Some(Pq.Rerank(emb, shortlist))),
         emb, sample, 10).agg(avg(col("recall"))).head().getDouble(0)
       s"""{"m":$m,"c":256,"nprobe":$nprobe,"shortlist":$shortlist,""" +
         s""""build_sec":${fmt(pqBuildSec, 2)},""" +

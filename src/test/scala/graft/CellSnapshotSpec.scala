@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorFunctions._
-import graft.operators.{CellSnapshot, Hnsw, Ivf, Pq}
+import graft.operators.{CellSnapshot, Hnsw, Ivf, Pq, Tombstones}
 
 /** Atomic compaction publish ([[CellSnapshot]]): maintenance writes
   * rebuilt cells as a NEW immutable generation and flips one marker —
@@ -365,16 +365,16 @@ class CellSnapshotSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("snap_pq").toString
     Pq.ensureEncodedPartitioned(emb, cents, books, 4, 2, dir)
 
-    val preReader = Pq.ivfpqTopK(spark, dir, oneQuery, 10, nprobe = C)
-    val expectedPre = single(Pq.ivfpqTopK(spark, dir, oneQuery, 10, nprobe = C))
+    val preReader = Pq.topK(spark, dir, oneQuery, 10, nprobe = C)
+    val expectedPre = single(Pq.topK(spark, dir, oneQuery, 10, nprobe = C))
 
-    Pq.recordDeletes(spark, dir, delIds.toDF("vec_id"))
+    Tombstones.record(spark, dir, delIds.toDF("vec_id"))
     Ivf.compactPartitioned(spark, dir) // code layout shares the cell lifecycle
 
     assert(single(preReader) === expectedPre,
       "a code-layout reader planned before compaction must keep its view")
     assert(Ivf.readLayout(spark, dir).filter(col("vec_id").isin(delIds: _*)).count() === 0)
-    val post = single(Pq.ivfpqTopK(spark, dir, oneQuery, 10, nprobe = C))
+    val post = single(Pq.topK(spark, dir, oneQuery, 10, nprobe = C))
     assert(post.nonEmpty && post.forall(r => !delIds.contains(r._1)))
   }
 

@@ -204,31 +204,30 @@ class IvfDeleteSpec extends AnyFunSuite {
     val books = Pq.codebooks(emb, m = 4, subDim = 2, c = 8, iters = 1)
     val dir = Files.createTempDirectory("ivfpq_del").toString
     Pq.ensureEncodedPartitioned(emb, cents, books, 4, 2, dir)
-    Pq.recordDeletes(spark, dir, delIds.toDF("vec_id"))
+    graft.operators.Tombstones.record(spark, dir, delIds.toDF("vec_id"))
 
-    val got = single(Pq.ivfpqTopKWithDeletes(spark, dir, oneQuery, 10, nprobe = 3))
+    val got = single(Pq.topK(spark, dir, oneQuery, 10, nprobe = 3))
     assert(got.forall(r => !delIds.contains(r._1)))
 
     // clean twin: SAME books and centroids, codes over the remaining rows
     val cleanDir = Files.createTempDirectory("ivfpq_del_clean").toString
     val remaining = emb.filter(!col("vec_id").isin(delIds: _*))
     Pq.ensureEncodedPartitioned(remaining, cents, books, 4, 2, cleanDir)
-    assert(got === single(Pq.ivfpqTopK(spark, cleanDir, oneQuery, 10, nprobe = 3)),
+    assert(got === single(Pq.topK(spark, cleanDir, oneQuery, 10, nprobe = 3)),
       "compressed-tier tombstone serving must equal codes encoded without the deleted rows")
 
     // two-stage: tombstones drop at the shortlist, so the exact rerank
     // (single AND batch) can neither return nor read them
-    val dels = graft.operators.Tombstones.ids(spark, dir)
-    val rr = single(Pq.ivfpqTopKRerank(spark, dir, emb, oneQuery, 10, nprobe = 3,
-      shortlist = 20, excluded = dels))
+    val rr = single(Pq.topK(spark, dir, oneQuery, 10, nprobe = 3,
+      rerank = Some(Pq.Rerank(emb, 20))))
     assert(rr.forall(r => !delIds.contains(r._1)))
-    assert(rr === single(Pq.ivfpqTopKRerank(spark, cleanDir, remaining, oneQuery, 10,
-      nprobe = 3, shortlist = 20)))
-    val rrb = batch(Pq.ivfpqTopKRerankBatch(spark, dir, emb, queries, 10, nprobe = 3,
-      shortlist = 20, excluded = dels))
+    assert(rr === single(Pq.topK(spark, cleanDir, oneQuery, 10, nprobe = 3,
+      rerank = Some(Pq.Rerank(remaining, 20)))))
+    val rrb = batch(Pq.topK(spark, dir, queries, 10, nprobe = 3,
+      rerank = Some(Pq.Rerank(emb, 20))))
     assert(rrb.nonEmpty && rrb.forall(r => !delIds.contains(r._2)))
-    assert(rrb === batch(Pq.ivfpqTopKRerankBatch(spark, cleanDir, remaining, queries, 10,
-      nprobe = 3, shortlist = 20)))
+    assert(rrb === batch(Pq.topK(spark, cleanDir, queries, 10, nprobe = 3,
+      rerank = Some(Pq.Rerank(remaining, 20)))))
   }
 
   test("a fully-deleted cell disappears from the layout; probing it reads zero rows, serving still works") {

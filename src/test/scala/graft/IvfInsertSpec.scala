@@ -154,8 +154,10 @@ class IvfInsertSpec extends AnyFunSuite {
     val resBooks = Pq.codebooks(Pq.residuals(emb, cents).select(col("vec_id"), col("embedding")),
       4, 2, 8, 1, seedOffset = C)
     Pq.ensureEncodedPartitionedResidual(emb, cents, resBooks, 4, 2, resDir)
+    val pqDir = Files.createTempDirectory("ivf_ins_guard_pq").toString
+    Pq.ensureEncodedPartitioned(emb, cents, Pq.codebooks(emb, 4, 2, 8, 1), 4, 2, pqDir)
     val batchQuery = oneQuery.withColumn("query_id", lit(0L))
-    for ((dir, kind) <- Seq(sqDir -> "'ivfsq8'", resDir -> "'pq_residual'");
+    for ((dir, kind) <- Seq(sqDir -> "'ivfsq8'", resDir -> "'pq_residual'", pqDir -> "'pq'");
          (op, call) <- Seq[(String, () => Any)](
            "insertInto" -> (() => Ivf.insertInto(spark, dir, fresh)),
            "topKPartitioned" -> (() => Ivf.topKPartitioned(spark, dir, oneQuery, 10, C)),
@@ -205,19 +207,20 @@ class IvfInsertSpec extends AnyFunSuite {
     val before = cellFiles(dir, untouched)
     assert(before.nonEmpty)
 
-    Pq.insertInto(spark, dir, fresh, m = 2, subDim = 4)
+    Pq.insertInto(spark, dir, fresh)
 
     assert(cellFiles(dir, untouched) === before,
       "non-receiving cells' code files must not be rewritten")
 
     val fullDir = Files.createTempDirectory("pq_ins_full").toString
     Pq.ensureEncodedPartitioned(emb, cents, books, m = 2, subDim = 4, fullDir)
-    assert(single(Pq.ivfpqTopK(spark, dir, oneQuery, 10, nprobe = 4))
-      === single(Pq.ivfpqTopK(spark, fullDir, oneQuery, 10, nprobe = 4)),
+    assert(single(Pq.topK(spark, dir, oneQuery, 10, nprobe = 4))
+      === single(Pq.topK(spark, fullDir, oneQuery, 10, nprobe = 4)),
       "insert-grown ADC serving must equal the single-pass encode")
     // the two-stage rerank path serves the grown layout identically too
-    assert(single(Pq.ivfpqTopKRerank(spark, dir, emb, oneQuery, 10, nprobe = 4, shortlist = 30))
-      === single(Pq.ivfpqTopKRerank(spark, fullDir, emb, oneQuery, 10, nprobe = 4, shortlist = 30)),
+    val rerank = Some(Pq.Rerank(emb, 30))
+    assert(single(Pq.topK(spark, dir, oneQuery, 10, nprobe = 4, rerank = rerank))
+      === single(Pq.topK(spark, fullDir, oneQuery, 10, nprobe = 4, rerank = rerank)),
       "insert-grown rerank serving must equal the single-pass encode")
   }
 

@@ -154,7 +154,7 @@ class IvfReclusterSpec extends AnyFunSuite {
     Pq.ensureEncodedPartitioned(emb, centsB, books, M, SubDim, freshDir)
 
     def serve(d: String, np: Int) =
-      Pq.ivfpqTopK(spark, d, oneQuery, 10, np)
+      Pq.topK(spark, d, oneQuery, 10, np)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     for (np <- Seq(1, 2, C))
       assert(serve(dir, np) == serve(freshDir, np),
@@ -214,7 +214,7 @@ class IvfReclusterSpec extends AnyFunSuite {
   }
 
   test("SQ8 code-layout recluster: routing-only rewrite == fresh encode build; kind guard") {
-    import graft.operators.Sq
+    import graft.operators.{Pq, Sq}
     val (lo, hi) = Sq.bounds(emb)
     val dir = Files.createTempDirectory("sq_rec").toString
     Sq.ensureEncodedPartitioned(emb, centsA, lo, hi, dir)
@@ -224,7 +224,7 @@ class IvfReclusterSpec extends AnyFunSuite {
     Sq.ensureEncodedPartitioned(emb, centsB, lo, hi, freshDir)
 
     def serve(d: String, np: Int) =
-      Sq.ivfsqTopK(spark, d, oneQuery, 10, np)
+      Pq.topK(spark, d, oneQuery, 10, np)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     for (np <- Seq(1, 2, C))
       assert(serve(dir, np) == serve(freshDir, np),

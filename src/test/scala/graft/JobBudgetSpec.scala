@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorFunctions._
-import graft.operators.{Hnsw, Ivf, Pq}
+import graft.operators.{Hnsw, Ivf, Pq, Sq, Tombstones}
 
 /** Per-call Spark job budgets of the batch serving paths on a small
   * layout. A job is a scheduling round trip that every call pays
@@ -74,7 +74,7 @@ class JobBudgetSpec extends AnyFunSuite {
     def measure(): Seq[Int] = Seq(
       callJobs(Ivf.topKPartitionedBatchFused(spark, ivf, queries, 10, 3)),
       callJobs(Hnsw.searchRoutedWithIndex(spark, hnsw, queries, 10, p, 3)),
-      callJobs(Pq.ivfpqTopKRerankBatch(spark, pq, emb, queries, 10, 3, 40)))
+      callJobs(Pq.topK(spark, pq, queries, 10, 3, rerank = Some(Pq.Rerank(emb, 40)))))
     // warm: the first call of a shape may compile or list more
     measure()
     val before = measure()
@@ -83,7 +83,7 @@ class JobBudgetSpec extends AnyFunSuite {
       Ivf.compactPartitioned(spark, ivf)
       Hnsw.recordDeletes(spark, hnsw, takedown(ids))
       Hnsw.compactRouted(spark, hnsw, p)
-      Pq.recordDeletes(spark, pq, takedown(ids))
+      Tombstones.record(spark, pq, takedown(ids))
       Ivf.compactPartitioned(spark, pq)
     }
     val after = measure()
@@ -113,6 +113,30 @@ class JobBudgetSpec extends AnyFunSuite {
     // the kind dispatch and the batch of one add no job
     assert(measure() === Seq(5, 5, 5, 6, 6, 6),
       "per-call jobs (fused plain/cosine/mips, single plain/cosine/mips)")
+  }
+
+  test("per-call jobs of a one-row frame on pq, pq_residual and ivfsq8 code layouts") {
+    val root = Files.createTempDirectory("job_budget_codes").toString
+    val cents = Ivf.kmeans(emb, C, 1)
+    val dirs = Seq(s"$root/pq", s"$root/pq_residual", s"$root/ivfsq8")
+    Pq.ensureEncodedPartitioned(emb, cents, Pq.codebooks(emb, 4, 2, 8, 1), 4, 2, dirs(0))
+    Pq.ensureEncodedPartitionedResidual(emb, cents,
+      Pq.codebooks(Pq.residuals(emb, cents).select("vec_id", "embedding"), 4, 2, 8, 1),
+      4, 2, dirs(1))
+    val (lo, hi) = Sq.bounds(emb)
+    Sq.ensureEncodedPartitioned(emb, cents, lo, hi, dirs(2))
+    val oneQuery = queries.filter(col("query_id") === 0).drop("query_id")
+    def measure(): Seq[Int] =
+      dirs.map(d => callJobs(Pq.topK(spark, d, oneQuery, 10, 3))) ++
+        dirs.map(d => callJobs(Pq.topK(spark, d, oneQuery, 10, 3, rerank = Some(Pq.Rerank(emb, 40)))))
+    measure()
+    // measured on these layouts (local[2]): layout and centroid schema
+    // reads + 1 centroid collect + the sidecar read and collect + the
+    // LUT broadcast and the top-k; re-rank adds the shortlist and query
+    // broadcasts. The LUTs come from the collected query vectors, so no
+    // kind pays for a centroid scan or a query rescan in the plan
+    assert(measure() === Seq(7, 7, 7, 9, 9, 9),
+      "per-call jobs (pq, pq_residual, ivfsq8; then each with re-rank)")
   }
 
   test("a layout read infers one schema however many compactions published") {

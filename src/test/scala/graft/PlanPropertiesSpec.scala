@@ -308,10 +308,10 @@ class PlanPropertiesSpec extends AnyFunSuite {
     val p = plan("q_ivfpq_batch_topk")
     assert(countOf(p, "PartitionFilters: [cell") == 1,
       s"exactly ONE pruned code scan serves the whole batch:\n$p")
-    // probe pairs are planned on the driver and ride as a local
-    // relation: 1 pruned code scan + the LUT-side query scan = 2,
-    // constant in Q
-    assert(countOf(p, "Scan parquet") == 2, s"unexpected scan count:\n$p")
+    // probe pairs and the LUTs are built on the driver from the
+    // collected queries and ride as local relations: the pruned code
+    // scan is the only scan, constant in Q
+    assert(countOf(p, "Scan parquet") == 1, s"unexpected scan count:\n$p")
     assert(p.contains("LocalTableScan"), s"probe pairs must be a local relation:\n$p")
     // candidate rank = bounded-heap aggregate; no probe window is left
     assert(p.contains("ObjectHashAggregate"),

@@ -161,13 +161,13 @@ class PqSpec extends AnyFunSuite {
     Pq.ensureEncoded(emb, books, M, SubDim, s"$base/flat")
     val q = emb.filter(col("vec_id") === 7)
       .select(perturbQuery(col("embedding")).as("query_vec"))
-    val all = Pq.ivfpqTopK(spark, s"$base/ivfpq", q, k = 100, nprobe = coarseC).collect()
+    val all = Pq.topK(spark, s"$base/ivfpq", q, k = 100, nprobe = coarseC).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val flat = Pq.adcTopKStored(spark, s"$base/flat", q, k = 100).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(all === flat, "probing every coarse cell must reduce IVF-PQ to flat ADC")
     // pruned probe: results are a subset of the flat ADC ranking in order
-    val pruned = Pq.ivfpqTopK(spark, s"$base/ivfpq", q, k = 10, nprobe = 2).collect()
+    val pruned = Pq.topK(spark, s"$base/ivfpq", q, k = 10, nprobe = 2).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val flatRank = flat.toMap
     assert(pruned.nonEmpty && pruned.forall { case (id, d) => flatRank(id) == d },
@@ -183,16 +183,16 @@ class PqSpec extends AnyFunSuite {
       .select(perturbQuery(col("embedding")).as("query_vec"))
     // full shortlist + all cells probed: PQ error cannot drop any
     // candidate, so the exact re-rank IS exact kNN
-    val rr = Pq.ivfpqTopKRerank(spark, s"$base/ivfpq", emb, q, k = 10,
-        nprobe = coarseC, shortlist = 100).collect()
+    val rr = Pq.topK(spark, s"$base/ivfpq", q, k = 10, nprobe = coarseC,
+        rerank = Some(Pq.Rerank(emb, 100))).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val exact = Knn.topK(emb.crossJoin(broadcast(q)), col("query_vec"), 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(rr === exact,
       "rerank with a full shortlist must reproduce exact kNN (ids AND true-L2 dists)")
     // narrow shortlist: every returned dist is still the TRUE distance
-    val narrow = Pq.ivfpqTopKRerank(spark, s"$base/ivfpq", emb, q, k = 5,
-        nprobe = 2, shortlist = 8).collect()
+    val narrow = Pq.topK(spark, s"$base/ivfpq", q, k = 5, nprobe = 2,
+        rerank = Some(Pq.Rerank(emb, 8))).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val exactDist = exact.toMap
     assert(narrow.size === 5)
@@ -230,17 +230,17 @@ class PqSpec extends AnyFunSuite {
     def groupBatch(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
-    val batch = groupBatch(Pq.ivfpqTopKBatch(spark, s"$base/ivfpq", qs, k = 10, nprobe = 3))
-    val batchPred = groupBatch(Pq.ivfpqTopKBatch(spark, s"$base/ivfpq", qs, k = 10, nprobe = 3,
+    val batch = groupBatch(Pq.topK(spark, s"$base/ivfpq", qs, k = 10, nprobe = 3))
+    val batchPred = groupBatch(Pq.topK(spark, s"$base/ivfpq", qs, k = 10, nprobe = 3,
       predicate = Some(col("vec_id") >= 20)))
     qids.foreach { qid =>
       val q1 = emb.filter(col("vec_id") === qid)
         .select(perturbQuery(col("embedding")).as("query_vec"))
-      val single = Pq.ivfpqTopK(spark, s"$base/ivfpq", q1, k = 10, nprobe = 3).collect()
+      val single = Pq.topK(spark, s"$base/ivfpq", q1, k = 10, nprobe = 3).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(batch(qid) === single,
         s"batch IVF-PQ for query $qid must equal the single-query probe result")
-      val singlePred = Pq.ivfpqTopK(spark, s"$base/ivfpq", q1, k = 10, nprobe = 3,
+      val singlePred = Pq.topK(spark, s"$base/ivfpq", q1, k = 10, nprobe = 3,
           predicate = Some(col("vec_id") >= 20)).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(batchPred(qid) === singlePred,
@@ -258,20 +258,20 @@ class PqSpec extends AnyFunSuite {
     def group(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).toSeq).toMap
-    val batch = group(Pq.ivfpqTopKRerankBatch(spark, s"$base/ivfpq", emb, qs,
-      k = 5, nprobe = 3, shortlist = 12))
+    val batch = group(Pq.topK(spark, s"$base/ivfpq", qs, k = 5, nprobe = 3,
+      rerank = Some(Pq.Rerank(emb, 12))))
     qids.foreach { qid =>
       val q1 = emb.filter(col("vec_id") === qid)
         .select(perturbQuery(col("embedding")).as("query_vec"))
-      val single = Pq.ivfpqTopKRerank(spark, s"$base/ivfpq", emb, q1, k = 5,
-          nprobe = 3, shortlist = 12).collect()
+      val single = Pq.topK(spark, s"$base/ivfpq", q1, k = 5, nprobe = 3,
+          rerank = Some(Pq.Rerank(emb, 12))).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(batch(qid) === single,
         s"batch rerank for query $qid must equal the single-query rerank")
     }
     // all cells probed + full shortlist: exact batch kNN, true L2 dists
-    val full = group(Pq.ivfpqTopKRerankBatch(spark, s"$base/ivfpq", emb, qs,
-      k = 10, nprobe = 8, shortlist = 100))
+    val full = group(Pq.topK(spark, s"$base/ivfpq", qs, k = 10, nprobe = 8,
+      rerank = Some(Pq.Rerank(emb, 100))))
     val exact = group(Knn.topKBatch(emb, qs, 10))
     assert(full === exact,
       "full-shortlist batch rerank must reproduce exact batch kNN")
@@ -288,8 +288,8 @@ class PqSpec extends AnyFunSuite {
     val qs = (0 until 20).map { i =>
       baseQ.select((col("vec_id") + lit(100L * i)).as("query_id"), col("query_vec"))
     }.reduce(_ unionByName _) // 2,000 queries
-    val df = Pq.ivfpqTopKRerankBatch(spark, s"$base/ivfpq", emb, qs,
-      k = 10, nprobe = 4, shortlist = 20)
+    val df = Pq.topK(spark, s"$base/ivfpq", qs, k = 10, nprobe = 4,
+      rerank = Some(Pq.Rerank(emb, 20)))
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("In(vec_id"),
       s"shortlist ids must meet the raw vectors via a join, not literals:\n$plan")
@@ -310,17 +310,17 @@ class PqSpec extends AnyFunSuite {
     Pq.ensureEncodedPartitioned(emb, cents, books, M, SubDim, s"$base/ivfpq")
     val qs = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-    val exact = Pq.ivfpqTopKBatch(spark, s"$base/ivfpq", qs, 10, nprobe = 4)
+    val exact = Pq.topK(spark, s"$base/ivfpq", qs, 10, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fast = Pq.ivfpqTopKBatch(spark, s"$base/ivfpq", qs, 10, nprobe = 4,
+    val fast = Pq.topK(spark, s"$base/ivfpq", qs, 10, nprobe = 4,
         exactSums = false)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(fast === exact, "double-sum ADC must select the same candidates on the fixture")
-    val exactRr = Pq.ivfpqTopKRerankBatch(spark, s"$base/ivfpq", emb, qs, 5,
-        nprobe = 4, shortlist = 20)
+    val exactRr = Pq.topK(spark, s"$base/ivfpq", qs, 5, nprobe = 4,
+      rerank = Some(Pq.Rerank(emb, 20)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val fastRr = Pq.ivfpqTopKRerankBatch(spark, s"$base/ivfpq", emb, qs, 5,
-        nprobe = 4, shortlist = 20, exactSums = false)
+    val fastRr = Pq.topK(spark, s"$base/ivfpq", qs, 5, nprobe = 4, exactSums = false,
+      rerank = Some(Pq.Rerank(emb, 20)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(fastRr === exactRr,
       "final rerank scores are exact L2 regardless of which ADC picked the shortlist")
@@ -353,7 +353,7 @@ class PqSpec extends AnyFunSuite {
     Pq.ensureEncoded(emb, books, M, SubDim, s"$base/flat")
     val q = emb.filter(col("vec_id") === 7)
       .select(perturbQuery(col("embedding")).as("query_vec"))
-    val filtered = Pq.ivfpqTopK(spark, s"$base/ivfpq", q, k = 100, nprobe = 8,
+    val filtered = Pq.topK(spark, s"$base/ivfpq", q, k = 100, nprobe = 8,
         predicate = Some(col("vec_id") >= 50)).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // every coarse cell probed ⇒ the filtered ranking must be exactly

@@ -62,7 +62,7 @@ class ResidualPqSpec extends AnyFunSuite {
     val dir = layout("recon")
     val q = query(3)
     // nprobe = C: every cell probed, so every vector is ADC-scored
-    val adc = Pq.ivfpqResidualTopK(spark, dir, q, k = 400, nprobe = CoarseC)
+    val adc = Pq.topK(spark, dir, q, k = 400, nprobe = CoarseC)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     val recon = Pq.reconstructResidual(emb, cents, resBooks, M, SubDim)
       .crossJoin(broadcast(q))
@@ -89,9 +89,9 @@ class ResidualPqSpec extends AnyFunSuite {
     val (resR, plainR) = queries.map { qid =>
       val q = query(qid)
       val truth = exactTopK(q, k)
-      val res = Pq.ivfpqResidualTopK(spark, dir, q, k, nprobe = CoarseC)
+      val res = Pq.topK(spark, dir, q, k, nprobe = CoarseC)
         .collect().map(_.getLong(0)).toSeq
-      val plain = Pq.ivfpqTopK(spark, plainDir, q, k, nprobe = CoarseC)
+      val plain = Pq.topK(spark, plainDir, q, k, nprobe = CoarseC)
         .collect().map(_.getLong(0)).toSeq
       (recall(res, truth), recall(plain, truth))
     }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
@@ -129,11 +129,11 @@ class ResidualPqSpec extends AnyFunSuite {
     val qs = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
       .cache()
-    val batch = Pq.ivfpqResidualTopKBatch(spark, dir, qs, k = 10, nprobe = 4)
+    val batch = Pq.topK(spark, dir, qs, k = 10, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).sortBy(t => (t._2, t._1))).toMap
     (0L until 8L).foreach { qid =>
-      val single = Pq.ivfpqResidualTopK(spark, dir,
+      val single = Pq.topK(spark, dir,
           qs.filter(col("query_id") === qid).select("query_vec"), k = 10, nprobe = 4)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(t => (t._2, t._1)).toSeq
       assert(batch(qid).toSeq === single, s"query $qid: batch != single")
@@ -143,8 +143,8 @@ class ResidualPqSpec extends AnyFunSuite {
   test("residual rerank at nprobe=C, shortlist=corpus == exact top-k") {
     val dir = layout("rerank")
     val q = query(11)
-    val got = Pq.ivfpqResidualTopKRerank(spark, dir, emb, q, k = 10,
-        nprobe = CoarseC, shortlist = 400)
+    val got = Pq.topK(spark, dir, q, k = 10, nprobe = CoarseC,
+      rerank = Some(Pq.Rerank(emb, 400)))
       .collect().map(_.getLong(0)).toSeq
     assert(got === exactTopK(q, 10),
       "full-shortlist rerank must reproduce the exact ranking")
@@ -155,12 +155,12 @@ class ResidualPqSpec extends AnyFunSuite {
     val grown = s"$base/grown"
     Pq.ensureEncodedPartitionedResidual(
       emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), cents, resBooks, M, SubDim, grown)
-    Pq.insertIntoResidual(spark, grown, emb.filter(pmod(col("vec_id"), lit(5)) === 0))
+    Pq.insertInto(spark, grown, emb.filter(pmod(col("vec_id"), lit(5)) === 0))
     val whole = layout("ins_whole")
     val q = query(42)
-    val a = Pq.ivfpqResidualTopK(spark, grown, q, 10, nprobe = 4)
+    val a = Pq.topK(spark, grown, q, 10, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val b = Pq.ivfpqResidualTopK(spark, whole, q, 10, nprobe = 4)
+    val b = Pq.topK(spark, whole, q, 10, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(a === b, "cell-local residual inserts must serve like a full encode")
   }
@@ -168,32 +168,36 @@ class ResidualPqSpec extends AnyFunSuite {
   test("layout-kind guards: plain insert on residual layout (and vice versa) fail loudly") {
     val dir = layout("guard")
     val rows = emb.filter(col("vec_id") < 3)
+    // a raw-vector append into residual codes, and a code append into
+    // a plain vector layout, are both refused by the recorded kind
     val e1 = intercept[IllegalArgumentException] {
-      Pq.insertInto(spark, dir, rows, M, SubDim)
+      Ivf.insertInto(spark, dir, rows)
     }
     assert(e1.getMessage.contains("residual"))
-    val plainDir = java.nio.file.Files.createTempDirectory("respq_guard_plain").toString + "/codes"
-    Pq.ensureEncodedPartitioned(emb, cents, Pq.codebooks(emb, M, SubDim, C, 1),
-      M, SubDim, plainDir)
+    val plainDir = java.nio.file.Files.createTempDirectory("respq_guard_plain").toString + "/vecs"
+    Ivf.writePartitionedWith(emb, cents, plainDir)
     val e2 = intercept[IllegalArgumentException] {
-      Pq.insertIntoResidual(spark, plainDir, rows)
+      Pq.insertInto(spark, plainDir, rows)
     }
     assert(e2.getMessage.contains("residual"))
+    val e3 = intercept[IllegalArgumentException] {
+      Pq.topK(spark, plainDir, query(3), 10, nprobe = CoarseC)
+    }
+    assert(e3.getMessage.contains("'plain'"), e3.getMessage)
   }
 
   test("tombstones on the residual layout: excluded ids reach no result") {
     val dir = layout("del")
     Tombstones.record(spark, dir, emb.filter(pmod(col("vec_id"), lit(7)) === 0).select("vec_id"))
     val q = query(3)
-    val got = Pq.ivfpqResidualTopK(spark, dir, q, 10, nprobe = CoarseC,
-        excluded = Tombstones.ids(spark, dir))
+    val got = Pq.topK(spark, dir, q, 10, nprobe = CoarseC)
       .collect().map(_.getLong(0)).toSeq
     assert(got.forall(_ % 7 != 0), "tombstoned ids must not appear")
     // and the survivors rank exactly like a layout built without them
     val cleanBase = java.nio.file.Files.createTempDirectory("respq_del_clean").toString + "/codes"
     Pq.ensureEncodedPartitionedResidual(emb.filter(pmod(col("vec_id"), lit(7)) =!= 0),
       cents, resBooks, M, SubDim, cleanBase)
-    val clean = Pq.ivfpqResidualTopK(spark, cleanBase, q, 10, nprobe = CoarseC)
+    val clean = Pq.topK(spark, cleanBase, q, 10, nprobe = CoarseC)
       .collect().map(_.getLong(0)).toSeq
     assert(got === clean, "serve-time exclusion must equal rebuild-without")
   }

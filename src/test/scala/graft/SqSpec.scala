@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorFunctions._
-import graft.operators.{Ivf, Sq, Tombstones}
+import graft.operators.{Ivf, Pq, Sq, Tombstones}
 
 /** Scalar-quantization (SQ8) invariants: codes in range, the ADC
   * identity against affine reconstructions, batch ≡ single, two-stage
@@ -61,7 +61,8 @@ class SqSpec extends AnyFunSuite {
     // every cell probed + a 5x shortlist: the 8-bit grid (~0.4 unit
     // cells on a 100-unit range) must place the true neighbors in the
     // shortlist
-    val got = Sq.ivfsqTopKRerank(spark, dir, emb, q, k = 10, nprobe = 8, shortlist = 50)
+    val got = Pq.topK(spark, dir, q, k = 10, nprobe = 8,
+      rerank = Some(Pq.Rerank(emb, 50)))
       .collect().map(_.getLong(0)).toSeq
     assert(got === exactTopK(q, 10))
   }
@@ -100,10 +101,10 @@ class SqSpec extends AnyFunSuite {
     assert(fast === exact)
     val pdir = java.nio.file.Files.createTempDirectory("sq_fast2").toString + "/cells"
     Sq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 8), lo, hi, pdir)
-    val e1 = Sq.ivfsqTopK(spark, pdir, emb.filter(col("vec_id") === 3)
+    val e1 = Pq.topK(spark, pdir, emb.filter(col("vec_id") === 3)
         .select(perturbQuery(col("embedding")).as("query_vec")), 10, nprobe = 8)
       .collect().map(_.getLong(0)).toSeq
-    val f1 = Sq.ivfsqTopK(spark, pdir, emb.filter(col("vec_id") === 3)
+    val f1 = Pq.topK(spark, pdir, emb.filter(col("vec_id") === 3)
         .select(perturbQuery(col("embedding")).as("query_vec")), 10, nprobe = 8,
         exactSums = false)
       .collect().map(_.getLong(0)).toSeq
@@ -115,18 +116,18 @@ class SqSpec extends AnyFunSuite {
     val grown = s"$base/grown"
     Sq.ensureEncodedPartitioned(emb.filter(pmod(col("vec_id"), lit(5)) =!= 0),
       Ivf.centroids(emb, 8), lo, hi, grown)
-    Sq.insertInto(spark, grown, emb.filter(pmod(col("vec_id"), lit(5)) === 0))
+    Pq.insertInto(spark, grown, emb.filter(pmod(col("vec_id"), lit(5)) === 0))
     val whole = s"$base/whole"
     Sq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 8), lo, hi, whole)
     val q = query(17)
-    val a = Sq.ivfsqTopK(spark, grown, q, 10, nprobe = 4)
+    val a = Pq.topK(spark, grown, q, 10, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val b = Sq.ivfsqTopK(spark, whole, q, 10, nprobe = 4)
+    val b = Pq.topK(spark, whole, q, 10, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(a === b)
     // a row outside the trained bounds clamps to the edge levels
     val out = Seq((999L, Array.fill(16)(1e6f))).toDF("vec_id", "embedding")
-    Sq.insertInto(spark, grown, out)
+    Pq.insertInto(spark, grown, out)
     val codes = spark.read.parquet(grown).filter(col("vec_id") === 999L)
       .select("codes").collect()(0).getSeq[Int](0)
     assert(codes.forall(_ === 255), "out-of-range components must clamp to level 255")
@@ -136,8 +137,7 @@ class SqSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("sq_del").toString + "/codes"
     Sq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 8), lo, hi, dir)
     Tombstones.record(spark, dir, emb.filter(pmod(col("vec_id"), lit(7)) === 0).select("vec_id"))
-    val got = Sq.ivfsqTopK(spark, dir, query(3), 10, nprobe = 8,
-        excluded = Tombstones.ids(spark, dir))
+    val got = Pq.topK(spark, dir, query(3), 10, nprobe = 8)
       .collect().map(_.getLong(0)).toSeq
     assert(got.nonEmpty && got.forall(_ % 7 != 0))
   }
@@ -146,7 +146,7 @@ class SqSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("sq_guard").toString + "/cells"
     Ivf.ensurePartitioned(emb, 8, dir)
     val e = intercept[IllegalArgumentException] {
-      Sq.insertInto(spark, dir, emb.filter(col("vec_id") < 3))
+      Pq.insertInto(spark, dir, emb.filter(col("vec_id") < 3))
     }
     assert(e.getMessage.contains("IVF-SQ8"))
   }

@@ -588,7 +588,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
 
   test("streaming SQ8 maintenance: micro-batch frozen-bounds appends == single-pass encode") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{Ivf, Sq}
+    import graft.operators.{Ivf, Pq, Sq}
     val all = (0L until 150L).map { i =>
       val rnd = new scala.util.Random(i * 3 + 7)
       (i, Array.fill(8)(rnd.nextFloat() * 100f))
@@ -601,7 +601,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     Sq.ensureEncodedPartitioned(baseRows.toDF("vec_id", "embedding"), cents, lo, hi, dir)
 
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = StreamingAnn.maintainSq(mem.toDF().toDF("vec_id", "embedding"), dir)
+    val q = StreamingAnn.maintainCodes(mem.toDF().toDF("vec_id", "embedding"), dir)
     try {
       mem.addData(freshRows: _*)
       q.processAllAvailable()
@@ -611,9 +611,9 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       .select(graft.functions.VectorFunctions.perturbQuery(col("embedding")).as("query_vec"))
     val fullDir = java.nio.file.Files.createTempDirectory("stream_sq_full").toString + "/codes"
     Sq.ensureEncodedPartitioned(allDf, cents, lo, hi, fullDir)
-    val streamed = Sq.ivfsqTopK(spark, dir, oneQuery, 10, nprobe = 8)
+    val streamed = Pq.topK(spark, dir, oneQuery, 10, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val batch = Sq.ivfsqTopK(spark, fullDir, oneQuery, 10, nprobe = 8)
+    val batch = Pq.topK(spark, fullDir, oneQuery, 10, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(streamed === batch, "streamed SQ8 layout must serve like a single-pass encode")
   }
@@ -663,7 +663,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     Pq.ensureEncodedPartitioned(baseRows.toDF("vec_id", "embedding"), cents, books, 4, 2, dir)
 
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = StreamingAnn.maintainPq(mem.toDF().toDF("vec_id", "embedding"), dir, 4, 2)
+    val q = StreamingAnn.maintainCodes(mem.toDF().toDF("vec_id", "embedding"), dir)
     try {
       mem.addData(freshRows: _*)
       q.processAllAvailable()
@@ -673,9 +673,9 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       .select(graft.functions.VectorFunctions.perturbQuery(col("embedding")).as("query_vec"))
     val fullDir = java.nio.file.Files.createTempDirectory("stream_pq_full").toString + "/codes"
     Pq.ensureEncodedPartitioned(allDf, cents, books, 4, 2, fullDir)
-    val streamed = Pq.ivfpqTopK(spark, dir, oneQuery, 10, nprobe = 8)
+    val streamed = Pq.topK(spark, dir, oneQuery, 10, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val batch = Pq.ivfpqTopK(spark, fullDir, oneQuery, 10, nprobe = 8)
+    val batch = Pq.topK(spark, fullDir, oneQuery, 10, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(streamed === batch, "streamed PQ code layout must serve like a single-pass encode")
   }
@@ -698,7 +698,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       baseRows.toDF("vec_id", "embedding"), cents, resBooks, 4, 2, dir)
 
     val mem = MemoryStream[(Long, Array[Float])]
-    val q = StreamingAnn.maintainResidual(mem.toDF().toDF("vec_id", "embedding"), dir)
+    val q = StreamingAnn.maintainCodes(mem.toDF().toDF("vec_id", "embedding"), dir)
     try {
       mem.addData(freshRows: _*)
       q.processAllAvailable()
@@ -708,9 +708,9 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       .select(graft.functions.VectorFunctions.perturbQuery(col("embedding")).as("query_vec"))
     val fullDir = java.nio.file.Files.createTempDirectory("stream_respq_full").toString + "/codes"
     Pq.ensureEncodedPartitionedResidual(allDf, cents, resBooks, 4, 2, fullDir)
-    val streamed = Pq.ivfpqResidualTopK(spark, dir, oneQuery, 10, nprobe = 8)
+    val streamed = Pq.topK(spark, dir, oneQuery, 10, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val batch = Pq.ivfpqResidualTopK(spark, fullDir, oneQuery, 10, nprobe = 8)
+    val batch = Pq.topK(spark, fullDir, oneQuery, 10, nprobe = 8)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(streamed === batch,
       "streamed residual code layout must serve like a single-pass encode")

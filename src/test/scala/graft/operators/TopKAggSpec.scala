@@ -109,16 +109,30 @@ class TopKAggSpec extends AnyFunSuite {
     Ivf.ensurePartitioned(emb, 16, s"$dir/plain")
     Ivf.ensurePartitionedCosine(emb, 16, s"$dir/cosine")
     Ivf.ensurePartitionedMips(emb, 16, s"$dir/mips")
-    for (kind <- Seq("plain", "cosine", "mips"); qid <- Seq(3L, 17L); nprobe <- Seq(2, 16)) {
+    // the code layouts: Pq.topK serves each, with and without re-rank
+    val cents = Ivf.centroids(emb, 16)
+    Pq.ensureEncodedPartitioned(emb, cents, Pq.codebooks(emb, 4, 4, 8, 1), 4, 4, s"$dir/pq")
+    Pq.ensureEncodedPartitionedResidual(emb, cents,
+      Pq.codebooks(Pq.residuals(emb, cents).select("vec_id", "embedding"), 4, 4, 8, 1,
+        seedOffset = 16), 4, 4, s"$dir/pq_residual")
+    val (lo, hi) = Sq.bounds(emb)
+    Sq.ensureEncodedPartitioned(emb, cents, lo, hi, s"$dir/ivfsq8")
+    val vectorKinds = Seq("plain", "cosine", "mips")
+    def serve(kind: String, qs: org.apache.spark.sql.DataFrame, nprobe: Int,
+              rerank: Option[Pq.Rerank]) =
+      if (vectorKinds.contains(kind)) Ivf.topKPartitioned(spark, s"$dir/$kind", qs, 10, nprobe)
+      else Pq.topK(spark, s"$dir/$kind", qs, 10, nprobe, rerank = rerank)
+    for (kind <- vectorKinds ++ Seq("pq", "pq_residual", "ivfsq8");
+         rerank <- if (vectorKinds.contains(kind)) Seq(None) else Seq(None, Some(Pq.Rerank(emb, 30)));
+         qid <- Seq(3L, 17L); nprobe <- Seq(2, 16)) {
       val one = emb.filter(col("vec_id") === qid).select(perturbQuery(col("embedding")).as("query_vec"))
-      val single = Ivf.topKPartitioned(spark, s"$dir/$kind", one, 10, nprobe)
-      val batch = Ivf.topKPartitioned(spark, s"$dir/$kind", one.withColumn("query_id", lit(qid)),
-        10, nprobe)
-      assert(single.columns.toSeq === batch.columns.toSeq.tail, s"$kind: (vec_id, score) out")
+      val single = serve(kind, one, nprobe, rerank)
+      val batch = serve(kind, one.withColumn("query_id", lit(qid)), nprobe, rerank)
+      val what = s"$kind rerank=${rerank.isDefined} q=$qid nprobe=$nprobe"
+      assert(single.columns.toSeq === batch.columns.toSeq.tail, s"$what: (vec_id, score) out")
       val rows = single.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(rows.length === 10)
-      assert(rows === batch.collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq,
-        s"$kind q=$qid nprobe=$nprobe")
+      assert(rows.length === 10, what)
+      assert(rows === batch.collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq, what)
     }
   }
 
