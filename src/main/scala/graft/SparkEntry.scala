@@ -1877,23 +1877,28 @@ object SparkEntry {
       val qs = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
       val p = Hnsw.Params()
-      val (nodes, edges) = Hnsw.ensureSaved(emb, p, idxDir(s, dir, "hash", p))
-      Hnsw.searchWithIndex(nodes, edges, qs, 10, p)
+      val hdir = idxDir(s, dir, "hash", p)
+      Hnsw.ensureSaved(emb, p, hdir)
+      Hnsw.search(s, hdir, qs, 10, p)
     }),
-    // Deletion lifecycle made driver-visible: tombstoned ids (every
+    // Deletion lifecycle made driver-visible: the deleted ids (every
     // 7th) are excluded from serving through the filtered-ANN
-    // eligibility machinery — deleted nodes stay navigable bridges but
-    // are never returned; no rebuild. No oracle (HNSW is approximate);
-    // IndexDeleteSpec pins serving ≡ rebuild-without-deleted plus the
-    // compaction path (affected shards only, untouched byte-identical).
+    // eligibility machinery — ineligible nodes stay navigable bridges
+    // but are never returned; no rebuild. They ride as the search
+    // predicate, not as recorded tombstones, because the `hash` layout
+    // is shared with q_hnsw_topk and q_hnsw_throughput: a recorded
+    // sidecar would reach both. No oracle (HNSW is approximate);
+    // IndexDeleteSpec pins tombstone serving ≡ rebuild-without-deleted
+    // plus the compaction path (affected shards only, untouched shards'
+    // files not rewritten).
     "q_hnsw_tombstone_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val qs = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
       val p = Hnsw.Params()
-      val (nodes, edges) = Hnsw.ensureSaved(emb, p, idxDir(s, dir, "hash", p))
-      val dels = emb.filter(pmod(col("vec_id"), lit(7)) === 0).select("vec_id")
-      Hnsw.searchWithIndexDeletes(nodes, edges, dels, qs, 10, p)
+      val hdir = idxDir(s, dir, "hash", p)
+      Hnsw.ensureSaved(emb, p, hdir)
+      Hnsw.search(s, hdir, qs, 10, p, predicate = Some(pmod(col("vec_id"), lit(7)) =!= 0))
     }),
     // ANN throughput harness: every vector perturbed into a query, k=10
     // (the reference's q/s benchmark shape, hnsw.cc measured in
@@ -1907,8 +1912,9 @@ object SparkEntry {
       val qs = emb.select(col("vec_id").as("query_id"),
         perturbQuery(col("embedding")).as("query_vec"))
       val p = Hnsw.Params()
-      val (nodes, edges) = Hnsw.ensureSaved(emb, p, idxDir(s, dir, "hash", p))
-      Hnsw.searchWithIndex(nodes, edges, qs, 10, p)
+      val hdir = idxDir(s, dir, "hash", p)
+      Hnsw.ensureSaved(emb, p, hdir)
+      Hnsw.search(s, hdir, qs, 10, p)
     }),
     // Recall harness exercises the ROUTED scale path: semantic shards
     // from k-means cells with 2× boundary replication, each query
@@ -1923,13 +1929,14 @@ object SparkEntry {
       val p = Hnsw.Params()
       val rdir = idxDir(s, dir, "routed", p)
       Hnsw.ensureSavedRouted(emb, Ivf.kmeansCached(emb, 8, 2, dir), p, rdir)
-      val ann = Hnsw.searchRoutedWithIndex(s, rdir, qs, 10, p, nprobe = 5)
+      val ann = Hnsw.search(s, rdir, qs, 10, p, nprobe = 5)
       Hnsw.recallOf(ann, emb, qs, 10)
     }),
     // Incremental-insert lifecycle made driver-visible (reference
     // Insert, hnsw.cc:147-215): the last ~10% of ids play the daily
     // append — base index built once, batch inserted through the
-    // beam-insert path touching only affected shards, flushed, SERVED;
+    // beam-insert path touching only affected shards and published as
+    // one snapshot version, SERVED;
     // output is per-query recall@10 vs exact over the full (N+M) set
     // for 10 old + 10 freshly-inserted self-queries. No oracle (ANN);
     // the recall floor is pinned in HnswSpec.
@@ -1938,12 +1945,12 @@ object SparkEntry {
       val p = Hnsw.Params()
       val n = emb.agg(max(col("vec_id"))).head().getLong(0) + 1
       val cut = n - math.max(n / 10, 1)
-      val (nodes, edges) = Hnsw.ensureInsertedSaved(
-        emb.filter(col("vec_id") < cut), emb.filter(col("vec_id") >= cut), p,
-        idxDir(s, dir, "incrbase", p), idxDir(s, dir, "incr", p))
+      val idir = idxDir(s, dir, "incr", p)
+      Hnsw.ensureInsertedSaved(
+        emb.filter(col("vec_id") < cut), emb.filter(col("vec_id") >= cut), p, idir)
       val qs = emb.filter(col("vec_id") < 10 || col("vec_id") >= n - 10)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-      Hnsw.recallOf(Hnsw.searchWithIndex(nodes, edges, qs, 10, p), emb, qs, 10)
+      Hnsw.recallOf(Hnsw.search(s, idir, qs, 10, p), emb, qs, 10)
     }),
     // kNN GRAPH — top-k nearest neighbors for EVERY vector (semantic
     // dedup / clustering / diversity sampling substrate). The exact
@@ -2211,7 +2218,7 @@ object SparkEntry {
         Ivf.centroidsFrom(emb, 8, 8), p, rdir)
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-      Hnsw.searchRoutedWithIndex(s, rdir, qs, 10, p, nprobe = 5)
+      Hnsw.search(s, rdir, qs, 10, p, nprobe = 5)
     }),
     // The insert lifecycle on the COSINE serving layout: base 4/5 +
     // Ivf.insertInto'd 1/5 (rows normalized with the layout's own

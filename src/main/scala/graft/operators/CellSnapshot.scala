@@ -4,24 +4,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Snapshot-isolated publication for cell-partitioned index layouts
-  * ([[Ivf]] `cell=` trees, [[Hnsw]] routed `part=` trees, [[Pq]] code
-  * cells). The reference has no storage lifecycle at all (hnsw.cc is a
-  * single in-memory structure); this is the piece that makes the
-  * on-disk layouts SAFE under concurrent readers: published files are
-  * IMMUTABLE — a maintenance operation never deletes or renames a file
-  * a reader could have planned against — and visibility flips through
-  * the atomic appearance of a NEW manifest file, the same
-  * write-everything-then-commit discipline as `Hnsw.appendGeneration`'s
-  * per-generation `_graft_commit`.
+  * ([[Ivf]] `cell=` trees, [[Hnsw]] `part=` trees — routed cells and
+  * exhaustive hash shards alike — and [[Pq]] code cells): the one
+  * publish protocol of every persisted index. The reference has no
+  * storage lifecycle at all (hnsw.cc is a single in-memory structure);
+  * this is the piece that makes the on-disk layouts SAFE under
+  * concurrent readers: published files are IMMUTABLE — a maintenance
+  * operation never deletes or renames a file a reader could have
+  * planned against — and visibility flips through the atomic
+  * appearance of a NEW manifest file, written only after every data
+  * file of its generation is in place.
   *
   * Physical layout under an index root `dir` (per sub-tree `sub`,
-  * empty for IVF, `nodes`/`edges` for routed HNSW):
+  * empty for IVF, `nodes`/`edges` for HNSW):
   *
   *   dir/<sub>/<partCol>=<id>/...          generation-0 subtrees (the
   *                                         original build — partition
   *                                         discovery works unchanged)
-  *   dir/_gen/g=<N>/<sub>/<partCol>=<id>/  subtrees REBUILT by
-  *                                         compaction N (N >= 1)
+  *   dir/_gen/g=<N>/<sub>/<partCol>=<id>/  subtrees rewritten by the
+  *                                         maintenance op (compaction,
+  *                                         recluster, graph insert)
+  *                                         that published version N
+  *                                         (N >= 1)
   *   dir/_manifests/m<V>                   manifest version V: one
   *                                         "<id> <gen>" line per live
   *                                         cell (immutable, never
@@ -35,9 +39,11 @@ import org.apache.spark.sql.functions._
   * so every publish is one atomic rename of a new name. Concurrent
   * maintenance is single-writer by contract (two compactions racing
   * the same version is a caller error; the loser's rename fails loudly
-  * rather than silently clobbering).
+  * rather than silently clobbering). A writer interrupted before its
+  * rename leaves an unpublished `_gen/g=<V+1>` tree that no manifest
+  * names: readers keep serving V, and the next writer overwrites it.
   *
-  * Until a first compaction publishes a manifest, none exists and
+  * Until a first maintenance op publishes a manifest, none exists and
   * [[read]] is exactly `spark.read.parquet` — zero overhead on the
   * build-then-serve path. After one, readers resolve the newest
   * manifest once at plan time and union the per-generation trees
@@ -143,9 +149,11 @@ private[graft] object CellSnapshot {
     * `spark.read.parquet` (identical plan to the pre-snapshot engine);
     * with one, a union of the per-generation trees each filtered to its
     * live cells — the cell filters stay partition filters, so probe
-    * pruning composes unchanged. Only the generation-0 read infers a
-    * schema: later generations are read with it, so a read costs one
-    * inference job however many compactions have published.
+    * pruning composes unchanged. Only the oldest live tree's read infers
+    * a schema (generation 0 while any build cell is live): later
+    * generations are read with it, so a read costs one inference job
+    * however many compactions have published, and still resolves once
+    * [[vacuum]] has reclaimed every generation-0 cell.
     */
   def read(spark: SparkSession, dir: String, sub: String, partCol: String): DataFrame =
     readResolved(spark, dir, sub, partCol, mapping(spark, dir).map(_._2))
@@ -169,22 +177,24 @@ private[graft] object CellSnapshot {
     mapping match {
       case None => spark.read.parquet(basePath)
       case Some(m) =>
-        val base = spark.read.parquet(basePath)
         val fs = fsOf(spark, dir)
-        val frames = m.groupBy(_._2).toSeq.sortBy(_._1).flatMap { case (g, cells) =>
-          val root = genRoot(dir, sub, g)
-          // a generation whose `sub` tree is empty was never written
-          // (e.g. a rebuilt part with zero edges) — contributes nothing
-          if (g == 0) Some(base.filter(col(partCol).isin(cells.keys.toSeq: _*)))
-          else if (!fs.exists(new org.apache.hadoop.fs.Path(root))) None
-          // every generation is written with the base tree's columns:
-          // reading it with that schema skips a schema-inference job
-          // per generation
-          else Some(spark.read.schema(base.schema).parquet(root)
-            .filter(col(partCol).isin(cells.keys.toSeq: _*)))
+        // a generation whose `sub` tree is empty was never written
+        // (e.g. a rebuilt part with zero edges) — contributes nothing
+        val live = m.groupBy(_._2).toSeq.sortBy(_._1)
+          .map { case (g, cells) => (genRoot(dir, sub, g), cells.keys.toSeq) }
+          .filter { case (root, _) => fs.exists(new org.apache.hadoop.fs.Path(root)) }
+        live.headOption match {
+          case None => spark.read.parquet(basePath).filter(lit(false))
+          case Some((root0, _)) =>
+            // every generation is written with the build tree's columns:
+            // reading the rest with the oldest's schema skips a
+            // schema-inference job per generation
+            val first = spark.read.parquet(root0)
+            live.map { case (root, cells) =>
+              (if (root == root0) first else spark.read.schema(first.schema).parquet(root))
+                .filter(col(partCol).isin(cells: _*))
+            }.reduce(_ unionByName _)
         }
-        if (frames.isEmpty) base.filter(lit(false))
-        else frames.reduce(_ unionByName _)
     }
   }
 

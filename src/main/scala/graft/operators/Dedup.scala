@@ -657,8 +657,8 @@ object Dedup {
     * half of the incremental contract (absorb appends grow the table
     * by |changed labels| per batch; without compaction the serve-side
     * latest-generation fold pays Σ appended rows forever, the same
-    * reason the index layouts have `compactGeneration`/
-    * `compactPartitioned`). Run on the maintenance cadence, not per
+    * reason the index layouts have `Hnsw.compactRouted`/
+    * `Ivf.compactPartitioned`). Run on the maintenance cadence, not per
     * batch.
     *
     * READER-ATOMIC via the two-table flip: the compacted labeling is

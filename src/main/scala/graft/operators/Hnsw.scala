@@ -36,6 +36,14 @@ import graft.functions.Portable
   *     of O(P); its probes are planned on the driver (`Ivf`'s probe
   *     plan collects the query batch, which must fit there) and the
   *     per-shard query lists are broadcast, so only the vectors shuffle.
+  *  4. Both shapes persist as one on-disk layout: `nodes` + `edges`
+  *     trees partitioned by `part` (hash shard or IVF cell), published
+  *     through [[CellSnapshot]] manifests, with routing `centroids`
+  *     beside them when the shards are cells. [[search]] is the one
+  *     serve over it — the reference's long-lived `Hnsw` object
+  *     answering every `FindNearest` (hnsw.cc:114-137) — and the
+  *     layout decides exhaustive or routed fan-out; [[insertInto]],
+  *     [[compactRouted]] and [[vacuumRouted]] maintain it.
   *
   * The in-partition algorithm is the *paper* algorithm, deliberately
   * fixing the reference's two recall bugs (SURVEY.md §1.4.3-4): search
@@ -395,7 +403,9 @@ object Hnsw {
     * queries through it — no driver collect, no broadcast of the vector
     * table; vectors move through exactly one shuffle keyed by shard,
     * queries through one shuffle keyed by shard, so a query batch as
-    * large as the corpus is served.
+    * large as the corpus is served. Every shard sees the whole batch,
+    * so each one refuses a repeated `query_id` as it streams the ids
+    * (the probe plan's rule, at no extra job).
     */
   private def searchCogrouped(
       recs: org.apache.spark.sql.Dataset[ShardRec],
@@ -407,7 +417,10 @@ object Hnsw {
       if (!qs.hasNext) Iterator.empty // unprobed shard: skip the build
       else {
         val g = shardGraph(rs.toArray, p, rebuild)
+        val seen = mutable.HashSet.empty[Long]
         qs.flatMap { case (_, qid, qv) =>
+          require(seen.add(qid),
+            s"duplicate query_id in the query batch: query_id $qid appears more than once")
           g.search(qv.map(_.toFloat), k, filtered).map { case (id, d) => (qid, id, d) }
         }
       }
@@ -474,7 +487,7 @@ object Hnsw {
   /** Each query on its `nprobe` nearest cells by centroid distance
     * (`Ivf`'s driver-side probe plan) — the O(nprobe)-per-query
     * fan-out shared by the rebuilt ([[searchRouted]]) and persisted
-    * ([[searchRoutedWithIndex]]) paths.
+    * ([[search]] on a routed layout) paths.
     */
   private def routed(queries: DataFrame, centroids: DataFrame, nprobe: Int)
       : Map[Int, Array[(Long, Array[Double])]] =
@@ -491,36 +504,28 @@ object Hnsw {
     searchCogrouped(nodeRecs(embeddings, p), replicateAll(queries, p.numPartitions),
       k, p, rebuild = true)
 
-  /** Persist a built index as two Parquet tables: `nodes(vec_id,
-    * embedding, level)` + `edges(part, src, dst, layer)` — the
-    * relational encoding of the reference's pointer graph (SURVEY.md
-    * §1.1). `load` + [[searchWithIndex]] then serve queries without
-    * rebuilding.
+  /** Persist the EXHAUSTIVE (hash-sharded) index as two Parquet trees
+    * partitioned by shard: `nodes(vec_id, embedding, level, part)` +
+    * `edges(src, dst, layer, part)` — the relational encoding of the
+    * reference's pointer graph (SURVEY.md §1.1), and the same layout
+    * [[saveRouted]] writes minus the routing centroids. [[search]] then
+    * serves queries without rebuilding; every maintenance op that
+    * touches a subset of shards ([[insertInto]], [[compactRouted]]) is a
+    * partition-pruned read plus one [[CellSnapshot]] generation.
     */
   def save(embeddings: DataFrame, p: Params, dir: String): Unit = {
-    // Both tables are stored PARTITIONED BY shard (`part=<k>/…`): every
-    // maintenance op that touches a subset of shards — insertInto's
-    // affected-shard load, compactGeneration's rebuild — becomes a
-    // partition-pruned read, and compaction can byte-copy untouched
-    // shards' files instead of rewriting the whole index.
+    val spark = embeddings.sparkSession
     embeddings
       .select(col("vec_id"), col("embedding"), levelColumn(p).as("level"),
         pmod(col("vec_id"), lit(p.numPartitions)).cast("int").as("part"))
       .write.mode("overwrite").partitionBy("part").parquet(s"$dir/nodes")
     buildEdges(embeddings, p)
       .write.mode("overwrite").partitionBy("part").parquet(s"$dir/edges")
-  }
-
-  /** Search a PERSISTED index: shard graphs are reconstructed from the
-    * stored adjacency (no re-insertion — loading is O(edges)) inside
-    * the same cogroup shuffle as [[searchTopK]] — nodes and edges of a
-    * shard meet their queries in one task; nothing is collected to the
-    * driver.
-    */
-  def searchWithIndex(nodes: DataFrame, edges: DataFrame, queries: DataFrame,
-                      k: Int, p: Params): DataFrame = {
-    val recs = nodeRecs(nodes.select("vec_id", "embedding"), p).union(edgeRecs(edges))
-    searchCogrouped(recs, replicateAll(queries, p.numPartitions), k, p, rebuild = false)
+    // a full rebuild supersedes any snapshot lineage at this dir, and
+    // any routing a routed layout left there (see [[search]])
+    CellSnapshot.reset(spark, dir)
+    val cents = new org.apache.hadoop.fs.Path(s"$dir/centroids")
+    cents.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(cents, true)
   }
 
   /** Stored adjacency rows as tagged shard records. */
@@ -535,18 +540,17 @@ object Hnsw {
   }
 
   /** [[save]] if `dir` holds no index yet (keyed by the caller choosing
-    * a content-derived dir name), then the loaded `(nodes, edges)` pair.
-    * This is how a serving pipeline amortizes the build the way the
-    * reference does (its `Hnsw` object outlives every `FindNearest`,
+    * a content-derived dir name), then [[search]] serves it. This is
+    * how a serving pipeline amortizes the build the way the reference
+    * does (its `Hnsw` object outlives every `FindNearest`,
     * hnsw.cc:114-137): build once, serve many batches.
     */
-  def ensureSaved(embeddings: DataFrame, p: Params, dir: String): (DataFrame, DataFrame) = {
+  def ensureSaved(embeddings: DataFrame, p: Params, dir: String): Unit = {
     val spark = embeddings.sparkSession
     val fp = IndexMeta.cachedFingerprint(dir, s"p=$p", Seq(embeddings)) {
       fingerprint(embeddings, s"p=$p")
     }
     if (!indexValid(spark, dir, fp)) { save(embeddings, p, dir); writeFp(spark, dir, fp) }
-    (spark.read.parquet(s"$dir/nodes"), spark.read.parquet(s"$dir/edges"))
   }
 
   /** Content fingerprint of the source table + params — see
@@ -568,55 +572,120 @@ object Hnsw {
                          fp: String): Boolean =
     IndexMeta.valid(spark, dir, "edges/_SUCCESS", fp)
 
-  private[graft] def indexExists(spark: org.apache.spark.sql.SparkSession, dir: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/edges/_SUCCESS")
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
+  private def exists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   // ------------------------------------------------------------------
-  // Incremental insert (reference Insert, hnsw.cc:147-215)
+  // Serving and incremental insert (reference FindNearest / Insert,
+  // hnsw.cc:114-215)
   // ------------------------------------------------------------------
 
-  /** Incremental insert: route `newRows(vec_id, embedding)` to their
-    * hash shards, load ONLY the affected shards' stored graphs
-    * (O(edges) — no re-insertion of existing points), insert the new
-    * vectors through the normal beam-insert path, and re-emit those
-    * shards' edge sets. Unaffected shards pass through untouched, so
-    * appending a batch costs O(batch·ef + affected shard edges), not a
-    * full rebuild — the engine's analog of the reference's always-on
-    * incremental `Insert`. Returns the updated `(nodes, edges)`.
+  /** THE persisted HNSW serve: per-query top-k `(query_id, vec_id,
+    * dist)` of `queries(query_id, query_vec)` from the layout at `dir`
+    * ([[save]] or [[saveRouted]]), each probed shard's graph loaded from
+    * its stored adjacency in O(edges) — nothing is rebuilt.
+    *
+    * The layout decides the fan-out. One that carries routing
+    * `centroids` probes each query's `nprobe` nearest cells
+    * ([[searchProbed]]; the probe plan collects the batch, which must
+    * fit on the driver). Any other meets every query at every hash
+    * shard in the queries×shards cogroup ([[searchCogrouped]]), so a
+    * corpus-sized batch never reaches the driver, and `nprobe` is
+    * unused. Both refuse a repeated `query_id`. `p` is the build's.
+    *
+    * Nodes, edges and centroids resolve against ONE manifest version:
+    * a maintenance op publishing between independent reads must never
+    * hand a query a cross-version node/edge mix or new routing over old
+    * shards. The layout's tombstones ([[Tombstones]]) and `predicate`
+    * (over the stored node columns; filtered ANN) mark nodes
+    * INELIGIBLE: still loaded and traversed — removing them would sever
+    * edges and strand regions — but never returned. A takedown
+    * therefore reaches serving immediately, with no shard rewrite.
     */
-  def insertInto(nodes: DataFrame, edges: DataFrame, newRows: DataFrame,
-                 p: Params): (DataFrame, DataFrame) = {
-    val spark = nodes.sparkSession
+  def search(spark: org.apache.spark.sql.SparkSession, dir: String, queries: DataFrame,
+             k: Int, p: Params, nprobe: Int = 0,
+             predicate: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     import spark.implicits._
-    val newNodes = newRows
+    val v = CellSnapshot.version(spark, dir)
+    def tree(sub: String) =
+      v.fold(spark.read.parquet(s"$dir/$sub"))(CellSnapshot.readAt(spark, dir, sub, "part", _))
+    val (nodes, edges) = (tree("nodes"), tree("edges"))
+    val tombs = Tombstones.ids(spark, dir)
+    val marked = tombs.fold(nodes)(t =>
+      nodes.join(broadcast(t.withColumn("__tomb", lit(true))), Seq("vec_id"), "left"))
+    val eligible = (predicate.toSeq ++ tombs.map(_ => col("__tomb").isNull)).reduceOption(_ && _)
+    val recs = marked
+      .select(col("part"), lit(true).as("is_node"), col("vec_id"),
+        eligible.fold(lit(1L))(e => when(e, 1L).otherwise(0L)).as("b"),
+        col("level"), col("embedding"))
+      .as[ShardRec]
+      .union(edgeRecs(edges))
+    if (exists(spark, s"$dir/centroids")) {
+      require(nprobe > 0, s"$dir is a routed layout: Hnsw.search needs nprobe >= 1")
+      val cents = v.fold(spark.read.parquet(s"$dir/centroids"))(routedCentroidsAt(spark, dir, _))
+      searchProbed(recs, routed(queries, cents, nprobe), k, p, rebuild = false,
+        filtered = eligible.isDefined)
+    } else searchCogrouped(recs, replicateAll(queries, p.numPartitions), k, p,
+      rebuild = false, filtered = eligible.isDefined)
+  }
+
+  /** [[search]] under its former routed name, kept for callers outside
+    * `src` (the benchmark).
+    */
+  def searchRoutedWithIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
+                            queries: DataFrame, k: Int, p: Params, nprobe: Int,
+                            predicate: Option[org.apache.spark.sql.Column] = None): DataFrame =
+    search(spark, dir, queries, k, p, nprobe, predicate)
+
+  /** Incremental APPEND into an exhaustive layout ([[save]]): the
+    * batch's `rows(vec_id, embedding)` route to their hash shards, ONLY
+    * the affected shards load their stored graphs (O(edges) — existing
+    * points are not re-inserted) and take the new vectors through the
+    * normal beam-insert path, and those shards' nodes and edges are
+    * written as one new [[CellSnapshot]] generation published by a
+    * single manifest flip. Untouched shards' files are not touched and
+    * stay referenced by the manifest, so a batch costs O(batch·ef +
+    * affected shard edges), not a full rebuild, and a reader keeps the
+    * version it resolved. A dir with no index yet is built by [[save]]
+    * from the batch. The source fingerprint is invalidated: the grown
+    * layout no longer derives from its source.
+    */
+  def insertInto(spark: org.apache.spark.sql.SparkSession, dir: String, rows: DataFrame,
+                 p: Params): Unit = {
+    import spark.implicits._
+    if (!exists(spark, s"$dir/edges/_SUCCESS")) return save(rows, p, dir)
+    val fresh = rows
       .select(pmod(col("vec_id"), lit(p.numPartitions)).cast("int").as("part"),
         col("vec_id"), levelColumn(p).as("level"), col("embedding"))
       .as[(Int, Long, Int, Array[Float])]
     // affected shard ids: O(P) ints to the driver — partition-filter
-    // formation, same legitimacy class as Ivf.probePlan's cell ids
-    val affected = newNodes.select(col("part")).distinct().as[Int].collect().toSeq
-    val stored = nodeRecs(nodes.select("vec_id", "embedding"), p)
-      .union(edgeRecs(edges))
-      .filter(col("part").isin(affected: _*))
-    val rebuilt = stored.groupByKey(_._1).cogroup(newNodes.groupByKey(_._1)) {
-      (part, rs, fresh) =>
-        val arr = rs.toArray
-        val g = new LocalGraph(p)
-        val idxOf = new mutable.LongMap[Int]()
-        arr.filter(_._2).sortBy(_._3).foreach { r =>
-          idxOf(r._3) = g.size; g.loadNode(r._3, r._6, r._5)
-        }
-        arr.foreach { r => if (!r._2) g.loadEdge(idxOf(r._3), idxOf(r._4), r._5) }
-        fresh.toArray.sortBy(_._2).foreach { n => g.insert(n._2, n._4, n._3) }
-        g.edges.map { case (s, d, l) => (part, s, d, l) }
+    // and manifest-delta formation
+    val affected = fresh.select(col("part")).distinct().as[Int].collect().toSeq
+    if (affected.isEmpty) return
+    val (v, m) = CellSnapshot.mappingOrBase(spark, dir, "nodes", "part")
+    def stored(sub: String) = CellSnapshot.read(spark, dir, sub, "part")
+      .filter(col("part").isin(affected: _*)) // partition-pruned
+    val nodes = stored("nodes").select(col("vec_id"), col("embedding"), col("level"),
+      col("part").cast("int").as("part"))
+    val recs = nodes
+      .select(col("part"), lit(true).as("is_node"), col("vec_id"), lit(1L).as("b"),
+        col("level"), col("embedding"))
+      .as[ShardRec]
+      .union(edgeRecs(stored("edges")))
+    val edges = recs.groupByKey(_._1).cogroup(fresh.groupByKey(_._1)) { (part, rs, fr) =>
+      val g = shardGraph(rs.toArray, p, rebuild = false)
+      fr.toArray.sortBy(_._2).foreach { n => g.insert(n._2, n._4, n._3) }
+      g.edges.map { case (s, d, l) => (part, s, d, l) }
     }.toDF("part", "src", "dst", "layer")
-    val outEdges = edges.filter(!col("part").isin(affected: _*)).unionByName(rebuilt)
-    val outNodes = nodes.select("vec_id", "embedding", "level")
-      .unionByName(newNodes.toDF("part", "vec_id", "level", "embedding")
-        .select("vec_id", "embedding", "level"))
-    (outNodes, outEdges)
+    val g = v + 1
+    nodes.unionByName(fresh.toDF("part", "vec_id", "level", "embedding"))
+      .write.mode("overwrite").partitionBy("part").parquet(CellSnapshot.genRoot(dir, "nodes", g))
+    edges.write.mode("overwrite").partitionBy("part")
+      .parquet(CellSnapshot.genRoot(dir, "edges", g))
+    CellSnapshot.publish(spark, dir, g, m ++ affected.map(_.toLong -> g))
+    IndexMeta.invalidate(spark, dir)
   }
 
   /** ROUTED search over a semantically-sharded layout: shards are IVF
@@ -648,36 +717,14 @@ object Hnsw {
     searchProbed(recs, routed(queries, centroids, nprobe), k, p, rebuild = true)
   }
 
-  /** COSINE routed search by the normalize-then-L2 reduction
-    * ([[Ivf.normalized]]): both sides unit-normalize, the L2 graph
-    * machinery runs unchanged, and the reported score converts back as
-    * `cos = 1 − d²/2`. Centroids must come from the NORMALIZED table
-    * (direction cells). Output `(query_id, vec_id, cos_sim)`, highest
-    * similarity first per query — [[Knn.cosineTopK]] semantics on the
-    * routed scale path.
-    */
-  def searchRoutedCosine(embeddings: DataFrame, queries: DataFrame, k: Int, p: Params,
-                         centroids: DataFrame, nprobe: Int,
-                         replication: Int = 2): DataFrame = {
-    val normedQ = queries.select(col("query_id"),
-      graft.functions.VectorFunctions.normalizeQuery(col("query_vec")).as("query_vec"))
-    // graph nodes store float32 (the ShardRec shape) — normalized
-    // directions survive the downcast at ~1e-7, well inside ANN slack
-    val normed = Ivf.normalized(embeddings)
-      .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    searchRouted(normed, normedQ, k, p, centroids, nprobe, replication)
-      .select(col("query_id"), col("vec_id"),
-        round(lit(1.0) - col("dist") * col("dist") / lit(2.0), 6).as("cos_sim"))
-  }
-
   /** Persist the ROUTED (IVF-cell-sharded) index: `nodes(part, vec_id,
     * embedding, level)` carry their cell assignment (with SPANN
     * replication a vector appears in r cells), `edges` hold one
     * independent HNSW per cell, and the routing `centroids` ride along
-    * in the same dir. [[searchRoutedWithIndex]] then serves query
-    * batches with NO k-means, NO assignment pass and NO graph
-    * construction — the reference's long-lived `Hnsw` object
-    * (hnsw.cc:114-137), as on-disk state.
+    * in the same dir. [[search]] then serves query batches with NO
+    * k-means, NO assignment pass and NO graph construction — the
+    * reference's long-lived `Hnsw` object (hnsw.cc:114-137), as
+    * on-disk state.
     */
   def saveRouted(embeddings: DataFrame, cents: DataFrame, p: Params, dir: String,
                  replication: Int = 2): Unit = {
@@ -695,12 +742,12 @@ object Hnsw {
     cents.write.mode("overwrite").parquet(s"$dir/centroids")
   }
 
-  /** Snapshot-resolved reads of a routed index's live node/edge rows —
-    * the read path for routed serving and maintenance. Before the
-    * first [[compactRouted]] these are plain `spark.read.parquet`
-    * (identical plans); after one they resolve the shared
-    * [[CellSnapshot]] manifest (ONE manifest governs both trees, so
-    * nodes and edges can never be read at different generations).
+  /** Snapshot-resolved reads of a persisted layout's live node/edge
+    * rows (routed or exhaustive — both store `part`) — the read path
+    * for maintenance. Before the first publish these are plain
+    * `spark.read.parquet` (identical plans); after one they resolve the
+    * shared [[CellSnapshot]] manifest (ONE manifest governs both trees,
+    * so nodes and edges can never be read at different generations).
     */
   def readRoutedNodes(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     CellSnapshot.read(spark, dir, "nodes", "part")
@@ -721,8 +768,9 @@ object Hnsw {
                         version: Int): DataFrame =
     CellSnapshot.readAt(spark, dir, "edges", "part", version)
 
-  /** Reclaim routed subtrees superseded by [[compactRouted]] — safe
-    * once no reader still serves a pre-vacuum snapshot.
+  /** Reclaim subtrees superseded by [[compactRouted]], [[insertInto]]
+    * or [[insertIntoRouted]] (either layout shape) — safe once no
+    * reader still serves a pre-vacuum snapshot.
     */
   def vacuumRouted(spark: org.apache.spark.sql.SparkSession, dir: String,
                    keep: Int = 1): Unit =
@@ -736,8 +784,9 @@ object Hnsw {
                    maxAge: java.time.Duration = java.time.Duration.ZERO): Unit =
     CellSnapshot.retain(spark, dir, Seq("nodes", "edges"), "part", maxAge)
 
-  /** Fold the tombstones into a ROUTED layout ([[saveRouted]]): ONLY
-    * the cells (`part=` subtrees) holding deleted rows are rebuilt — a
+  /** Fold the tombstones into a persisted layout, routed
+    * ([[saveRouted]]) or exhaustive ([[save]]): ONLY the cells or hash
+    * shards (`part=` subtrees) holding deleted rows are rebuilt — a
     * deletion invalidates its cell's adjacency, so those cells
     * re-insert their remaining rows from scratch (same determinism as
     * a fresh build). The rebuilt node AND edge subtrees are written as
@@ -849,22 +898,6 @@ object Hnsw {
     if (gens.isEmpty) spark.read.parquet(s"$dir/centroids")
     else spark.read.parquet(s"$dir/centroids_g${gens.max}")
   }
-
-  /** All three halves of the routed serving state — nodes, edges,
-    * centroids — resolved against ONE manifest version (the
-    * `Ivf.readLayoutWithCentroids` contract): a recluster publishing
-    * between independent reads must never hand one query new routing
-    * over old shards or a cross-generation node/edge mix.
-    */
-  private def routedServingState(spark: org.apache.spark.sql.SparkSession,
-                                 dir: String): (DataFrame, DataFrame, DataFrame) =
-    CellSnapshot.version(spark, dir) match {
-      case Some(v) => (readRoutedNodesAt(spark, dir, v),
-        readRoutedEdgesAt(spark, dir, v), routedCentroidsAt(spark, dir, v))
-      case None => (CellSnapshot.read(spark, dir, "nodes", "part"),
-        CellSnapshot.read(spark, dir, "edges", "part"),
-        spark.read.parquet(s"$dir/centroids"))
-    }
 
   /** RECLUSTER maintenance for the ROUTED layout — the drift repair
     * after enough appends skew the cells ([[compactRouted]] is the
@@ -1025,74 +1058,15 @@ object Hnsw {
     }
   }
 
-  /** Serve a query batch from a PERSISTED routed index: queries route
-    * through the stored centroids (broadcast — C rows), probed shards
-    * load their stored adjacency in O(edges), and nothing is rebuilt.
-    * Results are identical to [[searchRouted]] over the same
-    * (embeddings, cents, p, nprobe, replication) — pinned by HnswSpec.
+  /** The full incremental-append cycle, amortized per dir: [[save]] the
+    * base index over `base` into `dir`, [[insertInto]] the `fresh`
+    * batch, and leave the grown layout for [[search]] — the daily-append
+    * shape of a training pipeline (reference `Insert`, hnsw.cc:147-215,
+    * as an on-disk lifecycle). Both steps are skipped when `dir`
+    * already holds an index whose fingerprint matches (base + fresh
+    * content + params).
     */
-  def searchRoutedWithIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                            queries: DataFrame, k: Int, p: Params, nprobe: Int,
-                            predicate: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    import spark.implicits._
-    // Filtered ANN: the predicate (over the stored node columns) marks
-    // result ELIGIBILITY — ineligible nodes still load and route the
-    // beam (removing them would sever graph edges and strand whole
-    // regions), but they can never appear in results.
-    val eligCol = predicate.map(pr => when(pr, 1L).otherwise(0L)).getOrElse(lit(1L))
-    // nodes, edges AND routing pinned to one manifest version
-    val (nodes, edges, cents) = routedServingState(spark, dir)
-    val recs = nodes
-      .select(col("part"), lit(true).as("is_node"), col("vec_id"),
-        eligCol.as("b"), col("level"), col("embedding"))
-      .as[ShardRec]
-      .union(edgeRecs(edges))
-    searchProbed(recs, routed(queries, cents, nprobe), k, p,
-      rebuild = false, filtered = predicate.isDefined)
-  }
-
-  /** [[searchRoutedWithIndex]] under the routed dir's `_deletes`
-    * tombstones ([[Tombstones]]): recorded ids load INELIGIBLE — still
-    * navigable bridges, never returned — so a takedown reaches routed
-    * serving (and, through [[graft.streaming.StreamingAnn]], every
-    * subsequent micro-batch) immediately, with no shard rewrite. Falls
-    * back to the plain path when nothing is recorded.
-    */
-  def searchRoutedWithIndexDeletes(spark: org.apache.spark.sql.SparkSession, dir: String,
-                                   queries: DataFrame, k: Int, p: Params,
-                                   nprobe: Int): DataFrame =
-    Tombstones.ids(spark, dir) match {
-      case None => searchRoutedWithIndex(spark, dir, queries, k, p, nprobe)
-      case Some(dels) =>
-        import spark.implicits._
-        // nodes, edges and routing pinned to ONE manifest version (the
-        // flat edge/centroid reads this path used before bypassed the
-        // snapshot — after a compaction or recluster they would serve
-        // gen-0 state against current nodes)
-        val (nodes, edges, cents) = routedServingState(spark, dir)
-        val marked = nodes
-          .join(broadcast(dels.select(col("vec_id")).withColumn("__tomb", lit(true))),
-            Seq("vec_id"), "left")
-        val recs = marked.select(col("part"), lit(true).as("is_node"), col("vec_id"),
-            when(col("__tomb").isNull, 1L).otherwise(0L).as("b"),
-            col("level"), col("embedding"))
-          .as[ShardRec]
-          .union(edgeRecs(edges))
-        searchProbed(recs, routed(queries, cents, nprobe), k, p,
-          rebuild = false, filtered = true)
-    }
-
-  /** The full incremental-append serving cycle, amortized per dir: build
-    * (or reuse) the base index over `base`, [[insertInto]] the `fresh`
-    * batch, flush via [[saveIndex]], and serve from the flushed files —
-    * the daily-append shape of a training pipeline (reference `Insert`,
-    * hnsw.cc:147-215, as an on-disk lifecycle). Both steps are skipped
-    * when `dir` already holds an index whose fingerprint matches
-    * (base + fresh content + params); a changed batch re-runs only the
-    * insert against the persisted base.
-    */
-  def ensureInsertedSaved(base: DataFrame, fresh: DataFrame, p: Params,
-                          baseDir: String, dir: String): (DataFrame, DataFrame) = {
+  def ensureInsertedSaved(base: DataFrame, fresh: DataFrame, p: Params, dir: String): Unit = {
     val spark = base.sparkSession
     val fp = IndexMeta.cachedFingerprint(dir, s"p=$p;incr", Seq(base, fresh)) {
       // base and fresh fingerprint SEPARATELY: the same total content
@@ -1102,260 +1076,9 @@ object Hnsw {
       s"${fingerprint(base, s"p=$p;incr;base")}|${fingerprint(fresh, "fresh")}"
     }
     if (!indexValid(spark, dir, fp)) {
-      val (nodes0, edges0) = ensureSaved(base, p, baseDir)
-      val (nodes1, edges1) = insertInto(nodes0, edges0, fresh, p)
-      saveIndex(nodes1, edges1, dir, p)
+      save(base, p, dir)
+      insertInto(spark, dir, fresh, p)
       writeFp(spark, dir, fp)
-    }
-    (spark.read.parquet(s"$dir/nodes"), spark.read.parquet(s"$dir/edges"))
-  }
-
-  /** Persist an ALREADY-MATERIALIZED hash-layout index pair in
-    * [[save]]'s on-disk layout — the flush step after [[insertInto]],
-    * proving the incremental path roundtrips through the same files a
-    * fresh [[save]] writes.
-    */
-  def saveIndex(nodes: DataFrame, edges: DataFrame, dir: String, p: Params): Unit = {
-    nodes.select(col("vec_id"), col("embedding"), col("level"),
-        pmod(col("vec_id"), lit(p.numPartitions)).cast("int").as("part"))
-      .write.mode("overwrite").partitionBy("part").parquet(s"$dir/nodes")
-    edges.select(col("part"), col("src"), col("dst"), col("layer"))
-      .write.mode("overwrite").partitionBy("part").parquet(s"$dir/edges")
-  }
-
-  // ------------------------------------------------------------------
-  // Generational index maintenance (streaming-append serving state)
-  // ------------------------------------------------------------------
-
-  private def genCommit(dir: String, g: Int) =
-    new org.apache.hadoop.fs.Path(s"$dir/gen=$g/_graft_commit")
-
-  /** Latest COMMITTED generation id under a generational index root
-    * (`dir/gen=N/{nodes,edges}`): the largest N whose `_graft_commit`
-    * file exists. The commit file is created LAST (after every data
-    * write and byte-copy of its generation) and its appearance — a
-    * brand-new name, never an overwrite — is the atomic publish point,
-    * the same no-mutable-marker discipline as [[CellSnapshot]] (the
-    * earlier `_graft_latest` create-overwrite marker was itself a
-    * truncate-then-write race for a concurrent reader; it is still
-    * read as a legacy fallback for indexes written before the commit
-    * files existed).
-    */
-  def latestGenId(spark: org.apache.spark.sql.SparkSession, dir: String): Option[Int] = {
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) return None
-    val committed = fs.listStatus(base).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen="))
-      .map(_.getPath.getName.stripPrefix("gen=").toInt)
-      .filter(g => fs.exists(genCommit(dir, g)))
-      .maxOption
-    committed.orElse {
-      // legacy fallback: pre-commit-file indexes recorded the latest
-      // generation in a `_graft_latest` marker
-      val marker = new org.apache.hadoop.fs.Path(s"$dir/_graft_latest")
-      if (!fs.exists(marker)) None
-      else {
-        val in = fs.open(marker)
-        try Some(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-          .trim.toInt)
-        finally in.close()
-      }
-    }
-  }
-
-  /** The latest generation's `(nodes, edges)` frames, if a generation
-    * exists. Serving reads THIS; appends write the next generation.
-    */
-  def latestGeneration(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : Option[(Int, DataFrame, DataFrame)] =
-    latestGenId(spark, dir).map { g =>
-      (g, spark.read.parquet(s"$dir/gen=$g/nodes"), spark.read.parquet(s"$dir/gen=$g/edges"))
-    }
-
-  /** Append a batch of new vectors to a GENERATIONAL index: the first
-    * batch builds `gen=0` from scratch; each later batch loads the
-    * latest generation, [[insertInto]]s the new rows (only affected
-    * shards rebuild), and writes the result as a NEW generation before
-    * creating its `_graft_commit` file (the atomic publish point —
-    * see [[latestGenId]]). Generations are immutable — a reader
-    * serving from gen N is never corrupted by the writer producing
-    * N+1 (the overwrite-in-place alternative would have the insert
-    * plan reading the very files it is replacing). This is the
-    * micro-batch maintenance shape: call it from a streaming
-    * `foreachBatch` sink ([[graft.streaming.StreamingAnn.maintainIndex]]).
-    */
-  def appendGeneration(fresh: DataFrame, dir: String, p: Params): Unit = {
-    val spark = fresh.sparkSession
-    latestGeneration(spark, dir) match {
-      case None =>
-        save(fresh, p, s"$dir/gen=0")
-        commitGeneration(spark, dir, 0)
-      case Some((g, nodes, edges)) =>
-        val (n1, e1) = insertInto(nodes, edges, fresh, p)
-        saveIndex(n1, e1, s"$dir/gen=${g + 1}", p)
-        commitGeneration(spark, dir, g + 1)
-    }
-  }
-
-  /** Publish generation `gen`: create its (empty, never-overwritten)
-    * `_graft_commit` file — an atomic appearance of a new name, AFTER
-    * every data file of the generation is in place.
-    */
-  private def commitGeneration(spark: org.apache.spark.sql.SparkSession, dir: String,
-                               gen: Int): Unit = {
-    val path = genCommit(dir, gen)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(path, true).close()
-  }
-
-  /** Reclaim old generations, keeping the newest `keep` committed ones
-    * (plus any uncommitted leftovers newer than the cut — a concurrent
-    * writer's in-flight generation is never touched). Generations are
-    * the layout's time-travel/rollback catalog, so this is the
-    * explicit storage-GC knob a maintenance pipeline runs on its own
-    * cadence — UNSAFE for readers still serving a reclaimed
-    * generation, same contract as `CellSnapshot.vacuum`.
-    */
-  def vacuumGenerations(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        keep: Int = 1): Unit = {
-    require(keep >= 1, s"must keep at least the current generation (got $keep)")
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) return
-    val committed = fs.listStatus(base).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen="))
-      .map(_.getPath.getName.stripPrefix("gen=").toInt)
-      .filter(g => fs.exists(genCommit(dir, g)))
-      .sorted
-    committed.dropRight(keep).foreach { g =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/gen=$g"), true)
-    }
-    // the legacy marker (if any) may now name a reclaimed generation —
-    // committed-generation listing supersedes it entirely
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/_graft_latest")
-    if (fs.exists(marker)) fs.delete(marker, false)
-  }
-
-  // ------------------------------------------------------------------
-  // Deletion lifecycle (tombstones + compaction)
-  // ------------------------------------------------------------------
-  // The reference is insert-only (hnsw.cc:147-215 has no erase); this
-  // is the production lifecycle it lacks: dataset takedowns and
-  // contaminated-shard purges as (1) an O(batch) tombstone append,
-  // (2) immediate serve-time exclusion through the filtered-ANN
-  // eligibility machinery, (3) a compaction that rewrites ONLY the
-  // affected shards and byte-copies the rest.
-
-  /** Record tombstones: append `ids(vec_id)` to the `_deletes` sidecar
-    * under the index root — O(batch) I/O, no graph rewrite, repeatable
-    * (batches accumulate). Serving applies them immediately
-    * ([[searchWithIndexDeletes]]); [[compactGeneration]] folds them
-    * into the files and clears the sidecar.
-    */
-  def recordDeletes(spark: org.apache.spark.sql.SparkSession, dir: String,
-                    ids: DataFrame): Unit =
-    Tombstones.record(spark, dir, ids)
-
-  /** Current tombstones (distinct), or None if none recorded. */
-  def deletedIds(spark: org.apache.spark.sql.SparkSession, dir: String): Option[DataFrame] =
-    Tombstones.ids(spark, dir)
-
-  /** [[searchWithIndex]] under tombstones: deleted nodes load
-    * INELIGIBLE — still traversed (they stay navigable bridges, exactly
-    * the filtered-ANN shape of `LocalGraph.elig`) but never returned.
-    * `deletes` is the tombstone set — always small relative to the
-    * corpus (it is folded away by compaction), so it broadcasts.
-    */
-  def searchWithIndexDeletes(nodes: DataFrame, edges: DataFrame, deletes: DataFrame,
-                             queries: DataFrame, k: Int, p: Params): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val marked = nodes.select("vec_id", "embedding")
-      .join(broadcast(deletes.select(col("vec_id")).distinct()
-        .withColumn("__tomb", lit(true))), Seq("vec_id"), "left")
-    val recs = marked.select(
-        pmod(col("vec_id"), lit(p.numPartitions)).cast("int").as("part"),
-        lit(true).as("is_node"), col("vec_id"),
-        when(col("__tomb").isNull, 1L).otherwise(0L).as("b"),
-        levelColumn(p).as("level"), col("embedding"))
-      .as[ShardRec]
-      .union(edgeRecs(edges))
-    searchCogrouped(recs, replicateAll(queries, p.numPartitions), k, p,
-      rebuild = false, filtered = true)
-  }
-
-  /** Serve the latest generation under the root's tombstones: the
-    * read path a serving tier runs between a takedown and the next
-    * compaction. Falls back to the plain path when nothing is deleted.
-    */
-  def searchLatestGeneration(spark: org.apache.spark.sql.SparkSession, dir: String,
-                             queries: DataFrame, k: Int, p: Params): DataFrame = {
-    val (_, nodes, edges) = latestGeneration(spark, dir)
-      .getOrElse(throw new IllegalStateException(s"no generation under $dir"))
-    deletedIds(spark, dir) match {
-      case Some(dels) => searchWithIndexDeletes(nodes, edges, dels, queries, k, p)
-      case None       => searchWithIndex(nodes, edges, queries, k, p)
-    }
-  }
-
-  /** Fold the tombstones into the files: write generation N+1 in which
-    * ONLY the shards holding deleted rows are rebuilt (a deletion
-    * invalidates its shard's adjacency, so those shards re-insert their
-    * remaining rows from scratch — same determinism as a fresh build),
-    * every untouched shard's node and edge partitions are BYTE-COPIED
-    * verbatim, the `_deletes` sidecar is cleared, and the generation's
-    * `_graft_commit` file appears LAST (after the byte-copies — a
-    * reader can never resolve a half-copied generation; see
-    * [[latestGenId]]). Compaction I/O is proportional to the AFFECTED data
-    * (deleted ids hash to ≤ P shards), never to the index size — the
-    * property that makes takedowns affordable at 100 TB.
-    */
-  def compactGeneration(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        p: Params): Unit = {
-    val (g, nodes, _) = latestGeneration(spark, dir)
-      .getOrElse(throw new IllegalStateException(s"no generation under $dir"))
-    val dels = deletedIds(spark, dir).getOrElse(return)
-    // affected shard ids: ≤ P ints to the driver (partition-filter
-    // formation) — only ids actually present in the index count
-    val affected = dels.join(nodes.select("vec_id"), Seq("vec_id"), "left_semi")
-      .select(pmod(col("vec_id"), lit(p.numPartitions)).cast("int").as("part"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val srcBase = s"$dir/gen=$g"
-    val dstBase = s"$dir/gen=${g + 1}"
-    // rebuild ONLY the affected shards (partition-pruned node read)
-    val kept = nodes.filter(col("part").isin(affected: _*))
-      .join(broadcast(dels.select("vec_id")), Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("embedding"), col("level"), col("part").cast("int").as("part"))
-    kept.write.mode("overwrite").partitionBy("part").parquet(s"$dstBase/nodes")
-    buildEdgesBy(kept, p)
-      .write.mode("overwrite").partitionBy("part").parquet(s"$dstBase/edges")
-    // byte-copy every untouched shard's files verbatim
-    copyUntouchedParts(spark, s"$srcBase/nodes", s"$dstBase/nodes", affected.toSet)
-    copyUntouchedParts(spark, s"$srcBase/edges", s"$dstBase/edges", affected.toSet)
-    Tombstones.clear(spark, dir)
-    commitGeneration(spark, dir, g + 1)
-  }
-
-  /** Copy `part=<k>` subtrees of `src` into `dst` for every k NOT in
-    * `affected` — a filesystem copy, no deserialization: untouched
-    * shards land in the new generation byte-identical.
-    */
-  private def copyUntouchedParts(spark: org.apache.spark.sql.SparkSession,
-                                 src: String, dst: String,
-                                 affected: Set[Int]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val srcPath = new org.apache.hadoop.fs.Path(src)
-    val fs = srcPath.getFileSystem(conf)
-    fs.listStatus(srcPath).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory && name.startsWith("part=")) {
-        val k = name.stripPrefix("part=").toInt
-        if (!affected.contains(k))
-          org.apache.hadoop.fs.FileUtil.copy(
-            fs, st.getPath, fs, new org.apache.hadoop.fs.Path(s"$dst/$name"),
-            false, false, conf)
-      }
     }
   }
 

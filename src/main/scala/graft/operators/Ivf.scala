@@ -283,7 +283,7 @@ object Ivf {
     CellSnapshot.retain(spark, dir, Seq(""), "cell", maxAge)
 
   /** [[writePartitioned]] once per dir, with the same content-
-    * fingerprint staleness check as `Hnsw.ensureSaved` — the
+    * fingerprint staleness check as [[Hnsw.ensureSaved]] — the
     * amortization point for serving repeated probes from one layout.
     */
   def ensurePartitioned(embeddings: DataFrame, c: Int, dir: String): Unit = {
@@ -427,7 +427,8 @@ object Ivf {
     val scored = withoutExcluded(predicate.fold(pruned)(pruned.filter), Tombstones.ids(spark, dir))
       // candidate meets only the queries probing its cell
       .join(broadcast(plan.pairs(spark)), Seq("cell"))
-      .join(broadcast(qs), Seq("query_id"))
+      // the vectors the probe plan collected: no second query scan
+      .join(broadcast(plan.queries(spark)), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(m.score(col("embedding"), col("query_vec")), roundTo).as(m.name))
     if (queries.columns.contains("query_id")) heapTopKPerQuery(scored, k, m.name, m.asc)
@@ -959,7 +960,7 @@ object Ivf {
 
   /** Build-on-base + [[insertInto]]-the-rest, memoized — the
     * declared-query form of the incremental lifecycle (the IVF twin of
-    * `Hnsw.ensureInsertedSaved`). `base` and `fresh` fingerprint
+    * [[Hnsw.ensureInsertedSaved]]). `base` and `fresh` fingerprint
     * SEPARATELY: the same union under a different split is a different
     * I/O history, and the split IS what this layout witnesses.
     */

@@ -6,17 +6,18 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Hnsw
 
 /** Streaming ANN serving: a STREAM of query vectors answered from a
-  * PERSISTED routed index — the retrieval-endpoint loop of a production
+  * PERSISTED HNSW layout — the retrieval-endpoint loop of a production
   * pipeline (queries arrive continuously; the index is the long-lived
   * state, exactly the reference's resident `Hnsw` object,
   * hnsw.cc:114-137, with the stream replacing the call site).
   *
-  * Each micro-batch routes through the stored centroids (broadcast, C
-  * rows) and probes only its nprobe cells' stored graphs — no k-means,
-  * no graph construction, per-batch cost O(batch · nprobe). The
-  * composition is `foreachBatch` because the cogroup search is a batch
-  * plan; results are byte-identical to the batch
-  * [[Hnsw.searchRoutedWithIndex]] over the same rows (spec-pinned).
+  * Each micro-batch is served by [[Hnsw.search]]: on a routed layout it
+  * routes through the stored centroids and probes only its nprobe
+  * cells' stored graphs, on an exhaustive one it meets every hash
+  * shard — no k-means, no graph construction. The composition is
+  * `foreachBatch` because the search is a batch plan; results are
+  * byte-identical to the batch [[Hnsw.search]] over the same rows
+  * (spec-pinned).
   */
 object StreamingAnn {
 
@@ -54,16 +55,16 @@ object StreamingAnn {
     * each answered micro-batch `(query_id, vec_id, dist)` to `sink`.
     *
     * The `_deletes` tombstone sidecar is consulted PER MICRO-BATCH
-    * ([[Hnsw.searchRoutedWithIndexDeletes]]): a takedown recorded while
+    * ([[Hnsw.search]] always applies it): a takedown recorded while
     * the stream runs is excluded from every subsequent batch's results
     * with no restart and no index rewrite — the serving-tier contract
-    * that makes takedowns immediate. With no sidecar the behavior (and
-    * plan) is the plain routed serve, byte-identical to batch serving
-    * (spec-pinned).
+    * that makes takedowns immediate. Each batch is byte-identical to
+    * the batch serve of the same rows (spec-pinned).
     *
-    * A micro-batch the routed probe plan refuses — a repeated or null
-    * `query_id`, a null vector or component, or a query whose length
-    * differs from the centroids' — raises `IllegalArgumentException`
+    * A micro-batch the search refuses — a repeated `query_id` (either
+    * layout), or on a routed layout a null `query_id`, a null vector or
+    * component, or a query whose length differs from the centroids' —
+    * raises `IllegalArgumentException`
     * naming the `query_id`, and like any exception in `foreachBatch` it
     * STOPS the stream (`StreamingQuery.exception` holds it); batches
     * answered before it stay delivered. A source that can repeat an id
@@ -74,25 +75,26 @@ object StreamingAnn {
     queries.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        sink(Hnsw.searchRoutedWithIndexDeletes(batch.sparkSession, indexDir,
-          batch.toDF(), k, p, nprobe), batchId)
+        sink(Hnsw.search(batch.sparkSession, indexDir, batch.toDF(), k, p, nprobe), batchId)
       }
       .start()
 
   /** Streaming index MAINTENANCE: a stream of new vectors
-    * `(vec_id, embedding)` appended into a generational HNSW index at
-    * `indexDir` — each micro-batch runs the incremental insert
-    * ([[Hnsw.insertInto]]: only affected shards rebuild) and publishes
-    * an immutable new generation, so concurrent readers keep serving
-    * the previous one. The daily/streaming-append half of a production
-    * retrieval pipeline; [[serveQueries]] is the query half.
+    * `(vec_id, embedding)` appended into the exhaustive HNSW layout at
+    * `indexDir` ([[Hnsw.save]]'s; the first micro-batch builds it when
+    * the dir holds none) — each micro-batch runs the incremental insert
+    * ([[Hnsw.insertInto]]: only affected shards take the new vectors)
+    * and publishes one new [[graft.operators.CellSnapshot]] version, so
+    * concurrent readers keep serving the version they resolved. The
+    * daily/streaming-append half of a production retrieval pipeline;
+    * [[serveQueries]] is the query half.
     */
   def maintainIndex(newVectors: DataFrame, indexDir: String,
                     p: Hnsw.Params): StreamingQuery =
     newVectors.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        Hnsw.appendGeneration(batch.toDF(), indexDir, p)
+        Hnsw.insertInto(batch.sparkSession, indexDir, batch.toDF(), p)
       }
       .start()
 
@@ -139,8 +141,8 @@ object StreamingAnn {
     * O(batch) and the probe scan of concurrent readers picks each
     * appended file up as it lands (Parquet is immutable-file append —
     * readers never see a torn row). The flat-layout twin of
-    * [[maintainIndex]]: no graph to rebuild means no generation swap
-    * is needed; a streamed layout is IDENTICAL to a batch-built one
+    * [[maintainIndex]]: no graph to re-link means appended files need
+    * no new snapshot version; a streamed layout is IDENTICAL to a batch-built one
     * (StreamingMultimodalSpec pins serving equality).
     */
   def maintainIvf(newVectors: DataFrame, layoutDir: String,

@@ -1019,17 +1019,16 @@ object AnnBench {
       serve(qs).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t) / 1e9
     }
-    val serveBase = timedServe(Hnsw.searchRoutedWithIndex(spark, rdir, _, 10, p, nprobe = 8))
+    val serveBase = timedServe(Hnsw.search(spark, rdir, _, 10, p, nprobe = 8))
 
     // the takedown: 10 scattered ids, recorded as an O(batch) append
     val dels = emb.filter(pmod(col("vec_id"), lit(n / 10)) === lit(7)).select("vec_id")
     val nDels = dels.count()
     val tRec = System.nanoTime()
-    Hnsw.recordDeletes(spark, rdir, dels)
+    graft.operators.Tombstones.record(spark, rdir, dels)
     val recordSec = (System.nanoTime() - tRec) / 1e9
 
-    val serveTomb = timedServe(
-      Hnsw.searchRoutedWithIndexDeletes(spark, rdir, _, 10, p, nprobe = 8))
+    val serveTomb = timedServe(Hnsw.search(spark, rdir, _, 10, p, nprobe = 8))
 
     val affected = Hnsw.readRoutedNodes(spark, rdir)
       .join(broadcast(dels), Seq("vec_id"), "left_semi")
@@ -1048,7 +1047,7 @@ object AnnBench {
     Hnsw.vacuumRouted(spark, rdir)
     val vacuumSec = (System.nanoTime() - tV) / 1e9
 
-    val servePost = timedServe(Hnsw.searchRoutedWithIndex(spark, rdir, _, 10, p, nprobe = 8))
+    val servePost = timedServe(Hnsw.search(spark, rdir, _, 10, p, nprobe = 8))
 
     val json =
       s"""{"delete_smoke":{"n":$n,"dim":$dim,"cells":64,"replication":2,""" +
@@ -1090,9 +1089,7 @@ object AnnBench {
     Hnsw.save(emb, p, dir)
     val buildSec = (System.nanoTime() - t0) / 1e9
     val indexBytes = fs.getContentSummary(dirPath).getLength
-    val nodes = spark.read.parquet(s"$dir/nodes")
-    val edges = spark.read.parquet(s"$dir/edges")
-    val nEdges = edges.count()
+    val nEdges = spark.read.parquet(s"$dir/edges").count()
 
     val qs = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"),
@@ -1118,9 +1115,7 @@ object AnnBench {
     }
 
     val efs = Seq(64, 128)
-    val exhaustive = efs.map(serveStats(_) { (q, pe) =>
-      Hnsw.searchWithIndex(nodes, edges, q, 10, pe)
-    })
+    val exhaustive = efs.map(serveStats(_) { (q, pe) => Hnsw.search(spark, dir, q, 10, pe) })
 
     // ROUTED serving — the O(nprobe)-per-query scale path: 64 k-means
     // cells, 2x boundary replication, 8 probes/query. This is the form
@@ -1135,7 +1130,7 @@ object AnnBench {
     val routedBuildSec = (System.nanoTime() - tR) / 1e9
     val routedBytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(rdir)).getLength
     val routed = efs.map(serveStats(_) { (q, pe) =>
-      Hnsw.searchRoutedWithIndex(spark, rdir, q, 10, pe, nprobe = 8)
+      Hnsw.search(spark, rdir, q, 10, pe, nprobe = 8)
     })
 
     // BATCH IVF serving over the cell-partitioned layout (the same
@@ -1644,9 +1639,9 @@ object AnnBench {
     *  - IVF cell-partitioned layout: 500k base + 10 × 50k batches via
     *    `StreamingAnn.maintainIvf` (frozen `_centroids`, cell-local
     *    file appends);
-    *  - HNSW routed index: 100k base + 5 × 10k batches via
-    *    `StreamingAnn.maintainIndex` (per-generation graph builds +
-    *    `_graft_commit` flips);
+    *  - HNSW exhaustive index: 100k base + 5 × 10k batches via
+    *    `StreamingAnn.maintainIndex` (beam-inserts into the affected
+    *    shards, one snapshot manifest version per batch);
     *  - CMS sketch: 10 × 20k-doc batches via
     *    `StreamingCuration.maintainCms` (O(width) increments/batch).
     *
@@ -1699,7 +1694,7 @@ object AnnBench {
       s"${fmt(midServe, 2)} s mid-stream, ${fmt(serveAfter, 2)} s after; " +
       s"layout ${bytes(ivfDir)} B")
 
-    // ---- HNSW routed generations ----
+    // ---- HNSW exhaustive inserts ----
     val hnswBase = 100000
     val hnswBatch = 10000
     val hp = Hnsw.Params(numPartitions = 8)
@@ -1718,9 +1713,9 @@ object AnnBench {
     }
     qH.stop()
     val hRowsPerSec = (5L * hnswBatch / hWall).toLong
-    val gens = Hnsw.latestGeneration(spark, hnswDir).map(_._1).getOrElse(-1)
+    val version = graft.operators.CellSnapshot.version(spark, hnswDir).getOrElse(0)
     println(s"[annbench] streamscale hnsw: ${5 * hnswBatch} inserts in ${fmt(hWall, 1)} s " +
-      s"($hRowsPerSec inserts/s, ${gens + 1} generations); index ${bytes(hnswDir)} B")
+      s"($hRowsPerSec inserts/s, manifest version $version); index ${bytes(hnswDir)} B")
 
     // ---- ROUTED HNSW maintenance + auto-recluster ----
     // 100k-row routed layout; 5 batches of 10k inserts of which the
@@ -1799,7 +1794,7 @@ object AnnBench {
       s""""serve_after_s":${fmt(serveAfter, 2)},"layout_bytes":${bytes(ivfDir)}},""" +
       s""""hnsw":{"base":$hnswBase,"batches":5,"batch_rows":$hnswBatch,""" +
       s""""append_wall_s":${fmt(hWall, 1)},"inserts_per_sec":$hRowsPerSec,""" +
-      s""""generations":${gens + 1},"index_bytes":${bytes(hnswDir)}},""" +
+      s""""manifest_version":$version,"index_bytes":${bytes(hnswDir)}},""" +
       s""""cms":{"batches":10,"batch_docs":$docBatch,"append_wall_s":${fmt(cWall, 1)},""" +
       s""""docs_per_sec":$cDocsPerSec,"state_bytes":${bytes(cmsDir)}}}}"""
     println(json)

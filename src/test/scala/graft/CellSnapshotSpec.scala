@@ -313,10 +313,10 @@ class CellSnapshotSpec extends AnyFunSuite {
     def batch(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
-    val preReader = Hnsw.searchRoutedWithIndex(spark, dir, queries, 10, p, nprobe = 8)
-    val expectedPre = batch(Hnsw.searchRoutedWithIndex(spark, dir, queries, 10, p, nprobe = 8))
+    val preReader = Hnsw.search(spark, dir, queries, 10, p, nprobe = 8)
+    val expectedPre = batch(Hnsw.search(spark, dir, queries, 10, p, nprobe = 8))
 
-    Hnsw.recordDeletes(spark, dir, delIds.take(2).toDF("vec_id"))
+    Tombstones.record(spark, dir, delIds.take(2).toDF("vec_id"))
     Hnsw.compactRouted(spark, dir, p)
 
     assert(batch(preReader) === expectedPre,
@@ -329,7 +329,7 @@ class CellSnapshotSpec extends AnyFunSuite {
     assert(nodes.filter(col("vec_id").isin(delIds.take(2): _*)).count() === 0)
     assert(edges.filter(col("src").isin(delIds.take(2): _*)
       || col("dst").isin(delIds.take(2): _*)).count() === 0)
-    val post = batch(Hnsw.searchRoutedWithIndex(spark, dir, queries, 10, p, nprobe = 8))
+    val post = batch(Hnsw.search(spark, dir, queries, 10, p, nprobe = 8))
     assert(post.nonEmpty && post.forall(r => !delIds.take(2).contains(r._2)))
 
     // routed time travel: the pinned version reproduces the
@@ -340,7 +340,7 @@ class CellSnapshotSpec extends AnyFunSuite {
     assert(nodesAtV === nodes.count() && edgesAtV === edges.count())
 
     Hnsw.vacuumRouted(spark, dir)
-    assert(batch(Hnsw.searchRoutedWithIndex(spark, dir, queries, 10, p, nprobe = 8)) === post,
+    assert(batch(Hnsw.search(spark, dir, queries, 10, p, nprobe = 8)) === post,
       "vacuum must not change routed serving")
     assert(Hnsw.readRoutedNodesAt(spark, dir, v).count() === nodesAtV,
       "the current version survives vacuum")
@@ -348,7 +348,7 @@ class CellSnapshotSpec extends AnyFunSuite {
     // retention policy on the routed layout: pin v, compact again,
     // retain — the pinned snapshot still time-travels bit-identically
     CellSnapshot.pin(spark, dir, v)
-    Hnsw.recordDeletes(spark, dir, delIds.drop(2).take(1).toDF("vec_id"))
+    Tombstones.record(spark, dir, delIds.drop(2).take(1).toDF("vec_id"))
     Hnsw.compactRouted(spark, dir, p)
     Hnsw.retainRouted(spark, dir)
     assert(Hnsw.readRoutedNodesAt(spark, dir, v).count() === nodesAtV,

@@ -103,11 +103,9 @@ class HnswSpec extends AnyFunSuite {
   test("persisted index roundtrip: searchWithIndex == searchTopK") {
     val dir = java.nio.file.Files.createTempDirectory("hnsw_idx").toString
     Hnsw.save(emb, params, dir)
-    val nodes = spark.read.parquet(s"$dir/nodes")
-    val edges = spark.read.parquet(s"$dir/edges")
     val qs = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-    val fromIndex = Hnsw.searchWithIndex(nodes, edges, qs, 5, params)
+    val fromIndex = Hnsw.search(spark, dir, qs, 5, params)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val rebuilt = Hnsw.searchTopK(emb, qs, 5, params)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -125,15 +123,19 @@ class HnswSpec extends AnyFunSuite {
       (i, Array.fill(8)(rnd.nextFloat() * 100f))
     }.toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("hnsw_incr").toString
-    val (nodes0, edges0) = Hnsw.ensureSaved(base, p4, dir)
-    val (nodes1, edges1) = Hnsw.insertInto(nodes0, edges0, fresh, p4)
+    Hnsw.ensureSaved(base, p4, dir)
+    def edgeSet(df: org.apache.spark.sql.DataFrame) =
+      df.select("part", "src", "dst", "layer").collect().map(_.toSeq).toSet
+    val before = edgeSet(Hnsw.readRoutedEdges(spark, dir).filter(col("part") =!= 3))
+    Hnsw.insertInto(spark, dir, fresh, p4)
+    val edges1 = Hnsw.readRoutedEdges(spark, dir)
     val all = base.unionByName(fresh)
 
     // (a) the updated index answers over N+M with recall@10 ≥ 0.95
     // (perturbed self-queries over both old and freshly inserted ids)
     val qs = all.filter(col("vec_id") < 10 || col("vec_id") >= 330)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-    val ann = Hnsw.searchWithIndex(nodes1, edges1, qs, 10, p4)
+    val ann = Hnsw.search(spark, dir, qs, 10, p4)
     val recalls = Hnsw.recallOf(ann, all, qs, 10).collect().map(_.getDouble(1))
     assert(recalls.length === 15)
     val avgRecall = recalls.sum / recalls.length
@@ -142,38 +144,37 @@ class HnswSpec extends AnyFunSuite {
     val selfHits = ann.filter(col("query_id") >= 330 && col("query_id") === col("vec_id")).count()
     assert(selfHits === 5, "inserted vectors must be reachable in their shard graph")
 
-    // (b) unaffected shards' edge rows pass through byte-identical
-    val before = edges0.filter(col("part") =!= 3).collect().map(_.toSeq).toSet
-    val after = edges1.filter(col("part") =!= 3).collect().map(_.toSeq).toSet
-    assert(after === before, "untouched shards must not be rewritten")
+    // (b) unaffected shards' edge rows pass through: the published
+    // manifest keeps pointing at their build files, only shard 3 moved
+    assert(edgeSet(edges1.filter(col("part") =!= 3)) === before,
+      "untouched shards must not be rewritten")
+    assert(graft.operators.CellSnapshot.mapping(spark, dir).map(_._2) ===
+      Some(Map(0L -> 0, 1L -> 0, 2L -> 0, 3L -> 1)),
+      "only the affected shard may move to the new generation")
     assert(edges1.filter(col("part") === 3 && col("src").isin(newIds: _*)).count() > 0,
       "affected shard must link the new nodes")
 
-    // (c) flushing the updated pair through save's on-disk layout and
-    // reloading serves identical results (and identical edge sets)
+    // (c) the same base + insert through the memoized lifecycle lands
+    // the identical edge set on disk and serves identical results
     val dir2 = java.nio.file.Files.createTempDirectory("hnsw_incr2").toString
-    Hnsw.saveIndex(nodes1, edges1, dir2, p4)
-    val rn = spark.read.parquet(s"$dir2/nodes")
-    val re = spark.read.parquet(s"$dir2/edges")
-    val fromDisk = Hnsw.searchWithIndex(rn, re, qs, 10, p4)
+    Hnsw.ensureInsertedSaved(base, fresh, p4, dir2)
+    val fromDisk = Hnsw.search(spark, dir2, qs, 10, p4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val inMem = ann.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(fromDisk === inMem)
-    assert(re.select("part", "src", "dst", "layer").collect().map(_.toSeq).toSet
-      === edges1.select("part", "src", "dst", "layer").collect().map(_.toSeq).toSet)
+    val inPlace = ann.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(fromDisk === inPlace)
+    assert(edgeSet(Hnsw.readRoutedEdges(spark, dir2)) === edgeSet(edges1))
   }
 
   test("ensureInsertedSaved: a changed base/fresh split of the same rows rebuilds") {
     val p4 = Hnsw.Params(numPartitions = 4)
-    def tmp(tag: String) = java.nio.file.Files.createTempDirectory(tag).toString
-    val dir = tmp("hnsw_split")
+    val dir = java.nio.file.Files.createTempDirectory("hnsw_split").toString
     Hnsw.ensureInsertedSaved(emb.filter(col("vec_id") < 180),
-      emb.filter(col("vec_id") >= 180), p4, tmp("hnsw_split_b1"), dir)
+      emb.filter(col("vec_id") >= 180), p4, dir)
     val fp1 = graft.operators.IndexMeta.read(spark, dir).get
     // same UNION (all 200 rows), different split: the graph differs
     // (which rows took the beam-insert path), so the fingerprint must too
     Hnsw.ensureInsertedSaved(emb.filter(col("vec_id") < 170),
-      emb.filter(col("vec_id") >= 170), p4, tmp("hnsw_split_b2"), dir)
+      emb.filter(col("vec_id") >= 170), p4, dir)
     val fp2 = graft.operators.IndexMeta.read(spark, dir).get
     assert(fp1 !== fp2,
       "identical total content under a moved split must invalidate the persisted index")
@@ -191,8 +192,8 @@ class HnswSpec extends AnyFunSuite {
   test("ensureSaved detects changed source data and rebuilds; unchanged data serves as-is") {
     val dir = java.nio.file.Files.createTempDirectory("hnsw_fp").toString
     val base = emb.filter(col("vec_id") < 100)
-    val (n0, _) = Hnsw.ensureSaved(base, params, dir)
-    assert(n0.count() === 100)
+    Hnsw.ensureSaved(base, params, dir)
+    assert(spark.read.parquet(s"$dir/nodes").count() === 100)
     // same dir, same data → fingerprint match, no rewrite
     def successMtime: Long = {
       val p = new org.apache.hadoop.fs.Path(s"$dir/edges/_SUCCESS")
@@ -202,8 +203,9 @@ class HnswSpec extends AnyFunSuite {
     Hnsw.ensureSaved(base, params, dir)
     assert(successMtime === t0, "unchanged data must not trigger a rebuild")
     // same dir, DIFFERENT data → fingerprint mismatch, rebuilt index
-    val (n1, _) = Hnsw.ensureSaved(emb, params, dir)
-    assert(n1.count() === 200, "regenerated source data must rebuild the index")
+    Hnsw.ensureSaved(emb, params, dir)
+    assert(spark.read.parquet(s"$dir/nodes").count() === 200,
+      "regenerated source data must rebuild the index")
   }
 
   test("persisted routed index serves identically to the rebuilt routed search") {
@@ -212,11 +214,32 @@ class HnswSpec extends AnyFunSuite {
     Hnsw.saveRouted(emb, cents, params, dir, replication = 2)
     val qs = emb.filter(col("vec_id") < 20)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-    val served = Hnsw.searchRoutedWithIndex(spark, dir, qs, 10, params, nprobe = 5)
+    val served = Hnsw.search(spark, dir, qs, 10, params, nprobe = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val rebuilt = Hnsw.searchRouted(emb, qs, 10, params, cents, nprobe = 5, replication = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(served === rebuilt)
+  }
+
+  test("Hnsw.search refuses a repeated query_id on exhaustive and routed layouts, naming the id") {
+    val exhaustive = java.nio.file.Files.createTempDirectory("hnsw_dup_hash").toString
+    val routed = java.nio.file.Files.createTempDirectory("hnsw_dup_routed").toString
+    Hnsw.save(emb, params, exhaustive)
+    Hnsw.saveRouted(emb, Ivf.kmeans(emb, 8, 2), params, routed)
+    val qs = Seq((1L, Array.fill(8)(10.0)), (3L, Array.fill(8)(20.0)), (3L, Array.fill(8)(30.0)))
+      .toDF("query_id", "query_vec")
+    for (dir <- Seq(exhaustive, routed)) {
+      val e = intercept[Exception] { Hnsw.search(spark, dir, qs, 5, params, nprobe = 2).collect() }
+      val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case iae: IllegalArgumentException => iae }
+      assert(cause.exists(_.getMessage.contains("duplicate query_id in the query batch: query_id 3")),
+        s"$dir: $e")
+    }
+    // a hash-sharded rebuild over a routed dir drops its routing: the
+    // layout serves exhaustively again (no nprobe needed)
+    Hnsw.save(emb, params, routed)
+    assert(Hnsw.search(spark, routed, qs.filter(col("query_vec")(0) < 25.0), 5, params)
+      .count() === 10)
   }
 
   test("filtered ANN: only predicate-eligible results; full beam == exact filtered kNN") {
@@ -231,7 +254,7 @@ class HnswSpec extends AnyFunSuite {
     val qs = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
     val pred = col("vec_id") % 2 === 0
-    val ann = Hnsw.searchRoutedWithIndex(spark, dir, qs, 10, pFull, nprobe = 8,
+    val ann = Hnsw.search(spark, dir, qs, 10, pFull, nprobe = 8,
       predicate = Some(pred)).cache()
     assert(ann.filter(col("vec_id") % 2 =!= 0).count() === 0,
       "ineligible nodes must never surface in filtered results")
@@ -248,14 +271,21 @@ class HnswSpec extends AnyFunSuite {
     val normed = Ivf.normalized(emb)
     val cents = Ivf.kmeans(normed, 8, 2)
     val pFull = params.copy(efSearch = 256)
-    val ann = Hnsw.searchRoutedCosine(emb, qs, 10, pFull, cents, nprobe = 8,
-      replication = 2).cache()
+    // normalize-then-L2: both sides unit-normalize (the graph stores
+    // float32 directions, ~1e-7 off — inside ANN slack), the L2 routed
+    // search runs unchanged, and cos = 1 − d²/2
+    val normedQ = qs.select(col("query_id"),
+      graft.functions.VectorFunctions.normalizeQuery(col("query_vec")).as("query_vec"))
+    val ann = Hnsw.searchRouted(
+        normed.select(col("vec_id"), col("embedding").cast("array<float>").as("embedding")),
+        normedQ, 10, pFull, cents, nprobe = 8, replication = 2)
+      .select(col("query_id"), col("vec_id"),
+        round(lit(1.0) - col("dist") * col("dist") / lit(2.0), 6).as("cos_sim"))
+      .cache()
     // scores are genuine cosines
     assert(ann.filter(col("cos_sim") > 1.0001 || col("cos_sim") < -1.0001).count() === 0)
     val annIds = ann.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // exact cosine top-k == exact L2 top-k on the unit sphere
-    val normedQ = qs.select(col("query_id"),
-      graft.functions.VectorFunctions.normalizeQuery(col("query_vec")).as("query_vec"))
     val exactIds = Knn.topKBatch(normed, normedQ, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(annIds === exactIds,

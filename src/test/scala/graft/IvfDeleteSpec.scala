@@ -139,8 +139,8 @@ class IvfDeleteSpec extends AnyFunSuite {
     val cents = Ivf.kmeans(emb, 8, 2)
     val dir = Files.createTempDirectory("routed_del").toString
     graft.operators.Hnsw.saveRouted(emb, cents, p, dir, replication = 2)
-    graft.operators.Hnsw.recordDeletes(spark, dir, delIds.toDF("vec_id"))
-    val got = batch(graft.operators.Hnsw.searchRoutedWithIndexDeletes(
+    graft.operators.Tombstones.record(spark, dir, delIds.toDF("vec_id"))
+    val got = batch(graft.operators.Hnsw.search(
       spark, dir, queries, 10, p, nprobe = 8))
     assert(got.nonEmpty && got.forall(r => !delIds.contains(r._2)))
     // nprobe = all cells → exhaustive routed search: must equal the
@@ -148,7 +148,7 @@ class IvfDeleteSpec extends AnyFunSuite {
     val cleanDir = Files.createTempDirectory("routed_del_clean").toString
     graft.operators.Hnsw.saveRouted(emb.filter(!col("vec_id").isin(delIds: _*)),
       cents, p, cleanDir, replication = 2)
-    val rebuilt = batch(graft.operators.Hnsw.searchRoutedWithIndex(
+    val rebuilt = batch(graft.operators.Hnsw.search(
       spark, cleanDir, queries, 10, p, nprobe = 8))
     assert(got === rebuilt,
       "routed tombstone serving must equal a routed index built without the deleted rows")
@@ -161,7 +161,7 @@ class IvfDeleteSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("routed_compact").toString
     Hnsw.saveRouted(emb, cents, p, dir, replication = 2)
     val dels = delIds.take(2) // few ids -> few affected cells (x2 replication)
-    Hnsw.recordDeletes(spark, dir, dels.toDF("vec_id"))
+    graft.operators.Tombstones.record(spark, dir, dels.toDF("vec_id"))
 
     val nodes = spark.read.parquet(s"$dir/nodes")
     val affected = nodes.filter(col("vec_id").isin(dels: _*))
@@ -190,11 +190,11 @@ class IvfDeleteSpec extends AnyFunSuite {
 
     // full-probe serving of the compacted index == routed index built
     // without the deleted rows (same centroids)
-    val got = batch(Hnsw.searchRoutedWithIndex(spark, dir, queries, 10, p, nprobe = 8))
+    val got = batch(Hnsw.search(spark, dir, queries, 10, p, nprobe = 8))
     val cleanDir = Files.createTempDirectory("routed_compact_clean").toString
     Hnsw.saveRouted(emb.filter(!col("vec_id").isin(dels: _*)), cents, p, cleanDir,
       replication = 2)
-    assert(got === batch(Hnsw.searchRoutedWithIndex(spark, cleanDir, queries, 10, p,
+    assert(got === batch(Hnsw.search(spark, cleanDir, queries, 10, p,
       nprobe = 8)))
   }
 

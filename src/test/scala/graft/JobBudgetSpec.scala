@@ -73,7 +73,7 @@ class JobBudgetSpec extends AnyFunSuite {
 
     def measure(): Seq[Int] = Seq(
       callJobs(Ivf.topKPartitionedBatchFused(spark, ivf, queries, 10, 3)),
-      callJobs(Hnsw.searchRoutedWithIndex(spark, hnsw, queries, 10, p, 3)),
+      callJobs(Hnsw.search(spark, hnsw, queries, 10, p, 3)),
       callJobs(Pq.topK(spark, pq, queries, 10, 3, rerank = Some(Pq.Rerank(emb, 40)))))
     // warm: the first call of a shape may compile or list more
     measure()
@@ -81,7 +81,7 @@ class JobBudgetSpec extends AnyFunSuite {
     for (ids <- Seq(Seq(20L, 21L, 300L), Seq(22L, 140L))) {
       Ivf.recordDeletes(spark, ivf, takedown(ids))
       Ivf.compactPartitioned(spark, ivf)
-      Hnsw.recordDeletes(spark, hnsw, takedown(ids))
+      Tombstones.record(spark, hnsw, takedown(ids))
       Hnsw.compactRouted(spark, hnsw, p)
       Tombstones.record(spark, pq, takedown(ids))
       Ivf.compactPartitioned(spark, pq)
@@ -94,6 +94,24 @@ class JobBudgetSpec extends AnyFunSuite {
     // IVF's 3 probe jobs + the code scan, shortlist merge and rerank
     assert(before === Seq(5, 8, 12), s"per-call jobs (ivf, hnsw, pq) before compactions")
     assert(after === before, s"per-call jobs must not grow with published generations")
+  }
+
+  test("per-call jobs of the exhaustive Hnsw.search, before and after two compactions") {
+    val dir = Files.createTempDirectory("job_budget_hash").toString
+    val p = Hnsw.Params(numPartitions = 3)
+    Hnsw.save(emb, p, dir)
+    callJobs(Hnsw.search(spark, dir, queries, 10, p))
+    val before = callJobs(Hnsw.search(spark, dir, queries, 10, p))
+    for (ids <- Seq(Seq(20L, 21L, 300L), Seq(22L, 140L))) {
+      Tombstones.record(spark, dir, takedown(ids))
+      Hnsw.compactRouted(spark, dir, p)
+    }
+    // measured on this layout (local[2]): node and edge schema reads +
+    // the cogroup search's 6 — as many as the former `searchWithIndex`
+    // paid over the same two reads
+    assert(before === 8, "per-call jobs of the exhaustive search")
+    assert(callJobs(Hnsw.search(spark, dir, queries, 10, p)) === before,
+      "per-call jobs must not grow with published generations")
   }
 
   test("per-call jobs of fused and single-query IVF top-k are the same on plain, cosine and MIPS layouts") {

@@ -100,10 +100,10 @@ class PlanPropertiesSpec extends AnyFunSuite {
     val p = plan("q_ivf_batch_topk")
     assert(countOf(p, "PartitionFilters: [cell") == 1,
       s"exactly ONE pruned vector scan serves the whole batch:\n$p")
-    // probe pairs are planned on the driver and ride as a local
-    // relation: 1 pruned stored scan + the scoring-side query scan = 2.
-    // Constant in batch size — the point is NOT a scan per query.
-    assert(countOf(p, "Scan parquet") == 2, s"unexpected scan count:\n$p")
+    // probe pairs and the collected query vectors ride as local
+    // relations: the 1 pruned stored scan is the only scan. Constant
+    // in batch size — the point is NOT a scan per query.
+    assert(countOf(p, "Scan parquet") == 1, s"unexpected scan count:\n$p")
     assert(p.contains("LocalTableScan"), s"probe pairs must be a local relation:\n$p")
     // candidate rank = bounded-heap aggregate (no sort of the pairs),
     // and no probe window is left in the plan
@@ -276,10 +276,10 @@ class PlanPropertiesSpec extends AnyFunSuite {
     val p = plan("q_cosine_batch_topk")
     assert(countOf(p, "PartitionFilters: [cell") == 1,
       s"exactly ONE pruned unit-vector scan serves the whole batch:\n$p")
-    // probe pairs are planned on the driver and ride as a local
-    // relation: 1 pruned stored scan + the scoring-side query scan = 2,
-    // none data-proportional, constant in batch size
-    assert(countOf(p, "Scan parquet") == 2, s"unexpected scan count:\n$p")
+    // probe pairs and the collected query vectors ride as local
+    // relations: the 1 pruned stored scan is the only scan, constant
+    // in batch size
+    assert(countOf(p, "Scan parquet") == 1, s"unexpected scan count:\n$p")
     assert(p.contains("LocalTableScan"), s"probe pairs must be a local relation:\n$p")
     // candidate rank = bounded-heap aggregate; no probe window is left
     assert(p.contains("ObjectHashAggregate"),

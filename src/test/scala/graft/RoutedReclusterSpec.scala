@@ -53,7 +53,7 @@ class RoutedReclusterSpec extends AnyFunSuite {
   private def served(dir: String, nprobe: Int = 4) = {
     val qs = emb.filter(col("vec_id") % 40 === 0)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-    Hnsw.searchRoutedWithIndex(spark, dir, qs, 10, p, nprobe)
+    Hnsw.search(spark, dir, qs, 10, p, nprobe)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       .sortBy(t => (t._1, t._3, t._2))
   }

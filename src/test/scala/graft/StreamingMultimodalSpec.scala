@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{CorpusPipeline, Dedup, Hnsw, Ivf, Multimodal}
+import graft.operators.{CellSnapshot, CorpusPipeline, Dedup, Hnsw, Ivf, Multimodal, Tombstones}
 import graft.streaming.{EventStreams, StreamingAnn, StreamingCuration}
 import graft.streaming.EventStreams.SessionEvent
 
@@ -253,7 +253,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val batchQs = emb.filter(col("vec_id") < 6)
       .select(col("vec_id").as("query_id"),
         graft.functions.VectorFunctions.perturbQuery(col("embedding")).as("query_vec"))
-    val expected = Hnsw.searchRoutedWithIndex(spark, dir, batchQs, 10, p, nprobe = 5)
+    val expected = Hnsw.search(spark, dir, batchQs, 10, p, nprobe = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(served.toSet === expected,
       "streamed micro-batches must serve identical results to the batch path")
@@ -274,6 +274,13 @@ class StreamingMultimodalSpec extends AnyFunSuite {
         graft.functions.VectorFunctions.perturbQuery(col("embedding")).as("query_vec"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     val delIds = Seq(3L, 4L, 5L) // the later queries' own vectors — their usual top-1s
+    def batchQs(ids: Seq[Long]) = emb.filter(col("vec_id").isin(ids: _*))
+      .select(col("vec_id").as("query_id"),
+        graft.functions.VectorFunctions.perturbQuery(col("embedding")).as("query_vec"))
+    def served(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // the batch serve of the first queries before any takedown
+    val plain = served(Hnsw.search(spark, dir, batchQs(Seq(0L, 1L, 2L)), 10, p, nprobe = 5))
 
     val mem = MemoryStream[(Long, Array[Double])]
     val perBatch = scala.collection.mutable.Map.empty[Long, Set[(Long, Long, Double)]]
@@ -286,25 +293,19 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     try {
       mem.addData(queryRows.take(3).toSeq: _*) // before the takedown
       q.processAllAvailable()
-      Hnsw.recordDeletes(spark, dir, delIds.toDF("vec_id"))
+      Tombstones.record(spark, dir, delIds.toDF("vec_id"))
       mem.addData(queryRows.drop(3).toSeq: _*) // after
       q.processAllAvailable()
     } finally q.stop()
 
-    def batchQs(ids: Seq[Long]) = emb.filter(col("vec_id").isin(ids: _*))
-      .select(col("vec_id").as("query_id"),
-        graft.functions.VectorFunctions.perturbQuery(col("embedding")).as("query_vec"))
-    // batch 0 (pre-takedown) matches the PLAIN routed path
-    assert(perBatch(0L) === Hnsw.searchRoutedWithIndex(spark, dir, batchQs(Seq(0L, 1L, 2L)),
-        10, p, nprobe = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+    // batch 0 (pre-takedown) matches the batch serve before the takedown
+    assert(perBatch(0L) === plain)
     // batch 1 (post-takedown): no deleted id served, results match the
-    // deletes-aware routed path
+    // batch serve under the same tombstones
     assert(perBatch(1L).forall(r => !delIds.contains(r._2)),
       "tombstoned ids must vanish from micro-batches after the takedown")
-    assert(perBatch(1L) === Hnsw.searchRoutedWithIndexDeletes(spark, dir,
-        batchQs(Seq(3L, 4L, 5L)), 10, p, nprobe = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+    assert(perBatch(1L) === served(Hnsw.search(spark, dir, batchQs(Seq(3L, 4L, 5L)), 10, p,
+      nprobe = 5)))
   }
 
   test("streaming ANN: a micro-batch with a repeated query_id stops the stream, naming the id") {
@@ -352,36 +353,68 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val mem = MemoryStream[(Long, Array[Float])]
     val q = StreamingAnn.maintainIndex(mem.toDF().toDF("vec_id", "embedding"), dir, p)
     try {
-      mem.addData(baseRows: _*) // micro-batch 0: builds gen=0
+      mem.addData(baseRows: _*) // micro-batch 0: builds the layout
       q.processAllAvailable()
-      mem.addData(freshRows: _*) // micro-batch 1: insertInto → gen=1
+      mem.addData(freshRows: _*) // micro-batch 1: insertInto → version 1
       q.processAllAvailable()
     } finally q.stop()
 
-    val (gen, nodes, edges) = Hnsw.latestGeneration(spark, dir).get
-    assert(gen === 1, "two micro-batches must produce two generations")
+    assert(CellSnapshot.version(spark, dir) === Some(1),
+      "the second micro-batch must publish one snapshot version")
 
     // the batch incremental lifecycle over the SAME base/fresh split
     // must produce the IDENTICAL graph (both paths: deterministic build
     // of base, then the same beam-inserts of fresh)
     val bdir = java.nio.file.Files.createTempDirectory("stream_maint_batch").toString
-    val (bn, be) = Hnsw.ensureInsertedSaved(
-      baseRows.toDF("vec_id", "embedding"), freshRows.toDF("vec_id", "embedding"),
-      p, s"$bdir/base", s"$bdir/incr")
-    assert(edges.collect().map(_.toSeq).toSet === be.collect().map(_.toSeq).toSet,
-      "streamed generation must hold the same edge set as the batch lifecycle")
-    assert(nodes.select("vec_id", "level").collect().map(_.toSeq).toSet
-      === bn.select("vec_id", "level").collect().map(_.toSeq).toSet)
+    Hnsw.ensureInsertedSaved(
+      baseRows.toDF("vec_id", "embedding"), freshRows.toDF("vec_id", "embedding"), p, bdir)
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    assert(rows(Hnsw.readRoutedEdges(spark, dir), "part", "src", "dst", "layer")
+      === rows(Hnsw.readRoutedEdges(spark, bdir), "part", "src", "dst", "layer"),
+      "streamed layout must hold the same edge set as the batch lifecycle")
+    assert(rows(Hnsw.readRoutedNodes(spark, dir), "vec_id", "level")
+      === rows(Hnsw.readRoutedNodes(spark, bdir), "vec_id", "level"))
 
     // and serve identically
     val qs = all.take(5).toDF("vec_id", "embedding")
       .select(col("vec_id").as("query_id"),
         graft.functions.VectorFunctions.perturbQuery(col("embedding")).as("query_vec"))
-    val fromStream = Hnsw.searchWithIndex(nodes, edges, qs, 10, p)
+    val fromStream = Hnsw.search(spark, dir, qs, 10, p)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val fromBatch = Hnsw.searchWithIndex(bn, be, qs, 10, p)
+    val fromBatch = Hnsw.search(spark, bdir, qs, 10, p)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(fromStream === fromBatch)
+  }
+
+  test("streaming index maintenance appends to a saved base, which keeps serving") {
+    implicit val sqlCtx = spark.sqlContext
+    val p = Hnsw.Params(numPartitions = 3)
+    val all = (0L until 120L).map { i =>
+      val rnd = new scala.util.Random(i)
+      (i, Array.fill(8)(rnd.nextFloat() * 100f))
+    }
+    val (baseRows, freshRows) = all.splitAt(100)
+    val dir = java.nio.file.Files.createTempDirectory("stream_maint_base").toString
+    Hnsw.save(baseRows.toDF("vec_id", "embedding"), p, dir)
+
+    val mem = MemoryStream[(Long, Array[Float])]
+    val q = StreamingAnn.maintainIndex(mem.toDF().toDF("vec_id", "embedding"), dir, p)
+    try {
+      mem.addData(freshRows: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+
+    // perturbed self-queries of base and fresh rows find themselves:
+    // the stream grew the saved base instead of starting a new index
+    val qs = all.filter(r => r._1 < 5 || r._1 >= 115).toDF("vec_id", "embedding")
+      .select(col("vec_id").as("query_id"),
+        graft.functions.VectorFunctions.perturbQuery(col("embedding")).as("query_vec"))
+    val top1 = Hnsw.search(spark, dir, qs, 1, p)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(top1 === (0L until 5L).map(i => i -> i).toMap ++ (115L until 120L).map(i => i -> i),
+      "base and streamed ids must both be served")
+    assert(Hnsw.readRoutedNodes(spark, dir).count() === 120)
   }
 
   test("streaming IVF maintenance: micro-batch cell appends == single-pass layout; serves mid-stream") {
