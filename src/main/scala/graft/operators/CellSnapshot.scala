@@ -44,7 +44,7 @@ import org.apache.spark.sql.functions._
   * names: readers keep serving V, and the next writer overwrites it.
   *
   * Until a first maintenance op publishes a manifest, none exists and
-  * [[read]] is exactly `spark.read.parquet` — zero overhead on the
+  * [[read]] is the plan of `spark.read.parquet` — zero overhead on the
   * build-then-serve path. After one, readers resolve the newest
   * manifest once at plan time and union the per-generation trees
   * filtered to their live cells; a reader that resolved version V
@@ -55,6 +55,21 @@ import org.apache.spark.sql.functions._
   * Scale contract: the manifest is O(C) lines (C = cell count, never
   * data-proportional); compaction writes only the affected cells'
   * replacement subtrees + one manifest file + one marker flip.
+  *
+  * Every serve and maintenance entry reads a layout through one
+  * [[Snapshot]] handle ([[open]]): the reference serves every query
+  * from one long-lived `Hnsw` object (hnsw.cc:114-137), and the handle
+  * is its on-disk analog. Once per published FILE SET, it reads each
+  * stored tree's schema and collects the rows of the small sidecars
+  * (centroids, `_codebooks`, `_bounds`, `_radii`, the `_deletes`
+  * tombstones); each entry is keyed on a stamp of one driver-side
+  * listing of the files it was read from (names, lengths, modification
+  * times, plus the layout kind). Spark part-file names are unique per
+  * write, so a rebuild, append, compaction or recluster at the same dir
+  * changes the stamp and is read afresh. The key is never the path
+  * alone. Each call still lists the manifests, reads the newest one and
+  * the kind marker, lists every file it stamps, and plans its own scans
+  * (Spark lists the scanned trees again).
   */
 private[graft] object CellSnapshot {
 
@@ -130,8 +145,7 @@ private[graft] object CellSnapshot {
     */
   def mappingOrBase(spark: SparkSession, dir: String, sub: String,
                     partCol: String): (Int, Map[Long, Int]) =
-    mapping(spark, dir).getOrElse(
-      (0, listParts(spark, genRoot(dir, sub, 0), partCol).map(_ -> 0).toMap))
+    open(spark, dir).mappingOrBase(sub, partCol)
 
   /** The `partCol=` child ids of `root` (driver-side listing — O(C)). */
   def listParts(spark: SparkSession, root: String, partCol: String): Seq[Long] = {
@@ -145,18 +159,11 @@ private[graft] object CellSnapshot {
       .sorted
   }
 
-  /** Snapshot-resolved read of `sub`'s live rows. No manifest → plain
-    * `spark.read.parquet` (identical plan to the pre-snapshot engine);
-    * with one, a union of the per-generation trees each filtered to its
-    * live cells — the cell filters stay partition filters, so probe
-    * pruning composes unchanged. Only the oldest live tree's read infers
-    * a schema (generation 0 while any build cell is live): later
-    * generations are read with it, so a read costs one inference job
-    * however many compactions have published, and still resolves once
-    * [[vacuum]] has reclaimed every generation-0 cell.
+  /** Snapshot-resolved read of `sub`'s live rows at the current
+    * version ([[Snapshot.read]]).
     */
   def read(spark: SparkSession, dir: String, sub: String, partCol: String): DataFrame =
-    readResolved(spark, dir, sub, partCol, mapping(spark, dir).map(_._2))
+    open(spark, dir).read(sub, partCol)
 
   /** TIME-TRAVEL read: `sub`'s live rows AS OF published version `v`.
     * Generations are immutable and manifests version-named, so any
@@ -167,35 +174,179 @@ private[graft] object CellSnapshot {
     */
   def readAt(spark: SparkSession, dir: String, sub: String, partCol: String,
              v: Int): DataFrame =
-    readResolved(spark, dir, sub, partCol, Some(mappingAt(spark, dir, v)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no manifest m$v under $dir: the version was never published or was vacuumed"))))
+    openAt(spark, dir, v).read(sub, partCol)
 
-  private def readResolved(spark: SparkSession, dir: String, sub: String, partCol: String,
-                           mapping: Option[Map[Long, Int]]): DataFrame = {
-    val basePath = genRoot(dir, sub, 0)
-    mapping match {
-      case None => spark.read.parquet(basePath)
-      case Some(m) =>
-        val fs = fsOf(spark, dir)
-        // a generation whose `sub` tree is empty was never written
-        // (e.g. a rebuilt part with zero edges) — contributes nothing
-        val live = m.groupBy(_._2).toSeq.sortBy(_._1)
-          .map { case (g, cells) => (genRoot(dir, sub, g), cells.keys.toSeq) }
-          .filter { case (root, _) => fs.exists(new org.apache.hadoop.fs.Path(root)) }
-        live.headOption match {
-          case None => spark.read.parquet(basePath).filter(lit(false))
-          case Some((root0, _)) =>
-            // every generation is written with the build tree's columns:
-            // reading the rest with the oldest's schema skips a
-            // schema-inference job per generation
-            val first = spark.read.parquet(root0)
-            live.map { case (root, cells) =>
-              (if (root == root0) first else spark.read.schema(first.schema).parquet(root))
-                .filter(col(partCol).isin(cells: _*))
-            }.reduce(_ unionByName _)
-        }
+  /** A small sidecar's collected rows and their schema. */
+  final class Collected(val schema: org.apache.spark.sql.types.StructType,
+                        val rows: Array[org.apache.spark.sql.Row]) {
+    /** The rows as a local relation: planning or collecting it runs no job. */
+    def frame(spark: SparkSession): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  object Collected {
+    def of(df: DataFrame): Collected = new Collected(df.schema, df.collect())
+  }
+
+  /** A layout resolved at one manifest `version` (None: nothing
+    * published yet, the build trees serve as written) with the `kind`
+    * its `_graft_kind` marker records. Trees and sidecars are read
+    * through the stamp-keyed memo (see the object doc), so a warm call
+    * runs no schema-inference job and no sidecar collect.
+    */
+  final class Snapshot private[CellSnapshot] (spark: SparkSession, val dir: String,
+                                              val version: Option[Int],
+                                              val mapping: Option[Map[Long, Int]],
+                                              val kind: String) {
+
+    /** The published mapping, or the implicit version-0 state (every
+      * `partCol=` child of `sub`'s build tree at gen 0) before one.
+      */
+    def mappingOrBase(sub: String, partCol: String): (Int, Map[Long, Int]) =
+      version.zip(mapping).getOrElse(
+        (0, listParts(spark, genRoot(dir, sub, 0), partCol).map(_ -> 0).toMap))
+
+    /** `sub`'s live rows. No manifest: the build tree, the same plan as
+      * `spark.read.parquet`. With one: a union of the per-generation
+      * trees, each filtered to its live cells, so the cell filters stay
+      * partition filters and probe pruning composes unchanged. Every
+      * tree reads with the schema of the oldest live one (generation 0
+      * while any build cell is live), so a read infers at most one
+      * schema however many compactions have published, none on a warm
+      * call, and still resolves once [[vacuum]] has reclaimed every
+      * generation-0 cell.
+      */
+    def read(sub: String, partCol: String): DataFrame = {
+      val basePath = genRoot(dir, sub, 0)
+      mapping match {
+        case None => spark.read.schema(schemaOf(basePath)).parquet(basePath)
+        case Some(m) =>
+          val fs = fsOf(spark, dir)
+          // a generation whose `sub` tree is empty was never written
+          // (e.g. a rebuilt part with zero edges) — contributes nothing
+          val live = m.groupBy(_._2).toSeq.sortBy(_._1)
+            .map { case (g, cells) => (genRoot(dir, sub, g), cells.keys.toSeq) }
+            .filter { case (root, _) => fs.exists(new org.apache.hadoop.fs.Path(root)) }
+          live.headOption match {
+            case None => spark.read.parquet(basePath).filter(lit(false))
+            case Some((root0, _)) =>
+              val schema = schemaOf(root0)
+              live.map { case (root, cells) =>
+                spark.read.schema(schema).parquet(root).filter(col(partCol).isin(cells: _*))
+              }.reduce(_ unionByName _)
+          }
+      }
     }
+
+    /** The serving centroids of the sidecar named `flat` (`_centroids`
+      * for cell layouts, `centroids` for routed HNSW): the newest
+      * generation-scoped `<flat>_g<N>` with N at or below [[version]],
+      * else `flat` itself. None when neither exists.
+      */
+    def centroids(flat: String): Option[Collected] =
+      CellSnapshot.centroids(spark, dir, flat, version, kind)
+
+    /** The collected rows of the small sidecar `dir/<name>`, if present. */
+    def sidecar(name: String): Option[Collected] = collected(spark, dir, name, kind)
+
+    /** The tombstoned ids ([[Tombstones]]) as a local relation, if any
+      * are recorded: a frame planned on them still runs after a
+      * compaction clears the sidecar, and serves the set it was planned
+      * with.
+      */
+    def tombstones: Option[DataFrame] = Tombstones.ids(spark, dir)
+
+    /** The schema of the tree at `root`, inferred once per file set. */
+    private def schemaOf(root: String): org.apache.spark.sql.types.StructType =
+      memoized(spark, dir, s"schema $root", root, kind)(spark.read.parquet(root).schema)
+  }
+
+  /** The layout at `dir` as currently published. */
+  def open(spark: SparkSession, dir: String): Snapshot = {
+    val m = mapping(spark, dir)
+    new Snapshot(spark, dir, m.map(_._1), m.map(_._2), kindOf(spark, dir))
+  }
+
+  /** The layout at `dir` AS OF published version `v` (see [[readAt]]). */
+  def openAt(spark: SparkSession, dir: String, v: Int): Snapshot = {
+    val m = mappingAt(spark, dir, v).getOrElse(throw new IllegalArgumentException(
+      s"no manifest m$v under $dir: the version was never published or was vacuumed"))
+    new Snapshot(spark, dir, Some(v), Some(m), kindOf(spark, dir))
+  }
+
+  /** [[Snapshot.centroids]] at any `version`, published or not (a
+    * version a recluster staged centroids for, or the build's version 0
+    * before any manifest exists).
+    */
+  def centroids(spark: SparkSession, dir: String, flat: String, version: Option[Int],
+                kind: String): Option[Collected] = {
+    val prefix = s"${flat}_g"
+    val scoped = version.toSeq.flatMap { v =>
+      childNames(spark, dir).filter(_.startsWith(prefix))
+        .flatMap(n => n.stripPrefix(prefix).toIntOption).filter(_ <= v)
+    }
+    collected(spark, dir, scoped.maxOption.fold(flat)(g => s"$prefix$g"), kind)
+  }
+
+  /** The recorded `_graft_kind` of the layout at `dir`; layouts
+    * predating the marker read as `plain`.
+    */
+  def kindOf(spark: SparkSession, dir: String): String =
+    readSmallFile(spark, new org.apache.hadoop.fs.Path(s"$dir/_graft_kind")).fold("plain")(_.trim)
+
+  // One entry per (dir, item): the stamp of the files it was read from,
+  // and the value. A changed stamp replaces the entry.
+  private val memo = scala.collection.concurrent.TrieMap
+    .empty[(String, String), (Seq[Any], Any)]
+
+  /** `read` memoized under (`dir`, `item`) on the stamp of `path`'s
+    * files and `kind`. The listing runs before the read, so a file
+    * landing in between can only make the next call read again.
+    */
+  private def memoized[V](spark: SparkSession, dir: String, item: String, path: String,
+                          kind: String)(read: => V): V = {
+    val stamp = kind +: listing(spark, path)
+    memo.get((dir, item)) match {
+      case Some((s, v)) if s == stamp => v.asInstanceOf[V]
+      case _ =>
+        val v = read
+        memo.put((dir, item), (stamp, v))
+        v
+    }
+  }
+
+  /** The collected rows of the sidecar `dir/<name>`, if present,
+    * memoized on its file set (shared by [[Snapshot.sidecar]] and
+    * [[Tombstones.ids]]).
+    */
+  private[operators] def collected(spark: SparkSession, dir: String, name: String,
+                                   kind: String = ""): Option[Collected] = {
+    val path = s"$dir/$name"
+    if (!fsOf(spark, dir).exists(new org.apache.hadoop.fs.Path(path))) None
+    else Some(memoized(spark, dir, name, path, kind)(Collected.of(spark.read.parquet(path))))
+  }
+
+  /** `(path, length, modification time)` of every file under `root`
+    * that a parquet read of it sees (names starting with `_` or `.`
+    * are skipped, as Spark skips them), sorted by path.
+    */
+  private def listing(spark: SparkSession, root: String): Seq[(String, Long, Long)] = {
+    val fs = fsOf(spark, root)
+    def walk(p: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] =
+      fs.listStatus(p).toSeq
+        .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+        .flatMap { st =>
+          if (st.isDirectory) walk(st.getPath)
+          else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+        }
+    val p = new org.apache.hadoop.fs.Path(root)
+    if (fs.exists(p)) walk(p).sorted else Nil
+  }
+
+  private def childNames(spark: SparkSession, dir: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = fsOf(spark, dir)
+    if (!fs.exists(p)) Nil else fs.listStatus(p).toSeq.map(_.getPath.getName)
   }
 
   /** Publish manifest version `v`: write the body to a dot-prefixed
@@ -233,31 +384,50 @@ private[graft] object CellSnapshot {
     * files for it (its gen-0 / older-gen subtrees may still exist for
     * old readers, so appending there would resurrect them) — and is
     * re-added to the manifest (one version bump).
+    *
+    * The batch is placed against `snap`'s manifest and computed once:
+    * rows of generation-0 cells are one append to the build tree, and
+    * every other row is one append rooted at `dir/_gen`, partitioned by
+    * `(g, partCol)`, which lands in `genRoot(dir, "", g)/<partCol>=<c>`.
+    * A batch costs the same jobs however many generations its cells
+    * live in.
     */
-  def appendAssigned(spark: SparkSession, dir: String, assigned: DataFrame,
-                     partCol: String = "cell"): Unit =
-    mapping(spark, dir) match {
+  def appendAssigned(spark: SparkSession, snap: Snapshot, assigned: DataFrame,
+                     partCol: String): Unit =
+    snap.version.zip(snap.mapping) match {
       case None =>
-        assigned.write.mode("append").partitionBy(partCol).parquet(dir)
+        assigned.write.mode("append").partitionBy(partCol).parquet(snap.dir)
       case Some((v, m)) =>
-        val batchCells = assigned.select(col(partCol).cast("long"))
-          .distinct().collect().map(_.getLong(0))
         // manifest-absent cells land at gen v (v >= 1 whenever a
         // manifest exists, so this is never the gen-0 tree)
-        batchCells.groupBy(c => m.getOrElse(c, v)).foreach { case (g, cells) =>
-          assigned.filter(col(partCol).isin(cells.toIndexedSeq: _*))
-            .write.mode("append").partitionBy(partCol).parquet(genRoot(dir, "", g))
-        }
-        val fresh = batchCells.filterNot(m.contains)
-        if (fresh.nonEmpty) publish(spark, dir, v + 1, m ++ fresh.map(_ -> v))
+        val placed = assigned
+          .withColumn("g", coalesce(try_element_at(typedLit(m), col(partCol).cast("long")), lit(v)))
+          .persist()
+        try {
+          val cells = placed.select(col(partCol).cast("long"), col("g")).distinct().collect()
+            .map(r => (r.getLong(0), r.getInt(1)))
+          if (cells.exists(_._2 == 0))
+            placed.filter(col("g") === 0).drop("g")
+              .write.mode("append").partitionBy(partCol).parquet(snap.dir)
+          if (cells.exists(_._2 > 0))
+            placed.filter(col("g") > 0)
+              .write.mode("append").partitionBy("g", partCol).parquet(s"${snap.dir}/_gen")
+          val fresh = cells.map(_._1).filterNot(m.contains)
+          if (fresh.nonEmpty) publish(spark, snap.dir, v + 1, m ++ fresh.map(_ -> v))
+        } finally placed.unpersist(blocking = true)
     }
 
   /** Drop all snapshot state — called by every full-rebuild writer so a
-    * fresh layout can never resolve a stale manifest.
+    * fresh layout can never resolve a stale manifest, nor, once its
+    * first maintenance op publishes version N, a recluster's
+    * generation-scoped centroids (`_centroids_g<N>`, `centroids_g<N>`)
+    * left by a previous layout at this dir.
     */
   def reset(spark: SparkSession, dir: String): Unit = {
     val fs = fsOf(spark, dir)
-    Seq(manifestDir(dir), new org.apache.hadoop.fs.Path(s"$dir/_gen"), pinsDir(dir))
+    val scoped = childNames(spark, dir).filter(_.matches("_?centroids_g\\d+"))
+      .map(n => new org.apache.hadoop.fs.Path(s"$dir/$n"))
+    (Seq(manifestDir(dir), new org.apache.hadoop.fs.Path(s"$dir/_gen"), pinsDir(dir)) ++ scoped)
       .foreach(p => if (fs.exists(p)) fs.delete(p, true))
   }
 

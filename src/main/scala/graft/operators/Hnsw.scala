@@ -489,9 +489,9 @@ object Hnsw {
     * fan-out shared by the rebuilt ([[searchRouted]]) and persisted
     * ([[search]] on a routed layout) paths.
     */
-  private def routed(queries: DataFrame, centroids: DataFrame, nprobe: Int)
+  private def routed(queries: DataFrame, centroids: CellSnapshot.Collected, nprobe: Int)
       : Map[Int, Array[(Long, Array[Double])]] =
-    Ivf.probePlan(centroids, queries, nprobe).byCell.map { case (c, qs) => c.toInt -> qs }
+    Ivf.probePlanOver(centroids, queries, nprobe).byCell.map { case (c, qs) => c.toInt -> qs }
 
   /** Search by rebuilding shard subgraphs executor-side and fanning
     * every query out to every shard — the queries×shards shuffle form
@@ -608,11 +608,9 @@ object Hnsw {
              k: Int, p: Params, nprobe: Int = 0,
              predicate: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     import spark.implicits._
-    val v = CellSnapshot.version(spark, dir)
-    def tree(sub: String) =
-      v.fold(spark.read.parquet(s"$dir/$sub"))(CellSnapshot.readAt(spark, dir, sub, "part", _))
-    val (nodes, edges) = (tree("nodes"), tree("edges"))
-    val tombs = Tombstones.ids(spark, dir)
+    val snap = CellSnapshot.open(spark, dir)
+    val (nodes, edges) = (snap.read("nodes", "part"), snap.read("edges", "part"))
+    val tombs = snap.tombstones
     val marked = tombs.fold(nodes)(t =>
       nodes.join(broadcast(t.withColumn("__tomb", lit(true))), Seq("vec_id"), "left"))
     val eligible = (predicate.toSeq ++ tombs.map(_ => col("__tomb").isNull)).reduceOption(_ && _)
@@ -622,13 +620,14 @@ object Hnsw {
         col("level"), col("embedding"))
       .as[ShardRec]
       .union(edgeRecs(edges))
-    if (exists(spark, s"$dir/centroids")) {
-      require(nprobe > 0, s"$dir is a routed layout: Hnsw.search needs nprobe >= 1")
-      val cents = v.fold(spark.read.parquet(s"$dir/centroids"))(routedCentroidsAt(spark, dir, _))
-      searchProbed(recs, routed(queries, cents, nprobe), k, p, rebuild = false,
-        filtered = eligible.isDefined)
-    } else searchCogrouped(recs, replicateAll(queries, p.numPartitions), k, p,
-      rebuild = false, filtered = eligible.isDefined)
+    snap.centroids("centroids") match {
+      case Some(cents) =>
+        require(nprobe > 0, s"$dir is a routed layout: Hnsw.search needs nprobe >= 1")
+        searchProbed(recs, routed(queries, cents, nprobe), k, p, rebuild = false,
+          filtered = eligible.isDefined)
+      case None => searchCogrouped(recs, replicateAll(queries, p.numPartitions), k, p,
+        rebuild = false, filtered = eligible.isDefined)
+    }
   }
 
   /** [[search]] under its former routed name, kept for callers outside
@@ -664,8 +663,9 @@ object Hnsw {
     // and manifest-delta formation
     val affected = fresh.select(col("part")).distinct().as[Int].collect().toSeq
     if (affected.isEmpty) return
-    val (v, m) = CellSnapshot.mappingOrBase(spark, dir, "nodes", "part")
-    def stored(sub: String) = CellSnapshot.read(spark, dir, sub, "part")
+    val snap = CellSnapshot.open(spark, dir)
+    val (v, m) = snap.mappingOrBase("nodes", "part")
+    def stored(sub: String) = snap.read(sub, "part")
       .filter(col("part").isin(affected: _*)) // partition-pruned
     val nodes = stored("nodes").select(col("vec_id"), col("embedding"), col("level"),
       col("part").cast("int").as("part"))
@@ -714,7 +714,8 @@ object Hnsw {
       .select(col("cell").cast("int").as("part"), lit(true).as("is_node"),
         col("vec_id"), lit(1L).as("b"), levelColumn(p).as("level"), col("embedding"))
       .as[ShardRec]
-    searchProbed(recs, routed(queries, centroids, nprobe), k, p, rebuild = true)
+    searchProbed(recs, routed(queries, CellSnapshot.Collected.of(centroids), nprobe), k, p,
+      rebuild = true)
   }
 
   /** Persist the ROUTED (IVF-cell-sharded) index: `nodes(part, vec_id,
@@ -807,8 +808,9 @@ object Hnsw {
     */
   def compactRouted(spark: org.apache.spark.sql.SparkSession, dir: String,
                     p: Params): Unit = {
-    val dels = Tombstones.ids(spark, dir).getOrElse(return)
-    val nodes = readRoutedNodes(spark, dir)
+    val snap = CellSnapshot.open(spark, dir)
+    val dels = snap.tombstones.getOrElse(return)
+    val nodes = snap.read("nodes", "part")
     // affected cell ids: ≤ replication·|tombstones| ints to the driver
     // (partition-filter + manifest-delta formation)
     val affected = nodes.join(broadcast(dels.select("vec_id")), Seq("vec_id"), "left_semi")
@@ -818,7 +820,7 @@ object Hnsw {
         .join(broadcast(dels.select("vec_id")), Seq("vec_id"), "left_anti")
         .select(col("part").cast("int").as("part"), col("vec_id"),
           col("embedding"), col("level"))
-      val (v, m) = CellSnapshot.mappingOrBase(spark, dir, "nodes", "part")
+      val (v, m) = snap.mappingOrBase("nodes", "part")
       val g = v + 1
       kept.write.mode("overwrite").partitionBy("part")
         .parquet(CellSnapshot.genRoot(dir, "nodes", g))
@@ -854,7 +856,7 @@ object Hnsw {
     * empty cells counting as 0.
     */
   def cellSkewRouted(spark: org.apache.spark.sql.SparkSession, dir: String): Double = {
-    val c = routedCentroidsOf(spark, dir).count().toDouble
+    val c = servingCentroids(CellSnapshot.open(spark, dir)).rows.length.toDouble
     val r = cellStatsRouted(spark, dir)
       .agg(max("n_rows").cast("double").as("mx"), sum("n_rows").cast("double").as("tot"))
       .head()
@@ -877,27 +879,20 @@ object Hnsw {
     * generation-scoped file before its manifest flip).
     */
   def routedCentroidsOf(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    CellSnapshot.version(spark, dir) match {
-      case Some(v) => routedCentroidsAt(spark, dir, v)
-      case None    => spark.read.parquet(s"$dir/centroids")
-    }
+    servingCentroids(CellSnapshot.open(spark, dir)).frame(spark)
+
+  private def servingCentroids(snap: CellSnapshot.Snapshot): CellSnapshot.Collected =
+    snap.centroids("centroids").getOrElse(throw new IllegalArgumentException(
+      s"${snap.dir} has no routing centroids: it is not a routed HNSW layout"))
 
   /** The centroids pairing with [[readRoutedNodesAt]] `version` (see
     * [[routedCentroidsOf]]).
     */
   def routedCentroidsAt(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        version: Int): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens =
-      if (!fs.exists(root)) Array.empty[Int]
-      else fs.listStatus(root).map(_.getPath.getName)
-        .collect { case n if n.startsWith("centroids_g") => n.stripPrefix("centroids_g") }
-        .flatMap(s => scala.util.Try(s.toInt).toOption)
-        .filter(_ <= version)
-    if (gens.isEmpty) spark.read.parquet(s"$dir/centroids")
-    else spark.read.parquet(s"$dir/centroids_g${gens.max}")
-  }
+                        version: Int): DataFrame =
+    CellSnapshot.centroids(spark, dir, "centroids", Some(version), CellSnapshot.kindOf(spark, dir))
+      .getOrElse(throw new IllegalArgumentException(s"$dir has no routing centroids"))
+      .frame(spark)
 
   /** RECLUSTER maintenance for the ROUTED layout — the drift repair
     * after enough appends skew the cells ([[compactRouted]] is the
@@ -922,8 +917,8 @@ object Hnsw {
     */
   def reclusterRouted(spark: org.apache.spark.sql.SparkSession, dir: String,
                       newCents: DataFrame, p: Params, replication: Int = 2): Unit = {
-    val live = Ivf.withoutExcluded(readRoutedNodes(spark, dir),
-      Tombstones.ids(spark, dir))
+    val snap = CellSnapshot.open(spark, dir)
+    val live = Ivf.withoutExcluded(snap.read("nodes", "part"), snap.tombstones)
     // one payload row per vector: replicas carry identical
     // (embedding, level), so any one of them re-routes the vector
     val uniq = live.select(col("vec_id"), col("embedding"), col("level"))
@@ -932,7 +927,7 @@ object Hnsw {
       .join(Ivf.assignMulti(uniq, newCents, replication), Seq("vec_id"))
       .select(col("cell").cast("int").as("part"), col("vec_id"),
         col("embedding"), col("level"))
-    val (v, _) = CellSnapshot.mappingOrBase(spark, dir, "nodes", "part")
+    val (v, _) = snap.mappingOrBase("nodes", "part")
     val g = v + 1
     assigned.write.mode("overwrite").partitionBy("part")
       .parquet(CellSnapshot.genRoot(dir, "nodes", g))
@@ -966,7 +961,8 @@ object Hnsw {
     */
   def insertIntoRouted(spark: org.apache.spark.sql.SparkSession, dir: String,
                        rows: DataFrame, p: Params, replication: Int = 2): Unit = {
-    val cents = routedCentroidsOf(spark, dir)
+    val snap = CellSnapshot.open(spark, dir)
+    val cents = servingCentroids(snap).frame(spark)
     val fresh = rows
       .join(Ivf.assignMulti(rows, cents, replication), Seq("vec_id"))
       .select(col("cell").cast("int").as("part"), col("vec_id"),
@@ -976,12 +972,12 @@ object Hnsw {
     val affected = fresh.select(col("part").cast("long")).distinct()
       .collect().map(_.getLong(0))
     if (affected.isEmpty) return
-    val existing = readRoutedNodes(spark, dir)
+    val existing = snap.read("nodes", "part")
       .filter(col("part").isin(affected.toIndexedSeq: _*)) // partition-pruned
       .select(col("part").cast("int").as("part"), col("vec_id"),
         col("embedding"), col("level"))
     val union = existing.unionByName(fresh)
-    val (v, m) = CellSnapshot.mappingOrBase(spark, dir, "nodes", "part")
+    val (v, m) = snap.mappingOrBase("nodes", "part")
     val g = v + 1
     union.write.mode("overwrite").partitionBy("part")
       .parquet(CellSnapshot.genRoot(dir, "nodes", g))

@@ -203,16 +203,8 @@ object Ivf {
     * silently mixing element types (`_graft_kind` sidecar; layouts
     * predating the marker read as `plain`).
     */
-  def layoutKind(spark: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_graft_kind")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "plain"
-    else {
-      val in = fs.open(p)
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim
-      finally in.close()
-    }
-  }
+  def layoutKind(spark: org.apache.spark.sql.SparkSession, dir: String): String =
+    CellSnapshot.kindOf(spark, dir)
 
   /** Record a layout's vector-transform kind (see [[layoutKind]]) —
     * shared with the code layouts (e.g. `pq_residual`) so their
@@ -375,12 +367,10 @@ object Ivf {
   /** The [[Metric]] of the layout at `dir`; `op` names the refusing
     * entry point when the layout holds codes instead of vectors.
     */
-  private def metricOf(spark: org.apache.spark.sql.SparkSession, dir: String,
-                       op: String): Metric = {
-    val kind = layoutKind(spark, dir)
-    require(metrics.contains(kind),
-      s"$op serves plain, cosine and mips layouts, but $dir is a '$kind' layout")
-    metrics(kind)
+  private def metricOf(snap: CellSnapshot.Snapshot, op: String): Metric = {
+    require(metrics.contains(snap.kind),
+      s"$op serves plain, cosine and mips layouts, but ${snap.dir} is a '${snap.kind}' layout")
+    metrics(snap.kind)
   }
 
   /** `queries` as a `(query_id, query_vec)` batch in the layout's
@@ -417,14 +407,13 @@ object Ivf {
   def topKPartitioned(spark: org.apache.spark.sql.SparkSession, dir: String,
                       queries: DataFrame, k: Int, nprobe: Int,
                       roundTo: Int = 6, predicate: Option[Column] = None): DataFrame = {
-    val m = metricOf(spark, dir, "Ivf.topKPartitioned")
-    val qs = asBatch(queries, m)
     // data and routing pinned to ONE manifest version: probes formed
     // from v's centroids prune v's cell scan, never a cross-version mix
-    val (stored, cents) = readLayoutWithCentroids(spark, dir)
-    val plan = probePlan(cents, qs, nprobe)
-    val pruned = stored.filter(col("cell").isin(plan.unionCells: _*))
-    val scored = withoutExcluded(predicate.fold(pruned)(pruned.filter), Tombstones.ids(spark, dir))
+    val snap = CellSnapshot.open(spark, dir)
+    val m = metricOf(snap, "Ivf.topKPartitioned")
+    val plan = probePlanOver(servingCentroids(snap), asBatch(queries, m), nprobe)
+    val pruned = snap.read("", "cell").filter(col("cell").isin(plan.unionCells: _*))
+    val scored = withoutExcluded(predicate.fold(pruned)(pruned.filter), snap.tombstones)
       // candidate meets only the queries probing its cell
       .join(broadcast(plan.pairs(spark)), Seq("cell"))
       // the vectors the probe plan collected: no second query scan
@@ -481,8 +470,9 @@ object Ivf {
     * pipeline must also delete from the source table.
     */
   def compactPartitioned(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val dels = Tombstones.ids(spark, dir).getOrElse(return)
-    val stored = readLayout(spark, dir)
+    val snap = CellSnapshot.open(spark, dir)
+    val dels = snap.tombstones.getOrElse(return)
+    val stored = snap.read("", "cell")
     // affected cell ids: ≤ |tombstones| longs to the driver (needed to
     // form the partition filter and the manifest delta)
     // cast: the partition column's read type is inferred (int for small
@@ -490,7 +480,7 @@ object Ivf {
     val affected = stored.join(broadcast(dels.select("vec_id")), Seq("vec_id"), "left_semi")
       .select(col("cell").cast("long")).distinct().collect().map(_.getLong(0))
     if (affected.nonEmpty) {
-      val (v, m) = CellSnapshot.mappingOrBase(spark, dir, "", "cell")
+      val (v, m) = snap.mappingOrBase("", "cell")
       val g = v + 1
       val out = CellSnapshot.genRoot(dir, "", g)
       // rebuild ONLY the affected cells' rows (partition-pruned read)
@@ -531,10 +521,12 @@ object Ivf {
     * the flat read (zero overhead beyond one directory listing).
     */
   def centroidsOf(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    CellSnapshot.version(spark, dir) match {
-      case Some(v) => centroidsAt(spark, dir, v)
-      case None    => spark.read.parquet(s"$dir/_centroids")
-    }
+    servingCentroids(CellSnapshot.open(spark, dir)).frame(spark)
+
+  /** [[centroidsOf]] as the collected sidecar rows of `snap`'s version. */
+  private[operators] def servingCentroids(snap: CellSnapshot.Snapshot): CellSnapshot.Collected =
+    snap.centroids("_centroids").getOrElse(throw new IllegalArgumentException(
+      s"${snap.dir} has no _centroids sidecar: it is not a cell-partitioned layout"))
 
   /** The centroids that pair with [[readLayoutAt]] `version` — the
     * newest `_centroids_g{v'}` with `v' <= version`, else the flat
@@ -542,19 +534,10 @@ object Ivf {
     * at-or-below). Pin both halves of a time-travel read with this.
     */
   def centroidsAt(spark: org.apache.spark.sql.SparkSession, dir: String,
-                  version: Int): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens =
-      if (!fs.exists(root)) Array.empty[Int]
-      else fs.listStatus(root).map(_.getPath.getName)
-        .collect { case n if n.startsWith("_centroids_g") =>
-          n.stripPrefix("_centroids_g") }
-        .flatMap(s => scala.util.Try(s.toInt).toOption)
-        .filter(_ <= version)
-    if (gens.isEmpty) spark.read.parquet(s"$dir/_centroids")
-    else spark.read.parquet(s"$dir/_centroids_g${gens.max}")
-  }
+                  version: Int): DataFrame =
+    CellSnapshot.centroids(spark, dir, "_centroids", Some(version), layoutKind(spark, dir))
+      .getOrElse(throw new IllegalArgumentException(s"$dir has no _centroids sidecar"))
+      .frame(spark)
 
   /** Both halves of the serving state — live rows AND routing
     * centroids — resolved against ONE manifest version. Every serving
@@ -565,12 +548,10 @@ object Ivf {
     * version once pins data and routing to the same snapshot.
     */
   def readLayoutWithCentroids(spark: org.apache.spark.sql.SparkSession,
-                              dir: String): (DataFrame, DataFrame) =
-    CellSnapshot.version(spark, dir) match {
-      case Some(v) => (readLayoutAt(spark, dir, v), centroidsAt(spark, dir, v))
-      case None    => (CellSnapshot.read(spark, dir, "", "cell"),
-                       spark.read.parquet(s"$dir/_centroids"))
-    }
+                              dir: String): (DataFrame, DataFrame) = {
+    val snap = CellSnapshot.open(spark, dir)
+    (snap.read("", "cell"), servingCentroids(snap).frame(spark))
+  }
 
   /** Per-cell occupancy of the serving layout: `(cell, n_rows)` over
     * LIVE rows — the balance diagnostic that decides when to
@@ -597,7 +578,7 @@ object Ivf {
     * a C-row aggregate.
     */
   def cellSkew(spark: org.apache.spark.sql.SparkSession, dir: String): Double = {
-    val c = centroidsOf(spark, dir).count().toDouble
+    val c = servingCentroids(CellSnapshot.open(spark, dir)).rows.length.toDouble
     val r = cellStats(spark, dir)
       .agg(max("n_rows").cast("double").as("mx"), sum("n_rows").cast("double").as("tot"))
       .head()
@@ -796,8 +777,8 @@ object Ivf {
     val p = radiiPath(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) {
-      val cents = centroidsOf(spark, dir)
-      readLayout(spark, dir)
+      val (stored, cents) = readLayoutWithCentroids(spark, dir)
+      stored
         .join(broadcast(cents), col("cell") === col("centroid_id"))
         .groupBy(col("cell").cast("long").as("cell"))
         .agg(
@@ -863,7 +844,9 @@ object Ivf {
                   queries: DataFrame, threshold: Double, roundTo: Int = 6,
                   predicate: Option[Column] = None,
                   ordered: Boolean = true): DataFrame = {
-    val m = metricOf(spark, dir, "Ivf.rangeSearch")
+    val snap = CellSnapshot.open(spark, dir)
+    val m = metricOf(snap, "Ivf.rangeSearch")
+    ensureRadii(spark, dir)
     val margin = math.pow(10.0, -roundTo)
     val q = col("query_vec") // in the layout's space
     // how far the query lies outside the cell's covering ball
@@ -876,22 +859,20 @@ object Ivf {
     }
     val s = col(m.name)
     val passes = if (m.asc) s <= threshold else s >= threshold
-    ensureRadii(spark, dir)
     val qs = asBatch(queries, m)
-    val (stored, cents) = readLayoutWithCentroids(spark, dir)
     // the C radii rows are taken now, like the tombstones: maintenance
     // drops the sidecar, and a frame built before it must still run
-    val radiiRead = spark.read.parquet(s"$dir/_radii")
-    val radii = spark.createDataFrame(java.util.Arrays.asList(radiiRead.collect(): _*),
-      radiiRead.schema)
-    val probePairs = cents.join(radii, col("centroid_id") === col("cell"))
+    val radii = snap.sidecar("_radii").getOrElse(throw new IllegalStateException(
+      s"the _radii sidecar of $dir vanished before the range search read it")).frame(spark)
+    val probePairs = servingCentroids(snap).frame(spark)
+      .join(radii, col("centroid_id") === col("cell"))
       .drop("cell")
       .crossJoin(broadcast(qs))
       .filter(isnan(col("radius")) || cellBound)
       .select(col("query_id"), col("centroid_id").as("cell"))
     val unionCells = probePairs.select("cell").distinct().collect().map(_.getLong(0))
-    val pruned = stored.filter(col("cell").isin(unionCells.toIndexedSeq: _*))
-    val hits = withoutExcluded(predicate.fold(pruned)(pruned.filter), Tombstones.ids(spark, dir))
+    val pruned = snap.read("", "cell").filter(col("cell").isin(unionCells.toIndexedSeq: _*))
+    val hits = withoutExcluded(predicate.fold(pruned)(pruned.filter), snap.tombstones)
       .join(broadcast(probePairs), Seq("cell")) // predicate scan-pushable → PushedFilters
       .join(broadcast(qs), Seq("query_id"))
       .select(col("query_id"), col("vec_id"), round(m.score(col("embedding"), q), roundTo).as(m.name))
@@ -934,7 +915,8 @@ object Ivf {
     */
   def insertInto(spark: org.apache.spark.sql.SparkSession, dir: String,
                  rows: DataFrame): Unit = {
-    val prepared = layoutKind(spark, dir) match {
+    val snap = CellSnapshot.open(spark, dir)
+    val prepared = snap.kind match {
       case "plain" => rows
       case "cosine" => normalized(rows)
       case "mips" =>
@@ -948,9 +930,8 @@ object Ivf {
           s"Ivf.insertInto appends to plain, cosine and mips layouts, but $dir is a " +
             s"'$kind' layout — append code layouts through Pq.insertInto")
     }
-    val cents = centroidsOf(spark, dir)
-    CellSnapshot.appendAssigned(spark, dir,
-      prepared.join(assignWith(prepared, cents), Seq("vec_id")))
+    CellSnapshot.appendAssigned(spark, snap,
+      prepared.join(assignWith(prepared, servingCentroids(snap).frame(spark)), Seq("vec_id")), "cell")
     // inserted rows can EXTEND a cell's covering radius, so a stale
     // `_radii` sidecar would under-estimate and make range pruning
     // lossy — drop it (the next range serve regenerates in one scan)
@@ -1076,11 +1057,11 @@ object Ivf {
   def topKPartitionedBatchFused(spark: org.apache.spark.sql.SparkSession, dir: String,
                                 queries: DataFrame, k: Int, nprobe: Int,
                                 roundTo: Int = 6): DataFrame = {
-    val m = metricOf(spark, dir, "Ivf.topKPartitionedBatchFused")
-    val (stored, cents) = readLayoutWithCentroids(spark, dir) // one-version pin
-    val plan = probePlan(cents, asBatch(queries, m), nprobe)
-    val pruned = stored.filter(col("cell").isin(plan.unionCells: _*)) // partition-pruned
-    val live = withoutExcluded(pruned, Tombstones.ids(spark, dir))
+    val snap = CellSnapshot.open(spark, dir) // one-version pin
+    val m = metricOf(snap, "Ivf.topKPartitionedBatchFused")
+    val plan = probePlanOver(servingCentroids(snap), asBatch(queries, m), nprobe)
+    val pruned = snap.read("", "cell").filter(col("cell").isin(plan.unionCells: _*)) // partition-pruned
+    val live = withoutExcluded(pruned, snap.tombstones)
       .select(col("cell"), col("vec_id"), col("embedding"))
     // per-cell query lists: the same Q·nprobe payload the declarative
     // path ships through its BroadcastExchange, grouped for O(1) cell
@@ -1268,11 +1249,18 @@ object Ivf {
     * the batch) and ranked by [[rankCells]].
     */
   private[operators] def probePlan(cents: DataFrame, queries: DataFrame, nprobe: Int,
-                                   keyCols: Seq[String] = Seq("query_id")): ProbePlan = {
+                                   keyCols: Seq[String] = Seq("query_id")): ProbePlan =
+    probePlanOver(CellSnapshot.Collected.of(cents), queries, nprobe, keyCols)
+
+  /** [[probePlan]] over centroid rows already on the driver (a layout's
+    * memoized sidecar): only the query batch is collected.
+    */
+  private[operators] def probePlanOver(cents: CellSnapshot.Collected, queries: DataFrame,
+                                       nprobe: Int, keyCols: Seq[String] = Seq("query_id")): ProbePlan = {
     val (keys, vecs) = collectQueries(queries, keyCols)
-    val cs = cents.select(col("centroid_id").cast("long"),
-        transform(col("centroid_vec"), x => x.cast("double"))).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    val (id, vec) = (cents.schema.fieldIndex("centroid_id"), cents.schema.fieldIndex("centroid_vec"))
+    val cs = cents.rows
+      .map(r => (r.getAs[Number](id).longValue, r.getSeq[Number](vec).iterator.map(_.doubleValue).toArray))
       .sortBy(_._1) // stable sort by distance in rankCells leaves ties id-ascending
     new ProbePlan(keys, vecs, rankCells(cs, vecs, nprobe, i => keyLabel(keyCols, keys(i))),
       cs.toMap, keyCols.map(queries.schema(_)), cents.schema("centroid_id").dataType)

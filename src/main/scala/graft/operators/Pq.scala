@@ -123,12 +123,14 @@ object Pq {
     * `0..c-1` (the [[Ivf.centroids]] seed rule guarantees it; positional
     * LUT/code lookups depend on it).
     */
-  private def collectBooks(books: DataFrame): Map[Int, IndexedSeq[Seq[Double]]] = {
-    val spark = books.sparkSession
-    import spark.implicits._
-    val rows = books
-      .select(col("subspace").cast("int"), col("centroid_id").cast("long"), col("centroid_vec"))
-      .as[(Int, Long, Seq[Double])].collect()
+  private def collectBooks(books: DataFrame): Map[Int, IndexedSeq[Seq[Double]]] =
+    booksOf(CellSnapshot.Collected.of(books))
+
+  /** [[collectBooks]] over codebook rows already on the driver. */
+  private def booksOf(books: CellSnapshot.Collected): Map[Int, IndexedSeq[Seq[Double]]] = {
+    val Seq(sub, id, vec) = Seq("subspace", "centroid_id", "centroid_vec").map(books.schema.fieldIndex)
+    val rows = books.rows.map(r => (r.getAs[Number](sub).intValue, r.getAs[Number](id).longValue,
+      r.getSeq[Number](vec).map(_.doubleValue)))
     rows.groupBy(_._1).map { case (s, bs) =>
       val sorted = bs.sortBy(_._2)
       require(sorted.map(_._2).toSeq == (0L until sorted.length.toLong),
@@ -259,8 +261,8 @@ object Pq {
     */
   def adcTopKStored(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
                     roundTo: Int = 6): DataFrame =
-    adcTopKFromCodes(spark.read.parquet(dir),
-      collectBooks(spark.read.parquet(s"$dir/_codebooks")), collectQuery(queries), k, roundTo)
+    adcTopKFromCodes(spark.read.parquet(dir), storedBooks(CellSnapshot.open(spark, dir)),
+      collectQuery(queries), k, roundTo)
 
   /** IVF-PQ serving layout: the code table written partitioned BY
     * coarse cell (`dir/cell=<k>/` holds `(vec_id, codes)`), with
@@ -304,6 +306,11 @@ object Pq {
 
   private type Books = Map[Int, IndexedSeq[Seq[Double]]]
 
+  /** The layout's `_codebooks` sidecar, collected once per file set. */
+  private def storedBooks(snap: CellSnapshot.Snapshot): Books =
+    booksOf(snap.sidecar("_codebooks").getOrElse(throw new IllegalStateException(
+      s"${snap.dir} has no _codebooks sidecar")))
+
   /** How an IVF code layout kind ([[Ivf.layoutKind]]) is served and
     * grown — the one table [[topK]] and [[insertInto]] read:
     *  - `pq` ([[ensureEncodedPartitioned]]): `_codebooks`, one LUT per
@@ -320,40 +327,37 @@ object Pq {
     * `(vec_id, codes, cell)` rows against its frozen sidecars and the
     * given centroids.
     */
-  private final case class CodeKind(books: (SparkSession, String) => Books,
+  private final case class CodeKind(books: CellSnapshot.Snapshot => Books,
                                     lutPerCell: Boolean,
-                                    encode: (SparkSession, String, DataFrame, DataFrame) => DataFrame)
+                                    encode: (CellSnapshot.Snapshot, DataFrame, DataFrame) => DataFrame)
 
   private val codeKinds: Map[String, CodeKind] = {
-    def stored(spark: SparkSession, dir: String): Books =
-      collectBooks(spark.read.parquet(s"$dir/_codebooks"))
     def codes(books: Books): Column =
       pqEncode(col("embedding"), (0 until books.size).map(books(_).toSeq)).as("codes")
     Map(
-      "pq" -> CodeKind(stored, lutPerCell = false, (spark, dir, rows, cents) =>
-        rows.select(col("vec_id"), codes(stored(spark, dir)))
+      "pq" -> CodeKind(storedBooks, lutPerCell = false, (snap, rows, cents) =>
+        rows.select(col("vec_id"), codes(storedBooks(snap)))
           .join(Ivf.assignWith(rows, cents), Seq("vec_id"))),
-      "pq_residual" -> CodeKind(stored, lutPerCell = true, (spark, dir, rows, cents) =>
-        residuals(rows, cents).select(col("vec_id"), codes(stored(spark, dir)), col("cell"))),
-      "ivfsq8" -> CodeKind((spark, dir) => {
-          val (lo, hi) = Sq.readBounds(spark, dir)
+      "pq_residual" -> CodeKind(storedBooks, lutPerCell = true, (snap, rows, cents) =>
+        residuals(rows, cents).select(col("vec_id"), codes(storedBooks(snap)), col("cell"))),
+      "ivfsq8" -> CodeKind(snap => {
+          val (lo, hi) = Sq.boundsOf(snap)
           Sq.affineBooks(lo, hi)
-        }, lutPerCell = false, (spark, dir, rows, cents) => {
-          val (lo, hi) = Sq.readBounds(spark, dir)
+        }, lutPerCell = false, (snap, rows, cents) => {
+          val (lo, hi) = Sq.boundsOf(snap)
           rows.select(col("vec_id"), Sq.encodeCol(col("embedding"), lo, hi).as("codes"))
             .join(Ivf.assignWith(rows, cents), Seq("vec_id"))
         }))
   }
 
-  /** The [[CodeKind]] of the layout at `dir`; `op` names the refusing
-    * entry point when the layout holds vectors or no codes it knows.
+  /** The [[CodeKind]] of `snap`; `op` names the refusing entry point
+    * when the layout holds vectors or no codes it knows.
     */
-  private def codeKindOf(spark: SparkSession, dir: String, op: String): CodeKind = {
-    val kind = Ivf.layoutKind(spark, dir)
-    require(codeKinds.contains(kind),
+  private def codeKindOf(snap: CellSnapshot.Snapshot, op: String): CodeKind = {
+    require(codeKinds.contains(snap.kind),
       s"$op takes IVF-PQ ('pq'), residual IVF-PQ ('pq_residual') and IVF-SQ8 " +
-        s"('ivfsq8') code layouts, but $dir is a '$kind' layout")
-    codeKinds(kind)
+        s"('ivfsq8') code layouts, but ${snap.dir} is a '${snap.kind}' layout")
+    codeKinds(snap.kind)
   }
 
   /** Exact L2 re-rank of the ADC shortlist: the `shortlist` best ADC
@@ -409,16 +413,16 @@ object Pq {
   def topK(spark: SparkSession, dir: String, queries: DataFrame, k: Int, nprobe: Int,
            roundTo: Int = 6, predicate: Option[Column] = None, exactSums: Boolean = true,
            rerank: Option[Rerank] = None): DataFrame = {
-    val code = codeKindOf(spark, dir, "Pq.topK")
+    val snap = CellSnapshot.open(spark, dir) // one-version pin
+    val code = codeKindOf(snap, "Pq.topK")
     rerank.foreach(r => require(r.shortlist >= k, s"shortlist ${r.shortlist} must be >= k $k"))
     val single = !queries.columns.contains("query_id")
-    val (stored, cents) = Ivf.readLayoutWithCentroids(spark, dir) // one-version pin
-    val plan = Ivf.probePlan(cents,
+    val plan = Ivf.probePlanOver(Ivf.servingCentroids(snap),
       if (single) queries.select(lit(0L).as("query_id"), col("query_vec")) else queries, nprobe)
     val qs = broadcast(plan.queries(spark))
-    val books = code.books(spark, dir)
-    val pruned = stored.filter(col("cell").isin(plan.unionCells: _*)) // partition-pruned
-    val live = Ivf.withoutExcluded(predicate.fold(pruned)(pruned.filter), Tombstones.ids(spark, dir))
+    val books = code.books(snap)
+    val pruned = snap.read("", "cell").filter(col("cell").isin(plan.unionCells: _*)) // partition-pruned
+    val live = Ivf.withoutExcluded(predicate.fold(pruned)(pruned.filter), snap.tombstones)
     // each candidate meets only the LUT rows of the queries probing its
     // cell; the LUTs are built from the vectors the probe plan collected
     val withLut =
@@ -480,9 +484,10 @@ object Pq {
     * retrains.
     */
   def insertInto(spark: SparkSession, dir: String, rows: DataFrame): Unit = {
-    val code = codeKindOf(spark, dir, "Pq.insertInto")
-    CellSnapshot.appendAssigned(spark, dir,
-      code.encode(spark, dir, rows, Ivf.centroidsOf(spark, dir)))
+    val snap = CellSnapshot.open(spark, dir)
+    val code = codeKindOf(snap, "Pq.insertInto")
+    CellSnapshot.appendAssigned(spark, snap,
+      code.encode(snap, rows, Ivf.servingCentroids(snap).frame(spark)), "cell")
     IndexMeta.invalidate(spark, dir)
   }
 
@@ -627,7 +632,7 @@ object Pq {
     */
   def adcTopKStoredBatch(spark: SparkSession, dir: String, queries: DataFrame, k: Int,
                          roundTo: Int = 6): DataFrame = {
-    val books = collectBooks(spark.read.parquet(s"$dir/_codebooks"))
+    val books = storedBooks(CellSnapshot.open(spark, dir))
     val m = books.size
     val c = books(0).length
     val scored = spark.read.parquet(dir)

@@ -78,9 +78,14 @@ object Sq {
 
   private def boundsPath(dir: String) = s"$dir/_bounds"
 
-  private[operators] def readBounds(spark: SparkSession, dir: String): (Seq[Double], Seq[Double]) = {
+  private[operators] def readBounds(spark: SparkSession, dir: String): (Seq[Double], Seq[Double]) =
+    boundsOf(CellSnapshot.open(spark, dir))
+
+  /** The layout's `_bounds`, collected once per file set. */
+  private[operators] def boundsOf(snap: CellSnapshot.Snapshot): (Seq[Double], Seq[Double]) = {
     // d rows: sorted on the driver, not by a distributed sort
-    val rows = spark.read.parquet(boundsPath(dir)).collect().sortBy(_.getInt(0))
+    val rows = snap.sidecar("_bounds").getOrElse(throw new IllegalStateException(
+      s"${snap.dir} has no _bounds sidecar")).rows.sortBy(_.getInt(0))
     (rows.map(_.getDouble(1)).toSeq, rows.map(_.getDouble(2)).toSeq)
   }
 

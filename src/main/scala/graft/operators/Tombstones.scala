@@ -48,15 +48,17 @@ private[graft] object Tombstones {
     * recorded. The ids are read when this is called and come back as a
     * local relation: a frame planned on them still runs after a
     * compaction [[clear]]s the sidecar, and serves the set it was
-    * planned with.
+    * planned with. The sidecar is read and collected once per file set
+    * ([[CellSnapshot.collected]]); a [[record]] adds files, so the next
+    * call reads it again.
     */
   def ids(spark: SparkSession, dir: String): Option[DataFrame] = {
     import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(path(dir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else Some(spark.read.parquet(path(dir)).select(col("vec_id").cast("long"))
-      .filter(col("vec_id").isNotNull).as[Long].collect().distinct.toSeq.toDF("vec_id"))
+    CellSnapshot.collected(spark, dir, "_deletes").map { c =>
+      val i = c.schema.fieldIndex("vec_id")
+      c.rows.iterator.filterNot(_.isNullAt(i)).map(_.getAs[Number](i).longValue)
+        .toSeq.distinct.toDF("vec_id")
+    }
   }
 
   /** Drop the sidecar — the last step of a compaction. */

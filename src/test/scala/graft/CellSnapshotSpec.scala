@@ -378,6 +378,147 @@ class CellSnapshotSpec extends AnyFunSuite {
     assert(post.nonEmpty && post.forall(r => !delIds.contains(r._1)))
   }
 
+  // ---- the layout memo (CellSnapshot.open) is keyed on file sets ----
+
+  private lazy val batch = emb.filter(col("vec_id") < 6)
+    .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
+
+  private lazy val other = (0L until 150L).map { i =>
+    val rnd = new scala.util.Random(1000 + i)
+    (i, Array.fill(8)(rnd.nextFloat() * 10f))
+  }.toDF("vec_id", "embedding").cache()
+
+  private def rows3(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+
+  /** Everything an IVF layout serves that reads its trees and sidecars:
+    * batch and fused top-k, a range search and the serving centroids.
+    */
+  private def served(dir: String): Seq[Any] = Seq(
+    rows3(Ivf.topKPartitioned(spark, dir, batch, 10, nprobe = 3)),
+    rows3(Ivf.topKPartitionedBatchFused(spark, dir, batch, 10, nprobe = 3)),
+    rows3(Ivf.rangeSearch(spark, dir, batch, 8.0, ordered = false)),
+    Ivf.centroidsOf(spark, dir).collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq.sortBy(_._1))
+
+  private def tmp(name: String) = Files.createTempDirectory(name).toString
+
+  test("layout memo: a rebuild at the same dir with other data and centroids serves what a fresh dir serves") {
+    val (dir, fresh) = (tmp("memo_rebuild"), tmp("memo_rebuild_fresh"))
+    Ivf.writePartitionedWith(emb, Ivf.centroids(emb, C), dir)
+    served(dir); served(dir)
+    Ivf.writePartitionedWith(other, Ivf.kmeans(other, 6, 1), dir)
+    Ivf.writePartitionedWith(other, Ivf.kmeans(other, 6, 1), fresh)
+    assert(served(dir) === served(fresh))
+  }
+
+  test("layout memo: a kind change at the same dir (plain to cosine) serves what a fresh dir serves") {
+    val (dir, fresh) = (tmp("memo_kind"), tmp("memo_kind_fresh"))
+    Ivf.writePartitionedWith(emb, Ivf.centroids(emb, C), dir)
+    served(dir); served(dir)
+    Ivf.ensurePartitionedCosine(emb, C, dir)
+    Ivf.ensurePartitionedCosine(emb, C, fresh)
+    assert(Ivf.layoutKind(spark, dir) === "cosine")
+    assert(served(dir) === served(fresh))
+  }
+
+  test("layout memo: a recluster serves what a fresh build over the live rows serves") {
+    val (dir, fresh) = (tmp("memo_recluster"), tmp("memo_recluster_fresh"))
+    val c2 = Ivf.kmeans(emb, C, 2)
+    Ivf.writePartitionedWith(emb, Ivf.centroids(emb, C), dir)
+    served(dir); served(dir)
+    Ivf.reclusterPartitioned(spark, dir, c2)
+    Ivf.writePartitionedWith(emb, c2, fresh)
+    assert(served(dir) === served(fresh))
+  }
+
+  test("layout memo: an insert that adds files to a cell serves what a fresh build over the union serves") {
+    val (dir, fresh) = (tmp("memo_insert"), tmp("memo_insert_fresh"))
+    val cents = Ivf.centroids(emb, C)
+    val base = emb.filter(col("vec_id") < 150)
+    Ivf.writePartitionedWith(base, cents, dir)
+    served(dir); served(dir)
+    Ivf.insertInto(spark, dir, emb.filter(col("vec_id") >= 150))
+    Ivf.writePartitionedWith(emb, cents, fresh)
+    assert(served(dir) === served(fresh))
+    // and again once a compaction has published a manifest
+    Seq(dir, fresh).foreach { d =>
+      Ivf.recordDeletes(spark, d, delIds.toDF("vec_id"))
+      Ivf.compactPartitioned(spark, d)
+    }
+    served(dir)
+    Ivf.insertInto(spark, dir, other.filter(col("vec_id") < 20)
+      .select((col("vec_id") + 5000).as("vec_id"), col("embedding")))
+    Ivf.insertInto(spark, fresh, other.filter(col("vec_id") < 20)
+      .select((col("vec_id") + 5000).as("vec_id"), col("embedding")))
+    assert(served(dir) === served(fresh))
+  }
+
+  test("layout memo: tombstones recorded between two warm calls are excluded like on a fresh dir") {
+    val (dir, fresh) = (tmp("memo_tombs"), tmp("memo_tombs_fresh"))
+    Seq(dir, fresh).foreach(Ivf.writePartitionedWith(emb, Ivf.centroids(emb, C), _))
+    Ivf.recordDeletes(spark, dir, Seq(1L).toDF("vec_id"))
+    served(dir); served(dir)
+    val hits = rows3(Ivf.topKPartitioned(spark, dir, batch, 10, nprobe = 3)).map(_._2).distinct
+    Ivf.recordDeletes(spark, dir, hits.take(4).toDF("vec_id"))
+    Ivf.recordDeletes(spark, fresh, (1L +: hits.take(4)).toDF("vec_id"))
+    val got = served(dir)
+    assert(got === served(fresh))
+    assert(got.head.asInstanceOf[Seq[(Long, Long, Double)]].forall(r => !hits.take(4).contains(r._2)))
+  }
+
+  test("layout memo: a frame planned before a compaction and collected after it serves the planned view") {
+    val (dir, fresh) = (tmp("memo_compact"), tmp("memo_compact_fresh"))
+    Seq(dir, fresh).foreach { d =>
+      Ivf.writePartitionedWith(emb, Ivf.centroids(emb, C), d)
+      Ivf.recordDeletes(spark, d, delIds.toDF("vec_id"))
+    }
+    served(dir); served(dir)
+    val planned = Ivf.topKPartitioned(spark, dir, batch, 10, nprobe = 3)
+    Ivf.compactPartitioned(spark, dir)
+    assert(rows3(planned) === rows3(Ivf.topKPartitioned(spark, fresh, batch, 10, nprobe = 3)))
+    assert(served(dir) === served(fresh))
+  }
+
+  test("layout memo: routed HNSW and IVF-PQ rebuilt at the same dir serve what a fresh dir serves") {
+    val p = Hnsw.Params(numPartitions = 3)
+    def hnsw(d: String) = rows3(Hnsw.search(spark, d, batch, 10, p, nprobe = 3))
+    def pq(d: String) = rows3(Pq.topK(spark, d, batch, 10, nprobe = 3))
+    val (h, hFresh, q, qFresh) = (tmp("memo_h"), tmp("memo_h_fresh"), tmp("memo_q"), tmp("memo_q_fresh"))
+    Hnsw.saveRouted(emb, Ivf.centroids(emb, C), p, h)
+    Pq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, C),
+      Pq.codebooks(emb, 4, 2, 8, 1), 4, 2, q)
+    hnsw(h); hnsw(h); pq(q); pq(q)
+    val (c2, books2) = (Ivf.kmeans(other, 6, 1), Pq.codebooks(other, 4, 2, 4, 1))
+    Seq(h, hFresh).foreach(Hnsw.saveRouted(other, c2, p, _))
+    Seq(q, qFresh).foreach(Pq.ensureEncodedPartitioned(other, c2, books2, 4, 2, _))
+    assert(hnsw(h) === hnsw(hFresh))
+    assert(pq(q) === pq(qFresh))
+  }
+
+  test("a rebuild drops the generation-scoped centroids a recluster left, so a later publish serves its own") {
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
+    val c1 = Ivf.centroids(emb, C)
+    val c2 = Ivf.kmeans(emb, C, 2)
+    val (ivf, routed) = (tmp("reset_ivf"), tmp("reset_routed"))
+    val p = Hnsw.Params(numPartitions = 3)
+
+    Ivf.writePartitionedWith(emb, c1, ivf)
+    Ivf.reclusterPartitioned(spark, ivf, c2)
+    Ivf.writePartitionedWith(emb, c1, ivf)
+    Ivf.recordDeletes(spark, ivf, delIds.toDF("vec_id"))
+    Ivf.compactPartitioned(spark, ivf)
+    assert(sorted(Ivf.centroidsOf(spark, ivf)) === sorted(c1), "IVF serving centroids")
+
+    Hnsw.saveRouted(emb, c1, p, routed)
+    Hnsw.reclusterRouted(spark, routed, c2, p)
+    Hnsw.saveRouted(emb, c1, p, routed)
+    Tombstones.record(spark, routed, delIds.toDF("vec_id"))
+    Hnsw.compactRouted(spark, routed, p)
+    assert(sorted(Hnsw.routedCentroidsOf(spark, routed)) === sorted(c1), "routed HNSW serving centroids")
+    assert(!new java.io.File(s"$routed/centroids_g1").exists())
+  }
+
   private def fsBytes(dir: String): Long = {
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
