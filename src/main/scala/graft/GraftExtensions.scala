@@ -319,8 +319,7 @@ object GraftExtensions {
         require(args.length == 4, "semdedup(dir, c, iters, tau)")
         val emb = Tables.embeddings(spark, asString(args(0)))
         Dedup.semDedup(emb,
-          graft.operators.Ivf.kmeansCached(emb, asInt(args(1)), asInt(args(2)),
-            asString(args(0))),
+          graft.operators.Ivf.kmeansCached(emb, asInt(args(1)), asInt(args(2))),
           asDouble(args(3)))
       }),
     (FunctionIdentifier("bigram_nll"), info("bigram_nll"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Portable
 import graft.functions.VectorFunctions._
-import graft.operators.{AsofJoin, Bpe, Classifier, CorpusPipeline, Dedup, Events, Hnsw, Ivf, Knn, Multimodal, Packing, Pca, Pq, Relational, Retrieval, Sampling, Sq, TextAnalysis, VectorLsh}
+import graft.operators.{AsofJoin, Bpe, Classifier, CorpusPipeline, Dedup, Events, Hnsw, IndexMeta, Ivf, Knn, Multimodal, Packing, Pca, Pq, Relational, Retrieval, Sampling, Sq, TextAnalysis, VectorLsh}
 import graft.sources.{PdfCodec, Tables, Warc}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -103,35 +103,32 @@ object SparkEntry {
     s"$base/v5_pq_${tag}_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}"
   }
 
-  // Driver-resident SQ8 bounds memo (2·d doubles per sfDir) — same
-  // amortization contract as Pq.codebooksCached.
-  private val sqBoundsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (Seq[Double], Seq[Double])]
-  private def sqBounds(emb: DataFrame, dir: String): (Seq[Double], Seq[Double]) =
-    sqBoundsMemo.getOrElseUpdate(dir, Sq.bounds(emb))
-
-  // Driver-resident binary-threshold memo (d doubles per sfDir).
-  private val binThrMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Double]]
-  private def binThresholds(emb: DataFrame, dir: String): Seq[Double] =
-    binThrMemo.getOrElseUpdate(dir, graft.operators.Binary.thresholds(emb))
-
-  // Driver-resident PCA memo: means + top-k components per sfDir
-  // (d + k·d doubles). Components derive from the EXACT covariance
+  // Driver-resident memos of the values the SQ8, binary and PCA
+  // queries train on the embeddings table, keyed by its content
+  // (IndexMeta.memo). PCA components derive from the EXACT covariance
   // (12-dp-rounded — deterministic across runs and partitionings) via
   // the fixed-sweep Jacobi, so q_pca_project is reproducible.
-  private val pcaMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Int), (Seq[Double], Seq[Seq[Double]])]
-  private def pcaComponents(emb: DataFrame, dir: String,
-                            k: Int): (Seq[Double], Seq[Seq[Double]]) =
-    pcaMemo.getOrElseUpdate((dir, k), {
+  private def sqBounds(emb: DataFrame): (Seq[Double], Seq[Double]) =
+    IndexMeta.memo("sq bounds", emb)(Sq.bounds(emb))
+
+  private def binThresholds(emb: DataFrame): Seq[Double] =
+    IndexMeta.memo("binary thresholds", emb)(graft.operators.Binary.thresholds(emb))
+
+  private def pcaComponents(emb: DataFrame, k: Int): (Seq[Double], Seq[Seq[Double]]) =
+    IndexMeta.memo(s"pca k=$k", emb) {
       val mu = Pca.means(emb)
       val d = mu.length
       val cov = Array.ofDim[Double](d, d)
       Pca.covariance(emb, roundTo = 12).collect()
         .foreach(r => cov(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
       (mu, Pca.principalComponents(cov, k)._1)
-    })
+    }
+
+  /** The insert lifecycle queries' split: 4/5 of the rows build the
+    * layout, the fifth with `vec_id % 5 == 0` is appended to it.
+    */
+  private def insertSplit(emb: DataFrame): (DataFrame, DataFrame) =
+    (emb.filter(pmod(col("vec_id"), lit(5)) =!= 0), emb.filter(pmod(col("vec_id"), lit(5)) === 0))
 
   // Once-per-JVM guard for the rewrite sandbox (copy + index + catalog
   // registration): rebuilding on first use each session sidesteps
@@ -1581,7 +1578,7 @@ object SparkEntry {
         ORDER BY dist, e.vec_id LIMIT 10"""
 
   /** Cosine ANN over seed-direction cells (mirrors
-    * Ivf.ensurePartitionedCosine + Ivf.topKPartitioned): both
+    * a cosine Ivf.ensurePartitioned + Ivf.topKPartitioned): both
     * sides unit-normalize, cells/probes use L2 on the unit sphere, and
     * the score is `1 − ‖û−v̂‖²/2` — the same diff-list inner-product
     * fold as the engine's kernel, so the hash matches exactly.
@@ -1608,7 +1605,7 @@ object SparkEntry {
         FROM diffs
         ORDER BY cos_sim DESC, vec_id LIMIT $k"""
 
-  /** MIPS ANN (mirrors Ivf.ensurePartitionedMips +
+  /** MIPS ANN (mirrors a mips Ivf.ensurePartitioned +
     * Ivf.topKPartitioned): the augmented-vector reduction in SQL —
     * vectors append `sqrt(M² − ‖x‖²)`, the query appends 0, cells and
     * probes use L2 on the augmented space, and the score is the raw
@@ -1928,7 +1925,7 @@ object SparkEntry {
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
       val p = Hnsw.Params()
       val rdir = idxDir(s, dir, "routed", p)
-      Hnsw.ensureSavedRouted(emb, Ivf.kmeansCached(emb, 8, 2, dir), p, rdir)
+      Hnsw.ensureSavedRouted(emb, Ivf.kmeansCached(emb, 8, 2), p, rdir)
       val ann = Hnsw.search(s, rdir, qs, 10, p, nprobe = 5)
       Hnsw.recallOf(ann, emb, qs, 10)
     }),
@@ -1946,8 +1943,11 @@ object SparkEntry {
       val n = emb.agg(max(col("vec_id"))).head().getLong(0) + 1
       val cut = n - math.max(n / 10, 1)
       val idir = idxDir(s, dir, "incr", p)
-      Hnsw.ensureInsertedSaved(
-        emb.filter(col("vec_id") < cut), emb.filter(col("vec_id") >= cut), p, idir)
+      val (base, fresh) = (emb.filter(col("vec_id") < cut), emb.filter(col("vec_id") >= cut))
+      IndexMeta.ensure(idir, s"hnsw_incr;p=$p", base, fresh) {
+        Hnsw.save(base, p, idir)
+        Hnsw.insertInto(s, idir, fresh, p)
+      }
       val qs = emb.filter(col("vec_id") < 10 || col("vec_id") >= n - 10)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
       Hnsw.recallOf(Hnsw.search(s, idir, qs, 10, p), emb, qs, 10)
@@ -1964,7 +1964,7 @@ object SparkEntry {
     "q_ivf_assign" -> ((s, dir) => Ivf.assign(Tables.embeddings(s, dir), 16)),
     "q_ivf_kmeans_assign" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Ivf.assignWith(emb, Ivf.kmeansCached(emb, 8, 2, dir))
+      Ivf.assignWith(emb, Ivf.kmeansCached(emb, 8, 2))
     }),
     // Both IVF probe queries serve from the cell-PARTITIONED layout
     // (written once per dir): the in-place forms (Ivf.topK/topKWith),
@@ -1976,7 +1976,7 @@ object SparkEntry {
     "q_ivf_kmeans_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "km8i2")
-      Ivf.ensurePartitionedWith(emb, Ivf.kmeansCached(emb, 8, 2, dir), pdir, tag = "km8i2")
+      Ivf.ensurePartitionedWith(emb, Ivf.kmeansCached(emb, 8, 2), pdir, tag = "km8i2")
       Ivf.topKPartitioned(s, pdir, queryVecOf(emb, 0), 10, nprobe = 2)
     }),
     "q_ivf_topk" -> ((s, dir) => {
@@ -2107,7 +2107,7 @@ object SparkEntry {
     "q_cosine_range_batch" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "cos16")
-      Ivf.ensurePartitionedCosine(emb, 16, pdir)
+      Ivf.ensurePartitioned(emb, 16, pdir, kind = "cosine")
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
       Ivf.rangeSearch(s, pdir, qs, threshold = 0.15)
@@ -2117,7 +2117,7 @@ object SparkEntry {
     "q_mips_range_batch" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "mips16")
-      Ivf.ensurePartitionedMips(emb, 16, pdir)
+      Ivf.ensurePartitioned(emb, 16, pdir, kind = "mips")
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
       Ivf.rangeSearch(s, pdir, qs, threshold = 0.3)
@@ -2130,7 +2130,7 @@ object SparkEntry {
     "q_cosine_range_search" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "cos16")
-      Ivf.ensurePartitionedCosine(emb, 16, pdir)
+      Ivf.ensurePartitioned(emb, 16, pdir, kind = "cosine")
       Ivf.rangeSearch(s, pdir, queryVecOf(emb, 0), threshold = 0.15)
     }),
     // MIPS range — "everything with inner product at least t", the
@@ -2140,7 +2140,7 @@ object SparkEntry {
     "q_mips_range_search" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "mips16")
-      Ivf.ensurePartitionedMips(emb, 16, pdir)
+      Ivf.ensurePartitioned(emb, 16, pdir, kind = "mips")
       Ivf.rangeSearch(s, pdir, queryVecOf(emb, 0), threshold = 0.3)
     }),
     // The APPEND half of the lifecycle on the IVF serving tier
@@ -2156,10 +2156,12 @@ object SparkEntry {
     "q_ivf_insert_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "c16ins")
-      Ivf.ensureInsertedPartitioned(
-        emb.filter(pmod(col("vec_id"), lit(5)) =!= 0),
-        emb.filter(pmod(col("vec_id"), lit(5)) === 0),
-        Ivf.centroids(emb, 16), pdir, tag = "c16ins")
+      val (base, fresh) = insertSplit(emb)
+      val cents = Ivf.centroids(emb, 16)
+      IndexMeta.ensure(pdir, "ivfins_c16ins", base, fresh, cents) {
+        Ivf.writePartitionedWith(base, cents, pdir)
+        Ivf.insertInto(s, pdir, fresh)
+      }
       Ivf.topKPartitioned(s, pdir, queryVecOf(emb, 0), 10, nprobe = 2)
     }),
     // The RECLUSTER half of layout maintenance (insert keeps the
@@ -2173,11 +2175,13 @@ object SparkEntry {
     "q_ivf_recluster_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "c16rec")
-      Ivf.ensureReclusteredPartitioned(
-        emb.filter(pmod(col("vec_id"), lit(5)) =!= 0),
-        emb.filter(pmod(col("vec_id"), lit(5)) === 0),
-        Ivf.centroids(emb, 16), Ivf.centroidsFrom(emb, 16, 100),
-        pdir, tag = "c16rec")
+      val (base, fresh) = insertSplit(emb)
+      val (built, moved) = (Ivf.centroids(emb, 16), Ivf.centroidsFrom(emb, 16, 100))
+      IndexMeta.ensure(pdir, "ivfrec_c16rec", base, fresh, built, moved) {
+        Ivf.writePartitionedWith(base, built, pdir)
+        Ivf.insertInto(s, pdir, fresh)
+        Ivf.reclusterPartitioned(s, pdir, moved)
+      }
       Ivf.topKPartitioned(s, pdir, queryVecOf(emb, 0), 10, nprobe = 2)
     }),
     // Per-cell occupancy of the grown (build + insert) layout — the
@@ -2187,10 +2191,12 @@ object SparkEntry {
     "q_ivf_cell_stats" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "c16ins")
-      Ivf.ensureInsertedPartitioned(
-        emb.filter(pmod(col("vec_id"), lit(5)) =!= 0),
-        emb.filter(pmod(col("vec_id"), lit(5)) === 0),
-        Ivf.centroids(emb, 16), pdir, tag = "c16ins")
+      val (base, fresh) = insertSplit(emb)
+      val cents = Ivf.centroids(emb, 16)
+      IndexMeta.ensure(pdir, "ivfins_c16ins", base, fresh, cents) {
+        Ivf.writePartitionedWith(base, cents, pdir)
+        Ivf.insertInto(s, pdir, fresh)
+      }
       Ivf.cellStats(s, pdir)
     }),
     // ROUTED-layout occupancy (Hnsw.cellStatsRouted): the same balance
@@ -2214,8 +2220,11 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val p = Hnsw.Params()
       val rdir = idxDir(s, dir, "routedrec", p)
-      Hnsw.ensureReclusteredRouted(emb, Ivf.centroids(emb, 8),
-        Ivf.centroidsFrom(emb, 8, 8), p, rdir)
+      val (built, moved) = (Ivf.centroids(emb, 8), Ivf.centroidsFrom(emb, 8, 8))
+      IndexMeta.ensure(rdir, s"routedrec;p=$p", emb, built, moved) {
+        Hnsw.saveRouted(emb, built, p, rdir)
+        Hnsw.reclusterRouted(s, rdir, moved, p)
+      }
       val qs = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
       Hnsw.search(s, rdir, qs, 10, p, nprobe = 5)
@@ -2228,10 +2237,11 @@ object SparkEntry {
     "q_cosine_insert_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "cos16ins")
-      Ivf.ensureInsertedCosine(
-        emb.filter(pmod(col("vec_id"), lit(5)) =!= 0),
-        emb.filter(pmod(col("vec_id"), lit(5)) === 0),
-        16, pdir, tag = "cos16ins")
+      val (base, fresh) = insertSplit(emb)
+      IndexMeta.ensure(pdir, "cosineins_c16", base, fresh) {
+        Ivf.writePartitioned(base, 16, pdir, kind = "cosine")
+        Ivf.insertInto(s, pdir, fresh)
+      }
       Ivf.topKPartitioned(s, pdir, queryVecOf(emb, 0), 10, nprobe = 16)
     }),
     // The insert lifecycle on the MIPS layout: fresh rows augment with
@@ -2242,10 +2252,11 @@ object SparkEntry {
     "q_mips_insert_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "mips16ins")
-      Ivf.ensureInsertedMips(
-        emb.filter(pmod(col("vec_id"), lit(5)) =!= 0),
-        emb.filter(pmod(col("vec_id"), lit(5)) === 0),
-        16, pdir, tag = "mips16ins")
+      val (base, fresh) = insertSplit(emb)
+      IndexMeta.ensure(pdir, "mipsins_c16", base, fresh) {
+        Ivf.writePartitioned(base, 16, pdir, kind = "mips")
+        Ivf.insertInto(s, pdir, fresh)
+      }
       Ivf.topKPartitioned(s, pdir, queryVecOf(emb, 0), 10, nprobe = 16)
     }),
     // Same scale shape for the K-MEANS-refined cells: the Lloyd
@@ -2255,7 +2266,7 @@ object SparkEntry {
     "q_ivf_kmeans_partitioned_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "km8i2")
-      Ivf.ensurePartitionedWith(emb, Ivf.kmeansCached(emb, 8, 2, dir), pdir, tag = "km8i2")
+      Ivf.ensurePartitionedWith(emb, Ivf.kmeansCached(emb, 8, 2), pdir, tag = "km8i2")
       Ivf.topKPartitioned(s, pdir, queryVecOf(emb, 0), 10, nprobe = 2)
     }),
 
@@ -2423,7 +2434,7 @@ object SparkEntry {
     "q_cosine_ann_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "cos16")
-      Ivf.ensurePartitionedCosine(emb, 16, pdir)
+      Ivf.ensurePartitioned(emb, 16, pdir, kind = "cosine")
       Ivf.topKPartitioned(s, pdir, queryVecOf(emb, 0), 10, nprobe = 2)
     }),
 
@@ -2435,7 +2446,7 @@ object SparkEntry {
     "q_mips_ann_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "mips16")
-      Ivf.ensurePartitionedMips(emb, 16, pdir)
+      Ivf.ensurePartitioned(emb, 16, pdir, kind = "mips")
       Ivf.topKPartitioned(s, pdir, queryVecOf(emb, 0), 10, nprobe = 2)
     }),
     // BATCH MIPS over the same augmented layout: per-query probes, one
@@ -2443,7 +2454,7 @@ object SparkEntry {
     "q_mips_batch_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "mips16")
-      Ivf.ensurePartitionedMips(emb, 16, pdir)
+      Ivf.ensurePartitioned(emb, 16, pdir, kind = "mips")
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
       Ivf.topKPartitioned(s, pdir, qs, 10, nprobe = 2)
@@ -2453,7 +2464,7 @@ object SparkEntry {
     "q_mips_batch_fused_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "mips16")
-      Ivf.ensurePartitionedMips(emb, 16, pdir)
+      Ivf.ensurePartitioned(emb, 16, pdir, kind = "mips")
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
       Ivf.topKPartitionedBatchFused(s, pdir, qs, 10, nprobe = 2)
@@ -2465,7 +2476,7 @@ object SparkEntry {
     "q_cosine_batch_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "cos16")
-      Ivf.ensurePartitionedCosine(emb, 16, pdir)
+      Ivf.ensurePartitioned(emb, 16, pdir, kind = "cosine")
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
       Ivf.topKPartitioned(s, pdir, qs, 10, nprobe = 2)
@@ -2475,7 +2486,7 @@ object SparkEntry {
     "q_cosine_batch_fused_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = ivfCellsDir(s, dir, "cos16")
-      Ivf.ensurePartitionedCosine(emb, 16, pdir)
+      Ivf.ensurePartitioned(emb, 16, pdir, kind = "cosine")
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
       Ivf.topKPartitionedBatchFused(s, pdir, qs, 10, nprobe = 2)
@@ -2502,7 +2513,7 @@ object SparkEntry {
     // one map-side literal-codebook pass (no join/window/shuffle).
     "q_pq_codes" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Pq.codesAsString(Pq.codesArray(emb, Pq.codebooksCached(emb, 4, 16, 16, 1, dir), 4, 16))
+      Pq.codesAsString(Pq.codesArray(emb, Pq.codebooksCached(emb, 4, 16, 16, 1), 4, 16))
     }),
     // OPQ-lite rotated encode: dims permute to balance per-subspace
     // variance (Pq.balancedPerm — a permutation IS an orthogonal
@@ -2517,7 +2528,7 @@ object SparkEntry {
       val perm = Pq.balancedPerm(emb, 4, 16)
       val rot = emb.select(col("vec_id"), Pq.permute(col("embedding"), perm).as("embedding"))
       Pq.codesAsString(Pq.codesArray(rot,
-        Pq.codebooksCached(rot, 4, 16, 16, 1, dir, tag = "#perm"), 4, 16))
+        Pq.codebooksCached(rot, 4, 16, 16, 1), 4, 16))
     }),
     // Served from the PERSISTED code table (written once per dir): the
     // plan scans stored (vec_id, codes) only — no encode pass, the
@@ -2525,7 +2536,7 @@ object SparkEntry {
     "q_pq_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val cdir = pqDir(s, dir, "m4sd16c16i1")
-      Pq.ensureEncoded(emb, Pq.codebooksCached(emb, 4, 16, 16, 1, dir), 4, 16, cdir)
+      Pq.ensureEncoded(emb, Pq.codebooksCached(emb, 4, 16, 16, 1), 4, 16, cdir)
       Pq.adcTopKStored(s, cdir, queryVecOf(emb, 0), 10)
     }),
     // IVF-PQ: the code table partitioned by coarse IVF cell (c=16),
@@ -2536,7 +2547,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val pdir = pqDir(s, dir, "ivfpq_c16_m4sd16c16i1")
       Pq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 16),
-        Pq.codebooksCached(emb, 4, 16, 16, 1, dir), 4, 16, pdir)
+        Pq.codebooksCached(emb, 4, 16, 16, 1), 4, 16, pdir)
       Pq.topK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4)
     }),
     // RECLUSTER on the compressed tier: build 4/5 on the seed cells,
@@ -2548,11 +2559,14 @@ object SparkEntry {
     "q_ivfpq_recluster_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = pqDir(s, dir, "ivfpq_rec_c16_m4sd16c16i1")
-      Pq.ensureReclusteredEncodedPartitioned(
-        emb.filter(pmod(col("vec_id"), lit(5)) =!= 0),
-        emb.filter(pmod(col("vec_id"), lit(5)) === 0),
-        Ivf.centroids(emb, 16), Ivf.centroidsFrom(emb, 16, 100),
-        Pq.codebooksCached(emb, 4, 16, 16, 1, dir), 4, 16, pdir)
+      val (base, fresh) = insertSplit(emb)
+      val (built, moved) = (Ivf.centroids(emb, 16), Ivf.centroidsFrom(emb, 16, 100))
+      val books = Pq.codebooksCached(emb, 4, 16, 16, 1)
+      IndexMeta.ensure(pdir, "ivfpqrec_m4sd16", base, fresh, built, moved, books) {
+        Pq.writeEncodedPartitioned(base, built, books, 4, 16, pdir)
+        Pq.insertInto(s, pdir, fresh)
+        Pq.reclusterEncodedPartitioned(s, pdir, base.union(fresh), moved)
+      }
       Pq.topK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4)
     }),
     // The OPQ-lite rotation through the full COMPRESSED SERVING tier:
@@ -2570,7 +2584,7 @@ object SparkEntry {
       val rot = emb.select(col("vec_id"), Pq.permute(col("embedding"), perm).as("embedding"))
       val pdir = pqDir(s, dir, "ivfpq_rot_c16_m4sd16c16i1")
       Pq.ensureEncodedPartitioned(rot, Ivf.centroids(rot, 16),
-        Pq.codebooksCached(rot, 4, 16, 16, 1, dir, tag = "#perm"), 4, 16, pdir)
+        Pq.codebooksCached(rot, 4, 16, 16, 1), 4, 16, pdir)
       val qrot = queryVecOf(emb, 0)
         .select(Pq.permute(col("query_vec"), perm).as("query_vec"))
       Pq.topK(s, pdir, qrot, 10, nprobe = 4)
@@ -2584,7 +2598,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val pdir = pqDir(s, dir, "ivfpq_del_c16_m4sd16c16i1")
       Pq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 16),
-        Pq.codebooksCached(emb, 4, 16, 16, 1, dir), 4, 16, pdir)
+        Pq.codebooksCached(emb, 4, 16, 16, 1), 4, 16, pdir)
       // recordOnce: idempotent across bench/verify re-executions
       graft.operators.Tombstones.recordOnce(s, pdir,
         emb.filter(pmod(col("vec_id"), lit(7)) === 0).select("vec_id"))
@@ -2599,11 +2613,12 @@ object SparkEntry {
     "q_ivfpq_insert_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val pdir = pqDir(s, dir, "ivfpq_ins_c16_m4sd16c16i1")
-      Pq.ensureInsertedEncodedPartitioned(
-        emb.filter(pmod(col("vec_id"), lit(5)) =!= 0),
-        emb.filter(pmod(col("vec_id"), lit(5)) === 0),
-        Ivf.centroids(emb, 16), Pq.codebooksCached(emb, 4, 16, 16, 1, dir),
-        4, 16, pdir)
+      val (base, fresh) = insertSplit(emb)
+      val (cents, books) = (Ivf.centroids(emb, 16), Pq.codebooksCached(emb, 4, 16, 16, 1))
+      IndexMeta.ensure(pdir, "ivfpqins_m4sd16", base, fresh, cents, books) {
+        Pq.writeEncodedPartitioned(base, cents, books, 4, 16, pdir)
+        Pq.insertInto(s, pdir, fresh)
+      }
       Pq.topK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4)
     }),
     // RESIDUAL IVF-PQ — the classic Jégou/Douze/Schmid composition in
@@ -2620,7 +2635,7 @@ object SparkEntry {
       val cents = Ivf.centroids(emb, 16)
       val pdir = pqDir(s, dir, "ivfpqres_c16_m4sd16c16i1")
       Pq.ensureEncodedPartitionedResidual(emb, cents,
-        Pq.residualCodebooksCached(emb, cents, 4, 16, 16, 1, dir, tag = "#res16", seedOffset = 16),
+        Pq.residualCodebooksCached(emb, cents, 4, 16, 16, 1, seedOffset = 16),
         4, 16, pdir)
       Pq.topK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4)
     }),
@@ -2633,7 +2648,7 @@ object SparkEntry {
       val cents = Ivf.centroids(emb, 16)
       val pdir = pqDir(s, dir, "ivfpqres_c16_m4sd16c16i1")
       Pq.ensureEncodedPartitionedResidual(emb, cents,
-        Pq.residualCodebooksCached(emb, cents, 4, 16, 16, 1, dir, tag = "#res16", seedOffset = 16),
+        Pq.residualCodebooksCached(emb, cents, 4, 16, 16, 1, seedOffset = 16),
         4, 16, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
@@ -2646,7 +2661,7 @@ object SparkEntry {
       val cents = Ivf.centroids(emb, 16)
       val pdir = pqDir(s, dir, "ivfpqres_c16_m4sd16c16i1")
       Pq.ensureEncodedPartitionedResidual(emb, cents,
-        Pq.residualCodebooksCached(emb, cents, 4, 16, 16, 1, dir, tag = "#res16", seedOffset = 16),
+        Pq.residualCodebooksCached(emb, cents, 4, 16, 16, 1, seedOffset = 16),
         4, 16, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
@@ -2661,7 +2676,7 @@ object SparkEntry {
       val cents = Ivf.centroids(emb, 16)
       val pdir = pqDir(s, dir, "ivfpqres_c16_m4sd16c16i1")
       Pq.ensureEncodedPartitionedResidual(emb, cents,
-        Pq.residualCodebooksCached(emb, cents, 4, 16, 16, 1, dir, tag = "#res16", seedOffset = 16),
+        Pq.residualCodebooksCached(emb, cents, 4, 16, 16, 1, seedOffset = 16),
         4, 16, pdir)
       Pq.topK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4, rerank = Some(Pq.Rerank(emb, 30)))
     }),
@@ -2679,8 +2694,7 @@ object SparkEntry {
       val cents = Ivf.centroids(rot, 16)
       val pdir = pqDir(s, dir, "ivfpqrotres_c16_m4sd16c16i1")
       Pq.ensureEncodedPartitionedResidual(rot, cents,
-        Pq.residualCodebooksCached(rot, cents, 4, 16, 16, 1, dir,
-          tag = "#rotres16", seedOffset = 16),
+        Pq.residualCodebooksCached(rot, cents, 4, 16, 16, 1, seedOffset = 16),
         4, 16, pdir)
       val qrot = queryVecOf(emb, 0)
         .select(Pq.permute(col("query_vec"), perm).as("query_vec"))
@@ -2694,7 +2708,7 @@ object SparkEntry {
     // sum, same plan shapes.
     "q_sq_codes" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val (lo, hi) = sqBounds(emb, dir)
+      val (lo, hi) = sqBounds(emb)
       Pq.codesAsString(emb.select(col("vec_id"),
         Sq.encodeCol(col("embedding"), lo, hi).as("codes")))
     }),
@@ -2703,7 +2717,7 @@ object SparkEntry {
     // vector table never read.
     "q_sq_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val (lo, hi) = sqBounds(emb, dir)
+      val (lo, hi) = sqBounds(emb)
       val cdir = pqDir(s, dir, "sq8")
       Sq.ensureEncoded(emb, lo, hi, cdir)
       Sq.adcTopKStored(s, cdir, queryVecOf(emb, 0), 10)
@@ -2712,7 +2726,7 @@ object SparkEntry {
     // rank per query — the amortized serving shape.
     "q_sq_batch_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val (lo, hi) = sqBounds(emb, dir)
+      val (lo, hi) = sqBounds(emb)
       val cdir = pqDir(s, dir, "sq8")
       Sq.ensureEncoded(emb, lo, hi, cdir)
       val qs = emb.filter(col("vec_id") < 8)
@@ -2725,7 +2739,7 @@ object SparkEntry {
     // codebook training).
     "q_ivfsq_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val (lo, hi) = sqBounds(emb, dir)
+      val (lo, hi) = sqBounds(emb)
       val pdir = pqDir(s, dir, "ivfsq8_c16")
       Sq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 16), lo, hi, pdir)
       Pq.topK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4)
@@ -2734,7 +2748,7 @@ object SparkEntry {
     // probe-pair join, bounded-heap rank per query.
     "q_ivfsq_batch_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val (lo, hi) = sqBounds(emb, dir)
+      val (lo, hi) = sqBounds(emb)
       val pdir = pqDir(s, dir, "ivfsq8_c16")
       Sq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 16), lo, hi, pdir)
       val qs = emb.filter(col("vec_id") < 8)
@@ -2745,7 +2759,7 @@ object SparkEntry {
     // one pruned scan, exact rerank through one broadcast join.
     "q_ivfsq_rerank_batch_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val (lo, hi) = sqBounds(emb, dir)
+      val (lo, hi) = sqBounds(emb)
       val pdir = pqDir(s, dir, "ivfsq8_c16")
       Sq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 16), lo, hi, pdir)
       val qs = emb.filter(col("vec_id") < 8)
@@ -2756,7 +2770,7 @@ object SparkEntry {
     // the 30 shortlisted raw rows (broadcast join on vec_id).
     "q_ivfsq_rerank_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val (lo, hi) = sqBounds(emb, dir)
+      val (lo, hi) = sqBounds(emb)
       val pdir = pqDir(s, dir, "ivfsq8_c16")
       Sq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 16), lo, hi, pdir)
       Pq.topK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4, rerank = Some(Pq.Rerank(emb, 30)))
@@ -2876,7 +2890,7 @@ object SparkEntry {
     // monotone reconstruction error, k=d exactness and determinism.
     "q_pca_project" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val (mu, comps) = pcaComponents(emb, dir, 8)
+      val (mu, comps) = pcaComponents(emb, 8)
       Pca.project(emb, mu, comps)
         .select(col("vec_id"),
           concat_ws("_", transform(col("proj"), p => round(p, 6).cast("string")))
@@ -2888,7 +2902,7 @@ object SparkEntry {
     // funnel; signatures pack 32 bits per word (see Binary scaladoc).
     "q_binary_codes" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val thr = binThresholds(emb, dir)
+      val thr = binThresholds(emb)
       emb.select(col("vec_id"),
         concat_ws("_", graft.operators.Binary.signatureCol(col("embedding"), thr)
           .cast("array<string>")).as("sig"))
@@ -2899,7 +2913,7 @@ object SparkEntry {
     "q_hamming_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val bdir = pqDir(s, dir, "bin")
-      graft.operators.Binary.ensureEncoded(emb, binThresholds(emb, dir), bdir)
+      graft.operators.Binary.ensureEncoded(emb, binThresholds(emb), bdir)
       graft.operators.Binary.hammingTopK(s, bdir, queryVecOf(emb, 0), 10)
     }),
     // BATCH Hamming: Q queries binarize in-plan, one signature-table
@@ -2907,7 +2921,7 @@ object SparkEntry {
     "q_hamming_batch_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val bdir = pqDir(s, dir, "bin")
-      graft.operators.Binary.ensureEncoded(emb, binThresholds(emb, dir), bdir)
+      graft.operators.Binary.ensureEncoded(emb, binThresholds(emb), bdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
       graft.operators.Binary.hammingTopKBatch(s, bdir, qs, 10)
@@ -2922,8 +2936,8 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val bdir = pqDir(s, dir, "bin")
       val sdir = pqDir(s, dir, "sq8")
-      graft.operators.Binary.ensureEncoded(emb, binThresholds(emb, dir), bdir)
-      val (lo, hi) = sqBounds(emb, dir)
+      graft.operators.Binary.ensureEncoded(emb, binThresholds(emb), bdir)
+      val (lo, hi) = sqBounds(emb)
       Sq.ensureEncoded(emb, lo, hi, sdir)
       graft.operators.Cascade.topK(s, bdir, sdir, emb, queryVecOf(emb, 0),
         k = 10, l1 = 100, l2 = 30)
@@ -2937,8 +2951,8 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val bdir = pqDir(s, dir, "bindel")
       val sdir = pqDir(s, dir, "sq8del")
-      graft.operators.Binary.ensureEncoded(emb, binThresholds(emb, dir), bdir)
-      val (lo, hi) = sqBounds(emb, dir)
+      graft.operators.Binary.ensureEncoded(emb, binThresholds(emb), bdir)
+      val (lo, hi) = sqBounds(emb)
       Sq.ensureEncoded(emb, lo, hi, sdir)
       graft.operators.Tombstones.recordOnce(s, bdir,
         emb.filter(pmod(col("vec_id"), lit(7)) === 0).select("vec_id"))
@@ -2953,8 +2967,8 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val bdir = pqDir(s, dir, "bin")
       val sdir = pqDir(s, dir, "sq8")
-      graft.operators.Binary.ensureEncoded(emb, binThresholds(emb, dir), bdir)
-      val (lo, hi) = sqBounds(emb, dir)
+      graft.operators.Binary.ensureEncoded(emb, binThresholds(emb), bdir)
+      val (lo, hi) = sqBounds(emb)
       Sq.ensureEncoded(emb, lo, hi, sdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
@@ -2966,7 +2980,7 @@ object SparkEntry {
     "q_hamming_rerank_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val bdir = pqDir(s, dir, "bin")
-      graft.operators.Binary.ensureEncoded(emb, binThresholds(emb, dir), bdir)
+      graft.operators.Binary.ensureEncoded(emb, binThresholds(emb), bdir)
       graft.operators.Binary.hammingRerankTopK(s, bdir, emb, queryVecOf(emb, 0), 10,
         shortlist = 50)
     }),
@@ -2978,7 +2992,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val pdir = pqDir(s, dir, "ivfpq_c16_m4sd16c16i1")
       Pq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 16),
-        Pq.codebooksCached(emb, 4, 16, 16, 1, dir), 4, 16, pdir)
+        Pq.codebooksCached(emb, 4, 16, 16, 1), 4, 16, pdir)
       Pq.topK(s, pdir, queryVecOf(emb, 0), 10, nprobe = 4, rerank = Some(Pq.Rerank(emb, 30)))
     }),
     // BATCH ADC over the same persisted code table: Q queries build
@@ -2988,7 +3002,7 @@ object SparkEntry {
     "q_pq_batch_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val cdir = pqDir(s, dir, "m4sd16c16i1")
-      Pq.ensureEncoded(emb, Pq.codebooksCached(emb, 4, 16, 16, 1, dir), 4, 16, cdir)
+      Pq.ensureEncoded(emb, Pq.codebooksCached(emb, 4, 16, 16, 1), 4, 16, cdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
       Pq.adcTopKStoredBatch(s, cdir, qs, 10)
@@ -3000,7 +3014,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val pdir = pqDir(s, dir, "ivfpq_c16_m4sd16c16i1")
       Pq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 16),
-        Pq.codebooksCached(emb, 4, 16, 16, 1, dir), 4, 16, pdir)
+        Pq.codebooksCached(emb, 4, 16, 16, 1), 4, 16, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
       Pq.topK(s, pdir, qs, 10, nprobe = 4)
@@ -3012,7 +3026,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val pdir = pqDir(s, dir, "ivfpq_c16_m4sd16c16i1")
       Pq.ensureEncodedPartitioned(emb, Ivf.centroids(emb, 16),
-        Pq.codebooksCached(emb, 4, 16, 16, 1, dir), 4, 16, pdir)
+        Pq.codebooksCached(emb, 4, 16, 16, 1), 4, 16, pdir)
       val qs = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
       Pq.topK(s, pdir, qs, 10, nprobe = 4, rerank = Some(Pq.Rerank(emb, 30)))
@@ -3688,7 +3702,7 @@ object SparkEntry {
     // duplicate component, keep the member farthest from its centroid.
     "q_semdedup" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Dedup.semDedup(emb, Ivf.kmeansCached(emb, 8, 2, dir), 0.4)
+      Dedup.semDedup(emb, Ivf.kmeansCached(emb, 8, 2), 0.4)
     }),
     // The blocked scale path must reproduce the brute-force result
     // (same oracle): c=8/probes=4 drops zero true pairs at every sf

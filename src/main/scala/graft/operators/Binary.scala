@@ -83,21 +83,16 @@ object Binary {
   /** Persist the signature table `(vec_id, sig)` once per dir with the
     * `_thresholds` sidecar — the binary tier's serving state.
     */
-  def ensureEncoded(embeddings: DataFrame, thr: Seq[Double], dir: String): Unit = {
-    val spark = embeddings.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, "bin", Seq(embeddings)) {
-      IndexMeta.fingerprint(embeddings, s"bin;t=${thr.hashCode}")
-    }
-    if (!IndexMeta.valid(spark, dir, "_SUCCESS", fp)) {
+  def ensureEncoded(embeddings: DataFrame, thr: Seq[Double], dir: String): Unit =
+    IndexMeta.ensure(dir, s"bin;t=${thr.hashCode}", embeddings) {
+      val spark = embeddings.sparkSession
       embeddings.select(col("vec_id"), signatureCol(col("embedding"), thr).as("sig"))
         .write.mode("overwrite").parquet(dir)
       Ivf.writeLayoutKind(spark, dir, "binary")
       import spark.implicits._
       thr.indices.map(i => (i, thr(i))).toDF("i", "thr")
         .coalesce(1).write.mode("overwrite").parquet(thrPath(dir))
-      IndexMeta.write(spark, dir, fp)
     }
-  }
 
   /** Hamming top-k from the persisted signature table for ONE query:
     * the query binarizes with the layout's own thresholds, candidates

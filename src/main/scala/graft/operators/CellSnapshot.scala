@@ -421,13 +421,17 @@ private[graft] object CellSnapshot {
     * fresh layout can never resolve a stale manifest, nor, once its
     * first maintenance op publishes version N, a recluster's
     * generation-scoped centroids (`_centroids_g<N>`, `centroids_g<N>`)
-    * left by a previous layout at this dir.
+    * left by a previous layout at this dir, nor exclude the previous
+    * layout's `_deletes` tombstones (a writer that overwrites only
+    * subtrees, like `Hnsw.save`, would otherwise keep hiding a rebuilt
+    * row whose id was once taken down).
     */
   def reset(spark: SparkSession, dir: String): Unit = {
     val fs = fsOf(spark, dir)
     val scoped = childNames(spark, dir).filter(_.matches("_?centroids_g\\d+"))
       .map(n => new org.apache.hadoop.fs.Path(s"$dir/$n"))
-    (Seq(manifestDir(dir), new org.apache.hadoop.fs.Path(s"$dir/_gen"), pinsDir(dir)) ++ scoped)
+    (Seq(manifestDir(dir), new org.apache.hadoop.fs.Path(s"$dir/_gen"), pinsDir(dir),
+        new org.apache.hadoop.fs.Path(s"$dir/_deletes")) ++ scoped)
       .foreach(p => if (fs.exists(p)) fs.delete(p, true))
   }
 

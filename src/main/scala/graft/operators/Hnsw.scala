@@ -539,38 +539,14 @@ object Hnsw {
       .as[ShardRec]
   }
 
-  /** [[save]] if `dir` holds no index yet (keyed by the caller choosing
-    * a content-derived dir name), then [[search]] serves it. This is
-    * how a serving pipeline amortizes the build the way the reference
-    * does (its `Hnsw` object outlives every `FindNearest`,
-    * hnsw.cc:114-137): build once, serve many batches.
+  /** [[save]] once per content of `embeddings` and `p`
+    * ([[IndexMeta.ensure]]), then [[search]] serves it. This is how a
+    * serving pipeline amortizes the build the way the reference does
+    * (its `Hnsw` object outlives every `FindNearest`, hnsw.cc:114-137):
+    * build once, serve many batches.
     */
-  def ensureSaved(embeddings: DataFrame, p: Params, dir: String): Unit = {
-    val spark = embeddings.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, s"p=$p", Seq(embeddings)) {
-      fingerprint(embeddings, s"p=$p")
-    }
-    if (!indexValid(spark, dir, fp)) { save(embeddings, p, dir); writeFp(spark, dir, fp) }
-  }
-
-  /** Content fingerprint of the source table + params — see
-    * [[IndexMeta.fingerprint]]. `ensureSaved*` validate it at load so a
-    * regenerated source table or changed Params rebuild the index
-    * instead of silently serving a stale one (an index dir under a
-    * fixed root outlives the data it was built from).
-    */
-  private[graft] def fingerprint(embeddings: DataFrame, extra: String): String =
-    IndexMeta.fingerprint(embeddings, extra)
-
-  private def writeFp(spark: org.apache.spark.sql.SparkSession, dir: String, fp: String): Unit =
-    IndexMeta.write(spark, dir, fp)
-
-  /** A persisted index is served only when its files exist AND its
-    * recorded fingerprint matches the current source data + params.
-    */
-  private def indexValid(spark: org.apache.spark.sql.SparkSession, dir: String,
-                         fp: String): Boolean =
-    IndexMeta.valid(spark, dir, "edges/_SUCCESS", fp)
+  def ensureSaved(embeddings: DataFrame, p: Params, dir: String): Unit =
+    IndexMeta.ensure(dir, s"p=$p", embeddings)(save(embeddings, p, dir))
 
   private def exists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -1012,71 +988,15 @@ object Hnsw {
     Ivf.kmeansWith(live, seeds, iters)
   }
 
-  /** The full build-then-recluster routed lifecycle, memoized once per
-    * dir (`Ivf.ensureReclusteredPartitioned`'s routed twin — the
-    * declared `q_hnsw_recluster_topk` state).
-    */
-  def ensureReclusteredRouted(embeddings: DataFrame, buildCents: DataFrame,
-                              newCents: DataFrame, p: Params, dir: String,
-                              replication: Int = 2): Unit = {
-    val spark = embeddings.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, s"routedrec;p=$p;r=$replication",
-        Seq(embeddings, buildCents, newCents)) {
-      fingerprint(embeddings, s"routedrec;p=$p;r=$replication;" +
-        s"cb=${IndexMeta.centroidFingerprint(buildCents)};" +
-        s"cn=${IndexMeta.centroidFingerprint(newCents)}")
-    }
-    if (!indexValid(spark, dir, fp)) {
-      val path = new org.apache.hadoop.fs.Path(dir)
-      path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
-      saveRouted(embeddings, buildCents, p, dir, replication)
-      reclusterRouted(spark, dir, newCents, p, replication)
-      writeFp(spark, dir, fp)
-    }
-  }
-
-  /** [[saveRouted]] once per dir (caller keys the dir by content/params),
-    * no-op when the index already exists — the amortization point for
-    * repeated-batch serving.
+  /** [[saveRouted]] once per content of `embeddings`, `cents` and the
+    * params ([[IndexMeta.ensure]]) — the amortization point for
+    * repeated-batch serving; retrained routing centroids rebuild the
+    * shards.
     */
   def ensureSavedRouted(embeddings: DataFrame, cents: DataFrame, p: Params, dir: String,
-                        replication: Int = 2): Unit = {
-    val spark = embeddings.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, s"p=$p;r=$replication", Seq(embeddings, cents)) {
-      // centroid content rides in the fingerprint (tiny: C rows) so a
-      // re-trained routing table also invalidates the persisted shards
-      fingerprint(embeddings,
-        s"p=$p;r=$replication;c=${IndexMeta.centroidFingerprint(cents)}")
-    }
-    if (!indexValid(spark, dir, fp)) {
-      saveRouted(embeddings, cents, p, dir, replication)
-      writeFp(spark, dir, fp)
-    }
-  }
-
-  /** The full incremental-append cycle, amortized per dir: [[save]] the
-    * base index over `base` into `dir`, [[insertInto]] the `fresh`
-    * batch, and leave the grown layout for [[search]] — the daily-append
-    * shape of a training pipeline (reference `Insert`, hnsw.cc:147-215,
-    * as an on-disk lifecycle). Both steps are skipped when `dir`
-    * already holds an index whose fingerprint matches (base + fresh
-    * content + params).
-    */
-  def ensureInsertedSaved(base: DataFrame, fresh: DataFrame, p: Params, dir: String): Unit = {
-    val spark = base.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, s"p=$p;incr", Seq(base, fresh)) {
-      // base and fresh fingerprint SEPARATELY: the same total content
-      // under a different base/fresh split builds a different graph
-      // (which rows took the beam-insert path changes the edges), so a
-      // moved split must invalidate even when the union is unchanged
-      s"${fingerprint(base, s"p=$p;incr;base")}|${fingerprint(fresh, "fresh")}"
-    }
-    if (!indexValid(spark, dir, fp)) {
-      save(base, p, dir)
-      insertInto(spark, dir, fresh, p)
-      writeFp(spark, dir, fp)
-    }
-  }
+                        replication: Int = 2): Unit =
+    IndexMeta.ensure(dir, s"p=$p;r=$replication", embeddings, cents)(
+      saveRouted(embeddings, cents, p, dir, replication))
 
   /** Degree/size statistics per layer over a built edges table —
     * validates the linking invariants (m ≤ degree ≤ maxM after enough

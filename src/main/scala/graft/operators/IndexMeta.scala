@@ -1,104 +1,116 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Shared persisted-index metadata: an order-independent content
-  * fingerprint of the source vector table plus the build parameters,
-  * recorded next to the index files and validated at load. Catches the
-  * stale-index hazard of content-addressed dirs under a fixed root: if
-  * the data at a source path is regenerated (or build params change),
-  * every `ensure*` entry point rebuilds instead of silently serving the
-  * old index.
+/** The build-once protocol of every persisted index layout (IVF, PQ,
+  * SQ, binary, HNSW, Z-order, TF-IDF), and the driver-side value memos
+  * the builders are fed from.
+  *
+  * [[ensure]] is the one rule:
+  *  - fingerprint: each source frame's content — row count plus an
+  *    order-invariant sum of per-row CRCs over ALL its columns, one
+  *    aggregate job per source — and the caller's `params` string.
+  *    Sources fingerprint separately, so the same rows under a moved
+  *    split (the built base vs the appended batch) are another layout;
+  *  - serve: when `dir/_graft_fingerprint` holds exactly that, return
+  *    without reading or writing anything else;
+  *  - rebuild: otherwise delete `dir`, run the build, and write the
+  *    fingerprint LAST. The fingerprint is the commit marker: a build
+  *    that throws part-way leaves a dir without one, so the next
+  *    `ensure` rebuilds instead of serving partial files.
+  * The dir belongs to the index, so no source may read from it. A
+  * maintenance write (append, compaction, recluster) [[invalidate]]s
+  * the fingerprint: the layout no longer derives from its sources, so
+  * the next `ensure` against them rebuilds.
+  *
+  * Content fingerprints and [[memo]] values are kept per JVM, keyed by
+  * each source's plan SEMANTIC HASH and FILE LISTING (part-file paths,
+  * which carry a per-job UUID, plus total size): data regenerated at
+  * the same path lists new files and misses, and another table or
+  * filter has another semantic hash. Neither key is a caller's path
+  * string.
   */
 private[graft] object IndexMeta {
 
-  // Session-lifetime fingerprint memo, keyed by (index dir, params,
-  // SEMANTIC HASH of the source plans, FILE LISTING of the source
-  // scans): repeated `ensure*` calls on the same declared query pay the
-  // fingerprint aggregate once per JVM, not once per serve. The file
-  // listing (paths — Spark part files carry a per-job UUID — plus total
-  // size) changes whenever the data at the SAME path is regenerated, so
-  // a mid-session overwrite recomputes the fingerprint and the stale
-  // index is rebuilt; a different source plan (other dir, other filter)
-  // recomputes because its semantic hash differs.
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int, Int), String]
+  private val fingerprints =
+    scala.collection.concurrent.TrieMap.empty[(Int, Int), String]
+  private val values =
+    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), Any]
 
-  def cachedFingerprint(dir: String, extra: String, sources: Seq[DataFrame])
-                       (compute: => String): String = {
-    val planKey = sources.map(_.queryExecution.analyzed.semanticHash()).hashCode()
-    memo.getOrElseUpdate((dir, extra, planKey, filesKey(sources)), compute)
+  /** Build `dir` from `sources` once per content + `params` (see the
+    * object doc); a call on unchanged sources writes nothing.
+    */
+  def ensure(dir: String, params: String, sources: DataFrame*)(build: => Unit): Unit = {
+    require(sources.nonEmpty, s"ensure($dir) needs at least one source")
+    val spark = sources.head.sparkSession
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val owned = fs.makeQualified(root).toString.stripSuffix("/") + "/"
+    val inside = sources.flatMap(fileIndexes).flatMap(_.rootPaths).map(_.toString)
+      .filter(p => (p.stripSuffix("/") + "/").startsWith(owned))
+    require(inside.isEmpty, s"ensure($dir) would delete what its sources read: ${inside.mkString(", ")}")
+    val fp = (params +: sources.map(s =>
+      fingerprints.getOrElseUpdate(keyOf(Seq(s)), contentFingerprint(s)))).mkString("|")
+    if (!read(spark, dir).contains(fp)) {
+      fs.delete(root, true)
+      build
+      write(spark, dir, fp)
+    }
   }
+
+  /** A driver-side value computed once per (`name`, content of
+    * `sources`) in this JVM — the amortization of k-means centroids,
+    * codebooks, SQ bounds, binary thresholds and PCA components across
+    * the calls that train them on the same table.
+    */
+  def memo[T](name: String, sources: DataFrame*)(compute: => T): T = {
+    val (plans, files) = keyOf(sources)
+    values.getOrElseUpdate((name, plans, files), compute).asInstanceOf[T]
+  }
+
+  private def keyOf(sources: Seq[DataFrame]): (Int, Int) =
+    (sources.map(_.queryExecution.analyzed.semanticHash()).hashCode(), filesKey(sources))
 
   /** Driver-side listing signature of every file-based leaf: the file
     * paths + the listed total bytes. In-memory frames contribute
     * nothing (their semantic hash carries their identity).
     */
   private def filesKey(sources: Seq[DataFrame]): Int =
-    sources.map(_.queryExecution.analyzed.collectLeaves().flatMap {
+    sources.map(fileIndexes(_).flatMap(i => i.inputFiles.toSeq :+ i.sizeInBytes.toString)).hashCode()
+
+  /** The file listings `df` scans. */
+  private def fileIndexes(df: DataFrame): Seq[org.apache.spark.sql.execution.datasources.FileIndex] =
+    df.queryExecution.analyzed.collectLeaves().flatMap {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.inputFiles.toSeq :+ fs.location.sizeInBytes.toString
+          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation => Seq(fs.location)
           case _ => Nil
         }
       case _ => Nil
-    }).hashCode()
-
-  /** Row count + summed per-row CRC over `(vec_id, embedding)` + the
-    * caller's parameter string. One narrow aggregate job; the sum makes
-    * it partition-order invariant.
-    */
-  def fingerprint(embeddings: DataFrame, extra: String): String = {
-    val r = embeddings.agg(
-      count(lit(1)),
-      sum(crc32(concat_ws(":", col("vec_id"),
-        concat_ws(",", col("embedding").cast("array<string>")))))).head()
-    s"n=${r.getLong(0)};h=${r.get(1)};$extra"
-  }
-
-  /** Order-invariant content CRC of a `(centroid_id, centroid_vec)`
-    * table — the tiny (C-row) component of every routed/partitioned
-    * index fingerprint. One definition shared by `Hnsw.ensureSavedRouted`
-    * and `Ivf.ensurePartitionedWith` so the two index families'
-    * staleness semantics cannot drift.
-    */
-  def centroidFingerprint(cents: DataFrame): String =
-    String.valueOf(cents.agg(
-      sum(crc32(concat_ws(":", col("centroid_id"),
-        concat_ws(",", col("centroid_vec").cast("array<string>")))))).head().get(0))
-
-  /** Contract guard for the driver-resident memos (`Ivf.kmeansCached`,
-    * `Pq.codebooksCached`): `key` must identify the scanned table. When
-    * the plan bottoms out in file scans, require the key to match one of
-    * their root paths — a caller passing a different table under a
-    * reused key would otherwise silently get values trained on the
-    * wrong data. In-memory test frames have no file leaves → no check.
-    */
-  def requireKeyMatchesScan(df: DataFrame, key: String): Unit = {
-    val leaves = df.queryExecution.analyzed.collectLeaves().flatMap {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation => lr.relation match {
-        case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-          fs.location.rootPaths.map(_.toString)
-        case _ => Nil
-      }
-      case _ => Nil
     }
-    require(leaves.isEmpty || leaves.exists(_.contains(key)),
-      s"memo key '$key' does not identify the scanned table (leaves: $leaves)")
+
+  /** Row count + summed per-row CRC over every column (each cast to
+    * string, `\u0001`-separated). One narrow aggregate job; the sum
+    * makes it partition-order invariant.
+    */
+  private def contentFingerprint(df: DataFrame): String = {
+    val r = df.agg(count(lit(1)), sum(crc32(
+      concat_ws("\u0001", df.columns.toSeq.map(c => col(s"`$c`").cast("string")): _*)))).head()
+    s"n=${r.getLong(0)};h=${r.get(1)}"
   }
 
   private def fpFile(dir: String) = new org.apache.hadoop.fs.Path(s"$dir/_graft_fingerprint")
 
-  def write(spark: SparkSession, dir: String, fp: String): Unit = {
+  private def write(spark: org.apache.spark.sql.SparkSession, dir: String, fp: String): Unit = {
     val path = fpFile(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(path, true)
     try out.write(fp.getBytes("UTF-8")) finally out.close()
   }
 
-  def read(spark: SparkSession, dir: String): Option[String] = {
+  /** The recorded fingerprint of `dir`, if its last build committed. */
+  def read(spark: org.apache.spark.sql.SparkSession, dir: String): Option[String] = {
     val path = fpFile(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) None
@@ -110,20 +122,11 @@ private[graft] object IndexMeta {
   }
 
   /** Drop the recorded fingerprint: the layout no longer derives from
-    * its source (e.g. a compaction folded tombstones in), so the next
-    * `ensure*` against that source must rebuild rather than serve it.
+    * its sources (e.g. a compaction folded tombstones in), so the next
+    * [[ensure]] against them must rebuild rather than serve it.
     */
-  def invalidate(spark: SparkSession, dir: String): Unit = {
+  def invalidate(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     val path = fpFile(dir)
     path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, false)
-  }
-
-  /** An index is served only when `successRel` (a _SUCCESS marker
-    * relative to `dir`) exists AND the recorded fingerprint matches.
-    */
-  def valid(spark: SparkSession, dir: String, successRel: String, fp: String): Boolean = {
-    val succ = new org.apache.hadoop.fs.Path(s"$dir/$successRel")
-    val fs = succ.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(succ) && read(spark, dir).contains(fp)
   }
 }

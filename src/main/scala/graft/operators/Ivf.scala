@@ -141,29 +141,20 @@ object Ivf {
     cents
   }
 
-  // Driver-resident centroid memo: C·dim doubles per entry (the
-  // legitimately-small side of every IVF plan). The reference amortizes
-  // Lloyd for free by keeping its index object alive across queries;
-  // this is the engine's analog for DECLARED queries that each start
-  // from (sfDir, c, iters).
-  private val kmeansMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), Array[(Long, Seq[Double])]]
-
-  /** [[kmeans]] memoized per `(key, c, iters)` — `key` must identify the
-    * input table (e.g. its directory). The memo holds the collected
-    * local relation [[kmeans]] already materializes, so a hit costs one
+  /** [[kmeans]] memoized per content of `embeddings` and `(c, iters)`
+    * ([[IndexMeta.memo]]): the reference amortizes Lloyd by keeping its
+    * index object alive across queries; this is the engine's analog
+    * for the declared queries. The memo holds the collected local
+    * relation [[kmeans]] already materializes, so a hit costs one
     * local-relation rebuild and zero Spark jobs; values (and therefore
     * every downstream oracle hash) are bit-identical to the uncached
     * path.
     */
-  def kmeansCached(embeddings: DataFrame, c: Int, iters: Int, key: String): DataFrame = {
+  def kmeansCached(embeddings: DataFrame, c: Int, iters: Int): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    // A caller passing a different table under a reused key would get
-    // bit-wrong centroids with no error — fail loudly instead.
-    IndexMeta.requireKeyMatchesScan(embeddings, key)
-    kmeansMemo.getOrElseUpdate((key, c, iters),
-      kmeans(embeddings, c, iters).as[(Long, Seq[Double])].collect())
+    IndexMeta.memo(s"kmeans c=$c i=$iters", embeddings)(
+        kmeans(embeddings, c, iters).as[(Long, Seq[Double])].collect())
       .toSeq.toDF("centroid_id", "centroid_vec")
   }
 
@@ -173,10 +164,37 @@ object Ivf {
     * partition discovery). This is the production form of the index — a
     * probe becomes a partition-pruned scan that never opens unprobed
     * cells' files, and centroid recovery reads C sidecar rows instead
-    * of scanning the data.
+    * of scanning the data. `kind` picks the metric the layout serves
+    * ([[Metric]]): the rows are stored in its space
+    * ([[inLayoutSpace]]) and partitioned by cells of the `c` seed
+    * centroids of the stored rows.
     */
-  def writePartitioned(embeddings: DataFrame, c: Int, dir: String): Unit =
-    writePartitionedWith(embeddings, centroids(embeddings, c), dir)
+  def writePartitioned(embeddings: DataFrame, c: Int, dir: String,
+                       kind: String = "plain"): Unit = {
+    val maxNorm = if (kind == "mips") Some(maxNormOf(embeddings)) else None
+    val rows = inLayoutSpace(kind, embeddings, maxNorm.get).getOrElse(
+      throw new IllegalArgumentException(
+        s"Ivf.writePartitioned builds plain, cosine and mips layouts, not '$kind'"))
+    writePartitionedWith(rows, centroids(rows, c), dir, kind)
+    // the augmentation constant, for insertInto (after the root write,
+    // which would delete it)
+    maxNorm.foreach(m => writeScalarFile(embeddings.sparkSession, dir, "_graft_maxnorm", m.toString))
+  }
+
+  /** `rows` in the vector space a `kind` layout stores — the one
+    * per-kind row transform of [[writePartitioned]] and [[insertInto]]:
+    * raw floats (`plain`), unit-normalized doubles (`cosine`), or
+    * doubles augmented with the layout's max norm (`mips`, the build
+    * corpus's, recorded in `_graft_maxnorm`). None for a kind that
+    * holds codes instead of vectors.
+    */
+  private def inLayoutSpace(kind: String, rows: DataFrame,
+                            maxNorm: => Double): Option[DataFrame] = kind match {
+    case "plain" => Some(rows)
+    case "cosine" => Some(normalized(rows))
+    case "mips" => Some(augmentedWith(rows, maxNorm))
+    case _ => None
+  }
 
   /** [[writePartitioned]] with an EXPLICIT centroid table (seed or
     * k-means-refined): cells of the given centroids become the
@@ -274,44 +292,30 @@ object Ivf {
                         maxAge: java.time.Duration = java.time.Duration.ZERO): Unit =
     CellSnapshot.retain(spark, dir, Seq(""), "cell", maxAge)
 
-  /** [[writePartitioned]] once per dir, with the same content-
-    * fingerprint staleness check as [[Hnsw.ensureSaved]] — the
-    * amortization point for serving repeated probes from one layout.
+  /** [[writePartitioned]] once per content of `embeddings`
+    * ([[IndexMeta.ensure]]) — the amortization point for serving
+    * repeated probes from one layout.
     */
-  def ensurePartitioned(embeddings: DataFrame, c: Int, dir: String): Unit = {
-    val spark = embeddings.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, s"ivf_c=$c", Seq(embeddings)) {
-      IndexMeta.fingerprint(embeddings, s"ivf_c=$c")
-    }
-    if (!IndexMeta.valid(spark, dir, "_SUCCESS", fp)) {
-      writePartitioned(embeddings, c, dir)
-      IndexMeta.write(spark, dir, fp)
-    }
-  }
+  def ensurePartitioned(embeddings: DataFrame, c: Int, dir: String,
+                        kind: String = "plain"): Unit =
+    IndexMeta.ensure(dir, s"ivf_c=$c;kind=$kind", embeddings)(
+      writePartitioned(embeddings, c, dir, kind))
 
-  /** [[writePartitionedWith]] once per dir (explicit centroids — the
-    * k-means-refined serving layout).
+  /** [[writePartitionedWith]] once per content of `embeddings` and
+    * `cents` (explicit centroids — the k-means-refined serving layout).
     */
   def ensurePartitionedWith(embeddings: DataFrame, cents: DataFrame, dir: String,
-                            tag: String, kind: String = "plain"): Unit = {
-    val spark = embeddings.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, s"ivfw_$tag", Seq(embeddings, cents)) {
-      IndexMeta.fingerprint(embeddings,
-        s"ivfw_$tag;c=${IndexMeta.centroidFingerprint(cents)}")
-    }
-    if (!IndexMeta.valid(spark, dir, "_SUCCESS", fp)) {
-      writePartitionedWith(embeddings, cents, dir, kind)
-      IndexMeta.write(spark, dir, fp)
-    }
-  }
+                            tag: String, kind: String = "plain"): Unit =
+    IndexMeta.ensure(dir, s"ivfw_$tag;kind=$kind", embeddings, cents)(
+      writePartitionedWith(embeddings, cents, dir, kind))
 
   /** How a layout kind ([[layoutKind]]) is served — the one table that
     * [[topKPartitioned]], [[topKPartitionedBatchFused]] and
     * [[rangeSearch]] read:
     *  - `plain`: the raw query, `dist` (L2) ascending;
-    *  - `cosine` ([[ensurePartitionedCosine]]): the normalized query,
+    *  - `cosine`: the normalized query,
     *    `cos_sim = 1 − ‖û−v̂‖²/2` descending (cosine on the unit sphere);
-    *  - `mips` ([[ensurePartitionedMips]]): the zero-augmented query,
+    *  - `mips`: the zero-augmented query,
     *    the raw inner product `ip` descending (the query's extra
     *    coordinate is 0, so the augmented dot IS the raw dot).
     * `fold` is the fused kernel's `score`: the same double fold in the
@@ -724,33 +728,6 @@ object Ivf {
     IndexMeta.invalidate(spark, dir)
   }
 
-  /** The full insert-then-recluster lifecycle, memoized once per dir —
-    * build on `base` with `buildCents`, [[insertInto]] `fresh`, then
-    * [[reclusterPartitioned]] onto `newCents` (the declared
-    * `q_ivf_recluster_topk` state; the `ensureInsertedPartitioned`
-    * pattern one maintenance step further).
-    */
-  def ensureReclusteredPartitioned(base: DataFrame, fresh: DataFrame,
-                                   buildCents: DataFrame, newCents: DataFrame,
-                                   dir: String, tag: String): Unit = {
-    val spark = base.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, s"ivfrec_$tag",
-        Seq(base, fresh, buildCents, newCents)) {
-      val cb = IndexMeta.centroidFingerprint(buildCents)
-      val cn = IndexMeta.centroidFingerprint(newCents)
-      s"${IndexMeta.fingerprint(base, s"ivfrec_$tag;cb=$cb;cn=$cn;base")}|" +
-        IndexMeta.fingerprint(fresh, "fresh")
-    }
-    if (!IndexMeta.valid(spark, dir, "_SUCCESS", fp)) {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      writePartitionedWith(base, buildCents, dir)
-      insertInto(spark, dir, fresh)
-      reclusterPartitioned(spark, dir, newCents)
-      IndexMeta.write(spark, dir, fp)
-    }
-  }
-
   // ------------------------------------------------------------------
   // Range (radius) search
   // ------------------------------------------------------------------
@@ -796,12 +773,11 @@ object Ivf {
     * matches" twin of [[topKPartitioned]], the shape dedup and
     * recommendation pipelines ask when k is unknown:
     *  - `plain`: `dist` (L2) ≤ `threshold`, nearest first;
-    *  - `cosine` ([[ensurePartitionedCosine]]): `cos_sim` ≥ `threshold`,
-    *    most similar first. On the unit sphere `cos = 1 − ‖û−v̂‖²/2`, so
-    *    the floor is the L2 ball of radius `√(2(1−threshold))` around
-    *    the normalized query;
-    *  - `mips` ([[ensurePartitionedMips]]): `ip` (raw inner product) ≥
-    *    `threshold`, largest first. In the augmented space
+    *  - `cosine`: `cos_sim` ≥ `threshold`, most similar first. On the
+    *    unit sphere `cos = 1 − ‖û−v̂‖²/2`, so the floor is the L2 ball
+    *    of radius `√(2(1−threshold))` around the normalized query;
+    *  - `mips`: `ip` (raw inner product) ≥ `threshold`, largest first.
+    *    In the augmented space
     *    `d(q̂,x̂)² = ‖q̂‖² + ‖x̂‖² − 2·dot(q,x)` (the query's extra
     *    coordinate is 0, so the augmented dot IS the raw dot), so the
     *    floor confines members to a ball whose radius depends on the
@@ -916,20 +892,14 @@ object Ivf {
   def insertInto(spark: org.apache.spark.sql.SparkSession, dir: String,
                  rows: DataFrame): Unit = {
     val snap = CellSnapshot.open(spark, dir)
-    val prepared = snap.kind match {
-      case "plain" => rows
-      case "cosine" => normalized(rows)
-      case "mips" =>
-        val m = readScalarFile(spark, dir, "_graft_maxnorm").map(_.toDouble).getOrElse(
-          throw new IllegalStateException(
-            s"MIPS layout at $dir has no _graft_maxnorm sidecar — rebuild through " +
-              "ensurePartitionedMips before appending"))
-        augmentedWith(rows, m)
-      case kind =>
-        throw new IllegalArgumentException(
-          s"Ivf.insertInto appends to plain, cosine and mips layouts, but $dir is a " +
-            s"'$kind' layout — append code layouts through Pq.insertInto")
-    }
+    val prepared = inLayoutSpace(snap.kind, rows,
+      readScalarFile(spark, dir, "_graft_maxnorm").map(_.toDouble).getOrElse(
+        throw new IllegalStateException(
+          s"MIPS layout at $dir has no _graft_maxnorm sidecar — rebuild through " +
+            "writePartitioned(kind = \"mips\") before appending"))).getOrElse(
+      throw new IllegalArgumentException(
+        s"Ivf.insertInto appends to plain, cosine and mips layouts, but $dir is a " +
+          s"'${snap.kind}' layout — append code layouts through Pq.insertInto"))
     CellSnapshot.appendAssigned(spark, snap,
       prepared.join(assignWith(prepared, servingCentroids(snap).frame(spark)), Seq("vec_id")), "cell")
     // inserted rows can EXTEND a cell's covering radius, so a stale
@@ -937,74 +907,6 @@ object Ivf {
     // lossy — drop it (the next range serve regenerates in one scan)
     dropRadii(spark, dir)
     IndexMeta.invalidate(spark, dir)
-  }
-
-  /** Build-on-base + [[insertInto]]-the-rest, memoized — the
-    * declared-query form of the incremental lifecycle (the IVF twin of
-    * [[Hnsw.ensureInsertedSaved]]). `base` and `fresh` fingerprint
-    * SEPARATELY: the same union under a different split is a different
-    * I/O history, and the split IS what this layout witnesses.
-    */
-  def ensureInsertedPartitioned(base: DataFrame, fresh: DataFrame, cents: DataFrame,
-                                dir: String, tag: String): Unit = {
-    val spark = base.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, s"ivfins_$tag", Seq(base, fresh, cents)) {
-      val c = IndexMeta.centroidFingerprint(cents)
-      s"${IndexMeta.fingerprint(base, s"ivfins_$tag;c=$c;base")}|" +
-        IndexMeta.fingerprint(fresh, "fresh")
-    }
-    if (!IndexMeta.valid(spark, dir, "_SUCCESS", fp)) {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      writePartitionedWith(base, cents, dir)
-      insertInto(spark, dir, fresh)
-      IndexMeta.write(spark, dir, fp)
-    }
-  }
-
-  /** Build-on-base + [[insertInto]]-the-rest, memoized — the
-    * cosine twin of [[ensureInsertedPartitioned]] (centroids seeded
-    * from the NORMALIZED base, the same table the layout stores).
-    */
-  def ensureInsertedCosine(base: DataFrame, fresh: DataFrame, c: Int,
-                           dir: String, tag: String): Unit = {
-    val spark = base.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, s"cosins_$tag;c=$c", Seq(base, fresh)) {
-      s"${IndexMeta.fingerprint(base, s"cosins_$tag;c=$c;base")}|" +
-        IndexMeta.fingerprint(fresh, "fresh")
-    }
-    if (!IndexMeta.valid(spark, dir, "_SUCCESS", fp)) {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      val nb = normalized(base)
-      writePartitionedWith(nb, centroids(nb, c), dir, kind = "cosine")
-      insertInto(spark, dir, fresh)
-      IndexMeta.write(spark, dir, fp)
-    }
-  }
-
-  /** Build-on-base + [[insertInto]]-the-rest, memoized — the MIPS
-    * twin of [[ensureInsertedPartitioned]]: the augmentation constant
-    * is the BASE corpus's max norm, recorded for the append (fresh
-    * rows with a larger norm clamp — served dots stay exact).
-    */
-  def ensureInsertedMips(base: DataFrame, fresh: DataFrame, c: Int,
-                         dir: String, tag: String): Unit = {
-    val spark = base.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, s"mipsins_$tag;c=$c", Seq(base, fresh)) {
-      s"${IndexMeta.fingerprint(base, s"mipsins_$tag;c=$c;base")}|" +
-        IndexMeta.fingerprint(fresh, "fresh")
-    }
-    if (!IndexMeta.valid(spark, dir, "_SUCCESS", fp)) {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      val m = maxNormOf(base)
-      val ab = augmentedWith(base, m)
-      writePartitionedWith(ab, centroids(ab, c), dir, kind = "mips")
-      writeScalarFile(spark, dir, "_graft_maxnorm", m.toString)
-      insertInto(spark, dir, fresh)
-      IndexMeta.write(spark, dir, fp)
-    }
   }
 
   /** Per-query top-k of `scored(query_id, vec_id, <scoreName>)` via the
@@ -1309,16 +1211,6 @@ object Ivf {
         .as("embedding"))
   }
 
-  /** Cell-partitioned COSINE serving layout: the normalized table
-    * partitioned by cells of its own seed centroids. Build once per
-    * dir; [[topKPartitioned]] serves it by cosine.
-    */
-  def ensurePartitionedCosine(embeddings: DataFrame, c: Int, dir: String): Unit = {
-    val normed = normalized(embeddings)
-    ensurePartitionedWith(normed, centroids(normed, c), dir, tag = s"cos_c=$c",
-      kind = "cosine")
-  }
-
   // ---- MIPS: max-inner-product search on the L2 machinery ----
 
   /** Augmented copy of the vector table for MIPS serving (the
@@ -1366,20 +1258,6 @@ object Ivf {
         array(sqrt(greatest(
           lit(m * m) - dotProduct(col("embedding"), col("embedding")),
           lit(0.0))))).as("embedding"))
-
-  /** Cell-partitioned MIPS serving layout: the augmented table
-    * partitioned by cells of its own seed centroids — probe geometry
-    * and partition pruning are [[ensurePartitioned]]'s, unchanged.
-    */
-  def ensurePartitionedMips(embeddings: DataFrame, c: Int, dir: String): Unit = {
-    val m = maxNormOf(embeddings)
-    val aug = augmentedWith(embeddings, m)
-    ensurePartitionedWith(aug, centroids(aug, c), dir, tag = s"mips_c=$c",
-      kind = "mips")
-    // the augmentation constant, for insertInto (idempotent write;
-    // refreshed alongside any fingerprint-triggered rebuild)
-    writeScalarFile(embeddings.sparkSession, dir, "_graft_maxnorm", m.toString)
-  }
 
   /** Top-k by L2 for one query vector, probing the `nprobe` cells whose
     * centroids are closest to the query. Approximate (a true neighbor

@@ -71,7 +71,7 @@ object Knn {
     * norm: recommendation / dual-encoder scores are dot products, not
     * distances). Highest inner product first, ties by id. Same
     * TakeOrderedAndProject shape as [[topK]]; the indexed scale path is
-    * `Ivf.topKPartitioned` on an `Ivf.ensurePartitionedMips` layout, via
+    * `Ivf.topKPartitioned` on a `mips` layout (`Ivf.ensurePartitioned`), via
     * the augmented-vector reduction.
     */
   def mipsTopK(embeddings: DataFrame, queryVec: Column, k: Int,

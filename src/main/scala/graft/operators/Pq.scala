@@ -50,25 +50,17 @@ object Pq {
         .select(lit(s).as("subspace"), col("centroid_id"), col("centroid_vec"))
     }.reduce(_ unionByName _)
 
-  // Driver-resident codebook memo (m·c·subDim doubles per entry) —
-  // same amortization contract as Ivf.kmeansCached: `key` must
-  // identify the source table (the declared queries key by data dir).
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, Int, Int, Int), Array[(Int, Long, Seq[Double])]]
-
-  /** [[codebooks]] memoized per (key+tag, m, subDim, c, iters). `tag`
-    * distinguishes TRANSFORMED views of the same source table (e.g. the
-    * [[balancedPerm]]-rotated copy) whose scan leaves — and therefore
-    * `key` — are identical to the raw table's.
+  /** [[codebooks]] memoized per content of `embeddings` and
+    * `(m, subDim, c, iters, seedOffset)` ([[IndexMeta.memo]]; m·c·subDim
+    * doubles per entry) — [[Ivf.kmeansCached]]'s contract. A transformed
+    * view of a table (a [[balancedPerm]] rotation, [[residuals]]) has
+    * its own plan, so it is its own entry.
     */
   def codebooksCached(embeddings: DataFrame, m: Int, subDim: Int, c: Int, iters: Int,
-                      key: String, tag: String = "", seedOffset: Int = 0): DataFrame = {
+                      seedOffset: Int = 0): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    // Same hazard as Ivf.kmeansCached: a different table under a reused
-    // key would get bit-wrong codebooks with no error — fail loudly.
-    IndexMeta.requireKeyMatchesScan(embeddings, key)
-    memo.getOrElseUpdate((key + tag + s"@$seedOffset", m, subDim, c, iters),
+    IndexMeta.memo(s"codebooks m=$m sd=$subDim c=$c i=$iters off=$seedOffset", embeddings)(
         codebooks(embeddings, m, subDim, c, iters, seedOffset)
           .as[(Int, Long, Seq[Double])].collect())
       .toSeq.toDF("subspace", "centroid_id", "centroid_vec")
@@ -227,34 +219,19 @@ object Pq {
     adcTopKFromCodes(codesArray(embeddings, books, m, subDim), collectBooks(books),
       collectQuery(queries), k, roundTo)
 
-  /** Order-invariant content CRC of a codebook table (tiny: m·c rows) —
-    * rides in the persisted-code-table fingerprints so retrained
-    * codebooks invalidate stored codes.
-    */
-  private def booksFingerprint(books: DataFrame): String =
-    String.valueOf(books.agg(
-      sum(crc32(concat_ws(":", col("subspace"), col("centroid_id"),
-        concat_ws(",", col("centroid_vec").cast("array<string>")))))).head().get(0))
-
-  /** Persist the code table once per dir — `(vec_id, codes)` parquet
-    * plus a `_codebooks` sidecar — under the same content-fingerprint
-    * staleness contract as `Ivf.ensurePartitioned`. This is PQ's
-    * serving state: ADC queries read stored codes and never re-encode
-    * (the reference analog: serve from the prebuilt structure,
-    * hnsw.cc:276-285).
+  /** Persist the code table once per content of `embeddings` and
+    * `books` ([[IndexMeta.ensure]]) — `(vec_id, codes)` parquet plus a
+    * `_codebooks` sidecar, so retrained codebooks rebuild the stored
+    * codes. This is PQ's serving state: ADC queries read stored codes
+    * and never re-encode (the reference analog: serve from the prebuilt
+    * structure, hnsw.cc:276-285).
     */
   def ensureEncoded(embeddings: DataFrame, books: DataFrame, m: Int, subDim: Int,
-                    dir: String): Unit = {
-    val spark = embeddings.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, s"pq_m=$m,sd=$subDim", Seq(embeddings, books)) {
-      IndexMeta.fingerprint(embeddings, s"pq_m=$m,sd=$subDim;b=${booksFingerprint(books)}")
-    }
-    if (!IndexMeta.valid(spark, dir, "_SUCCESS", fp)) {
+                    dir: String): Unit =
+    IndexMeta.ensure(dir, s"pq_m=$m,sd=$subDim", embeddings, books) {
       codesArray(embeddings, books, m, subDim).write.mode("overwrite").parquet(dir)
       books.write.mode("overwrite").parquet(s"$dir/_codebooks")
-      IndexMeta.write(spark, dir, fp)
     }
-  }
 
   /** Serve ADC top-k from a PERSISTED code table ([[ensureEncoded]]):
     * the plan scans only the stored `(vec_id, codes)` files.
@@ -273,25 +250,15 @@ object Pq {
     * the marker existed is rebuilt rather than served without it.
     */
   def ensureEncodedPartitioned(embeddings: DataFrame, cents: DataFrame, books: DataFrame,
-                               m: Int, subDim: Int, dir: String): Unit = {
-    val spark = embeddings.sparkSession
-    val tag = s"ivfpq_m=$m,sd=$subDim;kind=pq"
-    val fp = IndexMeta.cachedFingerprint(dir, tag, Seq(embeddings, cents, books)) {
-      IndexMeta.fingerprint(embeddings,
-        s"$tag;c=${IndexMeta.centroidFingerprint(cents)};b=${booksFingerprint(books)}")
-    }
-    if (!IndexMeta.valid(spark, dir, "_SUCCESS", fp)) {
-      writeEncodedPartitioned(embeddings, cents, books, m, subDim, dir)
-      IndexMeta.write(spark, dir, fp)
-    }
-  }
+                               m: Int, subDim: Int, dir: String): Unit =
+    IndexMeta.ensure(dir, s"ivfpq_m=$m,sd=$subDim;kind=pq", embeddings, cents, books)(
+      writeEncodedPartitioned(embeddings, cents, books, m, subDim, dir))
 
   /** Write the `pq` code layout of `embeddings` at `dir`: codes by
     * cell, a reset snapshot lineage, the kind marker and both sidecars.
     */
-  private def writeEncodedPartitioned(embeddings: DataFrame, cents: DataFrame,
-                                      books: DataFrame, m: Int, subDim: Int,
-                                      dir: String): Unit = {
+  def writeEncodedPartitioned(embeddings: DataFrame, cents: DataFrame,
+                              books: DataFrame, m: Int, subDim: Int, dir: String): Unit = {
     val spark = embeddings.sparkSession
     codesArray(embeddings, books, m, subDim)
       .join(Ivf.assignWith(embeddings, cents), Seq("vec_id"))
@@ -518,58 +485,6 @@ object Pq {
     Ivf.reclusterPayloadPartitioned(spark, dir, embeddings, newCents)
   }
 
-  /** The full insert-then-recluster lifecycle on the code layout,
-    * memoized once per dir — build on `base` with `buildCents`,
-    * [[insertInto]] `fresh`, then [[reclusterEncodedPartitioned]] onto
-    * `newCents` with the union as the assignment source (the declared
-    * `q_ivfpq_recluster_topk` state; `Ivf.ensureReclusteredPartitioned`
-    * on the compressed tier).
-    */
-  def ensureReclusteredEncodedPartitioned(base: DataFrame, fresh: DataFrame,
-                                          buildCents: DataFrame, newCents: DataFrame,
-                                          books: DataFrame, m: Int, subDim: Int,
-                                          dir: String): Unit = {
-    val spark = base.sparkSession
-    val tag = s"ivfpqrec_m=$m,sd=$subDim;kind=pq"
-    val fp = IndexMeta.cachedFingerprint(dir, tag, Seq(base, fresh, buildCents, newCents, books)) {
-      val tail = s"cb=${IndexMeta.centroidFingerprint(buildCents)}" +
-        s";cn=${IndexMeta.centroidFingerprint(newCents)};b=${booksFingerprint(books)}"
-      s"${IndexMeta.fingerprint(base, s"$tag;$tail;base")}|" +
-        IndexMeta.fingerprint(fresh, "fresh")
-    }
-    if (!IndexMeta.valid(spark, dir, "_SUCCESS", fp)) {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      writeEncodedPartitioned(base, buildCents, books, m, subDim, dir)
-      insertInto(spark, dir, fresh)
-      reclusterEncodedPartitioned(spark, dir, base.union(fresh), newCents)
-      IndexMeta.write(spark, dir, fp)
-    }
-  }
-
-  /** Build-on-base + [[insertInto]]-the-rest for the code layout,
-    * memoized — the declared-query form (`Ivf.ensureInsertedPartitioned`
-    * on the compressed tier).
-    */
-  def ensureInsertedEncodedPartitioned(base: DataFrame, fresh: DataFrame,
-                                       cents: DataFrame, books: DataFrame,
-                                       m: Int, subDim: Int, dir: String): Unit = {
-    val spark = base.sparkSession
-    val tag = s"ivfpqins_m=$m,sd=$subDim;kind=pq"
-    val fp = IndexMeta.cachedFingerprint(dir, tag, Seq(base, fresh, cents, books)) {
-      val tail = s"c=${IndexMeta.centroidFingerprint(cents)};b=${booksFingerprint(books)}"
-      s"${IndexMeta.fingerprint(base, s"$tag;$tail;base")}|" +
-        IndexMeta.fingerprint(fresh, "fresh")
-    }
-    if (!IndexMeta.valid(spark, dir, "_SUCCESS", fp)) {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      writeEncodedPartitioned(base, cents, books, m, subDim, dir)
-      insertInto(spark, dir, fresh)
-      IndexMeta.write(spark, dir, fp)
-    }
-  }
-
   /** BATCH ADC score column over `(codes, lut)` rows: a static chain of
     * m DECIMAL(38,12) term additions (identical decimal-widening
     * semantics to [[adcTopKFromCodes]], so batch == single bit-for-bit),
@@ -683,9 +598,9 @@ object Pq {
 
   /** Codebooks trained on the RESIDUALS of `cents`' cells
     * ([[codebooks]] over [[residuals]]), memoized like
-    * [[codebooksCached]] — `tag` must encode the coarse-centroid choice
-    * (residual geometry changes with it). `seedOffset` defaults PAST
-    * the coarse seed rows: when `cents` are [[Ivf.centroids]]-seeded,
+    * [[codebooksCached]] (the residual plan carries `cents`, so another
+    * coarse-centroid choice is another entry). `seedOffset` should lie
+    * PAST the coarse seed rows: when `cents` are [[Ivf.centroids]]-seeded,
     * rows `vec_id < coarseC` ARE the coarse centroids, so their
     * residuals are exactly zero — seeding the product codebooks from
     * them would collapse every codeword to the origin
@@ -693,9 +608,9 @@ object Pq {
     */
   def residualCodebooksCached(embeddings: DataFrame, cents: DataFrame,
                               m: Int, subDim: Int, c: Int, iters: Int,
-                              key: String, tag: String, seedOffset: Int): DataFrame =
+                              seedOffset: Int): DataFrame =
     codebooksCached(residuals(embeddings, cents).select(col("vec_id"), col("embedding")),
-      m, subDim, c, iters, key, tag, seedOffset)
+      m, subDim, c, iters, seedOffset)
 
   /** Residual-encoded IVF-PQ serving layout: `dir/cell=<k>/` holds
     * `(vec_id, codes)` where `codes` quantize the RESIDUAL against the
@@ -708,14 +623,9 @@ object Pq {
     */
   def ensureEncodedPartitionedResidual(embeddings: DataFrame, cents: DataFrame,
                                        books: DataFrame, m: Int, subDim: Int,
-                                       dir: String): Unit = {
-    val spark = embeddings.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, s"ivfpqres_m=$m,sd=$subDim",
-        Seq(embeddings, cents, books)) {
-      IndexMeta.fingerprint(embeddings, s"ivfpqres_m=$m,sd=$subDim" +
-        s";c=${IndexMeta.centroidFingerprint(cents)};b=${booksFingerprint(books)}")
-    }
-    if (!IndexMeta.valid(spark, dir, "_SUCCESS", fp)) {
+                                       dir: String): Unit =
+    IndexMeta.ensure(dir, s"ivfpqres_m=$m,sd=$subDim", embeddings, cents, books) {
+      val spark = embeddings.sparkSession
       val bySub = collectBooks(books)
       require(bySub.keySet == (0 until m).toSet,
         s"codebooks must cover subspaces 0..${m - 1}, got ${bySub.keySet.toSeq.sorted}")
@@ -728,9 +638,7 @@ object Pq {
       Ivf.writeLayoutKind(spark, dir, "pq_residual")
       cents.write.mode("overwrite").parquet(s"$dir/_centroids")
       books.write.mode("overwrite").parquet(s"$dir/_codebooks")
-      IndexMeta.write(spark, dir, fp)
     }
-  }
 
   /** Residual reconstruction `x̂ = centroid(cell) + decode(codes)` —
     * spec surface: residual ADC distances must equal direct distances

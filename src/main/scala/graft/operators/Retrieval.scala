@@ -262,16 +262,6 @@ object Retrieval {
       .withColumnRenamed("vec_id", "doc_id")
   }
 
-  /** Content fingerprint of a documents table (the IndexMeta contract
-    * applied to text): row count + order-invariant CRC sum over
-    * `(doc_id, md5(text))`.
-    */
-  private def docsFingerprint(documents: DataFrame, extra: String): String = {
-    val r = documents.agg(count(lit(1)),
-      sum(crc32(concat_ws(":", col("doc_id"), md5(col("text")))))).head()
-    s"n=${r.getLong(0)};h=${r.get(1)};$extra"
-  }
-
   /** Build the PERSISTED inverted-index layout — the 100-TB serving
     * form of TF-IDF retrieval (the ANN tiers' layout pattern applied
     * to lexical search). One corpus-scale explode builds the posting
@@ -288,10 +278,9 @@ object Retrieval {
     *   dir/idf       (term, idf)          vocabulary-sized
     *   dir/norms     (doc_id, norm2)      one row per document
     *
-    * `norms` is written LAST: its `_SUCCESS` is the layout's
-    * completeness marker. All decimals survive the parquet round trip
-    * exactly, so layout-served scores ≡ the in-memory forms — the
-    * indexed queries share their full-compute twins' oracles.
+    * All decimals survive the parquet round trip exactly, so
+    * layout-served scores ≡ the in-memory forms — the indexed queries
+    * share their full-compute twins' oracles.
     */
   def writeTfidfLayout(documents: DataFrame, dir: String): Unit = {
     val spark = documents.sparkSession
@@ -325,27 +314,15 @@ object Retrieval {
       .write.mode("overwrite").parquet(s"$dir/norms")
   }
 
-  /** [[writeTfidfLayout]] once per (dir, corpus content) — the shared
-    * `ensure*` staleness contract (fingerprint memo + completeness
-    * marker).
+  /** [[writeTfidfLayout]] once per corpus content
+    * ([[IndexMeta.ensure]]). The rebuild clears the dir, so it is this
+    * layout's compaction too: a rebuild from a cleaned corpus starts
+    * without the old `_deletes` tombstones, which would otherwise hide
+    * any later document reusing a tombstoned id.
     */
-  def ensureTfidfLayout(documents: DataFrame, dir: String): Unit = {
-    val spark = documents.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, "tfidf_v2", Seq(documents)) {
-      docsFingerprint(documents, "tfidf_v2") // v2: positional postings
-    }
-    if (!IndexMeta.valid(spark, dir, "norms/_SUCCESS", fp)) {
-      // rebuild IS this layout's compaction (deleteDocs contract): a
-      // fingerprint-triggered rebuild comes from a cleaned corpus, so
-      // the `_deletes` sidecar must reset with it — stale tombstones
-      // would silently hide any later document reusing a tombstoned id
-      val del = new org.apache.hadoop.fs.Path(s"$dir/_deletes")
-      val fs = del.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(del)) fs.delete(del, true)
-      writeTfidfLayout(documents, dir)
-      IndexMeta.write(spark, dir, fp)
-    }
-  }
+  def ensureTfidfLayout(documents: DataFrame, dir: String): Unit =
+    IndexMeta.ensure(dir, "tfidf_v2", documents)( // v2: positional postings
+      writeTfidfLayout(documents, dir))
 
   /** Record document takedowns against the inverted-index layout —
     * the shared `_deletes` sidecar contract ([[Tombstones]]): O(batch)

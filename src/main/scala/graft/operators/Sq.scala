@@ -96,27 +96,22 @@ object Sq {
       .coalesce(1).write.mode("overwrite").parquet(boundsPath(dir))
   }
 
-  private def boundsFingerprint(lo: Seq[Double], hi: Seq[Double]): String =
-    (lo ++ hi).hashCode.toString
+  private def boundsTag(lo: Seq[Double], hi: Seq[Double]): String =
+    s"b=${(lo ++ hi).hashCode}"
 
-  /** Persist the flat SQ8 code table `(vec_id, codes)` once per dir
+  /** Persist the flat SQ8 code table `(vec_id, codes)` once per content
     * with the `_bounds` sidecar — [[Pq.ensureEncoded]]'s contract on
     * the scalar tier.
     */
   def ensureEncoded(embeddings: DataFrame, lo: Seq[Double], hi: Seq[Double],
-                    dir: String): Unit = {
-    val spark = embeddings.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, "sq8", Seq(embeddings)) {
-      IndexMeta.fingerprint(embeddings, s"sq8;b=${boundsFingerprint(lo, hi)}")
-    }
-    if (!IndexMeta.valid(spark, dir, "_SUCCESS", fp)) {
+                    dir: String): Unit =
+    IndexMeta.ensure(dir, s"sq8;${boundsTag(lo, hi)}", embeddings) {
+      val spark = embeddings.sparkSession
       embeddings.select(col("vec_id"), encodeCol(col("embedding"), lo, hi).as("codes"))
         .write.mode("overwrite").parquet(dir)
       Ivf.writeLayoutKind(spark, dir, "sq8")
       writeBounds(spark, dir, lo, hi)
-      IndexMeta.write(spark, dir, fp)
     }
-  }
 
   /** IVF-SQ8 serving layout: the code table partitioned by coarse cell
     * (`_centroids` + `_bounds` sidecars, `_graft_kind` = `ivfsq8`) —
@@ -125,13 +120,9 @@ object Sq {
     * training. [[Pq.topK]] serves it and [[Pq.insertInto]] grows it.
     */
   def ensureEncodedPartitioned(embeddings: DataFrame, cents: DataFrame,
-                               lo: Seq[Double], hi: Seq[Double], dir: String): Unit = {
-    val spark = embeddings.sparkSession
-    val fp = IndexMeta.cachedFingerprint(dir, "ivfsq8", Seq(embeddings, cents)) {
-      IndexMeta.fingerprint(embeddings,
-        s"ivfsq8;c=${IndexMeta.centroidFingerprint(cents)};b=${boundsFingerprint(lo, hi)}")
-    }
-    if (!IndexMeta.valid(spark, dir, "_SUCCESS", fp)) {
+                               lo: Seq[Double], hi: Seq[Double], dir: String): Unit =
+    IndexMeta.ensure(dir, s"ivfsq8;${boundsTag(lo, hi)}", embeddings, cents) {
+      val spark = embeddings.sparkSession
       embeddings
         .select(col("vec_id"), encodeCol(col("embedding"), lo, hi).as("codes"))
         .join(Ivf.assignWith(embeddings, cents), Seq("vec_id"))
@@ -140,9 +131,7 @@ object Sq {
       Ivf.writeLayoutKind(spark, dir, "ivfsq8")
       cents.write.mode("overwrite").parquet(s"$dir/_centroids")
       writeBounds(spark, dir, lo, hi)
-      IndexMeta.write(spark, dir, fp)
     }
-  }
 
   /** In-place flat ADC (encode + score in one plan) — the TVF/spec
     * anchor; serving paths use the persisted forms below.

@@ -800,7 +800,7 @@ object AnnBench {
       System.gc()
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
     }
-    val cents = Ivf.kmeansCached(base, c, 1, s"recsmoke_n$n")
+    val cents = Ivf.kmeansCached(base, c, 1)
     val (_, buildSec) = timed { Ivf.writePartitionedWith(base, cents, dir) }
     val (skewBase, _) = timed { Ivf.cellSkew(spark, dir) }
     val (_, insertSec) = timed { Ivf.insertInto(spark, dir, drift) }

@@ -415,8 +415,8 @@ class CellSnapshotSpec extends AnyFunSuite {
     val (dir, fresh) = (tmp("memo_kind"), tmp("memo_kind_fresh"))
     Ivf.writePartitionedWith(emb, Ivf.centroids(emb, C), dir)
     served(dir); served(dir)
-    Ivf.ensurePartitionedCosine(emb, C, dir)
-    Ivf.ensurePartitionedCosine(emb, C, fresh)
+    Ivf.ensurePartitioned(emb, C, dir, kind = "cosine")
+    Ivf.ensurePartitioned(emb, C, fresh, kind = "cosine")
     assert(Ivf.layoutKind(spark, dir) === "cosine")
     assert(served(dir) === served(fresh))
   }

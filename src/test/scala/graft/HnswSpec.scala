@@ -21,6 +21,17 @@ class HnswSpec extends AnyFunSuite {
 
   private val params = Hnsw.Params(numPartitions = 3)
 
+  /** The incremental lifecycle built once per (base, fresh) content:
+    * [[Hnsw.save]] `base`, then [[Hnsw.insertInto]] `fresh`.
+    */
+  private def ensureInsertedSaved(base: org.apache.spark.sql.DataFrame,
+                                  fresh: org.apache.spark.sql.DataFrame,
+                                  p: Hnsw.Params, dir: String): Unit =
+    graft.operators.IndexMeta.ensure(dir, s"hnsw_incr;p=$p", base, fresh) {
+      Hnsw.save(base, p, dir)
+      Hnsw.insertInto(spark, dir, fresh, p)
+    }
+
   test("edges table respects degree cap and layer structure") {
     val edges = Hnsw.buildEdges(emb, params).cache()
     val layers = edges.select("layer").distinct().collect().map(_.getInt(0)).sorted
@@ -157,7 +168,7 @@ class HnswSpec extends AnyFunSuite {
     // (c) the same base + insert through the memoized lifecycle lands
     // the identical edge set on disk and serves identical results
     val dir2 = java.nio.file.Files.createTempDirectory("hnsw_incr2").toString
-    Hnsw.ensureInsertedSaved(base, fresh, p4, dir2)
+    ensureInsertedSaved(base, fresh, p4, dir2)
     val fromDisk = Hnsw.search(spark, dir2, qs, 10, p4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val inPlace = ann.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -168,12 +179,12 @@ class HnswSpec extends AnyFunSuite {
   test("ensureInsertedSaved: a changed base/fresh split of the same rows rebuilds") {
     val p4 = Hnsw.Params(numPartitions = 4)
     val dir = java.nio.file.Files.createTempDirectory("hnsw_split").toString
-    Hnsw.ensureInsertedSaved(emb.filter(col("vec_id") < 180),
+    ensureInsertedSaved(emb.filter(col("vec_id") < 180),
       emb.filter(col("vec_id") >= 180), p4, dir)
     val fp1 = graft.operators.IndexMeta.read(spark, dir).get
     // same UNION (all 200 rows), different split: the graph differs
     // (which rows took the beam-insert path), so the fingerprint must too
-    Hnsw.ensureInsertedSaved(emb.filter(col("vec_id") < 170),
+    ensureInsertedSaved(emb.filter(col("vec_id") < 170),
       emb.filter(col("vec_id") >= 170), p4, dir)
     val fp2 = graft.operators.IndexMeta.read(spark, dir).get
     assert(fp1 !== fp2,
@@ -206,6 +217,31 @@ class HnswSpec extends AnyFunSuite {
     Hnsw.ensureSaved(emb, params, dir)
     assert(spark.read.parquet(s"$dir/nodes").count() === 200,
       "regenerated source data must rebuild the index")
+  }
+
+  test("a rebuild at the same dir drops the old layout's tombstones (exhaustive and routed)") {
+    // A holds x and x is taken down; B holds x again: serving B at the
+    // old dir must equal serving B from a fresh dir
+    val x = 7L
+    val a = emb.filter(col("vec_id") < 150)
+    val qs = emb.filter(col("vec_id") === x || col("vec_id") === 11)
+      .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
+    val cents = Ivf.centroids(emb, 4)
+    def served(dir: String) = Hnsw.search(spark, dir, qs, 5, params, nprobe = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    for ((shape, save) <- Seq[(String, (org.apache.spark.sql.DataFrame, String) => Unit)](
+           "exhaustive" -> ((df, d) => Hnsw.save(df, params, d)),
+           "routed" -> ((df, d) => Hnsw.saveRouted(df, cents, params, d)))) {
+      val dir = java.nio.file.Files.createTempDirectory(s"hnsw_retomb_$shape").toString
+      save(a, dir)
+      graft.operators.Tombstones.record(spark, dir, Seq(x).toDF("vec_id"))
+      assert(!served(dir).exists(_._2 == x), s"$shape: the tombstone must apply to A")
+      save(emb, dir)
+      val fresh = java.nio.file.Files.createTempDirectory(s"hnsw_retomb_fresh_$shape").toString
+      save(emb, fresh)
+      assert(served(fresh).exists(r => r._1 == x && r._2 == x), s"$shape: fixture must find x")
+      assert(served(dir) === served(fresh), s"$shape: the rebuilt layout must serve like a fresh dir")
+    }
   }
 
   test("persisted routed index serves identically to the rebuilt routed search") {
@@ -338,7 +374,7 @@ class HnswSpec extends AnyFunSuite {
 
   test("batch cosine == per-query single cosine over the partitioned unit-direction layout") {
     val dir = java.nio.file.Files.createTempDirectory("ivf_cos_batch").toString
-    Ivf.ensurePartitionedCosine(emb, 8, dir)
+    Ivf.ensurePartitioned(emb, 8, dir, kind = "cosine")
     val qids = Seq(3L, 7L, 11L)
     val qs = emb.filter(col("vec_id").isin(qids: _*))
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))

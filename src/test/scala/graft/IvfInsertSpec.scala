@@ -128,16 +128,16 @@ class IvfInsertSpec extends AnyFunSuite {
     Ivf.ensurePartitionedWith(Ivf.augmentedWith(base, m), mipsCents, mipsDir,
       tag = "mipsins", kind = "mips")
     // ensurePartitionedWith doesn't record the constant — mirror
-    // ensurePartitionedMips's contract through the public entry point
+    // writePartitioned(kind = "mips")'s contract through the public entry point
     val e0 = intercept[IllegalStateException] {
       Ivf.insertInto(spark, mipsDir, fresh)
     }
     assert(e0.getMessage.contains("_graft_maxnorm"))
     val mipsDir2 = Files.createTempDirectory("mips_ins2").toString
-    Ivf.ensurePartitionedMips(base, C, mipsDir2)
+    Ivf.ensurePartitioned(base, C, mipsDir2, kind = "mips")
     Ivf.insertInto(spark, mipsDir2, fresh)
     val mipsFull = Files.createTempDirectory("mips_ins_full").toString
-    Ivf.ensurePartitionedMips(emb, C, mipsFull)
+    Ivf.ensurePartitioned(emb, C, mipsFull, kind = "mips")
     // same m on both sides, so serving geometry matches a single-pass
     // build up to centroid seeding; compare against the EXACT answer
     assert(single(Ivf.topKPartitioned(spark, mipsDir2, oneQuery, 10, nprobe = C))
@@ -172,7 +172,7 @@ class IvfInsertSpec extends AnyFunSuite {
     assert(e1.getMessage.contains("vec_id 900") && e1.getMessage.contains("zero-norm"),
       e1.getMessage)
     val dir = Files.createTempDirectory("cos_zero").toString
-    Ivf.ensurePartitionedCosine(emb, C, dir)
+    Ivf.ensurePartitioned(emb, C, dir, kind = "cosine")
     val e2 = intercept[Exception](Ivf.insertInto(spark, dir, zero))
     assert(e2.getMessage.contains("vec_id 900"), e2.getMessage)
     // non-zero rows still normalize to unit length
@@ -184,12 +184,17 @@ class IvfInsertSpec extends AnyFunSuite {
     val base = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
     val fresh = emb.filter(pmod(col("vec_id"), lit(5)) === 0)
     val dir = Files.createTempDirectory("ivf_ins_ensure").toString
-    Ivf.ensureInsertedPartitioned(base, fresh, cents, dir, tag = "insspec2")
+    def ensureInserted(): Unit =
+      IndexMeta.ensure(dir, "insspec2", base, fresh, cents) {
+        Ivf.writePartitionedWith(base, cents, dir)
+        Ivf.insertInto(spark, dir, fresh)
+      }
+    ensureInserted()
     val fp1 = IndexMeta.read(spark, dir)
     assert(fp1.nonEmpty, "ensure must leave a valid fingerprint")
     val files1 = cellFiles(dir, cellsOf(emb))
     // second call: no rebuild (same split), files untouched
-    Ivf.ensureInsertedPartitioned(base, fresh, cents, dir, tag = "insspec2")
+    ensureInserted()
     assert(cellFiles(dir, cellsOf(emb)) === files1, "repeat ensure must be a no-op")
     assert(spark.read.parquet(dir).count() === emb.count())
   }
@@ -229,10 +234,15 @@ class IvfInsertSpec extends AnyFunSuite {
     val base = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
     val fresh = emb.filter(pmod(col("vec_id"), lit(5)) === 0)
     val dir = Files.createTempDirectory("pq_ins_ensure").toString
-    Pq.ensureInsertedEncodedPartitioned(base, fresh, cents, books, m = 2, subDim = 4, dir)
+    def ensureInserted(): Unit =
+      IndexMeta.ensure(dir, "pqinsspec", base, fresh, cents, books) {
+        Pq.writeEncodedPartitioned(base, cents, books, m = 2, subDim = 4, dir)
+        Pq.insertInto(spark, dir, fresh)
+      }
+    ensureInserted()
     assert(IndexMeta.read(spark, dir).nonEmpty)
     val files1 = cellFiles(dir, cellsOf(emb))
-    Pq.ensureInsertedEncodedPartitioned(base, fresh, cents, books, m = 2, subDim = 4, dir)
+    ensureInserted()
     assert(cellFiles(dir, cellsOf(emb)) === files1, "repeat ensure must be a no-op")
     assert(spark.read.parquet(dir).count() === emb.count())
     assert(spark.read.parquet(dir).select("vec_id").distinct().count() === emb.count())

@@ -58,9 +58,9 @@ class IvfRangeSpec extends AnyFunSuite {
     Kind("plain", blobs,
       (df, dir) => Ivf.writePartitionedWith(df, Ivf.centroids(df, 8), dir),
       10.0, Seq(0L, 4L, 8L), _ % 4),
-    Kind("cosine", caps, (df, dir) => Ivf.ensurePartitionedCosine(df, 6, dir),
+    Kind("cosine", caps, (df, dir) => Ivf.ensurePartitioned(df, 6, dir, kind = "cosine"),
       0.9, Seq(0L, 3L, 6L), _ % 3),
-    Kind("mips", caps, (df, dir) => Ivf.ensurePartitionedMips(df, 6, dir),
+    Kind("mips", caps, (df, dir) => Ivf.ensurePartitioned(df, 6, dir, kind = "mips"),
       95.0, Seq(0L, 3L, 6L), _ % 3))
 
   private def layout(k: Kind, rows: DataFrame): String = {

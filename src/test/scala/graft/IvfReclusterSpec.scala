@@ -50,7 +50,13 @@ class IvfReclusterSpec extends AnyFunSuite {
     val fresh = emb.filter(pmod(col("vec_id"), lit(5)) === 0)
 
     val dir = Files.createTempDirectory("ivf_rec").toString
-    Ivf.ensureReclusteredPartitioned(base, fresh, centsA, centsB, dir, tag = "recspec")
+    def ensureReclustered(): Unit =
+      IndexMeta.ensure(dir, "recspec", base, fresh, centsA, centsB) {
+        Ivf.writePartitionedWith(base, centsA, dir)
+        Ivf.insertInto(spark, dir, fresh)
+        Ivf.reclusterPartitioned(spark, dir, centsB)
+      }
+    ensureReclustered()
 
     val freshDir = Files.createTempDirectory("ivf_rec_fresh").toString
     Ivf.writePartitionedWith(emb, centsB, freshDir)
@@ -63,7 +69,7 @@ class IvfReclusterSpec extends AnyFunSuite {
 
     // ensure is memoized: a second call must not rebuild
     val v0 = CellSnapshot.version(spark, dir)
-    Ivf.ensureReclusteredPartitioned(base, fresh, centsA, centsB, dir, tag = "recspec")
+    ensureReclustered()
     assert(CellSnapshot.version(spark, dir) == v0, "memoized ensure must not republish")
   }
 
@@ -196,7 +202,7 @@ class IvfReclusterSpec extends AnyFunSuite {
     // table at offset 100, exactly like a fresh cosine build would
     val normed = Ivf.normalized(emb)
     val dir = Files.createTempDirectory("cos_rec").toString
-    Ivf.ensurePartitionedCosine(emb, C, dir)
+    Ivf.ensurePartitioned(emb, C, dir, kind = "cosine")
     Ivf.reclusterPartitioned(spark, dir, Ivf.centroidsFrom(normed, C, 100))
 
     val freshDir = Files.createTempDirectory("cos_rec_fresh").toString

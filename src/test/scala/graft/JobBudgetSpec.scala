@@ -142,8 +142,8 @@ class JobBudgetSpec extends AnyFunSuite {
       val root = Files.createTempDirectory("job_budget_kinds").toString
       val dirs = Seq(s"$root/plain", s"$root/cosine", s"$root/mips")
       Ivf.writePartitionedWith(emb, Ivf.centroids(emb, C), dirs(0))
-      Ivf.ensurePartitionedCosine(emb, C, dirs(1))
-      Ivf.ensurePartitionedMips(emb, C, dirs(2))
+      Ivf.ensurePartitioned(emb, C, dirs(1), kind = "cosine")
+      Ivf.ensurePartitioned(emb, C, dirs(2), kind = "mips")
       dirs
     }
     val oneQuery = queries.filter(col("query_id") === 0).drop("query_id")
@@ -193,6 +193,34 @@ class JobBudgetSpec extends AnyFunSuite {
       "per-call jobs of the first calls (pq, pq_residual, ivfsq8; then each with re-rank)")
     assert(measure(dirs) === Seq(2, 2, 2, 4, 4, 4),
       "per-call jobs of warm calls (pq, pq_residual, ivfsq8; then each with re-rank)")
+  }
+
+  test("cold and warm jobs of Ivf.ensurePartitionedWith and Pq.ensureEncodedPartitioned") {
+    val cents = Ivf.kmeans(emb, C, 1)
+    val books = Pq.codebooks(emb, 4, 2, 8, 1)
+    // each build reads sources no earlier call fingerprinted (another
+    // plan over the same rows), so its first ensure pays one fingerprint
+    // job per source, as on a fresh JVM
+    var run = 0
+    def fresh() = {
+      run += 1
+      (emb.filter(col("vec_id") < 400 + run), cents.filter(col("centroid_id") < C + run),
+        books.filter(col("subspace") < 4 + run))
+    }
+    def build(): Seq[Int] = {
+      val root = Files.createTempDirectory("job_budget_ensure").toString
+      val (e1, c1, _) = fresh()
+      val (e2, c2, b2) = fresh()
+      def ivf() = Jobs.of(Ivf.ensurePartitionedWith(e1, c1, s"$root/ivf", "bench"))
+      def pq() = Jobs.of(Pq.ensureEncodedPartitioned(e2, c2, b2, 4, 2, s"$root/pq"))
+      Seq(ivf(), pq(), ivf(), pq())
+    }
+    build()
+    // cold (measured, local[2]): a fingerprint job per source, then
+    // the writes; warm: the fingerprints are memoized and the recorded
+    // one matches, so nothing runs
+    assert(build() === Seq(9, 13, 0, 0),
+      "jobs of cold then warm calls (ivf, pq, ivf, pq)")
   }
 
   test("a layout read infers one schema however many compactions published") {

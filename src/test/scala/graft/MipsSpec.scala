@@ -64,7 +64,7 @@ class MipsSpec extends AnyFunSuite {
 
   test("full-beam (nprobe = C) indexed MIPS == exact brute-force MIPS, scores included") {
     val dir = java.nio.file.Files.createTempDirectory("mips_full").toString
-    Ivf.ensurePartitionedMips(emb, C, s"$dir/idx")
+    Ivf.ensurePartitioned(emb, C, s"$dir/idx", kind = "mips")
     val got = Ivf.topKPartitioned(spark, s"$dir/idx", query, k = 10, nprobe = C)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val exact = Knn.mipsTopK(emb.crossJoin(broadcast(query)), col("query_vec"), 10)
@@ -74,7 +74,7 @@ class MipsSpec extends AnyFunSuite {
 
   test("batch MIPS at full beam == exact per query; scores are true inner products") {
     val dir = java.nio.file.Files.createTempDirectory("mips_batch").toString
-    Ivf.ensurePartitionedMips(emb, C, s"$dir/idx")
+    Ivf.ensurePartitioned(emb, C, s"$dir/idx", kind = "mips")
     val qs = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
     val got = Ivf.topKPartitioned(spark, s"$dir/idx", qs, k = 10, nprobe = C)
@@ -90,7 +90,7 @@ class MipsSpec extends AnyFunSuite {
 
   test("partial probe returns a subset of candidates ranked identically to exact on overlap") {
     val dir = java.nio.file.Files.createTempDirectory("mips_part").toString
-    Ivf.ensurePartitionedMips(emb, C, s"$dir/idx")
+    Ivf.ensurePartitioned(emb, C, s"$dir/idx", kind = "mips")
     val got = Ivf.topKPartitioned(spark, s"$dir/idx", query, k = 10, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(got.length === 10)
@@ -113,7 +113,7 @@ class MipsSpec extends AnyFunSuite {
       (i, Array.fill(8)(scale + rnd.nextFloat()))
     }.toDF("vec_id", "embedding").cache()
     val dir = java.nio.file.Files.createTempDirectory("mips_range").toString
-    Ivf.ensurePartitionedMips(vecs, C, dir)
+    Ivf.ensurePartitioned(vecs, C, dir, kind = "mips")
     val q = vecs.filter(col("vec_id") === 1L)
       .select(perturbQuery(col("embedding")).as("query_vec"))
     val minDot = 70000.0 // far-blob pair dots ~ 8·100.5² ≈ 80k; near-blob pairs ~ 1.2k

@@ -124,19 +124,27 @@ class PqSpec extends AnyFunSuite {
     }
   }
 
-  test("codebooksCached rejects a memo key that does not identify the scanned table") {
+  test("codebooksCached is keyed by the scanned table's content, not its path") {
     val dir = java.nio.file.Files.createTempDirectory("pq_memo").toString
-    emb.write.parquet(s"$dir/emb.parquet")
-    val onDisk = spark.read.parquet(s"$dir/emb.parquet")
-    // the scanned path as key: accepted, memoized
-    assert(Pq.codebooksCached(onDisk, M, SubDim, C, 1, s"$dir/emb.parquet").count()
-      === M.toLong * C)
-    // a key naming a different table: must fail loudly, never silently
-    // serve codebooks trained on other data
-    val e = intercept[IllegalArgumentException] {
-      Pq.codebooksCached(onDisk, M, SubDim, C, 1, "/some/other/table")
-    }
-    assert(e.getMessage.contains("does not identify"))
+    val path = s"$dir/emb.parquet"
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("subspace", "centroid_id").collect().map(_.toSeq).toSeq
+    emb.write.parquet(path)
+    assert(rows(Pq.codebooksCached(spark.read.parquet(path), M, SubDim, C, 1))
+      === rows(Pq.codebooks(emb, M, SubDim, C, 1)))
+    // the same path regenerated with other data in this JVM: the memo
+    // must miss and train on the new rows
+    val shifted = emb.withColumn("embedding", transform(col("embedding"), x => x + lit(1.0f)))
+    shifted.write.mode("overwrite").parquet(path)
+    assert(rows(Pq.codebooksCached(spark.read.parquet(path), M, SubDim, C, 1))
+      === rows(Pq.codebooks(shifted, M, SubDim, C, 1)),
+      "a regenerated table must not be served the old table's codebooks")
+    // a transformed view of the same files is its own entry
+    val perm = Pq.balancedPerm(emb, M, SubDim)
+    val rot = spark.read.parquet(path)
+      .select(col("vec_id"), Pq.permute(col("embedding"), perm).as("embedding"))
+    assert(rows(Pq.codebooksCached(rot, M, SubDim, C, 1))
+      === rows(Pq.codebooks(rot, M, SubDim, C, 1)))
   }
 
   test("stored-code serving == in-place ADC on identical inputs") {

@@ -366,8 +366,8 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     // must produce the IDENTICAL graph (both paths: deterministic build
     // of base, then the same beam-inserts of fresh)
     val bdir = java.nio.file.Files.createTempDirectory("stream_maint_batch").toString
-    Hnsw.ensureInsertedSaved(
-      baseRows.toDF("vec_id", "embedding"), freshRows.toDF("vec_id", "embedding"), p, bdir)
+    Hnsw.save(baseRows.toDF("vec_id", "embedding"), p, bdir)
+    Hnsw.insertInto(spark, bdir, freshRows.toDF("vec_id", "embedding"), p)
     def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
       df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
     assert(rows(Hnsw.readRoutedEdges(spark, dir), "part", "src", "dst", "layer")
@@ -587,13 +587,13 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       .select(graft.functions.VectorFunctions.perturbQuery(col("embedding")).as("query_vec"))
 
     val cosDir = java.nio.file.Files.createTempDirectory("stream_cos").toString
-    Ivf.ensurePartitionedCosine(baseRows.toDF("vec_id", "embedding"), 8, cosDir)
+    Ivf.ensurePartitioned(baseRows.toDF("vec_id", "embedding"), 8, cosDir, kind = "cosine")
     val memC = MemoryStream[(Long, Array[Float])]
     val qc = StreamingAnn.maintainIvf(memC.toDF().toDF("vec_id", "embedding"), cosDir)
     try { memC.addData(freshRows: _*); qc.processAllAvailable() } finally qc.stop()
 
     val mipsDir = java.nio.file.Files.createTempDirectory("stream_mips").toString
-    Ivf.ensurePartitionedMips(baseRows.toDF("vec_id", "embedding"), 8, mipsDir)
+    Ivf.ensurePartitioned(baseRows.toDF("vec_id", "embedding"), 8, mipsDir, kind = "mips")
     val memM = MemoryStream[(Long, Array[Float])]
     val qm = StreamingAnn.maintainIvf(memM.toDF().toDF("vec_id", "embedding"), mipsDir)
     try { memM.addData(freshRows: _*); qm.processAllAvailable() } finally qm.stop()

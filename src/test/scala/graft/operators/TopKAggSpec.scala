@@ -82,8 +82,8 @@ class TopKAggSpec extends AnyFunSuite {
       (i, Array.fill(16)(rnd.nextFloat() * 100f))
     }.toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("ivf_fused_cm").toString
-    Ivf.ensurePartitionedCosine(emb, 16, s"$dir/cos")
-    Ivf.ensurePartitionedMips(emb, 16, s"$dir/mips")
+    Ivf.ensurePartitioned(emb, 16, s"$dir/cos", kind = "cosine")
+    Ivf.ensurePartitioned(emb, 16, s"$dir/mips", kind = "mips")
     val qs = emb.filter(col("vec_id") < 40)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
     for (nprobe <- Seq(2, 16)) {
@@ -107,8 +107,8 @@ class TopKAggSpec extends AnyFunSuite {
     }.toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("ivf_batch_of_one").toString
     Ivf.ensurePartitioned(emb, 16, s"$dir/plain")
-    Ivf.ensurePartitionedCosine(emb, 16, s"$dir/cosine")
-    Ivf.ensurePartitionedMips(emb, 16, s"$dir/mips")
+    Ivf.ensurePartitioned(emb, 16, s"$dir/cosine", kind = "cosine")
+    Ivf.ensurePartitioned(emb, 16, s"$dir/mips", kind = "mips")
     // the code layouts: Pq.topK serves each, with and without re-rank
     val cents = Ivf.centroids(emb, 16)
     Pq.ensureEncodedPartitioned(emb, cents, Pq.codebooks(emb, 4, 4, 8, 1), 4, 4, s"$dir/pq")
@@ -156,8 +156,8 @@ class TopKAggSpec extends AnyFunSuite {
     }
     val dir = java.nio.file.Files.createTempDirectory("ivf_fused_near").toString
     Ivf.ensurePartitioned(l2.toDF("vec_id", "embedding"), 4, s"$dir/l2")
-    Ivf.ensurePartitionedCosine(cos.toDF("vec_id", "embedding"), 4, s"$dir/cos")
-    Ivf.ensurePartitionedMips(mips.toDF("vec_id", "embedding"), 4, s"$dir/mips")
+    Ivf.ensurePartitioned(cos.toDF("vec_id", "embedding"), 4, s"$dir/cos", kind = "cosine")
+    Ivf.ensurePartitioned(mips.toDF("vec_id", "embedding"), 4, s"$dir/mips", kind = "mips")
     val qs = Seq((0L, Array(0.0, 0.0, 0.0, 0.0)), (1L, Array(1e-7, 0.0, 0.0, 0.0)))
       .toDF("query_id", "query_vec")
     val qDir = Seq((0L, Array(1.0, 0.0, 0.0, 0.0)), (1L, Array(1.0, 1e-4, 0.0, 0.0)))
