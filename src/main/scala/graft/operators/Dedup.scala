@@ -278,73 +278,9 @@ object Dedup {
     */
   def minhashPairsIncremental(spark: org.apache.spark.sql.SparkSession, dir: String,
                               newDocs: DataFrame, threshold: Double = 0.7,
-                              absorb: Boolean = true): DataFrame =
-    minhashIncrementalCore(spark,
-      spark.read.parquet(s"$dir/bands"), spark.read.parquet(s"$dir/shingles"),
-      newDocs, threshold,
-      if (!absorb) None else Some { (bands, sh) =>
-        bands.write.mode("append").parquet(s"$dir/bands")
-        sh.write.mode("append").parquet(s"$dir/shingles")
-      })
-
-  /** Persisted BUCKETED MinHash store: the band table saved bucketed
-    * (and sorted) by its collision key `(band, band_key)` and the
-    * shingle-set table bucketed by `doc_id` — the co-located layout
-    * [[writeMinhashStore]]'s contract promises. Repeat ingestion's
-    * store-side relations then arrive PRE-PARTITIONED on their join
-    * keys: the candidate probe and the verification joins never
-    * exchange the corpus-sized side (the batch-sized sides broadcast
-    * or shuffle to match), and appends ride the same bucket spec.
-    */
-  def writeMinhashStoreBucketed(documents: DataFrame, prefix: String,
-                                buckets: Int = 32): Unit = {
-    lshBands(minhashSignatures(documents))
-      .write.mode("overwrite")
-      .bucketBy(buckets, "band", "band_key").sortBy("band", "band_key")
-      .saveAsTable(s"${prefix}_bands")
-    hashedShingleSets(documents)
-      .write.mode("overwrite")
-      .bucketBy(buckets, "doc_id")
-      .saveAsTable(s"${prefix}_shingles")
-  }
-
-  /** [[minhashPairsIncremental]] against the BUCKETED store tables —
-    * identical pair semantics and replay-idempotent absorb, with the
-    * store sides exchange-free by bucket layout.
-    */
-  def minhashPairsIncrementalBucketed(spark: org.apache.spark.sql.SparkSession,
-                                      prefix: String, newDocs: DataFrame,
-                                      threshold: Double = 0.7,
-                                      absorb: Boolean = true): DataFrame =
-    minhashIncrementalCore(spark, {
-        // cross-session freshness (the clusterStoreLabels note)
-        spark.catalog.refreshTable(s"${prefix}_bands")
-        spark.catalog.refreshTable(s"${prefix}_shingles")
-        spark.table(s"${prefix}_bands")
-      }, spark.table(s"${prefix}_shingles"),
-      newDocs, threshold,
-      if (!absorb) None else Some { (bands, sh) =>
-        bands.write.mode("append")
-          .bucketBy(bucketCountOf(spark, s"${prefix}_bands"), "band", "band_key")
-          .sortBy("band", "band_key")
-          .saveAsTable(s"${prefix}_bands")
-        sh.write.mode("append")
-          .bucketBy(bucketCountOf(spark, s"${prefix}_shingles"), "doc_id")
-          .saveAsTable(s"${prefix}_shingles")
-      })
-
-  /** The shared incremental-ingest core over any (bands, shingles)
-    * store pair. `absorbFn`, when present, receives the REPLAY-SAFE
-    * batch remainder (docs already absorbed are anti-joined away) to
-    * append — one semi-join of the store against the broadcast-sized
-    * batch ids finds the overlap, so a replayed micro-batch can never
-    * duplicate store rows or fan out later candidate joins.
-    */
-  private def minhashIncrementalCore(spark: org.apache.spark.sql.SparkSession,
-                                     storedBands: DataFrame, storedSh: DataFrame,
-                                     newDocs: DataFrame, threshold: Double,
-                                     absorbFn: Option[(DataFrame, DataFrame) => Unit])
-      : DataFrame = {
+                              absorb: Boolean = true): DataFrame = {
+    val storedBands = spark.read.parquet(s"$dir/bands")
+    val storedSh = spark.read.parquet(s"$dir/shingles")
     val newBands = lshBands(minhashSignatures(newDocs))
       .localCheckpoint(true) // computed once: candidates + the absorb append
     val newSh = hashedShingleSets(newDocs).localCheckpoint(true)
@@ -368,14 +304,20 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select("id1", "id2", "jaccard")
       .localCheckpoint(true) // materialize BEFORE the absorb mutates the store
-    absorbFn.foreach { append =>
+    if (absorb) {
+      // REPLAY-SAFE append: docs already absorbed are anti-joined away —
+      // one semi-join of the store against the broadcast-sized batch ids
+      // finds the overlap, so a replayed micro-batch can never duplicate
+      // store rows or fan out later candidate joins
       val newIds = newSh.select(col("doc_id")).distinct()
       val alreadyIds = storedSh
         .join(broadcast(newIds), Seq("doc_id"), "left_semi")
         .select("doc_id").distinct()
         .localCheckpoint(true) // batch-bounded, materialized pre-append
-      append(newBands.join(broadcast(alreadyIds), Seq("doc_id"), "left_anti"),
-        newSh.join(broadcast(alreadyIds), Seq("doc_id"), "left_anti"))
+      newBands.join(broadcast(alreadyIds), Seq("doc_id"), "left_anti")
+        .write.mode("append").parquet(s"$dir/bands")
+      newSh.join(broadcast(alreadyIds), Seq("doc_id"), "left_anti")
+        .write.mode("append").parquet(s"$dir/shingles")
     }
     pairs
   }
@@ -596,7 +538,7 @@ object Dedup {
 
   /** INCREMENTAL cluster maintenance — the contract one level above the
     * incremental PAIR stores: absorb a batch's docs and its new
-    * near-dup pairs (e.g. [[minhashPairsIncrementalBucketed]]'s output)
+    * near-dup pairs (e.g. [[minhashPairsIncremental]]'s output)
     * into the persisted labeling WITHOUT re-running connected
     * components over the corpus. Semantics: the returned labeling (and
     * the absorbed store) equals batch [[nearDupClusters]] over (all

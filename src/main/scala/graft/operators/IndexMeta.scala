@@ -3,9 +3,18 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The build-once protocol of every persisted index layout (IVF, PQ,
-  * SQ, binary, HNSW, Z-order, TF-IDF), and the driver-side value memos
-  * the builders are fed from.
+/** The build-once protocol of everything the engine derives from its
+  * tables and keeps: every persisted index layout (IVF, PQ, SQ, binary,
+  * HNSW, Z-order, TF-IDF), every on-disk fixture and store the declared
+  * queries read (derived substrates, WARC / JSONL / PDF corpora,
+  * parquet stores), the stores that live in the session catalog or the
+  * [[graft.plans.IndexCatalog]], and the driver-side values the
+  * builders are fed from.
+  *
+  * Output on disk goes through [[ensure]]; output that lives only in
+  * this JVM (a managed table's catalog entry, a catalog registration, a
+  * trained value) goes through [[memo]], which re-runs its build once
+  * per JVM and per source content.
   *
   * [[ensure]] is the one rule:
   *  - fingerprint: each source frame's content — row count plus an

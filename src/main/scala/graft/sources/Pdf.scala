@@ -1064,39 +1064,26 @@ object PdfCodec {
   }
 
   /** Materialize the documents table as one `.pdf` file per doc under
-    * `outDir` (idempotent via marker + source stamp — the
-    * `ensureWarcFiles` contract). Returns the glob.
+    * `outDir`, once per content of `documents` through
+    * [[graft.operators.IndexMeta.ensure]] (the `ensureWarcFiles`
+    * contract). Returns the glob.
     */
-  def ensurePdfFiles(documents: org.apache.spark.sql.DataFrame, outDir: String,
-                     sourceDir: String = ""): String = {
+  def ensurePdfFiles(documents: org.apache.spark.sql.DataFrame, outDir: String): String = {
     import org.apache.spark.sql.functions.col
-    val n = documents.count()
-    val marker = new java.io.File(outDir, "_GRAFT_PDF")
-    val stamp = s"n=$n;v=1;src=${Warc.sourceStampOf(sourceDir)}"
-    val glob = s"$outDir/*.pdf"
-    if (marker.exists() &&
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp)
-      return glob
-    val dirF = new java.io.File(outDir)
-    if (dirF.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(dirF)
-    }
-    dirF.mkdirs()
-    val absOut = dirF.getAbsolutePath
-    documents.select(col("doc_id"), col("text"))
-      .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        rows.foreach { r =>
-          val id = r.getLong(0)
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(absOut, f"doc-$id%08d.pdf"),
-            pdfOf(id, r.getString(1)))
+    graft.operators.IndexMeta.ensure(outDir, "pdf v2", documents) {
+      val dirF = new java.io.File(outDir)
+      dirF.mkdirs()
+      val absOut = dirF.getAbsolutePath
+      documents.select(col("doc_id"), col("text"))
+        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+          rows.foreach { r =>
+            val id = r.getLong(0)
+            java.nio.file.Files.write(
+              java.nio.file.Paths.get(absOut, f"doc-$id%08d.pdf"),
+              pdfOf(id, r.getString(1)))
+          }
         }
-      }
-    java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
-    glob
+    }
+    s"$outDir/*.pdf"
   }
 }

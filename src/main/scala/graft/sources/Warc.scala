@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.IndexMeta
+
 /** Raw-corpus ingestion: WARC (ISO 28500) and JSONL — the two formats a
   * real crawl pipeline starts from, upstream of everything else in the
   * engine (the `documents` table the curation surface consumes is what
@@ -1165,117 +1167,87 @@ object Warc {
     * (every 4th doc), a text/plain fetch (every 3rd), and a revisit
     * record (every 6th) — the mixed-media + crawl-dedup corpus.
     * `withEncodings` runs every HTML response through the
-    * chunked/gzip/charset transfer stack. Idempotent per (row count,
-    * layout, SOURCE files) via a marker stamped with the source dir's
-    * file sizes+mtimes — regenerated testdata with an equal row count
-    * can no longer serve a stale fixture against a fresh oracle.
-    * Tasks write their own segment files (one per bucket — the
+    * chunked/gzip/charset transfer stack. Written once per (content of
+    * `documents`, layout) through [[IndexMeta.ensure]]: a call on
+    * unchanged documents writes nothing, changed content rewrites the
+    * dir. Tasks write their own segment files (one per bucket — the
     * synthesis is a fixture, the READER is the operator under test).
     * Returns the glob to read back.
     */
   def ensureWarcFiles(documents: DataFrame, outDir: String, buckets: Int = 8,
                       withImages: Boolean = false,
                       withEncodings: Boolean = false,
-                      sourceDir: String = "",
                       withSkips: Boolean = false,
                       withRefetch: Boolean = false,
                       withDamage: Boolean = false,
                       withPdfs: Boolean = false): String = {
-    val n = documents.count()
-    val marker = new java.io.File(outDir, "_GRAFT_WARC")
-    val stamp =
-      s"n=$n;buckets=$buckets;img=$withImages;enc=$withEncodings;v=3;" +
-        s"src=${sourceStampOf(sourceDir)}" +
-        (if (withSkips || withRefetch || withDamage || withPdfs)
-          s";skips=$withSkips;refetch=$withRefetch;dmg=$withDamage;pdfs=$withPdfs"
-        else "")
-    val glob = s"$outDir/*.warc*"
-    if (marker.exists() &&
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp)
-      return glob
-    val dirF = new java.io.File(outDir)
-    if (dirF.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(dirF)
-    }
-    dirF.mkdirs()
-    val absOut = dirF.getAbsolutePath
-    documents.select(col("doc_id"), col("text"))
-      .withColumn("bucket", (col("doc_id") % buckets).cast("int"))
-      .repartition(buckets, col("bucket"))
-      .sortWithinPartitions("doc_id")
-      .foreachPartition { (rows: Iterator[Row]) =>
-        // a partition may hold several buckets (hash placement); group
-        // so each bucket's file is written whole, in doc_id order
-        rows.toSeq.groupBy(_.getInt(2)).foreach { case (b, docs) =>
-          val gz = b % 2 == 1
-          val out = new ByteArrayOutputStream(1 << 16)
-          def put(rec: Array[Byte]): Unit = {
-            val bs = if (gz) WarcCodec.gzipMember(rec) else rec
-            out.write(bs, 0, bs.length)
-          }
-          put(warcinfoOf(b))
-          docs.foreach { r =>
-            val id = r.getLong(0)
-            recordsOf(id, r.getString(1), withEncodings, withSkips).foreach(put)
-            if (withImages) {
-              // mixed-media corpus: every 4th doc's crawl also fetched
-              // an image, every 3rd a plain-text asset — one crawl,
-              // several modalities; every 6th doc was refetched later
-              // and stored as a revisit pointer
-              if (id % 4 == 0) put(mediaRecordOf(id))
-              if (id % 3 == 0) put(plainRecordOf(id, r.getString(1)))
-              if (id % 6 == 0) put(revisitRecordOf(id))
+    val params = s"warc v4;buckets=$buckets;img=$withImages;enc=$withEncodings;" +
+      s"skips=$withSkips;refetch=$withRefetch;dmg=$withDamage;pdfs=$withPdfs"
+    IndexMeta.ensure(outDir, params, documents) {
+      val dirF = new java.io.File(outDir)
+      dirF.mkdirs()
+      val absOut = dirF.getAbsolutePath
+      documents.select(col("doc_id"), col("text"))
+        .withColumn("bucket", (col("doc_id") % buckets).cast("int"))
+        .repartition(buckets, col("bucket"))
+        .sortWithinPartitions("doc_id")
+        .foreachPartition { (rows: Iterator[Row]) =>
+          // a partition may hold several buckets (hash placement); group
+          // so each bucket's file is written whole, in doc_id order
+          rows.toSeq.groupBy(_.getInt(2)).foreach { case (b, docs) =>
+            val gz = b % 2 == 1
+            val out = new ByteArrayOutputStream(1 << 16)
+            def put(rec: Array[Byte]): Unit = {
+              val bs = if (gz) WarcCodec.gzipMember(rec) else rec
+              out.write(bs, 0, bs.length)
             }
-            if (withPdfs && id % 2 == 0)
-              // every 2nd doc's crawl also fetched a PDF rendition
-              put(pdfRecordOf(id, r.getString(1)))
-            if (withRefetch && id % 6 == 0) {
-              // crawl-dedup corpus: every 6th doc was refetched a month
-              // later — once as a full byte-identical duplicate response
-              // (the crawler's dedup missed it) and once as the revisit
-              // pointer (it caught it)
-              put(refetchRecordOf(id, r.getString(1)))
-              put(revisitRecordOf(id))
+            put(warcinfoOf(b))
+            docs.foreach { r =>
+              val id = r.getLong(0)
+              recordsOf(id, r.getString(1), withEncodings, withSkips).foreach(put)
+              if (withImages) {
+                // mixed-media corpus: every 4th doc's crawl also fetched
+                // an image, every 3rd a plain-text asset — one crawl,
+                // several modalities; every 6th doc was refetched later
+                // and stored as a revisit pointer
+                if (id % 4 == 0) put(mediaRecordOf(id))
+                if (id % 3 == 0) put(plainRecordOf(id, r.getString(1)))
+                if (id % 6 == 0) put(revisitRecordOf(id))
+              }
+              if (withPdfs && id % 2 == 0)
+                // every 2nd doc's crawl also fetched a PDF rendition
+                put(pdfRecordOf(id, r.getString(1)))
+              if (withRefetch && id % 6 == 0) {
+                // crawl-dedup corpus: every 6th doc was refetched a month
+                // later — once as a full byte-identical duplicate response
+                // (the crawler's dedup missed it) and once as the revisit
+                // pointer (it caught it)
+                put(refetchRecordOf(id, r.getString(1)))
+                put(revisitRecordOf(id))
+              }
             }
+            if (withDamage) {
+              // planted parse damage, appended after the clean records:
+              // a malformed header block (1 skip), an over-cap
+              // Content-Length claim (1 oversized), and a truncation —
+              // mid-gzip-member for gz buckets (1 skip + io_error),
+              // mid-payload at EOF for plain buckets (1 skip)
+              put(damageBadHeader)
+              put(damageOversized)
+              if (gz) {
+                val t = damageTruncatedGzMember(b)
+                out.write(t, 0, t.length)
+              } else
+                out.write(damageTruncatedPlain, 0, damageTruncatedPlain.length)
+            }
+            val name = f"segment-$b%05d.warc" + (if (gz) ".gz" else "")
+            java.nio.file.Files.write(
+              java.nio.file.Paths.get(absOut, name), out.toByteArray)
           }
-          if (withDamage) {
-            // planted parse damage, appended after the clean records:
-            // a malformed header block (1 skip), an over-cap
-            // Content-Length claim (1 oversized), and a truncation —
-            // mid-gzip-member for gz buckets (1 skip + io_error),
-            // mid-payload at EOF for plain buckets (1 skip)
-            put(damageBadHeader)
-            put(damageOversized)
-            if (gz) {
-              val t = damageTruncatedGzMember(b)
-              out.write(t, 0, t.length)
-            } else
-              out.write(damageTruncatedPlain, 0, damageTruncatedPlain.length)
-          }
-          val name = f"segment-$b%05d.warc" + (if (gz) ".gz" else "")
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(absOut, name), out.toByteArray)
         }
-      }
-    java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
-    glob
-  }
-
-  /** Size+mtime fingerprint of a source data dir (the ensureSubstrate
-    * sourceStamp pattern) — "" when no dir is supplied.
-    */
-  private[sources] def sourceStampOf(dir: String): String =
-    if (dir.isEmpty) ""
-    else {
-      val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-        .filter(_.isFile).sortBy(_.getName)
-      val h = files.map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString(";")
-      java.util.UUID.nameUUIDFromBytes(h.getBytes("UTF-8")).toString
     }
+    s"$outDir/*.warc*"
+  }
 
   // ---------------------------------------------------------------
   // JSONL documents path
@@ -1343,26 +1315,17 @@ object Warc {
 
   /** Materialize the documents table as JSONL text files: half the
     * rows into a plain directory, half gzip — one corpus, both codec
-    * paths. Idempotent via marker (row count + source files stamp).
-    * Returns the glob covering both.
+    * paths. Written once per content of `documents` through
+    * [[IndexMeta.ensure]]. Returns the glob covering both.
     */
-  def ensureJsonlFiles(documents: DataFrame, outDir: String,
-                       sourceDir: String = ""): String = {
-    val n = documents.count()
-    val marker = new java.io.File(outDir, "_GRAFT_JSONL")
-    val stamp = s"n=$n;v=2;src=${sourceStampOf(sourceDir)}"
-    val glob = s"$outDir/{plain,gz}"
-    if (marker.exists() &&
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp)
-      return glob
-    val line = to_json(struct(
-      col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars")))
-    documents.filter(col("doc_id") % 2 === 0).select(line)
-      .write.mode("overwrite").text(s"$outDir/plain")
-    documents.filter(col("doc_id") % 2 === 1).select(line)
-      .write.mode("overwrite").option("compression", "gzip").text(s"$outDir/gz")
-    new java.io.File(outDir).mkdirs()
-    java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
-    glob
+  def ensureJsonlFiles(documents: DataFrame, outDir: String): String = {
+    IndexMeta.ensure(outDir, "jsonl v3", documents) {
+      val line = to_json(struct(
+        col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars")))
+      documents.filter(col("doc_id") % 2 === 0).select(line).write.text(s"$outDir/plain")
+      documents.filter(col("doc_id") % 2 === 1).select(line)
+        .write.option("compression", "gzip").text(s"$outDir/gz")
+    }
+    s"$outDir/{plain,gz}"
   }
 }

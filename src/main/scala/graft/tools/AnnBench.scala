@@ -1595,7 +1595,7 @@ object AnnBench {
     val t0 = System.nanoTime()
     val glob = Warc.ensureWarcFiles(docs, dir, buckets = 64)
     println(s"[annbench] warcscale synth: ${fmt((System.nanoTime() - t0) / 1e9, 1)} s " +
-      "(fixture write, not measured)")
+      "(fixture fingerprint, plus the write when it changed; not measured)")
 
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {

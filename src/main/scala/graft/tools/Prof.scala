@@ -88,9 +88,9 @@ object Prof {
         timeAct("full query (warm 1)") { q(spark, sfDir).write.format("noop").mode("overwrite").save() }
         timeAct("full query (warm 2)") { q(spark, sfDir).write.format("noop").mode("overwrite").save() }
         val glob = "target/graft_index/corpus_pdf_" + sfDir.replace("/", "_") + "/*.pdf"
-        timeAct("ensurePdfFiles (marker hit)") {
+        timeAct("ensurePdfFiles (fingerprint hit)") {
           graft.sources.PdfCodec.ensurePdfFiles(Tables.documents(spark, sfDir),
-            "target/graft_index/corpus_pdf_" + sfDir.replace("/", "_"), sourceDir = sfDir)
+            "target/graft_index/corpus_pdf_" + sfDir.replace("/", "_"))
         }
         time("binaryFile scan only") {
           spark.read.format("binaryFile").load(glob).select(col("path"), col("content"))

@@ -17,6 +17,7 @@ class BinaryFilesSpec extends AnyFunSuite {
     Files.write(dir.resolve("a.pdf"), Array[Byte](1, 2))
     Files.write(dir.resolve("b.pdf"), Array[Byte](3))
     Files.write(dir.resolve("c.txt"), Array[Byte](4))
+    Files.write(dir.resolve("_graft_fingerprint"), Array[Byte](5)) // a build-once marker is no file of the corpus
     def rows(d: String) = BinaryFiles.read(spark, d, ".pdf").collect()
       .map(r => (r.getString(0), r.getAs[Array[Byte]](1).toSeq)).sortBy(_._1).toSeq
     val abs = dir.toAbsolutePath.toString

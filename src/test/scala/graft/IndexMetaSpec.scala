@@ -145,6 +145,45 @@ class IndexMetaSpec extends AnyFunSuite {
     assert(computed === 2, "another plan is another entry")
   }
 
+  test("declared stores and substrates follow their tables rewritten in place in one JVM") {
+    // a two-table scale-factor dir: `documents` and a `lineitem` whose
+    // orders o, o + 40, ... share one part triple (40 repeat triangles);
+    // the rewrite keeps every row count and changes the content — the
+    // batch docs' URL now also in the stored docs' texts (the URL
+    // store's canonical forms), and shifted part keys (the
+    // co-occurrence substrate and the stored labeling)
+    def writeTables(dir: String, changed: Boolean): Unit = {
+      val url = when(lit(changed) || col("id") >= 250,
+        concat(lit(" https://changed.example.com/p"), (col("id") % 7).cast("string"))).otherwise("")
+      spark.range(500).select(col("id").as("doc_id"),
+          concat(lit("doc "), col("id").cast("string"), lit(" body words"), url).as("text"),
+          lit("en").as("lang"), lit("web").as("source"), lit(20L).as("n_chars"))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      spark.range(480).select(expr("id div 3").as("l_orderkey"),
+          expr(s"id % 3 + (id div 3) % 40 * 3 + ${if (changed) 1000 else 0}").as("l_partkey"))
+        .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    }
+    def clean(dir: String): String = {
+      val f = new java.io.File(dir)
+      if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
+      f.getAbsolutePath
+    }
+    val (dir, fresh) = (clean("target/test_sf_rewrite"), clean("target/test_sf_rewrite_fresh"))
+    val names = Seq("q_url_dedup_incremental", "q_cc_incremental")
+    def served(d: String) =
+      names.map(q => SparkEntry.queries(q)(spark, d).collect().map(_.toSeq).toSet)
+    writeTables(dir, changed = false)
+    val before = served(dir)
+    writeTables(dir, changed = true)
+    writeTables(fresh, changed = true)
+    val after = served(dir)
+    val want = served(fresh)
+    names.indices.foreach { i =>
+      assert(want(i) !== before(i), s"${names(i)}: the rewrite must change the result")
+      assert(after(i) === want(i), s"${names(i)} must be served from the rewritten tables")
+    }
+  }
+
   test("kmeansCached trains on a table regenerated at the same path") {
     val path = s"${tmp("meta_kmeans")}/emb.parquet"
     def cents(df: DataFrame) =

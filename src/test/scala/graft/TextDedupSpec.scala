@@ -220,34 +220,6 @@ class TextDedupSpec extends AnyFunSuite {
       "replay must not grow the digest store")
   }
 
-  test("bucketed minhash store: incremental pairs == plain-parquet store; absorb rides the bucket spec") {
-    import java.nio.file.Files
-    val base = docs.filter(col("doc_id") <= 4)
-    dropManaged("mh_spec_bands", "mh_spec_shingles")
-    Dedup.writeMinhashStoreBucketed(base, "mh_spec", buckets = 4)
-    val pdir = Files.createTempDirectory("mh_plain").toString
-    Dedup.writeMinhashStore(base, pdir)
-    val baseText = docs.filter(col("doc_id") === 1).head().getString(1)
-    val b1 = Seq((100L, baseText), (101L, "completely unrelated fresh words " * 3))
-      .toDF("doc_id", "text")
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val refP = pairs(Dedup.minhashPairsIncremental(spark, pdir, b1, 0.5))
-    val bucketedP = pairs(
-      Dedup.minhashPairsIncrementalBucketed(spark, "mh_spec", b1, 0.5))
-    assert(bucketedP === refP, "bucketed store must yield identical pairs")
-    // the absorb appended through the bucket spec: a second batch sees
-    // batch-1 docs, and the store stayed a bucketed table
-    val b2 = Seq((200L, baseText)).toDF("doc_id", "text")
-    val p2 = pairs(
-      Dedup.minhashPairsIncrementalBucketed(spark, "mh_spec", b2, 0.5))
-    assert(p2.contains((1L, 200L)) && p2.contains((100L, 200L)))
-    val cat = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier("mh_spec_bands"))
-    assert(cat.bucketSpec.exists(_.numBuckets === 4),
-      "appends must preserve the bucketed layout")
-  }
-
   test("minhashPairsIncremental absorb is idempotent under micro-batch replay") {
     import java.nio.file.Files
     val base = docs.filter(col("doc_id") <= 4)

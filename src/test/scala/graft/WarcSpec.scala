@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{Warc, WarcCodec}
+import graft.sources.{BinaryFiles, PdfCodec, Warc, WarcCodec}
 import graft.operators.CorpusPipeline
 
 /** WARC (ISO 28500) + JSONL raw-corpus ingestion. The codec is a
@@ -99,11 +99,38 @@ class WarcSpec extends AnyFunSuite {
     val plan = Warc.records(recs.sparkSession.read.format("binaryFile").load(glob)
       .select(col("path"), col("content"))).queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"record scan must be narrow:\n$plan")
-    // idempotence: a second ensure call rewrites nothing (marker match)
+    // idempotence: a second ensure call rewrites nothing (fingerprint match)
     val before = new java.io.File(dir).listFiles().map(f => f.getName -> f.lastModified).toMap
+    assert(before.contains("_graft_fingerprint"))
     Warc.ensureWarcFiles(docs, dir, buckets = 4)
     val after = new java.io.File(dir).listFiles().map(f => f.getName -> f.lastModified).toMap
-    assert(after === before, "matching marker must skip the rewrite")
+    assert(after === before, "a matching fingerprint must skip the rewrite")
+  }
+
+  test("corpus files follow their documents: same row count, changed text is served afresh") {
+    import spark.implicits._
+    def docsOf(word: String) = (0L until 12L).map(i => (i, s"$word body $i", "en", "web", 12L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    // each corpus kind: ensure `docs` at `dir`, read it back without paths
+    val kinds: Seq[(String, (org.apache.spark.sql.DataFrame, String) => Set[Seq[Any]])] = Seq(
+      "warc" -> ((docs, dir) => rows(Warc.htmlDocuments(Warc.responses(
+        Warc.read(spark, Warc.ensureWarcFiles(docs, dir, buckets = 2)))).select("url", "text"))),
+      "jsonl" -> ((docs, dir) => rows(Warc.readJsonl(spark, Warc.ensureJsonlFiles(docs, dir)))),
+      "pdf" -> { (docs, dir) =>
+        PdfCodec.ensurePdfFiles(docs, dir)
+        rows(PdfCodec.extractFiles(BinaryFiles.read(spark, dir, ".pdf"))
+          .select(regexp_extract(col("path"), "doc-(\\d+)\\.pdf", 1).as("doc"), col("text")))
+      })
+    for ((kind, served) <- kinds) {
+      val dir = java.nio.file.Files.createTempDirectory(s"restamp_$kind").resolve("c").toString
+      val fresh = java.nio.file.Files.createTempDirectory(s"restamp_${kind}_fresh").resolve("c").toString
+      val first = served(docsOf("first"), dir)
+      val second = served(docsOf("second"), dir)
+      val want = served(docsOf("second"), fresh)
+      assert(want !== first, s"$kind: the two frames must read back differently")
+      assert(second === want, s"$kind: a same-count frame with new text must get its own files")
+    }
   }
 
   test("composition pinned: warc → extract → curate equals the pre-extracted path") {
