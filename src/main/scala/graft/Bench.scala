@@ -10,18 +10,6 @@ import org.apache.spark.sql.SparkSession
   * map, and makes the process exit 1 — a failure is never timed.
   */
 object Bench {
-  private def freshSession(cpus: String): SparkSession = SparkSession.builder()
-    .master(s"local[$cpus]")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.sql.session.timeZone", "UTC")
-    // batch ANN serving holds one bounded heap per query per task;
-    // without this, ObjectHashAggregate falls back to sort-based
-    // aggregation past 128 distinct query ids and re-buys the sort
-    // the heap top-k exists to remove
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
   /** Warm up and time one query: an untimed warm-up at the bench sf,
     * `runs` samples, and `shortRuns` in all when the fastest is under
     * 2 s. Each sample materializes through the `noop` sink after a GC
@@ -63,7 +51,7 @@ object Bench {
       if (args.nonEmpty) Some(args(0).split(",").toSeq) else None
     def keep(name: String) = only.forall(_.exists(name.contains))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = freshSession(cpus)
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up: one untimed pass at the smallest sf compiles every plan
     // shape (Janino/JIT) so the timed numbers measure execution, not
@@ -176,7 +164,7 @@ object Bench {
       spark.stop()
       System.gc()
       Thread.sleep(2000) // let the old session's threads fully wind down
-      val spark2 = freshSession(cpus)
+      val spark2 = Session.local(cpus)
       val out = regressed.map { case (k, _, _) =>
         val fn = SparkEntry.queries(k)
         try fn(spark2, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()

@@ -212,35 +212,25 @@ object SparkEntry {
   }
 
   /** Sandbox for the optimizer-rewrite query: a dedicated parquet COPY
-    * of the embeddings table, IVF-indexed (kmeans c=8, iters=2) and
-    * registered in [[graft.plans.IndexCatalog]] at nprobe = C (exact),
-    * with the cell-partitioned serving copy. A dedicated path keeps the
-    * catalog entry from rewriting OTHER declared queries' naive plans —
-    * each query must bench the plan it declares.
+    * of the embeddings table with an IVF layout (kmeans c=8, iters=2)
+    * registered in [[graft.plans.IndexCatalog]] at nprobe = C (exact).
+    * A dedicated path keeps the catalog entry from rewriting OTHER
+    * declared queries' naive plans — each query must bench the plan it
+    * declares.
     */
   private def ensureRewriteSandbox(s: SparkSession, sfDir: String,
                                    metric: String = "l2"): String = {
-    // ABSOLUTE path: the catalog keys by the scan's resolved root path
-    // (file:/abs/...), so a relative registration would never match.
     // One sandbox dir per metric — each metric's catalog entry covers
     // only its own copy, so the kind-match guard is actually exercised.
-    val rdir = fixtureDir(s, sfDir, if (metric == "l2") "v5_rw" else s"v5_rw$metric")
+    val rdir = fixtureDir(s, sfDir, if (metric == "l2") "v6_rw" else s"v6_rw$metric")
     val dataPath = s"$rdir/data"
     val emb = Tables.embeddings(s, sfDir)
     IndexMeta.memo(s"rewrite sandbox $rdir", emb) {
       emb.write.mode("overwrite").parquet(dataPath)
-      metric match {
-        case "cosine" => graft.plans.IndexCatalog.buildAndRegisterCosine(
-          s, dataPath, c = 8, iters = 2, nprobe = 8, rdir, partitioned = true)
-        case "mips" => graft.plans.IndexCatalog.buildAndRegisterMips(
-          s, dataPath, c = 8, iters = 2, nprobe = 8, rdir, partitioned = true)
-        case _ => graft.plans.IndexCatalog.buildAndRegister(s, dataPath, c = 8,
-          iters = 2, nprobe = 8, rdir, partitioned = true)
-      }
+      graft.plans.IndexCatalog.register(s, dataPath, s"$rdir/ivf", c = 8, iters = 2,
+        nprobe = 8, kind = metric)
     }
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.IndexRewriteRule]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.IndexRewriteRule(s)
+    graft.plans.IndexRewriteRule.setup(s)
     dataPath
   }
 
@@ -254,12 +244,9 @@ object SparkEntry {
     val docs = Tables.documents(s, sfDir)
     IndexMeta.memo(s"rewrite sandbox $rdir", docs) {
       docs.write.mode("overwrite").parquet(dataPath)
-      Retrieval.ensureTfidfLayout(s.read.parquet(dataPath), s"$rdir/tfidf")
       graft.plans.IndexCatalog.registerTfidf(s, dataPath, s"$rdir/tfidf")
     }
-    if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.IndexRewriteRule]))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.IndexRewriteRule(s)
+    graft.plans.IndexRewriteRule.setup(s)
     dataPath
   }
 

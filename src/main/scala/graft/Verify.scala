@@ -1,8 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. A query that
+  * throws is reported on stderr and listed in a final `failed: [...]`
+  * line, and the run exits 1 (after writing oracle_sql.json) — the
+  * `Bench` contract, so a throw is never just a missing output dir. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated name substrings — run (and dump
@@ -13,26 +15,15 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
     def keep(name: String) = only.forall(_.exists(name.contains))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // batch ANN serving holds one bounded heap per query per task;
-      // without this, ObjectHashAggregate falls back to sort-based
-      // aggregation past 128 distinct query ids and re-buys the sort
-      // the heap top-k exists to remove
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (keep(name))
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    val failed = SparkEntry.queries.toSeq.filter(kv => keep(kv._1)).flatMap { case (name, fn) =>
+      try { fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"); None }
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -50,5 +41,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(failed.mkString("[verify] failed: [", ", ", "]"))
+      sys.exit(1)
+    }
   }
 }

@@ -7,14 +7,16 @@ import org.apache.spark.sql.functions._
   * tables and keeps: every persisted index layout (IVF, PQ, SQ, binary,
   * HNSW, Z-order, TF-IDF), every on-disk fixture and store the declared
   * queries read (derived substrates, WARC / JSONL / PDF corpora,
-  * parquet stores), the stores that live in the session catalog or the
-  * [[graft.plans.IndexCatalog]], and the driver-side values the
-  * builders are fed from.
+  * parquet stores), the layout behind each [[graft.plans.IndexCatalog]]
+  * registration, the stores that live in the session catalog, and the
+  * in-memory values the builders are fed from.
   *
   * Output on disk goes through [[ensure]]; output that lives only in
-  * this JVM (a managed table's catalog entry, a catalog registration, a
-  * trained value) goes through [[memo]], which re-runs its build once
-  * per JVM and per source content.
+  * this JVM (a managed table's catalog entry, a trained value) goes
+  * through [[memo]], which re-runs its build once per JVM and per
+  * source content. A catalog registration is a layout built by
+  * [[ensure]], and the rewrite serves it only while [[current]] holds
+  * for the table it scans.
   *
   * [[ensure]] is the one rule:
   *  - fingerprint: each source frame's content — row count plus an
@@ -59,14 +61,27 @@ private[graft] object IndexMeta {
     val inside = sources.flatMap(fileIndexes).flatMap(_.rootPaths).map(_.toString)
       .filter(p => (p.stripSuffix("/") + "/").startsWith(owned))
     require(inside.isEmpty, s"ensure($dir) would delete what its sources read: ${inside.mkString(", ")}")
-    val fp = (params +: sources.map(s =>
-      fingerprints.getOrElseUpdate(keyOf(Seq(s)), contentFingerprint(s)))).mkString("|")
-    if (!read(spark, dir).contains(fp)) {
+    if (!current(dir, params, sources: _*)) {
       fs.delete(root, true)
       build
-      write(spark, dir, fp)
+      // the sources' listings are unchanged, so this is a memo hit
+      write(spark, dir, fingerprint(params, sources))
     }
   }
+
+  /** Whether `dir` holds a committed build of `sources` under `params`
+    * — the check half of [[ensure]]: one fingerprint per source
+    * (memoized per JVM, see the object doc) and one read of the
+    * recorded fingerprint. A rewritten source lists new files and is
+    * fingerprinted afresh; a maintenance write has [[invalidate]]d the
+    * recorded one.
+    */
+  def current(dir: String, params: String, sources: DataFrame*): Boolean =
+    read(sources.head.sparkSession, dir).contains(fingerprint(params, sources))
+
+  private def fingerprint(params: String, sources: Seq[DataFrame]): String =
+    (params +: sources.map(s =>
+      fingerprints.getOrElseUpdate(keyOf(Seq(s)), contentFingerprint(s)))).mkString("|")
 
   /** A driver-side value computed once per (`name`, content of
     * `sources`) in this JVM — the amortization of k-means centroids,

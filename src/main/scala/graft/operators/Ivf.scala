@@ -528,7 +528,7 @@ object Ivf {
     servingCentroids(CellSnapshot.open(spark, dir)).frame(spark)
 
   /** [[centroidsOf]] as the collected sidecar rows of `snap`'s version. */
-  private[operators] def servingCentroids(snap: CellSnapshot.Snapshot): CellSnapshot.Collected =
+  private[graft] def servingCentroids(snap: CellSnapshot.Snapshot): CellSnapshot.Collected =
     snap.centroids("_centroids").getOrElse(throw new IllegalArgumentException(
       s"${snap.dir} has no _centroids sidecar: it is not a cell-partitioned layout"))
 
@@ -1160,12 +1160,20 @@ object Ivf {
   private[operators] def probePlanOver(cents: CellSnapshot.Collected, queries: DataFrame,
                                        nprobe: Int, keyCols: Seq[String] = Seq("query_id")): ProbePlan = {
     val (keys, vecs) = collectQueries(queries, keyCols)
-    val (id, vec) = (cents.schema.fieldIndex("centroid_id"), cents.schema.fieldIndex("centroid_vec"))
-    val cs = cents.rows
-      .map(r => (r.getAs[Number](id).longValue, r.getSeq[Number](vec).iterator.map(_.doubleValue).toArray))
-      .sortBy(_._1) // stable sort by distance in rankCells leaves ties id-ascending
+    val cs = centroidVectors(cents)
     new ProbePlan(keys, vecs, rankCells(cs, vecs, nprobe, i => keyLabel(keyCols, keys(i))),
       cs.toMap, keyCols.map(queries.schema(_)), cents.schema("centroid_id").dataType)
+  }
+
+  /** Collected `(centroid_id, centroid_vec)` rows as doubles, ascending
+    * by id — the order [[rankCells]] expects (its stable sort by
+    * distance leaves ties id-ascending).
+    */
+  private[graft] def centroidVectors(cents: CellSnapshot.Collected): Array[(Long, Array[Double])] = {
+    val (id, vec) = (cents.schema.fieldIndex("centroid_id"), cents.schema.fieldIndex("centroid_vec"))
+    cents.rows
+      .map(r => (r.getAs[Number](id).longValue, r.getSeq[Number](vec).iterator.map(_.doubleValue).toArray))
+      .sortBy(_._1)
   }
 
   /** Each vector's `nprobe` nearest centroid ids, nearest first (all C
@@ -1173,7 +1181,7 @@ object Ivf {
     * centroid `cs` (ascending by id). A vector whose length differs from
     * the centroids' is rejected, named by `label`.
     */
-  private def rankCells(cs: Array[(Long, Array[Double])], vecs: Array[Array[Double]],
+  private[graft] def rankCells(cs: Array[(Long, Array[Double])], vecs: Array[Array[Double]],
                         nprobe: Int, label: Int => String): Array[Array[Long]] = {
     val dim = cs.headOption.map(_._2.length)
     vecs.indices.map { i =>

@@ -321,8 +321,19 @@ object Retrieval {
     * any later document reusing a tombstoned id.
     */
   def ensureTfidfLayout(documents: DataFrame, dir: String): Unit =
-    IndexMeta.ensure(dir, "tfidf_v2", documents)( // v2: positional postings
-      writeTfidfLayout(documents, dir))
+    IndexMeta.ensure(dir, tfidfLayoutParams, documents)(writeTfidfLayout(documents, dir))
+
+  /** The build params every [[ensureTfidfLayout]] commits under (v2:
+    * positional postings).
+    */
+  private[graft] val tfidfLayoutParams = "tfidf_v2"
+
+  /** A fresh read of the layout's `(doc_id, term, tf, positions)`
+    * postings: each call plans its own relation, so two reads never
+    * share attribute ids.
+    */
+  private[graft] def readPostings(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/postings")
 
   /** Record document takedowns against the inverted-index layout —
     * the shared `_deletes` sidecar contract ([[Tombstones]]): O(batch)
@@ -372,7 +383,7 @@ object Retrieval {
                        terms: Seq[String], k: Int, roundTo: Int = 6): DataFrame = {
     require(terms.nonEmpty, "tfidfTopKIndexed needs at least one query term")
     require(terms.distinct == terms, "query terms must be distinct")
-    val postings = spark.read.parquet(s"$dir/postings")
+    val postings = readPostings(spark, dir)
     val idfQ = spark.read.parquet(s"$dir/idf").filter(col("term").isin(terms: _*))
     val norms = spark.read.parquet(s"$dir/norms")
     val nq = excludeDeleted(spark, dir, postings
@@ -411,7 +422,7 @@ object Retrieval {
     }
     import spark.implicits._
     val allTerms = queries.flatMap(_._2).distinct
-    val postings = spark.read.parquet(s"$dir/postings")
+    val postings = readPostings(spark, dir)
       .filter(col("term").isin(allTerms: _*))
     val idf = spark.read.parquet(s"$dir/idf")
     val norms = spark.read.parquet(s"$dir/norms")
@@ -462,7 +473,7 @@ object Retrieval {
     import spark.implicits._
     val m = phrase.size
     val slots = phrase.zipWithIndex.map { case (t, i) => (i, t) }.toDF("slot", "term")
-    val postings = spark.read.parquet(s"$dir/postings")
+    val postings = readPostings(spark, dir)
       .filter(col("term").isin(phrase.distinct: _*))
       .select(col("doc_id"), col("term"), col("positions"))
     val shifted = postings
@@ -503,7 +514,7 @@ object Retrieval {
   def proximityTopK(spark: org.apache.spark.sql.SparkSession, dir: String,
                     termA: String, termB: String, slop: Int, k: Int): DataFrame = {
     require(slop >= 1, s"slop must be positive, got $slop")
-    val postings = spark.read.parquet(s"$dir/postings")
+    val postings = readPostings(spark, dir)
       .select(col("doc_id"), col("term"), col("positions"))
     val a = postings.filter(col("term") === termA)
       .select(col("doc_id"), col("positions").as("pa"))

@@ -2,55 +2,48 @@ package graft.plans
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-import graft.operators.Ivf
+import graft.operators.{IndexMeta, Ivf, Retrieval}
 
-/** Session-scoped registry of vector indexes, keyed by the DATA PATH of
+/** Session-scoped registry of index layouts, keyed by the DATA PATH of
   * the table they cover — the engine's analog of a database's index
   * catalog. [[IndexRewriteRule]] consults it to decide whether a naive
-  * exact-kNN plan over a scanned table can be served by the IVF probe
-  * instead (the reference has no planner at all — its only access path
-  * is the `Hnsw` object the caller explicitly holds, hnsw.cc:114-137;
-  * an engine must make the index reachable from the QUERY, not the call
-  * site).
+  * exact-kNN or TF-IDF plan over a scanned table can be served by the
+  * layout instead (the reference has no planner at all — its only
+  * access path is the `Hnsw` object the caller explicitly holds,
+  * hnsw.cc:114-137; an engine must make the index reachable from the
+  * QUERY, not the call site).
   *
-  * Registering an index declares an approximation budget: the rewrite
-  * probes `nprobe` of the index's C cells, which is exact when
-  * `nprobe >= C` and the standard IVF recall trade below that. Entries
-  * hold the collected centroid table (C·dim doubles — driver-resident
-  * by design, like every IVF plan's broadcast side) plus the path of
-  * the persisted `(vec_id, cell)` assignment table.
+  * Every registration is a layout built by [[IndexMeta.ensure]] from
+  * the table at its path, and a lookup returns it only while it is
+  * CURRENT for the table a plan scans ([[IndexMeta.current]]): a table
+  * rewritten in place lists new files and fingerprints afresh, and a
+  * maintenance write (append, compaction) has invalidated the layout's
+  * fingerprint, so in both cases the rule keeps the exact plan. The
+  * layouts persist; the registry does not. A new session re-arms by
+  * calling [[register]] again, which over a committed layout runs one
+  * fingerprint job and builds nothing.
+  *
+  * Two tiers share the [[Registration]] type:
+  *  - IVF ([[register]]): a cell-partitioned layout whose recorded kind
+  *    picks the metric the rule rewrites. Registering declares an
+  *    approximation budget: the rewrite probes `nprobe` of the C cells,
+  *    which is exact when `nprobe >= C` and the standard IVF recall
+  *    trade below that;
+  *  - lexical ([[registerTfidf]]): a TF-IDF posting layout
+  *    ([[Retrieval.ensureTfidfLayout]]) served bit-exactly.
   */
 object IndexCatalog {
 
-  /** `assignPath`: the persisted `(vec_id, cell)` assignment table —
-    * the in-place probe form. `partitionedPath`: optionally, a full
-    * cell-PARTITIONED copy of the table ([[Ivf.writePartitionedWith]]);
-    * when present, the rewrite serves the query from that copy with a
-    * partition-pruned scan (a materialized-layout rewrite — unprobed
-    * cells' files are never opened).
-    *
-    * `kind` declares the metric GEOMETRY the index was built in — the
-    * rewrite only fires when the plan's score shape matches:
-    *  - "l2": centroids/assignments over the raw vectors;
-    *  - "cosine": over the unit-normalized copy ([[Ivf.normalized]]) —
-    *    covers naive cosine-similarity top-k plans;
-    *  - "mips": over the augmented copy ([[Ivf.augmented]], d+1 dims)
-    *    — covers naive inner-product top-k plans (queries zero-augment
-    *    before probing).
-    * For cosine/mips the assignment table is the ONLY probe form (the
-    * partitioned copies hold transformed vectors, which cannot serve
-    * the original plan's raw-vector score expression bit-identically).
+  /** The layout at `dir`, probed `nprobe` cells deep (the lexical tier
+    * has no probe budget and records 0).
     */
-  final case class IvfIndex(
-      assignPath: String,
-      centroids: Seq[(Long, Seq[Double])],
-      nprobe: Int,
-      partitionedPath: Option[String] = None,
-      kind: String = "l2")
+  final case class Registration(dir: String, nprobe: Int)
 
-  private val registry = TrieMap.empty[String, IvfIndex]
+  // (tier, canonical table path) → (registration, its layout's build params)
+  private val registry = TrieMap.empty[(String, String), (Registration, String)]
 
   /** Canonical form: authority + path — "file:/x/y", "/x/y" and
     * "file:///x/y" coincide (no authority), while "s3://bucketA/x" and
@@ -63,216 +56,86 @@ object IndexCatalog {
     Option(uri.getAuthority).getOrElse("") + uri.getPath.stripSuffix("/")
   }
 
-  def register(dataPath: String, assignPath: String,
-               centroids: Seq[(Long, Seq[Double])], nprobe: Int,
-               partitionedPath: Option[String] = None,
-               kind: String = "l2"): Unit =
-    registry(canon(dataPath)) =
-      IvfIndex(assignPath, centroids, nprobe, partitionedPath, kind)
+  /** The root path of the one file relation `table` scans. */
+  private def pathOf(table: DataFrame): Option[String] =
+    table.queryExecution.analyzed.collectLeaves() match {
+      case Seq(lr: LogicalRelation) => lr.relation match {
+        case fs: HadoopFsRelation => fs.location.rootPaths.headOption.map(p => canon(p.toString))
+        case _ => None
+      }
+      case _ => None
+    }
 
-  def lookup(dataPath: String): Option[IvfIndex] = registry.get(canon(dataPath))
-
-  def unregister(dataPath: String): Unit = registry.remove(canon(dataPath))
-
-  /** LEXICAL tier: a persisted TF-IDF posting layout
-    * ([[graft.operators.Retrieval.writeTfidfLayout]] —
-    * `dir/postings` term-clustered, `dir/idf`, `dir/norms`) registered
-    * for a documents table. Registration declares the layout CURRENT
-    * for the table's content (the `ensureTfidfLayout` fingerprint
-    * contract) — the rewrite serves postings-derived relations from it
-    * bit-exactly.
+  /** Register an IVF layout for the parquet table at `dataPath`, built
+    * under `indexDir` once per table content and `(c, iters, kind)`:
+    * [[Ivf.kmeans]] centroids over the rows in the space `kind`
+    * declares — raw ("l2", a `plain` layout), unit-normalized
+    * ("cosine", [[Ivf.normalized]]) or augmented ("mips",
+    * [[Ivf.augmented]], d+1 dims) — the cell-partitioned layout
+    * ([[Ivf.writePartitionedWith]]) and its `_radii` sidecar, so
+    * serving never writes. `nprobe` is a serving knob, not a build
+    * parameter: re-registering with another budget reuses the layout.
     */
-  final case class TfidfIndex(layoutDir: String)
+  def register(spark: SparkSession, dataPath: String, indexDir: String,
+               c: Int, iters: Int, nprobe: Int, kind: String = "l2"): Unit = {
+    val space: DataFrame => DataFrame = kind match {
+      case "l2" => identity
+      case "cosine" => Ivf.normalized
+      case "mips" => Ivf.augmented
+      case other => throw new IllegalArgumentException(
+        s"IndexCatalog.register builds l2, cosine and mips layouts, not '$other'")
+    }
+    val table = spark.read.parquet(dataPath)
+    val params = s"catalog_ivf_c=$c;iters=$iters;kind=$kind"
+    IndexMeta.ensure(indexDir, params, table) {
+      val rows = space(table)
+      Ivf.writePartitionedWith(rows, Ivf.kmeans(rows, c, iters), indexDir,
+        if (kind == "l2") "plain" else kind)
+      Ivf.ensureRadii(spark, indexDir)
+    }
+    put("ivf", table, Registration(indexDir, nprobe), params)
+  }
 
-  private val lexRegistry = TrieMap.empty[String, TfidfIndex]
-
-  /** Registration CONTRACT (what `tryRewriteTokenContains` relies on):
-    * the relation at `dataPath` holds ONE row per `doc_id`, with the
-    * SAME text the layout was built from. A duplicate doc_id (or
-    * drifted text) would let the posting semi-join keep a row whose
-    * own text lacks the term — the rewrite would be silently lossy.
-    * Use the validating overload wherever a SparkSession is in hand;
-    * the raw form exists for restore-from-disk paths that already
-    * carry the `ensureTfidfLayout` content fingerprint.
+  /** Register the TF-IDF posting layout of the documents table at
+    * `dataPath` (built under `layoutDir` by
+    * [[Retrieval.ensureTfidfLayout]] unless committed there).
+    *
+    * Registration CONTRACT (what the token-contains rewrite relies on):
+    * the relation holds ONE row per `doc_id`, with the SAME text the
+    * layout was built from. A duplicate doc_id would let the posting
+    * semi-join keep a row whose own text lacks the term — the rewrite
+    * would be silently lossy — so uniqueness is asserted here (one
+    * aggregate over doc_id); sameness is the layout's currency.
     */
-  def registerTfidf(dataPath: String, layoutDir: String): Unit =
-    lexRegistry(canon(dataPath)) = TfidfIndex(layoutDir)
-
-  /** [[registerTfidf]] with the uniqueness half of the contract
-    * ASSERTED at registration time (one aggregate over doc_id — cheap
-    * next to the posting build that precedes every registration; the
-    * currency half is the `ensureTfidfLayout` fingerprint).
-    */
-  def registerTfidf(spark: SparkSession, dataPath: String,
-                    layoutDir: String): Unit = {
+  def registerTfidf(spark: SparkSession, dataPath: String, layoutDir: String): Unit = {
     import org.apache.spark.sql.functions.{count, countDistinct, lit, col}
-    val r = spark.read.parquet(dataPath)
-      .agg(count(lit(1)), countDistinct(col("doc_id"))).head
+    val table = spark.read.parquet(dataPath)
+    val r = table.agg(count(lit(1)), countDistinct(col("doc_id"))).head
     require(r.getLong(0) == r.getLong(1),
       s"registerTfidf($dataPath): doc_id must be unique — " +
         s"${r.getLong(0)} rows vs ${r.getLong(1)} distinct; a duplicate " +
         "doc_id makes the token-contains posting semi-join lossy")
-    registerTfidf(dataPath, layoutDir)
+    Retrieval.ensureTfidfLayout(table, layoutDir)
+    put("tfidf", table, Registration(layoutDir, 0), Retrieval.tfidfLayoutParams)
   }
 
-  def lookupTfidf(dataPath: String): Option[TfidfIndex] =
-    lexRegistry.get(canon(dataPath))
+  private def put(tier: String, table: DataFrame, r: Registration, params: String): Unit =
+    registry((tier, pathOf(table).getOrElse(sys.error(s"not a file table: $table")))) = (r, params)
 
-  def unregisterTfidf(dataPath: String): Unit = lexRegistry.remove(canon(dataPath))
+  /** The IVF registration of the table `table` scans, if current for it. */
+  def lookup(table: DataFrame): Option[Registration] = currentFor("ivf", table)
 
-  def clear(): Unit = { registry.clear(); lexRegistry.clear() }
+  /** The TF-IDF registration of the table `table` scans, if current for it. */
+  def lookupTfidf(table: DataFrame): Option[Registration] = currentFor("tfidf", table)
 
-  // ------------------------------------------------------------------
-  // Persistence: every build writes `indexDir/_catalog` (meta line +
-  // centroid parquet), so a NEW session restores the registration from
-  // disk instead of recomputing k-means — the catalog half of the
-  // engine's restart story (layouts already persist; the registry was
-  // the only session-lost piece).
-  // ------------------------------------------------------------------
+  private def currentFor(tier: String, table: DataFrame): Option[Registration] =
+    pathOf(table).flatMap(p => registry.get((tier, p))).collect {
+      case (r, params) if IndexMeta.current(r.dir, params, table) => r
+    }
 
-  private def writeCatalogMeta(spark: SparkSession, indexDir: String,
-                               dataPath: String, cents: org.apache.spark.sql.DataFrame,
-                               nprobe: Int, partitionedPath: Option[String],
-                               kind: String): Unit = {
-    cents.write.mode("overwrite").parquet(s"$indexDir/_catalog/centroids")
-    val meta = Seq(
-      s"dataPath=$dataPath", s"nprobe=$nprobe", s"kind=$kind",
-      s"partitionedPath=${partitionedPath.getOrElse("")}").mkString("\n")
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/_catalog/meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(meta.getBytes("UTF-8")) finally out.close()
-  }
+  def unregister(dataPath: String): Unit = registry.remove(("ivf", canon(dataPath)))
 
-  /** Restore a registration persisted by any buildAndRegister* from
-    * `indexDir/_catalog` — no k-means, no data scan beyond the C-row
-    * centroid table. Returns the restored data path. `nprobe` may be
-    * overridden at restore time (it is a serving knob, not a build
-    * property).
-    */
-  def restore(spark: SparkSession, indexDir: String,
-              nprobeOverride: Option[Int] = None): String = {
-    import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/_catalog/meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no persisted catalog under $indexDir/_catalog")
-    val in = fs.open(p)
-    val meta =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
-    val kv = meta.linesIterator.filter(_.contains("="))
-      .map { l => val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1) }
-      .toMap
-    val cents = spark.read.parquet(s"$indexDir/_catalog/centroids")
-      .as[(Long, Seq[Double])].collect().toSeq
-    register(kv("dataPath"), s"$indexDir/assign", cents,
-      nprobeOverride.getOrElse(kv("nprobe").toInt),
-      Option(kv.getOrElse("partitionedPath", "")).filter(_.nonEmpty),
-      kv.getOrElse("kind", "l2"))
-    kv("dataPath")
-  }
+  def unregisterTfidf(dataPath: String): Unit = registry.remove(("tfidf", canon(dataPath)))
 
-  /** Build and register an IVF index over a parquet vector table:
-    * k-means centroids (deterministic Lloyd, [[Ivf.kmeans]]) and the
-    * persisted assignment table under `indexDir/assign`. After this,
-    * any naive top-k-by-l2 plan scanning `dataPath` is eligible for the
-    * probe rewrite.
-    */
-  def buildAndRegister(spark: SparkSession, dataPath: String,
-                       c: Int, iters: Int, nprobe: Int, indexDir: String): Unit =
-    buildAndRegister(spark, dataPath, c, iters, nprobe, indexDir, partitioned = false)
-
-  /** [[buildAndRegister]] with `partitioned = true` ALSO writes the
-    * cell-partitioned copy of the table and registers it, upgrading the
-    * rewrite from an assignment-table join to a partition-pruned scan.
-    */
-  def buildAndRegister(spark: SparkSession, dataPath: String,
-                       c: Int, iters: Int, nprobe: Int, indexDir: String,
-                       partitioned: Boolean): Unit = {
-    import spark.implicits._
-    val emb = spark.read.parquet(dataPath)
-    val cents = Ivf.kmeans(emb, c, iters)
-    val assignPath = s"$indexDir/assign"
-    Ivf.assignWith(emb, cents).write.mode("overwrite").parquet(assignPath)
-    val partPath = if (partitioned) {
-      val pp = s"$indexDir/cells"
-      Ivf.writePartitionedWith(emb, cents, pp)
-      Some(pp)
-    } else None
-    writeCatalogMeta(spark, indexDir, dataPath, cents, nprobe, partPath, "l2")
-    register(dataPath, assignPath,
-      cents.as[(Long, Seq[Double])].collect().toSeq, nprobe, partPath)
-  }
-
-  /** Build and register a COSINE index over a parquet vector table:
-    * centroids and `(vec_id, cell)` assignments are computed over the
-    * unit-NORMALIZED copy (the cosine→L2 reduction's geometry), but the
-    * registration keys on the RAW table's path — the rewrite restricts
-    * the naive plan's candidate set by cell and keeps its raw-vector
-    * cosine score expression untouched, so nprobe = C is bit-exact.
-    */
-  def buildAndRegisterCosine(spark: SparkSession, dataPath: String,
-                             c: Int, iters: Int, nprobe: Int, indexDir: String): Unit =
-    buildAndRegisterCosine(spark, dataPath, c, iters, nprobe, indexDir,
-      partitioned = false)
-
-  /** [[buildAndRegisterCosine]] with `partitioned = true` ALSO writes a
-    * cell-partitioned copy of the NORMALIZED table. The copy never
-    * serves the rewritten plan directly (it holds unit doubles, not
-    * the raw vectors the preserved score expression reads) — it exists
-    * so the similarity-floor range rewrite can build/read the `_radii`
-    * sidecar its lossless cell bound needs.
-    */
-  def buildAndRegisterCosine(spark: SparkSession, dataPath: String,
-                             c: Int, iters: Int, nprobe: Int, indexDir: String,
-                             partitioned: Boolean): Unit = {
-    import spark.implicits._
-    val normed = Ivf.normalized(spark.read.parquet(dataPath))
-    val cents = Ivf.kmeans(normed, c, iters)
-    val assignPath = s"$indexDir/assign"
-    Ivf.assignWith(normed, cents).write.mode("overwrite").parquet(assignPath)
-    val partPath = if (partitioned) {
-      val pp = s"$indexDir/cells"
-      Ivf.writePartitionedWith(normed, cents, pp, kind = "cosine")
-      Some(pp)
-    } else None
-    writeCatalogMeta(spark, indexDir, dataPath, cents, nprobe, partPath, "cosine")
-    register(dataPath, assignPath,
-      cents.as[(Long, Seq[Double])].collect().toSeq, nprobe, partPath, kind = "cosine")
-  }
-
-  /** Build and register a MIPS index: centroids/assignments over the
-    * AUGMENTED copy (d+1 dims, [[Ivf.augmented]]); queries zero-augment
-    * before probing. Same candidate-restriction contract as
-    * [[buildAndRegisterCosine]] — the raw dot-product score expression
-    * is preserved, nprobe = C is bit-exact.
-    */
-  def buildAndRegisterMips(spark: SparkSession, dataPath: String,
-                           c: Int, iters: Int, nprobe: Int, indexDir: String): Unit =
-    buildAndRegisterMips(spark, dataPath, c, iters, nprobe, indexDir,
-      partitioned = false)
-
-  /** [[buildAndRegisterMips]] with `partitioned = true` ALSO writes a
-    * cell-partitioned copy of the AUGMENTED table — like the cosine
-    * variant, solely so the dot-floor range rewrite can build/read the
-    * `_radii` sidecar (per-cell covering radius + max squared norm) its
-    * lossless bound needs.
-    */
-  def buildAndRegisterMips(spark: SparkSession, dataPath: String,
-                           c: Int, iters: Int, nprobe: Int, indexDir: String,
-                           partitioned: Boolean): Unit = {
-    import spark.implicits._
-    val aug = Ivf.augmented(spark.read.parquet(dataPath))
-    val cents = Ivf.kmeans(aug, c, iters)
-    val assignPath = s"$indexDir/assign"
-    Ivf.assignWith(aug, cents).write.mode("overwrite").parquet(assignPath)
-    val partPath = if (partitioned) {
-      val pp = s"$indexDir/cells"
-      Ivf.writePartitionedWith(aug, cents, pp, kind = "mips")
-      Some(pp)
-    } else None
-    writeCatalogMeta(spark, indexDir, dataPath, cents, nprobe, partPath, "mips")
-    register(dataPath, assignPath,
-      cents.as[(Long, Seq[Double])].collect().toSeq, nprobe, partPath, kind = "mips")
-  }
+  def clear(): Unit = registry.clear()
 }

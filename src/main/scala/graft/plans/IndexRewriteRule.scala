@@ -13,20 +13,21 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
 
 import graft.functions.{DotProductExpr, L2DistanceSqExpr}
+import graft.operators.{CellSnapshot, Ivf, Retrieval}
 
-/** Index-aware planning: rewrites the NAIVE exact top-k plan shapes
-  * over a table with a registered IVF index ([[IndexCatalog]]) into the
-  * IVF probe — in all three metrics. L2 plans (distance ascending,
-  * score contains the native [[L2DistanceSqExpr]]) take either the
-  * partitioned-copy swap or the assignment join; COSINE plans
-  * (similarity descending, cross [[DotProductExpr]] normalized by the
-  * scan side's own norm) and MIPS plans (similarity descending, bare
-  * cross [[DotProductExpr]]) take the assignment join against cells
-  * computed in the normalized / augmented geometry, with the query
-  * transformed the same way (unit-normalize / zero-augment) before
-  * probing. In every metric the ORIGINAL score expression is preserved
-  * — the rewrite only restricts the candidate set, so nprobe = C is
-  * bit-exact.
+/** Index-aware planning: rewrites the NAIVE exact top-k and range plan
+  * shapes over a table with a current IVF registration
+  * ([[IndexCatalog]]) into the IVF probe. The layout's recorded kind
+  * (`_graft_kind`) picks the metric it serves: L2 plans (distance
+  * ascending, score contains the native [[L2DistanceSqExpr]]) need a
+  * `plain` layout, COSINE plans (similarity descending, cross
+  * [[DotProductExpr]] normalized by the scan side's own norm) a `cosine`
+  * one and MIPS plans (bare cross [[DotProductExpr]]) a `mips` one,
+  * whose cells live in the normalized / augmented geometry the query is
+  * transformed into before probing. The ORIGINAL score expression is
+  * preserved — the rewrite only restricts the candidate set, so
+  * nprobe = C is bit-exact. The layout is read through its
+  * [[CellSnapshot.Snapshot]]; the rule never writes.
   *
   * Shape 1 — single query (TakeOrderedAndProject form):
   * {{{
@@ -49,19 +50,14 @@ import graft.functions.{DotProductExpr, L2DistanceSqExpr}
   *           Join Cross/Inner (no condition)
   * }}}
   *
-  * In both shapes the vector side gains an equi-join against the
-  * persisted `(vec_id, cell)` assignment table, and only rows whose
-  * cell is among the query's `nprobe` nearest centroids survive.
-  * Centroids are driver-resident literals (C·dim doubles), so the probe
-  * set is computed AT PLAN TIME by executing the query side — small by
-  * the same contract that makes it the broadcast side — and lands in
-  * the plan as:
-  *
-  *  - shape 1: `cell IN (<nprobe literals>)` — O(nprobe) membership per
-  *    row (partition-prunable when cell is a partition column), never
-  *    the O(C)-per-row distance rank;
-  *  - shape 2: an equi-join against a `(query_id, cell)` local relation
-  *    of Q·nprobe rows — hash semi-join, O(1) per scanned row.
+  * In both shapes only the vector rows whose cell is among their
+  * query's `nprobe` nearest centroids survive: the scan is swapped for
+  * the layout itself (L2) or joined with the layout's `(vec_id, cell)`
+  * projection. The probe set is computed AT PLAN TIME by executing the
+  * query side (small by the same contract that makes it the broadcast
+  * side): shape 1 lands as a `cell IN (<nprobe literals>)` partition
+  * filter, shape 2 as the union of probed cells plus an equi-join
+  * against a `(query_id, cell)` local relation of Q·nprobe rows.
   *
   * If the query side cannot be executed or is unexpectedly large, the
   * rewrite falls back to a per-row membership predicate (the CASE rank
@@ -75,13 +71,12 @@ import graft.functions.{DotProductExpr, L2DistanceSqExpr}
   *
   * Correctness contract: registering an index declares the
   * approximation budget — results are EXACT for `nprobe >= C`
-  * (spec-pinned) and standard IVF recall below that. The rule only
-  * fires on plans whose distance expression contains the engine's
-  * native [[L2DistanceSqExpr]] kernel (the Column API's `l2Distance`
-  * and the SQL `l2_distance` both lower to it), never on arbitrary
-  * user arithmetic.
+  * (spec-pinned) and standard IVF recall below that; a registration
+  * that is not current for the scanned table is never served. The rule
+  * only fires on the engine's native distance kernels (the Column API
+  * and SQL functions lower to them), never on arbitrary user arithmetic.
   *
-  * Wire up via `spark.experimental.extraOptimizations` or
+  * Wire up via [[IndexRewriteRule.setup]] on a live session, or
   * `GraftExtensions` (`spark.sql.extensions`).
   */
 case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
@@ -133,16 +128,12 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     * to the eligible cells is LOSSLESS — unlike the top-k shapes this
     * rewrite is exact for ANY nprobe setting, not an approximation
     * budget. Per-cell covering radii come from the layout's `_radii`
-    * sidecar ([[graft.operators.Ivf.ensureRadii]] — built once per
-    * layout, invalidated on membership change, ≤ C rows read fresh at
-    * every rewrite so a maintenance rebuild can never leave a stale
-    * bound in a plan). The threshold carries the score's rounding
-    * margin (`round(d, s) <= r` admits true distances up to
-    * `r + 10^-s`), and a squared-distance spelling compares against
-    * `sqrt(r)`. Requires the partitioned copy (that's where the radii
-    * live) and declines on a non-deterministic query side (the probe
-    * would prune against a different vector than the one the runtime
-    * join scores).
+    * sidecar, built with the registration. The threshold carries the
+    * score's rounding margin (`round(d, s) <= r` admits true distances
+    * up to `r + 10^-s`), and a squared-distance spelling compares
+    * against `sqrt(r)`. Declines on a non-deterministic query side (the
+    * probe would prune against a different vector than the one the
+    * runtime join scores).
     */
   private def tryRewriteRange(cond: Expression, join: Join): Option[LogicalPlan] =
     join match {
@@ -175,7 +166,6 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
           if score.references.exists(left.outputSet.contains) &&
             score.references.exists(right.outputSet.contains)
           (qAttr, idAttr, idx) <- indexedSides(score, left, right, metric)
-          pp <- idx.partitionedPath
           if !right.exists(_.expressions.exists(!_.deterministic))
           // single query AND batch alike: unlike top-k, range pruning
           // never needs the query ids — removing a cell is safe iff NO
@@ -190,18 +180,8 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
                 transformQuery(vecOf(r.getArray(0), qAttr.dataType), metric))).toOption
             case _ => None
           }
-          cells <- eligibleCellsUnion(queries, bound, idx, pp)
-          // the partitioned-copy swap serves the original score only
-          // when the copy holds raw vectors (L2); the cosine/MIPS
-          // copies store transformed vectors and exist for their
-          // `_radii` sidecar only — those take the assignment join
-          r <- (metric match {
-            case L2Metric =>
-              rewriteToPartitioned(join, left, qAttr, idx, pp, None, SingleCells(cells))
-            case _ => None
-          }).orElse(Some(rewriteWithAssignJoin(join, left, idAttr, qAttr, idx,
-            None, SingleCells(cells))))
-        } yield r
+          cells <- eligibleCellsUnion(queries, bound, idx)
+        } yield serve(join, left, idAttr, qAttr, idx, None, SingleCells(cells), metric)
       case _ => None
     }
 
@@ -297,24 +277,22 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
 
   /** The cells whose covering ball can intersect ANY executed query's
     * range — the lossless per-metric bound of [[RangeBound]], unioned
-    * across the batch. Radii (and per-cell max squared norms)
-    * are read FRESH from the layout sidecar each rewrite (≤ C rows —
-    * the bounded-sidecar contract; caching would risk serving a bound
-    * from before a membership-changing maintenance op). A centroid with
+    * across the batch. Radii (and per-cell max squared norms) are the
+    * snapshot's `_radii` rows (≤ C rows, memoized on the sidecar's file
+    * set; a maintenance write drops the sidecar and invalidates the
+    * registration, so a stale bound is never served). A centroid with
     * no radii row has no members — prunable outright; a NaN radius
     * (degenerate members, e.g. a vector with a NaN component) keeps
     * the cell — pruning must only ever drop provably-empty cells. None
-    * (decline the rewrite, keep the naive plan) if the sidecar can't
-    * be built/read.
+    * (decline the rewrite, keep the naive plan) without the sidecar.
     */
   private def eligibleCellsUnion(queries: Seq[Array[Double]], bound: RangeBound,
-                                 idx: IndexCatalog.IvfIndex, pp: String): Option[Seq[Long]] =
-    try {
-      graft.operators.Ivf.ensureRadii(spark, pp)
-      val radii = spark.read.parquet(s"$pp/_radii")
-        .select("cell", "radius", "normsq").collect()
-        .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-      Some(idx.centroids.collect { case (cid, v)
+                                 idx: Served): Option[Seq[Long]] =
+    idx.snap.sidecar("_radii").map { sc =>
+      val Seq(c, rd, ns) = Seq("cell", "radius", "normsq").map(sc.schema.fieldIndex)
+      val radii = sc.rows
+        .map(r => r.getAs[Number](c).longValue -> (r.getDouble(rd), r.getDouble(ns))).toMap
+      idx.cents.toSeq.collect { case (cid, v)
           if radii.contains(cid) && queries.exists { q =>
             val (rad, maxNormSq) = radii(cid)
             var s = 0.0; var i = 0
@@ -329,8 +307,8 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
                 val lb = dqc - rad
                 lb <= 0.0 || lb * lb <= qq + maxNormSq - 2.0 * t
             })
-          } => cid })
-    } catch { case scala.util.control.NonFatal(_) => None }
+          } => cid }
+    }
 
   // ------------------------------------------------------------------
   // Shape 1: single-query Sort+Limit
@@ -347,8 +325,8 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
         if head.direction == expectedDirection(metric) &&
           head.child.semanticEquals(distAlias.toAttribute)
         (qAttr, idAttr, idx) <- indexedSides(distAlias.child, left, right, metric)
-        r <- rewrite(join, left, idAttr, qAttr, idx, qidAttr = None, metric)
-      } yield r
+        probe <- computeProbe(right, qAttr, None, idx, metric)
+      } yield serve(join, left, idAttr, qAttr, idx, None, probe, metric)
     case _ => None
   }
 
@@ -391,8 +369,9 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
         case _ => None
       }
       (qAttr, idAttr, idx) <- indexedSides(distAlias.child, left, right, metric)
-      r <- rewrite(join, left, idAttr, qAttr, idx, Some(qidAttr), metric)
-    } yield w.copy(child = rebuildChild(Project(projList, r)))
+      probe <- computeProbe(right, qAttr, Some(qidAttr), idx, metric)
+    } yield w.copy(child = rebuildChild(Project(projList,
+      serve(join, left, idAttr, qAttr, idx, Some(qidAttr), probe, metric))))
   }
 
   /** Unwraps `w.child` down to `Project(projList, join)`, tolerating an
@@ -430,8 +409,9 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     case CosMetric | MipsMetric => Descending // highest similarity first
   }
 
-  private def kindOf(m: Metric): String = m match {
-    case L2Metric => "l2"
+  /** The layout kind (`_graft_kind`) that serves a metric. */
+  private def layoutKind(m: Metric): String = m match {
+    case L2Metric => "plain"
     case CosMetric => "cosine"
     case MipsMetric => "mips"
   }
@@ -460,16 +440,23 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
   // Shared probe machinery
   // ------------------------------------------------------------------
 
+  /** A current registration opened for serving: its layout's snapshot,
+    * the snapshot's serving centroids (doubles, ascending by id) and the
+    * probe budget.
+    */
+  private case class Served(snap: CellSnapshot.Snapshot,
+                            cents: Array[(Long, Array[Double])], nprobe: Int)
+
   /** From the distance expression and join sides: the query-vector
-    * attribute (right), the vec_id attribute (left), and the registered
-    * index of the left scan — only when the index's declared geometry
-    * matches the plan's metric (pruning a cosine query with an L2
-    * index's cells would be a different approximation than the one the
-    * registration declared).
+    * attribute (right), the vec_id attribute (left), and the layout
+    * registered for the left scan — only when it is current for the
+    * scanned table and its recorded kind serves the plan's metric
+    * (pruning a cosine query with an L2 layout's cells would be a
+    * different approximation than the one the registration declared).
     */
   private def indexedSides(distExpr: Expression, left: LogicalPlan, right: LogicalPlan,
                            metric: Metric)
-      : Option[(Attribute, Attribute, IndexCatalog.IvfIndex)] =
+      : Option[(Attribute, Attribute, Served)] =
     for {
       crossExpr <- distExpr.collectFirst {
         case e: L2DistanceSqExpr => e: Expression
@@ -481,49 +468,44 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       embAttr <- attrs.find(left.outputSet.contains)
       qAttr <- attrs.find(right.outputSet.contains)
       idAttr <- left.output.find(_.name == "vec_id")
-      path <- leafPath(left)
-      idx <- IndexCatalog.lookup(path)
-      if idx.kind == kindOf(metric)
-    } yield (qAttr, idAttr, idx)
+      table <- leafTable(left)
+      reg <- IndexCatalog.lookup(table)
+      snap = CellSnapshot.open(spark, reg.dir)
+      if snap.kind == layoutKind(metric)
+      cents <- scala.util.Try(Ivf.centroidVectors(Ivf.servingCentroids(snap))).toOption
+    } yield (qAttr, idAttr, Served(snap, cents, reg.nprobe))
 
   /** Plan-time probe set — computed ONCE per rewrite and shared by the
-    * partitioned-copy and assignment-join forms (executing the query
-    * side is a Spark job; running it twice per optimization would
-    * double the plan-time cost).
+    * layout-swap and layout-join forms (executing the query side is a
+    * Spark job; running it twice per optimization would double the
+    * plan-time cost).
     */
   private sealed trait Probe
   /** Single query: the nprobe nearest centroid ids. */
   private case class SingleCells(cells: Seq[Long]) extends Probe
-  /** Batch: the executed (query_id, query_vec) rows, all non-null. */
-  private case class BatchVecs(rows: Seq[(Any, Array[Double])]) extends Probe
+  /** Batch: each executed query id (all non-null) with its probed cells. */
+  private case class BatchCells(rows: Seq[(Any, Seq[Long])]) extends Probe
   /** Query side not executable at plan time → per-row predicate. */
   private case object PerRow extends Probe
 
-  /** The probe rewrite. Preferred form when the index carries a
-    * cell-PARTITIONED copy of the table: serve the scan from that copy
-    * with the probe as a PARTITION filter (unprobed cells' files are
-    * never opened) — a materialized-layout rewrite. Otherwise: join the
-    * original scan with the assignment table on vec_id and keep only
-    * rows whose cell is in their query's nprobe nearest centroids — as
-    * literal membership when the query side is executable at plan time,
-    * as a per-row predicate fallback otherwise. None (keep the naive
-    * plan) when the executed query side contains nulls.
+  /** Serve a probe ([[computeProbe]]) from the layout. Preferred form:
+    * swap the scan for the layout itself with the probe as a PARTITION
+    * filter (unprobed cells' files are never opened) — sound only when
+    * the layout holds the raw vectors the ORIGINAL score expression
+    * reads, i.e. the L2 (`plain`) layout. Otherwise (cosine/MIPS
+    * layouts hold transformed vectors; cells were computed in that space
+    * and the raw-vector score stays untouched), or when the scan shape
+    * cannot be swapped: join the original scan with the layout's
+    * `(vec_id, cell)` projection and keep only rows whose cell is in
+    * their query's nprobe nearest centroids — as literal membership when
+    * the query side is executable at plan time, as a per-row predicate
+    * fallback otherwise.
     */
-  private def rewrite(join: Join, left: LogicalPlan, idAttr: Attribute,
-                      qAttr: Attribute, idx: IndexCatalog.IvfIndex,
-                      qidAttr: Option[Attribute], metric: Metric): Option[LogicalPlan] =
-    computeProbe(join.right, qAttr, qidAttr, idx, metric).map { probe =>
-      // the partitioned-copy swap serves the ORIGINAL score expression
-      // only when the copy holds raw vectors — i.e. the L2 layout;
-      // cosine/MIPS copies are transformed, so those always take the
-      // assignment join (cells were computed in the transformed space,
-      // the raw-vector score expression stays untouched)
-      (metric match {
-        case L2Metric => idx.partitionedPath
-          .flatMap(pp => rewriteToPartitioned(join, left, qAttr, idx, pp, qidAttr, probe))
-        case _ => None
-      }).getOrElse(rewriteWithAssignJoin(join, left, idAttr, qAttr, idx, qidAttr, probe))
-    }
+  private def serve(join: Join, left: LogicalPlan, idAttr: Attribute, qAttr: Attribute,
+                    idx: Served, qidAttr: Option[Attribute], probe: Probe,
+                    metric: Metric): LogicalPlan =
+    (if (metric == L2Metric) rewriteToLayout(join, left, idx, qidAttr, probe) else None)
+      .getOrElse(rewriteWithLayoutJoin(join, left, idAttr, qAttr, idx, qidAttr, probe))
 
   /** Execute the query side (once). None — NO rewrite, original plan
     * kept — when any executed query id/vector is null or malformed: a
@@ -532,8 +514,7 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     * dropping those queries would be wrong results, not approximation.
     */
   private def computeProbe(right: LogicalPlan, qAttr: Attribute,
-                           qidAttr: Option[Attribute],
-                           idx: IndexCatalog.IvfIndex,
+                           qidAttr: Option[Attribute], idx: Served,
                            metric: Metric): Option[Probe] = {
     // The per-row predicate fallback exists only for L2 (probeFilter
     // ranks with L2DistanceSqExpr); for cosine/MIPS an inexecutable
@@ -550,8 +531,9 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       executeQuerySide(Project(Seq(qAttr), right), maxRows = 2) match {
         case Some(rows) if rows.length == 1 =>
           if (rows.head.isNullAt(0)) None
-          else scala.util.Try(vecOf(rows.head.getArray(0), qAttr.dataType)).toOption
-            .map(v => SingleCells(probedCells(transformQuery(v, metric), idx)))
+          else scala.util.Try(SingleCells(probedCells(Seq(
+            transformQuery(vecOf(rows.head.getArray(0), qAttr.dataType), metric)), idx).head))
+            .toOption
         case _ => fallback
       }
     case Some(qid) =>
@@ -561,10 +543,9 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       else executeQuerySide(Project(Seq(qid, qAttr), right), maxRows = 100000) match {
         case Some(rows) =>
           if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-          else scala.util.Try(rows.map(r =>
-              (r.get(0, qid.dataType),
-                transformQuery(vecOf(r.getArray(1), qAttr.dataType), metric))))
-            .toOption.map(BatchVecs(_))
+          else scala.util.Try(BatchCells(rows.map(_.get(0, qid.dataType)).zip(probedCells(
+            rows.map(r => transformQuery(vecOf(r.getArray(1), qAttr.dataType), metric)), idx))))
+            .toOption
         case None => fallback
       }
     }
@@ -588,24 +569,23 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       case MipsMetric => q :+ 0.0
     }
 
-  /** Replace the scan side with the cell-partitioned copy, filtered to
-    * the probed cells (a partition filter), with every original output
-    * attribute re-aliased onto the copy's columns under its ORIGINAL
-    * exprId — everything above the join is untouched. Sound when the
-    * scan side is a bare relation, a column-pruning projection, or a
-    * FILTER chain over one ("top-k among eligible rows"): collected
-    * filter conditions are re-applied above the re-aliasing Project,
-    * where the original exprIds resolve unchanged. Other shapes (or a
+  /** Replace the scan side with the layout, filtered to the probed
+    * cells (a partition filter), with every original output attribute
+    * re-aliased onto the layout's columns under its ORIGINAL exprId —
+    * everything above the join is untouched. Sound when the scan side
+    * is a bare relation, a column-pruning projection, or a FILTER chain
+    * over one ("top-k among eligible rows"): collected filter
+    * conditions are re-applied above the re-aliasing Project, where the
+    * original exprIds resolve unchanged. Other shapes (or a
     * non-deterministic eligibility predicate, which must evaluate
-    * against the ORIGINAL scan's rows) → None → assignment join.
+    * against the ORIGINAL scan's rows) → None → layout join.
     */
-  private def rewriteToPartitioned(join: Join, left: LogicalPlan, qAttr: Attribute,
-                                   idx: IndexCatalog.IvfIndex, pp: String,
-                                   qidAttr: Option[Attribute],
-                                   probe: Probe): Option[LogicalPlan] = {
+  private def rewriteToLayout(join: Join, left: LogicalPlan, idx: Served,
+                              qidAttr: Option[Attribute],
+                              probe: Probe): Option[LogicalPlan] = {
     val residual = prunableScanFilters(left).getOrElse(return None)
     if (residual.exists(!_.deterministic)) return None
-    val scan = spark.read.parquet(pp).queryExecution.analyzed
+    val scan = layoutScan(idx)
     val byName = scan.output.map(a => a.name -> a).toMap
     val cellAttr = byName.getOrElse("cell", return None)
     // re-alias every attribute the join OR the eligibility predicate
@@ -629,28 +609,26 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       case (None, SingleCells(cells)) =>
         val pruned = Filter(In(cellAttr, cells.map(typedLit(_, cellAttr.dataType))), scan)
         Some(join.copy(left = filteredShape(pruned, Nil)))
-      case (Some(qid), BatchVecs(qrows)) =>
-        val rel = probeRelation(qrows, idx, qid.dataType, cellAttr.dataType)
+      case (Some(qid), BatchCells(qrows)) =>
+        val rel = probeRelation(qrows, qid.dataType, cellAttr.dataType)
         // partition-prune to the UNION of all queries' probed cells,
         // then the per-query (query_id, cell) equi-join restores
         // per-query exactness of the probe set
-        val unionCells = rel.data.map(_.get(1, cellAttr.dataType)).distinct
-        val pruned = Filter(
-          In(cellAttr, unionCells.map(v => Literal.create(v, cellAttr.dataType))), scan)
+        val pruned = Filter(In(cellAttr, unionLiterals(qrows, cellAttr.dataType)), scan)
         val crossed = join.copy(left = filteredShape(pruned, Seq(cellAttr)))
         val Seq(pQid, pCell) = rel.output
         Some(Join(crossed, rel, Inner,
           Some(And(EqualTo(qid, pQid), EqualTo(cellAttr, pCell))), JoinHint.NONE))
       // PerRow has no literal cells — nothing to partition-prune with;
-      // fall through to the assignment join + per-row predicate
+      // fall through to the layout join + per-row predicate
       case _ => None
     }
   }
 
   /** The filter conditions along a prunable scan chain — Some(Nil) for
     * a bare relation or pure column-pruning projection, Some(conds)
-    * when Filters interpose, None for any other shape (the
-    * partitioned-copy swap would drop semantics).
+    * when Filters interpose, None for any other shape (the layout swap
+    * would drop semantics).
     */
   private def prunableScanFilters(plan: LogicalPlan): Option[Seq[Expression]] =
     plan match {
@@ -664,43 +642,56 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       case _ => None
     }
 
-  /** The in-place form: assignment-table join + probe predicate. */
-  private def rewriteWithAssignJoin(join: Join, left: LogicalPlan, idAttr: Attribute,
-                                    qAttr: Attribute, idx: IndexCatalog.IvfIndex,
+  /** The layout's live rows as an analyzed plan (a fresh relation per
+    * call, so two uses never share attribute ids).
+    */
+  private def layoutScan(idx: Served): LogicalPlan =
+    idx.snap.read("", "cell").queryExecution.analyzed
+
+  /** The layout-join form: the scan joins the layout's `(vec_id, cell)`
+    * projection — partition-pruned to the probed cells whenever they
+    * are literal — and keeps the rows of their query's probed cells.
+    */
+  private def rewriteWithLayoutJoin(join: Join, left: LogicalPlan, idAttr: Attribute,
+                                    qAttr: Attribute, idx: Served,
                                     qidAttr: Option[Attribute],
                                     probe: Probe): LogicalPlan = {
-    val assignRel = spark.read.parquet(idx.assignPath).queryExecution.analyzed
-    val aVecId = assignRel.output.find(_.name == "vec_id")
-      .getOrElse(sys.error(s"assignment table ${idx.assignPath} lacks vec_id"))
-    val aCell = assignRel.output.find(_.name == "cell")
-      .getOrElse(sys.error(s"assignment table ${idx.assignPath} lacks cell"))
-    val newLeft = Join(left, assignRel, Inner,
-      Some(EqualTo(idAttr, aVecId)), JoinHint.NONE)
-    val crossed = join.copy(left = newLeft)
+    val scan = layoutScan(idx)
+    val Seq(aVecId, aCell) = Seq("vec_id", "cell").map(n => scan.output.find(_.name == n)
+      .getOrElse(sys.error(s"layout ${idx.snap.dir} lacks $n")))
+    def crossed(cells: Option[Seq[Literal]]): LogicalPlan = {
+      val pruned = cells.fold(scan)(ls => Filter(In(aCell, ls), scan))
+      join.copy(left = Join(left, Project(Seq(aVecId, aCell), pruned), Inner,
+        Some(EqualTo(idAttr, aVecId)), JoinHint.NONE))
+    }
     (qidAttr, probe) match {
       case (None, SingleCells(cells)) => // single query: cell IN (<nprobe literals>)
-        Filter(In(aCell, cells.map(typedLit(_, aCell.dataType))), crossed)
-      case (Some(qid), BatchVecs(qrows)) =>
+        crossed(Some(cells.map(typedLit(_, aCell.dataType))))
+      case (Some(qid), BatchCells(qrows)) =>
         // batch: equi-join against the (query_id, cell) probe table
-        val rel = probeRelation(qrows, idx, qid.dataType, aCell.dataType)
+        val rel = probeRelation(qrows, qid.dataType, aCell.dataType)
         val Seq(pQid, pCell) = rel.output
-        Join(crossed, rel, Inner,
+        Join(crossed(Some(unionLiterals(qrows, aCell.dataType))), rel, Inner,
           Some(And(EqualTo(qid, pQid), EqualTo(aCell, pCell))), JoinHint.NONE)
-      case _ => Filter(probeFilter(qAttr, aCell, idx), crossed)
+      case _ => Filter(probeFilter(qAttr, aCell, idx), crossed(None))
     }
   }
+
+  /** The distinct probed cells of a batch, as `cellType` literals. */
+  private def unionLiterals(qrows: Seq[(Any, Seq[Long])], cellType: DataType): Seq[Literal] =
+    qrows.flatMap(_._2).distinct.map(typedLit(_, cellType))
 
   /** Materialize a batch probe set as a `(query_id, cell)` local
     * relation of Q·nprobe rows. `nullable = false` is sound:
     * [[computeProbe]] aborts the whole rewrite when the executed batch
     * contains null ids or vectors.
     */
-  private def probeRelation(qrows: Seq[(Any, Array[Double])], idx: IndexCatalog.IvfIndex,
+  private def probeRelation(qrows: Seq[(Any, Seq[Long])],
                             qidType: DataType, cellType: DataType): LocalRelation = {
     val qidOut = AttributeReference("graft_probe_qid", qidType, nullable = false)()
     val cellOut = AttributeReference("graft_probe_cell", cellType, nullable = false)()
-    val data = qrows.flatMap { case (qid, vec) =>
-      probedCells(vec, idx).map(c => InternalRow(qid, internalCell(c, cellType)))
+    val data = qrows.flatMap { case (qid, cells) =>
+      cells.map(c => InternalRow(qid, typedLit(c, cellType).value))
     }
     LocalRelation(Seq(qidOut, cellOut), data)
   }
@@ -724,30 +715,19 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     case _ => a.toFloatArray().map(_.toDouble)
   }
 
-  /** The query's nprobe nearest centroid ids, ranked exactly as
-    * `Ivf.probePlan` and `Ivf.topKWith`'s probe rank them: sqrt of the in-order (a-b)² double fold
-    * (same IEEE ops as [[L2DistanceSqExpr]] + SQRT), ascending, ties by
-    * centroid id.
+  /** Each query's nprobe nearest centroid ids, ranked by the fold every
+    * IVF probe uses ([[Ivf.rankCells]]: sqrt of the in-order squared
+    * difference fold, ascending, NaN last, ties by centroid id). It
+    * throws on a query whose dimension is not the layout's; callers run
+    * it inside a `Try` and decline.
     */
-  private def probedCells(q: Array[Double], idx: IndexCatalog.IvfIndex): Seq[Long] =
-    idx.centroids.map { case (cid, v) =>
-      var s = 0.0
-      var i = 0
-      val n = math.min(q.length, v.length)
-      while (i < n) { val d = q(i) - v(i); s += d * d; i += 1 }
-      (math.sqrt(s), cid)
-    }.sortBy(identity).take(idx.nprobe).map(_._2)
+  private def probedCells(qs: Seq[Array[Double]], idx: Served): Seq[Seq[Long]] =
+    Ivf.rankCells(idx.cents, qs.toArray, idx.nprobe, i => s"query $i").map(_.toSeq).toSeq
 
   private def typedLit(cid: Long, dt: DataType): Literal = dt match {
     case LongType => Literal(cid)
     case IntegerType => Literal(cid.toInt)
     case other => Literal.create(cid, other)
-  }
-
-  private def internalCell(cid: Long, dt: DataType): Any = dt match {
-    case LongType => cid
-    case IntegerType => cid.toInt
-    case other => sys.error(s"unsupported cell type $other")
   }
 
   /** `cell ∈ (query's nprobe nearest centroids)` as a row-level
@@ -761,11 +741,10 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     * codegen — fine at small C, which is why the executed probe-set
     * forms above are preferred.
     */
-  private def probeFilter(qAttr: Attribute, aCell: Attribute,
-                          idx: IndexCatalog.IvfIndex): Expression = {
-    val dists = idx.centroids.map { case (cid, v) =>
-      (Literal(cid),
-        L2DistanceSqExpr(qAttr, Literal.create(v, ArrayType(DoubleType))): Expression)
+  private def probeFilter(qAttr: Attribute, aCell: Attribute, idx: Served): Expression = {
+    val dists = idx.cents.toSeq.map { case (cid, v) =>
+      (typedLit(cid, aCell.dataType),
+        L2DistanceSqExpr(qAttr, Literal.create(v.toSeq, ArrayType(DoubleType))): Expression)
     }
     // distance from the query to the centroid of THIS row's cell
     val dCell = CaseKeyWhen(aCell, dists.flatMap { case (cidLit, d) => Seq(cidLit, d) })
@@ -819,15 +798,14 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     }
     if (!shapeOk ||
         agg.aggregateExpressions.count(!_.isInstanceOf[Attribute]) > 1) return None
-    postingSource(agg.child).flatMap { case (docId, term, path, residual) =>
+    postingSource(agg.child).flatMap { case (docId, term, table, residual) =>
       if (gIds != Set(docId.exprId, term.exprId)) None
       // any residual filter must be decidable from the posting keys
       // alone — a predicate touching a corpus column has no layout twin
       else if (residual.exists(f => !f.deterministic ||
           !f.references.subsetOf(AttributeSet(Seq(docId, term))))) None
-      else IndexCatalog.lookupTfidf(path).map { idx =>
-        val scan = spark.read.parquet(s"${idx.layoutDir}/postings")
-          .queryExecution.analyzed
+      else IndexCatalog.lookupTfidf(table).map { idx =>
+        val scan = Retrieval.readPostings(spark, idx.dir).queryExecution.analyzed
         val byName = scan.output.map(a => a.name -> a).toMap
         // re-key the stored posting columns under the ORIGINAL exprIds,
         // re-apply any residual (doc_id/term-only) filters, then
@@ -848,16 +826,16 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     }
   }
 
-  /** The `(doc_id attr, term attr, scan path, residual filters)` of a
+  /** The `(doc_id attr, term attr, scanned table, residual filters)` of a
     * posting-build child: attribute-only projections and Filters over
     * an inner `Generate(explode(split(text, ' ')))` over a pure
     * (filterless) chain to one parquet relation carrying `doc_id`.
     * Filters ABOVE the Generate are returned for the caller to
     * validate and re-apply; Filters BELOW it (on corpus columns)
-    * decline via [[pureScanPath]].
+    * decline via [[leafTable]] `pure`.
     */
   private def postingSource(plan: LogicalPlan)
-      : Option[(Attribute, Attribute, String, Seq[Expression])] =
+      : Option[(Attribute, Attribute, org.apache.spark.sql.DataFrame, Seq[Expression])] =
     plan match {
       case Project(pl, child) if pl.forall(_.isInstanceOf[AttributeReference]) =>
         postingSource(child)
@@ -871,26 +849,11 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
             Literal(-1, _))),
           _, false, _, Seq(term: Attribute), child) if sep.toString == " " =>
         for {
-          path <- pureScanPath(child)
+          table <- leafTable(child, pure = true)
           docId <- child.output.find(_.name == "doc_id")
-        } yield (docId, term, path, Nil)
+        } yield (docId, term, table, Nil)
       case _ => None
     }
-
-  /** Like [[leafPath]] but DECLINES on interposed Filters — the layout
-    * holds whole-corpus postings, so a pre-filtered build must not be
-    * served from it.
-    */
-  private def pureScanPath(plan: LogicalPlan): Option[String] = plan match {
-    case Project(pl, child) if pl.forall(_.isInstanceOf[AttributeReference]) =>
-      pureScanPath(child)
-    case SubqueryAlias(_, child) => pureScanPath(child)
-    case lr: LogicalRelation => lr.relation match {
-      case fs: HadoopFsRelation => fs.location.rootPaths.headOption.map(_.toString)
-      case _ => None
-    }
-    case _ => None
-  }
 
   /** Token-membership prune: each
     * `array_contains(split(text, ' '), 'term')` conjunct over a
@@ -919,33 +882,52 @@ case class IndexRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     val conjuncts = splitConjunctivePredicates(cond)
     val (tokenPreds, rest) = conjuncts.partition(isTokenPred)
     if (tokenPreds.isEmpty) return None
-    val path = leafPath(child).getOrElse(return None)
-    val idx = IndexCatalog.lookupTfidf(path).getOrElse(return None)
+    val table = leafTable(child).getOrElse(return None)
+    val idx = IndexCatalog.lookupTfidf(table).getOrElse(return None)
     val docId = child.output.find(_.name == "doc_id").getOrElse(return None)
     val rewritten = tokenPreds.foldLeft(child) { (acc, p) =>
       val termLit = p.asInstanceOf[ArrayContains].right
       // a FRESH read per term: two semi-joins must not share attr ids
-      val scan = spark.read.parquet(s"${idx.layoutDir}/postings")
-        .queryExecution.analyzed
+      val scan = Retrieval.readPostings(spark, idx.dir).queryExecution.analyzed
       val pDoc = scan.output.find(_.name == "doc_id")
-        .getOrElse(sys.error(s"${idx.layoutDir}/postings lacks doc_id"))
+        .getOrElse(sys.error(s"${idx.dir}/postings lacks doc_id"))
       val pTerm = scan.output.find(_.name == "term")
-        .getOrElse(sys.error(s"${idx.layoutDir}/postings lacks term"))
+        .getOrElse(sys.error(s"${idx.dir}/postings lacks term"))
       val pruned = Project(Seq(pDoc), Filter(EqualTo(pTerm, termLit), scan))
       Join(acc, pruned, LeftSemi, Some(EqualTo(docId, pDoc)), JoinHint.NONE)
     }
     Some(rest.reduceOption(And).fold(rewritten: LogicalPlan)(Filter(_, rewritten)))
   }
 
-  /** Root path of the single relation a Project/Filter chain scans. */
-  private def leafPath(plan: LogicalPlan): Option[String] = plan match {
-    case Project(_, child) => leafPath(child)
-    case Filter(_, child) => leafPath(child)
-    case SubqueryAlias(_, child) => leafPath(child)
+  /** The single file table a Project/Filter chain scans, as a frame
+    * over the plan's own relation (its file listing is the one the
+    * query runs on — the registry checks currency against it). `pure`
+    * DECLINES on Filters and computed projections: a TF-IDF layout holds
+    * whole-corpus postings, so a pre-filtered build must not be served
+    * from it.
+    */
+  private def leafTable(plan: LogicalPlan, pure: Boolean = false)
+      : Option[org.apache.spark.sql.DataFrame] = plan match {
+    case Project(pl, child) if !pure || pl.forall(_.isInstanceOf[AttributeReference]) =>
+      leafTable(child, pure)
+    case Filter(_, child) if !pure => leafTable(child, pure)
+    case SubqueryAlias(_, child) => leafTable(child, pure)
     case lr: LogicalRelation => lr.relation match {
-      case fs: HadoopFsRelation => fs.location.rootPaths.headOption.map(_.toString)
+      case fs: HadoopFsRelation => Some(spark.baseRelationToDataFrame(fs))
       case _ => None
     }
     case _ => None
+  }
+}
+
+object IndexRewriteRule {
+
+  /** Install the rule on `spark` once: a session that already runs it
+    * is left as it is (check, then append).
+    */
+  def setup(spark: SparkSession): Unit = synchronized {
+    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[IndexRewriteRule]))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ IndexRewriteRule(spark)
   }
 }

@@ -32,16 +32,7 @@ object AnnBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      // serving batches hold one heap per query per task: without this,
-      // ObjectHashAggregate falls back to SORT-based aggregation after
-      // 128 distinct query ids and re-buys the sort the heap removes
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
     if (args.contains("scale")) { scaleSmoke(spark); spark.stop(); return }
     if (args.contains("adc")) { adcFastSmoke(spark); spark.stop(); return }

@@ -33,8 +33,8 @@ class IndexRewriteSpec extends AnyFunSuite {
     java.nio.file.Files.createTempDirectory("idxrw_index").toString
 
   /** The naive user query: no index API in sight. */
-  private def naive(k: Int): DataFrame = {
-    val emb = spark.read.parquet(dataPath)
+  private def naive(k: Int, path: String = dataPath): DataFrame = {
+    val emb = spark.read.parquet(path)
     val q = emb.filter(col("vec_id") === 7)
       .select(perturbQuery(col("embedding")).as("query_vec"))
     emb.crossJoin(broadcast(q))
@@ -62,7 +62,7 @@ class IndexRewriteSpec extends AnyFunSuite {
 
   private def withRule[T](body: => T): T = {
     val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ IndexRewriteRule(spark)
+    IndexRewriteRule.setup(spark)
     try body finally spark.experimental.extraOptimizations = prev
   }
 
@@ -70,8 +70,8 @@ class IndexRewriteSpec extends AnyFunSuite {
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
   test("registered index at nprobe = C: probe plan fires and results equal exact") {
-    IndexCatalog.buildAndRegister(spark, dataPath, c = C, iters = 2,
-      nprobe = C, indexDir)
+    IndexCatalog.register(spark, dataPath, indexDir, c = C, iters = 2,
+      nprobe = C)
     val exact = rows(naive(10)) // rule not installed
     withRule {
       val df = naive(10)
@@ -89,8 +89,8 @@ class IndexRewriteSpec extends AnyFunSuite {
   }
 
   test("filtered naive shape: probe fires with the filter preserved, exact at nprobe = C") {
-    IndexCatalog.buildAndRegister(spark, dataPath, c = C, iters = 2,
-      nprobe = C, indexDir)
+    IndexCatalog.register(spark, dataPath, indexDir, c = C, iters = 2,
+      nprobe = C)
     val exact = rows(naiveFiltered(10)) // rule not installed
     assert(exact.forall(_._1 % 2 == 0) && exact.size === 10)
     withRule {
@@ -107,8 +107,8 @@ class IndexRewriteSpec extends AnyFunSuite {
 
   test("filtered shape over a partitioned-layout index: pruned scan keeps the filter; nprobe=2 equals the explicit filtered probe") {
     val pdir = java.nio.file.Files.createTempDirectory("idxrw_part_f").toString
-    IndexCatalog.buildAndRegister(spark, dataPath, c = C, iters = 2,
-      nprobe = C, pdir, partitioned = true)
+    IndexCatalog.register(spark, dataPath, pdir, c = C, iters = 2,
+      nprobe = C)
     val exact = rows(naiveFiltered(10)) // rule not installed
     withRule {
       val df = naiveFiltered(10)
@@ -121,12 +121,11 @@ class IndexRewriteSpec extends AnyFunSuite {
     }
     // nprobe = 2: the rewritten naive-filtered plan must equal the
     // EXPLICIT filtered serving path (Ivf.topKPartitioned(predicate))
-    IndexCatalog.register(dataPath, s"$pdir/assign",
-      IndexCatalog.lookup(dataPath).get.centroids, nprobe = 2, Some(s"$pdir/cells"))
+    IndexCatalog.register(spark, dataPath, pdir, c = C, iters = 2, nprobe = 2)
     val emb = spark.read.parquet(dataPath)
     val q = emb.filter(col("vec_id") === 7)
       .select(perturbQuery(col("embedding")).as("query_vec"))
-    val explicitProbe = rows(Ivf.topKPartitioned(spark, s"$pdir/cells", q, 10,
+    val explicitProbe = rows(Ivf.topKPartitioned(spark, pdir, q, 10,
       nprobe = 2, predicate = Some(col("vec_id") % 2 === 0)))
     withRule {
       assert(rows(naiveFiltered(10)) === explicitProbe,
@@ -136,8 +135,8 @@ class IndexRewriteSpec extends AnyFunSuite {
   }
 
   test("batch top-k window shape: probe join fires and equals exact at nprobe = C") {
-    IndexCatalog.buildAndRegister(spark, dataPath, c = C, iters = 2,
-      nprobe = C, indexDir)
+    IndexCatalog.register(spark, dataPath, indexDir, c = C, iters = 2,
+      nprobe = C)
     val emb = spark.read.parquet(dataPath)
     val qs = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
@@ -156,8 +155,8 @@ class IndexRewriteSpec extends AnyFunSuite {
 
   test("partitioned-layout index: naive plan becomes a partition-pruned scan of the copy") {
     val pdir = java.nio.file.Files.createTempDirectory("idxrw_part").toString
-    IndexCatalog.buildAndRegister(spark, dataPath, c = C, iters = 2,
-      nprobe = C, pdir, partitioned = true)
+    IndexCatalog.register(spark, dataPath, pdir, c = C, iters = 2,
+      nprobe = C)
     val exact = rows(naive(10)) // rule not installed
     withRule {
       val df = naive(10)
@@ -169,8 +168,7 @@ class IndexRewriteSpec extends AnyFunSuite {
       assert(rows(df) === exact, "nprobe = C must reproduce the exact result")
     }
     // nprobe = 2 must match the explicit probe semantics too
-    IndexCatalog.register(dataPath, s"$pdir/assign",
-      IndexCatalog.lookup(dataPath).get.centroids, nprobe = 2, Some(s"$pdir/cells"))
+    IndexCatalog.register(spark, dataPath, pdir, c = C, iters = 2, nprobe = 2)
     val emb = spark.read.parquet(dataPath)
     val q = emb.filter(col("vec_id") === 7)
       .select(perturbQuery(col("embedding")).as("query_vec"))
@@ -185,8 +183,8 @@ class IndexRewriteSpec extends AnyFunSuite {
 
   test("partitioned-layout index: batch shape prunes partitions and stays exact at nprobe = C") {
     val pdir = java.nio.file.Files.createTempDirectory("idxrw_part_b").toString
-    IndexCatalog.buildAndRegister(spark, dataPath, c = C, iters = 2,
-      nprobe = C, pdir, partitioned = true)
+    IndexCatalog.register(spark, dataPath, pdir, c = C, iters = 2,
+      nprobe = C)
     val emb = spark.read.parquet(dataPath)
     val qs = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
@@ -205,8 +203,8 @@ class IndexRewriteSpec extends AnyFunSuite {
   }
 
   test("batch shape at nprobe = 2 equals the explicit per-query IVF probe") {
-    IndexCatalog.buildAndRegister(spark, dataPath, c = C, iters = 2,
-      nprobe = 2, indexDir)
+    IndexCatalog.register(spark, dataPath, indexDir, c = C, iters = 2,
+      nprobe = 2)
     val emb = spark.read.parquet(dataPath)
     val cents = Ivf.kmeans(emb, C, 2)
     val qs = emb.filter(col("vec_id") < 5)
@@ -229,8 +227,8 @@ class IndexRewriteSpec extends AnyFunSuite {
   }
 
   test("registered index at nprobe = 2: rewrite matches the explicit Ivf probe") {
-    IndexCatalog.buildAndRegister(spark, dataPath, c = C, iters = 2,
-      nprobe = 2, indexDir)
+    IndexCatalog.register(spark, dataPath, indexDir, c = C, iters = 2,
+      nprobe = 2)
     val emb = spark.read.parquet(dataPath)
     val q = emb.filter(col("vec_id") === 7)
       .select(perturbQuery(col("embedding")).as("query_vec"))
@@ -244,8 +242,8 @@ class IndexRewriteSpec extends AnyFunSuite {
   }
 
   test("null query vector: rule declines, planning succeeds, result matches unrewritten") {
-    IndexCatalog.buildAndRegister(spark, dataPath, c = C, iters = 2,
-      nprobe = 2, indexDir)
+    IndexCatalog.register(spark, dataPath, indexDir, c = C, iters = 2,
+      nprobe = 2)
     val qdir = java.nio.file.Files.createTempDirectory("idxrw_nullq").toString
     Seq(Tuple1(null: Array[Double])).toDF("query_vec").write.parquet(s"$qdir/q.parquet")
     val q = spark.read.parquet(s"$qdir/q.parquet")
@@ -270,8 +268,8 @@ class IndexRewriteSpec extends AnyFunSuite {
   }
 
   test("batch shape with a null query id: rule declines and matches unrewritten") {
-    IndexCatalog.buildAndRegister(spark, dataPath, c = C, iters = 2,
-      nprobe = 2, indexDir)
+    IndexCatalog.register(spark, dataPath, indexDir, c = C, iters = 2,
+      nprobe = 2)
     val emb = spark.read.parquet(dataPath)
     val qdir = java.nio.file.Files.createTempDirectory("idxrw_nullqid").toString
     // one real query id + one NULL id (null forms its own window partition)
@@ -303,8 +301,8 @@ class IndexRewriteSpec extends AnyFunSuite {
   }
 
   /** The naive cosine top-k (similarity descending). */
-  private def naiveCosine(k: Int): DataFrame = {
-    val emb = spark.read.parquet(dataPath)
+  private def naiveCosine(k: Int, path: String = dataPath): DataFrame = {
+    val emb = spark.read.parquet(path)
     val q = emb.filter(col("vec_id") === 7)
       .select(perturbQuery(col("embedding")).as("query_vec"))
     emb.crossJoin(broadcast(q))
@@ -328,8 +326,8 @@ class IndexRewriteSpec extends AnyFunSuite {
 
   test("cosine index at nprobe = C: naive cosine plan fires and equals exact") {
     val cdir = java.nio.file.Files.createTempDirectory("idxrw_cos").toString
-    IndexCatalog.buildAndRegisterCosine(spark, dataPath, c = C, iters = 2,
-      nprobe = C, cdir)
+    IndexCatalog.register(spark, dataPath, cdir, c = C, iters = 2,
+      nprobe = C, kind = "cosine")
     val exact = rows(naiveCosine(10)) // rule not installed
     withRule {
       val df = naiveCosine(10)
@@ -345,8 +343,8 @@ class IndexRewriteSpec extends AnyFunSuite {
 
   test("MIPS index at nprobe = C: naive inner-product plan fires and equals exact") {
     val mdir = java.nio.file.Files.createTempDirectory("idxrw_mips").toString
-    IndexCatalog.buildAndRegisterMips(spark, dataPath, c = C, iters = 2,
-      nprobe = C, mdir)
+    IndexCatalog.register(spark, dataPath, mdir, c = C, iters = 2,
+      nprobe = C, kind = "mips")
     val exact = rows(naiveMips(10))
     withRule {
       val df = naiveMips(10)
@@ -360,8 +358,8 @@ class IndexRewriteSpec extends AnyFunSuite {
 
   test("cosine batch window shape fires and equals exact at nprobe = C") {
     val cdir = java.nio.file.Files.createTempDirectory("idxrw_cos_b").toString
-    IndexCatalog.buildAndRegisterCosine(spark, dataPath, c = C, iters = 2,
-      nprobe = C, cdir)
+    IndexCatalog.register(spark, dataPath, cdir, c = C, iters = 2,
+      nprobe = C, kind = "cosine")
     val emb = spark.read.parquet(dataPath)
     val qs = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
@@ -387,8 +385,8 @@ class IndexRewriteSpec extends AnyFunSuite {
 
   test("MIPS batch window shape fires and equals exact at nprobe = C") {
     val mdir = java.nio.file.Files.createTempDirectory("idxrw_mips_b").toString
-    IndexCatalog.buildAndRegisterMips(spark, dataPath, c = C, iters = 2,
-      nprobe = C, mdir)
+    IndexCatalog.register(spark, dataPath, mdir, c = C, iters = 2,
+      nprobe = C, kind = "mips")
     val emb = spark.read.parquet(dataPath)
     val qs = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
@@ -414,8 +412,8 @@ class IndexRewriteSpec extends AnyFunSuite {
 
   test("metric/kind mismatch declines: cosine plan over an L2 index and vice versa") {
     // L2 index registered — the cosine and MIPS shapes must NOT fire
-    IndexCatalog.buildAndRegister(spark, dataPath, c = C, iters = 2,
-      nprobe = 2, indexDir)
+    IndexCatalog.register(spark, dataPath, indexDir, c = C, iters = 2,
+      nprobe = 2)
     withRule {
       assert(!naiveCosine(10).queryExecution.optimizedPlan.toString.contains("cell#"),
         "cosine plan must not prune with L2-geometry cells")
@@ -425,8 +423,8 @@ class IndexRewriteSpec extends AnyFunSuite {
     IndexCatalog.unregister(dataPath)
     // cosine index registered — the L2 shape must NOT fire
     val cdir = java.nio.file.Files.createTempDirectory("idxrw_mm").toString
-    IndexCatalog.buildAndRegisterCosine(spark, dataPath, c = C, iters = 2,
-      nprobe = 2, cdir)
+    IndexCatalog.register(spark, dataPath, cdir, c = C, iters = 2,
+      nprobe = 2, kind = "cosine")
     withRule {
       assert(!naive(10).queryExecution.optimizedPlan.toString.contains("cell#"),
         "L2 plan must not prune with cosine-geometry cells")
@@ -434,36 +432,48 @@ class IndexRewriteSpec extends AnyFunSuite {
     IndexCatalog.unregister(dataPath)
   }
 
-  test("catalog restore: a new session's registry re-arms from the persisted _catalog sidecar") {
+  /** Every file under `dir` with its length and modification time. */
+  private def files(dir: String): Set[(String, Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    val s = java.nio.file.Files.walk(java.nio.file.Path.of(dir))
+    try s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map { f =>
+      (f.toString, java.nio.file.Files.size(f), java.nio.file.Files.getLastModifiedTime(f).toMillis)
+    }.toSet
+    finally s.close()
+  }
+
+  test("re-register after clear(): re-arms over the committed layout, no writes") {
     val rdir = java.nio.file.Files.createTempDirectory("idxrw_restore").toString
-    IndexCatalog.buildAndRegister(spark, dataPath, c = C, iters = 2,
-      nprobe = C, rdir, partitioned = true)
+    IndexCatalog.register(spark, dataPath, rdir, c = C, iters = 2, nprobe = C)
     val exact = rows(naive(10))
     // simulate a fresh session: the in-memory registry is wiped, the
-    // on-disk layouts/catalog survive
+    // committed layout survives
     IndexCatalog.clear()
     withRule {
       assert(!naive(10).queryExecution.optimizedPlan.toString.contains("cell#"),
         "wiped registry: the rewrite must not fire")
     }
-    val restored = IndexCatalog.restore(spark, rdir)
-    assert(restored === dataPath)
+    val before = files(rdir)
+    IndexCatalog.register(spark, dataPath, rdir, c = C, iters = 2, nprobe = C)
+    assert(files(rdir) === before, "re-registering a committed layout must not write")
     withRule {
       val df = naive(10)
       assert(df.queryExecution.executedPlan.toString.contains("PartitionFilters"),
-        "restored registration must serve the partitioned-copy rewrite")
-      assert(rows(df) === exact, "restored index at nprobe = C is still exact")
+        "re-armed registration must serve the layout swap")
+      assert(rows(df) === exact, "re-armed index at nprobe = C is still exact")
     }
-    // restore with an nprobe override = the serving-knob contract
-    IndexCatalog.restore(spark, rdir, nprobeOverride = Some(2))
-    assert(IndexCatalog.lookup(dataPath).get.nprobe === 2)
-    // cosine kind survives the round trip too
+    // nprobe is a serving knob: another budget reuses the layout as is
+    IndexCatalog.register(spark, dataPath, rdir, c = C, iters = 2, nprobe = 2)
+    assert(IndexCatalog.lookup(spark.read.parquet(dataPath)).get.nprobe === 2)
+    assert(files(rdir) === before, "a new nprobe must not rebuild the layout")
+    // the cosine kind is recorded by the layout and survives the round trip too
     val cdir = java.nio.file.Files.createTempDirectory("idxrw_restore_c").toString
-    IndexCatalog.buildAndRegisterCosine(spark, dataPath, c = C, iters = 2,
-      nprobe = C, cdir)
+    IndexCatalog.register(spark, dataPath, cdir, c = C, iters = 2, nprobe = C, kind = "cosine")
     IndexCatalog.clear()
-    IndexCatalog.restore(spark, cdir)
-    assert(IndexCatalog.lookup(dataPath).get.kind === "cosine")
+    val cosBefore = files(cdir)
+    IndexCatalog.register(spark, dataPath, cdir, c = C, iters = 2, nprobe = C, kind = "cosine")
+    assert(files(cdir) === cosBefore)
+    assert(Ivf.layoutKind(spark, IndexCatalog.lookup(spark.read.parquet(dataPath)).get.dir) === "cosine")
     IndexCatalog.unregister(dataPath)
   }
 
@@ -493,8 +503,8 @@ class IndexRewriteSpec extends AnyFunSuite {
 
   test("range shape: triangle-pruned partition scan fires, skips far cells, stays exact") {
     val pdir = java.nio.file.Files.createTempDirectory("idxrw_range_idx").toString
-    IndexCatalog.buildAndRegister(spark, blobPath, c = 4, iters = 2,
-      nprobe = 1, pdir, partitioned = true)
+    IndexCatalog.register(spark, blobPath, pdir, c = 4, iters = 2,
+      nprobe = 1)
     val exact = rows(naiveRange(blobPath, 50.0)) // rule not installed
     assert(exact.nonEmpty && exact.forall(_._1 < 100), "fixture: ball covers blob A only")
     withRule {
@@ -519,8 +529,8 @@ class IndexRewriteSpec extends AnyFunSuite {
 
   test("BATCH range shape: union-of-eligible-cells pruning fires, stays exact, skips unneeded blobs") {
     val pdir = java.nio.file.Files.createTempDirectory("idxrw_range_batch").toString
-    IndexCatalog.buildAndRegister(spark, blobPath, c = 4, iters = 2,
-      nprobe = 1, pdir, partitioned = true)
+    IndexCatalog.register(spark, blobPath, pdir, c = 4, iters = 2,
+      nprobe = 1)
     def naiveBatch(ids: Seq[Long]): DataFrame = {
       val emb = spark.read.parquet(blobPath)
       val qs = emb.filter(col("vec_id").isin(ids: _*))
@@ -556,21 +566,10 @@ class IndexRewriteSpec extends AnyFunSuite {
     IndexCatalog.unregister(blobPath)
   }
 
-  test("range shape without a partitioned copy declines (radii live in the layout)") {
-    val idir = java.nio.file.Files.createTempDirectory("idxrw_range_noidx").toString
-    IndexCatalog.buildAndRegister(spark, blobPath, c = 4, iters = 2,
-      nprobe = 4, idir) // partitioned = false
-    withRule {
-      val opt = naiveRange(blobPath, 50.0).queryExecution.optimizedPlan.toString
-      assert(!opt.contains("cell#"), s"no radii sidecar -> keep the naive plan:\n$opt")
-    }
-    IndexCatalog.unregister(blobPath)
-  }
-
   test("range must-not-fire: outside-radius, non-literal threshold, unregistered scan") {
     val pdir = java.nio.file.Files.createTempDirectory("idxrw_range_neg").toString
-    IndexCatalog.buildAndRegister(spark, blobPath, c = 4, iters = 2,
-      nprobe = 4, pdir, partitioned = true)
+    IndexCatalog.register(spark, blobPath, pdir, c = 4, iters = 2,
+      nprobe = 4)
     withRule {
       val emb = spark.read.parquet(blobPath)
       val q = emb.filter(col("vec_id") === 0)
@@ -637,8 +636,8 @@ class IndexRewriteSpec extends AnyFunSuite {
 
   test("cosine similarity-floor shape: normalized-ball pruning fires, skips far cells, stays exact") {
     val cdir = java.nio.file.Files.createTempDirectory("idxrw_cosr_idx").toString
-    IndexCatalog.buildAndRegisterCosine(spark, angularPath, c = 4, iters = 2,
-      nprobe = 1, cdir, partitioned = true)
+    IndexCatalog.register(spark, angularPath, cdir, c = 4, iters = 2,
+      nprobe = 1, kind = "cosine")
     val exact = rows(naiveCosineFloor(angularPath, 0.9)) // rule not installed
     assert(exact.nonEmpty && exact.forall(_._1 < 100),
       "fixture: the floor admits blob A only")
@@ -646,7 +645,7 @@ class IndexRewriteSpec extends AnyFunSuite {
       val df = naiveCosineFloor(angularPath, 0.9)
       val opt = df.queryExecution.optimizedPlan.toString
       assert(opt.contains("cell#"), s"no assignment join in:\n$opt")
-      val eligible = inListSize(opt, "cell#")
+      val eligible = inListSize(opt, "IN (")
       assert(eligible >= 1 && eligible < 4,
         s"normalized-space ball should skip blob-B cells (eligible = $eligible of 4):\n$opt")
       // lossless: exact at ANY nprobe (registered with nprobe = 1)
@@ -657,8 +656,8 @@ class IndexRewriteSpec extends AnyFunSuite {
 
   test("BATCH cosine floor: union pruning over executed query vectors stays exact") {
     val cdir = java.nio.file.Files.createTempDirectory("idxrw_cosr_b").toString
-    IndexCatalog.buildAndRegisterCosine(spark, angularPath, c = 4, iters = 2,
-      nprobe = 1, cdir, partitioned = true)
+    IndexCatalog.register(spark, angularPath, cdir, c = 4, iters = 2,
+      nprobe = 1, kind = "cosine")
     def naiveBatch(ids: Seq[Long]): DataFrame = {
       val emb = spark.read.parquet(angularPath)
       val qs = emb.filter(col("vec_id").isin(ids: _*))
@@ -713,8 +712,8 @@ class IndexRewriteSpec extends AnyFunSuite {
 
   test("MIPS dot-floor shape: augmented-space pruning fires, skips low-norm cells, stays exact") {
     val mdir = java.nio.file.Files.createTempDirectory("idxrw_mipsr_idx").toString
-    IndexCatalog.buildAndRegisterMips(spark, normPath, c = 4, iters = 2,
-      nprobe = 1, mdir, partitioned = true)
+    IndexCatalog.register(spark, normPath, mdir, c = 4, iters = 2,
+      nprobe = 1, kind = "mips")
     val exact = rows(naiveDotFloor(normPath, 5000.0)) // rule not installed
     assert(exact.nonEmpty && exact.forall(_._1 >= 100),
       "fixture: the floor admits blob B only")
@@ -722,7 +721,7 @@ class IndexRewriteSpec extends AnyFunSuite {
       val df = naiveDotFloor(normPath, 5000.0)
       val opt = df.queryExecution.optimizedPlan.toString
       assert(opt.contains("cell#"), s"no assignment join in:\n$opt")
-      val eligible = inListSize(opt, "cell#")
+      val eligible = inListSize(opt, "IN (")
       assert(eligible >= 1 && eligible < 4,
         s"dot bound should skip low-norm cells (eligible = $eligible of 4):\n$opt")
       assert(rows(df) === exact, "pruned dot floor must equal the full scan")
@@ -732,8 +731,8 @@ class IndexRewriteSpec extends AnyFunSuite {
 
   test("BATCH MIPS floor: union pruning over executed query vectors stays exact") {
     val mdir = java.nio.file.Files.createTempDirectory("idxrw_mipsr_b").toString
-    IndexCatalog.buildAndRegisterMips(spark, normPath, c = 4, iters = 2,
-      nprobe = 1, mdir, partitioned = true)
+    IndexCatalog.register(spark, normPath, mdir, c = 4, iters = 2,
+      nprobe = 1, kind = "mips")
     def naiveBatch(ids: Seq[Long]): DataFrame = {
       val emb = spark.read.parquet(normPath)
       val qs = emb.filter(col("vec_id").isin(ids: _*))
@@ -760,19 +759,19 @@ class IndexRewriteSpec extends AnyFunSuite {
   test("floor must-not-fire: kind mismatch, below-floor direction, shifted score, non-literal") {
     // L2 index registered: neither floor shape may prune with its cells
     val ldir = java.nio.file.Files.createTempDirectory("idxrw_floor_mm").toString
-    IndexCatalog.buildAndRegister(spark, angularPath, c = 4, iters = 2,
-      nprobe = 4, ldir, partitioned = true)
+    IndexCatalog.register(spark, angularPath, ldir, c = 4, iters = 2,
+      nprobe = 4)
     withRule {
       assert(!naiveCosineFloor(angularPath, 0.9).queryExecution.optimizedPlan
         .toString.contains("cell#"), "cosine floor must not use L2 cells")
     }
     IndexCatalog.unregister(angularPath)
     val cdir = java.nio.file.Files.createTempDirectory("idxrw_floor_neg").toString
-    IndexCatalog.buildAndRegisterCosine(spark, angularPath, c = 4, iters = 2,
-      nprobe = 4, cdir, partitioned = true)
+    IndexCatalog.register(spark, angularPath, cdir, c = 4, iters = 2,
+      nprobe = 4, kind = "cosine")
     val mdir2 = java.nio.file.Files.createTempDirectory("idxrw_floor_negm").toString
-    IndexCatalog.buildAndRegisterMips(spark, normPath, c = 4, iters = 2,
-      nprobe = 4, mdir2, partitioned = true)
+    IndexCatalog.register(spark, normPath, mdir2, c = 4, iters = 2,
+      nprobe = 4, kind = "mips")
     withRule {
       val emb = spark.read.parquet(angularPath)
       val q = emb.filter(col("vec_id") === 0)
@@ -808,8 +807,8 @@ class IndexRewriteSpec extends AnyFunSuite {
   }
 
   test("descending sort (farthest-first) is NOT rewritten") {
-    IndexCatalog.buildAndRegister(spark, dataPath, c = C, iters = 2,
-      nprobe = 2, indexDir)
+    IndexCatalog.register(spark, dataPath, indexDir, c = C, iters = 2,
+      nprobe = 2)
     withRule {
       val emb = spark.read.parquet(dataPath)
       val q = emb.filter(col("vec_id") === 7)
@@ -824,6 +823,67 @@ class IndexRewriteSpec extends AnyFunSuite {
         "probe rewrite is only sound for nearest-first top-k")
     }
     IndexCatalog.unregister(dataPath)
+  }
+
+  // ------------------------------------------------------------------
+  // Currency: a registration serves only the table it was built from
+  // ------------------------------------------------------------------
+
+  /** A 200-row table at `path` (overwritten in place): the query row
+    * `vec_id = 7` plus 199 more rows, ids counting from `firstId`,
+    * vectors drawn from `seed`.
+    */
+  private def writeTable(path: String, seed: Int, firstId: Long): Unit =
+    (7L +: (firstId until firstId + 200L).filterNot(_ == 7L)).take(200).map { i =>
+      val rnd = new scala.util.Random(i * 31 + seed)
+      (i, Array.fill(8)(rnd.nextFloat() * 100f))
+    }.toDF("vec_id", "embedding").write.mode("overwrite").parquet(path)
+
+  /** Register `kind` over a fresh table at nprobe = C, check the rule
+    * serves it, rewrite the table in place (same path and row count,
+    * new vectors and ids) and return the results of `naiveAt` on it
+    * with the rule installed, and on an unregistered copy of it.
+    */
+  private def afterRewrite(kind: String, naiveAt: String => DataFrame)
+      : (Seq[(Long, Double)], Seq[(Long, Double)]) = {
+    val dir = java.nio.file.Files.createTempDirectory(s"idxrw_cur_$kind").toString
+    val path = s"$dir/emb.parquet"
+    writeTable(path, seed = 0, firstId = 0L)
+    IndexCatalog.register(spark, path, s"$dir/index", c = C, iters = 2, nprobe = C, kind = kind)
+    withRule(assert(naiveAt(path).queryExecution.optimizedPlan.toString.contains("cell#"),
+      s"the $kind registration must serve the table it was built from"))
+    writeTable(path, seed = 1, firstId = 1000L)
+    writeTable(s"$dir/copy.parquet", seed = 1, firstId = 1000L)
+    try (withRule(rows(naiveAt(path))), rows(naiveAt(s"$dir/copy.parquet")))
+    finally IndexCatalog.unregister(path)
+  }
+
+  test("currency: an L2 layout swap after an in-place table rewrite equals exact") {
+    val (got, exact) = afterRewrite("l2", naive(10, _))
+    assert(got === exact, "a stale layout must not serve the rewritten table")
+  }
+
+  test("currency: a cosine layout join after an in-place table rewrite equals exact") {
+    val (got, exact) = afterRewrite("cosine", naiveCosine(10, _))
+    assert(got === exact, "a stale layout must not serve the rewritten table")
+  }
+
+  test("currency: an insert into the registered layout declines the rewrite") {
+    val dir = java.nio.file.Files.createTempDirectory("idxrw_cur_ins").toString
+    val path = s"$dir/emb.parquet"
+    writeTable(path, seed = 0, firstId = 0L)
+    IndexCatalog.register(spark, path, s"$dir/index", c = C, iters = 2, nprobe = C)
+    val exact = rows(naive(10, path))
+    // every row again under a new id: served, they would tie into the top-10
+    Ivf.insertInto(spark, s"$dir/index", spark.read.parquet(path)
+      .select((col("vec_id") + 5000L).as("vec_id"), col("embedding")))
+    withRule {
+      val df = naive(10, path)
+      assert(!df.queryExecution.optimizedPlan.toString.contains("cell#"),
+        "a layout changed by maintenance is no longer the table's")
+      assert(rows(df) === exact)
+    }
+    IndexCatalog.unregister(path)
   }
 
   // ------------------------------------------------------------------
@@ -864,7 +924,7 @@ class IndexRewriteSpec extends AnyFunSuite {
     def naiveTfidf = graft.operators.Retrieval.tfidfTopK(
       spark.read.parquet(docsPath), Seq("spark", "dup"), 3)
     val want = lexRows(naiveTfidf) // unregistered, unrewritten
-    IndexCatalog.registerTfidf(docsPath, layout)
+    IndexCatalog.registerTfidf(spark, docsPath, layout)
     try withRule {
       val df = naiveTfidf
       val opt = df.queryExecution.optimizedPlan.toString
@@ -885,7 +945,7 @@ class IndexRewriteSpec extends AnyFunSuite {
       .select("doc_id", "n_chars").orderBy("doc_id")
     val want = naiveContains.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(want === Seq((2L, 27L), (5L, 25L)))
-    IndexCatalog.registerTfidf(docsPath, layout)
+    IndexCatalog.registerTfidf(spark, docsPath, layout)
     try withRule {
       val df = naiveContains
       val opt = df.queryExecution.optimizedPlan.toString
@@ -917,7 +977,7 @@ class IndexRewriteSpec extends AnyFunSuite {
         .queryExecution.optimizedPlan.toString
       assert(!opt.contains("postings"), s"no registration → no rewrite:\n$opt")
     }
-    IndexCatalog.registerTfidf(docsPath, layout)
+    IndexCatalog.registerTfidf(spark, docsPath, layout)
     try withRule {
       // a pre-filtered corpus's postings are NOT the layout's — decline
       val filteredBuild = spark.read.parquet(docsPath)
@@ -934,6 +994,27 @@ class IndexRewriteSpec extends AnyFunSuite {
       assert(scanPaths(build).exists(_.contains("tfidf/postings")))
       assert(build.filter(col("doc_id") === 3L && col("term") === "dup")
         .head.getLong(2) === 2L)
+    } finally IndexCatalog.unregisterTfidf(docsPath)
+  }
+
+  test("currency: naive tf-idf after an in-place docs rewrite equals unrewritten") {
+    val dir = java.nio.file.Files.createTempDirectory("idxrw_cur_lex").toString
+    val docsPath = s"$dir/docs.parquet"
+    def writeDocs(texts: Seq[String], path: String = docsPath): Unit =
+      texts.zipWithIndex.map { case (t, i) => (i.toLong + 1, t) }.toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(path)
+    def naiveTfidf(path: String = docsPath) = graft.operators.Retrieval.tfidfTopK(
+      spark.read.parquet(path), Seq("spark", "dup"), 3)
+    writeDocs(Seq("spark join scan", "dup vector spark", "vector dup dup", "plain words", "spark mix"))
+    IndexCatalog.registerTfidf(spark, docsPath, s"$dir/tfidf")
+    try {
+      withRule(assert(scanPaths(naiveTfidf()).exists(_.contains("tfidf/postings")),
+        "the registration must serve the documents it was built from"))
+      val rewritten = Seq("plain words", "spark spark dup", "mix only", "dup dup dup", "vector scan")
+      writeDocs(rewritten)
+      writeDocs(rewritten, s"$dir/copy.parquet")
+      withRule(assert(lexRows(naiveTfidf()) === lexRows(naiveTfidf(s"$dir/copy.parquet")),
+        "a stale posting layout must not serve the rewritten documents"))
     } finally IndexCatalog.unregisterTfidf(docsPath)
   }
 }
