@@ -3605,13 +3605,11 @@ object SparkEntry {
     "q_corpus_pipeline" -> ((s, dir) =>
       CorpusPipeline.curate(Tables.documents(s, dir), lang = "en",
         minQuality = 0.4, jaccardThreshold = 0.5)),
-    // Per-stage pipeline accounting (curateStats): the DETERMINISTIC
-    // columns — stage selectivities as the gate checks them; the
-    // shuffle-byte column is a runtime measurement and stays out.
+    // Per-stage pipeline accounting (curateStats): stage selectivities
+    // as the gate checks them.
     "q_curate_stats" -> ((s, dir) =>
       CorpusPipeline.curateStats(Tables.documents(s, dir), lang = "en",
-          minQuality = 0.4, jaccardThreshold = 0.5, measureShuffle = false)
-        .select(col("stage"), col("rows_in"), col("rows_out"), col("rows_changed"))),
+        minQuality = 0.4, jaccardThreshold = 0.5)),
     // The full curation pipeline WITH the PII stage wired in: inject
     // deterministic PII (the q_pii_* formula), filter, REDACT between
     // quality filtering and dedup, dedup on the redacted bytes, count
@@ -4960,9 +4958,8 @@ object SparkEntry {
       s"""$duckCurationCtes
           SELECT source, count(*) AS n_docs, CAST(sum(len(t)) AS BIGINT) AS n_tokens
           FROM kept3 GROUP BY source""",
-    // per-stage accounting over the SAME CTE chain: the deterministic
-    // columns of CorpusPipeline.curateStats (shuffle bytes are a
-    // measurement, not a query result — excluded from the gate)
+    // per-stage accounting over the SAME CTE chain: the columns of
+    // CorpusPipeline.curateStats
     "q_curate_stats" ->
       s"""$duckCurationCtes,
           c0 AS (SELECT count(*) AS n FROM documents),

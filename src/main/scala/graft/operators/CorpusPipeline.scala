@@ -106,139 +106,63 @@ object CorpusPipeline {
         count(lit(1)).as("n_docs"),
         sum(size(TextFunctions.tokens(col("text"))).cast("long")).as("n_tokens"))
 
-  /** Per-stage cost/selectivity accounting for [[curate]]: one row per
-    * pipeline stage — `(stage, rows_in, rows_out, rows_changed,
-    * shuffle_write_bytes)` — the numbers a pipeline owner tunes with
-    * (which stage kills how many docs, and what each one pays in
-    * shuffle). Selectivities come from per-stage counts over the SAME
-    * deterministic stage predicates the pipeline runs; shuffle bytes
-    * come from a task-metrics listener around each stage's measurement
-    * block (the `AnnBench` smoke pattern, promoted to an operator API —
-    * it sees every job in the block, including checkpoint writes and
-    * the clustering loop's iterations, which per-plan metric inspection
-    * misses behind lineage truncation).
+  /** Per-stage selectivity accounting for [[curate]]: one row per
+    * pipeline stage — `(stage, rows_in, rows_out, rows_changed)` — the
+    * numbers a pipeline owner tunes with (which stage kills how many
+    * docs). The counts come from the SAME deterministic stage
+    * predicates the pipeline runs; `rows_changed` is `rows_in −
+    * rows_out` for filter/dedup stages and the count of DOCUMENTS
+    * REWRITTEN for the (row-preserving) PII stage.
     *
-    * Attribution notes, in the column semantics:
-    *  - `rows_changed` is `rows_in − rows_out` for filter/dedup stages
-    *    and the count of DOCUMENTS REWRITTEN for the (row-preserving)
-    *    PII stage;
-    *  - narrow stages (lang, quality, PII) legitimately report ~0
-    *    shuffle — they fuse into the scan at run time; their measured
-    *    bytes are just the count aggregation's partial-agg exchange;
-    *  - the exact-dedup survivors are eagerly checkpointed INSIDE the
-    *    exact stage's measurement block, and the near-dup block reads
-    *    that checkpoint — so each block's measured bytes are its own
-    *    (no prefix re-run, no cross-stage subtraction needed).
-    *
-    * This is a DIAGNOSTIC pass: it re-executes stage prefixes (narrow
-    * prefixes re-scan but add no shuffle) and runs one counting job per
-    * stage. Run it at a sampled SF to budget a production run, not
-    * inside one.
+    * ONE tokenization pass over the corpus: the per-doc language and
+    * quality flags are projected once, with the text of dropped rows
+    * blanked, so the cut caches flags for the whole corpus but text
+    * only for the survivor working set. One conditional-count scan of
+    * the cut reads the narrow-stage counts (and the PII rewrite
+    * count); the dedup stages read the cut's survivors through the
+    * same exact-dedup survivor cut [[curatedDocs]] makes, so the raw
+    * corpus is scanned and tokenized exactly once. Kept in lockstep
+    * with [[curatedDocs]]'s body (that equality is spec-pinned against
+    * the declared counts).
     */
   def curateStats(documents: DataFrame, lang: String, minQuality: Double,
                   jaccardThreshold: Double, maxDf: Int = 10000,
-                  redactPii: Boolean = false,
-                  measureShuffle: Boolean = true): DataFrame = {
+                  redactPii: Boolean = false): DataFrame = {
     val spark = documents.sparkSession
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    // `measureShuffle = false` skips the listener AND the per-block
-    // drain sleeps and reports -1 bytes ("not measured") — for callers
-    // that only consume the deterministic selectivity columns (the
-    // declared gate query), where paying 0.5 s of drain per stage to
-    // measure a column they drop would be pure overhead. It also FUSES
-    // the three narrow-stage counts (and the PII rewrite count) into
-    // ONE conditional-count scan: byte attribution is the only reason
-    // to run them as separate jobs, and this mode doesn't attribute.
-    if (measureShuffle) spark.sparkContext.addSparkListener(listener)
-    try {
-      def block(f: => Long): (Long, Long) = {
-        if (!measureShuffle) return (f, -1L)
-        val s0 = shuffleBytes.get()
-        val n = f
-        Thread.sleep(500) // straggler task-end events drain async
-        (n, shuffleBytes.get() - s0)
-      }
-      val toks = TextFunctions.tokens(col("text"))
-      val langOk = TextAnalysis.langPredCol(toks) === lang
-      val qualOk = langOk && TextAnalysis.qualityCol(toks, col("n_chars")) >= minQuality
-      val kept1raw = filtered(documents, lang, minQuality)
-      var kept1Src = kept1raw
-      val (n0, n1, b1, n2, b2, nPii, bPii) =
-        if (measureShuffle) {
-          val (a0, _) = block(documents.count())
-          val (a1, c1) = block(documents.filter(langOk).count())
-          val (a2, c2) = block(kept1raw.count())
-          val (aP, cP) =
-            if (redactPii)
-              block(kept1raw.filter(TextAnalysis.redactCol(col("text")) =!= col("text")).count())
-            else (0L, 0L)
-          (a0, a1, c1, a2, c2, aP, cP)
-        } else {
-          // ONE tokenization pass over the corpus (r18): the fused
-          // count scan and the exact-dedup stage each re-tokenized
-          // every document (the lang/quality predicates are token
-          // expressions). Project the per-doc flags ONCE, blanking the
-          // text of dropped rows so the cut caches flags for the whole
-          // corpus but text only for the survivor working set (the same
-          // rows kept2 materializes anyway); the counts read flags from
-          // the cut and the dedup stages read the cached survivors —
-          // the raw corpus is scanned and tokenized exactly once.
-          val flagged = documents
-            .withColumn("__l", langOk)
-            .withColumn("__q", qualOk)
-            .withColumn("text", when(col("__q"), col("text")))
-            .localCheckpoint(true)
-          val r = flagged.agg(
-            count(lit(1)),
-            count_if(col("__l")),
-            count_if(col("__q")),
-            if (redactPii)
-              count_if(col("__q") && TextAnalysis.redactCol(col("text")) =!= col("text"))
-            else count_if(lit(false))).head()
-          kept1Src = flagged.filter(col("__q")).drop("__l", "__q")
-          (r.getLong(0), r.getLong(1), -1L, r.getLong(2), -1L, r.getLong(3), -1L)
-        }
-      val kept1 =
-        if (redactPii) kept1Src.withColumn("text", TextAnalysis.redactCol(col("text")))
-        else kept1Src
-      // Stage blocks SHARE the exact-dedup survivor checkpoint (the
-      // same cut [[curatedDocs]] makes): the exact-stage count
-      // materializes it, and the near-dup block's pair generation,
-      // clustering, and final join all read the checkpoint instead of
-      // re-running the filter + exact-join prefix — so the near-dup
-      // stage's measured bytes are ITS OWN (no b3 subtraction needed),
-      // and the diagnostic costs one prefix execution, not two. Kept
-      // in lockstep with [[curatedDocs]]'s body (that equality is
-      // spec-pinned against the declared counts).
-      // the checkpoint is EAGER — construct it inside the block so the
-      // exact stage's shuffle (the md5 window) is attributed to it,
-      // not to the gap between blocks
-      var kept2: DataFrame = null
-      val (n3, b3) = block {
-        kept2 = exactSurvivors(kept1).localCheckpoint(true) // r18: block-level cut, no FS write
-        kept2.count()
-      }
-      val (n4, b4) = block {
-        val pairs = Dedup.jaccardPairsExact(kept2, jaccardThreshold, maxDf)
-        val reps = Dedup.nearDupClusters(kept2, pairs)
-          .filter(col("doc_id") === col("cluster_id"))
-          .select("doc_id")
-        kept2.join(reps, Seq("doc_id")).count()
-      }
-      import spark.implicits._
-      val base = Seq(
-        ("lang_id", n0, n1, n0 - n1, b1),
-        ("quality", n1, n2, n1 - n2, b2)) ++
-        (if (redactPii) Seq(("pii_redact", n2, n2, nPii, bPii)) else Nil) ++ Seq(
-        ("exact_dedup", n2, n3, n2 - n3, b3),
-        ("neardup_cluster", n3, n4, n3 - n4, b4))
-      base.toDF("stage", "rows_in", "rows_out", "rows_changed", "shuffle_write_bytes")
-    } finally if (measureShuffle) spark.sparkContext.removeSparkListener(listener)
+    val toks = TextFunctions.tokens(col("text"))
+    val langOk = TextAnalysis.langPredCol(toks) === lang
+    val qualOk = langOk && TextAnalysis.qualityCol(toks, col("n_chars")) >= minQuality
+    val flagged = documents
+      .withColumn("__l", langOk)
+      .withColumn("__q", qualOk)
+      .withColumn("text", when(col("__q"), col("text")))
+      .localCheckpoint(true)
+    val r = flagged.agg(
+      count(lit(1)),
+      count_if(col("__l")),
+      count_if(col("__q")),
+      if (redactPii)
+        count_if(col("__q") && TextAnalysis.redactCol(col("text")) =!= col("text"))
+      else count_if(lit(false))).head()
+    val (n0, n1, n2, nPii) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    val kept1Src = flagged.filter(col("__q")).drop("__l", "__q")
+    val kept1 =
+      if (redactPii) kept1Src.withColumn("text", TextAnalysis.redactCol(col("text")))
+      else kept1Src
+    val kept2 = exactSurvivors(kept1).localCheckpoint(true)
+    val n3 = kept2.count()
+    val pairs = Dedup.jaccardPairsExact(kept2, jaccardThreshold, maxDf)
+    val reps = Dedup.nearDupClusters(kept2, pairs)
+      .filter(col("doc_id") === col("cluster_id"))
+      .select("doc_id")
+    val n4 = kept2.join(reps, Seq("doc_id")).count()
+    import spark.implicits._
+    val base = Seq(
+      ("lang_id", n0, n1, n0 - n1),
+      ("quality", n1, n2, n1 - n2)) ++
+      (if (redactPii) Seq(("pii_redact", n2, n2, nPii)) else Nil) ++ Seq(
+      ("exact_dedup", n2, n3, n2 - n3),
+      ("neardup_cluster", n3, n4, n3 - n4))
+    base.toDF("stage", "rows_in", "rows_out", "rows_changed")
   }
 }

@@ -184,7 +184,7 @@ object Dedup {
   /** Candidate near-dup pairs: equi-join on (band, band_key), id1<id2,
     * distinct. The shuffle key is the band bucket — never an n² product.
     */
-  def minhashCandidates(documents: DataFrame): DataFrame = {
+  private def minhashCandidates(documents: DataFrame): DataFrame = {
     val b = lshBands(minhashSignatures(documents))
     val l = b.select(col("band"), col("band_key"), col("doc_id").as("id1"))
     val r = b.select(col("band"), col("band_key"), col("doc_id").as("id2"))
@@ -909,7 +909,7 @@ object Dedup {
     // exceeds the serialization it removes, and the join is emitted
     // with NO salt column and NO explode (the true s = 1 plan).
     val nSalt = saltForCellSweep(embeddings, embeddings.count(), c, probes)
-    // SPREAD the stream side before the pair join (r18, Prof-measured):
+    // SPREAD the stream side before the pair join (r18, profiled):
     // when the right side broadcasts — the bench-scale plan — the join
     // parallelism is the STREAM side's partitioning, and a
     // checkpoint-fed single-block relation ran the entire Σ_cell sweep
@@ -1114,14 +1114,14 @@ object Dedup {
     * evaluated cell-locally. Store side reads pre-partitioned by its
     * bucket key.
     */
-  def embeddingStoreCandidates(spark: org.apache.spark.sql.SparkSession,
-                               table: String, batch: DataFrame,
-                               probes: Int = 2): DataFrame = {
+  private[graft] def embeddingStoreCandidates(spark: org.apache.spark.sql.SparkSession,
+                                              table: String, batch: DataFrame,
+                                              probes: Int = 2): DataFrame = {
     assertEmbStoreLayout(spark, table)
     val cells = assignTopCells(batch, spark.table(table + "_cents"), probes)
     // spread the probe side before the store sweep (r18): the batch
     // arrives as a one-block checkpoint, and the per-cell candidate
-    // join runs at the stream side's width (Prof: the whole
+    // join runs at the stream side's width (profiled: the whole
     // batch×store cosine sweep in ONE 1.3 s task). Explicit
     // repartition-by-number — the one width AQE never coalesces.
     val posted = batch
@@ -1165,21 +1165,8 @@ object Dedup {
       .localCheckpoint(true)
     val probe = p.limit(cap + 1).collect()
     if (probe.length <= cap) {
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      probe.foreach { r =>
-        val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
-        if (a != b) parent(math.max(a, b)) = math.min(a, b)
-      }
-      val nodes = probe.iterator.flatMap(r => Iterator(r.getLong(0), r.getLong(1))).toSet
-      val minOf = nodes.groupBy(find).map { case (root, ms) => root -> ms.min }
-      nodes.iterator.filter(n => minOf(find(n)) != n).toSeq.toDF("doc_id")
+      // the nodes whose component minimum is another node
+      Graph.driverMinLabels(probe).map(_._1).toDF("doc_id")
     } else {
       val nodes = p.select(col("id1").as("doc_id"))
         .unionByName(p.select(col("id2").as("doc_id"))).distinct()

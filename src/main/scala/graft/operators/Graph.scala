@@ -635,12 +635,13 @@ object Graph {
   }
 
   /** Driver-local min-label union-find over collected `(src, dst)`
-    * long rows — the shared fast-path core of [[connectedComponents]]
-    * and [[ccAbsorbParts]]. Returns `(node, min reachable id)` for the
-    * nodes whose component label differs from the node itself (the
-    * identity rows are implied — consumers left-join and coalesce).
+    * long rows — the shared fast-path core of [[connectedComponents]],
+    * [[ccAbsorbParts]] and `Dedup.nonMinMembers`. Returns `(node, min
+    * reachable id)` for the nodes whose component label differs from
+    * the node itself (the identity rows are implied — consumers
+    * left-join and coalesce).
     */
-  private def driverMinLabels(rows: Array[Row]): Seq[(Long, Long)] = {
+  private[operators] def driverMinLabels(rows: Array[Row]): Seq[(Long, Long)] = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -720,7 +721,7 @@ object Graph {
     // pair volume to ≤ one star edge per (node, partition), so on any
     // graph whose CONTRACTED relation fits the cap, a driver-local
     // union-find replaces the whole pointer-jumping fixpoint — which at
-    // bench scale is pure scheduling latency (Prof: 31 jobs / 45 stages
+    // bench scale is pure scheduling latency (profiled: 31 jobs / 45 stages
     // / 22 task-seconds for ~8 rounds over a relation that union-finds
     // in milliseconds). Identical labels by construction (min reachable
     // node id per component, fully converged). Past the cap the probe

@@ -726,10 +726,10 @@ object Hnsw {
     * shared [[CellSnapshot]] manifest (ONE manifest governs both trees,
     * so nodes and edges can never be read at different generations).
     */
-  def readRoutedNodes(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+  private[graft] def readRoutedNodes(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     CellSnapshot.read(spark, dir, "nodes", "part")
 
-  def readRoutedEdges(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+  private[graft] def readRoutedEdges(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     CellSnapshot.read(spark, dir, "edges", "part")
 
   /** TIME-TRAVEL reads of a routed index AS OF published snapshot
@@ -965,29 +965,6 @@ object Hnsw {
     IndexMeta.invalidate(spark, dir)
   }
 
-  /** Retrain routing centroids from a routed layout's OWN live rows
-    * (`Ivf.retrainCentroids`'s routed twin — hash-spread seeds via one
-    * TakeOrdered pass, `iters` Lloyd rounds over the distinct node
-    * vectors). Feeds [[reclusterRouted]] in an automated drift repair.
-    */
-  def retrainCentroidsRouted(spark: org.apache.spark.sql.SparkSession, dir: String,
-                             c: Int, iters: Int = 1): DataFrame = {
-    val live = Ivf.withoutExcluded(
-        readRoutedNodes(spark, dir).select(col("vec_id"), col("embedding")),
-        Tombstones.ids(spark, dir))
-      .dropDuplicates("vec_id")
-    val spread = live
-      .orderBy(pmod(graft.functions.Portable.md5Int(col("vec_id").cast("string")),
-        lit(Int.MaxValue)), col("vec_id"))
-      .limit(c)
-    val seeds = spread
-      .select(row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("vec_id"))).cast("long").as("rid"),
-        transform(col("embedding"), x => x.cast("double")).as("centroid_vec"))
-      .select((col("rid") - 1).as("centroid_id"), col("centroid_vec"))
-    Ivf.kmeansWith(live, seeds, iters)
-  }
-
   /** [[saveRouted]] once per content of `embeddings`, `cents` and the
     * params ([[IndexMeta.ensure]]) — the amortization point for
     * repeated-batch serving; retrained routing centroids rebuild the
@@ -1014,15 +991,10 @@ object Hnsw {
         max("degree").as("max_degree"))
       .orderBy("layer")
 
-  /** Recall@k of the ANN path against exact kNN for a query batch:
-    * per-query |ANN ∩ exact| / k. The `RgbTest` analog (hnsw.cc:326-368)
-    * generalized to a measured recall (SURVEY.md §5.2).
-    */
-  def recallAtK(embeddings: DataFrame, queries: DataFrame, k: Int, p: Params): DataFrame =
-    recallOf(searchTopK(embeddings, queries, k, p), embeddings, queries, k)
-
-  /** Recall@k of an arbitrary ANN result `(query_id, vec_id, ...)`
-    * against exact kNN — lets the routed path reuse the same harness.
+  /** Recall@k of an ANN result `(query_id, vec_id, ...)` against exact
+    * kNN for its query batch: per-query |ANN ∩ exact| / k. The
+    * `RgbTest` analog (hnsw.cc:326-368) generalized to a measured
+    * recall (SURVEY.md §5.2).
     */
   def recallOf(ann0: DataFrame, embeddings: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val ann = ann0

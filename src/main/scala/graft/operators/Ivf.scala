@@ -170,19 +170,29 @@ object Ivf {
     * centroids of the stored rows.
     */
   def writePartitioned(embeddings: DataFrame, c: Int, dir: String,
-                       kind: String = "plain"): Unit = {
+                       kind: String = "plain"): Unit =
+    writePartitionedBy(embeddings, dir, kind)(centroids(_, c))
+
+  /** [[writePartitioned]] with the centroids `cents` derives from the
+    * stored rows (seeds, or k-means over them): `embeddings` are put in
+    * the space of `kind` ([[inLayoutSpace]]), and a `mips` layout
+    * records its augmentation constant in `_graft_maxnorm` for
+    * [[insertInto]].
+    */
+  private[graft] def writePartitionedBy(embeddings: DataFrame, dir: String, kind: String)(
+      cents: DataFrame => DataFrame): Unit = {
     val maxNorm = if (kind == "mips") Some(maxNormOf(embeddings)) else None
     val rows = inLayoutSpace(kind, embeddings, maxNorm.get).getOrElse(
       throw new IllegalArgumentException(
         s"Ivf.writePartitioned builds plain, cosine and mips layouts, not '$kind'"))
-    writePartitionedWith(rows, centroids(rows, c), dir, kind)
+    writePartitionedWith(rows, cents(rows), dir, kind)
     // the augmentation constant, for insertInto (after the root write,
     // which would delete it)
     maxNorm.foreach(m => writeScalarFile(embeddings.sparkSession, dir, "_graft_maxnorm", m.toString))
   }
 
   /** `rows` in the vector space a `kind` layout stores — the one
-    * per-kind row transform of [[writePartitioned]] and [[insertInto]]:
+    * per-kind row transform of [[writePartitionedBy]] and [[insertInto]]:
     * raw floats (`plain`), unit-normalized doubles (`cosine`), or
     * doubles augmented with the layout's max norm (`mips`, the build
     * corpus's, recorded in `_graft_maxnorm`). None for a kind that

@@ -68,8 +68,8 @@ object Layout {
     * rank normalization are computed in the same pass as a single
     * min/max aggregate.
     */
-  def zorderWrite(df: DataFrame, dims: Seq[String], bits: Int, numFiles: Int,
-                  dir: String): Unit = {
+  private[graft] def zorderWrite(df: DataFrame, dims: Seq[String], bits: Int,
+                                 numFiles: Int, dir: String): Unit = {
     val exprs = dims.flatMap(d =>
       Seq(min(col(d).cast("double")), max(col(d).cast("double"))))
     val bounds = df.agg(exprs.head, exprs.tail: _*).head()
@@ -97,13 +97,13 @@ object Layout {
 
   /** Per-row-group `[min, max]` footer statistics for the given numeric
     * columns of every parquet file under `dir` — the exact information
-    * a stats-pruning reader consults. Used by the layout specs and the
-    * scale smoke to MEASURE skipping (eligible row groups for a box
+    * a stats-pruning reader consults. Used by the layout specs to
+    * MEASURE [[zorderWrite]]'s skipping (eligible row groups for a box
     * predicate) instead of asserting it; driver-side footer reads only
     * (no data pages touched).
     */
-  def rowGroupStats(spark: SparkSession, dir: String,
-                    cols: Seq[String]): Seq[Map[String, (Double, Double)]] = {
+  private[graft] def rowGroupStats(spark: SparkSession, dir: String,
+                                   cols: Seq[String]): Seq[Map[String, (Double, Double)]] = {
     import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(dir)
@@ -134,8 +134,8 @@ object Layout {
     * intersects its `[lo, hi]` — the same test a min/max-pruning
     * reader applies.
     */
-  def eligibleRowGroups(stats: Seq[Map[String, (Double, Double)]],
-                        box: Map[String, (Double, Double)]): Int =
+  private[graft] def eligibleRowGroups(stats: Seq[Map[String, (Double, Double)]],
+                                       box: Map[String, (Double, Double)]): Int =
     stats.count { g =>
       box.forall { case (c, (lo, hi)) =>
         g.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }

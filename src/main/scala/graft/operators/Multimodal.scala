@@ -1664,11 +1664,11 @@ object Multimodal {
   /** Representative-level band candidates of a distinct-hash relation:
     * unordered `(dhash, dhash2)` rows with `dhash < dhash2`, one row
     * per shared under-cap key (callers verify Hamming then dedup).
-    * Exposed so specs and scale smokes can pin the candidate VOLUME —
-    * the quantity the density guard exists to bound.
+    * Visible to the specs so they can pin the candidate VOLUME — the
+    * quantity the density guard exists to bound.
     */
-  def dhashBandCandidates(distinctHashes: DataFrame, bandDfCap: Int = 4096,
-                          maxHamming: Int = 6): DataFrame = {
+  private[graft] def dhashBandCandidates(distinctHashes: DataFrame, bandDfCap: Int = 4096,
+                                         maxHamming: Int = 6): DataFrame = {
     val banded = bandedFor(distinctHashes, maxHamming)
     val guarded = banded
       .join(broadcast(denseBands(banded, bandDfCap)),

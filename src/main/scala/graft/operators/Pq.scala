@@ -639,19 +639,4 @@ object Pq {
       cents.write.mode("overwrite").parquet(s"$dir/_centroids")
       books.write.mode("overwrite").parquet(s"$dir/_codebooks")
     }
-
-  /** Residual reconstruction `x̂ = centroid(cell) + decode(codes)` —
-    * spec surface: residual ADC distances must equal direct distances
-    * to these reconstructions.
-    */
-  def reconstructResidual(embeddings: DataFrame, cents: DataFrame, books: DataFrame,
-                          m: Int, subDim: Int): DataFrame = {
-    val res = residuals(embeddings, cents)
-    reconstruct(res.select(col("vec_id"), col("embedding")), books, m, subDim)
-      .join(res.select(col("vec_id"), col("cell")), Seq("vec_id"))
-      .join(broadcast(cents.select(col("centroid_id").as("cell"), col("centroid_vec"))),
-        Seq("cell"))
-      .select(col("vec_id"),
-        zip_with(col("centroid_vec"), col("recon"), (cv, r) => cv + r).as("recon"))
-  }
 }

@@ -225,23 +225,6 @@ object Relational {
       .limit(limit)
   }
 
-  /** Write both sides of the orderkey join BUCKETED on the key: a
-    * co-located layout where the lineitem⋈orders shuffle disappears —
-    * each bucket pair joins locally (verified by plan in
-    * RelationalSpec: no Exchange above the scans). At 100 TB this is
-    * the difference between re-shuffling the fact table on every query
-    * and paying the layout cost once at ingest.
-    */
-  def writeBucketedOrderJoin(spark: SparkSession, dir: String, path: String,
-                             buckets: Int, liTable: String, ordTable: String): Unit = {
-    Tables.lineitem(spark, dir)
-      .write.bucketBy(buckets, "l_orderkey").sortBy("l_orderkey")
-      .option("path", s"$path/$liTable").mode("overwrite").saveAsTable(liTable)
-    Tables.orders(spark, dir)
-      .write.bucketBy(buckets, "o_orderkey").sortBy("o_orderkey")
-      .option("path", s"$path/$ordTable").mode("overwrite").saveAsTable(ordTable)
-  }
-
   /** Exact distinct-user counts per event type (distinct aggregation —
     * plans as the standard two-phase expand/aggregate).
     */

@@ -197,7 +197,7 @@ object Sq {
     // guide §2.5 output-volume partitioning): the table lands as ONE
     // parquet file at bench scale, so the Q·N decimal term chains —
     // the whole query's compute, ~50× a double add each — ran in ONE
-    // task (Prof: 1.6 s single-task stage, 9 tasks total). Row-local
+    // task (profiled: 1.6 s single-task stage, 9 tasks total). Row-local
     // math and a partition-invariant heap rank make the spread free of
     // semantic risk.
     val scored = graft.functions.Skew.spreadToCores(spark.read.parquet(dir))

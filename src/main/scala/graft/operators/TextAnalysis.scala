@@ -59,8 +59,8 @@ object TextAnalysis {
     * [[CorpusPipeline.curate]]'s lang filter:
     * `curate(extractHtml(raw).filter(!col("boilerplate")).select(id, text, …), …)`.
     */
-  def extractHtml(documents: DataFrame, markupCol: String = "html",
-                  maxLinkDensity: Double = 0.5): DataFrame = {
+  private[graft] def extractHtml(documents: DataFrame, markupCol: String = "html",
+                                 maxLinkDensity: Double = 0.5): DataFrame = {
     val m = col(markupCol)
     // this stage's contract is that the extracted text BECOMES the
     // `text` column — a pre-existing `text` alongside a distinct

@@ -68,7 +68,7 @@ object VectorLsh {
     // output-volume partitioning): band keys are `rowsPerBand`-bit
     // values — 2^rowsPerBand distinct buckets per band — so the
     // Σ_bucket df² candidate fan-out of a single-file scan ran in ONE
-    // task (Prof: 1.66 s single-task stage). The right side is the
+    // task (profiled: 1.66 s single-task stage). The right side is the
     // same O(n·bands) slim relation, explicitly broadcast.
     val cand = graft.functions.Skew.spreadToCores(
         banded.select(col("band"), col("band_key"), col("vec_id").as("id1")))
@@ -83,7 +83,7 @@ object VectorLsh {
     // §3.1 — size estimates after an aggregation are unreliable): the
     // planner was broadcasting the CANDIDATE side — Σ_bucket df² pairs,
     // quadratic in bucket occupancy — building a multi-million-row hash
-    // relation in one task (Prof: 1.95 s single-task broadcast build)
+    // relation in one task (profiled: 1.95 s single-task broadcast build)
     // while the genuinely small per-vector relation streamed.
     cand
       .join(broadcast(withNorm.select(col("vec_id").as("id1"), col("embedding").as("e1"),

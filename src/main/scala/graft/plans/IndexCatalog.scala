@@ -68,29 +68,22 @@ object IndexCatalog {
 
   /** Register an IVF layout for the parquet table at `dataPath`, built
     * under `indexDir` once per table content and `(c, iters, kind)`:
-    * [[Ivf.kmeans]] centroids over the rows in the space `kind`
-    * declares — raw ("l2", a `plain` layout), unit-normalized
-    * ("cosine", [[Ivf.normalized]]) or augmented ("mips",
-    * [[Ivf.augmented]], d+1 dims) — the cell-partitioned layout
-    * ([[Ivf.writePartitionedWith]]) and its `_radii` sidecar, so
-    * serving never writes. `nprobe` is a serving knob, not a build
-    * parameter: re-registering with another budget reuses the layout.
+    * the cell-partitioned layout of kind "l2" (a `plain` layout),
+    * "cosine" or "mips" ([[Ivf.writePartitionedBy]], which puts the
+    * rows in that kind's space) over [[Ivf.kmeans]] centroids of the
+    * stored rows, and its `_radii` sidecar, so serving never writes.
+    * `nprobe` is a serving knob, not a build parameter: re-registering
+    * with another budget reuses the layout.
     */
   def register(spark: SparkSession, dataPath: String, indexDir: String,
                c: Int, iters: Int, nprobe: Int, kind: String = "l2"): Unit = {
-    val space: DataFrame => DataFrame = kind match {
-      case "l2" => identity
-      case "cosine" => Ivf.normalized
-      case "mips" => Ivf.augmented
-      case other => throw new IllegalArgumentException(
-        s"IndexCatalog.register builds l2, cosine and mips layouts, not '$other'")
-    }
+    require(Seq("l2", "cosine", "mips").contains(kind),
+      s"IndexCatalog.register builds l2, cosine and mips layouts, not '$kind'")
     val table = spark.read.parquet(dataPath)
     val params = s"catalog_ivf_c=$c;iters=$iters;kind=$kind"
     IndexMeta.ensure(indexDir, params, table) {
-      val rows = space(table)
-      Ivf.writePartitionedWith(rows, Ivf.kmeans(rows, c, iters), indexDir,
-        if (kind == "l2") "plain" else kind)
+      Ivf.writePartitionedBy(table, indexDir, if (kind == "l2") "plain" else kind)(
+        Ivf.kmeans(_, c, iters))
       Ivf.ensureRadii(spark, indexDir)
     }
     put("ivf", table, Registration(indexDir, nprobe), params)

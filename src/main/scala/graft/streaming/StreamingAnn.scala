@@ -98,38 +98,6 @@ object StreamingAnn {
       }
       .start()
 
-  /** Streaming maintenance of a persisted ROUTED (cell-sharded) HNSW
-    * index: each micro-batch routes onto the layout's current serving
-    * centroids and rebuilds ONLY the receiving cells
-    * ([[Hnsw.insertIntoRouted]]), published as one atomic snapshot
-    * generation — concurrent [[serveQueries]] readers keep a
-    * consistent (nodes, edges, centroids) triple through every flip.
-    * With a `recluster` policy, after each append the routed skew
-    * trigger ([[Hnsw.needsReclusterRouted]]) may fire a retrain from
-    * the layout's own rows ([[Hnsw.retrainCentroidsRouted]]) +
-    * [[Hnsw.reclusterRouted]] BEFORE the next batch — the routed twin
-    * of [[maintainIvf]]'s drift repair.
-    */
-  def maintainRouted(newVectors: DataFrame, indexDir: String, p: Hnsw.Params,
-                     replication: Int = 2,
-                     recluster: Option[ReclusterPolicy] = None): StreamingQuery =
-    newVectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        Hnsw.insertIntoRouted(spark, indexDir, batch.toDF(), p, replication)
-        recluster.foreach { pol =>
-          if (Hnsw.needsReclusterRouted(spark, indexDir, pol.maxSkew)) {
-            val c = if (pol.c > 0) pol.c
-              else Hnsw.routedCentroidsOf(spark, indexDir).count().toInt
-            Hnsw.reclusterRouted(spark, indexDir,
-              Hnsw.retrainCentroidsRouted(spark, indexDir, c, pol.iters),
-              p, replication)
-          }
-        }
-      }
-      .start()
-
   /** Streaming maintenance of a cell-partitioned IVF layout: each
     * micro-batch of `(vec_id, embedding)` rows appends cell-locally
     * through [[graft.operators.Ivf.insertInto]] — transformed the way

@@ -62,16 +62,16 @@ class HnswSpec extends AnyFunSuite {
   test("recall@10 of sharded HNSW vs exact kNN is high (reference greedy: ~0.30)") {
     val qs = emb.filter(col("vec_id") < 20)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
-    val recalls = Hnsw.recallAtK(emb, qs, 10, params).collect().map(_.getDouble(1))
+    val recalls = Hnsw.recallOf(Hnsw.searchTopK(emb, qs, 10, params), emb, qs, 10)
+      .collect().map(_.getDouble(1))
     assert(recalls.length === 20)
     val avg = recalls.sum / recalls.length
     assert(avg >= 0.95, s"avg recall $avg below floor")
   }
 
   // clustered anisotropic fixture (blob structure + decaying variance —
-  // the geometry of real embedding spaces, same shape as AnnBench
-  // pqclustered): where closest-first neighbor selection wastes the
-  // edge budget inside one blob
+  // the geometry of real embedding spaces): where closest-first
+  // neighbor selection wastes the edge budget inside one blob
   private lazy val clustered = {
     val kBlobs = 12; val dim = 16
     (0L until 600L).map { i =>
@@ -91,7 +91,8 @@ class HnswSpec extends AnyFunSuite {
     val qs = clustered.filter(col("vec_id") % 20 === 0)
       .select(col("vec_id").as("query_id"), perturbQuery(col("embedding")).as("query_vec"))
     def avgRecall(p: Hnsw.Params): Double = {
-      val r = Hnsw.recallAtK(clustered, qs, 10, p).collect().map(_.getDouble(1))
+      val r = Hnsw.recallOf(Hnsw.searchTopK(clustered, qs, 10, p), clustered, qs, 10)
+        .collect().map(_.getDouble(1))
       r.sum / r.length
     }
     val rBase = avgRecall(base)

@@ -356,6 +356,21 @@ class IndexRewriteSpec extends AnyFunSuite {
     IndexCatalog.unregister(dataPath)
   }
 
+  test("a registered MIPS layout takes inserts: the inserted row serves from Ivf.topKPartitioned") {
+    val mdir = java.nio.file.Files.createTempDirectory("idxrw_mips_ins").toString
+    IndexCatalog.register(spark, dataPath, mdir, c = C, iters = 2,
+      nprobe = C, kind = "mips")
+    // every stored component is below 100, so this row's inner product
+    // with the all-ones query beats every stored row's
+    Ivf.insertInto(spark, mdir,
+      Seq((1000L, Array.fill(8)(100f))).toDF("vec_id", "embedding"))
+    val q = Seq(Array.fill(8)(1.0)).toDF("query_vec")
+    val top = Ivf.topKPartitioned(spark, mdir, q, k = 3, nprobe = C)
+      .collect().map(r => (r.getLong(0), r.getDouble(1)))
+    assert(top.head === ((1000L, 800.0)), s"top-3 after the insert: ${top.toSeq}")
+    IndexCatalog.unregister(dataPath)
+  }
+
   test("cosine batch window shape fires and equals exact at nprobe = C") {
     val cdir = java.nio.file.Files.createTempDirectory("idxrw_cos_b").toString
     IndexCatalog.register(spark, dataPath, cdir, c = C, iters = 2,

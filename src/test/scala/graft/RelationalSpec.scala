@@ -34,38 +34,6 @@ class RelationalSpec extends AnyFunSuite {
     assert(collect3(Relational.priceQuantiles(li)) === collect3(viaBuffer))
   }
 
-  test("bucketed co-located join: no shuffle above the scans, same result as plain join") {
-    val dir = java.nio.file.Files.createTempDirectory("bucketed").toString
-    val sf = "/root/testdata/sf0.001"
-    Relational.writeBucketedOrderJoin(spark, sf, dir, buckets = 4, "li_b", "ord_b")
-    // at fixture scale the optimizer would broadcast orders, which hides
-    // the property under test — force the (at-scale-inevitable) non-
-    // broadcast join so co-location is what kills the shuffle
-    val bcThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("li_b")
-        .join(spark.table("ord_b"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
-      val rows = joined.collect().map(r => (r.getString(0), r.getLong(1))).toSet
-      val plain = graft.sources.Tables.lineitem(spark, sf)
-        .join(graft.sources.Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
-        .groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-      assert(rows === plain)
-      // the executed plan must contain NO exchange below the join: the
-      // bucketed layout already co-locates both sides on the key (the
-      // only exchange allowed is the 5-group aggregation above it)
-      val plan = joined.queryExecution.executedPlan.toString
-      val joinPart = plan.split("SortMergeJoin|ShuffledHashJoin").last
-      assert(!joinPart.contains("Exchange"), s"join inputs re-shuffled:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcThreshold)
-      spark.sql("DROP TABLE IF EXISTS li_b")
-      spark.sql("DROP TABLE IF EXISTS ord_b")
-    }
-  }
-
   test("approx distinct (HLL) stays within rsd envelope of exact") {
     // 3 types with known cardinalities (many repeat visits per user)
     val events = (1 to 30000).map { i =>

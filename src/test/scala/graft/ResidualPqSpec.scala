@@ -44,6 +44,19 @@ class ResidualPqSpec extends AnyFunSuite {
     Pq.residuals(emb, cents).select(col("vec_id"), col("embedding")),
     M, SubDim, C, iters = 1, seedOffset = CoarseC).cache()
 
+  /** Residual reconstruction `x̂ = centroid(cell) + decode(codes)`:
+    * residual ADC distances must equal direct distances to these.
+    */
+  private lazy val reconstructed = {
+    val res = Pq.residuals(emb, cents)
+    Pq.reconstruct(res.select(col("vec_id"), col("embedding")), resBooks, M, SubDim)
+      .join(res.select(col("vec_id"), col("cell")), Seq("vec_id"))
+      .join(broadcast(cents.select(col("centroid_id").as("cell"), col("centroid_vec"))),
+        Seq("cell"))
+      .select(col("vec_id"),
+        zip_with(col("centroid_vec"), col("recon"), (cv, r) => cv + r).as("recon"))
+  }
+
   private def query(id: Long) = emb.filter(col("vec_id") === id)
     .select(perturbQuery(col("embedding")).as("query_vec"))
 
@@ -64,7 +77,7 @@ class ResidualPqSpec extends AnyFunSuite {
     // nprobe = C: every cell probed, so every vector is ADC-scored
     val adc = Pq.topK(spark, dir, q, k = 400, nprobe = CoarseC)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    val recon = Pq.reconstructResidual(emb, cents, resBooks, M, SubDim)
+    val recon = reconstructed
       .crossJoin(broadcast(q))
       .select(col("vec_id"), l2Distance(col("recon"), col("query_vec")).as("d"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap

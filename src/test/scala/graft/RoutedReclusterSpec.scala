@@ -159,46 +159,6 @@ class RoutedReclusterSpec extends AnyFunSuite {
     assert(liveIds === (0L until 200L).filter(_ % 50 != 0).toSet)
   }
 
-  test("maintainRouted streaming: micro-batch appends == single-pass; drifted tail rebalances under the policy") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamingAnn
-    val dir = java.nio.file.Files.createTempDirectory("routed_stream").toString
-    val cents = centsOf(Seq(0L, 60L, 120L, 190L))
-    val base = (0L until 150L).map { i =>
-      val rnd = new scala.util.Random(i)
-      (i, Array.fill(8)(rnd.nextFloat() * 100f))
-    }
-    // drifted tail: far from every base centroid
-    val drift = (150L until 200L).map { i =>
-      val rnd = new scala.util.Random(i)
-      (i, Array.fill(8)(2000f + rnd.nextFloat() * 20f))
-    }
-    Hnsw.saveRouted(base.toDF("vec_id", "embedding"), cents, p, dir, replication = 2)
-    val mem = MemoryStream[(Long, Array[Float])]
-    val q = StreamingAnn.maintainRouted(mem.toDF().toDF("vec_id", "embedding"),
-      dir, p, replication = 2,
-      recluster = Some(StreamingAnn.ReclusterPolicy(maxSkew = 1.6, iters = 2)))
-    try {
-      mem.addData(drift.take(25): _*)
-      q.processAllAvailable()
-      mem.addData(drift.drop(25): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    // every streamed row serves; nothing lost or duplicated
-    val ids = Hnsw.readRoutedNodes(spark, dir).select("vec_id")
-      .distinct().collect().map(_.getLong(0)).toSet
-    assert(ids === (0L until 200L).toSet)
-    // the policy fired and the layout ends balanced at its threshold
-    assert(CellSnapshot.version(spark, dir).exists(_ >= 2),
-      "append + recluster must have published generations")
-    assert(!Hnsw.needsReclusterRouted(spark, dir, maxSkew = 1.6),
-      s"drifted tail must end rebalanced (skew = ${Hnsw.cellSkewRouted(spark, dir)})")
-    // serving still answers with full results after the flips
-    assert(served(dir).size === 5 * 10)
-  }
-
   test("reclusterRouted folds tombstones in and clears them") {
     val dir = java.nio.file.Files.createTempDirectory("routed_rec_t").toString
     val centsA = centsSkewed

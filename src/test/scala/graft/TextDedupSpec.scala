@@ -305,15 +305,24 @@ class TextDedupSpec extends AnyFunSuite {
     assert(st2("pii_redact") === ((4L, 4L, 0L)))
     assert(st2("neardup_cluster")._2 ===
       CorpusPipeline.curatedDocs(docs, "en", 0.0, 0.3, redactPii = true).count())
-    // measureShuffle = false: identical selectivities, bytes = -1
-    // sentinel, no listener/drain overhead (the gate-query form)
-    val fast = CorpusPipeline.curateStats(docs, lang = "en", minQuality = 0.0,
-        jaccardThreshold = 0.3, measureShuffle = false)
+    // the stages around the PII stage count the same as without it
+    assert(st2 - "pii_redact" === st)
+    // a document carrying PII: the one scan counts it as rewritten,
+    // and the dedup stages key on the redacted text
+    val withPii = docs.union(Seq(
+      (6L, "the dog ran to mail jane.doe@example.com now", "en", "s2", 43L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars"))
+    val st3 = CorpusPipeline.curateStats(withPii, lang = "en", minQuality = 0.0,
+        jaccardThreshold = 0.3, redactPii = true)
       .collect().map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    assert(fast.view.mapValues(v => (v._1, v._2, v._3)).toMap ===
-      st.view.mapValues(identity).toMap)
-    assert(fast.values.forall(_._4 === -1L), "unmeasured bytes must be the -1 sentinel")
+        (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    assert(st3("lang_id") === ((6L, 5L, 1L)))
+    assert(st3("quality") === ((5L, 5L, 0L)))
+    assert(st3("pii_redact") === ((5L, 5L, 1L)))
+    assert(st3("exact_dedup") === ((5L, 4L, 1L)))
+    assert(st3("neardup_cluster") === ((4L, 3L, 1L)))
+    assert(st3("neardup_cluster")._2 ===
+      CorpusPipeline.curatedDocs(withPii, "en", 0.0, 0.3, redactPii = true).count())
   }
 
   test("contamination: corpus docs sharing probe shingles are flagged with exact overlap counts") {
